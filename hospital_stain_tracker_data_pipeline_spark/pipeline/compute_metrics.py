@@ -86,19 +86,24 @@ def compute_metrics(
             partition_col="date",
             version_col="created_at",
         )
-        capacity = bronze.read()
-        if dates is not None:
-            capacity = capacity.filter(F.col("date").isin(list(dates)))
-        metrics = metrics_from_capacity(capacity, run_id)
-        silver = LakeTable(
-            spark,
-            os.path.join(lake_dir, "metrics_daily"),
-            keys=["date", "region_id"],
-            partition_col="date",
-            version_col="created_at",
-        )
-        silver.upsert(metrics)
-        n = silver.read().count() if dates is None else metrics.count()
+        if dates is None:
+            capacity = bronze.read()
+        else:
+            capacity = bronze.read(dates)
+            if capacity is not None:
+                capacity = capacity.withColumn("date", F.col("date").cast("date"))
+        n = 0  # stays 0 when none of the dates is in bronze
+        if capacity is not None:
+            silver = LakeTable(
+                spark,
+                os.path.join(lake_dir, "metrics_daily"),
+                keys=["date", "region_id"],
+                partition_col="date",
+                version_col="created_at",
+            )
+            metrics = metrics_from_capacity(capacity, run_id)
+            silver.upsert(metrics)
+            n = silver.read().count() if dates is None else metrics.count()
         append_run_log(
             spark,
             runs_path,

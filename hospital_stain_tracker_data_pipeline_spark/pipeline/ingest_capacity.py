@@ -81,6 +81,8 @@ def get_or_create_regions(
     if regions_table.exists():
         existing = regions_table.read()
         new_names = incoming_names.join(existing.select("name"), "name", "left_anti")
+        if new_names.isEmpty():  # nothing to append: leave the files alone
+            return existing
     else:
         existing = None
         new_names = incoming_names

@@ -8,18 +8,23 @@ environment this would be ``MERGE INTO``; the portable mechanism here:
 1. Partition the table by ``date`` — the analog of the reference's
    unique B-tree on (date, region_id) (models.py:54-56): date-keyed
    queries partition-prune, and an upsert touches only incoming dates.
-2. Merge = read ONLY the partitions for incoming dates (pruned scan),
-   union with incoming, window-dedup on the natural key (incoming
-   wins), then dynamic-partition-overwrite just those partitions.
+2. Merge = read ONLY the partitions for incoming dates, union with
+   incoming, window-dedup on the natural key (incoming wins), then
+   dynamic-partition-overwrite just those partitions. The scoped read
+   lists the table root once and hands Spark only the touched
+   directories, so file listing and footer reads are bounded by the
+   batch too, not by the partition count of the table.
 3. ``localCheckpoint`` materializes the merged slice before the write
-   so Spark's read/write-same-path check doesn't trip; the working set
-   is bounded by the batch's touched partitions, not table size — this
-   is what keeps a 100 TB table upsertable by a 1 GB micro-batch.
+   so Spark's read/write-same-path check doesn't trip. The working set
+   (listing, footers, rows) is bounded by the batch's touched
+   partitions, not table size: this is what keeps a 100 TB table
+   upsertable by a 1 GB micro-batch.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,29 +81,74 @@ class LakeTable:
         fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return fs, jpath
 
-    def exists(self) -> bool:
+    # Hive's sentinel directory for a NULL partition value — vacuum
+    # never drops it (its rows are invisible to value predicates).
+    _NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+    def _partition_dirs(self) -> dict:
+        """``{unescaped partition value: Hadoop Path}`` of every
+        ``<partition_col>=<value>`` directory under the root, from one
+        listing through the Hadoop ``FileSystem`` (any scheme). Hadoop
+        %-escapes special chars (':' → '%3A', etc.) in directory names,
+        and matching raw column values against escaped names would
+        silently select nothing; a missing root has no partitions."""
         fs, root = self._hadoop_fs()
         if not fs.exists(root):
-            return False
-        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path
-        if fs.exists(jvm_path(root, "_SUCCESS")):
-            return True
+            return {}
         prefix = f"{self.partition_col}="
-        return any(
-            st.isDirectory() and st.getPath().getName().startswith(prefix)
+        return {
+            unquote(st.getPath().getName()[len(prefix):]): st.getPath()
             for st in fs.listStatus(root)
-        )
+            if st.isDirectory() and st.getPath().getName().startswith(prefix)
+        }
 
-    def read(self) -> DataFrame:
-        # mergeSchema: dynamic partition overwrite only rewrites touched
-        # partitions, so after a column is added the untouched
-        # partitions still hold the old physical schema — the merged
-        # read surfaces the union schema with NULLs for the missing
-        # column (the lake-format ALTER TABLE ADD COLUMN behavior)
-        return (
+    def exists(self) -> bool:
+        fs, root = self._hadoop_fs()
+        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path
+        return fs.exists(jvm_path(root, "_SUCCESS")) or bool(self._partition_dirs())
+
+    def read(self, partitions: Iterable | None = None) -> DataFrame | None:
+        """The whole table, or with ``partitions`` only the partitions
+        holding those values (``None`` stands for the NULL partition).
+
+        The scoped form lists the root once and loads just the matching
+        directories, so its listing and footer reads cost what the
+        requested set touches, not what the table holds. Its partition
+        column is the raw directory value as a string — never inferred
+        from the subset, where ``01`` would read back as the integer 1 —
+        so callers cast it to their own type. It returns ``None`` when
+        no requested partition exists."""
+        if partitions is None:
+            # mergeSchema: dynamic partition overwrite only rewrites touched
+            # partitions, so after a column is added the untouched
+            # partitions still hold the old physical schema — the merged
+            # read surfaces the union schema with NULLs for the missing
+            # column (the lake-format ALTER TABLE ADD COLUMN behavior)
+            return (
+                self.spark.read.option("mergeSchema", "true")
+                .format(self.data_format)
+                .load(self.path)
+            )
+        dirs = self._partition_dirs()
+        wanted = {self._NULL_PARTITION if v is None else str(v) for v in partitions}
+        paths = sorted(dirs[v].toString() for v in wanted & dirs.keys())
+        if not paths:
+            return None
+        # Each directory loaded as its own base path has no partition
+        # column, so this infers only the merged data schema; the second
+        # load adds the partition column as a declared string, which
+        # Spark fills from the directory name without type inference.
+        schema = (
             self.spark.read.option("mergeSchema", "true")
             .format(self.data_format)
-            .load(self.path)
+            .load(paths)
+            .schema.add(self.partition_col, "string")
+        )
+        return (
+            self.spark.read.schema(schema)
+            .option("basePath", self.path)
+            .format(self.data_format)
+            .load(paths)
         )
 
     def overwrite(self, df: DataFrame) -> None:
@@ -121,19 +171,29 @@ class LakeTable:
         else:
             incoming = incoming.dropDuplicates(self.keys)
 
-        if not self.exists():
+        # Only the touched partitions are read back. The distinct
+        # partition values of a micro-batch are small by construction
+        # (dates), so collecting them is cheap; the string cast is
+        # the writer's own rendering of a directory value.
+        part = F.col(self.partition_col)
+        existing_slice = None
+        if self.exists():
+            touched = [
+                r[0]
+                for r in incoming.select(
+                    F.coalesce(part.cast("string"), F.lit(self._NULL_PARTITION))
+                )
+                .distinct()
+                .collect()
+            ]
+            existing_slice = self.read(touched)
+        if existing_slice is None:
             self.overwrite(incoming)
             return
-
-        # Partition-pruned read of only the touched partitions. The
-        # distinct partition values of a micro-batch are small by
-        # construction (dates), so collecting them for an isin-pushdown
-        # is driver-cheap and buys partition pruning on the big side.
-        touched = [
-            r[0]
-            for r in incoming.select(self.partition_col).distinct().collect()
-        ]
-        existing_slice = self.read().filter(F.col(self.partition_col).isin(touched))
+        existing_slice = existing_slice.withColumn(
+            self.partition_col,
+            part.cast(incoming.schema[self.partition_col].dataType),
+        )
         merged = upsert_last_writer_wins(
             existing_slice,
             incoming,
@@ -148,35 +208,23 @@ class LakeTable:
         merged = merged.localCheckpoint(eager=True)
         self.overwrite(merged)
 
-    # Hive's sentinel directory for a NULL partition value — compaction
-    # skips it (its rows cannot be selected back by an isin filter).
-    _NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+    def _data_files(self, fs, part_dir) -> int:
+        return sum(
+            1
+            for f in fs.listStatus(part_dir)
+            if f.isFile()
+            and f.getPath().getName().endswith(f".{self.data_format}")
+            and not f.getPath().getName().startswith(".")
+        )
 
     def partition_file_counts(self) -> dict[str, int]:
-        """data-file count per partition VALUE, via the Hadoop
-        ``FileSystem`` API so the walk works on any scheme (file:,
-        hdfs:, s3a:, ...). Keys are the unescaped values — Hadoop
-        %-escapes special chars (':' → '%3A', etc.) in directory names,
-        and matching raw column values against escaped names would
-        silently select nothing."""
-        from urllib.parse import unquote
-
-        out: dict[str, int] = {}
-        fs, root = self._hadoop_fs()
-        if not fs.exists(root):
-            return out
-        prefix = f"{self.partition_col}="
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith(prefix):
-                out[unquote(name[len(prefix):])] = sum(
-                    1
-                    for f in fs.listStatus(st.getPath())
-                    if f.isFile()
-                    and f.getPath().getName().endswith(f".{self.data_format}")
-                    and not f.getPath().getName().startswith(".")
-                )
-        return out
+        """data-file count per partition VALUE (unescaped), via the
+        Hadoop ``FileSystem`` API so the walk works on any scheme (file:,
+        hdfs:, s3a:, ...)."""
+        fs, _ = self._hadoop_fs()
+        return {
+            v: self._data_files(fs, d) for v, d in self._partition_dirs().items()
+        }
 
     def compact(self, min_files: int = 2) -> dict[str, int]:
         """Small-file maintenance (the OPTIMIZE/rewrite_data_files analog
@@ -187,28 +235,26 @@ class LakeTable:
         one file per shuffle task that holds rows of the partition — and
         at 100 TB the resulting tiny-file sea dominates scan overhead
         (footer reads, task scheduling). The rewrite reads ONLY the
-        fragmented partitions (pruned scan), hash-repartitions on the
+        fragmented partitions (scoped read), hash-repartitions on the
         partition column so each partition's rows land in exactly one
         task (= one output file), and dynamic-overwrites just those
         directories. Row content is untouched — compaction is a pure
         layout operation. Returns {partition: files_before} for the
         partitions rewritten."""
         fragmented = {
-            p: n
-            for p, n in self.partition_file_counts().items()
-            if n >= min_files and p != self._NULL_PARTITION
+            p: n for p, n in self.partition_file_counts().items() if n >= min_files
         }
         if not fragmented:
             return {}
-        touched = list(fragmented)
-        part = F.col(self.partition_col).cast("string")
-        slice_df = self.read().filter(part.isin(touched))
-        compacted = slice_df.repartition(
-            len(touched), F.col(self.partition_col)
-        ).localCheckpoint(eager=True)
+        # the scoped read's raw-string partition values render back to
+        # the very directories they came from
+        compacted = (
+            self.read(fragmented)
+            .repartition(len(fragmented), F.col(self.partition_col))
+            .localCheckpoint(eager=True)
+        )
         self.overwrite(compacted)
         return fragmented
-
 
     def vacuum(
         self,
@@ -258,26 +304,23 @@ class LakeTable:
                 "keep= must be a collection of partition values, not a "
                 f"string (got {keep!r}) — wrap it: keep=[{keep!r}]"
             )
-        counts = self.partition_file_counts()
+        fs, root = self._hadoop_fs()
+        dirs = self._partition_dirs()
         if keep is not None:
             keep_set = {str(k) for k in keep}
-            victims = {
-                p: n
-                for p, n in counts.items()
-                if p != self._NULL_PARTITION and p not in keep_set
-            }
+            doomed = [p for p in dirs if p not in keep_set]
         else:
-            victims = {
-                p: n
-                for p, n in counts.items()
-                if p != self._NULL_PARTITION and p < before
-            }
+            doomed = [p for p in dirs if p < before]
+        victims = {
+            p: self._data_files(fs, dirs[p])
+            for p in doomed
+            if p != self._NULL_PARTITION
+        }
         if dry_run:
             return victims
 
         import json
 
-        fs, root = self._hadoop_fs()
         jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path
         marker = jvm_path(root, "_VACUUM_PENDING")
         if not victims:
@@ -291,17 +334,8 @@ class LakeTable:
         out = fs.create(marker, True)
         out.write(bytearray(json.dumps(sorted(victims)).encode()))
         out.close()
-        from urllib.parse import unquote
-
-        prefix = f"{self.partition_col}="
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if (
-                st.isDirectory()
-                and name.startswith(prefix)
-                and unquote(name[len(prefix):]) in victims
-            ):
-                fs.delete(st.getPath(), True)
+        for p in victims:
+            fs.delete(dirs[p], True)
         fs.delete(marker, False)
         return victims
 

@@ -25,10 +25,11 @@ def pytest_collection_modifyitems(config, items):
     tier pins."""
     if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
         return
-    # a test named explicitly by node id must RUN, not silently
-    # deselect to a green no-op — skip the marking when the invocation
-    # targets specific tests
-    if any("::" in a for a in config.args):
+    # a test named explicitly — by node id or by its file — must RUN,
+    # not silently deselect to a green no-op — skip the marking when
+    # the invocation targets specific tests
+    here = config.invocation_params.dir
+    if any("::" in a or os.path.isfile(os.path.join(here, a)) for a in config.args):
         return
     try:
         with open(_SLOW_MANIFEST) as fh:
