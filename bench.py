@@ -563,9 +563,12 @@ def _extras_registry():
         import numpy as np2
         import pandas as pd2
 
+        from hospital_stain_tracker_data_pipeline_spark.operators.fingerprint import (  # noqa: E501
+            IMAGE,
+            fp_dup_pairs,
+        )
         from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (  # noqa: E501
             encode_bmp,
-            image_dup_pairs,
             to_media_table,
         )
 
@@ -591,7 +594,7 @@ def _extras_registry():
 
         rendered = docs.mapInPandas(render, "doc_id long, payload binary")
         media = to_media_table(rendered, "doc_id", "payload", source="bench")
-        return image_dup_pairs(media, max_hamming=3)
+        return fp_dup_pairs(media, IMAGE, max_hamming=3)
 
     def audio_near_dup(spark, sf_dir):
         """Audio near-dup dedup at bench scale: synthesize a
@@ -606,8 +609,9 @@ def _extras_registry():
         import numpy as np2
         import pandas as pd2
 
-        from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (  # noqa: E501
-            audio_dup_pairs,
+        from hospital_stain_tracker_data_pipeline_spark.operators.fingerprint import (  # noqa: E501
+            AUDIO,
+            fp_dup_pairs,
         )
         from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (  # noqa: E501
             encode_wav,
@@ -637,7 +641,7 @@ def _extras_registry():
 
         rendered = docs.mapInPandas(render, "doc_id long, payload binary")
         media = to_media_table(rendered, "doc_id", "payload", source="bench")
-        return audio_dup_pairs(media, max_hamming=4)
+        return fp_dup_pairs(media, AUDIO, max_hamming=4)
 
     def pdf_extract(spark, sf_dir):
         """PDF ingestion at bench scale: wrap every document's text as
@@ -738,8 +742,9 @@ def _extras_registry():
             build_mjpeg_avi,
             to_media_table,
         )
-        from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (  # noqa: E501
-            video_dup_pairs,
+        from hospital_stain_tracker_data_pipeline_spark.operators.fingerprint import (  # noqa: E501
+            VIDEO,
+            fp_dup_pairs,
         )
 
         # synthesis is ~20 ms of pure-python JPEG codec per clip; the
@@ -783,7 +788,7 @@ def _extras_registry():
         rendered = docs.mapInPandas(render, "doc_id long, payload binary")
         media = to_media_table(rendered, "doc_id", "payload", source="bench")
         # n_samples=3 over 3 frames: each frame decodes exactly once
-        return video_dup_pairs(media, n_samples=3, max_hamming=4)
+        return fp_dup_pairs(media, VIDEO, max_hamming=4, n_samples=3)
 
     def ann_append(spark, sf_dir):
         """The full incremental-ANN lifecycle, phase-timed: build the

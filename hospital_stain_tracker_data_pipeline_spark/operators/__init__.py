@@ -162,25 +162,15 @@ from .similarity import (  # noqa: F401
     semantic_dedup,
     semantic_dedup_pairs,
 )
-from .audio_fp import (  # noqa: F401
-    append_afp_index,
-    compact_afp_index,
-    remove_from_afp_index,
-    audio_dup_pairs,
-    audio_fingerprint,
-    dedup_audio_against_corpus,
-    load_afp_index,
-    save_afp_index,
-)
-from .video_fp import (  # noqa: F401
-    append_vhash_index,
-    compact_vhash_index,
-    remove_from_vhash_index,
-    dedup_videos_against_corpus,
-    load_vhash_index,
-    save_vhash_index,
-    video_dup_pairs,
-    video_phash,
+from .audio_fp import audio_fingerprint  # noqa: F401
+from .video_fp import video_phash  # noqa: F401
+from .fingerprint import (  # noqa: F401
+    AUDIO,
+    IMAGE,
+    VIDEO,
+    FingerprintFamily,
+    dedup_fp_against_corpus,
+    fp_dup_pairs,
 )
 from .pdf import (  # noqa: F401
     build_objstm_pdf,
@@ -190,17 +180,10 @@ from .pdf import (  # noqa: F401
     sniff_pdf,
 )
 from .multimodal import (  # noqa: F401
-    append_phash_index,
     classify_media,
-    compact_phash_index,
-    dedup_images_against_corpus,
-    load_phash_index,
-    remove_from_phash_index,
-    save_phash_index,
     extract_audio_features,
     extract_image_features,
     extract_video_features,
-    image_dup_pairs,
     image_phash,
     sample_video_frames,
 )

@@ -4,7 +4,9 @@ visual phash tier (``multimodal.image_phash`` family), completing the
 modality set: text (SimHash/MinHash), images (dHash/aHash), embeddings
 (LSH/IVF-PQ), and now audio all share one incremental dedup lifecycle
 (batch pairs -> persisted fingerprint index -> corpus-wins gate ->
-streaming twin -> CLI).
+streaming twin -> CLI). This module holds only the fingerprint; the
+lifecycle is the ``fingerprint.AUDIO`` family's, shared with image and
+video.
 
 The fingerprint is the Haitsma-Kalker sign-of-band-energy-difference
 construction (Haitsma & Kalker, "A Highly Robust Audio Fingerprint
@@ -51,11 +53,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .dedup import DEFAULT_MAX_BUCKET as DEDUP_DEFAULT_MAX_BUCKET
 from .multimodal import decode_wav_samples, sniff_wav
 
 # v1 fingerprint parameters — baked into the algo tag so a persisted
@@ -207,134 +207,3 @@ def audio_fingerprint(media: DataFrame, fake_decode: bool = False) -> DataFrame:
     return media.select("media_id", "payload").mapInPandas(
         run, schema=AUDIO_FP_SCHEMA
     )
-
-
-def audio_dup_pairs(
-    media: DataFrame,
-    max_hamming: int = 4,
-    fake_decode: bool = False,
-    max_bucket: int | None = DEDUP_DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Audio near-duplicate pairs: ``audio_fingerprint`` + the
-    pigeonhole Hamming banding every fingerprint family rides
-    (``dedup.hamming_pairs``) — ``(id_a, id_b, hamming)`` for every
-    pair of clips whose fingerprints differ in <= ``max_hamming`` of
-    the 64 bits. Exact recall at the fingerprint level; PCM never
-    enters a shuffle — candidates and verify run on (id, 8 bytes)."""
-    from .dedup import hamming_pairs
-
-    fps = audio_fingerprint(media, fake_decode)
-    return hamming_pairs(
-        fps,
-        hash_col="afp",
-        id_col="media_id",
-        nbits=AFP_NBITS,
-        max_hamming=max_hamming,
-        max_bucket=max_bucket,
-    )
-
-
-def dedup_audio_against_corpus(
-    new_media: DataFrame,
-    corpus_index: DataFrame,
-    max_hamming: int = 4,
-    fake_decode: bool = False,
-    max_bucket: int | None = DEDUP_DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Incremental audio dedup: drop new clips whose fingerprint is
-    within ``max_hamming`` bits of anything ALREADY INDEXED (corpus
-    wins — the ``dedup_against_corpus`` semantics for the audio tier).
-    The index is a persisted ``audio_fingerprint`` output ``(media_id,
-    afp)`` — 8 bytes + an id per clip, PCM never stored (use
-    ``save_afp_index``). A new batch decodes + fingerprints ONLY its
-    own payloads and band-joins against the index
-    (``dedup.hamming_pairs_against_corpus``); survivors append their
-    fingerprints (``append_afp_index``).
-
-    Does NOT dedup the new batch against itself — compose with
-    ``audio_dup_pairs`` for that. Returns surviving ``new_media`` rows
-    unchanged. Works per micro-batch inside ``foreachBatch``
-    (``streaming.stream_audio_dedup_ingest`` is the packaged twin)."""
-    from .dedup import hamming_pairs_against_corpus
-
-    fps = audio_fingerprint(new_media, fake_decode)
-    matched = (
-        hamming_pairs_against_corpus(
-            fps,
-            corpus_index,
-            hash_col="afp",
-            id_col="media_id",
-            nbits=AFP_NBITS,
-            max_hamming=max_hamming,
-            max_bucket=max_bucket,
-        )
-        .select(F.col("new_id").alias("media_id"))
-        .distinct()
-    )
-    return new_media.join(matched, "media_id", "left_anti")
-
-
-def save_afp_index(index: DataFrame, path: str) -> None:
-    """Persist an audio-fingerprint index under this module's revision
-    tag — the generic tagged artifact (``dedup.save_fp_index``, one
-    ``_fp_tag`` column), so a fingerprint revision can never be probed
-    against an old index silently. ``index`` is any frame carrying
-    ``media_id`` + ``afp``; only those two columns persist, NULL
-    id/fingerprint rows drop, and a sentinel keeps an EMPTY index
-    round-trippable."""
-    from .dedup import save_fp_index
-
-    save_fp_index(index, path, AFP_ALGO, id_col="media_id", hash_col="afp")
-
-
-def append_afp_index(spark: SparkSession, path: str, fps: DataFrame) -> int:
-    """Append survivor fingerprints to an EXISTING ``save_afp_index``
-    artifact — the incremental half of the audio index (the next batch
-    then dedups against these survivors too). The artifact is
-    validated against this module's revision tag first; NULL
-    id/fingerprint rows drop as at save. Returns rows appended."""
-    from .dedup import append_fp_index
-
-    return append_fp_index(
-        spark, path, fps, AFP_ALGO, id_col="media_id", hash_col="afp"
-    )
-
-
-def load_afp_index(spark: SparkSession, path: str) -> DataFrame:
-    """Inverse of ``save_afp_index``: the ``(media_id, afp)`` index
-    frame ready for ``dedup_audio_against_corpus``. Fails loudly on a
-    tagless parquet, a corrupt artifact mixing tags, or an index built
-    by a DIFFERENT fingerprint revision than this module computes —
-    probing across revisions would silently match nothing
-    meaningful."""
-    from .dedup import load_fp_index
-
-    index, _ = load_fp_index(
-        spark, path, AFP_ALGO, id_col="media_id", hash_col="afp"
-    )
-    return index
-
-
-def remove_from_afp_index(
-    spark: SparkSession, path: str, ids: DataFrame
-) -> dict:
-    """Takedowns for the audio index: tombstone ``media_id``s so they
-    stop seeding audio near-dup verdicts in minutes (the generic
-    tagged-artifact lifecycle — ``dedup.remove_from_fp_index`` under
-    this module's revision tag; same tombstone-vs-reappend contract
-    as the ANN tier)."""
-    from .dedup import _artifact_remove
-
-    load_afp_index(spark, path)  # one validating read (tag + columns)
-    return _artifact_remove(spark, path, ids, "media_id")
-
-
-def compact_afp_index(
-    spark: SparkSession, path: str, min_ratio: float = 0.1,
-    force: bool = False,
-) -> dict:
-    """Vacuum for ``remove_from_afp_index`` tombstones."""
-    from .dedup import _artifact_compact
-
-    load_afp_index(spark, path)  # one validating read (tag + columns)
-    return _artifact_compact(spark, path, "media_id", min_ratio, force)

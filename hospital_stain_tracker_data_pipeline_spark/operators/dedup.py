@@ -15,12 +15,17 @@ Scale design:
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint64_hex, normalized_text, word_shingles
+
+if TYPE_CHECKING:
+    from .fingerprint import FingerprintFamily
 
 
 def _segment_starts(arrs) -> tuple:
@@ -143,14 +148,6 @@ def exact_dedup(
         )
         .groupBy("fingerprint")
         .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("dup_count"))
-    )
-
-
-def shingle_sets(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
-    return df.select(
-        F.col(id_col), word_shingles(F.col(text_col), k).alias("shingles")
     )
 
 
@@ -293,34 +290,16 @@ def ngram_jaccard_pairs(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signature(shingle_hashes: Column, num_hashes: int = 32) -> Column:
-    """num_hashes-wide MinHash signature over pre-hashed shingles: per
-    hash i, min over the universal-hash permutation (aᵢ·h + bᵢ) mod p
-    (p = 2^31-1). One md5 per shingle TOTAL (in ``hashed_shingles``);
-    the permutations are pure long arithmetic inside codegen."""
-    a_coef = _lcg_ints(num_hashes, seed=42)
-    b_coef = _lcg_ints(num_hashes, seed=1337)
-
-    def _min_hash(i: int):
-        a, b = a_coef[i], b_coef[i]
-        return F.array_min(
-            F.transform(
-                shingle_hashes,
-                lambda h: (F.lit(a).cast("long") * h + F.lit(b)) % F.lit(_PRIME31),
-            )
-        )
-
-    return F.array(*[_min_hash(i) for i in range(num_hashes)])
-
-
 def minhash_signature_udf(num_hashes: int = 32):
-    """Vectorized MinHash signature (Arrow-batched numpy) — same values
-    as ``minhash_signature`` (exact int64 arithmetic), ~30× faster.
+    """Vectorized MinHash signature (Arrow-batched numpy) over
+    pre-hashed shingles: per hash i, min over the universal-hash
+    permutation (aᵢ·h + bᵢ) mod p (p = 2^31-1), exact int64
+    arithmetic. One md5 per shingle TOTAL (in ``hashed_shingles``).
 
-    Higher-order functions evaluate per element OUTSIDE whole-stage
-    codegen, so 32 permutation passes over every shingle are the slow
-    path; here each batch flattens to one int64 vector and each
-    permutation is one fused numpy pass + minimum.reduceat."""
+    Higher-order functions would evaluate per element OUTSIDE
+    whole-stage codegen (32 permutation passes over every shingle);
+    here each batch flattens to one int64 vector and each permutation
+    is one fused numpy pass + minimum.reduceat."""
     from pyspark.sql.functions import pandas_udf
 
     a_coef = np.array(_lcg_ints(num_hashes, seed=42), dtype=np.int64)
@@ -1287,8 +1266,8 @@ def hamming_pairs(
     Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b``; NULL
     fingerprints never pair. The (id, hash) projection is materialized
     before the banding self-join — both join sides would otherwise
-    re-execute the fingerprint producer (for ``image_dup_pairs`` that
-    is the full pixel decode of every payload).
+    re-execute the fingerprint producer (for ``fingerprint.fp_dup_pairs``
+    that is the full payload decode).
 
     (band, val) buckets above ``max_bucket`` are dropped before the
     self-join — identical fingerprints (blank/solid images, black
@@ -1999,39 +1978,32 @@ def tune_lsh_bands(
 
 
 def save_fp_index(
-    index: DataFrame,
-    path: str,
-    tag: str,
-    id_col: str = "media_id",
-    hash_col: str = "fp",
+    index: DataFrame, path: str, family: FingerprintFamily, **params
 ) -> None:
-    """Persist ANY 64-bit-fingerprint index WITH a family/revision tag
-    — the generic form of the phash artifact discipline (the image
-    tier predates this helper and keeps its own two-parameter format;
-    the audio and video tiers delegate here): a constant
-    ``_fp_tag`` column rides the parquet, and ``load_fp_index``
-    validates it, so fingerprints from a different family, parameter
-    set, or algorithm revision can never be probed silently (they
-    would match nothing meaningful). Only ``(id_col, hash_col)``
-    persist — 8 B + an id per item, payloads never stored. NULL-hash
-    and NULL-id rows drop (the former can never pair; the latter is
-    the empty-index sentinel and would be lost on load); a NULL-id
-    sentinel row rides along so a legitimately EMPTY index still
-    round-trips with its tag."""
-    if not tag:
-        raise ValueError("tag must be a non-empty fingerprint family tag")
-    missing = [c for c in (id_col, hash_col) if c not in index.columns]
+    """Persist a media fingerprint index — ONE artifact format for
+    every ``fingerprint.FingerprintFamily``: ``(media_id,
+    <family.hash_col>)`` plus a constant ``_fp_tag`` column recording
+    the family and every parameter that changes its bits
+    (``family.tag``), so ``load_fp_index`` hands back the exact
+    parameters and a probe from another family, parameter set or
+    revision can never match silently. 8 B + an id per item, payloads
+    never stored. NULL-hash and NULL-id rows drop (the former can
+    never pair; the latter is the empty-index sentinel and would be
+    lost on load); a NULL-id sentinel row rides along so a
+    legitimately EMPTY index still round-trips with its tag."""
+    tag = family.tag(family.params(**params))
+    cols = ["media_id", family.hash_col]
+    missing = [c for c in cols if c not in index.columns]
     if missing:
         raise ValueError(
             f"index frame lacks column(s) {missing} — pass a "
-            f"fingerprint output ({id_col}, {hash_col})"
+            f"{family.name} fingerprint output {tuple(cols)}"
         )
-    slim = index.select(id_col, hash_col).filter(
-        F.col(hash_col).isNotNull() & F.col(id_col).isNotNull()
+    slim = index.select(*cols).filter(
+        F.col(cols[0]).isNotNull() & F.col(cols[1]).isNotNull()
     )
     sentinel = index.sparkSession.range(1).select(
-        F.lit(None).cast("long").alias(id_col),
-        F.lit(None).cast("long").alias(hash_col),
+        *[F.lit(None).cast("long").alias(c) for c in cols]
     )
     (
         slim.unionByName(sentinel)
@@ -2043,94 +2015,99 @@ def save_fp_index(
 
 
 def append_fp_index(
-    spark: SparkSession,
-    path: str,
-    fps: DataFrame,
-    tag: str,
-    id_col: str = "media_id",
-    hash_col: str = "fp",
+    spark: SparkSession, path: str, fps: DataFrame, family: FingerprintFamily
 ) -> int:
     """Append survivor fingerprints to an EXISTING ``save_fp_index``
-    artifact — validated against the caller's ``tag`` first (one
-    artifact read), so a probe computed under one family/revision can
-    never append onto an index of another. NULL id/hash rows drop
-    exactly as in ``save_fp_index``. Returns the number of rows
-    appended."""
-    load_fp_index(spark, path, tag, id_col=id_col, hash_col=hash_col)
-    missing = [c for c in (id_col, hash_col) if c not in fps.columns]
+    artifact under the artifact's OWN recorded tag (one validating
+    read) — ``fps`` must be computed with the params
+    ``load_fp_index`` returned, so artifact-mediated flows cannot
+    mismatch. NULL id/hash rows drop exactly as at save. An artifact
+    in the legacy image layout is refused: appending would mix two
+    layouts in one directory — rebuild it first. Returns the number
+    of rows appended."""
+    _, params = load_fp_index(spark, path, family)
+    if "_fp_tag" not in spark.read.parquet(path).columns:
+        raise ValueError(
+            f"{path} is a legacy {family.name} index "
+            f"({[c for c, _ in family.legacy_cols]} columns, no _fp_tag) "
+            "— appending would mix two layouts; rebuild it with "
+            "save_fp_index first"
+        )
+    cols = ["media_id", family.hash_col]
+    missing = [c for c in cols if c not in fps.columns]
     if missing:
         raise ValueError(
             f"fingerprint frame lacks column(s) {missing} — pass a "
-            f"fingerprint output ({id_col}, {hash_col})"
+            f"{family.name} fingerprint output {tuple(cols)}"
         )
     slim = (
-        fps.select(id_col, hash_col)
-        .filter(F.col(hash_col).isNotNull() & F.col(id_col).isNotNull())
+        fps.select(*cols)
+        .filter(F.col(cols[0]).isNotNull() & F.col(cols[1]).isNotNull())
         .localCheckpoint(eager=True)  # count and write read one snapshot
     )
     n = slim.count()
     if n:
-        slim.withColumn("_fp_tag", F.lit(tag)).write.mode("append").parquet(
-            path
-        )
+        slim.withColumn("_fp_tag", F.lit(family.tag(params))).write.mode(
+            "append"
+        ).parquet(path)
     return n
 
 
 def load_fp_index(
-    spark: SparkSession,
-    path: str,
-    expected_tag: str | None,
-    id_col: str = "media_id",
-    hash_col: str = "fp",
-) -> tuple[DataFrame, str]:
-    """Inverse of ``save_fp_index``: ``(index, tag)`` with the index
-    frame ready for ``hamming_pairs_against_corpus``. One artifact
-    read. Fails loudly on a tagless parquet, a corrupt artifact mixing
-    tags, an artifact whose columns do not match the caller's, or —
-    when ``expected_tag`` is given — a tag other than it (wrong
-    family / parameter set / revision). Pass ``expected_tag=None``
-    when the caller derives its parameters FROM the artifact (it must
-    then validate the returned tag's family itself, the way
-    ``video_fp.load_vhash_index`` does)."""
+    spark: SparkSession, path: str, family: FingerprintFamily
+) -> tuple[DataFrame, dict]:
+    """Inverse of ``save_fp_index``: ``(index, params)`` — the
+    ``(media_id, <hash_col>)`` frame ready for
+    ``fingerprint.dedup_fp_against_corpus`` and the parameters parsed
+    FROM the artifact's tag, so a probe hashes with exactly the
+    index's configuration. One artifact read; tombstoned ids are
+    suppressed. Fails loudly on a tagless parquet, columns of another
+    family, an artifact mixing tags, or a tag of another family or
+    revision. Also reads the family's legacy pre-tag layout (the
+    image tier's ``_phash_algo``/``_phash_size`` columns), translating
+    those columns to params."""
     df = spark.read.parquet(path)
-    if "_fp_tag" not in df.columns:
+    meta = [c for c, _ in family.legacy_cols]  # the pre-tag layout
+    if "_fp_tag" in df.columns or not meta or not set(meta) <= set(df.columns):
+        meta = ["_fp_tag"]
+    if meta[0] not in df.columns:
         raise ValueError(
             f"{path} has no _fp_tag column — not a save_fp_index artifact"
         )
-    missing = [c for c in (id_col, hash_col) if c not in df.columns]
+    missing = [c for c in ("media_id", family.hash_col) if c not in df.columns]
     if missing:
         raise ValueError(
-            f"{path} lacks column(s) {missing} — written under different "
-            "column names than this probe expects"
+            f"{path} lacks column(s) {missing} — not a {family.name} "
+            "fingerprint index (written for another family?)"
         )
-    tags = [r["_fp_tag"] for r in df.select("_fp_tag").distinct().collect()]
+    tags = df.select(*meta).distinct().collect()
     if len(tags) != 1:
         raise ValueError(
             f"{path} mixes {len(tags)} fingerprint tags — corrupt "
             "artifact (append through append_fp_index, never mix files)"
         )
-    if expected_tag is not None and tags[0] != expected_tag:
-        raise ValueError(
-            f"{path} records fingerprint tag {tags[0]!r}; this probe "
-            f"computes {expected_tag!r} — rebuild the index "
-            "(cross-family/revision probes would miss every near-dup)"
+    if meta == ["_fp_tag"]:
+        params = family.parse_tag(tags[0][0])
+    else:
+        params = family.params(
+            **{p: tags[0][c] for c, p in family.legacy_cols}
         )
-    index = df.drop("_fp_tag").filter(
-        F.col(id_col).isNotNull()  # drop the empty-safety sentinel
+    index = df.select("media_id", family.hash_col).filter(
+        F.col("media_id").isNotNull()  # drop the empty-safety sentinel
     )
-    index = suppress_index_tombstones(spark, path, index, id_col)
-    return index, tags[0]
+    index = suppress_index_tombstones(spark, path, index, "media_id")
+    return index, params
 
 
 # ---------------------------------------------------------------------------
 # Index deletion lifecycle (round 12): tombstones + deferred compaction
 # for every parquet fingerprint artifact (the ANN index got this in
 # round 11 via pq.remove_from_ann_index; the fingerprint tiers get the
-# same takedown semantics here). One generic engine serves the three
-# artifact formats — generic tagged fp (audio/video), MinHash
-# signature, and image phash — because they share the same shape:
-# a parquet dir of (id, payload-free hash[es]) + constant meta columns
-# + a NULL-id empty-safety sentinel row.
+# same takedown semantics here). One generic engine serves the two
+# artifact formats — the tagged media fingerprint index (image, audio
+# and video alike) and the MinHash signature index — because they
+# share the same shape: a parquet dir of (id, payload-free hash[es])
+# + constant meta columns + a NULL-id empty-safety sentinel row.
 # ---------------------------------------------------------------------------
 
 
@@ -2379,20 +2356,17 @@ def remove_from_fp_index(
     spark: SparkSession,
     path: str,
     ids: DataFrame,
-    tag: str,
-    id_col: str = "media_id",
-    hash_col: str = "fp",
+    family: FingerprintFamily,
     compact_ratio_threshold: float = 0.1,
 ) -> dict:
-    """Takedowns for the generic tagged fingerprint artifact (the
-    audio/video tiers): tombstone ``ids`` so they stop matching
-    probes in minutes, deferring the file rewrite to
-    ``compact_fp_index``. The caller's ``tag`` is validated against
-    the artifact first — removing under the wrong family/revision is
-    rejected, same as probing under it."""
-    load_fp_index(spark, path, tag, id_col=id_col, hash_col=hash_col)
+    """Takedowns for a media fingerprint index: tombstone ``media_id``s
+    so they stop matching probes in minutes, deferring the file
+    rewrite to ``compact_fp_index``. The artifact is validated as a
+    ``family`` index first — removing under the wrong family is
+    rejected with nothing written, same as probing under it."""
+    load_fp_index(spark, path, family)
     return _artifact_remove(
-        spark, path, ids, id_col,
+        spark, path, ids, "media_id",
         compact_ratio_threshold=compact_ratio_threshold,
     )
 
@@ -2400,16 +2374,14 @@ def remove_from_fp_index(
 def compact_fp_index(
     spark: SparkSession,
     path: str,
-    tag: str | None = None,
+    family: FingerprintFamily,
     min_ratio: float = 0.1,
     force: bool = False,
-    id_col: str = "media_id",
-    hash_col: str = "fp",
 ) -> dict:
     """Vacuum for ``remove_from_fp_index`` tombstones — threshold-
     gated rewrite of the artifact minus the tombstoned ids."""
-    load_fp_index(spark, path, tag, id_col=id_col, hash_col=hash_col)
-    return _artifact_compact(spark, path, id_col, min_ratio, force)
+    load_fp_index(spark, path, family)
+    return _artifact_compact(spark, path, "media_id", min_ratio, force)
 
 
 def remove_from_dedup_index(
@@ -2444,11 +2416,7 @@ def compact_dedup_index(
     return _artifact_compact(spark, path, id_col, min_ratio, force)
 
 
-def index_fsck(
-    spark: SparkSession,
-    path: str,
-    id_col: str = "media_id",
-) -> dict:
+def index_fsck(spark: SparkSession, path: str) -> dict:
     """Read-only artifact health check ("fsck") for every index format
     this library persists — the command an operator runs before
     trusting an index after a crash, a migration, or an unknown
@@ -2461,9 +2429,11 @@ def index_fsck(
     - lifecycle-bearing indexes (live rows post-tombstone-suppression,
       physical rows, tombstone count/ratio, stale
       ``_compacting``/``_old`` swap leftovers): marker-protocol ANN dir
-      (``ann_ivf_pq``), generic ``_fp_tag`` fingerprint (the audio-afp
-      and video-vhash writers wrap it), MinHash ``_mh_*``, image-phash
-      ``_phash_*``;
+      (``ann_ivf_pq``), the ``_fp_tag`` media fingerprint index
+      (``fp_tagged`` — image, audio and video; the family is read from
+      the hash column, and the legacy image layout with
+      ``_phash_algo``/``_phash_size`` columns reads as ``fp_tagged``
+      too), MinHash ``_mh_*``;
     - parameterized summary/model artifacts (loader-validated +
       row-counted; replaced wholesale, never row-deleted, so no
       tombstone state): ``quantile_sketch`` (``_dq_*`` — the dyadic
@@ -2477,9 +2447,7 @@ def index_fsck(
     beyond the table itself. Nothing is mutated; a failed validation
     comes back as ``ok=False`` + the loader's error text instead of a
     raise, so a fleet sweep over many artifacts reports per-artifact
-    instead of stopping at the first bad one. ``id_col`` only matters
-    for the generic fingerprint kind (whose artifact doesn't record
-    the id column name — the MinHash and phash kinds carry theirs)."""
+    instead of stopping at the first bad one."""
     import json as _json
     import os as _os
 
@@ -2560,31 +2528,29 @@ def index_fsck(
         else:
             df = spark.read.parquet(p)
             cols = set(df.columns)
+            id_col = "media_id"
             if "_mh_num_hashes" in cols:
                 report["kind"] = "minhash"
                 index, nh, k = load_dedup_index(spark, p)
                 report["meta"] = {"num_hashes": nh, "k": k}
-                mh_id = spark.read.parquet(p).select("_mh_id_col").first()[0]
-                id_col = mh_id
-            elif "_phash_algo" in cols:
-                report["kind"] = "phash"
-                from .multimodal import load_phash_index
+                id_col = spark.read.parquet(p).select("_mh_id_col").first()[0]
+            elif "_fp_tag" in cols or "_phash_algo" in cols:
+                from .fingerprint import FAMILIES
 
-                index, algo, hs = load_phash_index(spark, p)
-                report["meta"] = {"algo": algo, "hash_size": hs}
-                id_col = "media_id"
-            elif "_fp_tag" in cols:
                 report["kind"] = "fp_tagged"
-                rest = cols - {"_fp_tag", id_col}
-                if id_col not in cols or len(rest) != 1:
-                    raise ValueError(
-                        f"fp artifact columns {sorted(cols)} don't match "
-                        f"(id_col={id_col!r} + one hash column + _fp_tag)"
-                    )
-                index, tag = load_fp_index(
-                    spark, p, None, id_col=id_col, hash_col=rest.pop()
+                fam = next(
+                    (f for f in FAMILIES.values() if f.hash_col in cols), None
                 )
-                report["meta"] = {"tag": tag}
+                if fam is None:
+                    raise ValueError(
+                        f"fp artifact columns {sorted(cols)} carry no "
+                        "fingerprint family's hash column "
+                        f"{[f.hash_col for f in FAMILIES.values()]}"
+                    )
+                index, params = load_fp_index(spark, p, fam)
+                report["meta"] = {"family": fam.name, "tag": fam.tag(params)}
+                if "_fp_tag" not in cols:
+                    report["meta"]["legacy_layout"] = True
             # ---- parameterized summary/model artifacts: loader-
             # validated + row-counted, but no id/tombstone lifecycle
             # (a sketch or codebook is replaced wholesale, never

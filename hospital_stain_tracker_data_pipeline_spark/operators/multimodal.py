@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import bisect
 import hashlib
-import re
 import struct
 import zlib
 from collections.abc import Iterator
@@ -43,7 +42,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dedup import DEFAULT_MAX_BUCKET as DEDUP_DEFAULT_MAX_BUCKET
 
 
 def sniff_image(raw: bytes) -> tuple[str, int, int] | None:
@@ -1289,227 +1287,6 @@ def image_phash(
     return media.select("media_id", "payload").mapInPandas(
         run, schema=IMAGE_PHASH_SCHEMA
     )
-
-
-def image_dup_pairs(
-    media: DataFrame,
-    algo: str = "dhash",
-    hash_size: int = 8,
-    max_hamming: int = 3,
-    fake_decode: bool = False,
-    max_bucket: int | None = DEDUP_DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Image near-duplicate pairs: ``image_phash`` + the pigeonhole
-    Hamming banding ``simhash_pairs`` uses (``dedup.hamming_pairs``) —
-    ``(id_a, id_b, hamming)`` for every pair of images whose
-    perceptual hashes differ in <= ``max_hamming`` of the
-    ``hash_size²`` bits. Exact recall at the hash level (banding is
-    pigeonhole, not probabilistic); the pixel payloads never enter a
-    shuffle — candidate generation and verify run on the 8-byte
-    fingerprints alone, the 100 TB image-dedup shape."""
-    from .dedup import hamming_pairs
-
-    hashes = image_phash(media, algo, hash_size, fake_decode)
-    return hamming_pairs(
-        hashes,
-        hash_col="phash",
-        id_col="media_id",
-        nbits=hash_size * hash_size,
-        max_hamming=max_hamming,
-        max_bucket=max_bucket,
-    )
-
-
-def dedup_images_against_corpus(
-    new_media: DataFrame,
-    corpus_index: DataFrame,
-    algo: str = "dhash",
-    hash_size: int = 8,
-    max_hamming: int = 3,
-    fake_decode: bool = False,
-    max_bucket: int | None = DEDUP_DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Incremental image dedup: drop new media whose perceptual hash is
-    within ``max_hamming`` bits of anything ALREADY INDEXED (the corpus
-    wins — ``dedup_against_corpus`` semantics for the visual tier). The
-    index is simply a persisted ``image_phash`` output ``(media_id,
-    phash)`` — 8 bytes + an id per image, pixels never stored — written
-    as plain parquet once per corpus version like the MinHash signature
-    index. A daily crawl batch decodes + hashes ONLY its own payloads,
-    band-joins the tiny hash table against the index
-    (``dedup.hamming_pairs_against_corpus``), and survivors append
-    their hashes to the index.
-
-    Does NOT dedup the new batch against itself — compose with
-    ``image_dup_pairs`` for that. The index and the probe must share
-    ``algo`` + ``hash_size`` (the cross-set gate fail-fasts on a width
-    mismatch when ``hash_size < 8``). Returns surviving ``new_media``
-    rows unchanged; the binary payload never enters a shuffle. The same
-    call works per micro-batch inside ``foreachBatch`` for a streaming
-    landing directory (the ``stream_dedup_against_corpus`` pattern)."""
-    from .dedup import hamming_pairs_against_corpus
-
-    hashes = image_phash(new_media, algo, hash_size, fake_decode)
-    matched = (
-        hamming_pairs_against_corpus(
-            hashes,
-            corpus_index,
-            hash_col="phash",
-            id_col="media_id",
-            nbits=hash_size * hash_size,
-            max_hamming=max_hamming,
-            max_bucket=max_bucket,
-        )
-        .select(F.col("new_id").alias("media_id"))
-        .distinct()
-    )
-    return new_media.join(matched, "media_id", "left_anti")
-
-
-def save_phash_index(
-    index: DataFrame, algo: str, hash_size: int, path: str
-) -> None:
-    """Persist a perceptual-hash index WITH its parameters — the
-    ``save_cms_sketch`` artifact discipline for the visual dedup tier:
-    constant ``_phash_algo`` / ``_phash_size`` columns ride the
-    parquet, so ``load_phash_index`` returns the right ``(index, algo,
-    hash_size)`` and probing a dHash index with aHash probes (which
-    would silently match nothing meaningful) becomes structurally
-    impossible for artifact-mediated flows. ``index`` is any frame
-    carrying ``media_id`` + ``phash`` (an ``image_phash`` output or
-    its survivors projection); only those two columns persist — 8 B +
-    an id per image, pixels never stored. NULL-hash rows (undecodable
-    payloads) are dropped: they can never pair, and keeping them would
-    only bloat the band join. NULL-id rows are dropped too — the
-    loader treats NULL ``media_id`` as the empty-index sentinel, so
-    persisting them would silently lose their hashes on load; an id-less
-    hash can't anchor a dedup verdict anyway. A NULL-id sentinel row
-    rides along so a legitimately EMPTY index still round-trips with
-    its parameters (the loader drops it)."""
-    if algo not in ("dhash", "ahash"):
-        raise ValueError(f"unknown phash algo {algo!r} (dhash|ahash)")
-    if not (1 <= hash_size <= 8):
-        raise ValueError(
-            f"hash_size={hash_size} out of range — the LONG fingerprint "
-            "caps at 64 bits (1 <= hash_size <= 8)"
-        )
-    missing = [c for c in ("media_id", "phash") if c not in index.columns]
-    if missing:
-        raise ValueError(
-            f"index frame lacks column(s) {missing} — pass an "
-            "image_phash output (media_id, phash)"
-        )
-    slim = index.select("media_id", "phash").filter(
-        F.col("phash").isNotNull() & F.col("media_id").isNotNull()
-    )
-    sentinel = index.sparkSession.range(1).select(
-        F.lit(None).cast("long").alias("media_id"),
-        F.lit(None).cast("long").alias("phash"),
-    )
-    (
-        slim.unionByName(sentinel)
-        .withColumn("_phash_algo", F.lit(algo))
-        .withColumn("_phash_size", F.lit(hash_size))
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    from .dedup import clear_index_lifecycle_state
-
-    clear_index_lifecycle_state(path)  # a REBUILD starts takedown-free
-
-
-def append_phash_index(spark, path: str, hashes: DataFrame) -> int:
-    """Append survivor hashes to an EXISTING ``save_phash_index``
-    artifact under the artifact's OWN recorded parameters — the
-    incremental half of the visual index (the next batch then dedups
-    against these survivors too). The artifact schema lives only here
-    and in ``save_phash_index``: callers never hand-write the meta
-    columns, so a format change cannot fork the on-disk layout.
-    Returns the number of rows appended. ``hashes`` must carry
-    ``media_id`` + ``phash`` computed with the SAME algo/hash_size the
-    artifact records (feed ``load_phash_index``'s returned params into
-    ``image_phash`` — artifact-mediated flows can't mismatch); NULL
-    id/hash rows drop exactly as in ``save_phash_index``."""
-    # loading validates the artifact (params present, single set)
-    _, algo, hash_size = load_phash_index(spark, path)
-    missing = [c for c in ("media_id", "phash") if c not in hashes.columns]
-    if missing:
-        raise ValueError(
-            f"hashes frame lacks column(s) {missing} — pass an "
-            "image_phash output (media_id, phash)"
-        )
-    slim = (
-        hashes.select("media_id", "phash")
-        .filter(F.col("phash").isNotNull() & F.col("media_id").isNotNull())
-        .localCheckpoint(eager=True)  # count and write read one snapshot
-    )
-    n = slim.count()
-    if n:
-        (
-            slim.withColumn("_phash_algo", F.lit(algo))
-            .withColumn("_phash_size", F.lit(hash_size))
-            .write.mode("append")
-            .parquet(path)
-        )
-    return n
-
-
-def load_phash_index(spark, path: str):
-    """Inverse of ``save_phash_index``: returns ``(index, algo,
-    hash_size)`` ready for ``dedup_images_against_corpus`` /
-    ``hamming_pairs_against_corpus``. Fails loudly on a parameterless
-    parquet or a corrupt artifact mixing parameter sets (append
-    survivors with MATCHING parameters, never mix files)."""
-    df = spark.read.parquet(path)
-    needed = {"_phash_algo", "_phash_size"}
-    if not needed.issubset(df.columns):
-        raise ValueError(
-            f"{path} has no _phash_algo/_phash_size columns — not a "
-            "save_phash_index artifact"
-        )
-    metas = df.select("_phash_algo", "_phash_size").distinct().collect()
-    if len(metas) != 1:
-        raise ValueError(
-            f"{path} mixes {len(metas)} parameter sets — corrupt "
-            "artifact (append survivors with matching algo/hash_size, "
-            "never mix files)"
-        )
-    algo, hash_size = metas[0]["_phash_algo"], int(metas[0]["_phash_size"])
-    if algo not in ("dhash", "ahash") or not (1 <= hash_size <= 8):
-        raise ValueError(
-            f"{path} records algo={algo!r} hash_size={hash_size} — "
-            "corrupt artifact"
-        )
-    index = df.drop("_phash_algo", "_phash_size").filter(
-        F.col("media_id").isNotNull()  # drop the empty-safety sentinel
-    )
-    from .dedup import suppress_index_tombstones
-
-    index = suppress_index_tombstones(spark, path, index, "media_id")
-    return index, algo, hash_size
-
-
-def remove_from_phash_index(spark, path: str, ids: DataFrame) -> dict:
-    """Takedowns for the visual index — tombstone ``media_id``s so
-    they stop seeding image near-dup verdicts in minutes (the pixels
-    were never stored; the hash rows stay until
-    ``compact_phash_index`` folds them). Artifact validated first;
-    same tombstone-vs-reappend contract as the ANN tier."""
-    from .dedup import _artifact_remove
-
-    load_phash_index(spark, path)  # rejects torn/parameterless artifacts
-    return _artifact_remove(spark, path, ids, "media_id")
-
-
-def compact_phash_index(
-    spark, path: str, min_ratio: float = 0.1, force: bool = False
-) -> dict:
-    """Vacuum for ``remove_from_phash_index`` tombstones — threshold-
-    gated rewrite of the artifact minus the tombstoned ids."""
-    from .dedup import _artifact_compact
-
-    load_phash_index(spark, path)
-    return _artifact_compact(spark, path, "media_id", min_ratio, force)
 
 
 def _gif_lzw_decode(data: bytes, mcs: int, n_pixels: int) -> bytes | None:

@@ -3,7 +3,8 @@ REAL container-extracted frames + the shared Hamming-banded pair
 engine — the final modality of the incremental dedup lifecycle (text,
 images, embeddings, audio, and now video all ride the same pipeline:
 batch pairs -> persisted tagged index -> corpus-wins gate -> streaming
-twin -> CLI).
+twin -> CLI). This module holds only the fingerprint; the lifecycle is
+the ``fingerprint.VIDEO`` family's, shared with image and audio.
 
 A clip's fingerprint is the per-bit MAJORITY VOTE over the perceptual
 hashes (``multimodal._phash_bits`` — dHash/aHash on real decoded
@@ -41,11 +42,9 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .dedup import DEFAULT_MAX_BUCKET as DEDUP_DEFAULT_MAX_BUCKET
 from .multimodal import (
     _decode_any_pixels,
     _phash_bits,
@@ -63,14 +62,6 @@ VIDEO_PHASH_SCHEMA = T.StructType(
         T.StructField("decoded", T.BooleanType(), False),
     ]
 )
-
-
-def _vhash_tag(algo: str, hash_size: int, n_samples: int) -> str:
-    """Fingerprint-family tag for the persisted index artifact —
-    includes every parameter that changes the bits, so a probe under
-    one configuration fail-fasts against an index built under
-    another."""
-    return f"vphash-v1:{algo}:{hash_size}:n_samples={n_samples}"
 
 
 def _clip_frames(raw: bytes, n_samples: int) -> tuple[str, list[bytes]] | None:
@@ -205,167 +196,3 @@ def video_phash(
     return media.select("media_id", "payload").mapInPandas(
         run, schema=VIDEO_PHASH_SCHEMA
     )
-
-
-def video_dup_pairs(
-    media: DataFrame,
-    algo: str = "dhash",
-    hash_size: int = 8,
-    n_samples: int = 8,
-    max_hamming: int = 4,
-    fake_decode: bool = False,
-    max_bucket: int | None = DEDUP_DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Video near-duplicate pairs: ``video_phash`` + the pigeonhole
-    Hamming banding (``dedup.hamming_pairs``) — ``(id_a, id_b,
-    hamming)`` for every pair of clips whose fingerprints differ in
-    <= ``max_hamming`` bits. Exact recall at the fingerprint level;
-    frame bytes never enter a shuffle."""
-    from .dedup import hamming_pairs
-
-    hashes = video_phash(media, algo, hash_size, n_samples, fake_decode)
-    return hamming_pairs(
-        hashes,
-        hash_col="vhash",
-        id_col="media_id",
-        nbits=hash_size * hash_size,
-        max_hamming=max_hamming,
-        max_bucket=max_bucket,
-    )
-
-
-def dedup_videos_against_corpus(
-    new_media: DataFrame,
-    corpus_index: DataFrame,
-    algo: str = "dhash",
-    hash_size: int = 8,
-    n_samples: int = 8,
-    max_hamming: int = 4,
-    fake_decode: bool = False,
-    max_bucket: int | None = DEDUP_DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Incremental video dedup: drop new clips whose fingerprint is
-    within ``max_hamming`` bits of anything ALREADY INDEXED (corpus
-    wins). The index is a persisted ``video_phash`` output
-    ``(media_id, vhash)`` — 8 bytes + an id per clip, frames never
-    stored (``save_vhash_index``). Does NOT dedup the batch against
-    itself — compose with ``video_dup_pairs``. Returns surviving
-    ``new_media`` rows unchanged; works per micro-batch inside
-    ``foreachBatch`` (``streaming.stream_video_dedup_ingest``)."""
-    from .dedup import hamming_pairs_against_corpus
-
-    hashes = video_phash(new_media, algo, hash_size, n_samples, fake_decode)
-    matched = (
-        hamming_pairs_against_corpus(
-            hashes,
-            corpus_index,
-            hash_col="vhash",
-            id_col="media_id",
-            nbits=hash_size * hash_size,
-            max_hamming=max_hamming,
-            max_bucket=max_bucket,
-        )
-        .select(F.col("new_id").alias("media_id"))
-        .distinct()
-    )
-    return new_media.join(matched, "media_id", "left_anti")
-
-
-def save_vhash_index(
-    index: DataFrame,
-    path: str,
-    algo: str = "dhash",
-    hash_size: int = 8,
-    n_samples: int = 8,
-) -> None:
-    """Persist a video-fingerprint index under its full parameter tag
-    (``dedup.save_fp_index`` — algo, hash_size, AND n_samples all
-    change the bits, so all three ride the artifact)."""
-    from .dedup import save_fp_index
-
-    save_fp_index(
-        index,
-        path,
-        _vhash_tag(algo, hash_size, n_samples),
-        id_col="media_id",
-        hash_col="vhash",
-    )
-
-
-def append_vhash_index(spark: SparkSession, path: str, hashes: DataFrame) -> int:
-    """Append survivor fingerprints to an existing ``save_vhash_index``
-    artifact under the artifact's OWN recorded parameters (the
-    ``append_phash_index`` discipline — feed ``load_vhash_index``'s
-    returned params into ``video_phash`` so artifact-mediated flows
-    can't mismatch). Returns rows appended."""
-    from .dedup import append_fp_index
-
-    _, algo, hash_size, n_samples = load_vhash_index(spark, path)
-    return append_fp_index(
-        spark,
-        path,
-        hashes,
-        _vhash_tag(algo, hash_size, n_samples),
-        id_col="media_id",
-        hash_col="vhash",
-    )
-
-
-def load_vhash_index(spark: SparkSession, path: str):
-    """Inverse of ``save_vhash_index``: ``(index, algo, hash_size,
-    n_samples)`` with the parameters parsed FROM the artifact's tag —
-    the ``load_phash_index`` shape, so artifact-mediated flows hash
-    their probes with exactly the index's configuration. One artifact
-    read (``dedup.load_fp_index`` with ``expected_tag=None`` — tag
-    presence, uniqueness, and columns validated there; the family
-    parse here). Fails loudly on a tagless/mixed artifact, a tag from
-    a different fingerprint family or revision, or an unparseable
-    tag."""
-    from .dedup import load_fp_index
-
-    index, tag = load_fp_index(
-        spark, path, None, id_col="media_id", hash_col="vhash"
-    )
-    try:
-        family, algo, hs, ns = tag.split(":")
-        hash_size = int(hs)
-        n_samples = int(ns.removeprefix("n_samples="))
-        ok = (
-            family == "vphash-v1"
-            and algo in ("dhash", "ahash")
-            and 1 <= hash_size <= 8
-            and n_samples >= 1
-            and ns.startswith("n_samples=")
-        )
-    except ValueError:
-        ok = False
-    if not ok:
-        raise ValueError(
-            f"{path} records fingerprint tag {tag!r} — not a vphash-v1 "
-            "artifact this module can probe (rebuild the index)"
-        )
-    return index, algo, hash_size, n_samples
-
-
-def remove_from_vhash_index(
-    spark: SparkSession, path: str, ids: DataFrame
-) -> dict:
-    """Takedowns for the video index: tombstone ``media_id``s so they
-    stop seeding video near-dup verdicts in minutes (the generic
-    tagged-artifact lifecycle under the artifact's OWN recorded tag;
-    same tombstone-vs-reappend contract as the ANN tier)."""
-    from .dedup import _artifact_remove
-
-    load_vhash_index(spark, path)  # one validating read (tag family)
-    return _artifact_remove(spark, path, ids, "media_id")
-
-
-def compact_vhash_index(
-    spark: SparkSession, path: str, min_ratio: float = 0.1,
-    force: bool = False,
-) -> dict:
-    """Vacuum for ``remove_from_vhash_index`` tombstones."""
-    from .dedup import _artifact_compact
-
-    load_vhash_index(spark, path)  # one validating read (tag family)
-    return _artifact_compact(spark, path, "media_id", min_ratio, force)

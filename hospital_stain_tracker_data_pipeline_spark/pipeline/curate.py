@@ -918,10 +918,9 @@ def curate_media(
     after materializing it."""
     from pyspark.sql import functions as F
 
-    from ..operators.audio_fp import AFP_NBITS, audio_fingerprint
     from ..operators.dedup import hamming_pairs
-    from ..operators.multimodal import image_phash, tag_media_modality
-    from ..operators.video_fp import video_phash
+    from ..operators.fingerprint import AUDIO, IMAGE, VIDEO
+    from ..operators.multimodal import tag_media_modality
 
     from pyspark.sql import Observation
 
@@ -983,32 +982,17 @@ def curate_media(
     # materializes its hash input); the hot-bucket drop count comes
     # from the cap's own telemetry out-param — the same hook the
     # minhash tier uses — so no stage runs a second banding pass
-    tiers = {
-        "image": (
-            lambda m: image_phash(m, fake_decode=fake_decode),
-            "phash",
-            64,
-            image_max_hamming,
-        ),
-        "audio": (
-            lambda m: audio_fingerprint(m, fake_decode),
-            "afp",
-            AFP_NBITS,
-            audio_max_hamming,
-        ),
-        "video": (
-            lambda m: video_phash(
-                m, n_samples=video_n_samples, fake_decode=fake_decode
-            ),
-            "vhash",
-            64,
-            video_max_hamming,
-        ),
-    }
+    tiers = (
+        (IMAGE, image_max_hamming, {}),
+        (AUDIO, audio_max_hamming, {}),
+        (VIDEO, video_max_hamming, {"n_samples": video_n_samples}),
+    )
     dropped = {}
     hot_buckets: dict[str, int] = {}
     all_losers = exact_losers
-    for modality, (hash_fn, hash_col, nbits, max_hamming) in tiers.items():
+    for family, max_hamming, params in tiers:
+        modality = family.name
+        params = family.params(**params)
         subset = tagged.filter(
             (F.col("modality") == modality) & F.col("native")
         ).join(exact_losers, "media_id", "left_anti")
@@ -1018,10 +1002,12 @@ def curate_media(
         # count rides the checkpoint action
         losers, dropped[modality] = _ckpt_with_count(
             hamming_pairs(
-                hash_fn(subset).select("media_id", hash_col),
-                hash_col=hash_col,
+                family.fingerprint(subset, fake_decode, **params).select(
+                    "media_id", family.hash_col
+                ),
+                hash_col=family.hash_col,
                 id_col="media_id",
-                nbits=nbits,
+                nbits=family.nbits(params),
                 max_hamming=max_hamming,
                 max_bucket=max_bucket,
                 telemetry=tier_tel,

@@ -442,11 +442,8 @@ def q_image_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force bit-for-bit. Cross-codec by construction: the base is
     BMP, the twin PNG, and they may only pair because the HASH sees
     pixels, not bytes. ``media_id = doc_id*2 + variant``."""
-    from ..operators.multimodal import (
-        encode_bmp,
-        encode_png,
-        image_dup_pairs,
-    )
+    from ..operators.fingerprint import IMAGE, fp_dup_pairs
+    from ..operators.multimodal import encode_bmp, encode_png
 
     ids = load_fixture_table(spark, sf_dir, "documents").select(
         "doc_id"
@@ -482,7 +479,7 @@ def q_image_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["media_id", "payload"])
 
     media = ids.mapInPandas(render, "media_id long, payload binary")
-    return image_dup_pairs(media, max_hamming=3).orderBy("id_a", "id_b")
+    return fp_dup_pairs(media, IMAGE, max_hamming=3).orderBy("id_a", "id_b")
 
 
 SQL_IMAGE_NEAR_DUP_PAIRS = """

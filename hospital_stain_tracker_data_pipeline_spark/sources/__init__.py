@@ -1,8 +1,8 @@
 """Scans and sinks."""
 
-from .tables import load_fixture_table, load_fixture_tables  # noqa: F401
+from .tables import load_fixture_table  # noqa: F401
 from .csv_source import read_hhs_csv  # noqa: F401
-from .sinks import write_rejects_csv, write_partitioned_table, append_run_log  # noqa: F401
+from .sinks import write_rejects_csv, append_run_log  # noqa: F401
 from .warc import (  # noqa: F401
     read_warc,
     warc_to_documents,

@@ -1,6 +1,5 @@
-"""JDBC source/sink — parity with the reference's Postgres layer
-(SURVEY.md §2.1 op-scan-table; ``backend/app/db.py``,
-``ingest_capacity.py:178-193``).
+"""JDBC sink — parity with the reference's Postgres layer
+(``backend/app/db.py``, ``ingest_capacity.py:178-193``).
 
 The lake tables (``pipeline/lake.py``) are the primary storage; these
 helpers exist for deployments that keep Postgres as the serving store,
@@ -10,8 +9,6 @@ the write path mirrors the reference's single multi-row
 ``INSERT ... ON CONFLICT (keys) DO UPDATE`` statement per partition.
 
 Scale notes:
-- Reads are range-partitioned (``partitionColumn``/``numPartitions``) so
-  a big table scan fans out across executors instead of one connection.
 - Writes batch per partition (one connection per partition, multi-row
   VALUES) — the JDBC analog of the reference's batched upsert; size
   partitions so each transaction stays in the DB's sweet spot.
@@ -21,39 +18,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 # Re-exported for sink callers: Postgres ON CONFLICT DO UPDATE raises
 # 'cannot affect row a second time' if one statement touches a key
 # twice, so every upsert batch MUST be key-unique first.
 from ..operators.upsert import dedup_last_writer  # noqa: F401
-
-
-def read_jdbc_table(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int = 8,
-    properties: dict[str, str] | None = None,
-) -> DataFrame:
-    """Parallel JDBC read: with ``partition_column`` bounds, Spark
-    issues ``num_partitions`` range-predicated queries concurrently —
-    without them the whole table arrives on one task (the reference's
-    single-connection full scan, compute_metrics.py:46)."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions))
-        )
-    return reader.load()
 
 
 def upsert_statement(table: str, columns: Sequence[str], keys: Sequence[str]) -> str:

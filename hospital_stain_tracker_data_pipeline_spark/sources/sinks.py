@@ -1,5 +1,6 @@
-"""Sinks: rejects CSV, partitioned table writes, run-log append
-(SURVEY.md §2.1 op-sink-rejects / op-sink-upsert / op-sink-runlog).
+"""Sinks: rejects CSV and run-log append (SURVEY.md §2.1
+op-sink-rejects / op-sink-runlog; the partitioned upsert sink is
+``pipeline.lake.LakeTable``).
 """
 
 from __future__ import annotations
@@ -21,24 +22,6 @@ def write_rejects_csv(rejects: DataFrame, base_dir: str, run_id: str) -> str:
     path = os.path.join(base_dir, f"capacity_rejects_{run_id}")
     rejects.write.mode("overwrite").option("header", True).csv(path)
     return path
-
-
-def write_partitioned_table(
-    df: DataFrame, path: str, partition_by: str = "date", mode: str = "overwrite"
-) -> None:
-    """Parquet partitioned by ``partition_by`` (date by default).
-
-    Date partitioning is the lakehouse analog of the reference's B-tree
-    on ``(date, region_id)`` (models.py:54-56): every date-keyed API
-    query becomes a partition-pruned scan. Dynamic partition overwrite
-    keeps upserts idempotent without rewriting untouched dates.
-    """
-    (
-        df.write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_by)
-        .parquet(path)
-    )
 
 
 def new_run_id() -> str:

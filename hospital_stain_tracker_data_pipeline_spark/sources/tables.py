@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schemas import FIXTURE_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -89,9 +88,3 @@ def load_fixture_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     if name == "events":
         df = normalize_event_ts(df)
     return df
-
-
-def load_fixture_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = FIXTURE_TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_fixture_table(spark, sf_dir, n) for n in names}

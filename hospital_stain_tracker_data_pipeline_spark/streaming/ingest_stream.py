@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +29,9 @@ from ..operators.validate import split_valid_invalid
 from ..pipeline.lake import LakeTable
 from ..sources.sinks import append_run_log, new_run_id, run_log_row, utcnow
 from ..sources.tables import normalize_event_ts
+
+if TYPE_CHECKING:
+    from ..operators.fingerprint import FingerprintFamily
 
 # Fallback declaration only — used when the parquet footer can't be
 # sniffed (e.g. the source dir is empty at start time). ts matches the
@@ -909,42 +913,44 @@ def stream_bloom_membership(
     )
 
 
-def stream_image_dedup_ingest(
+def stream_fp_dedup_ingest(
     spark: SparkSession,
     source_dir: str,
     corpus_index: DataFrame,
     out_dir: str,
+    family: FingerprintFamily,
     path_glob: str = "*",
-    algo: str = "dhash",
-    hash_size: int = 8,
-    max_hamming: int = 3,
+    max_hamming: int | None = None,
     fake_decode: bool = False,
+    **params,
 ) -> DataFrame:
-    """Incremental VISUAL ingest: image files land continuously in
-    ``source_dir``; each new file is decoded + perceptually hashed
-    exactly once and dropped when it near-dups anything in the
-    EXISTING corpus's phash index (corpus wins — the streaming twin of
-    ``operators.multimodal.dedup_images_against_corpus``, same gate
-    per micro-batch). Sink rows are the SURVIVORS' ``(media_id, path,
-    mime, phash, decoded)`` — hash included so the operator appends
-    survivors straight onto the index after the run; pixels never
-    reach the sink.
+    """Incremental MEDIA ingest for one fingerprint family
+    (``operators.fingerprint.IMAGE`` / ``AUDIO`` / ``VIDEO``): files
+    land continuously in ``source_dir``; each new file is decoded and
+    fingerprinted exactly once and dropped when it near-dups anything
+    in the EXISTING corpus index (corpus wins — the streaming twin of
+    ``operators.fingerprint.dedup_fp_against_corpus``, same gate per
+    micro-batch). Sink rows are the SURVIVORS' ``(media_id, path,
+    mime, <family.hash_col>, decoded)`` — the hash is included so the
+    operator appends survivors straight onto the index after the run
+    (``dedup.append_fp_index``); pixels, PCM and frames never reach
+    the sink.
 
     Spark shape: unlike the WARC twin, file BYTES do enter the stream
-    (``binaryFile`` content) — an image is ONE record with no
+    (``binaryFile`` content) — a media file is ONE record with no
     within-file structure to re-scan, so the file source's
     checkpointed tracking replaces a listing+parse layer outright, and
     the decode runs executor-side where the bytes already are. Each
-    batch is hashed ONCE: the gate joins the tiny (id, hash) frame
-    against the index (``hamming_pairs_against_corpus``), never
-    re-decoding survivors. ``media_id = xxhash64(path)`` —
-    deterministic across replays, so the per-batch dynamic-overwrite
-    sink stays effectively exactly-once. The WARC twin's atomic-landing
-    contract applies verbatim (temp-then-rename; dot-prefixed names
-    are invisible)."""
-    from ..operators.dedup import hamming_pairs_against_corpus, materialize
-    from ..operators.multimodal import image_phash
+    batch is fingerprinted ONCE: the gate joins the tiny (id, hash)
+    frame against the index, never re-decoding survivors. ``media_id
+    = xxhash64(path)`` — deterministic across replays, so the
+    per-batch dynamic-overwrite sink stays effectively exactly-once.
+    The WARC twin's atomic-landing contract applies verbatim
+    (temp-then-rename; dot-prefixed names are invisible)."""
+    from ..operators.dedup import materialize
 
+    params = family.params(**params)
+    hash_col = family.hash_col
     files = (
         spark.readStream.format("binaryFile")
         .schema(
@@ -963,110 +969,15 @@ def stream_image_dedup_ingest(
             F.col("content").alias("payload"),
         )
         # materialize the slim hash frame HERE: it feeds both the gate
-        # join and the sink write — without this the image_phash
-        # mapInPandas plan (full pixel decode of the batch) would
+        # join and the sink write — without this the fingerprint
+        # mapInPandas plan (a full decode of the batch) would
         # re-execute for the sink, decoding every file twice
-        hashes = materialize(image_phash(media, algo, hash_size, fake_decode))
+        fps = materialize(family.fingerprint(media, fake_decode, **params))
         # media_id is xxhash64(path): a 64-bit collision between two
         # distinct paths would silently alias them through the gate and
         # the survivor join — surface it instead (one agg over the
         # already-materialized slim frame; a real collision is a stop
         # ship, not a merge)
-        collided = (
-            hashes.groupBy("media_id")
-            .count()
-            .filter(F.col("count") > 1)
-            .first()
-        )
-        if collided is not None:
-            raise ValueError(
-                "xxhash64(path) collision within batch on media_id="
-                f"{collided['media_id']} — distinct files would alias in "
-                "the dedup gate; rename one or switch the id scheme"
-            )
-        matched = (
-            hamming_pairs_against_corpus(
-                hashes,
-                corpus_index,
-                hash_col="phash",
-                id_col="media_id",
-                nbits=hash_size * hash_size,
-                max_hamming=max_hamming,
-            )
-            .select(F.col("new_id").alias("media_id"))
-            .distinct()
-        )
-        return (
-            hashes.join(matched, "media_id", "left_anti")
-            .join(media.select("media_id", "path"), "media_id")
-            .select("media_id", "path", "mime", "phash", "decoded")
-        )
-
-    return _run_batch_sink_stream(
-        spark,
-        files,
-        _gate,
-        out_dir,
-        empty=lambda: spark.createDataFrame(
-            [],
-            "media_id long, path string, mime string, phash long, "
-            "decoded boolean",
-        ),
-    )
-
-
-def stream_audio_dedup_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    corpus_index: DataFrame,
-    out_dir: str,
-    path_glob: str = "*",
-    max_hamming: int = 4,
-    fake_decode: bool = False,
-) -> DataFrame:
-    """Incremental AUDIO ingest: clips land continuously in
-    ``source_dir``; each new file is decoded + fingerprinted exactly
-    once and dropped when it near-dups anything in the EXISTING
-    corpus's afp index (corpus wins — the streaming twin of
-    ``operators.audio_fp.dedup_audio_against_corpus``, same gate per
-    micro-batch). Sink rows are the SURVIVORS' ``(media_id, path,
-    mime, afp, decoded)`` — fingerprint included so the operator
-    appends survivors straight onto the index after the run
-    (``append_afp_index``); PCM never reaches the sink.
-
-    Spark shape is the image twin's verbatim (one clip = one
-    ``binaryFile`` record, no within-file structure to re-scan; decode
-    runs executor-side where the bytes are; each batch fingerprinted
-    ONCE via the materialized slim frame; ``media_id =
-    xxhash64(path)`` with the in-batch collision assertion; the WARC
-    atomic-landing contract applies)."""
-    from ..operators.audio_fp import AFP_NBITS, audio_fingerprint
-    from ..operators.dedup import hamming_pairs_against_corpus, materialize
-
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", path_glob)
-        .load(source_dir)
-        .select("path", "content")
-    )
-
-    def _gate(batch_df: DataFrame) -> DataFrame | None:
-        media = batch_df.select(
-            F.xxhash64("path").alias("media_id"),
-            "path",
-            F.col("content").alias("payload"),
-        )
-        # materialize the slim fingerprint frame HERE: it feeds both
-        # the gate join and the sink write — the audio_fingerprint
-        # mapInPandas plan (full PCM decode of the batch) would
-        # re-execute for the sink otherwise
-        fps = materialize(audio_fingerprint(media, fake_decode))
-        # media_id is xxhash64(path): surface a collision instead of
-        # silently aliasing two files through the gate
         collided = (
             fps.groupBy("media_id").count().filter(F.col("count") > 1).first()
         )
@@ -1076,22 +987,11 @@ def stream_audio_dedup_ingest(
                 f"{collided['media_id']} — distinct files would alias in "
                 "the dedup gate; rename one or switch the id scheme"
             )
-        matched = (
-            hamming_pairs_against_corpus(
-                fps,
-                corpus_index,
-                hash_col="afp",
-                id_col="media_id",
-                nbits=AFP_NBITS,
-                max_hamming=max_hamming,
-            )
-            .select(F.col("new_id").alias("media_id"))
-            .distinct()
-        )
+        matched = family.match_corpus(fps, corpus_index, params, max_hamming)
         return (
             fps.join(matched, "media_id", "left_anti")
             .join(media.select("media_id", "path"), "media_id")
-            .select("media_id", "path", "mime", "afp", "decoded")
+            .select("media_id", "path", "mime", hash_col, "decoded")
         )
 
     return _run_batch_sink_stream(
@@ -1101,94 +1001,7 @@ def stream_audio_dedup_ingest(
         out_dir,
         empty=lambda: spark.createDataFrame(
             [],
-            "media_id long, path string, mime string, afp long, "
-            "decoded boolean",
-        ),
-    )
-
-
-def stream_video_dedup_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    corpus_index: DataFrame,
-    out_dir: str,
-    path_glob: str = "*",
-    algo: str = "dhash",
-    hash_size: int = 8,
-    n_samples: int = 8,
-    max_hamming: int = 4,
-    fake_decode: bool = False,
-) -> DataFrame:
-    """Incremental VIDEO ingest: clips land continuously in
-    ``source_dir``; each new file is frame-sampled + fingerprinted
-    exactly once and dropped when it near-dups anything in the
-    EXISTING corpus's vhash index (corpus wins — the streaming twin of
-    ``operators.video_fp.dedup_videos_against_corpus``). Sink rows are
-    the SURVIVORS' ``(media_id, path, mime, vhash, decoded)`` —
-    fingerprint included so the operator appends survivors straight
-    onto the index after the run (``append_vhash_index``); frame bytes
-    never reach the sink. Spark shape is the image/audio twins'
-    verbatim (one clip = one ``binaryFile`` record; batch fingerprinted
-    ONCE via the materialized slim frame; ``media_id = xxhash64(path)``
-    with the in-batch collision assertion)."""
-    from ..operators.dedup import hamming_pairs_against_corpus, materialize
-    from ..operators.video_fp import video_phash
-
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", path_glob)
-        .load(source_dir)
-        .select("path", "content")
-    )
-
-    def _gate(batch_df: DataFrame) -> DataFrame | None:
-        media = batch_df.select(
-            F.xxhash64("path").alias("media_id"),
-            "path",
-            F.col("content").alias("payload"),
-        )
-        hashes = materialize(
-            video_phash(media, algo, hash_size, n_samples, fake_decode)
-        )
-        collided = (
-            hashes.groupBy("media_id").count().filter(F.col("count") > 1).first()
-        )
-        if collided is not None:
-            raise ValueError(
-                "xxhash64(path) collision within batch on media_id="
-                f"{collided['media_id']} — distinct files would alias in "
-                "the dedup gate; rename one or switch the id scheme"
-            )
-        matched = (
-            hamming_pairs_against_corpus(
-                hashes,
-                corpus_index,
-                hash_col="vhash",
-                id_col="media_id",
-                nbits=hash_size * hash_size,
-                max_hamming=max_hamming,
-            )
-            .select(F.col("new_id").alias("media_id"))
-            .distinct()
-        )
-        return (
-            hashes.join(matched, "media_id", "left_anti")
-            .join(media.select("media_id", "path"), "media_id")
-            .select("media_id", "path", "mime", "vhash", "decoded")
-        )
-
-    return _run_batch_sink_stream(
-        spark,
-        files,
-        _gate,
-        out_dir,
-        empty=lambda: spark.createDataFrame(
-            [],
-            "media_id long, path string, mime string, vhash long, "
+            f"media_id long, path string, mime string, {hash_col} long, "
             "decoded boolean",
         ),
     )

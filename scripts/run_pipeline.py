@@ -14,6 +14,10 @@
                                         text-free MinHash signature index)
     dedup_filter --input --index --output  (drop new docs near-duplicating
                                         the indexed corpus; corpus wins)
+    fp_index --kind --input --output   (media near-dup index: image,
+                                        audio or video fingerprints)
+    fp_filter --kind --input --index --output  (the media corpus-wins
+                                        gate; --append-survivors)
     corpus_diff --old --new            (snapshot reconciliation: summary
                                         JSON + optional per-doc ledger;
                                         --forbid-added/--forbid-removed
@@ -284,9 +288,9 @@ def cmd_curate(args) -> None:
 
 
 def _add_index_lifecycle_args(parser) -> None:
-    """The shared --remove/--compact flag set for the four fingerprint
-    index commands (one definition: the command bodies already share
-    _fp_index_lifecycle)."""
+    """The shared --remove/--compact flag set for the two fingerprint
+    index commands, dedup_index and fp_index (one definition: the
+    command bodies already share _fp_index_lifecycle)."""
     parser.add_argument("--remove",
                         help="parquet of ids to TOMBSTONE from --output "
                         "(takedown path: suppressed at every probe "
@@ -300,8 +304,8 @@ def _add_index_lifecycle_args(parser) -> None:
 
 
 def _fp_index_lifecycle(spark, args, remove_fn, compact_fn) -> bool:
-    """Shared --remove/--compact handling for the four fingerprint
-    index commands (the ann_index lifecycle shape): tombstone ids from
+    """Shared --remove/--compact handling for dedup_index and fp_index
+    (the ann_index lifecycle shape): tombstone ids from
     a parquet of ids, or fold tombstones into the files. Returns True
     when a lifecycle action ran (the build path is skipped)."""
     import json as _json
@@ -447,7 +451,7 @@ def cmd_ann_index(args) -> None:
 
 def cmd_index_fsck(args) -> None:
     """Read-only health check for ANY persisted index artifact (ANN /
-    MinHash / phash / generic fingerprint): kind detection, loader
+    MinHash / media fingerprint / sketches): kind detection, loader
     validation, lifecycle state (tombstones, stale swap dirs) — one
     JSON report per --path, ok=false + error text instead of a crash,
     so a fleet sweep reports per-artifact."""
@@ -459,7 +463,7 @@ def cmd_index_fsck(args) -> None:
 
     spark = get_spark(app_name="index_fsck")
     for p in args.path:
-        print(_json.dumps(index_fsck(spark, p, id_col=args.id_col)))
+        print(_json.dumps(index_fsck(spark, p)))
 
 
 def cmd_ann_stream(args) -> None:
@@ -678,95 +682,90 @@ def cmd_dedup_filter(args) -> None:
     print(f"kept {n_out}/{n_in} docs -> {args.output}")
 
 
-def cmd_image_index(args) -> None:
-    """Build (or refresh) the perceptual-hash index for a media corpus
-    — the visual analog of `dedup_index`: decode + dHash/aHash every
-    payload once, persist (media_id, phash) with the algo/hash_size
-    parameters riding the artifact (`save_phash_index`), 8 B + an id
-    per image. `image_filter` probes it without re-reading old
-    pixels."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        image_phash,
-        save_phash_index,
+def cmd_fp_index(args) -> None:
+    """Build (or refresh) the fingerprint index of a media corpus for
+    one --kind (image dHash/aHash, audio lag-energy, video frame
+    vote): decode + fingerprint every payload once and persist
+    (media_id, hash) with the family tag recording every parameter
+    (`save_fp_index`), 8 B + an id per item. `fp_filter` probes it
+    without re-reading old payloads. --remove/--compact run the
+    takedown lifecycle instead of a build."""
+    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+        compact_fp_index,
+        load_fp_index,
+        remove_from_fp_index,
+        save_fp_index,
+    )
+    from hospital_stain_tracker_data_pipeline_spark.operators.fingerprint import (  # noqa: E501
+        FAMILIES,
     )
 
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (  # noqa: E501
-        compact_phash_index,
-        remove_from_phash_index,
-    )
-
-    spark = get_spark(app_name="image_index")
+    family = FAMILIES[args.kind]
+    given = {
+        k: v
+        for k in ("algo", "hash_size", "n_samples")
+        if (v := getattr(args, k)) is not None
+    }
+    try:  # a flag this kind does not take is an error, not a no-op
+        params = family.params(**given)
+    except ValueError as exc:
+        raise SystemExit(f"fp_index --kind {args.kind}: {exc}") from None
+    spark = get_spark(app_name="fp_index")
     if _fp_index_lifecycle(
-        spark, args, remove_from_phash_index, compact_phash_index
+        spark, args,
+        lambda s, p, ids: remove_from_fp_index(s, p, ids, family),
+        lambda s, p, **kw: compact_fp_index(s, p, family, **kw),
     ):
         return
     media = spark.read.parquet(args.input)
-    hashes = image_phash(
-        media, args.algo, args.hash_size, fake_decode=args.fake_decode
-    )
-    save_phash_index(hashes, args.algo, args.hash_size, args.output)
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        load_phash_index,
-    )
-
-    n = load_phash_index(spark, args.output)[0].count()
-    print(f"indexed {n} images -> {args.output}")
+    fps = family.fingerprint(media, args.fake_decode, **params)
+    save_fp_index(fps, args.output, family, **params)
+    n = load_fp_index(spark, args.output, family)[0].count()
+    print(f"indexed {n} {args.kind} fingerprints -> {args.output}")
 
 
-def cmd_image_filter(args) -> None:
-    """Drop new media whose perceptual hash near-dups anything in an
-    existing phash index (corpus wins), writing the survivors — the
-    visual incremental-ingest gate, mirroring `dedup_filter`. algo and
-    hash_size come FROM the artifact (mismatch impossible); the batch
-    is hashed exactly once. --append-survivors appends the survivors'
-    hashes to the index so the next batch dedups against them too —
-    the full survivors-append deployment flow in one command."""
-    from pyspark.sql import functions as F
-
+def cmd_fp_filter(args) -> None:
+    """Drop new media whose fingerprint near-dups anything in an
+    existing `fp_index` artifact of the same --kind (corpus wins),
+    writing the survivors — the incremental-ingest gate, mirroring
+    `dedup_filter`. Params come FROM the artifact (mismatch
+    impossible); the batch is fingerprinted exactly once.
+    --append-survivors appends the survivors' fingerprints to the
+    index so the next batch dedups against them too."""
     from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        hamming_pairs_against_corpus,
+        append_fp_index,
+        load_fp_index,
         materialize,
     )
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        image_phash,
-        load_phash_index,
+    from hospital_stain_tracker_data_pipeline_spark.operators.fingerprint import (  # noqa: E501
+        FAMILIES,
     )
 
-    spark = get_spark(app_name="image_filter")
+    family = FAMILIES[args.kind]
+    spark = get_spark(app_name="fp_filter")
     media = spark.read.parquet(args.input)
-    index, algo, hash_size = load_phash_index(spark, args.index)
-    # materialize the slim hash frame: it feeds the gate join, the
-    # survivor anti-join, and (optionally) the index append — without
-    # this the mapInPandas decode would re-run per consumer
-    hashes = materialize(
-        image_phash(media, algo, hash_size, fake_decode=args.fake_decode)
-    )
+    index, params = load_fp_index(spark, args.index, family)
+    # materialize the slim fingerprint frame: it feeds the gate join,
+    # the survivor anti-join, and (optionally) the index append —
+    # without this the mapInPandas decode would re-run per consumer
+    fps = materialize(family.fingerprint(media, args.fake_decode, **params))
     gate_tel: dict = {}
-    matched = (
-        hamming_pairs_against_corpus(
-            hashes, index,
-            hash_col="phash", id_col="media_id",
-            nbits=hash_size * hash_size, max_hamming=args.max_hamming,
-            max_bucket=args.max_bucket or None, telemetry=gate_tel,
-        )
-        .select(F.col("new_id").alias("media_id"))
-        .distinct()
+    matched = family.match_corpus(
+        fps, index, params, args.max_hamming,
+        max_bucket=args.max_bucket or None, telemetry=gate_tel,
     )
     survivors = media.join(matched, "media_id", "left_anti")
     survivors.write.mode("overwrite").parquet(args.output)
     n_in = media.count()
     n_out = spark.read.parquet(args.output).count()
     if args.append_survivors:
-        from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (  # noqa: E501
-            append_phash_index,
+        n_app = append_fp_index(
+            spark, args.index, fps.join(matched, "media_id", "left_anti"),
+            family,
         )
-
-        n_app = append_phash_index(
-            spark, args.index, hashes.join(matched, "media_id", "left_anti")
-        )
-        print(f"appended {n_app} survivor hashes -> {args.index}")
+        print(f"appended {n_app} survivor fingerprints -> {args.index}")
     print(
-        f"kept {n_out}/{n_in} images "
+        f"kept {n_out}/{n_in} {args.kind} items "
         f"(hot_buckets_dropped={gate_tel.get('hot_buckets_dropped', 0)}) "
         f"-> {args.output}"
     )
@@ -814,178 +813,6 @@ def cmd_curate_media(args) -> None:
     )
     survivors.write.mode("overwrite").parquet(args.output)
     print(json.dumps(dataclasses.asdict(rep)))
-
-
-def cmd_audio_index(args) -> None:
-    """Build (or refresh) the acoustic-fingerprint index for an audio
-    corpus — the audio analog of `image_index`: decode + fingerprint
-    every payload once, persist (media_id, afp) with the fingerprint
-    revision riding the artifact (`save_afp_index`), 8 B + an id per
-    clip. `audio_filter` probes it without re-reading old PCM."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-        audio_fingerprint,
-        load_afp_index,
-        save_afp_index,
-    )
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-        compact_afp_index,
-        remove_from_afp_index,
-    )
-
-    spark = get_spark(app_name="audio_index")
-    if _fp_index_lifecycle(
-        spark, args, remove_from_afp_index, compact_afp_index
-    ):
-        return
-    media = spark.read.parquet(args.input)
-    fps = audio_fingerprint(media, fake_decode=args.fake_decode)
-    save_afp_index(fps, args.output)
-    n = load_afp_index(spark, args.output).count()
-    print(f"indexed {n} clips -> {args.output}")
-
-
-def cmd_audio_filter(args) -> None:
-    """Drop new clips whose fingerprint near-dups anything in an
-    existing afp index (corpus wins), writing the survivors — the
-    audio incremental-ingest gate, mirroring `image_filter`. The
-    fingerprint revision is validated FROM the artifact (cross-revision
-    probes impossible); the batch is fingerprinted exactly once.
-    --append-survivors appends the survivors' fingerprints to the
-    index so the next batch dedups against them too."""
-    from pyspark.sql import functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-        AFP_NBITS,
-        append_afp_index,
-        audio_fingerprint,
-        load_afp_index,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        hamming_pairs_against_corpus,
-        materialize,
-    )
-
-    spark = get_spark(app_name="audio_filter")
-    media = spark.read.parquet(args.input)
-    index = load_afp_index(spark, args.index)
-    # materialize the slim fingerprint frame: it feeds the gate join,
-    # the survivor anti-join, and (optionally) the index append —
-    # without this the mapInPandas decode would re-run per consumer
-    fps = materialize(audio_fingerprint(media, fake_decode=args.fake_decode))
-    gate_tel: dict = {}
-    matched = (
-        hamming_pairs_against_corpus(
-            fps, index,
-            hash_col="afp", id_col="media_id",
-            nbits=AFP_NBITS, max_hamming=args.max_hamming,
-            max_bucket=args.max_bucket or None, telemetry=gate_tel,
-        )
-        .select(F.col("new_id").alias("media_id"))
-        .distinct()
-    )
-    survivors = media.join(matched, "media_id", "left_anti")
-    survivors.write.mode("overwrite").parquet(args.output)
-    n_in = media.count()
-    n_out = spark.read.parquet(args.output).count()
-    if args.append_survivors:
-        n_app = append_afp_index(
-            spark, args.index, fps.join(matched, "media_id", "left_anti")
-        )
-        print(f"appended {n_app} survivor fingerprints -> {args.index}")
-    print(
-        f"kept {n_out}/{n_in} clips "
-        f"(hot_buckets_dropped={gate_tel.get('hot_buckets_dropped', 0)}) "
-        f"-> {args.output}"
-    )
-
-
-def cmd_video_index(args) -> None:
-    """Build (or refresh) the clip-fingerprint index for a video
-    corpus — the video analog of `image_index`: frame-sample +
-    majority-vote-hash every payload once, persist (media_id, vhash)
-    with the full parameter tag riding the artifact
-    (`save_vhash_index`), 8 B + an id per clip."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (
-        load_vhash_index,
-        save_vhash_index,
-        video_phash,
-    )
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (
-        compact_vhash_index,
-        remove_from_vhash_index,
-    )
-
-    spark = get_spark(app_name="video_index")
-    if _fp_index_lifecycle(
-        spark, args, remove_from_vhash_index, compact_vhash_index
-    ):
-        return
-    media = spark.read.parquet(args.input)
-    hashes = video_phash(
-        media, args.algo, args.hash_size, args.n_samples,
-        fake_decode=args.fake_decode,
-    )
-    save_vhash_index(
-        hashes, args.output, args.algo, args.hash_size, args.n_samples
-    )
-    n = load_vhash_index(spark, args.output)[0].count()
-    print(f"indexed {n} videos -> {args.output}")
-
-
-def cmd_video_filter(args) -> None:
-    """Drop new clips whose fingerprint near-dups anything in an
-    existing vhash index (corpus wins), writing the survivors — the
-    video incremental-ingest gate. algo/hash_size/n_samples come FROM
-    the artifact (mismatch impossible); the batch is fingerprinted
-    exactly once. --append-survivors appends the survivors'
-    fingerprints to the index so the next batch dedups against them."""
-    from pyspark.sql import functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        hamming_pairs_against_corpus,
-        materialize,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (
-        append_vhash_index,
-        load_vhash_index,
-        video_phash,
-    )
-
-    spark = get_spark(app_name="video_filter")
-    media = spark.read.parquet(args.input)
-    index, algo, hash_size, n_samples = load_vhash_index(spark, args.index)
-    hashes = materialize(
-        video_phash(
-            media, algo, hash_size, n_samples, fake_decode=args.fake_decode
-        )
-    )
-    gate_tel: dict = {}
-    matched = (
-        hamming_pairs_against_corpus(
-            hashes, index,
-            hash_col="vhash", id_col="media_id",
-            nbits=hash_size * hash_size, max_hamming=args.max_hamming,
-            max_bucket=args.max_bucket or None, telemetry=gate_tel,
-        )
-        .select(F.col("new_id").alias("media_id"))
-        .distinct()
-    )
-    survivors = media.join(matched, "media_id", "left_anti")
-    survivors.write.mode("overwrite").parquet(args.output)
-    n_in = media.count()
-    n_out = spark.read.parquet(args.output).count()
-    if args.append_survivors:
-        n_app = append_vhash_index(
-            spark, args.index, hashes.join(matched, "media_id", "left_anti")
-        )
-        print(f"appended {n_app} survivor fingerprints -> {args.index}")
-    print(
-        f"kept {n_out}/{n_in} videos "
-        f"(hot_buckets_dropped={gate_tel.get('hot_buckets_dropped', 0)}) "
-        f"-> {args.output}"
-    )
 
 
 def cmd_corpus_diff(args) -> None:
@@ -1273,38 +1100,48 @@ def main() -> None:
     _add_index_lifecycle_args(pdi)
     pdi.set_defaults(fn=cmd_dedup_index)
 
-    pii_ = sub.add_parser("image_index")
-    pii_.add_argument("--input",
-                      help="media parquet (media_id, payload binary)")
-    pii_.add_argument("--output", required=True,
-                      help="phash index artifact dir")
-    pii_.add_argument("--algo", default="dhash", choices=["dhash", "ahash"])
-    pii_.add_argument("--hash-size", type=int, default=8)
-    pii_.add_argument("--fake-decode", action="store_true",
-                      help="deterministic payload-hash stand-in bits for "
-                      "formats the stdlib codecs cannot decode")
-    _add_index_lifecycle_args(pii_)
-    pii_.set_defaults(fn=cmd_image_index)
+    kinds = ["image", "audio", "video"]
+    pfx = sub.add_parser("fp_index")
+    pfx.add_argument("--kind", required=True, choices=kinds)
+    pfx.add_argument("--input",
+                     help="media parquet (media_id, payload binary)")
+    pfx.add_argument("--output", required=True,
+                     help="fingerprint index artifact dir")
+    pfx.add_argument("--algo", choices=["dhash", "ahash"],
+                     help="image/video: per-frame hash (default dhash)")
+    pfx.add_argument("--hash-size", type=int,
+                     help="image/video: hash grid side, bits = size² "
+                     "(default 8)")
+    pfx.add_argument("--n-samples", type=int,
+                     help="video: frames sampled per clip for the "
+                     "majority vote (default 8)")
+    pfx.add_argument("--fake-decode", action="store_true",
+                     help="deterministic payload-hash stand-in bits for "
+                     "payloads the native decoders cannot handle")
+    _add_index_lifecycle_args(pfx)
+    pfx.set_defaults(fn=cmd_fp_index)
 
-    pif_ = sub.add_parser("image_filter")
-    pif_.add_argument("--input", required=True,
-                      help="NEW media parquet (media_id, payload)")
-    pif_.add_argument("--index", required=True,
-                      help="phash index dir from image_index (algo + "
-                      "hash_size come from the artifact)")
-    pif_.add_argument("--output", required=True,
-                      help="survivors parquet out")
-    pif_.add_argument("--max-hamming", type=int, default=3)
-    pif_.add_argument("--max-bucket", type=int, default=1024,
-                       help="hot-bucket membership cap for the banded "
-                       "gate join (0 disables the cap and restores "
-                       "the exact uncapped definition); dropped-bucket"
-                       " counts print with the kept line")
-    pif_.add_argument("--fake-decode", action="store_true")
-    pif_.add_argument("--append-survivors", action="store_true",
-                      help="append the survivors' hashes to --index so "
-                      "the next batch dedups against them too")
-    pif_.set_defaults(fn=cmd_image_filter)
+    pff = sub.add_parser("fp_filter")
+    pff.add_argument("--kind", required=True, choices=kinds)
+    pff.add_argument("--input", required=True,
+                     help="NEW media parquet (media_id, payload)")
+    pff.add_argument("--index", required=True,
+                     help="index dir from fp_index of the same --kind "
+                     "(params come from the artifact tag)")
+    pff.add_argument("--output", required=True,
+                     help="survivors parquet out")
+    pff.add_argument("--max-hamming", type=int,
+                     help="default per kind: image 3, audio 4, video 4")
+    pff.add_argument("--max-bucket", type=int, default=1024,
+                     help="hot-bucket membership cap for the banded "
+                     "gate join (0 disables the cap and restores "
+                     "the exact uncapped definition); dropped-bucket"
+                     " counts print with the kept line")
+    pff.add_argument("--fake-decode", action="store_true")
+    pff.add_argument("--append-survivors", action="store_true",
+                     help="append the survivors' fingerprints to --index "
+                     "so the next batch dedups against them too")
+    pff.set_defaults(fn=cmd_fp_filter)
 
     ppd = sub.add_parser("pdf_extract")
     ppd.add_argument("--input", required=True,
@@ -1332,72 +1169,6 @@ def main() -> None:
                       "dedups even though its bytes differ")
     pcm_.add_argument("--pdf-near-dup-threshold", type=float, default=0.9)
     pcm_.set_defaults(fn=cmd_curate_media)
-
-    pax = sub.add_parser("audio_index")
-    pax.add_argument("--input",
-                     help="media parquet (media_id, payload binary)")
-    pax.add_argument("--output", required=True,
-                     help="afp index artifact dir")
-    pax.add_argument("--fake-decode", action="store_true",
-                     help="deterministic payload-hash stand-in bits for "
-                     "codecs the native WAV/FLAC decoders cannot handle")
-    _add_index_lifecycle_args(pax)
-    pax.set_defaults(fn=cmd_audio_index)
-
-    paf = sub.add_parser("audio_filter")
-    paf.add_argument("--input", required=True,
-                     help="NEW media parquet (media_id, payload)")
-    paf.add_argument("--index", required=True,
-                     help="afp index dir from audio_index (the fingerprint "
-                     "revision is validated from the artifact)")
-    paf.add_argument("--output", required=True,
-                     help="survivors parquet out")
-    paf.add_argument("--max-hamming", type=int, default=4)
-    paf.add_argument("--max-bucket", type=int, default=1024,
-                       help="hot-bucket membership cap for the banded "
-                       "gate join (0 disables the cap and restores "
-                       "the exact uncapped definition); dropped-bucket"
-                       " counts print with the kept line")
-    paf.add_argument("--fake-decode", action="store_true")
-    paf.add_argument("--append-survivors", action="store_true",
-                     help="append the survivors' fingerprints to --index "
-                     "so the next batch dedups against them too")
-    paf.set_defaults(fn=cmd_audio_filter)
-
-    pvx = sub.add_parser("video_index")
-    pvx.add_argument("--input",
-                     help="media parquet (media_id, payload binary)")
-    pvx.add_argument("--output", required=True,
-                     help="vhash index artifact dir")
-    pvx.add_argument("--algo", default="dhash", choices=["dhash", "ahash"])
-    pvx.add_argument("--hash-size", type=int, default=8)
-    pvx.add_argument("--n-samples", type=int, default=8,
-                     help="frames sampled per clip for the majority vote")
-    pvx.add_argument("--fake-decode", action="store_true",
-                     help="deterministic payload-hash stand-in bits for "
-                     "containers the native extractors cannot handle")
-    _add_index_lifecycle_args(pvx)
-    pvx.set_defaults(fn=cmd_video_index)
-
-    pvf = sub.add_parser("video_filter")
-    pvf.add_argument("--input", required=True,
-                     help="NEW media parquet (media_id, payload)")
-    pvf.add_argument("--index", required=True,
-                     help="vhash index dir from video_index (parameters "
-                     "come from the artifact tag)")
-    pvf.add_argument("--output", required=True,
-                     help="survivors parquet out")
-    pvf.add_argument("--max-hamming", type=int, default=4)
-    pvf.add_argument("--max-bucket", type=int, default=1024,
-                       help="hot-bucket membership cap for the banded "
-                       "gate join (0 disables the cap and restores "
-                       "the exact uncapped definition); dropped-bucket"
-                       " counts print with the kept line")
-    pvf.add_argument("--fake-decode", action="store_true")
-    pvf.add_argument("--append-survivors", action="store_true",
-                     help="append the survivors' fingerprints to --index "
-                     "so the next batch dedups against them too")
-    pvf.set_defaults(fn=cmd_video_filter)
 
     pdf_ = sub.add_parser("dedup_filter")
     pdf_.add_argument("--input", required=True, help="NEW documents parquet")
@@ -1451,9 +1222,6 @@ def main() -> None:
     pfk = sub.add_parser("index_fsck")
     pfk.add_argument("--path", required=True, nargs="+",
                      help="one or more index artifact dirs to check")
-    pfk.add_argument("--id-col", default="media_id",
-                     help="id column for GENERIC fingerprint artifacts "
-                     "(the other kinds record theirs)")
     pfk.set_defaults(fn=cmd_index_fsck)
 
     pst = sub.add_parser("ann_stream")

@@ -17,8 +17,8 @@ Pins (the image-tier battery, transposed):
   clips -> tens of bits apart);
 - decode policy: fake stand-in under fake_decode, loud
   NotImplementedError otherwise, NULL payload -> NULL fingerprint;
-- the incremental tier: corpus-wins gate, index artifact round-trip +
-  revision guards, survivors-append, streaming twin == batch.
+- the incremental tier (corpus gate, index artifact, streaming twin,
+  CLI) is shared by every family and pinned in test_fp_family.py.
 """
 
 from __future__ import annotations
@@ -30,16 +30,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-    AFP_ALGO,
     AFP_LAGS,
     AFP_RATE,
     AFP_SEGMENTS,
-    _afp_bits,
-    audio_dup_pairs,
     audio_fingerprint,
-    dedup_audio_against_corpus,
-    load_afp_index,
-    save_afp_index,
+)
+from hospital_stain_tracker_data_pipeline_spark.operators.fingerprint import (
+    AUDIO,
+    fp_dup_pairs,
 )
 from hospital_stain_tracker_data_pipeline_spark.operators.flac import encode_flac
 from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
@@ -202,7 +200,7 @@ def test_audio_dup_pairs_matches_duckdb_bruteforce(spark):
     fps = audio_fingerprint(media).toPandas()
     got = sorted(
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in audio_dup_pairs(media, max_hamming=4).collect()
+        for r in fp_dup_pairs(media, AUDIO, max_hamming=4).collect()
     )
     con = duckdb.connect()
     con.register("h", fps)
@@ -236,7 +234,7 @@ def test_audio_dup_pairs_planted_recall(spark):
 
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in audio_dup_pairs(media, max_hamming=4).collect()
+        for r in fp_dup_pairs(media, AUDIO, max_hamming=4).collect()
     }
     assert set(pairs) == {(0, 1)}
     assert pairs[(0, 1)] == _ham(fps[0], fps[1])
@@ -263,233 +261,10 @@ def test_audio_fingerprint_decode_policy(spark):
     assert again == {k: v["afp"] for k, v in rows.items()}
 
     # NULL-fingerprint rows never reach the pair join
-    pairs = audio_dup_pairs(media, fake_decode=True)
+    pairs = fp_dup_pairs(media, AUDIO, fake_decode=True)
     assert pairs.filter(
         (F.col("id_a") == 2) | (F.col("id_b") == 2)
     ).count() == 0
 
     with pytest.raises(Exception, match="NotImplementedError|audio library"):
         audio_fingerprint(media).collect()
-
-
-def test_dedup_audio_against_corpus(spark, tmp_path):
-    """Incremental audio dedup: persist the afp index for a corpus,
-    gate a new batch — a cross-CODEC re-encode of an indexed clip drops
-    (hamming 0), a small-noise near-dup drops, a spectrally different
-    clip and a within-batch-only duplicate pair both survive (corpus
-    wins; the gate does not dedup the batch against itself)."""
-    other = _tone([(620, 4500), (1800, 2000)])
-    far = _tone([(300, 3800), (900, 2400)])
-    near = _noisy(_BASE, 20, seed=3)
-
-    corpus = _media(spark, [encode_wav(_BASE, 8000), encode_wav(other, 8000)])
-    idx_path = str(tmp_path / "afp_index")
-    save_afp_index(audio_fingerprint(corpus), idx_path)
-    index = load_afp_index(spark, idx_path)
-
-    new_payloads = [
-        encode_flac(_BASE, 8000),  # 100: same PCM, different codec -> dup
-        encode_wav(near, 8000),    # 101: small-noise near-dup -> dup
-        encode_wav(far, 8000),     # 102: far -> survives
-        encode_wav(far, 8000),     # 103: exact dup of 102 WITHIN the
-    ]                              #      batch -> survives (corpus wins only)
-    new_media = _media(spark, new_payloads, ids=[100, 101, 102, 103])
-    kept = sorted(
-        r["media_id"]
-        for r in dedup_audio_against_corpus(
-            new_media, index, max_hamming=4
-        ).collect()
-    )
-    assert kept == [102, 103]
-
-    # cross-set pairs replay in DuckDB (brute force over both sets)
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        hamming_pairs_against_corpus,
-    )
-
-    new_fps = audio_fingerprint(new_media)
-    got = sorted(
-        (r["new_id"], r["corpus_id"], r["hamming"])
-        for r in hamming_pairs_against_corpus(
-            new_fps, index, hash_col="afp", max_hamming=4
-        ).collect()
-    )
-    con = duckdb.connect()
-    con.register("n", new_fps.select("media_id", "afp").toPandas())
-    con.register("c", index.toPandas())
-    want = sorted(
-        map(
-            tuple,
-            con.execute(
-                "SELECT n.media_id, c.media_id, "
-                "bit_count(xor(n.afp, c.afp)) FROM n, c "
-                "WHERE bit_count(xor(n.afp, c.afp)) <= 4"
-            ).fetchall(),
-        )
-    )
-    assert got == want and len(got) == 2
-
-
-def test_afp_index_save_load_roundtrip_and_guards(spark, tmp_path):
-    """The afp artifact discipline (save_phash_index pattern): the
-    revision tag rides the parquet and is validated on load; NULL
-    id/fingerprint rows drop at save; an EMPTY index round-trips via
-    the sentinel; tagless / mixed-tag / foreign-revision artifacts and
-    column-less frames fail loudly."""
-    media = _media(
-        spark,
-        [encode_wav(_BASE, 8000), encode_wav(_tone([(700, 5000)]), 8000), None],
-    )
-    fps = audio_fingerprint(media, fake_decode=True)
-    path = str(tmp_path / "afpidx")
-    save_afp_index(fps, path)
-
-    idx = load_afp_index(spark, path)
-    assert sorted(idx.columns) == ["afp", "media_id"]
-    got = {r["media_id"]: r["afp"] for r in idx.collect()}
-    want = {
-        r["media_id"]: r["afp"]
-        for r in fps.collect()
-        if r["afp"] is not None
-    }
-    assert got == want and len(got) == 2  # NULL-fingerprint row dropped
-
-    # empty index: the tag survives the round-trip via the sentinel row
-    empty = str(tmp_path / "empty")
-    save_afp_index(fps.filter("media_id < 0"), empty)
-    assert load_afp_index(spark, empty).count() == 0
-
-    # guards
-    with pytest.raises(ValueError, match="lacks column"):
-        save_afp_index(fps.drop("afp"), str(tmp_path / "x1"))
-    plain = str(tmp_path / "plain")
-    fps.select("media_id", "afp").write.parquet(plain)
-    with pytest.raises(ValueError, match="_fp_tag"):
-        load_afp_index(spark, plain)
-    foreign = str(tmp_path / "foreign")
-    fps.select("media_id", "afp").withColumn(
-        "_fp_tag", F.lit("hk-lag-v0:4000:8:1,2")
-    ).write.parquet(foreign)
-    with pytest.raises(ValueError, match="revision"):
-        load_afp_index(spark, foreign)
-    mixed = str(tmp_path / "mixed")
-    fps.select("media_id", "afp").withColumn(
-        "_fp_tag", F.lit(AFP_ALGO)
-    ).write.parquet(mixed)
-    fps.select("media_id", "afp").withColumn(
-        "_fp_tag", F.lit("hk-lag-v0:4000:8:1,2")
-    ).write.mode("append").parquet(mixed)
-    with pytest.raises(ValueError, match="mixes"):
-        load_afp_index(spark, mixed)
-
-
-def test_afp_index_append_feeds_corpus_gate(spark, tmp_path):
-    """Survivors-append flow: gate a batch, append the survivors'
-    fingerprints (append_afp_index validates the artifact first), and
-    the SAME batch re-gated against the grown index drops entirely —
-    the next crawl day never re-ingests today's survivors."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-        append_afp_index,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        materialize,
-    )
-
-    corpus = _media(spark, [encode_wav(_BASE, 8000)])
-    path = str(tmp_path / "idx")
-    save_afp_index(audio_fingerprint(corpus), path)
-
-    far = _tone([(300, 3800), (900, 2400)])
-    batch = _media(
-        spark,
-        [encode_wav(_noisy(_BASE, 20, seed=3), 8000), encode_wav(far, 8000)],
-        ids=[10, 11],
-    )
-    index = load_afp_index(spark, path)
-    survivors = dedup_audio_against_corpus(batch, index, max_hamming=4)
-    assert [r["media_id"] for r in survivors.collect()] == [11]
-
-    fps = materialize(audio_fingerprint(batch))
-    surv_fps = fps.join(
-        survivors.select("media_id"), "media_id", "left_semi"
-    )
-    assert append_afp_index(spark, path, surv_fps) == 1
-
-    regate = dedup_audio_against_corpus(
-        batch, load_afp_index(spark, path), max_hamming=4
-    )
-    assert regate.count() == 0
-    # appending nothing is a no-op, not a corrupt artifact
-    assert append_afp_index(spark, path, fps.filter("media_id < 0")) == 0
-    assert load_afp_index(spark, path).count() == 2
-
-
-def test_stream_audio_dedup_ingest(spark, tmp_path):
-    """Streaming twin == batch gate: clips land as files, each is
-    decoded+fingerprinted once, corpus near-dups drop, survivors'
-    fingerprints land in the sink; a second wave processes ONLY the
-    new files (checkpointed exactly-once) and the verdicts match the
-    batch operator's."""
-    import os
-
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_audio_dedup_ingest,
-    )
-
-    near = _noisy(_BASE, 20, seed=3)
-    far = _tone([(300, 3800), (900, 2400)])
-    other = _tone([(500, 4200), (1500, 2100)])
-
-    corpus = _media(spark, [encode_wav(_BASE, 8000)])
-    index = audio_fingerprint(corpus).select("media_id", "afp")
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    sink = str(tmp_path / "sink")
-    (land / "dup.flac").write_bytes(encode_flac(_BASE, 8000))  # cross-codec
-    (land / "near.wav").write_bytes(encode_wav(near, 8000))
-    (land / "keep.wav").write_bytes(encode_wav(far, 8000))
-
-    out1 = stream_audio_dedup_ingest(
-        spark, str(land), index, sink, max_hamming=4
-    )
-    kept1 = {os.path.basename(r["path"]) for r in out1.collect()}
-    assert kept1 == {"keep.wav"}
-    [row] = out1.collect()
-    assert row["decoded"] is True and row["mime"] == "audio/wav"
-
-    # second wave: one fresh clip + one more corpus dup — the
-    # checkpoint processes only the new files; earlier sink rows stay
-    (land / "wave2_keep.wav").write_bytes(encode_wav(other, 8000))
-    (land / "wave2_dup.wav").write_bytes(encode_wav(_BASE, 8000))
-    out2 = stream_audio_dedup_ingest(
-        spark, str(land), index, sink, max_hamming=4
-    )
-    kept2 = {os.path.basename(r["path"]) for r in out2.collect()}
-    assert kept2 == {"keep.wav", "wave2_keep.wav"}
-
-    # stream verdicts == batch operator verdicts over the same payloads
-    all_payloads = [
-        encode_flac(_BASE, 8000),
-        encode_wav(near, 8000),
-        encode_wav(far, 8000),
-        encode_wav(other, 8000),
-        encode_wav(_BASE, 8000),
-    ]
-    batch_kept = dedup_audio_against_corpus(
-        _media(spark, all_payloads), index, max_hamming=4
-    )
-    assert batch_kept.count() == 2
-    stream_fps = {r["afp"] for r in out2.collect()}
-    batch_fps = {
-        r["afp"] for r in audio_fingerprint(batch_kept).collect()
-    }
-    assert stream_fps == batch_fps
-
-    # survivors' fingerprints append straight onto the index: the grown
-    # index drops everything already ingested
-    grown = index.unionByName(out2.select("media_id", "afp"))
-    regate = dedup_audio_against_corpus(
-        _media(spark, all_payloads), grown, max_hamming=4
-    )
-    assert regate.count() == 0

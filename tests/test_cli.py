@@ -830,226 +830,6 @@ def test_cli_ann_index_remove_and_compact(tmp_path):
     ).fetchone()[0] == n0 - n_rm
 
 
-def test_cli_image_index_and_filter(tmp_path):
-    """Visual incremental-dedup deployment flow, mirroring the text
-    dedup_index/dedup_filter pair: build the phash index over a media
-    corpus, gate a new batch (one PNG re-encode of an indexed image +
-    one fresh image) against it — the re-encode drops, the fresh image
-    survives and its hash appends to the index, so a SECOND batch
-    containing the same fresh image now drops too."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        encode_bmp,
-        encode_png,
-    )
-
-    def px(seed):
-        return np.random.RandomState(seed).randint(
-            0, 256, size=(16, 18, 3)
-        ).astype(np.uint8)
-
-    corpus = tmp_path / "corpus.parquet"
-    pq.write_table(
-        pa.table({
-            "media_id": [1, 2, 3],
-            "payload": [encode_bmp(px(s)) for s in range(3)],
-        }),
-        corpus,
-    )
-    idx = str(tmp_path / "phidx")
-    out = _run("image_index", "--input", str(corpus), "--output", idx)
-    assert "indexed 3 images" in out
-
-    new = tmp_path / "new.parquet"
-    pq.write_table(
-        pa.table({
-            "media_id": [10, 11],
-            "payload": [encode_png(px(1)), encode_bmp(px(99))],
-        }),
-        new,
-    )
-    kept_dir = str(tmp_path / "kept")
-    out = _run(
-        "image_filter", "--input", str(new), "--index", idx,
-        "--output", kept_dir, "--append-survivors",
-    )
-    assert "kept 1/2 images" in out
-    # the hot-bucket cap's drop count is visible, never silent (0 on
-    # this healthy corpus); --max-bucket 0 restores the uncapped gate
-    assert "hot_buckets_dropped=0" in out
-    assert "appended 1 survivor hashes" in out
-    kept = pq.read_table(glob.glob(os.path.join(kept_dir, "*.parquet"))[0])
-    assert kept.column("media_id").to_pylist() == [11]
-
-    # the appended survivor now gates a re-submission of itself
-    again = tmp_path / "again.parquet"
-    pq.write_table(
-        pa.table({"media_id": [20], "payload": [encode_png(px(99))]}),
-        again,
-    )
-    kept2 = str(tmp_path / "kept2")
-    out = _run(
-        "image_filter", "--input", str(again), "--index", idx,
-        "--output", kept2, "--max-bucket", "0",
-    )
-    assert "kept 0/1 images" in out
-
-
-def test_cli_audio_index_and_filter(tmp_path):
-    """Audio incremental-dedup deployment flow, mirroring the
-    image_index/image_filter pair: build the afp index over an audio
-    corpus, gate a new batch (one FLAC re-encode of an indexed clip +
-    one fresh clip) against it — the re-encode drops, the fresh clip
-    survives and its fingerprint appends to the index, so a SECOND
-    batch containing the same fresh clip now drops too."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.flac import (
-        encode_flac,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        encode_wav,
-    )
-
-    def tone(seed):
-        rng = np.random.RandomState(seed)
-        f1, f2 = 300 + rng.randint(2000), 2200 + rng.randint(1500)
-        t = np.arange(6000) / 8000
-        x = 4000 * np.sin(2 * np.pi * f1 * t) + 2500 * np.sin(2 * np.pi * f2 * t)
-        return np.round(x).astype(np.int16).reshape(-1, 1)
-
-    corpus = tmp_path / "corpus.parquet"
-    pq.write_table(
-        pa.table({
-            "media_id": [1, 2, 3],
-            "payload": [encode_wav(tone(s), 8000) for s in range(3)],
-        }),
-        corpus,
-    )
-    idx = str(tmp_path / "afpidx")
-    out = _run("audio_index", "--input", str(corpus), "--output", idx)
-    assert "indexed 3 clips" in out
-
-    new = tmp_path / "new.parquet"
-    pq.write_table(
-        pa.table({
-            "media_id": [10, 11],
-            "payload": [encode_flac(tone(1), 8000), encode_wav(tone(99), 8000)],
-        }),
-        new,
-    )
-    kept_dir = str(tmp_path / "kept")
-    out = _run(
-        "audio_filter", "--input", str(new), "--index", idx,
-        "--output", kept_dir, "--append-survivors",
-    )
-    assert "kept 1/2 clips" in out
-    assert "appended 1 survivor fingerprints" in out
-    kept = pq.read_table(glob.glob(os.path.join(kept_dir, "*.parquet"))[0])
-    assert kept.column("media_id").to_pylist() == [11]
-
-    # the appended survivor now gates a re-submission of itself
-    again = tmp_path / "again.parquet"
-    pq.write_table(
-        pa.table(
-            {"media_id": [20], "payload": [encode_flac(tone(99), 8000)]}
-        ),
-        again,
-    )
-    kept2 = str(tmp_path / "kept2")
-    out = _run(
-        "audio_filter", "--input", str(again), "--index", idx,
-        "--output", kept2,
-    )
-    assert "kept 0/1 clips" in out
-
-
-def test_cli_video_index_and_filter(tmp_path):
-    """Video incremental-dedup deployment flow, mirroring the image
-    and audio pairs: build the vhash index over a clip corpus, gate a
-    new batch (one MP4 re-container of an indexed AVI + one fresh
-    clip) against it — the re-container drops, the fresh clip survives
-    and its fingerprint appends, so a SECOND batch containing the same
-    fresh clip now drops too."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.jpeg import (
-        encode_jpeg,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        build_mjpeg_avi,
-        build_mjpeg_mp4,
-    )
-
-    def frames(seed):
-        rng = np.random.RandomState(seed)
-        return [
-            encode_jpeg(rng.randint(0, 256, size=(24, 24, 3)).astype("uint8"))
-            for _ in range(5)
-        ]
-
-    clip_frames = {s: frames(s) for s in (1, 2, 3, 99)}
-    corpus = tmp_path / "corpus.parquet"
-    pq.write_table(
-        pa.table({
-            "media_id": [1, 2, 3],
-            "payload": [
-                build_mjpeg_avi(clip_frames[s], 24, 24, fps=10.0)
-                for s in (1, 2, 3)
-            ],
-        }),
-        corpus,
-    )
-    idx = str(tmp_path / "vhidx")
-    out = _run("video_index", "--input", str(corpus), "--output", idx)
-    assert "indexed 3 videos" in out
-
-    new = tmp_path / "new.parquet"
-    pq.write_table(
-        pa.table({
-            "media_id": [10, 11],
-            "payload": [
-                build_mjpeg_mp4(clip_frames[1], 24, 24, fps=10.0),
-                build_mjpeg_avi(clip_frames[99], 24, 24, fps=10.0),
-            ],
-        }),
-        new,
-    )
-    kept_dir = str(tmp_path / "kept")
-    out = _run(
-        "video_filter", "--input", str(new), "--index", idx,
-        "--output", kept_dir, "--append-survivors",
-    )
-    assert "kept 1/2 videos" in out
-    assert "appended 1 survivor fingerprints" in out
-    kept = pq.read_table(glob.glob(os.path.join(kept_dir, "*.parquet"))[0])
-    assert kept.column("media_id").to_pylist() == [11]
-
-    # the appended survivor now gates a re-submission of itself (at a
-    # different frame rate, even)
-    again = tmp_path / "again.parquet"
-    pq.write_table(
-        pa.table({
-            "media_id": [20],
-            "payload": [build_mjpeg_avi(clip_frames[99], 24, 24, fps=30.0)],
-        }),
-        again,
-    )
-    kept2 = str(tmp_path / "kept2")
-    out = _run(
-        "video_filter", "--input", str(again), "--index", idx,
-        "--output", kept2,
-    )
-    assert "kept 0/1 videos" in out
-
-
 def test_cli_curate_media(tmp_path):
     """Mixed-lake curation in one command: exact dup + a cross-codec
     image re-encode drop, a non-native payload passes through, the

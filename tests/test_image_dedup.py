@@ -22,10 +22,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from hospital_stain_tracker_data_pipeline_spark.operators.fingerprint import (
+    IMAGE,
+    fp_dup_pairs,
+)
 from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
     encode_bmp,
     encode_png,
-    image_dup_pairs,
     image_phash,
     resize_rgb_nearest,
     to_media_table,
@@ -143,7 +146,7 @@ def test_image_dup_pairs_matches_duckdb_bruteforce(spark):
     hashes = image_phash(media).toPandas()
     got = sorted(
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in image_dup_pairs(media, max_hamming=3).collect()
+        for r in fp_dup_pairs(media, IMAGE, max_hamming=3).collect()
     )
     con = duckdb.connect()
     con.register("h", hashes)
@@ -183,7 +186,7 @@ def test_image_dup_pairs_planted_single_bit_recall(spark):
 
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in image_dup_pairs(media, max_hamming=3).collect()
+        for r in fp_dup_pairs(media, IMAGE, max_hamming=3).collect()
     }
     assert pairs == {(0, 1): 1}
 
@@ -209,291 +212,10 @@ def test_image_phash_decode_policy(spark):
     assert again == {k: v["phash"] for k, v in rows.items()}
 
     # NULL-hash rows never reach the pair join
-    pairs = image_dup_pairs(media, fake_decode=True)
+    pairs = fp_dup_pairs(media, IMAGE, fake_decode=True)
     assert pairs.filter(
         (F.col("id_a") == 2) | (F.col("id_b") == 2)
     ).count() == 0
 
     with pytest.raises(Exception, match="NotImplementedError|PIL"):
         image_phash(media).collect()
-
-
-def test_dedup_images_against_corpus(spark, tmp_path):
-    """Incremental visual dedup: persist the phash index for a corpus,
-    gate a new batch — a cross-CODEC re-encode of an indexed image
-    drops (hamming 0), a one-bit near-dup drops, a far image and a
-    within-batch-only duplicate pair both survive (corpus wins; the
-    gate does not dedup the batch against itself)."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        dedup_images_against_corpus,
-    )
-
-    base = np.zeros((8, 9, 3), dtype=np.uint8)
-    for c in range(9):
-        base[:, c] = c * 10
-    near = base.copy()
-    near[0, 1] = base[0, 0]  # hamming 1 from base
-    far = 255 - base  # hamming 64
-    other = _gradient_px(seed=42)
-
-    corpus = _media(spark, [encode_bmp(base), encode_bmp(other)])
-    idx_path = str(tmp_path / "phash_index")
-    image_phash(corpus).select("media_id", "phash").write.parquet(idx_path)
-    index = spark.read.parquet(idx_path)
-
-    # new batch ids offset so survivors are unambiguous
-    new_payloads = [
-        encode_png(base),   # 100: same pixels, different codec -> dup
-        encode_bmp(near),   # 101: 1-bit near-dup -> dup
-        encode_bmp(far),    # 102: far -> survives
-        encode_bmp(far),    # 103: exact dup of 102 WITHIN the batch ->
-    ]                       #      still survives (corpus wins only)
-    pdf = pd.DataFrame(
-        {"media_id": [100, 101, 102, 103], "payload": new_payloads}
-    )
-    new_media = to_media_table(
-        spark.createDataFrame(pdf), "media_id", "payload", source="t"
-    )
-    kept = sorted(
-        r["media_id"]
-        for r in dedup_images_against_corpus(
-            new_media, index, max_hamming=3
-        ).collect()
-    )
-    assert kept == [102, 103]
-
-    # cross-set pairs replay in DuckDB (brute force over both hash sets)
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        hamming_pairs_against_corpus,
-    )
-
-    new_hashes = image_phash(new_media)
-    got = sorted(
-        (r["new_id"], r["corpus_id"], r["hamming"])
-        for r in hamming_pairs_against_corpus(
-            new_hashes, index, max_hamming=3
-        ).collect()
-    )
-    con = duckdb.connect()
-    con.register("n", new_hashes.select("media_id", "phash").toPandas())
-    con.register("c", index.toPandas())
-    want = sorted(
-        map(
-            tuple,
-            con.execute(
-                "SELECT n.media_id, c.media_id, "
-                "bit_count(xor(n.phash, c.phash)) FROM n, c "
-                "WHERE bit_count(xor(n.phash, c.phash)) <= 3"
-            ).fetchall(),
-        )
-    )
-    assert got == want and len(got) == 2
-
-    # width-mismatch fail-fast: a 64-bit hash probed at nbits=16 — an
-    # in-row raise_error during the join pass itself (no separate
-    # probe job), so it surfaces as a Spark execution error
-    with pytest.raises(Exception, match="nbits"):
-        hamming_pairs_against_corpus(
-            new_hashes, index, nbits=16, max_hamming=3
-        ).collect()
-
-
-def test_stream_image_dedup_ingest(spark, tmp_path):
-    """Streaming twin == batch gate: images land as files, each is
-    decoded+hashed once, corpus near-dups drop, survivors' hashes land
-    in the sink; a second pass with NEW files processes ONLY the new
-    files (checkpointed exactly-once) and the verdicts match the batch
-    operator's."""
-    import os
-
-    from pyspark.sql import functions as F2
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        dedup_images_against_corpus,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_image_dedup_ingest,
-    )
-
-    base = np.zeros((8, 9, 3), dtype=np.uint8)
-    for c in range(9):
-        base[:, c] = c * 10
-    near = base.copy()
-    near[0, 1] = base[0, 0]
-    far = 255 - base
-
-    corpus = _media(spark, [encode_bmp(base)])
-    index = image_phash(corpus).select("media_id", "phash")
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    sink = str(tmp_path / "sink")
-    (land / "dup.bmp").write_bytes(encode_png(base))  # cross-codec dup
-    (land / "near.bmp").write_bytes(encode_bmp(near))
-    (land / "keep.bmp").write_bytes(encode_bmp(far))
-
-    out1 = stream_image_dedup_ingest(
-        spark, str(land), index, sink, max_hamming=3
-    )
-    kept1 = {os.path.basename(r["path"]) for r in out1.collect()}
-    assert kept1 == {"keep.bmp"}
-    [row] = out1.collect()
-    assert row["decoded"] is True and row["mime"] == "image/bmp"
-
-    # second landing wave: one fresh image + one more corpus dup — the
-    # checkpoint processes only the new files; earlier sink rows survive
-    other = _gradient_px(seed=5)
-    (land / "wave2_keep.bmp").write_bytes(encode_bmp(other))
-    (land / "wave2_dup.bmp").write_bytes(encode_bmp(base))
-    out2 = stream_image_dedup_ingest(
-        spark, str(land), index, sink, max_hamming=3
-    )
-    kept2 = {os.path.basename(r["path"]) for r in out2.collect()}
-    assert kept2 == {"keep.bmp", "wave2_keep.bmp"}
-
-    # stream verdicts == batch operator verdicts over the same payloads
-    all_payloads = [encode_png(base), encode_bmp(near), encode_bmp(far),
-                    encode_bmp(other), encode_bmp(base)]
-    batch_kept = dedup_images_against_corpus(
-        _media(spark, all_payloads), index, max_hamming=3
-    )
-    assert batch_kept.count() == 2
-    stream_hashes = {r["phash"] for r in out2.collect()}
-    batch_hashes = {
-        r["phash"] for r in image_phash(batch_kept).collect()
-    }
-    assert stream_hashes == batch_hashes
-
-    # survivors' hashes append straight onto the index: rerunning the
-    # batch gate with the grown index drops everything already ingested
-    grown = index.unionByName(
-        out2.select(F2.col("media_id"), "phash")
-    )
-    regate = dedup_images_against_corpus(
-        _media(spark, all_payloads), grown, max_hamming=3
-    )
-    assert regate.count() == 0
-
-
-def test_phash_index_save_load_roundtrip_and_guards(spark, tmp_path):
-    """The phash artifact discipline (save_cms_sketch pattern): params
-    ride the parquet and come back from load; NULL-hash rows drop at
-    save; an EMPTY index round-trips via the sentinel; parameterless /
-    mixed-param artifacts and bad params fail loudly."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        load_phash_index,
-        save_phash_index,
-    )
-
-    payloads = [encode_bmp(_gradient_px(seed=s)) for s in range(4)]
-    media = _media(spark, payloads + [None])  # one undecodable (NULL hash)
-    hashes = image_phash(media, algo="ahash", hash_size=4)
-    path = str(tmp_path / "phidx")
-    save_phash_index(hashes, "ahash", 4, path)
-
-    idx, algo, hs = load_phash_index(spark, path)
-    assert (algo, hs) == ("ahash", 4)
-    assert sorted(idx.columns) == ["media_id", "phash"]
-    got = {r["media_id"]: r["phash"] for r in idx.collect()}
-    want = {
-        r["media_id"]: r["phash"]
-        for r in hashes.collect()
-        if r["phash"] is not None
-    }
-    assert got == want and len(got) == 4  # NULL-hash row dropped
-
-    # empty index: params survive the round-trip via the sentinel row
-    empty = str(tmp_path / "empty")
-    save_phash_index(hashes.filter("media_id < 0"), "dhash", 8, empty)
-    idx2, algo2, hs2 = load_phash_index(spark, empty)
-    assert (algo2, hs2, idx2.count()) == ("dhash", 8, 0)
-
-    # guards
-    with pytest.raises(ValueError, match="algo"):
-        save_phash_index(hashes, "md5", 8, str(tmp_path / "x1"))
-    with pytest.raises(ValueError, match="hash_size"):
-        save_phash_index(hashes, "dhash", 9, str(tmp_path / "x2"))
-    with pytest.raises(ValueError, match="lacks column"):
-        save_phash_index(
-            hashes.drop("phash"), "dhash", 8, str(tmp_path / "x3")
-        )
-    plain = str(tmp_path / "plain")
-    hashes.select("media_id", "phash").write.parquet(plain)
-    with pytest.raises(ValueError, match="not a save_phash_index"):
-        load_phash_index(spark, plain)
-    # mixed parameter sets = corrupt artifact
-    save_phash_index(hashes, "dhash", 8, str(tmp_path / "mix"))
-    spark.read.parquet(path).write.mode("append").parquet(
-        str(tmp_path / "mix")
-    )
-    with pytest.raises(ValueError, match="mixes"):
-        load_phash_index(spark, str(tmp_path / "mix"))
-
-    # NULL-id rows drop at SAVE (the loader treats NULL id as the
-    # empty-index sentinel — persisting them would lose hashes on load)
-    with_null_id = hashes.unionByName(
-        hashes.limit(1).select(
-            F.lit(None).cast("long").alias("media_id"),
-            F.lit(42).cast("long").alias("phash"),
-            *[
-                F.col(c)
-                for c in hashes.columns
-                if c not in ("media_id", "phash")
-            ],
-        )
-    )
-    nid = str(tmp_path / "nullid")
-    save_phash_index(with_null_id, "ahash", 4, nid)
-    assert load_phash_index(spark, nid)[0].count() == 4
-
-    # append: same artifact discipline, params come FROM the artifact
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (  # noqa: E501
-        append_phash_index,
-    )
-
-    extra = _media(spark, [encode_bmp(_gradient_px(seed=50))])
-    n_app = append_phash_index(
-        spark, path, image_phash(extra, algo="ahash", hash_size=4)
-    )
-    assert n_app == 1
-    idx3, algo3, hs3 = load_phash_index(spark, path)
-    assert (algo3, hs3, idx3.count()) == ("ahash", 4, 5)
-    with pytest.raises(ValueError, match="not a save_phash_index"):
-        append_phash_index(spark, plain, hashes)
-    with pytest.raises(ValueError, match="lacks column"):
-        append_phash_index(spark, path, hashes.drop("phash"))
-
-
-def test_phash_index_feeds_corpus_gate(spark, tmp_path):
-    """load_phash_index output drives dedup_images_against_corpus with
-    the artifact's own parameters: a re-encode of an indexed image
-    drops, fresh content survives."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        dedup_images_against_corpus,
-        load_phash_index,
-        save_phash_index,
-    )
-
-    corpus_px = [_gradient_px(seed=s) for s in range(3)]
-    corpus = _media(spark, [encode_bmp(px) for px in corpus_px])
-    path = str(tmp_path / "phidx")
-    save_phash_index(image_phash(corpus), "dhash", 8, path)
-    idx, algo, hs = load_phash_index(spark, path)
-
-    new_pdf = pd.DataFrame(
-        {
-            "media_id": [100, 101],
-            # PNG re-encode of an indexed image (same pixels) + fresh
-            "payload": [
-                encode_png(corpus_px[1]),
-                encode_bmp(_gradient_px(seed=77)),
-            ],
-        }
-    )
-    new_media = to_media_table(
-        spark.createDataFrame(new_pdf), "media_id", "payload", source="new"
-    )
-    kept = dedup_images_against_corpus(
-        new_media, idx, algo=algo, hash_size=hs, max_hamming=3
-    )
-    assert [r["media_id"] for r in kept.select("media_id").collect()] == [101]

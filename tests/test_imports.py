@@ -45,16 +45,16 @@ def test_operator_surface_exports():
         "tokenizer_efficiency", "tune_lsh_bands",
         "extract_image_features", "extract_audio_features",
         "extract_video_features", "sample_video_frames",
-        "audio_fingerprint", "audio_dup_pairs",
-        "dedup_audio_against_corpus", "save_afp_index",
-        "load_afp_index", "append_afp_index",
-        "video_phash", "video_dup_pairs", "dedup_videos_against_corpus",
-        "save_vhash_index", "load_vhash_index", "append_vhash_index",
+        "image_phash", "audio_fingerprint", "video_phash",
+        "fp_dup_pairs", "dedup_fp_against_corpus",
         "save_fp_index", "load_fp_index", "append_fp_index",
+        "remove_from_fp_index", "compact_fp_index",
         "classify_media", "sniff_pdf", "extract_pdf_text",
         "build_simple_pdf",
     ):
         assert callable(getattr(o, name)), name
+    for family in (o.IMAGE, o.AUDIO, o.VIDEO):
+        assert isinstance(family, o.FingerprintFamily)
 
 
 def test_pipeline_surface_exports():

@@ -2,8 +2,10 @@
 
 The ANN index got tombstones + deferred compaction in round 11
 (`pq.remove_from_ann_index`); these pins give the four fingerprint
-tiers — text MinHash, image phash, audio afp, video vhash — the same
-takedown semantics via the generic engine in `operators/dedup.py`:
+artifacts — text MinHash and the tagged media fingerprint index — the
+same takedown semantics via the generic engine in `operators/dedup.py`
+(the per-family media lifecycle is pinned in test_fp_family.py; the
+generic contracts below run on the image family's artifact):
 
 - remove-then-probe == probe-against-rebuilt-without-ids, per tier;
 - the tombstone-vs-reappend contract (a tombstone suppresses its id
@@ -11,7 +13,7 @@ takedown semantics via the generic engine in `operators/dedup.py`:
 - torn / wrong-family artifacts reject removal with nothing written;
 - compaction is threshold-gated, count-validated, and changes storage
   but never probe results;
-- the CLI exposes --remove / --compact on every *_index command.
+- the CLI exposes --remove / --compact on dedup_index and fp_index.
 """
 
 from __future__ import annotations
@@ -37,15 +39,20 @@ from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
     save_fp_index,
     hamming_pairs_against_corpus,
 )
+from hospital_stain_tracker_data_pipeline_spark.operators.fingerprint import (
+    AUDIO,
+    IMAGE,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CLI = os.path.join(REPO, "scripts", "run_pipeline.py")
 
-TAG = "test-fp-v1"
+# 16-bit image fingerprints: the probes below band at nbits=16
+PARAMS = {"algo": "dhash", "hash_size": 4}
 
 
 def _fp_frame(spark, rows):
-    return spark.createDataFrame(rows, "media_id long, fp long")
+    return spark.createDataFrame(rows, "media_id long, phash long")
 
 
 def _ids(spark, ids):
@@ -54,7 +61,7 @@ def _ids(spark, ids):
 
 def _probe_ids(probe, index):
     pairs = hamming_pairs_against_corpus(
-        probe, index, hash_col="fp", id_col="media_id",
+        probe, index, hash_col="phash", id_col="media_id",
         nbits=16, max_hamming=1,
     )
     return sorted(
@@ -69,23 +76,24 @@ def test_fp_remove_then_probe_equals_rebuild(spark, tmp_path):
     rows = [(i, i * 16) for i in range(1, 9)]  # distinct, far apart
     full = _fp_frame(spark, rows)
     path = str(tmp_path / "fp")
-    save_fp_index(full, path, TAG)
+    save_fp_index(full, path, IMAGE, **PARAMS)
 
     probe = _fp_frame(spark, [(100 + i, h + 1) for i, h in rows])  # d=1 hits
-    idx, _ = load_fp_index(spark, path, TAG)
+    idx, _ = load_fp_index(spark, path, IMAGE)
     assert len(_probe_ids(probe, idx)) == 8
 
-    report = remove_from_fp_index(spark, path, _ids(spark, [2, 5]), TAG)
+    report = remove_from_fp_index(spark, path, _ids(spark, [2, 5]), IMAGE)
     assert report["requested"] == 2
     assert report["tombstones_total"] == 2
     assert report["index_rows"] == 8  # physical rows untouched
 
     rebuilt_path = str(tmp_path / "fp_rebuilt")
     save_fp_index(
-        full.filter(~F.col("media_id").isin(2, 5)), rebuilt_path, TAG
+        full.filter(~F.col("media_id").isin(2, 5)), rebuilt_path, IMAGE,
+        **PARAMS,
     )
-    got = _probe_ids(probe, load_fp_index(spark, path, TAG)[0])
-    want = _probe_ids(probe, load_fp_index(spark, rebuilt_path, TAG)[0])
+    got = _probe_ids(probe, load_fp_index(spark, path, IMAGE)[0])
+    want = _probe_ids(probe, load_fp_index(spark, rebuilt_path, IMAGE)[0])
     assert got == want and len(got) == 6
     assert not any(c in (2, 5) for _, c in got)
 
@@ -96,23 +104,25 @@ def test_fp_tombstone_suppresses_reappend_until_compact(spark, tmp_path):
     the original and the re-append away, after which a fresh append
     becomes visible."""
     path = str(tmp_path / "fp")
-    save_fp_index(_fp_frame(spark, [(1, 16), (2, 32), (3, 48)]), path, TAG)
-    remove_from_fp_index(spark, path, _ids(spark, [3]), TAG)
+    save_fp_index(
+        _fp_frame(spark, [(1, 16), (2, 32), (3, 48)]), path, IMAGE, **PARAMS
+    )
+    remove_from_fp_index(spark, path, _ids(spark, [3]), IMAGE)
     # re-append id 3: still suppressed (tombstone wins)
-    append_fp_index(spark, path, _fp_frame(spark, [(3, 48)]), TAG)
-    idx, _ = load_fp_index(spark, path, TAG)
+    append_fp_index(spark, path, _fp_frame(spark, [(3, 48)]), IMAGE)
+    idx, _ = load_fp_index(spark, path, IMAGE)
     assert sorted(r["media_id"] for r in idx.collect()) == [1, 2]
 
-    rep = compact_fp_index(spark, path, TAG, force=True)
+    rep = compact_fp_index(spark, path, IMAGE, force=True)
     assert rep["compacted"] is True
     assert rep["folded_tombstones"] == 1
     # both physical rows for id 3 folded away
-    idx, _ = load_fp_index(spark, path, TAG)
+    idx, _ = load_fp_index(spark, path, IMAGE)
     assert sorted(r["media_id"] for r in idx.collect()) == [1, 2]
 
     # tombstones cleared: a fresh append is visible again
-    append_fp_index(spark, path, _fp_frame(spark, [(3, 48)]), TAG)
-    idx, _ = load_fp_index(spark, path, TAG)
+    append_fp_index(spark, path, _fp_frame(spark, [(3, 48)]), IMAGE)
+    idx, _ = load_fp_index(spark, path, IMAGE)
     assert sorted(r["media_id"] for r in idx.collect()) == [1, 2, 3]
 
 
@@ -122,18 +132,26 @@ def test_fp_remove_rejects_torn_and_wrong_tag(spark, tmp_path):
     plain = str(tmp_path / "plain")
     _fp_frame(spark, [(1, 16)]).write.parquet(plain)
     with pytest.raises(ValueError, match="_fp_tag"):
-        remove_from_fp_index(spark, plain, _ids(spark, [1]), TAG)
+        remove_from_fp_index(spark, plain, _ids(spark, [1]), IMAGE)
     assert not os.path.isdir(plain + "_tombstones")
 
     path = str(tmp_path / "fp")
-    save_fp_index(_fp_frame(spark, [(1, 16)]), path, TAG)
-    with pytest.raises(ValueError, match="tag"):
-        remove_from_fp_index(spark, path, _ids(spark, [1]), "other-v9")
+    save_fp_index(_fp_frame(spark, [(1, 16)]), path, IMAGE, **PARAMS)
+    with pytest.raises(ValueError, match="lacks column"):
+        remove_from_fp_index(spark, path, _ids(spark, [1]), AUDIO)
     assert not os.path.isdir(path + "_tombstones")
+    # the family's columns under another revision's tag
+    old_rev = str(tmp_path / "old_rev")
+    _fp_frame(spark, [(1, 16)]).withColumn(
+        "_fp_tag", F.lit("phash-v0:dhash:4")
+    ).write.parquet(old_rev)
+    with pytest.raises(ValueError, match="family/revision"):
+        remove_from_fp_index(spark, old_rev, _ids(spark, [1]), IMAGE)
+    assert not os.path.isdir(old_rev + "_tombstones")
     # the ids frame must carry the index's id column
     bad = spark.createDataFrame([(1,)], "wrong_col long")
     with pytest.raises(ValueError, match="media_id"):
-        remove_from_fp_index(spark, path, bad, TAG)
+        remove_from_fp_index(spark, path, bad, IMAGE)
 
 
 def test_fp_compact_threshold_gating_and_report(spark, tmp_path):
@@ -142,23 +160,24 @@ def test_fp_compact_threshold_gating_and_report(spark, tmp_path):
     before/after accounting and the tombstone dir cleared."""
     path = str(tmp_path / "fp")
     save_fp_index(
-        _fp_frame(spark, [(i, i * 16) for i in range(1, 21)]), path, TAG
+        _fp_frame(spark, [(i, i * 16) for i in range(1, 21)]), path, IMAGE,
+        **PARAMS,
     )
-    remove_from_fp_index(spark, path, _ids(spark, [7]), TAG)  # 5% ratio
-    rep = compact_fp_index(spark, path, TAG, min_ratio=0.1)
+    remove_from_fp_index(spark, path, _ids(spark, [7]), IMAGE)  # 5% ratio
+    rep = compact_fp_index(spark, path, IMAGE, min_ratio=0.1)
     assert rep["compacted"] is False and "min_ratio" in rep["reason"]
     assert os.path.isdir(path + "_tombstones")
 
-    rep = compact_fp_index(spark, path, TAG, min_ratio=0.1, force=True)
+    rep = compact_fp_index(spark, path, IMAGE, min_ratio=0.1, force=True)
     assert rep["compacted"] is True
     assert rep["index_rows_before"] == 20
     assert rep["index_rows_after"] == 19
     assert not os.path.isdir(path + "_tombstones")
     # the artifact survives the swap intact (tag + sentinel + rows)
-    idx, tag = load_fp_index(spark, path, TAG)
-    assert tag == TAG and idx.count() == 19
+    idx, params = load_fp_index(spark, path, IMAGE)
+    assert params == PARAMS and idx.count() == 19
     # compacting again: nothing to do
-    rep = compact_fp_index(spark, path, TAG, force=True)
+    rep = compact_fp_index(spark, path, IMAGE, force=True)
     assert rep["compacted"] is False and rep["reason"] == "no tombstones"
 
 
@@ -214,77 +233,6 @@ def test_minhash_remove_then_probe_equals_rebuild(spark, tmp_path):
 
 def _ids2(spark, ids):
     return spark.createDataFrame([(i,) for i in ids], "doc_id long")
-
-
-def test_phash_remove_and_compact(spark, tmp_path):
-    """Image tier: the phash artifact (its own two-parameter format)
-    rides the same lifecycle engine."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        compact_phash_index,
-        load_phash_index,
-        remove_from_phash_index,
-        save_phash_index,
-    )
-
-    hashes = spark.createDataFrame(
-        [(1, 11), (2, 22), (3, 33)], "media_id long, phash long"
-    )
-    path = str(tmp_path / "ph")
-    save_phash_index(hashes, "dhash", 8, path)
-    rep = remove_from_phash_index(spark, path, _ids(spark, [2]))
-    assert rep["tombstones_total"] == 1
-    idx, algo, hs = load_phash_index(spark, path)
-    assert (algo, hs) == ("dhash", 8)
-    assert sorted(r["media_id"] for r in idx.collect()) == [1, 3]
-    rep = compact_phash_index(spark, path, force=True)
-    assert rep["compacted"] is True
-    idx, _, _ = load_phash_index(spark, path)
-    assert sorted(r["media_id"] for r in idx.collect()) == [1, 3]
-
-
-def test_audio_video_tier_wrappers(spark, tmp_path):
-    """Audio/video tiers: the thin wrappers remove under the module's
-    own tag and reject a foreign artifact."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-        compact_afp_index,
-        load_afp_index,
-        remove_from_afp_index,
-        save_afp_index,
-    )
-
-    fps = spark.createDataFrame(
-        [(1, 111), (2, 222)], "media_id long, afp long"
-    )
-    apath = str(tmp_path / "afp")
-    save_afp_index(fps, apath)
-    rep = remove_from_afp_index(spark, apath, _ids(spark, [1]))
-    assert rep["tombstones_total"] == 1
-    assert [r["media_id"] for r in load_afp_index(spark, apath).collect()] == [2]
-    assert compact_afp_index(spark, apath, force=True)["compacted"] is True
-    assert [r["media_id"] for r in load_afp_index(spark, apath).collect()] == [2]
-
-    # a video artifact rejects the audio tier's remove (wrong family)
-    from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (
-        compact_vhash_index,
-        load_vhash_index,
-        remove_from_vhash_index,
-        save_vhash_index,
-    )
-
-    vpath = str(tmp_path / "vh")
-    vh = spark.createDataFrame(
-        [(1, 11), (2, 22)], "media_id long, vhash long"
-    )
-    save_vhash_index(vh, vpath, "dhash", 4, 3)
-    with pytest.raises(ValueError):
-        remove_from_afp_index(spark, vpath, _ids(spark, [1]))
-    rep = remove_from_vhash_index(spark, vpath, _ids(spark, [2]))
-    assert rep["tombstones_total"] == 1
-    idx, algo, hs, ns = load_vhash_index(spark, vpath)
-    assert (algo, hs, ns) == ("dhash", 4, 3)
-    assert [r["media_id"] for r in idx.collect()] == [1]
-    assert compact_vhash_index(spark, vpath, force=True)["compacted"] is True
-    assert [r["media_id"] for r in load_vhash_index(spark, vpath)[0].collect()] == [1]
 
 
 def test_cli_index_remove_and_compact(tmp_path):
@@ -362,14 +310,18 @@ def test_rebuild_clears_stale_tombstones(spark, tmp_path):
     legitimately-present id in the brand-new index stays suppressed
     forever (and a later compact physically deletes it)."""
     path = str(tmp_path / "fp")
-    save_fp_index(_fp_frame(spark, [(1, 16), (2, 32)]), path, TAG)
-    remove_from_fp_index(spark, path, _ids(spark, [2]), TAG)
+    save_fp_index(
+        _fp_frame(spark, [(1, 16), (2, 32)]), path, IMAGE, **PARAMS
+    )
+    remove_from_fp_index(spark, path, _ids(spark, [2]), IMAGE)
     assert os.path.isdir(path + "_tombstones")
 
     # nightly rebuild: id 2 is legitimately in the fresh corpus
-    save_fp_index(_fp_frame(spark, [(1, 16), (2, 32), (3, 48)]), path, TAG)
+    save_fp_index(
+        _fp_frame(spark, [(1, 16), (2, 32), (3, 48)]), path, IMAGE, **PARAMS
+    )
     assert not os.path.isdir(path + "_tombstones")
-    idx, _ = load_fp_index(spark, path, TAG)
+    idx, _ = load_fp_index(spark, path, IMAGE)
     assert sorted(r["media_id"] for r in idx.collect()) == [1, 2, 3]
 
     # same for the MinHash artifact
@@ -392,14 +344,15 @@ def test_remove_casts_ids_to_index_type(spark, tmp_path):
     index's id type before writing, so the index stays loadable."""
     path = str(tmp_path / "fp")
     save_fp_index(
-        _fp_frame(spark, [(1, 16), (2, 32), (3, 48)]), path, TAG
+        _fp_frame(spark, [(1, 16), (2, 32), (3, 48)]), path, IMAGE,
+        **PARAMS,
     )
-    remove_from_fp_index(spark, path, _ids(spark, [1]), TAG)  # long ids
+    remove_from_fp_index(spark, path, _ids(spark, [1]), IMAGE)  # long ids
     ints = spark.createDataFrame([(2,)], "media_id int")  # int32 ids
-    remove_from_fp_index(spark, path, ints, TAG)
-    idx, _ = load_fp_index(spark, path, TAG)  # must not raise
+    remove_from_fp_index(spark, path, ints, IMAGE)
+    idx, _ = load_fp_index(spark, path, IMAGE)  # must not raise
     assert sorted(r["media_id"] for r in idx.collect()) == [3]
-    rep = compact_fp_index(spark, path, TAG, force=True)
+    rep = compact_fp_index(spark, path, IMAGE, force=True)
     assert rep["compacted"] is True and rep["index_rows_after"] == 1
 
 
@@ -410,21 +363,21 @@ def test_index_fsck_all_kinds(spark, tmp_path):
     from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
         index_fsck,
     )
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        save_phash_index,
+    from hospital_stain_tracker_data_pipeline_spark.operators.fingerprint import (  # noqa: E501
+        VIDEO,
     )
     from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
         build_ann_index,
         remove_from_ann_index,
     )
 
-    # generic fp artifact, one tombstone
+    # media fingerprint artifact, one tombstone
     fp = str(tmp_path / "fp")
-    save_fp_index(_fp_frame(spark, [(1, 16), (2, 32)]), fp, TAG)
-    remove_from_fp_index(spark, fp, _ids(spark, [2]), TAG)
+    save_fp_index(_fp_frame(spark, [(1, 16), (2, 32)]), fp, IMAGE, **PARAMS)
+    remove_from_fp_index(spark, fp, _ids(spark, [2]), IMAGE)
     rep = index_fsck(spark, fp)
     assert rep["ok"] and rep["kind"] == "fp_tagged"
-    assert rep["meta"]["tag"] == TAG
+    assert rep["meta"] == {"family": "image", "tag": "phash-v1:dhash:4"}
     assert (rep["rows"], rep["live_rows"], rep["tombstones"]) == (2, 1, 1)
 
     # minhash artifact (records its own id column)
@@ -439,15 +392,20 @@ def test_index_fsck_all_kinds(spark, tmp_path):
     assert rep["meta"] == {"num_hashes": 32, "k": 3}
     assert rep["rows"] == 2 and rep["tombstones"] == 0
 
-    # phash artifact
-    ph = str(tmp_path / "ph")
-    save_phash_index(
-        spark.createDataFrame([(1, 11)], "media_id long, phash long"),
-        "dhash", 8, ph,
-    )
-    rep = index_fsck(spark, ph)
-    assert rep["ok"] and rep["kind"] == "phash"
-    assert rep["meta"] == {"algo": "dhash", "hash_size": 8}
+    # the family comes from the hash column: audio and video artifacts
+    for family, params in ((AUDIO, {}), (VIDEO, {"n_samples": 3})):
+        p = str(tmp_path / family.name)
+        save_fp_index(
+            spark.createDataFrame(
+                [(1, 11)], f"media_id long, {family.hash_col} long"
+            ),
+            p, family, **params,
+        )
+        rep = index_fsck(spark, p)
+        assert rep["ok"] and rep["kind"] == "fp_tagged"
+        assert rep["meta"] == {
+            "family": family.name, "tag": family.tag(family.params(**params))
+        }
 
     # ANN artifact with a tombstone
     emb = spark.createDataFrame(
@@ -497,8 +455,8 @@ def test_swap_crash_recovery_protects_last_copy(spark, tmp_path):
 
     rows = [(i, i * 16) for i in range(1, 9)]
     path = str(tmp_path / "fp")
-    save_fp_index(_fp_frame(spark, rows), path, TAG)
-    remove_from_fp_index(spark, path, _ids(spark, [2]), TAG)
+    save_fp_index(_fp_frame(spark, rows), path, IMAGE, **PARAMS)
+    remove_from_fp_index(spark, path, _ids(spark, [2]), IMAGE)
 
     # healthy artifact: recovery is a no-op
     assert recover_index_swap(path)["recovered"] is False
@@ -523,14 +481,14 @@ def test_swap_crash_recovery_protects_last_copy(spark, tmp_path):
     assert not os.path.isdir(path + "_old")
     assert not os.path.isdir(path + "_compacting")
     assert not os.path.isdir(path + "_tombstones")
-    idx, _ = load_fp_index(spark, path, TAG)
+    idx, _ = load_fp_index(spark, path, IMAGE)
     assert idx.count() == 8  # copytree predates the fold in this rig
 
     # crash window BEFORE compacting existed (only _old survives):
     os.rename(path, path + "_old")
     got = recover_index_swap(path)
     assert got == {"recovered": True, "from": "old", "path": path}
-    assert load_fp_index(spark, path, TAG)[0].count() == 8
+    assert load_fp_index(spark, path, IMAGE)[0].count() == 8
 
     # nothing anywhere → honest report, no raise
     empty = str(tmp_path / "nothing")
@@ -561,10 +519,7 @@ def test_index_fsck_covers_every_save_writer(spark, tmp_path):
         writers |= set(re.findall(r"^def (save_\w+)", open(f).read(), re.M))
     expected_kind = {
         "save_dedup_index": "minhash",
-        "save_fp_index": "fp_tagged",
-        "save_afp_index": "fp_tagged",     # wraps save_fp_index
-        "save_vhash_index": "fp_tagged",   # wraps save_fp_index
-        "save_phash_index": "phash",
+        "save_fp_index": "fp_tagged",  # image, audio and video
         "save_ivf_index": "ivf_centroids",
         "save_pq_index": "pq_codebooks",
         "save_cms_sketch": "cms_sketch",

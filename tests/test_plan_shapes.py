@@ -1029,8 +1029,10 @@ def test_media_fingerprint_pairs_never_shuffle_payloads(spark):
     import numpy as np
     import pandas as pd
 
-    from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-        audio_dup_pairs,
+    from hospital_stain_tracker_data_pipeline_spark.operators.fingerprint import (
+        AUDIO,
+        VIDEO,
+        fp_dup_pairs,
     )
     from hospital_stain_tracker_data_pipeline_spark.operators.jpeg import (
         encode_jpeg,
@@ -1039,9 +1041,6 @@ def test_media_fingerprint_pairs_never_shuffle_payloads(spark):
         build_mjpeg_avi,
         encode_wav,
         to_media_table,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (
-        video_dup_pairs,
     )
 
     tone = np.round(
@@ -1069,7 +1068,7 @@ def test_media_fingerprint_pairs_never_shuffle_payloads(spark):
         ),
         "media_id", "payload", source="t",
     )
-    for pairs in (audio_dup_pairs(audio), video_dup_pairs(video)):
+    for pairs in (fp_dup_pairs(audio, AUDIO), fp_dup_pairs(video, VIDEO)):
         plan = _explain(pairs)
         assert "payload" not in plan  # lineage truncated at (id, hash)
         assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan

@@ -16,10 +16,8 @@ Pins (the image/audio-tier battery, transposed):
 - decode policy: fake stand-in under fake_decode, loud
   NotImplementedError otherwise (including a parseable container
   whose frames are all undecodable), NULL payload -> NULL;
-- the incremental tier: corpus-wins gate, tagged index artifact
-  round-trip + family/revision guards (the generic
-  dedup.save/load/append_fp_index discipline), survivors-append,
-  streaming twin == batch.
+- the incremental tier (corpus gate, index artifact, streaming twin,
+  CLI) is shared by every family and pinned in test_fp_family.py.
 """
 
 from __future__ import annotations
@@ -40,11 +38,11 @@ from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
     resize_rgb_nearest,
     to_media_table,
 )
+from hospital_stain_tracker_data_pipeline_spark.operators.fingerprint import (
+    VIDEO,
+    fp_dup_pairs,
+)
 from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (
-    dedup_videos_against_corpus,
-    load_vhash_index,
-    save_vhash_index,
-    video_dup_pairs,
     video_phash,
 )
 
@@ -202,7 +200,7 @@ def test_video_dup_pairs_matches_duckdb_bruteforce(spark):
     fps = video_phash(media).toPandas()
     got = sorted(
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in video_dup_pairs(media, max_hamming=4).collect()
+        for r in fp_dup_pairs(media, VIDEO, max_hamming=4).collect()
     )
     con = duckdb.connect()
     con.register("h", fps[["media_id", "vhash"]])
@@ -252,235 +250,10 @@ def test_video_phash_decode_policy(spark):
     assert again == {k: v["vhash"] for k, v in rows.items()}
 
     # NULL-fingerprint rows never reach the pair join
-    pairs = video_dup_pairs(media, fake_decode=True)
+    pairs = fp_dup_pairs(media, VIDEO, fake_decode=True)
     assert pairs.filter(
         (F.col("id_a") == 3) | (F.col("id_b") == 3)
     ).count() == 0
 
     with pytest.raises(Exception, match="NotImplementedError|PyAV|ffmpeg"):
         video_phash(media).collect()
-
-
-def test_dedup_videos_against_corpus(spark, tmp_path):
-    """Incremental video dedup: persist the vhash index for a corpus,
-    gate a new batch — an MP4 re-container of an indexed AVI drops
-    (hamming 0), a quality-85 re-encode drops, a different clip and a
-    within-batch duplicate pair both survive (corpus wins)."""
-    base_px = _frames_px(21)
-    base_frames = [encode_jpeg(p) for p in base_px]
-    other = _avi(_frames_px(22))
-    far = _avi(_frames_px(23))
-
-    corpus = _media(
-        spark, [build_mjpeg_avi(base_frames, SIZE, SIZE, fps=FPS), other]
-    )
-    idx_path = str(tmp_path / "vhidx")
-    save_vhash_index(video_phash(corpus), idx_path)
-    index, algo, hash_size, n_samples = load_vhash_index(spark, idx_path)
-    assert (algo, hash_size, n_samples) == ("dhash", 8, 8)
-
-    new_payloads = [
-        build_mjpeg_mp4(base_frames, SIZE, SIZE, fps=FPS),  # 100: re-container
-        _avi(base_px, quality=85),                          # 101: re-encode
-        far,                                                # 102: survives
-        far,                                                # 103: within-batch
-    ]                                                       #      dup, survives
-    new_media = _media(spark, new_payloads, ids=[100, 101, 102, 103])
-    kept = sorted(
-        r["media_id"]
-        for r in dedup_videos_against_corpus(
-            new_media, index, max_hamming=6
-        ).collect()
-    )
-    assert kept == [102, 103]
-
-    # cross-set pairs replay in DuckDB
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        hamming_pairs_against_corpus,
-    )
-
-    new_fps = video_phash(new_media)
-    got = sorted(
-        (r["new_id"], r["corpus_id"], r["hamming"])
-        for r in hamming_pairs_against_corpus(
-            new_fps, index, hash_col="vhash", max_hamming=6
-        ).collect()
-    )
-    con = duckdb.connect()
-    con.register("n", new_fps.select("media_id", "vhash").toPandas())
-    con.register("c", index.toPandas())
-    want = sorted(
-        map(
-            tuple,
-            con.execute(
-                "SELECT n.media_id, c.media_id, "
-                "bit_count(xor(n.vhash, c.vhash)) FROM n, c "
-                "WHERE bit_count(xor(n.vhash, c.vhash)) <= 6"
-            ).fetchall(),
-        )
-    )
-    assert got == want and len(got) == 2
-
-
-def test_vhash_index_roundtrip_and_guards(spark, tmp_path):
-    """The tagged-artifact discipline (generic dedup.save_fp_index
-    under the hood): parameters ride the tag and come back from load;
-    NULL rows drop at save; an EMPTY index round-trips; tagless,
-    mixed-tag, and foreign-family artifacts fail loudly."""
-    media = _media(spark, [_avi(_frames_px(s)) for s in range(3)] + [None])
-    fps = video_phash(media, n_samples=4, fake_decode=True)
-    path = str(tmp_path / "vhidx")
-    save_vhash_index(fps, path, n_samples=4)
-
-    idx, algo, hs, ns = load_vhash_index(spark, path)
-    assert (algo, hs, ns) == ("dhash", 8, 4)
-    got = {r["media_id"]: r["vhash"] for r in idx.collect()}
-    want = {
-        r["media_id"]: r["vhash"]
-        for r in fps.collect()
-        if r["vhash"] is not None
-    }
-    assert got == want and len(got) == 3  # NULL row dropped
-
-    empty = str(tmp_path / "empty")
-    save_vhash_index(fps.filter("media_id < 0"), empty, n_samples=4)
-    idx2, _, _, ns2 = load_vhash_index(spark, empty)
-    assert (idx2.count(), ns2) == (0, 4)
-
-    # guards
-    with pytest.raises(ValueError, match="lacks column"):
-        save_vhash_index(fps.drop("vhash"), str(tmp_path / "x1"))
-    plain = str(tmp_path / "plain")
-    fps.select("media_id", "vhash").write.parquet(plain)
-    with pytest.raises(ValueError, match="_fp_tag"):
-        load_vhash_index(spark, plain)
-    # foreign family tag: NOT probe-able as vhash even when the
-    # columns happen to line up
-    foreign = str(tmp_path / "foreign")
-    fps.select("media_id", "vhash").withColumn(
-        "_fp_tag", F.lit("afp-other-family")
-    ).write.parquet(foreign)
-    with pytest.raises(ValueError, match="not a vphash-v1"):
-        load_vhash_index(spark, foreign)
-    # an artifact written under different column names is rejected
-    # before any tag parse (the generic loader's column guard)
-    wrongcols = str(tmp_path / "wrongcols")
-    fps.select("media_id", F.col("vhash").alias("afp")).withColumn(
-        "_fp_tag", F.lit("vphash-v1:dhash:8:n_samples=4")
-    ).write.parquet(wrongcols)
-    with pytest.raises(ValueError, match="lacks column"):
-        load_vhash_index(spark, wrongcols)
-    mixed = str(tmp_path / "mixed")
-    fps.select("media_id", "vhash").withColumn(
-        "_fp_tag", F.lit("vphash-v1:dhash:8:n_samples=4")
-    ).write.parquet(mixed)
-    fps.select("media_id", "vhash").withColumn(
-        "_fp_tag", F.lit("vphash-v1:dhash:8:n_samples=8")
-    ).write.mode("append").parquet(mixed)
-    with pytest.raises(ValueError, match="mixes"):
-        load_vhash_index(spark, mixed)
-
-
-def test_vhash_index_append_feeds_corpus_gate(spark, tmp_path):
-    """Survivors-append flow: gate a batch, append the survivors'
-    fingerprints under the artifact's own tag, and the SAME batch
-    re-gated against the grown index drops entirely."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        materialize,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (
-        append_vhash_index,
-    )
-
-    base_px = _frames_px(31)
-    corpus = _media(spark, [_avi(base_px)])
-    path = str(tmp_path / "idx")
-    save_vhash_index(video_phash(corpus), path)
-
-    batch = _media(
-        spark,
-        [_avi(base_px, quality=85), _avi(_frames_px(32))],
-        ids=[10, 11],
-    )
-    index = load_vhash_index(spark, path)[0]
-    survivors = dedup_videos_against_corpus(batch, index, max_hamming=6)
-    assert [r["media_id"] for r in survivors.collect()] == [11]
-
-    fps = materialize(video_phash(batch))
-    surv_fps = fps.join(survivors.select("media_id"), "media_id", "left_semi")
-    assert append_vhash_index(spark, path, surv_fps) == 1
-
-    regate = dedup_videos_against_corpus(
-        batch, load_vhash_index(spark, path)[0], max_hamming=6
-    )
-    assert regate.count() == 0
-    assert append_vhash_index(spark, path, fps.filter("media_id < 0")) == 0
-    assert load_vhash_index(spark, path)[0].count() == 2
-
-
-def test_stream_video_dedup_ingest(spark, tmp_path):
-    """Streaming twin == batch gate: clips land as files, each is
-    frame-sampled + fingerprinted once, corpus near-dups drop,
-    survivors' fingerprints land in the sink; a second wave processes
-    ONLY the new files and the verdicts match the batch operator's."""
-    import os
-
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_video_dedup_ingest,
-    )
-
-    base_px = _frames_px(41)
-    base_frames = [encode_jpeg(p) for p in base_px]
-    far = _avi(_frames_px(42))
-    other = _avi(_frames_px(43))
-
-    corpus = _media(spark, [build_mjpeg_avi(base_frames, SIZE, SIZE, fps=FPS)])
-    index = video_phash(corpus).select("media_id", "vhash")
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    sink = str(tmp_path / "sink")
-    (land / "dup.mp4").write_bytes(
-        build_mjpeg_mp4(base_frames, SIZE, SIZE, fps=FPS)
-    )
-    (land / "near.avi").write_bytes(_avi(base_px, quality=85))
-    (land / "keep.avi").write_bytes(far)
-
-    out1 = stream_video_dedup_ingest(
-        spark, str(land), index, sink, max_hamming=6
-    )
-    kept1 = {os.path.basename(r["path"]) for r in out1.collect()}
-    assert kept1 == {"keep.avi"}
-    [row] = out1.collect()
-    assert row["decoded"] is True and row["mime"].startswith("video/")
-
-    (land / "wave2_keep.avi").write_bytes(other)
-    (land / "wave2_dup.avi").write_bytes(
-        build_mjpeg_avi(base_frames, SIZE, SIZE, fps=FPS)
-    )
-    out2 = stream_video_dedup_ingest(
-        spark, str(land), index, sink, max_hamming=6
-    )
-    kept2 = {os.path.basename(r["path"]) for r in out2.collect()}
-    assert kept2 == {"keep.avi", "wave2_keep.avi"}
-
-    all_payloads = [
-        build_mjpeg_mp4(base_frames, SIZE, SIZE, fps=FPS),
-        _avi(base_px, quality=85),
-        far,
-        other,
-        build_mjpeg_avi(base_frames, SIZE, SIZE, fps=FPS),
-    ]
-    batch_kept = dedup_videos_against_corpus(
-        _media(spark, all_payloads), index, max_hamming=6
-    )
-    assert batch_kept.count() == 2
-    stream_fps = {r["vhash"] for r in out2.collect()}
-    batch_fps = {r["vhash"] for r in video_phash(batch_kept).collect()}
-    assert stream_fps == batch_fps
-
-    grown = index.unionByName(out2.select("media_id", "vhash"))
-    regate = dedup_videos_against_corpus(
-        _media(spark, all_payloads), grown, max_hamming=6
-    )
-    assert regate.count() == 0
