@@ -71,6 +71,10 @@ __all__ = [
     "search_ann_index",
 ]
 
+# Largest ADC lookup table (queries × subspaces × codes, int64) that
+# ``_adc_table_np`` builds on the driver and broadcasts.
+_ADC_TABLE_MAX_BYTES = 256 << 20
+
 
 def _pq_codes_batch(
     x: np.ndarray, cb: np.ndarray, cnorm2: np.ndarray
@@ -335,19 +339,31 @@ def _adc_table_np(
 
     Exactness: |q-c| <= 2e6, so each partial is below dsub·4e12 —
     far below 2^53; the int64 arithmetic here is identical to the old
-    zip_with/aggregate expression."""
+    zip_with/aggregate expression.
+
+    The table is capped at ``_ADC_TABLE_MAX_BYTES``: the collect stops
+    one query past the number that fits, and a larger query set raises
+    ``ValueError`` naming the table's size."""
     cb = np.ascontiguousarray(codebooks, dtype=np.int64)
     m, kk, dsub = cb.shape
-    rows = query.select(
+    per_query = m * kk * 8
+    fits = max(1, _ADC_TABLE_MAX_BYTES // per_query)
+    vecs = query.select(
         F.col(query_id_col).alias("_qid"),
         quantize_vec_long(F.col(vec_col)).alias("_qv"),
-    ).collect()
+    ).filter(F.col("_qv").isNotNull())
+    rows = vecs.limit(fits + 1).collect()
+    if len(rows) > fits:
+        n = vecs.count()
+        raise ValueError(
+            f"ADC lookup table for {n} queries x {m} subspaces x {kk} "
+            f"codes is {n * per_query} bytes, over the driver limit of "
+            f"{_ADC_TABLE_MAX_BYTES} bytes; search fewer queries at a time"
+        )
     qid_type = query.schema[query_id_col].dataType.simpleString()
     qids = []
     mats = []
     for r in rows:
-        if r["_qv"] is None:
-            continue
         qids.append(r["_qid"])
         qv = np.asarray(r["_qv"], dtype=np.int64).reshape(m, dsub)
         diff = qv[:, None, :] - cb  # (m, k, dsub)

@@ -105,11 +105,19 @@ def metrics_compare(
     Implemented as one lag window with a calendar-adjacency guard
     (op-window-lag) instead of the reference's self-join — one shuffle,
     one scan (SURVEY.md §2.3 op-join-asof-prev notes the equivalence).
+    The window sees only ``date`` and the day before it: the guard
+    needs no other row, and on a date-partitioned table the scan is
+    pruned to those two partitions.
     """
     if date is None:
         date = latest_date(metrics).collect()[0][0]
+    day = F.lit(date).cast("date")
     lagged = with_prev_calendar_day(
-        metrics, ["region_id"], "date", "strain_index", "prev_strain_index"
+        metrics.filter(F.col("date").between(F.date_sub(day, 1), day)),
+        ["region_id"],
+        "date",
+        "strain_index",
+        "prev_strain_index",
     )
     return (
         lagged.filter(F.col("date") == F.lit(date))

@@ -100,7 +100,7 @@ def get_or_create_regions(
     # small table so a localCheckpoint is cheap.
     dim = dim.localCheckpoint(eager=True)
     dim.write.mode("overwrite").parquet(regions_table.path)
-    return regions_table.spark.read.parquet(regions_table.path)
+    return regions_table.read()
 
 
 def ingest_capacity_csv(

@@ -19,17 +19,130 @@ environment this would be ``MERGE INTO``; the portable mechanism here:
    (listing, footers, rows) is bounded by the batch's touched
    partitions, not table size: this is what keeps a 100 TB table
    upsertable by a 1 GB micro-batch.
+4. A full ``read()`` keeps the frame it resolved and returns it again
+   while the table's files are unchanged, so a repeated read of an
+   untouched table runs no listing or schema-merge job. Reuse is
+   checked on every call against a digest of one driver-side walk of
+   the root, which any writer invalidates, ``LakeTable`` or not.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Iterable, Sequence
 from urllib.parse import unquote
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.upsert import dedup_last_writer, upsert_last_writer_wins
+
+
+# Full-read frames one session keeps (see ``LakeTable.read``); the
+# oldest resolution is dropped first.
+_SNAPSHOTS_PER_SESSION = 32
+# Guards the creation of a session's snapshots and every change to them:
+# threads sharing a session read concurrently.
+_SNAPSHOTS_LOCK = threading.Lock()
+
+
+class _Snapshots:
+    """One session's full-read frames, ``{(path, format): (token,
+    frame)}``, and the JVM handles of the walk that validates them,
+    resolved once per session.
+
+    It is kept on the session object, so it ends with its session and
+    no other session sees it. A module-level map keyed by session would
+    instead keep every session alive: each frame references its own."""
+
+    def __init__(self, spark: SparkSession):
+        jvm = spark._jvm
+        invoke = jvm.java.lang.invoke
+        lookup = invoke.MethodHandles.publicLookup()
+        status = jvm.org.apache.hadoop.fs.FileStatus._java_lang_class
+        path = jvm.org.apache.hadoop.fs.Path._java_lang_class
+        function1 = jvm.scala.Function1._java_lang_class
+
+        def getter(name, rtype):
+            # FileStatus.<name>() as a scala.Function1, so one Py4J call
+            # maps a whole directory level inside the JVM; a getter call
+            # per file from Python is a round trip each (≈0.5 s for a
+            # 729-file table)
+            handle = lookup.findVirtual(
+                status, name, invoke.MethodType.methodType(rtype)
+            )
+            return invoke.MethodHandleProxies.asInterfaceInstance(function1, handle)
+
+        self.is_dir = getter("isDirectory", jvm.java.lang.Boolean.TYPE)
+        self.get_path = getter("getPath", path)
+        self.columns = [
+            self.get_path,
+            getter("getLen", jvm.java.lang.Long.TYPE),
+            getter("getModificationTime", jvm.java.lang.Long.TYPE),
+        ]
+        self.by_path = jvm.scala.math.Ordering.comparatorToOrdering(
+            jvm.java.util.Comparator.naturalOrder()
+        )
+        self.path_tag = jvm.scala.reflect.ClassTag.apply(path)
+        self.wrap = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray
+        self.new_text = jvm.scala.collection.mutable.StringBuilder
+        self.message_digest = jvm.java.security.MessageDigest
+        self.utf8 = jvm.java.nio.charset.StandardCharsets.UTF_8
+        self.char_buffer = jvm.java.nio.CharBuffer
+        self.conf = spark._jsparkSession.conf()
+        self.frames: dict = {}
+
+    @staticmethod
+    def of(spark: SparkSession) -> _Snapshots:
+        """The session's snapshots, created on its first full read."""
+        with _SNAPSHOTS_LOCK:
+            snapshots = getattr(spark, "_lake_snapshots", None)
+            if snapshots is None:
+                snapshots = spark._lake_snapshots = _Snapshots(spark)
+            return snapshots
+
+    def token(self, fs, root) -> bytes | None:
+        """SHA-256 of the session's SQL conf and of the sorted path,
+        length and modification time of every file under ``root``, at
+        every depth, ``_SUCCESS`` included; ``None`` when the walk
+        fails (a missing root, a directory deleted mid-walk). Access
+        times are left out: a read changes them. The text is built and
+        hashed in the JVM, so a level costs a fixed number of Py4J
+        calls and only the 32-byte digest crosses to Python."""
+        text = self.new_text()
+        # schema and partition inference read the conf (time zone,
+        # parquet type flags), so a frame resolved under another conf
+        # is not reused
+        self.conf.getAll().addString(text, "", "\n", "\n")
+        try:
+            level = fs.listStatus(root)
+            while len(level):
+                entries = self.wrap(level).sorted(self.by_path)
+                files = entries.filterNot(self.is_dir)
+                for column in self.columns:
+                    files.map(column).addString(text, "", "\n", "\n")
+                dirs = entries.filter(self.is_dir).map(self.get_path).toArray(self.path_tag)
+                level = fs.listStatus(dirs) if len(dirs) else dirs
+        except Py4JJavaError:
+            return None
+        digest = self.message_digest.getInstance("SHA-256")
+        digest.update(self.utf8.encode(self.char_buffer.wrap(text.underlying())))
+        return bytes(digest.digest())
+
+    def get(self, key, token) -> DataFrame | None:
+        with _SNAPSHOTS_LOCK:
+            hit = self.frames.get(key)
+        return hit[1] if token is not None and hit and hit[0] == token else None
+
+    def put(self, key, token, frame: DataFrame) -> None:
+        with _SNAPSHOTS_LOCK:
+            self.frames.pop(key, None)
+            if token is None:
+                return
+            self.frames[key] = (token, frame)
+            while len(self.frames) > _SNAPSHOTS_PER_SESSION:
+                del self.frames[next(iter(self.frames))]
 
 
 class LakeTable:
@@ -111,6 +224,19 @@ class LakeTable:
         """The whole table, or with ``partitions`` only the partitions
         holding those values (``None`` stands for the NULL partition).
 
+        The full form returns the frame this session last resolved for
+        the table while its files are unchanged, and resolves a new one
+        otherwise. Each call first takes a token from one driver-side
+        ``FileSystem`` walk of the root: the path, length and
+        modification time of every file at every depth, plus the
+        session's SQL conf. The walk runs no Spark job. It relies on
+        what every Spark writer does: a write either creates new file
+        names or changes a file's length or modification time. So an
+        upsert, ``compact``, ``vacuum``, a plain ``df.write`` to the
+        path or an out-of-band delete all yield a fresh frame, never one
+        that lists deleted files. Two full reads of an unchanged table
+        return the same frame object, so a self-join aliases each side.
+
         The scoped form lists the root once and loads just the matching
         directories, so its listing and footer reads cost what the
         requested set touches, not what the table holds. Its partition
@@ -119,16 +245,26 @@ class LakeTable:
         so callers cast it to their own type. It returns ``None`` when
         no requested partition exists."""
         if partitions is None:
-            # mergeSchema: dynamic partition overwrite only rewrites touched
-            # partitions, so after a column is added the untouched
-            # partitions still hold the old physical schema — the merged
-            # read surfaces the union schema with NULLs for the missing
-            # column (the lake-format ALTER TABLE ADD COLUMN behavior)
-            return (
-                self.spark.read.option("mergeSchema", "true")
-                .format(self.data_format)
-                .load(self.path)
-            )
+            snapshots = _Snapshots.of(self.spark)
+            key = (self.path, self.data_format)
+            # the token is taken before resolving, so a write racing the
+            # resolution can only make the next call resolve again
+            token = snapshots.token(*self._hadoop_fs())
+            frame = snapshots.get(key, token)
+            if frame is None:
+                # mergeSchema: dynamic partition overwrite only rewrites
+                # touched partitions, so after a column is added the
+                # untouched partitions still hold the old physical schema
+                # — the merged read surfaces the union schema with NULLs
+                # for the missing column (the lake-format ALTER TABLE ADD
+                # COLUMN behavior)
+                frame = (
+                    self.spark.read.option("mergeSchema", "true")
+                    .format(self.data_format)
+                    .load(self.path)
+                )
+                snapshots.put(key, token, frame)
+            return frame
         dirs = self._partition_dirs()
         wanted = {self._NULL_PARTITION if v is None else str(v) for v in partitions}
         paths = sorted(dirs[v].toString() for v in wanted & dirs.keys())

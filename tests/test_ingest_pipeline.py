@@ -4,7 +4,10 @@ and calendar-day delta semantics."""
 
 from __future__ import annotations
 
+import contextlib
 import csv
+import datetime as dt
+import io
 import os
 
 import pytest
@@ -209,6 +212,45 @@ def test_compare_calendar_day_delta(spark, lake):
     # 2026-01-03 absent → prev/delta NULL despite a 01-02 observation
     assert out4["CA"].prev_strain_index is None
     assert out4["CA"].delta is None
+
+
+def test_compare_reads_only_the_day_and_the_day_before(spark, tmp_path):
+    """compare(d) windows just d and d-1: the scan of a date-partitioned
+    table prunes to those two partitions, and a region seen on d-2 but
+    not on d-1 still gets a NULL prev/delta — no lag reaches past the
+    missing day."""
+    days = [dt.date(2026, 1, 1) + dt.timedelta(days=i) for i in range(10)]
+    d, before = days[-1], days[-2]
+    rows = [
+        (day, region, float(10 * i + j))
+        for i, day in enumerate(days)
+        for j, region in enumerate(["r1", "r2"])
+        if (day, region) != (before, "r1")
+    ]
+    metrics = LakeTable(
+        spark, str(tmp_path / "metrics"), keys=["date", "region_id"], version_col=None
+    )
+    metrics.overwrite(
+        spark.createDataFrame(rows, "date date, region_id string, strain_index double")
+    )
+    regions = spark.createDataFrame(
+        [("r1", "A"), ("r2", "B")], "region_id string, name string"
+    )
+
+    q = api_queries.metrics_compare(metrics.read(), regions, str(d))
+    out = {r.region: r for r in q.collect()}
+    assert (out["A"].strain_index, out["A"].prev_strain_index, out["A"].delta) == (
+        90.0, None, None
+    )
+    assert (out["B"].strain_index, out["B"].prev_strain_index, out["B"].delta) == (
+        91.0, 81.0, 10.0
+    )
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        q.explain("formatted")
+    pf_line = buf.getvalue().split("PartitionFilters")[1].splitlines()[0]
+    assert str(before) in pf_line and str(d) in pf_line, pf_line
 
 
 def test_available_dates_and_coverage(spark, lake):

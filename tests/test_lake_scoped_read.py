@@ -2,13 +2,19 @@
 incremental-metrics paths built on it: partition values are matched by
 the writer's own rendering (escaped names, NULL, integer-looking
 strings), only the touched directories are listed and read, and an
-ingest with no new region names leaves the dimension's files alone."""
+ingest with no new region names leaves the dimension's files alone.
+Also the full read's reuse of its resolved frame: no job while the
+files are unchanged, a fresh frame after any write, one cache per
+session."""
 
 from __future__ import annotations
 
 import csv
+import glob
 import importlib.util
 import os
+import sys
+import threading
 import types
 
 import pytest
@@ -18,6 +24,7 @@ from hospital_stain_tracker_data_pipeline_spark.pipeline import (
     compute_metrics,
     ingest_capacity_csv,
 )
+from hospital_stain_tracker_data_pipeline_spark.pipeline import lake
 from hospital_stain_tracker_data_pipeline_spark.pipeline.lake import LakeTable
 
 # values that need escaping in a directory name, the NULL partition, and
@@ -95,26 +102,28 @@ def test_upsert_batch_of_only_new_partitions(spark, tmp_path):
     assert dict(t.read().dtypes)["p"] == "string"
 
 
-def test_upsert_lists_only_touched_partitions(spark, tmp_path):
-    """Counter tripwire: an upsert touching 2 of 40 date partitions runs
-    no Spark job as wide as the table — a full listing of the root would
-    be one task per partition directory."""
-    n_dates = 40
+N_DATES = 40
+
+
+def _dated_table(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "t"), keys=["date", "k"], version_col="v")
-    day = (F.col("id") % n_dates).cast("int")
-    base = spark.range(n_dates * 5).select(
+    day = (F.col("id") % N_DATES).cast("int")
+    base = spark.range(N_DATES * 5).select(
         F.date_add(F.lit("2026-01-01").cast("date"), day).alias("date"),
         F.col("id").alias("k"),
         F.lit(0).alias("v"),
     )
     t.overwrite(base)
-    batch = base.filter(F.col("date") <= "2026-01-02").withColumn("v", F.lit(1))
+    return t, base
 
+
+def _stage_widths(spark, group, fn):
+    """``fn()`` and the task count of every stage it ran, from the
+    jobs Spark ran in ``group``."""
     sc = spark.sparkContext
-    group = "lake-scoped-upsert-tripwire"
-    sc.setJobGroup(group, "upsert touching 2 of 40 partitions")
+    sc.setJobGroup(group, group)
     try:
-        t.upsert(batch)
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -125,12 +134,170 @@ def test_upsert_lists_only_touched_partitions(spark, tmp_path):
         for s in tracker.getJobInfo(j).stageIds
         if tracker.getStageInfo(s) is not None
     ]
+    return out, widths
+
+
+def test_upsert_lists_only_touched_partitions(spark, tmp_path):
+    """Counter tripwire: an upsert touching 2 of 40 date partitions runs
+    no Spark job as wide as the table — a full listing of the root would
+    be one task per partition directory."""
+    t, base = _dated_table(spark, tmp_path)
+    batch = base.filter(F.col("date") <= "2026-01-02").withColumn("v", F.lit(1))
+
+    _, widths = _stage_widths(spark, "lake-scoped-upsert-tripwire", lambda: t.upsert(batch))
     assert widths, "the upsert ran no job in its group"
-    assert max(widths) < n_dates, widths
+    assert max(widths) < N_DATES, widths
 
     got = t.read()
-    assert got.count() == n_dates * 5
+    assert got.count() == N_DATES * 5
     assert got.filter(F.col("v") == 1).count() == 10
+
+
+def test_unchanged_table_full_read_runs_no_job(spark, tmp_path):
+    """Counter tripwire: resolving a full read of a 40-partition table
+    lists it in a job of one task per partition; a second full read of
+    the unchanged table reuses that frame and runs no job at all."""
+    t, _ = _dated_table(spark, tmp_path)
+    first, widths = _stage_widths(spark, "lake-full-read-resolve", t.read)
+    assert widths and max(widths) >= N_DATES, widths
+
+    again, widths = _stage_widths(spark, "lake-full-read-reuse", t.read)
+    assert widths == []
+    assert again is first
+    assert again.count() == N_DATES * 5
+
+
+def _delete_one_file(spark, t):
+    [victim] = glob.glob(os.path.join(t.path, "p=b", "*.parquet"))
+    os.remove(victim)
+
+
+# Every kind of writer a lake directory sees, LakeTable's own and the
+# plain writers that bypass it (the regions dimension, the run log).
+CHANGES = {
+    "upsert_rewrites_partition": lambda spark, t: t.upsert(_frame(spark, ["a"], 1)),
+    "upsert_adds_partition": lambda spark, t: t.upsert(_frame(spark, ["d"], 1)),
+    "compact": lambda spark, t: t.compact(min_files=1),
+    "vacuum": lambda spark, t: t.vacuum(keep=["a", "b"]),
+    "plain_overwrite": lambda spark, t: (
+        _frame(spark, ["z"], 2).write.mode("overwrite").parquet(t.path)
+    ),
+    "plain_append": lambda spark, t: (
+        _frame(spark, ["a"], 3).write.mode("append").partitionBy("p").parquet(t.path)
+    ),
+    "out_of_band_delete": _delete_one_file,
+    "write_adds_column": lambda spark, t: t.overwrite(
+        _frame(spark, ["a"], 4).withColumn("extra", F.lit(1))
+    ),
+}
+
+
+def _collected(df):
+    cols = sorted(df.columns)
+    return cols, sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+
+
+@pytest.mark.parametrize("change", sorted(CHANGES))
+def test_full_read_after_any_write_sees_the_new_files(spark, tmp_path, change):
+    """Staleness matrix: after each writer the full read returns what a
+    fresh reader sees — never the reused frame, whose files may be
+    gone (FileNotFoundException) or no longer the whole table."""
+    t = LakeTable(
+        spark, str(tmp_path / "t"), keys=["p", "k"], partition_col="p",
+        version_col=None,
+    )
+    t.upsert(_frame(spark, ["a", "b", "c"], 0))
+    before = _collected(t.read())
+
+    CHANGES[change](spark, t)
+
+    fresh = _collected(spark.read.option("mergeSchema", "true").parquet(t.path))
+    assert _collected(t.read()) == fresh
+    if change == "compact":
+        assert fresh == before
+    else:
+        assert fresh != before
+    if change == "write_adds_column":
+        assert "extra" in t.read().columns
+
+
+def test_full_read_follows_the_session_conf(spark, tmp_path):
+    """Resolution reads the session conf (here partition type inference),
+    so a conf change resolves again instead of reusing a frame whose
+    schema the new conf would not produce."""
+    t = LakeTable(
+        spark, str(tmp_path / "t"), keys=["p", "k"], partition_col="p",
+        version_col=None,
+    )
+    t.upsert(_frame(spark, ["1", "2"], 0))
+    assert dict(t.read().dtypes)["p"] == "int"
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    spark.conf.set(key, "false")
+    try:
+        assert dict(t.read().dtypes)["p"] == "string"
+    finally:
+        spark.conf.unset(key)
+    assert dict(t.read().dtypes)["p"] == "int"
+
+
+def test_full_read_frame_stays_in_its_session(spark, tmp_path):
+    """A frame is reused only by the session that resolved it: another
+    session over the same path resolves and keeps its own."""
+    t = LakeTable(
+        spark, str(tmp_path / "t"), keys=["p", "k"], partition_col="p",
+        version_col=None,
+    )
+    t.upsert(_frame(spark, ["a", "b"], 0))
+    mine = t.read()
+    assert t.read() is mine
+
+    other = spark.newSession()
+    theirs = LakeTable(other, t.path, keys=t.keys, partition_col="p").read()
+    assert theirs is not mine
+    assert theirs.sparkSession is other
+    assert LakeTable(other, t.path, keys=t.keys, partition_col="p").read() is theirs
+    assert t.read() is mine
+
+
+def test_concurrent_full_reads_share_one_bounded_cache(spark, tmp_path, monkeypatch):
+    """Threads sharing a session read three tables through a cache bound
+    to two frames, so entries are replaced and evicted under contention:
+    every read returns a frame over its own table's files and the cache
+    never grows past its bound."""
+    monkeypatch.setattr(lake, "_SNAPSHOTS_PER_SESSION", 2)
+    tables = []
+    for i in range(3):
+        t = LakeTable(
+            spark, str(tmp_path / f"t{i}"), keys=["p", "k"], partition_col="p",
+            version_col=None,
+        )
+        t.upsert(_frame(spark, [f"v{i}"], i))
+        tables.append(t)
+    errors = []
+
+    def reader(n):
+        try:
+            for j in range(12):
+                t = tables[(n + j) % len(tables)]
+                files = t.read().inputFiles()
+                if not files or not all(t.path + "/" in f for f in files):
+                    errors.append((t.path, files))
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reader, args=(n,)) for n in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(spark._lake_snapshots.frames) <= 2
 
 
 HEADERS = [

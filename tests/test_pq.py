@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from hospital_stain_tracker_data_pipeline_spark.operators import pq
 from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
     knn_ivf_pq,
     knn_pq,
@@ -164,6 +165,29 @@ def test_pq_adc_exact_numpy_replay(spark, emb, codebooks):
         for vid, d in top:
             want = round(d / (QUANT_SCALE * QUANT_SCALE), 6)
             assert got[(q["query_id"], vid)] == want, (q["query_id"], vid)
+
+
+def test_pq_adc_table_over_driver_limit_raises(spark, emb, codebooks, monkeypatch):
+    """The q × m × n_codes int64 ADC table is built on the driver: past
+    the module's byte limit the search raises, naming the table's size,
+    instead of collecting it; a query set that fits still runs."""
+    m, n_codes, _ = codebooks.shape
+    per_query = m * n_codes * 8
+    monkeypatch.setattr(pq, "_ADC_TABLE_MAX_BYTES", 3 * per_query)
+    queries = (
+        emb.filter(F.col("embedding").isNotNull())
+        .orderBy("vec_id")
+        .limit(4)
+        .select(F.col("vec_id").alias("query_id"), "embedding")
+    )
+    corpus_codes = pq_encode(emb, codebooks)
+    with pytest.raises(
+        ValueError,
+        match=f"4 queries x {m} subspaces x {n_codes} codes is {4 * per_query} bytes",
+    ):
+        knn_pq(corpus_codes, queries, codebooks, k=5)
+    out = knn_pq(corpus_codes, queries.limit(3), codebooks, k=5)
+    assert out.select("query_id").distinct().count() == 3
 
 
 def test_pq_index_roundtrip_and_corruption(spark, codebooks, tmp_path):
