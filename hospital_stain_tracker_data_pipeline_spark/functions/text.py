@@ -123,31 +123,6 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     return F.array_distinct(shingle)
 
 
-def normalize_text_udf(form: str = "NFKC"):
-    """Unicode-normalization column builder (curation pre-pass: NFKC
-    folds ligatures/fullwidth/compatibility forms so fingerprints and
-    shingles see one spelling — run it BEFORE any dedup stage).
-
-    Spark has no Unicode-normalization expression, so this is one of
-    the library's deliberate Arrow-vectorized Python seams: pandas'
-    ``Series.str.normalize`` (stdlib ``unicodedata`` under the hood)
-    per batch, NULLs passed through. At 100 TB the cost is one
-    narrow string map fused into the scan — no shuffle, no state.
-
-    ``form``: NFC | NFD | NFKC | NFKD (validated eagerly — a bad form
-    raising per-task would surface as a mid-job stage failure).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    if form not in ("NFC", "NFD", "NFKC", "NFKD"):
-        raise ValueError(f"unknown normalization form {form!r}")
-
-    # lambda form (not the decorator): this module is JVM-expression
-    # territory with no pandas import, and the decorator's string type
-    # hints would need `pd` resolvable in module globals
-    return pandas_udf(lambda s: s.str.normalize(form), "string")
-
-
 def compression_ratio_udf(level: int = 6):
     """Per-document zlib compression ratio (compressed/raw bytes) — a
     classic cheap quality signal: highly repetitive or templated text

@@ -5,19 +5,15 @@ from .upsert import upsert_last_writer_wins  # noqa: F401
 from .asof import calendar_day_delta, with_prev_calendar_day  # noqa: F401
 from .repetition import (  # noqa: F401
     doc_repetition_profile,
-    filter_repetitious,
     ngram_repetition,
 )
 from .bpe import (  # noqa: F401
     bpe_encode,
-    bpe_vocab,
     tokenizer_efficiency,
     train_bpe,
     word_histogram,
 )
 from .lm import (  # noqa: F401
-    contrastive_score,
-    perplexity_buckets,
     score_perplexity,
     train_ngram_lm,
 )
@@ -27,29 +23,23 @@ from .mixture import (  # noqa: F401
     sample_stratified,
     sample_token_mixture,
     source_token_stats,
-    temperature_weights,
 )
 from .web import (  # noqa: F401
     canonicalize_url,
     cap_per_group,
     dedup_exact_urls,
     extract_domain,
-    audit_fetch_log,
     extract_text_from_html,
     fetch_timeline,
-    filter_blocked_domains,
     parse_html_documents,
     plan_recrawl,
     robots_crawl_delays,
     robots_filter,
     robots_rules,
-    robots_sitemaps,
     schedule_fetch,
 )
 from .sketch import (  # noqa: F401
-    approx_distinct_hll,
     bloom_fpp,
-    bloom_merge,
     bloom_query,
     bloom_sketch,
     cms_merge,
@@ -72,13 +62,11 @@ from .sketch import (  # noqa: F401
     save_bloom_sketch,
     save_cms_sketch,
     save_hll_sketch,
-    skew_report,
 )
 from .quality import (  # noqa: F401
     compression_signals,
     corpus_report,
     ensure_quality_signals,
-    filter_by_compression,
     filter_gopher_quality,
     gopher_stage_predicates,
     quality_signals,
@@ -88,7 +76,6 @@ from .splits import leakage_safe_split, split_assignments  # noqa: F401
 from .packing import (  # noqa: F401
     pack_documents_no_split,
     pack_token_chunks,
-    packing_efficiency,
     shard_manifest,
     verify_packed_corpus,
     write_packed_corpus,
@@ -146,20 +133,16 @@ from .dedup import (  # noqa: F401
     minhash_hot_bucket_report,
     save_fp_index,
     minhash_signature_index,
-    ngram_contamination,
     recover_index_swap,
     save_dedup_index,
     select_cluster_representatives,
-    tune_lsh_bands,
 )
-from .graph import pagerank  # noqa: F401
 from .similarity import (  # noqa: F401
     ann_hot_bucket_report,
     dequantize_embeddings,
     load_ivf_index,
     quantize_embeddings,
     save_ivf_index,
-    semantic_dedup,
     semantic_dedup_pairs,
 )
 from .audio_fp import audio_fingerprint  # noqa: F401
@@ -169,7 +152,6 @@ from .fingerprint import (  # noqa: F401
     IMAGE,
     VIDEO,
     FingerprintFamily,
-    dedup_fp_against_corpus,
     fp_dup_pairs,
 )
 from .pdf import (  # noqa: F401
@@ -180,12 +162,8 @@ from .pdf import (  # noqa: F401
     sniff_pdf,
 )
 from .multimodal import (  # noqa: F401
-    classify_media,
-    extract_audio_features,
     extract_image_features,
-    extract_video_features,
     image_phash,
-    sample_video_frames,
 )
 from .features import (  # noqa: F401
     hashed_text_features,

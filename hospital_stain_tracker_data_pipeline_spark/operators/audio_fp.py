@@ -4,9 +4,8 @@ visual phash tier (``multimodal.image_phash`` family), completing the
 modality set: text (SimHash/MinHash), images (dHash/aHash), embeddings
 (LSH/IVF-PQ), and now audio all share one incremental dedup lifecycle
 (batch pairs -> persisted fingerprint index -> corpus-wins gate ->
-streaming twin -> CLI). This module holds only the fingerprint; the
-lifecycle is the ``fingerprint.AUDIO`` family's, shared with image and
-video.
+CLI). This module holds only the fingerprint; the lifecycle is the
+``fingerprint.AUDIO`` family's, shared with image and video.
 
 The fingerprint is the Haitsma-Kalker sign-of-band-energy-difference
 construction (Haitsma & Kalker, "A Highly Robust Audio Fingerprint
@@ -27,9 +26,9 @@ contract are the same:
 - CONTAINER-INVARIANT: WAV and FLAC of the same PCM decode to the
   same samples, hence the identical fingerprint (content addressing).
 - RATE-ROBUST: the signal is first nearest-resampled to the canonical
-  8 kHz with the same exact integer index map ``resample_audio``
-  uses, so recordings of one source at different rates land a few
-  bits apart (exactly equal when the rates divide).
+  8 kHz with an exact integer index map, so recordings of one source
+  at different rates land a few bits apart (exactly equal when the
+  rates divide).
 - NOISE-ROBUST: small perturbations flip only the bits whose energy
   differences sit near zero — near-dups land within a few bits, so
   the pigeonhole banding in ``dedup.hamming_pairs`` finds them with
@@ -82,7 +81,7 @@ def _afp_bits(samples: np.ndarray, rate: int) -> int:
     1. mono = per-frame SUM of channels (sum, not mean — stays
        integer; uniform gain still scales it uniformly);
     2. nearest-resample to ``AFP_RATE`` with the exact integer index
-       map ``idx[i] = (i * n) // n_out`` (``resample_audio``'s map);
+       map ``idx[i] = (i * n) // n_out``;
     3. split into ``AFP_SEGMENTS`` equal time segments
        ``[k*n//S, (k+1)*n//S)``;
     4. per segment, per lag L in ``AFP_LAGS``: the lag-difference
@@ -130,8 +129,8 @@ def _afp_bits(samples: np.ndarray, rate: int) -> int:
 
 
 def _decode_any_samples(raw: bytes):
-    """One dispatch for every native PCM decoder (WAV -> FLAC), the
-    same chain ``resample_audio`` runs. ``(rate, samples) | None``."""
+    """One dispatch for every native PCM decoder (WAV -> FLAC).
+    ``(rate, samples) | None``."""
     from .flac import decode_flac_samples
 
     dec = decode_wav_samples(raw)
@@ -144,10 +143,10 @@ def audio_fingerprint(media: DataFrame, fake_decode: bool = False) -> DataFrame:
     """Acoustic fingerprint over the media table — ``(media_id, mime,
     afp, decoded)`` with one 64-bit LONG per clip, the audio twin of
     ``image_phash``. Decode policy is the module standard: real PCM
-    for the native codecs (16-bit WAV, FLAC — the ``resample_audio``
-    chain), deterministic payload-hash stand-in bits with
-    ``decoded=False`` under ``fake_decode=True``, loud
-    NotImplementedError otherwise (mp3/ogg decode needs an audio
+    for the native codecs (16-bit WAV, FLAC — the
+    ``_decode_any_samples`` chain), deterministic payload-hash
+    stand-in bits with ``decoded=False`` under ``fake_decode=True``,
+    loud NotImplementedError otherwise (mp3/ogg decode needs an audio
     library this environment lacks). NULL payloads fingerprint to NULL
     (they cannot pair).
 

@@ -245,22 +245,6 @@ def train_bpe(
     return merges
 
 
-def bpe_vocab(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    lowercase: bool = True,
-) -> DataFrame:
-    """Corpus token frequencies under a learned merge list:
-    ``(token, count)`` — the vocabulary file a tokenizer ships with."""
-    enc = bpe_encode(docs, merges, text_col=text_col, lowercase=lowercase)
-    return (
-        enc.select(F.explode("bpe_tokens").alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("count"))
-    )
-
-
 def _encode_word(word: str, ranks: dict) -> list[str]:
     """Rank-greedy BPE application to one word (shared by
     ``bpe_encode`` and ``tokenizer_efficiency``): repeatedly merge the

@@ -1413,51 +1413,6 @@ def hamming_pairs_against_corpus(
     )
 
 
-def ngram_contamination(
-    corpus: DataFrame,
-    eval_set: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    eval_id_col: str = "eval_id",
-    n: int = 13,
-    broadcast_eval: bool = True,
-) -> DataFrame:
-    """Train/eval decontamination: corpus documents sharing any
-    ``n``-token contiguous span with an eval document (the GPT-3
-    appendix-C 13-gram overlap check — public methodology). Returns one
-    row per (contaminated corpus doc, eval doc) with the shared-span
-    count, ready to anti-join against the corpus.
-
-    Scale shape: the eval set is small by construction, so its n-gram
-    hash set builds map-side (broadcast) — the 100 TB corpus explodes
-    its n-grams ONCE and hash-joins without shuffling; only the
-    (tiny) contaminated-pair aggregate shuffles. No all-pairs term
-    anywhere: cost is corpus-ngrams × broadcast-probe.
-
-    ``broadcast_eval=False`` drops the broadcast hint for eval sets
-    too big to ship to every task (an all-benchmarks-ever suite can
-    run to tens of GB of 13-grams): the join plans as a shuffle join,
-    and the session's runtime bloom-filter pruning (SCALE.md global
-    posture) builds a bloom from the eval side that is probed inside
-    the corpus scan — most clean n-grams drop BEFORE the exchange, so
-    the shuffled volume approaches the contaminated subset rather
-    than the corpus. Same results either way (pinned by test)."""
-    c = fanout(corpus).select(
-        F.col(id_col),
-        F.explode(hashed_shingles64(F.col(text_col), n)).alias("h"),
-    )
-    e = eval_set.select(
-        F.col(eval_id_col),
-        F.explode(hashed_shingles64(F.col(text_col), n)).alias("h"),
-    )
-    e_side = F.broadcast(e) if broadcast_eval else e
-    return (
-        c.join(e_side, "h")
-        .groupBy(id_col, eval_id_col)
-        .agg(F.count("*").alias("shared_ngrams"))
-    )
-
-
 def connected_components_min_label(
     edges: DataFrame,
     nodes: DataFrame | None = None,
@@ -1923,60 +1878,6 @@ def dedup_substrings(
     )
 
 
-def tune_lsh_bands(
-    num_hashes: int,
-    threshold: float,
-    fn_weight: float = 1.0,
-    fp_weight: float = 1.0,
-) -> dict:
-    """Pick the band count for ``minhash_lsh_pairs`` /
-    ``dedup_against_corpus`` from a target Jaccard ``threshold``: the
-    banding S-curve gives a pair of similarity ``s`` candidate
-    probability ``1 - (1 - s^r)^b`` (b bands of r rows, b*r =
-    num_hashes); this searches every divisor split and keeps the one
-    minimizing the weighted false-positive + false-negative integrals
-    around the threshold (the standard MMDS §3.4 construction —
-    candidates here are VERIFIED afterwards, so false positives cost
-    compute while false negatives cost recall; raise ``fn_weight`` to
-    bias toward recall).
-
-    Pure driver-side arithmetic over ≤ num_hashes options — returns
-    ``{"bands", "rows_per_band", "s50"}`` where ``s50`` is the
-    similarity at which candidacy probability crosses 1/2
-    (``(1/b)^(1/r)`` — the curve's effective threshold). Deterministic;
-    property-pinned in ``tests/test_dedup_similarity.py``."""
-    if num_hashes < 1:
-        raise ValueError("num_hashes must be >= 1")
-    if not 0.0 < threshold < 1.0:
-        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
-    if fn_weight <= 0 or fp_weight <= 0:
-        raise ValueError("weights must be positive")
-    best = None
-    steps = 1000
-    for b in range(1, num_hashes + 1):
-        if num_hashes % b != 0:
-            continue
-        r = num_hashes // b
-        # integrate P(candidate | s) below the threshold (FP mass) and
-        # 1 - P above it (FN mass) on a fixed grid — exact enough to
-        # order divisor splits, and deterministic
-        fp = fn = 0.0
-        for i in range(steps):
-            s = (i + 0.5) / steps
-            p = 1.0 - (1.0 - s**r) ** b
-            if s < threshold:
-                fp += p
-            else:
-                fn += 1.0 - p
-        cost = (fp_weight * fp + fn_weight * fn) / steps
-        s50 = (1.0 - 0.5 ** (1.0 / b)) ** (1.0 / r)
-        cand = (cost, b, r, s50)
-        if best is None or cand[0] < best[0]:
-            best = cand
-    _, b, r, s50 = best
-    return {"bands": b, "rows_per_band": r, "s50": round(s50, 6)}
-
-
 def save_fp_index(
     index: DataFrame, path: str, family: FingerprintFamily, **params
 ) -> None:
@@ -2058,7 +1959,7 @@ def load_fp_index(
 ) -> tuple[DataFrame, dict]:
     """Inverse of ``save_fp_index``: ``(index, params)`` — the
     ``(media_id, <hash_col>)`` frame ready for
-    ``fingerprint.dedup_fp_against_corpus`` and the parameters parsed
+    ``FingerprintFamily.match_corpus`` and the parameters parsed
     FROM the artifact's tag, so a probe hashes with exactly the
     index's configuration. One artifact read; tombstoned ids are
     suppressed. Fails loudly on a tagless parquet, columns of another

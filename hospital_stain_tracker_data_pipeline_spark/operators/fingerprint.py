@@ -12,12 +12,11 @@ Everything downstream is written once, taking a family:
 
 - ``fp_dup_pairs``: fingerprint, then the pigeonhole Hamming banding
   (``dedup.hamming_pairs``);
-- ``dedup_fp_against_corpus``: the corpus-wins gate against a
+- ``FingerprintFamily.match_corpus``: the corpus-wins gate against a
   persisted ``(media_id, hash)`` index;
 - the index lifecycle in ``dedup`` (``save/append/load/remove_from/
   compact_fp_index``), one tagged artifact for all three families;
-- ``streaming.stream_fp_dedup_ingest`` and the ``fp_index`` /
-  ``fp_filter --kind`` CLI commands;
+- the ``fp_index`` / ``fp_filter --kind`` CLI commands;
 - the near-dup tier loop of ``pipeline.curate.curate_media``.
 
 Payloads are decoded and fingerprinted where the bytes are
@@ -142,9 +141,9 @@ class FingerprintFamily:
         telemetry: dict | None = None,
     ) -> DataFrame:
         """Distinct ``media_id``s of fingerprints ``fps`` within
-        ``max_hamming`` bits of anything in ``corpus_index`` — the one
-        cross-set band join behind the batch gate, the streaming gate
-        and the CLI filter."""
+        ``max_hamming`` bits of anything in ``corpus_index`` — the
+        cross-set band join behind the CLI filter; a left-anti join
+        of the probe on these ids keeps the survivors (corpus wins)."""
         return (
             hamming_pairs_against_corpus(
                 fps,
@@ -218,28 +217,3 @@ def fp_dup_pairs(
         max_bucket=max_bucket,
     )
 
-
-def dedup_fp_against_corpus(
-    new_media: DataFrame,
-    corpus_index: DataFrame,
-    family: FingerprintFamily,
-    max_hamming: int | None = None,
-    fake_decode: bool = False,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-    **params,
-) -> DataFrame:
-    """Incremental dedup (corpus wins): drop new media whose
-    fingerprint is within ``max_hamming`` bits of anything ALREADY
-    INDEXED. ``corpus_index`` is a ``(media_id, <hash_col>)`` frame —
-    ``dedup.load_fp_index`` output, whose params feed ``**params`` so
-    probe and index share one configuration. A batch decodes and
-    fingerprints only its own payloads. Does NOT dedup the batch
-    against itself (compose with ``fp_dup_pairs``). Returns the
-    surviving ``new_media`` rows unchanged;
-    ``streaming.stream_fp_dedup_ingest`` is the streaming twin."""
-    params = family.params(**params)
-    fps = family.fingerprint(new_media, fake_decode, **params)
-    matched = family.match_corpus(
-        fps, corpus_index, params, max_hamming, max_bucket
-    )
-    return new_media.join(matched, "media_id", "left_anti")

@@ -13,11 +13,9 @@ tell "decodable natively" from "genuinely needs an audio library"):
   partitions and the escape (verbatim-residual) code, wasted-bits
   shifts, UTF-8 frame numbers, frame-header CRC-8 and frame CRC-16
   verified.
-- encode (the round-trip rig, and a valid FLAC writer in its own
-  right): 16-bit, fixed blocking, CONSTANT / VERBATIM / FIXED
-  subframes chosen per block (optionally a legal order-2 LPC subframe
-  to exercise that decode path), selectable stereo decorrelation,
-  selectable rice partition order, correct CRCs and STREAMINFO.
+
+No pipeline writes FLAC, so the encoder that builds the round-trip
+fixtures lives with the tests (``tests/media_encoders.py``).
 
 Determinism: pure integer arithmetic end-to-end — the same payload
 always yields the same samples on any host (the partition-invariance
@@ -376,249 +374,3 @@ def _decode(raw: bytes) -> tuple[int, np.ndarray] | None:
     if np.any(out < -32768) or np.any(out > 32767):
         raise ValueError("sample out of 16-bit range")
     return rate, out.astype(np.int16)
-
-
-# ---------------------------------------------------------------------------
-# Encoder (round-trip rig + valid FLAC writer)
-# ---------------------------------------------------------------------------
-
-
-class _BitsW:
-    __slots__ = ("out", "buf", "n")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.buf = 0
-        self.n = 0
-
-    def u(self, v: int, bits: int) -> None:
-        for i in range(bits - 1, -1, -1):
-            self.buf = (self.buf << 1) | ((v >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.buf)
-                self.buf, self.n = 0, 0
-
-    def s(self, v: int, bits: int) -> None:
-        self.u(v & ((1 << bits) - 1), bits)
-
-    def unary(self, q: int) -> None:
-        for _ in range(q):
-            self.u(0, 1)
-        self.u(1, 1)
-
-    def align(self) -> None:
-        while self.n:
-            self.u(0, 1)
-
-
-def _utf8_number(v: int) -> bytes:
-    if v < 0x80:
-        return bytes([v])
-    out = []
-    nbytes = 1
-    while v >= (1 << (6 + 5 * nbytes)) and nbytes < 6:
-        nbytes += 1
-    lead_bits = 6 - nbytes
-    shift = 6 * nbytes
-    lead = (0xFF << (lead_bits + 1)) & 0xFF | (v >> shift)
-    out.append(lead)
-    for i in range(nbytes - 1, -1, -1):
-        out.append(0x80 | ((v >> (6 * i)) & 0x3F))
-    return bytes(out)
-
-
-def _rice_cost(res: list[int], param: int) -> int:
-    c = 0
-    for e in res:
-        zz = (e << 1) if e >= 0 else (((-e) << 1) - 1)
-        c += (zz >> param) + 1 + param
-    return c
-
-
-def _write_residual(
-    bw: _BitsW, res: list[int], order: int, n: int, partition_order: int
-) -> None:
-    """Rice method 0 (4-bit params), per-partition parameter chosen by
-    exact cost; escapes to raw storage when rice would be worse."""
-    while partition_order > 0 and (
-        n % (1 << partition_order) or (n >> partition_order) <= order
-    ):
-        partition_order -= 1
-    bw.u(0, 2)
-    bw.u(partition_order, 4)
-    nparts = 1 << partition_order
-    idx = 0
-    for part in range(nparts):
-        cnt = (n >> partition_order) - (order if part == 0 else 0)
-        chunk = res[idx : idx + cnt]
-        idx += cnt
-        best_p, best_c = 0, None
-        for p in range(15):
-            c = _rice_cost(chunk, p)
-            if best_c is None or c < best_c:
-                best_p, best_c = p, c
-        maxabs = max((abs(e) for e in chunk), default=0)
-        rawbits = max(maxabs.bit_length() + 1, 1) if maxabs else 0
-        if rawbits and best_c > 5 + rawbits * cnt:
-            bw.u(15, 4)  # escape
-            bw.u(rawbits, 5)
-            for e in chunk:
-                bw.s(e, rawbits)
-        elif not chunk:
-            bw.u(best_p, 4)
-        else:
-            bw.u(best_p, 4)
-            for e in chunk:
-                zz = (e << 1) if e >= 0 else (((-e) << 1) - 1)
-                bw.unary(zz >> best_p)
-                if best_p:
-                    bw.u(zz & ((1 << best_p) - 1), best_p)
-
-
-def _encode_subframe(
-    bw: _BitsW,
-    x: np.ndarray,
-    bps: int,
-    partition_order: int,
-    force_lpc: bool,
-) -> None:
-    vals = [int(v) for v in x]
-    n = len(vals)
-    if all(v == vals[0] for v in vals):
-        bw.u(0, 1)
-        bw.u(0, 6)  # CONSTANT
-        bw.u(0, 1)
-        bw.s(vals[0], bps)
-        return
-    if force_lpc and n > 2:
-        # a legal order-2 LPC subframe with the fixed-order-2
-        # coefficients (2, -1) at shift 0 — exercises the decoder's
-        # LPC path with exact integer prediction
-        order, coefs, shift, prec = 2, [2, -1], 0, 15
-        bw.u(0, 1)
-        bw.u(32 + order - 1, 6)
-        bw.u(0, 1)
-        for v in vals[:order]:
-            bw.s(v, bps)
-        bw.u(prec - 1, 4)
-        bw.s(shift, 5)
-        for c in coefs:
-            bw.s(c, prec)
-        res = [
-            vals[i] - ((coefs[0] * vals[i - 1] + coefs[1] * vals[i - 2]) >> shift)
-            for i in range(order, n)
-        ]
-        _write_residual(bw, res, order, n, partition_order)
-        return
-    # pick the cheapest FIXED order 0-2 by total |residual|
-    best = None
-    for order in range(0, min(3, n)):
-        coefs = _FIXED_COEFS[order]
-        res = [
-            vals[i] - sum(c * vals[i - 1 - j] for j, c in enumerate(coefs))
-            for i in range(order, n)
-        ]
-        cost = sum(abs(e) for e in res)
-        if best is None or cost < best[2]:
-            best = (order, res, cost)
-    order, res, _ = best
-    # FIXED residuals of 16-bit input fit rice; if any residual would
-    # overflow the escape's 31-bit raw cap, fall back to VERBATIM
-    if any(abs(e) > (1 << 30) for e in res):
-        bw.u(0, 1)
-        bw.u(1, 6)  # VERBATIM
-        bw.u(0, 1)
-        for v in vals:
-            bw.s(v, bps)
-        return
-    bw.u(0, 1)
-    bw.u(8 + order, 6)
-    bw.u(0, 1)
-    for v in vals[:order]:
-        bw.s(v, bps)
-    _write_residual(bw, res, order, n, partition_order)
-
-
-def encode_flac(
-    samples: np.ndarray,
-    rate: int,
-    blocksize: int = 4096,
-    stereo: str = "independent",
-    partition_order: int = 0,
-    force_lpc: bool = False,
-) -> bytes:
-    """``(n_frames, channels)`` int16 → FLAC bytes (fixed blocking,
-    16-bit). ``stereo``: ``independent`` / ``left_side`` /
-    ``right_side`` / ``mid_side`` (2-channel input only) — the four
-    channel assignments the decoder supports. ``partition_order`` sets
-    the rice partitioning of every residual section (clamped per block
-    when it does not divide). ``force_lpc`` encodes non-constant
-    subframes as a legal order-2 LPC subframe instead of FIXED."""
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    if samples.dtype != np.int16:
-        raise ValueError("encode_flac expects int16 samples")
-    nfr, nch = samples.shape
-    if nch not in (1, 2):
-        raise ValueError("1 or 2 channels only")
-    if stereo != "independent" and nch != 2:
-        raise ValueError("stereo decorrelation needs 2 channels")
-    if nfr == 0:
-        raise ValueError("empty audio")
-    out = bytearray(b"fLaC")
-    # STREAMINFO (last metadata block)
-    si = _BitsW()
-    si.u(blocksize, 16)
-    si.u(blocksize, 16)
-    si.u(0, 24)
-    si.u(0, 24)
-    si.u(rate, 20)
-    si.u(nch - 1, 3)
-    si.u(15, 5)  # bps - 1
-    si.u(nfr, 36)
-    body = bytes(si.out) + bytes(16)  # md5 unset (all zero = unknown)
-    out += bytes([0x80]) + len(body).to_bytes(3, "big") + body
-
-    chan_code = {
-        "independent": nch - 1,
-        "left_side": 8,
-        "right_side": 9,
-        "mid_side": 10,
-    }[stereo]
-    x = samples.astype(np.int64)
-    frame_no = 0
-    for start in range(0, nfr, blocksize):
-        blk = x[start : start + blocksize]
-        n = blk.shape[0]
-        hdr = _BitsW()
-        hdr.u(0x3FFE, 14)
-        hdr.u(0, 1)
-        hdr.u(0, 1)  # fixed blocking
-        hdr.u(7, 4)  # blocksize: 16-bit at end of header
-        hdr.u(0, 4)  # rate: from STREAMINFO
-        hdr.u(chan_code, 4)
-        hdr.u(4, 3)  # bps 16
-        hdr.u(0, 1)
-        hdr.align()
-        head = bytes(hdr.out) + _utf8_number(frame_no) + struct.pack(">H", n - 1)
-        head += bytes([_crc8(head)])
-        bw = _BitsW()
-        if stereo == "independent":
-            chans = [(blk[:, c], 16) for c in range(nch)]
-        elif stereo == "left_side":
-            chans = [(blk[:, 0], 16), (blk[:, 0] - blk[:, 1], 17)]
-        elif stereo == "right_side":
-            chans = [(blk[:, 0] - blk[:, 1], 17), (blk[:, 1], 16)]
-        else:  # mid_side
-            s = blk[:, 0] - blk[:, 1]
-            m = (blk[:, 0] + blk[:, 1]) >> 1
-            chans = [(m, 16), (s, 17)]
-        for cx, cbps in chans:
-            _encode_subframe(bw, cx, cbps, partition_order, force_lpc)
-        bw.align()
-        frame = head + bytes(bw.out)
-        frame += struct.pack(">H", _crc16(frame))
-        out += frame
-        frame_no += 1
-    return bytes(out)

@@ -241,7 +241,10 @@ def probe_calibration(
     Spark shape: one partial-agg scan to K rows, then window cumsums
     over those K rows — the corpus shuffles once, K-wide. NULL scores
     and NULL labels are excluded (scoring's documented "no usable
-    signal" rows can't calibrate anything). Fully expression-level →
+    signal" rows can't calibrate anything). ``mean_score`` is the
+    exact decimal mean of the scores rounded half-up to 6 dp, so it
+    does not depend on summation order; scores must fit
+    ``decimal(38,18)`` (|score| < 1e20). Fully expression-level →
     exact DuckDB replay (``tests/test_inference.py``)."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
@@ -270,7 +273,12 @@ def probe_calibration(
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("_y").alias("positives"),
-            F.round(F.avg("_s"), 6).alias("mean_score"),
+            # exact decimal mean, rounded once: a double sum drifts in
+            # the last ulp with summation order, enough to flip a mean
+            # sitting on a 6-dp half-way point
+            F.round(F.avg(F.col("_s").cast("decimal(38,18)")), 6)
+            .cast("double")
+            .alias("mean_score"),
         )
     )
     w = Window.orderBy(F.desc("bucket")).rowsBetween(

@@ -16,8 +16,8 @@ natively" from "genuinely needs an external codec"):
   are out of scope.
 - encode: baseline 4:4:4 (or single-component grayscale), Annex K
   tables scaled by the libjpeg quality curve, optional restart
-  interval; progressive (``encode_jpeg_progressive``) with a
-  luma-band-split scan script and optional successive approximation.
+  interval. The progressive encoder that builds the SOF2 round-trip
+  fixtures lives with the tests (``tests/media_encoders.py``).
 
 Determinism: the DCT/IDCT are float64 matrix products of a fixed 8×8
 basis followed by rounding — IEEE-deterministic on any host, so the
@@ -25,8 +25,8 @@ same payload always decodes to the same pixels (the property every
 other codec in this module guarantees, and what keeps Spark-side
 results partition-invariant).
 
-Scale shape is inherited from the caller (`multimodal.resize_images`
-/ feature extractors): the codec runs inside Arrow `mapInPandas`
+Scale shape is inherited from the caller (`multimodal.image_phash`,
+`video_fp.video_phash`): the codec runs inside Arrow `mapInPandas`
 batches, payload bytes never enter a shuffle before decode.
 """
 
@@ -734,272 +734,5 @@ def encode_jpeg(
     sos += bytes([0, 63, 0])
     out += seg(0xDA, sos)
     out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Progressive encoder (T.81 §G.1) — primarily the round-trip test rig
-# for the progressive decoder (no media libs in env to generate
-# progressive payloads otherwise), but a spec-conforming encoder in its
-# own right.
-# ---------------------------------------------------------------------------
-
-# Flat Huffman tables that include the EOBn symbols (0x10..0xE0) the
-# Annex K tables lack — progressive EOB runs > 1 cannot be coded with
-# Annex K. DC: 12 categories at 4 bits. AC: all 256 rs values, 255 at
-# 9 bits + 1 at 10 (a DHT bits byte caps at 255), so no code is
-# all-ones. Compression efficiency is irrelevant here; correctness and
-# decoder-table generality are what matter.
-_H_DC_FLAT = ([0, 0, 0, 12] + [0] * 12, list(range(12)))
-_H_AC_FLAT = ([0] * 8 + [255, 1] + [0] * 6, list(range(256)))
-
-
-def _emit_sym(bw: _BitWriter, codes: dict, sym: int) -> None:
-    ln, code = codes[sym]
-    bw.write(code, ln)
-
-
-def _flush_eob(
-    bw: _BitWriter, codes: dict, eobrun: int, be: list[int]
-) -> tuple[int, list[int]]:
-    """Emit a pending EOBn code plus the correction bits buffered for
-    the blocks inside the run (G.1.2.3)."""
-    if eobrun > 0:
-        rb = eobrun.bit_length() - 1
-        _emit_sym(bw, codes, rb << 4)
-        if rb:
-            bw.write(eobrun - (1 << rb), rb)
-        for b in be:
-            bw.write(b, 1)
-    return 0, []
-
-
-def _enc_ac_first(
-    bw: _BitWriter,
-    blocks: list[np.ndarray],
-    ss: int,
-    se: int,
-    al: int,
-    codes: dict,
-) -> None:
-    """AC first pass (Ah=0): baseline run/size coding plus EOBn runs;
-    the point transform is |v| >> Al with the sign re-applied."""
-    eobrun = 0
-    for blk in blocks:
-        r = 0
-        for k in range(ss, se + 1):
-            v = int(blk[_ZIG[k]])
-            t = (v if v >= 0 else -v) >> al
-            if t == 0:
-                r += 1
-                continue
-            if eobrun:
-                eobrun, _ = _flush_eob(bw, codes, eobrun, [])
-            while r > 15:
-                _emit_sym(bw, codes, 0xF0)
-                r -= 16
-            s = t.bit_length()
-            _emit_sym(bw, codes, (r << 4) | s)
-            mask = (1 << s) - 1
-            bw.write(t if v >= 0 else mask - t, s)
-            r = 0
-        if r > 0:
-            eobrun += 1
-            if eobrun == 0x7FFF:
-                eobrun, _ = _flush_eob(bw, codes, eobrun, [])
-    if eobrun:
-        _flush_eob(bw, codes, eobrun, [])
-
-
-def _enc_ac_refine(
-    bw: _BitWriter,
-    blocks: list[np.ndarray],
-    ss: int,
-    se: int,
-    al: int,
-    codes: dict,
-) -> None:
-    """AC refinement pass (Ah=Al+1): newly-significant coefficients as
-    run/1 codes with a sign bit; already-significant ones as buffered
-    correction bits. The ZRL flush runs at EVERY nonzero coefficient
-    (not only newly-significant ones) — that is what keeps each
-    buffered correction bit inside the 16-zero window the decoder's
-    ZRL walk covers (the subtle ordering invariant of G.1.2.3)."""
-    eobrun = 0
-    be: list[int] = []
-    for blk in blocks:
-        absv = [(abs(int(blk[_ZIG[k]])) >> al) for k in range(ss, se + 1)]
-        eob = -1
-        for i, t in enumerate(absv):
-            if t == 1:
-                eob = i
-        r = 0
-        br: list[int] = []
-        for i, t in enumerate(absv):
-            if t == 0:
-                r += 1
-                continue
-            while r > 15 and i <= eob:
-                eobrun, be = _flush_eob(bw, codes, eobrun, be)
-                _emit_sym(bw, codes, 0xF0)
-                r -= 16
-                for b in br:
-                    bw.write(b, 1)
-                br = []
-            if t > 1:
-                br.append(t & 1)
-                continue
-            eobrun, be = _flush_eob(bw, codes, eobrun, be)
-            _emit_sym(bw, codes, (r << 4) | 1)
-            bw.write(1 if int(blk[_ZIG[ss + i]]) >= 0 else 0, 1)
-            for b in br:
-                bw.write(b, 1)
-            br = []
-            r = 0
-        if r > 0 or br:
-            eobrun += 1
-            be.extend(br)
-            if eobrun == 0x7FFF:
-                eobrun, be = _flush_eob(bw, codes, eobrun, be)
-    if eobrun:
-        _flush_eob(bw, codes, eobrun, be)
-
-
-def encode_jpeg_progressive(
-    px: np.ndarray,
-    quality: int = 90,
-    successive: bool = True,
-    subsampling: str = "444",
-) -> bytes:
-    """``(h, w, 3)`` uint8 RGB (or ``(h, w)`` grayscale) → progressive
-    JFIF bytes (SOF2). Scan script: one interleaved DC scan, per-
-    component AC scans with the luma band split in two (spectral
-    selection); with ``successive=True`` every first pass runs at
-    Al=1 and is followed by DC/AC refinement scans (successive
-    approximation) — together the scans exercise every branch of the
-    progressive decoder: band limits, EOB runs, correction bits, the
-    ZRL-with-history walk."""
-    (gray, h, w, factors, qblocks, ql, qc, hmax, vmax, mcux, mcuy) = (
-        _prepare_qblocks(px, quality, subsampling)
-    )
-    nf = 1 if gray else 3
-    dc_codes = _canonical_codes(*_H_DC_FLAT)
-    ac_codes = _canonical_codes(*_H_AC_FLAT)
-
-    def comp_blocks(ci: int) -> list[np.ndarray]:
-        ch, cv = factors[ci]
-        nbx = -(-(-(-w * ch // hmax)) // 8)
-        nby = -(-(-(-h * cv // vmax)) // 8)
-        return [
-            qblocks[ci][by, bx].reshape(64)
-            for by in range(nby)
-            for bx in range(nbx)
-        ]
-
-    def dc_scan(bw: _BitWriter, al: int) -> None:
-        pred = [0] * nf
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for ci in range(nf):
-                    ch, cv = factors[ci]
-                    for by in range(cv):
-                        for bx in range(ch):
-                            dc = int(qblocks[ci][my * cv + by, mx * ch + bx, 0, 0])
-                            t = dc >> al  # arithmetic shift per spec
-                            diff = t - pred[ci]
-                            pred[ci] = t
-                            s = abs(diff).bit_length()
-                            _emit_sym(bw, dc_codes, s)
-                            if s:
-                                bw.write(
-                                    diff if diff >= 0 else diff + (1 << s) - 1,
-                                    s,
-                                )
-
-    def dc_refine(bw: _BitWriter, al: int) -> None:
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for ci in range(nf):
-                    ch, cv = factors[ci]
-                    for by in range(cv):
-                        for bx in range(ch):
-                            dc = int(qblocks[ci][my * cv + by, mx * ch + bx, 0, 0])
-                            bw.write((dc >> al) & 1, 1)
-
-    # scan script: (kind, comps, ss, se, ah, al). The successive
-    # script mirrors libjpeg's standard one — AC first passes at Al=2,
-    # then a 2→1 refinement over the FULL band (deliberately not the
-    # same band split as the first passes) and a final 1→0 pass — so a
-    # round-trip exercises multi-level refinement and band-boundary
-    # independence in the decoder, not just a single correction pass.
-    scans: list[tuple]
-    if not successive:
-        scans = [("dc_first", list(range(nf)), 0, 0, 0, 0)]
-        ac_bands = [(0, 1, 5), (0, 6, 63)] + (
-            [(1, 1, 63), (2, 1, 63)] if not gray else []
-        )
-        for ci, ss, se in ac_bands:
-            scans.append(("ac_first", [ci], ss, se, 0, 0))
-    else:
-        scans = [("dc_first", list(range(nf)), 0, 0, 0, 1)]
-        if gray:
-            scans += [
-                ("ac_first", [0], 1, 5, 0, 2),
-                ("ac_first", [0], 6, 63, 0, 2),
-                ("ac_refine", [0], 1, 63, 2, 1),
-                ("dc_refine", [0], 0, 0, 1, 0),
-                ("ac_refine", [0], 1, 63, 1, 0),
-            ]
-        else:
-            scans += [
-                ("ac_first", [0], 1, 5, 0, 2),
-                ("ac_first", [1], 1, 63, 0, 1),
-                ("ac_first", [2], 1, 63, 0, 1),
-                ("ac_first", [0], 6, 63, 0, 2),
-                ("ac_refine", [0], 1, 63, 2, 1),
-                ("dc_refine", list(range(nf)), 0, 0, 1, 0),
-                ("ac_refine", [2], 1, 63, 1, 0),
-                ("ac_refine", [1], 1, 63, 1, 0),
-                ("ac_refine", [0], 1, 63, 1, 0),
-            ]
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, bytes([0x00]) + bytes(ql.reshape(64)[_ZIG].astype(np.uint8)))
-    if not gray:
-        out += seg(
-            0xDB, bytes([0x01]) + bytes(qc.reshape(64)[_ZIG].astype(np.uint8))
-        )
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([nf])
-    for c in range(nf):
-        ch, cv = factors[c]
-        sof += bytes([c + 1, (ch << 4) | cv, 0 if c == 0 else 1])
-    out += seg(0xC2, sof)
-    bits_dc, vals_dc = _H_DC_FLAT
-    bits_ac, vals_ac = _H_AC_FLAT
-    out += seg(0xC4, bytes([0x00]) + bytes(bits_dc) + bytes(vals_dc))
-    out += seg(0xC4, bytes([0x10]) + bytes(bits_ac) + bytes(vals_ac))
-
-    for kind, cis, ss, se, ah, al in scans:
-        sos = bytes([len(cis)])
-        for ci in cis:
-            sos += bytes([ci + 1, 0x00])  # DC table 0 / AC table 0
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += seg(0xDA, sos)
-        bw = _BitWriter()
-        if kind == "dc_first":
-            dc_scan(bw, al)
-        elif kind == "dc_refine":
-            dc_refine(bw, al)
-        elif kind == "ac_first":
-            _enc_ac_first(bw, comp_blocks(cis[0]), ss, se, al, ac_codes)
-        else:
-            _enc_ac_refine(bw, comp_blocks(cis[0]), ss, se, al, ac_codes)
-        bw.flush()
-        out += bw.out
     out += b"\xff\xd9"
     return bytes(out)

@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import materialize
@@ -68,9 +68,8 @@ def _grams_over_padded(padded: Column, n_tokens: Column, n: int) -> Column:
     lambdas, so an inline ``concat(pad, split(...))`` here would be
     RE-EVALUATED PER POSITION by the slice/element_at below — O(len²)
     per document (measured ~8× on the sf0.1 fixture corpus). The
-    train/score paths project the padded array first; ``doc_ngrams``
-    keeps the inline composition for expression-level tests on small
-    rows."""
+    train/score paths project the padded array first
+    (``_exploded_grams``)."""
     # positions n..len(padded) (1-based) each end one n-gram. The
     # zero-token guard matters: F.sequence(n, n-1) would generate a
     # DESCENDING [n, n-1] (sequence's default step is sign-inferred),
@@ -118,26 +117,6 @@ def _exploded_grams(
             expl(_grams_over_padded(F.col("_p"), F.col("_nt"), n)).alias("g"),
         )
     return ex.select(*keep, F.col("g.ctx").alias("ctx"), F.col("g.word").alias("word"))
-
-
-def doc_ngrams(text: Column, n: int) -> Column:
-    """Array of ``struct<ctx string, word string>`` for every n-gram in
-    the document, BOS-padded so the first word is conditioned on a
-    start context (n-1 BOS tokens). ``ctx`` is the space-joined n-1
-    preceding tokens; for a unigram model ``ctx`` is the empty string.
-    A document with zero tokens yields an empty array.
-
-    Expression-level form for composition/tests; the train/score hot
-    paths use ``_exploded_grams`` (projected token/padded columns) —
-    this inline composition re-derives the token array per position
-    inside the lambda, which is quadratic in document length."""
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    toks = lm_tokens(text)
-    if n == 1:
-        return _unigrams(toks)
-    pad = F.array(*[F.lit(BOS)] * (n - 1))
-    return _grams_over_padded(F.concat(pad, toks), F.size(toks), n)
 
 
 @dataclass
@@ -260,140 +239,6 @@ def score_perplexity(
             "avg_neg_logp", F.round("avg_neg_logp", round_to)
         ).withColumn("perplexity", F.round("perplexity", round_to))
     return scored
-
-
-def perplexity_buckets(
-    scored: DataFrame,
-    head_frac: float = 0.1,
-    tail_frac: float = 0.3,
-    by: str | None = None,
-    ppl_col: str = "perplexity",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """CCNet-style head/middle/tail labeling: rank documents by
-    perplexity (lower = closer to the trusted training distribution)
-    within each ``by`` group (typically language) and cut at the given
-    cumulative fractions — head = best ``head_frac``, tail = worst
-    ``tail_frac``, middle between. Adds ``ppl_rank`` (cumulative
-    fraction in (0,1]) and ``ppl_bucket``.
-
-    NULL perplexities (empty docs) bucket as 'tail' — an empty doc is
-    never training-worthy — and sort last deterministically.
-
-    One window pass; the ``by`` partitioning keys the shuffle, so
-    grouping by language spreads the sort across the cluster. The
-    ``id_col`` tiebreak makes ranks total and reruns bit-identical.
-    (With ``by=None`` this is a single global sort partition — fine
-    for a sample, wrong for a full corpus; pass a grouping column at
-    scale, which is also what CCNet's per-language buckets want.)
-    """
-    if not (0 <= head_frac and 0 <= tail_frac and head_frac + tail_frac <= 1):
-        raise ValueError(
-            f"fractions must be >= 0 and sum <= 1, got {head_frac}, {tail_frac}"
-        )
-    part = [by] if by is not None else []
-    w = Window.partitionBy(*part).orderBy(
-        F.col(ppl_col).asc_nulls_last(), F.col(id_col)
-    )
-    ranked = scored.withColumn(
-        "ppl_rank",
-        F.cume_dist().over(w),
-    )
-    return ranked.withColumn(
-        "ppl_bucket",
-        F.when(F.col(ppl_col).isNull(), F.lit("tail"))
-        .when(F.col("ppl_rank") <= F.lit(float(head_frac)), F.lit("head"))
-        .when(F.col("ppl_rank") > F.lit(1.0 - float(tail_frac)), F.lit("tail"))
-        .otherwise(F.lit("middle")),
-    )
-
-
-def contrastive_score(
-    docs: DataFrame,
-    lm_target,
-    lm_general,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_to: int | None = 4,
-) -> DataFrame:
-    """DSIR-style importance score: ``avg log p_target − avg log
-    p_general`` per document (positive = the doc looks more like the
-    target domain than the general corpus — the ranking key for
-    importance-resampled data selection, Xie et al. 2023,
-    arXiv:2302.03169). Both models must share ``n`` (same gram stream;
-    enforced). Returns ``(id, n_grams, target_anl, general_anl,
-    importance)``; token-free docs carry NULLs throughout.
-
-    Cost: the gram explode runs ONCE — both models join onto the same
-    exploded stream (four broadcast joins total), one per-doc
-    aggregate. Scoring two LMs costs one corpus scan, not two."""
-    if lm_target.n != lm_general.n:
-        raise ValueError(
-            f"models disagree on n: {lm_target.n} vs {lm_general.n}"
-        )
-    base = _exploded_grams(docs, lm_target.n, text_col, keep=[id_col], outer=True)
-
-    def logp(lm, suffix: str):
-        denom_k = float(lm.k) * (lm.vocab_size + 1)
-        return F.when(
-            F.col("word").isNotNull(),
-            F.log(
-                (F.coalesce(F.col(f"c_cw{suffix}"), F.lit(0)) + F.lit(float(lm.k)))
-                / (F.coalesce(F.col(f"c_ctx{suffix}"), F.lit(0)) + F.lit(denom_k))
-            ),
-        )
-
-    joined = (
-        base.join(
-            F.broadcast(
-                lm_target.grams.select(
-                    "ctx", "word", F.col("c_cw").alias("c_cw_t")
-                )
-            ),
-            ["ctx", "word"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                lm_target.contexts.select("ctx", F.col("c_ctx").alias("c_ctx_t"))
-            ),
-            ["ctx"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                lm_general.grams.select(
-                    "ctx", "word", F.col("c_cw").alias("c_cw_g")
-                )
-            ),
-            ["ctx", "word"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                lm_general.contexts.select("ctx", F.col("c_ctx").alias("c_ctx_g"))
-            ),
-            ["ctx"],
-            "left",
-        )
-    )
-    out = (
-        joined.withColumn("_lp_t", logp(lm_target, "_t"))
-        .withColumn("_lp_g", logp(lm_general, "_g"))
-        .groupBy(id_col)
-        .agg(
-            F.count("_lp_t").alias("n_grams"),
-            (-F.avg("_lp_t")).alias("target_anl"),
-            (-F.avg("_lp_g")).alias("general_anl"),
-        )
-        .withColumn(
-            "importance", F.col("general_anl") - F.col("target_anl")
-        )
-    )
-    if round_to is not None:
-        for c in ("target_anl", "general_anl", "importance"):
-            out = out.withColumn(c, F.round(c, round_to))
-    return out
 
 
 def save_ngram_lm(lm: NgramLM, path: str) -> None:

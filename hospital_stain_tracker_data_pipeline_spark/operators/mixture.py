@@ -143,33 +143,6 @@ def plan_token_mixture(
     ]
 
 
-def temperature_weights(
-    stats: DataFrame, alpha: float = 0.3
-) -> dict[str, float]:
-    """Temperature-scaled source weights ``p_s ∝ n_s^alpha`` — the
-    standard multilingual/multi-source rebalancing knob (published in
-    the mBERT/XLM-R/mT5 line of work): ``alpha=1`` keeps the natural
-    proportional mixture, ``alpha=0`` is uniform, and intermediate
-    values upsample small sources at a controlled cost to the head.
-
-    Feed the result straight into ``plan_token_mixture(weights=...)``
-    — composition, not a separate planner, so caps/water-filling/
-    sampling behave identically. Driver-side over the k-row inventory
-    aggregate (never the corpus). Weights are normalized to sum to 1
-    for report readability; the planner renormalizes anyway. Sources
-    with zero tokens get weight 0 (they have nothing to sample)."""
-    if alpha < 0:
-        raise ValueError(f"alpha must be >= 0, got {alpha}")
-    rows = {r["source"]: int(r["n_tokens"] or 0) for r in stats.collect()}
-    raw = {
-        s: (float(n) ** alpha if n > 0 else 0.0) for s, n in rows.items()
-    }
-    total = sum(raw.values())
-    if total <= 0:
-        return {s: 0.0 for s in rows}
-    return {s: v / total for s, v in sorted(raw.items())}
-
-
 def sample_token_mixture(
     docs: DataFrame,
     plan: list[SourceAllocation],

@@ -30,7 +30,6 @@ early and dropping the binary.
 
 from __future__ import annotations
 
-import bisect
 import hashlib
 import struct
 import zlib
@@ -201,21 +200,6 @@ def decode_image_batch(pdf: pd.DataFrame, fake_decode: bool) -> pd.DataFrame:
     return pd.DataFrame(out, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields])
 
 
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("channels", T.IntegerType(), True),
-        T.StructField("bits_per_sample", T.IntegerType(), True),
-        T.StructField("n_frames", T.LongType(), True),
-        T.StructField("duration_s", T.DoubleType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("sha256", T.StringType(), True),
-    ]
-)
-
-
 def _wav_layout(raw: bytes) -> tuple[dict, int, int] | None:
     """Single RIFF/WAVE chunk walk shared by the sniffer and the sample
     decoder (one parser, no sniff-vs-decode divergence): returns
@@ -316,80 +300,6 @@ def encode_wav(samples: np.ndarray, rate: int) -> bytes:
     )
 
 
-RESAMPLED_AUDIO_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("src_rate", T.IntegerType(), True),
-        T.StructField("rate", T.IntegerType(), False),
-        T.StructField("n_frames", T.LongType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
-
-def resample_audio(
-    media: DataFrame, target_rate: int, fake_decode: bool = False
-) -> DataFrame:
-    """Audio resampling, REAL end-to-end for 16-bit PCM WAV and (since
-    round 6) FLAC (the training-pipeline normalization step before
-    feature extraction — e.g. everything to 16 kHz): decode samples
-    (raw PCM, or the native rice/LPC FLAC decoder in
-    ``operators/flac.py``), nearest-neighbor resample the time axis
-    with the same exact integer index map the image resize uses,
-    re-encode in the source container (WAV → WAV, FLAC → FLAC).
-    Other payloads fall to
-    the deterministic stand-in under ``fake_decode=True`` or raise the
-    documented stub otherwise. Same mapInPandas contract as every media
-    op: binary in, binary out, payload never shuffled beforehand."""
-    from .flac import decode_flac_samples, encode_flac
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                dec = decode_wav_samples(raw)
-                flac_dec = None if dec is not None else decode_flac_samples(raw)
-                if dec is not None or flac_dec is not None:
-                    src_rate, samples = dec if dec is not None else flac_dec
-                    n_src = samples.shape[0]
-                    n_out = max(1, (n_src * target_rate) // src_rate)
-                    idx = (np.arange(n_out, dtype=np.int64) * n_src) // n_out
-                    if dec is not None:
-                        body = encode_wav(samples[idx], target_rate)
-                    else:
-                        body = encode_flac(samples[idx], target_rate)
-                elif fake_decode:
-                    seed = hashlib.sha256(raw).digest()
-                    src_rate, n_out = None, 1 + seed[0]
-                    body = (seed * (n_out * 2 // len(seed) + 1))[: n_out * 2]
-                else:
-                    raise NotImplementedError(
-                        "native sample decode covers 16-bit PCM WAV and "
-                        "FLAC; resampling this payload (mp3/ogg/float "
-                        "WAV/...) "
-                        "requires an audio library, not available in this "
-                        "environment — pass fake_decode=True for the "
-                        "deterministic stand-in payload"
-                    )
-                out.append(
-                    {
-                        "media_id": media_id,
-                        "src_rate": src_rate,
-                        "rate": target_rate,
-                        "n_frames": n_out,
-                        "payload": body,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in RESAMPLED_AUDIO_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=RESAMPLED_AUDIO_SCHEMA
-    )
-
-
 # (samples per frame, rate divisor) per MPEG version id for Layer III
 _MP3_BITRATES_V1 = (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
 _MP3_BITRATES_V2 = (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160)
@@ -462,79 +372,6 @@ def sniff_mp3(raw: bytes) -> dict | None:
         "n_frames": n_samples,
         "duration_s": n_samples / rate,
     }
-
-
-def extract_audio_features(media: DataFrame, fake_decode: bool = False) -> DataFrame:
-    """Audio feature extraction over opaque payloads, same Arrow
-    ``mapInPandas`` shape as the image path: WAV headers decode for
-    REAL (stdlib RIFF walk), FLAC STREAMINFO likewise
-    (``flac.sniff_flac``); other codecs (mp3/ogg) would need an
-    audio lib — absent here — so unrecognized payloads raise unless
-    ``fake_decode=True`` (payload-hash-seeded fake features)."""
-    from .flac import sniff_flac
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, payload, mime in zip(
-                pdf["media_id"], pdf["payload"], pdf["mime"]
-            ):
-                raw = bytes(payload) if payload is not None else b""
-                digest = hashlib.sha256(raw).hexdigest()
-                sniffed = (
-                    sniff_wav(raw)
-                    or sniff_flac(raw)
-                    or sniff_mp3(raw)
-                    or sniff_ogg_vorbis(raw)
-                )
-                if sniffed is None:
-                    if not fake_decode:
-                        raise NotImplementedError(
-                            "payload is not a RIFF/WAVE, FLAC, Layer-III "
-                            "MPEG, or Ogg/Vorbis container (their header "
-                            "decodes are built in); other codecs require an "
-                            "audio library, not available in this environment "
-                            "— pass fake_decode=True for the deterministic fake"
-                        )
-                    seed = int(digest[:8], 16)
-                    rate = 8000 + (seed % 5) * 8000
-                    n_frames = 1 + seed % 480_000
-                    sniffed = {
-                        "mime": mime,
-                        "sample_rate": rate,
-                        "channels": 1 + (seed >> 4) % 2,
-                        "bits_per_sample": 16,
-                        "n_frames": n_frames,
-                        "duration_s": n_frames / rate,
-                    }
-                out.append(
-                    {
-                        "media_id": media_id,
-                        **sniffed,
-                        "n_bytes": len(raw),
-                        "sha256": digest,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields]
-            )
-
-    return media.select(
-        "media_id", "payload", F.col("meta.mime").alias("mime")
-    ).mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("src_width", T.IntegerType(), True),
-        T.StructField("src_height", T.IntegerType(), True),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
 
 
 def decode_bmp_pixels(raw: bytes) -> np.ndarray | None:
@@ -799,97 +636,6 @@ def encode_bmp(px: np.ndarray) -> bytes:
     )
 
 
-def resize_images(
-    media: DataFrame, width: int, height: int, fake_decode: bool = False
-) -> DataFrame:
-    """Image resize, same Arrow ``mapInPandas`` shape as the extractors.
-
-    Four formats are real END-TO-END, no image library involved,
-    running regardless of ``fake_decode``: an uncompressed 24-bit BMP
-    (``decode_bmp_pixels`` → ``resize_rgb_nearest`` → ``encode_bmp``),
-    a PNG — complete pixel-layer coverage: all color types, depths
-    1-16, plain or Adam7-interlaced (``decode_png_pixels`` — stdlib
-    zlib inflate + all five scanline filters — re-encoded 8-bit
-    truecolor via ``encode_png``), JPEG — baseline sequential AND
-    progressive (``jpeg.decode_jpeg_pixels`` — pure-numpy Huffman
-    + IDCT, 4:4:4 / 4:2:2 / 4:2:0 / grayscale / restart markers /
-    spectral-selection + successive-approximation scans —
-    re-encoded 4:4:4 baseline via ``jpeg.encode_jpeg``), and GIF
-    (``decode_gif_pixels`` — LZW + palette + interlace; the resized
-    frame re-encodes as lossless PNG, since a GIF writer would add an
-    LZW compressor for no analytical gain). Remaining exotica
-    (arithmetic-coded/12-bit/CMYK JPEG) fall through: source
-    dimensions still come from the real header sniff, but the output
-    payload is a deterministic payload-hash-derived stand-in
-    (3 bytes/px RGB) when ``fake_decode=True`` and an explicit
-    NotImplementedError otherwise. The Spark-side contract — binary
-    in, binary out, payload never entering a shuffle before the
-    resize — is identical on all paths."""
-    from .jpeg import decode_jpeg_pixels, encode_jpeg
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                sniffed = sniff_image(raw)
-                mime, sw, sh = sniffed if sniffed else (None, None, None)
-                px = decode_bmp_pixels(raw)
-                if px is not None:
-                    body = encode_bmp(resize_rgb_nearest(px, width, height))
-                elif (png := decode_png_pixels(raw)) is not None:
-                    body = encode_png(resize_rgb_nearest(png, width, height))
-                elif (jp := decode_jpeg_pixels(raw)) is not None:
-                    body = encode_jpeg(resize_rgb_nearest(jp, width, height))
-                elif (gf := decode_gif_pixels(raw)) is not None:
-                    body = encode_png(resize_rgb_nearest(gf, width, height))
-                elif fake_decode:
-                    seed = hashlib.sha256(raw).digest()
-                    n = width * height * 3
-                    body = (seed * (n // len(seed) + 1))[:n]
-                else:
-                    raise NotImplementedError(
-                        "native pixel decode covers uncompressed 24-bit BMP, "
-                        "PNG (all color types/depths), baseline-sequential "
-                        "and progressive JPEG, and GIF; resampling this "
-                        "payload (arithmetic-coded/12-bit/CMYK JPEG, ...) "
-                        "requires "
-                        "PIL/cv2, not available in this environment — pass "
-                        "fake_decode=True for the deterministic stand-in "
-                        "payload"
-                    )
-                out.append(
-                    {
-                        "media_id": media_id,
-                        "mime": mime,
-                        "src_width": sw,
-                        "src_height": sh,
-                        "width": width,
-                        "height": height,
-                        "payload": body,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in RESIZED_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=RESIZED_SCHEMA
-    )
-
-
-VIDEO_FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("duration_s", T.DoubleType(), True),
-        T.StructField("frame_idx", T.IntegerType(), True),
-        T.StructField("frame_ts_s", T.DoubleType(), True),
-        T.StructField("frame", T.BinaryType(), True),
-    ]
-)
-
-
 def sniff_mp4(raw: bytes) -> dict | None:
     """MP4/ISO-BMFF sniff, stdlib-only: ``ftyp`` brand → mime, and the
     ``moov``→``mvhd`` box (version 0 or 1) → timescale/duration. None
@@ -941,86 +687,6 @@ def sniff_mp4(raw: bytes) -> dict | None:
     return out
 
 
-def sample_video_frames(
-    media: DataFrame, stride_s: float = 1.0, fake_decode: bool = False
-) -> DataFrame:
-    """Frame sampling over video payloads — the 1→N ``mapInPandas``
-    shape (one input row explodes into one row per sampled timestamp).
-
-    REAL end-to-end for RIFF/AVI MJPEG (``sniff_avi``) AND for MP4
-    tracks whose sample entry is a JPEG-family format
-    (``mp4_jpeg_track`` — full stsd/stsz/stsc/stco/stts resolution):
-    the sampled timestamp maps to a frame (header fps for AVI, exact
-    stts decode times for MP4) and ``frame`` carries the ACTUAL JPEG
-    bytes from the container — decodable by the library's own JPEG
-    codec (``operators/jpeg.py``), no media lib involved. For
-    H.264/H.265 MP4 tracks the header still decodes for real
-    (duration → sample count) but frame extraction needs an entropy
-    decoder — absent here — so those frame bytes are a deterministic
-    payload-hash fake behind ``fake_decode=True`` and NULL otherwise.
-    A payload in neither container raises unless ``fake_decode=True``
-    (2-second fake duration)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                avi = sniff_avi(raw)
-                sniffed = avi or sniff_mp4(raw)
-                mp4_track = None if avi else mp4_jpeg_track(raw)
-                if sniffed is None:
-                    if not fake_decode:
-                        raise NotImplementedError(
-                            "payload is not an AVI or ISO-BMFF (MP4) "
-                            "container; AVI/MJPEG frames extract natively, "
-                            "MP4 frame decode requires PyAV/ffmpeg — pass "
-                            "fake_decode=True for the deterministic fake"
-                        )
-                    sniffed = {"mime": "video/unknown", "duration_s": 2.0}
-                dur = sniffed["duration_s"] or 0.0
-                n = max(1, int(dur / stride_s) + (1 if dur % stride_s else 0))
-                chunks = (avi or {}).get("frames") or []
-                fps = (avi or {}).get("fps") or 0.0
-                for idx in range(n):
-                    ts = idx * stride_s
-                    frame = None
-                    if chunks and fps:
-                        fi = min(int(round(ts * fps)), len(chunks) - 1)
-                        off, ln = chunks[fi]
-                        frame = raw[off:off + ln]
-                    elif mp4_track is not None:
-                        # last sample whose decode time <= ts — decode
-                        # times ascend, so binary search instead of a
-                        # linear scan (O(n_samples·log n_frames), not
-                        # O(n_samples·n_frames) on long tracks)
-                        times = mp4_track["times_s"]
-                        fi = max(0, bisect.bisect_right(times, ts) - 1)
-                        off, ln = mp4_track["samples"][fi]
-                        frame = raw[off:off + ln]
-                    elif fake_decode:
-                        frame = hashlib.sha256(
-                            raw + str(idx).encode()
-                        ).digest()[:16]
-                    out.append(
-                        {
-                            "media_id": media_id,
-                            "mime": sniffed["mime"],
-                            "duration_s": sniffed["duration_s"],
-                            "frame_idx": idx,
-                            "frame_ts_s": ts,
-                            "frame": frame,
-                        }
-                    )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in VIDEO_FRAMES_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=VIDEO_FRAMES_SCHEMA
-    )
-
-
 def extract_image_features(media: DataFrame, fake_decode: bool = False) -> DataFrame:
     """mapInPandas feature extraction over media payloads: Arrow batches
     in, typed feature rows out; binary column dropped on the way out so
@@ -1036,108 +702,6 @@ def extract_image_features(media: DataFrame, fake_decode: bool = False) -> DataF
     ).mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
 
 
-PIXEL_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("decoded", T.BooleanType(), False),
-        T.StructField("mean_r", T.DoubleType(), True),
-        T.StructField("mean_g", T.DoubleType(), True),
-        T.StructField("mean_b", T.DoubleType(), True),
-        T.StructField("mean_luma", T.DoubleType(), True),
-        T.StructField("std_luma", T.DoubleType(), True),
-    ]
-)
-
-
-def extract_pixel_stats(media: DataFrame, fake_decode: bool = False) -> DataFrame:
-    """REAL pixel-level feature extraction — per-channel means + luma
-    mean/stddev computed from actually-decoded pixels for every format
-    the native codecs cover (uncompressed 24-bit BMP, PNG at every
-    color type/depth, baseline sequential JPEG incl.
-    4:2:0/grayscale/restarts, GIF incl. interlace);
-    ``decoded=True`` marks rows whose stats came from real pixels.
-    The training-data use case: pixel statistics drive quality filters
-    (all-black/blown-out frames, low-variance screenshots) the same way
-    text quality scores gate documents — and they must come from REAL
-    decoded planes to mean anything.
-
-    Payloads outside the native envelope follow the module's standard
-    policy: deterministic payload-hash-seeded stand-in stats (with
-    ``decoded=False``) under ``fake_decode=True``, an explicit
-    NotImplementedError otherwise.
-
-    Same scale shape as every extractor here: Arrow-batched
-    ``mapInPandas``, one decode per payload, binary column dropped on
-    the way out so downstream shuffles carry only the slim stats."""
-    from .jpeg import decode_jpeg_pixels
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                sniffed = sniff_image(raw)
-                mime = sniffed[0] if sniffed else None
-                px = decode_bmp_pixels(raw)
-                if px is None:
-                    px = decode_png_pixels(raw)
-                if px is None:
-                    px = decode_jpeg_pixels(raw)
-                if px is None:
-                    px = decode_gif_pixels(raw)
-                if px is not None:
-                    f = px.astype(np.float64)
-                    luma = (
-                        0.299 * f[..., 0] + 0.587 * f[..., 1] + 0.114 * f[..., 2]
-                    )
-                    row = {
-                        "media_id": media_id,
-                        "mime": mime,
-                        "width": int(px.shape[1]),
-                        "height": int(px.shape[0]),
-                        "decoded": True,
-                        "mean_r": float(f[..., 0].mean()),
-                        "mean_g": float(f[..., 1].mean()),
-                        "mean_b": float(f[..., 2].mean()),
-                        "mean_luma": float(luma.mean()),
-                        "std_luma": float(luma.std()),
-                    }
-                elif fake_decode:
-                    seed = int(hashlib.sha256(raw).hexdigest()[:8], 16)
-                    row = {
-                        "media_id": media_id,
-                        "mime": mime,
-                        "width": 64 + seed % 1024,
-                        "height": 64 + (seed >> 10) % 1024,
-                        "decoded": False,
-                        "mean_r": float(seed % 256),
-                        "mean_g": float((seed >> 8) % 256),
-                        "mean_b": float((seed >> 16) % 256),
-                        "mean_luma": float((seed >> 24) % 256),
-                        "std_luma": 0.0,
-                    }
-                else:
-                    raise NotImplementedError(
-                        "pixel statistics need a decodable payload "
-                        "(uncompressed 24-bit BMP, PNG, GIF, "
-                        "baseline sequential JPEG are native); this payload "
-                        "requires PIL/cv2, not available in this environment "
-                        "— pass fake_decode=True for the deterministic "
-                        "stand-in"
-                    )
-                out.append(row)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in PIXEL_STATS_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=PIXEL_STATS_SCHEMA
-    )
-
-
 IMAGE_PHASH_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -1150,7 +714,7 @@ IMAGE_PHASH_SCHEMA = T.StructType(
 
 def _decode_any_pixels(raw: bytes) -> np.ndarray | None:
     """One dispatch for every native pixel decoder (BMP → PNG → JPEG →
-    GIF), the decode chain ``extract_pixel_stats`` runs."""
+    GIF)."""
     from .jpeg import decode_jpeg_pixels
 
     px = decode_bmp_pixels(raw)
@@ -1219,7 +783,7 @@ def image_phash(
     band extraction is sign-safe).
 
     Decode policy is the module standard: real pixels for the native
-    codecs (BMP/PNG/JPEG/GIF — same chain as ``extract_pixel_stats``),
+    codecs (BMP/PNG/JPEG/GIF — the ``_decode_any_pixels`` chain),
     deterministic payload-hash stand-in bits with ``decoded=False``
     under ``fake_decode=True``, loud NotImplementedError otherwise.
     NULL payloads hash to NULL (they cannot pair).
@@ -1710,161 +1274,6 @@ def mp4_jpeg_track(raw: bytes) -> dict | None:
     return None
 
 
-def build_mjpeg_mp4(
-    frames: list[bytes], width: int, height: int, fps: float = 10.0
-) -> bytes:
-    """Assemble JPEG frames into a minimal ISO-BMFF file with a
-    'jpeg'-coded video track (ftyp + mdat + moov with the full stbl:
-    stsd/stts/stsc/stsz/stco) — the write-side of the real MP4 frame
-    path and its test rig. One sample per chunk; absolute stco offsets
-    point into the mdat that precedes moov."""
-    if not frames:
-        raise ValueError("at least one frame required")
-    scale = 1000
-    delta = int(round(scale / fps))
-
-    def box(typ: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", len(payload) + 8) + typ + payload
-
-    ftyp = box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2")
-    mdat_payload = b"".join(frames)
-    offsets = []
-    off = len(ftyp) + 8
-    for f in frames:
-        offsets.append(off)
-        off += len(f)
-    mdat = box(b"mdat", mdat_payload)
-    n = len(frames)
-    dur = n * delta
-    full = b"\x00\x00\x00\x00"  # version+flags
-    mvhd = box(
-        b"mvhd", full + bytes(8) + struct.pack(">II", scale, dur) + bytes(80)
-    )
-    tkhd = box(b"tkhd", full + bytes(92))
-    mdhd = box(
-        b"mdhd", full + bytes(8) + struct.pack(">II", scale, dur) + bytes(4)
-    )
-    hdlr = box(b"hdlr", full + bytes(4) + b"vide" + bytes(12) + b"\x00")
-    entry = (
-        struct.pack(">I", 86) + b"jpeg" + bytes(6) + struct.pack(">H", 1)
-        + bytes(16) + struct.pack(">HH", width, height) + bytes(50)
-    )
-    stsd = box(b"stsd", full + struct.pack(">I", 1) + entry)
-    stts = box(b"stts", full + struct.pack(">III", 1, n, delta))
-    stsc = box(b"stsc", full + struct.pack(">IIII", 1, 1, 1, 1))
-    stsz = box(
-        b"stsz",
-        full + struct.pack(">II", 0, n)
-        + b"".join(struct.pack(">I", len(f)) for f in frames),
-    )
-    stco = box(
-        b"stco",
-        full + struct.pack(">I", n)
-        + b"".join(struct.pack(">I", o) for o in offsets),
-    )
-    stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
-    minf = box(b"minf", stbl)
-    mdia = box(b"mdia", mdhd + hdlr + minf)
-    trak = box(b"trak", tkhd + mdia)
-    moov = box(b"moov", mvhd + trak)
-    return ftyp + mdat + moov
-
-
-VIDEO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("fps", T.DoubleType(), True),
-        T.StructField("n_frames", T.LongType(), True),
-        T.StructField("duration_s", T.DoubleType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("sha256", T.StringType(), True),
-    ]
-)
-
-
-def extract_video_features(
-    media: DataFrame, fake_decode: bool = False
-) -> DataFrame:
-    """Video metadata extraction — the third leg of the feature trio
-    (image/audio/video), same Arrow ``mapInPandas`` shape: AVI decodes
-    fully for real (avih dims/fps/frame count + movi chunk count);
-    ISO-BMFF decodes duration for real (mvhd) plus, when a JPEG-coded
-    track exists, exact frame count/fps from its sample tables (dims
-    stay NULL for MP4 — they live in codec-specific sample-entry
-    extensions a header walk shouldn't guess at). Unrecognized
-    payloads raise unless ``fake_decode=True``."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                digest = hashlib.sha256(raw).hexdigest()
-                avi = sniff_avi(raw)
-                row = None
-                if avi is not None:
-                    n = len(avi["frames"]) or avi["n_frames"]
-                    row = {
-                        "mime": avi["mime"],
-                        "width": avi["width"],
-                        "height": avi["height"],
-                        "fps": avi["fps"],
-                        "n_frames": n,
-                        "duration_s": avi["duration_s"],
-                    }
-                else:
-                    mp4 = sniff_mp4(raw)
-                    if mp4 is not None:
-                        track = mp4_jpeg_track(raw)
-                        n_frames = fps = None
-                        if track is not None:
-                            n_frames = len(track["samples"])
-                            ts = track["times_s"]
-                            if len(ts) > 1 and ts[1] > ts[0]:
-                                fps = 1.0 / (ts[1] - ts[0])
-                        row = {
-                            "mime": mp4["mime"],
-                            "width": None,
-                            "height": None,
-                            "fps": fps,
-                            "n_frames": n_frames,
-                            "duration_s": mp4["duration_s"],
-                        }
-                if row is None:
-                    if not fake_decode:
-                        raise NotImplementedError(
-                            "payload is not an AVI or ISO-BMFF container — "
-                            "pass fake_decode=True for the deterministic fake"
-                        )
-                    seed = int(digest[:8], 16)
-                    row = {
-                        "mime": "video/unknown",
-                        "width": 160 + seed % 640,
-                        "height": 120 + (seed >> 8) % 480,
-                        "fps": float(10 + seed % 20),
-                        "n_frames": 10 + seed % 100,
-                        "duration_s": 2.0,
-                    }
-                out.append(
-                    {
-                        "media_id": media_id,
-                        **row,
-                        "n_bytes": len(raw),
-                        "sha256": digest,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in VIDEO_FEATURES_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=VIDEO_FEATURES_SCHEMA
-    )
-
-
 def _first_jpeg_sof(raw: bytes) -> tuple[int | None, int | None]:
     """(SOF marker byte, sample precision) from a real marker walk —
     the header-only probe of what ``decode_jpeg_pixels`` will accept
@@ -1916,19 +1325,9 @@ def _native_image(raw: bytes, mime: str) -> bool:
     return False
 
 
-CLASSIFY_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), True),
-        T.StructField("modality", T.StringType(), False),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("native", T.BooleanType(), False),
-    ]
-)
-
-
 def _classify_bytes(raw: bytes) -> tuple[str, str | None, bool]:
     """(modality, mime, native) for one payload — the per-row body of
-    ``classify_media`` / ``tag_media_modality``, header walks only."""
+    ``tag_media_modality``, header walks only."""
     from .flac import sniff_flac
 
     modality, mime, native = "unknown", None, False
@@ -1993,16 +1392,14 @@ def _classify_bytes(raw: bytes) -> tuple[str, str | None, bool]:
     return modality, mime, native
 
 
-def classify_media(media: DataFrame) -> DataFrame:
+def tag_media_modality(media: DataFrame) -> DataFrame:
     """Modality classification from container headers ONLY — the cheap
     pre-decode routing pass a mixed media lake runs before any
-    expensive tier: ``(media_id, modality, mime, native)`` where
-    ``modality`` ∈ image/audio/video/document/unknown and ``native``
-    mirrors what this library's OWN decoders accept (not merely what
-    the sniffers recognize — an Xvid AVI, an 8-bit palette BMP, or a
-    lossless JPEG sniff fine but would crash a fingerprint tier), so a
-    curation recipe routes native payloads into the tiers and passes
-    the rest through:
+    expensive tier. Appends ``modality`` (image/audio/video/document/
+    unknown) and ``native`` to the full media rows; ``native`` mirrors
+    what this library's OWN decoders accept (not merely what the
+    sniffers recognize — an Xvid AVI, an 8-bit palette BMP, or a
+    lossless JPEG sniff fine but would crash a fingerprint tier):
 
     - image: ``sniff_image`` mime; native per ``_native_image``
       (PNG/GIF full-coverage; BMP uncompressed 24-bit in-bounds; JPEG
@@ -2017,42 +1414,12 @@ def classify_media(media: DataFrame) -> DataFrame:
       loudly at extraction time, the flag is the cheap pre-filter);
     - NULL / unrecognized payloads are ``unknown`` (never native).
 
-    Header walks only — no pixel/sample/frame decode happens here, so
-    the pass is IO-bound and safe to run on every payload. Returns the
-    SLIM frame; ``tag_media_modality`` carries the same verdicts as
-    extra columns on the full media rows (no join needed)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                modality, mime, native = _classify_bytes(raw)
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "modality": modality,
-                        "mime": mime,
-                        "native": native,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in CLASSIFY_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=CLASSIFY_SCHEMA
-    )
-
-
-def tag_media_modality(media: DataFrame) -> DataFrame:
-    """``classify_media``'s verdicts as EXTRA COLUMNS on the full media
-    rows (``modality`` + ``native`` appended to the input schema) —
-    the routing shape for recipes: downstream modality subsets become
-    pure FILTERS, so the payload column never has to join against a
+    The verdicts ride as columns so downstream modality subsets become
+    pure FILTERS: the payload column never has to join against a
     corpus-sized id set (which would drag every payload byte through a
-    shuffle). One Arrow-batched pass; payloads transit the Python
-    worker locally and never cross a shuffle."""
+    shuffle). One Arrow-batched pass of header walks — no
+    pixel/sample/frame decode; payloads transit the Python worker
+    locally and never cross a shuffle."""
     out_schema = T.StructType(
         list(media.schema.fields)
         + [

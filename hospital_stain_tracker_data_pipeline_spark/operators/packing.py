@@ -394,7 +394,7 @@ def pack_documents_no_split(
     document would overflow ``budget``. Documents are never split;
     chunks are under-full by whatever tail space the next doc didn't
     fit into (the padding cost this strategy trades for clean example
-    boundaries — measure it with ``packing_efficiency`` below).
+    boundaries).
 
     Returns one row per document WITH AT LEAST ONE TOKEN: zero-token
     docs (blank/whitespace-only text, mirroring ``doc_token_count``'s
@@ -493,146 +493,3 @@ def pack_documents_no_split(
         ),
     )
 
-
-def packing_efficiency(packed: DataFrame, budget: int) -> DataFrame:
-    """One-row report for a packed layout (either packer's output):
-    ``n_chunks, total_tokens, capacity, fill_ratio`` — fill_ratio is
-    the fraction of chunk capacity carrying real tokens (1 − padding).
-    The number a pipeline watches when tuning budget/strategy; one
-    aggregate, no extra scan of the corpus."""
-    _, tok_col, _ = _chunk_shape(packed)
-    agg = packed.agg(
-        F.count_distinct("shard", "chunk_id").alias("n_chunks"),
-        F.coalesce(F.sum(tok_col), F.lit(0)).cast("long").alias("total_tokens"),
-    )
-    return agg.select(
-        "n_chunks",
-        "total_tokens",
-        (F.col("n_chunks") * budget).cast("long").alias("capacity"),
-        F.when(
-            F.col("n_chunks") > 0,
-            F.round(F.col("total_tokens") / (F.col("n_chunks") * budget), 6),
-        ).alias("fill_ratio"),
-    )
-
-
-def cdc_chunks(
-    docs: DataFrame,
-    window: int = 4,
-    divisor: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Content-defined chunking (the Rabin/FastCDC idea at token
-    granularity): a chunk boundary falls AFTER token ``i`` when the
-    hash of the ``window`` tokens ending at ``i`` is ≡ 0 mod
-    ``divisor`` — so boundaries are decided by local CONTENT, not
-    position, and an insertion near the top of a document shifts only
-    the chunk it lands in, leaving every later chunk byte-identical
-    (the property that makes chunk-level dedup survive small edits;
-    fixed-stride windows re-cut everything after an edit).
-
-    Returns ``(id, chunk_id, chunk, n_tokens)`` — chunk ids are
-    0-based and contiguous per doc; expected chunk length ≈
-    ``divisor`` tokens (geometric). md5-derived boundary hash, so the
-    cut points replay exactly in any engine (DuckDB oracle).
-
-    Plan shape: boundary flags come from zipping ``window`` shifted
-    slices of the BOUND token array (the HOF-lambda CSE contract);
-    chunk ids are one running-sum window keyed by doc; reassembly is
-    one doc+chunk agg. One shuffle on the doc key.
-    """
-    if window < 1:
-        raise ValueError(f"window must be >= 1, got {window}")
-    if divisor < 1:
-        raise ValueError(f"divisor must be >= 1, got {divisor}")
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
-        .alias("_t"),
-    )
-    n = F.size("_t")
-    # gram ending at position i (1-based) exists for i >= window; zip
-    # the shifted slices so the lambda touches only its own element
-    length = n - (window - 1)
-    zipped = F.arrays_zip(
-        *[
-            F.slice(F.col("_t"), F.lit(j + 1), F.greatest(length, F.lit(0)))
-            .alias(f"t{j}")
-            for j in range(window)
-        ]
-    )
-    ex = (
-        toks.select(
-            "doc_id",
-            "_t",
-            F.when(n >= window, zipped).otherwise(
-                F.array().cast(
-                    "array<struct<"
-                    + ",".join(f"t{j}:string" for j in range(window))
-                    + ">>"
-                )
-            ).alias("_z"),
-        )
-        .select(
-            "doc_id",
-            F.posexplode("_t").alias("pos", "tok"),
-            F.col("_z"),
-        )
-        .withColumn(
-            "_boundary",
-            # boundary AFTER pos when the window ending at pos hashes
-            # to 0 mod divisor (pos is 0-based; window ends exist from
-            # pos = window-1). try_element_at: short docs have no
-            # window entries at all.
-            F.when(
-                F.col("pos") >= window - 1,
-                (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws(
-                                    " ",
-                                    *[
-                                        F.try_element_at(
-                                            "_z", F.col("pos") - window + 2
-                                        )[f"t{j}"]
-                                        for j in range(window)
-                                    ],
-                                )
-                            ),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % divisor
-                    == 0
-                ).cast("int"),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("_z")
-    )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    chunked = ex.withColumn(
-        "chunk_id",
-        F.coalesce(F.sum("_boundary").over(w), F.lit(0)).cast("long"),
-    )
-    return (
-        chunked.groupBy("doc_id", "chunk_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                    lambda s: s["tok"],
-                ),
-                " ",
-            ).alias("chunk"),
-            F.count(F.lit(1)).alias("n_tokens"),
-        )
-    )

@@ -1199,7 +1199,13 @@ def search_ann_index(
     codes table's non-``cell``/``pq_code`` column). Ids tombstoned by
     ``remove_from_ann_index`` are anti-joined out of the candidate set
     here (takedowns stop serving immediately, before any
-    ``compact_ann_index`` folds them into the codes table)."""
+    ``compact_ann_index`` folds them into the codes table).
+
+    Precondition: every id appears at most once in the codes table.
+    ``append_ann_index`` does not dedup appended ids against existing
+    codes, and the top-k here (``_adc_topk``) ranks rows, not ids — an
+    id present twice fills two of a query's ``k`` slots. Dedup a delta
+    against the index before appending it."""
     import os
 
     if not os.path.exists(os.path.join(path, "_INDEX_OK")):

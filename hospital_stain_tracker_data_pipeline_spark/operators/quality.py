@@ -374,23 +374,6 @@ def compression_signals(
     )
 
 
-def filter_by_compression(
-    df: DataFrame,
-    min_ratio: float = 0.25,
-    max_ratio: float = 1.05,
-    text_col: str = "text",
-) -> DataFrame:
-    """Keep docs whose ``zlib_ratio`` lands inside the band (defaults
-    follow the common web-pipeline practice: < ~0.25 is template soup,
-    > ~1.05 is non-text). NULL-ratio (empty) docs are DROPPED — an
-    empty doc carries no trainable signal. Returns the INPUT schema."""
-    return (
-        compression_signals(df, text_col)
-        .filter(F.col("zlib_ratio").between(min_ratio, max_ratio))
-        .select(df.columns)
-    )
-
-
 def corpus_report(
     df: DataFrame, text_col: str = "text"
 ) -> DataFrame:

@@ -174,58 +174,3 @@ def doc_repetition_profile(
         out = out.join(rep.select(*keep), "doc_id", "left")
     return out
 
-
-def filter_repetitious(
-    docs: DataFrame,
-    max_dup_line_frac: float = 0.3,
-    max_top_2gram_char_frac: float = 0.2,
-    max_dup_5gram_char_frac: float = 0.15,
-    min_tokens_for_ngram: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Drop repetitious documents by the Gopher-style thresholds
-    (defaults are the published MassiveText ballpark). Returns the
-    surviving rows of ``docs``, schema unchanged.
-
-    ``min_tokens_for_ngram``: the n-gram thresholds only apply to
-    documents with at least this many tokens. The top-gram fraction of
-    a SHORT clean document is inherently high (~1/#grams — a clean
-    5-token sentence tops 25-30% on its heaviest 2-gram), so applying
-    the web-page-calibrated thresholds to short docs silently deletes
-    them; the published pipelines run these filters after a min-length
-    funnel for exactly this reason. The duplicate-line predicate has
-    no such degeneracy and always applies.
-
-    The line predicate is row-local (in-row expressions); the n-gram
-    fractions come from ``doc_repetition_profile`` via a doc_id
-    left-semi join, so the corpus payload never shuffles — only
-    (doc_id, fraction) rows do. Documents too short to HAVE the n-gram
-    (NULL fraction) pass that predicate: "no 5-grams" is not evidence
-    of repetition."""
-    prof = doc_repetition_profile(
-        docs, id_col=id_col, text_col=text_col, top_ns=(2,), dup_ns=(5,)
-    )
-    n_tok = tokens(F.col(text_col))
-    short = docs.select(
-        F.col(id_col).alias("doc_id"),
-        (F.size(n_tok) < min_tokens_for_ngram).alias("_short"),
-    )
-    ok = (
-        prof.join(short, "doc_id")
-        .filter(
-            (F.col("dup_line_frac") <= max_dup_line_frac)
-            & (
-                F.col("_short")
-                | F.col("top_2gram_char_frac").isNull()
-                | (F.col("top_2gram_char_frac") <= max_top_2gram_char_frac)
-            )
-            & (
-                F.col("_short")
-                | F.col("dup_5gram_char_frac").isNull()
-                | (F.col("dup_5gram_char_frac") <= max_dup_5gram_char_frac)
-            )
-        )
-        .select(F.col("doc_id").alias(id_col))
-    )
-    return docs.join(ok, id_col, "left_semi")

@@ -844,33 +844,6 @@ def semantic_dedup_pairs(
     )
 
 
-def semantic_dedup(
-    df: DataFrame,
-    threshold: float = 0.95,
-    n_clusters: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_cluster_rows: int | None = 100_000,
-) -> DataFrame:
-    """Drop semantic near-duplicates: the survivor policy is the
-    library-wide one (``pipeline/curate.py``) — the LOWEST id of every
-    ≥ threshold pair survives, i.e. any row appearing as ``id_b`` in
-    ``semantic_dedup_pairs`` is dropped. Transitive chains collapse
-    toward their minimum without a connected-components pass because
-    each pair independently names a smaller survivor. Returns the
-    surviving rows of ``df`` unchanged (left_anti on the drop set —
-    the wide payload never enters the pair join)."""
-    drop = (
-        semantic_dedup_pairs(
-            df, threshold, n_clusters, iters, id_col, vec_col, max_cluster_rows
-        )
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    return df.join(drop, id_col, "left_anti")
-
-
 def save_ivf_index(
     spark, centroids: np.ndarray, path: str
 ) -> None:

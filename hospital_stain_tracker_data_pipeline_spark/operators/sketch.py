@@ -1,6 +1,6 @@
-"""Bounded-memory frequency sketches and skew diagnostics (beyond the
-reference surface — the corpus-profiling tools a 100 TB pipeline needs
-before it can pick caps, salts, and dedup parameters).
+"""Bounded-memory frequency sketches (beyond the reference surface —
+the corpus-profiling tools a 100 TB pipeline needs before it can pick
+caps and dedup parameters).
 
 ``heavy_hitters`` finds every item whose global frequency is at least a
 ``phi`` fraction of the corpus — EXACTLY — in two scans and without
@@ -16,10 +16,6 @@ corpus against the candidates and takes EXACT counts for just those
 items. The full item stream is never the shuffle payload: the only
 exchange carries candidate-matched rows reduced by partial
 aggregation.
-
-``skew_report`` profiles a key column (per-key count distribution +
-hot keys + a salt suggestion) so the cost of a planned groupBy/join on
-that key is visible before it runs.
 
 ``hll_registers`` / ``hll_merge`` / ``hll_estimate`` are a
 deterministic HyperLogLog (Flajolet et al. 2007, with the HLL++
@@ -40,7 +36,7 @@ The batch-level Misra-Gries merge uses pandas ``value_counts`` per
 Arrow batch (vectorized) and only touches Python dicts at summary
 size, not stream size.
 
-``bloom_sketch`` / ``bloom_merge`` / ``bloom_query`` complete the
+``bloom_sketch`` / ``bloom_query`` complete the
 mergeable-sketch trio (HLL = cardinality, CMS = frequency, Bloom =
 MEMBERSHIP): a deterministic Bloom filter (Bloom 1970; double hashing
 per Kirsch & Mitzenmacher 2006, same md5 discipline as CMS) whose
@@ -174,79 +170,6 @@ def heavy_hitters(
     finally:
         summary_df.unpersist()
     return exact
-
-
-def skew_report(
-    df: DataFrame, key_col: str, top: int = 10
-) -> DataFrame:
-    """One-row diagnosis of how skewed ``key_col`` is — run it BEFORE
-    committing to a groupBy/join on that key at scale.
-
-    Columns: ``n_rows``, ``n_keys``, ``max_count`` (hottest key's
-    rows), ``p50_count``/``p90_count``/``p99_count`` (EXACT continuous
-    percentiles of the per-key count distribution — same definition as
-    DuckDB's ``quantile_cont``, so the report is cross-engine
-    replayable), ``top_keys`` (the ``top`` hottest keys as
-    ``key:count`` strings, count-desc then non-NULL keys asc then the
-    NULL group last; the NULL group displays as ``\\x00NULL`` — a
-    NUL-prefixed marker no CAST-to-string key can collide with, so a
-    genuine ``'NULL'`` string key stays distinguishable), and
-    ``skew_ratio`` = max_count / mean_count — the factor by which the
-    hottest task outweighs the average if this key becomes a shuffle
-    key. A ratio ≫ the executor-count suggests salting
-    (``skew_ratio`` rounded to 2 dp for stable cross-engine hashes).
-
-    Plan: one partial-agg exchange to per-key counts (rows = n_keys,
-    not n_rows), then a single-node summary over the count column —
-    the exact-percentile sort is over n_keys values, which is the
-    distribution being diagnosed, not the corpus. NULL keys count as a
-    real group (NULL-key volume is exactly what you want visible).
-    """
-    counts = (
-        df.groupBy(F.col(key_col).cast("string").alias("key"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    # collect_list order is not guaranteed even after orderBy+limit, so
-    # the struct carries a negated count and array_sort imposes the
-    # (count desc, non-NULL keys asc, NULL group last) order
-    # deterministically post-collection. NULL ordering/display uses an
-    # explicit is-null field plus a NUL-prefixed display marker — a
-    # genuine string key 'NULL' must neither collide in top_keys nor
-    # make the boundary pick ambiguous
-    topk = (
-        counts.orderBy(
-            F.col("cnt").desc(),
-            F.col("key").isNull(),
-            F.col("key"),
-        )
-        .limit(top)
-        .select(
-            F.struct(
-                (-F.col("cnt")).alias("_neg"),
-                F.col("key").isNull().alias("_is_null"),
-                F.coalesce(F.col("key"), F.lit("")).alias("_k"),
-                F.concat_ws(
-                    ":",
-                    F.coalesce(F.col("key"), F.lit("\u0000NULL")),
-                    F.col("cnt"),
-                ).alias("disp"),
-            ).alias("s")
-        )
-        .agg(F.array_sort(F.collect_list("s")).alias("_ss"))
-        .select(F.transform("_ss", lambda s: s["disp"]).alias("top_keys"))
-    )
-    summary = counts.agg(
-        F.sum("cnt").alias("n_rows"),
-        F.count(F.lit(1)).alias("n_keys"),
-        F.max("cnt").alias("max_count"),
-        F.percentile("cnt", F.lit(0.5)).alias("p50_count"),
-        F.percentile("cnt", F.lit(0.9)).alias("p90_count"),
-        F.percentile("cnt", F.lit(0.99)).alias("p99_count"),
-        F.round(
-            F.max("cnt") / (F.sum("cnt") / F.count(F.lit(1))), 2
-        ).alias("skew_ratio"),
-    )
-    return summary.crossJoin(topk)
 
 
 def _hll_check_p(p: int) -> None:
@@ -416,17 +339,6 @@ def hll_estimate(
         F.lit(p).alias("p"),
         F.lit(m).alias("m"),
     )
-
-
-def approx_distinct_hll(
-    df: DataFrame,
-    item_col: str,
-    p: int = 12,
-    by: str | list[str] | None = None,
-) -> DataFrame:
-    """``hll_estimate(hll_registers(df, item_col, p, by), p, by)`` —
-    the one-shot form, when no sketch needs persisting."""
-    return hll_estimate(hll_registers(df, item_col, p, by), p, by)
 
 
 def _cms_check(
@@ -917,23 +829,6 @@ def bloom_sketch(
     )
 
 
-def bloom_merge(
-    *sketches: DataFrame, by: str | list[str] | None = None
-) -> DataFrame:
-    """Word-wise OR of Bloom sketches built with the SAME (m_bits, k)
-    (and, for grouped sketches, the same ``by`` keys): associative,
-    commutative, idempotent — sketch(A ∪ B) == merge(sketch(A),
-    sketch(B)) bit-for-bit (pinned by test)."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy(*_by_cols(by), "word").agg(
-        F.bit_or("bits").alias("bits")
-    )
-
-
 def bloom_query(
     sketch: DataFrame,
     items: DataFrame,
@@ -1075,7 +970,7 @@ def save_bloom_sketch(
 
 def load_bloom_sketch(spark, path: str):
     """Inverse of ``save_bloom_sketch``: returns ``(sketch, m_bits, k,
-    by)`` ready for ``bloom_merge``/``bloom_query``. Fails loudly on a
+    by)`` ready for ``bloom_query``/``filter_unseen``. Fails loudly on a
     parameterless parquet or a corrupt artifact mixing parameter
     sets."""
     import json
@@ -1091,7 +986,7 @@ def load_bloom_sketch(spark, path: str):
     if len(metas) != 1:
         raise ValueError(
             f"{path} mixes {len(metas)} parameter sets — corrupt "
-            "artifact (merge sketches via bloom_merge, not file unions)"
+            "artifact (merge sketches before saving, not file unions)"
         )
     m_bits, k = int(metas[0]["_bloom_m"]), int(metas[0]["_bloom_k"])
     _bloom_check(m_bits, k)

@@ -2,9 +2,9 @@
 REAL container-extracted frames + the shared Hamming-banded pair
 engine — the final modality of the incremental dedup lifecycle (text,
 images, embeddings, audio, and now video all ride the same pipeline:
-batch pairs -> persisted tagged index -> corpus-wins gate -> streaming
-twin -> CLI). This module holds only the fingerprint; the lifecycle is
-the ``fingerprint.VIDEO`` family's, shared with image and audio.
+batch pairs -> persisted tagged index -> corpus-wins gate -> CLI).
+This module holds only the fingerprint; the lifecycle is the
+``fingerprint.VIDEO`` family's, shared with image and audio.
 
 A clip's fingerprint is the per-bit MAJORITY VOTE over the perceptual
 hashes (``multimodal._phash_bits`` — dHash/aHash on real decoded
@@ -23,7 +23,7 @@ shape:
   (``dedup.hamming_pairs`` family) on (id, 8 bytes) — frame bytes and
   pixels never cross a shuffle, the 100 TB video-dedup shape.
 
-Frame extraction is the ``sample_video_frames`` machinery: REAL for
+Frame extraction reads the container's own frame index: REAL for
 RIFF/AVI MJPEG and for MP4 tracks with JPEG-coded samples (full stbl
 resolution); the frame bytes decode through the library's own JPEG
 codec. H.264/H.265 tracks need an entropy decoder this environment

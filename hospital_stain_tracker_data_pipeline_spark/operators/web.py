@@ -1,12 +1,11 @@
 """Web-corpus curation operators (beyond the reference surface — the
 provenance-level controls a Common-Crawl-style pipeline applies before
-any text-level stage): URL → domain extraction, per-domain document
-caps, and domain blocklist filtering.
+any text-level stage): URL → domain extraction and per-domain
+document caps.
 
 Spark-first shape: domain extraction is a pure regexp Column (JVM-side,
 whole-stage codegen); the cap is one ranked window per group keyed by a
-deterministic hash order; the blocklist is a broadcast anti-join. No
-Python in any per-document path — the one deliberate exception is the
+deterministic hash order. No Python in any per-document path — the one deliberate exception is the
 robots.txt parser (an Arrow-batched pandas UDF over the tiny per-domain
 rule bodies; the per-URL politeness verdict itself is pure Columns over
 a broadcast rules table).
@@ -17,8 +16,8 @@ domains) costs nothing because partial ranking needs no global sort.
 The deliberate skew caveat: a mega-domain (e.g. one host contributing
 0.1% of the corpus) concentrates its rows in one task; AQE skew-split
 does not apply to windows, so for genuinely pathological hosts,
-pre-filter them via the blocklist (they are exactly the hosts a cap
-would cut to `cap` rows anyway, so dropping the excess EARLY with a
+pre-filter them (they are exactly the hosts a cap would cut to `cap`
+rows anyway, so dropping the excess EARLY with a
 cheap count + filter is the scale-correct order of operations —
 ``cap_per_group`` does this automatically with its two-phase plan).
 """
@@ -256,26 +255,6 @@ def dedup_exact_urls(
         canon.join(winners, id_col, "left_semi").select(df.columns)
     )
     return kept
-
-
-def filter_blocked_domains(
-    df: DataFrame,
-    blocklist: DataFrame,
-    url_col: str = "url",
-    domain_col: str = "domain",
-) -> DataFrame:
-    """Drop rows whose URL's domain appears in a blocklist table
-    (column ``domain_col``, matched case-insensitively on the full
-    host). Broadcast anti-join: the blocklist is dimension-sized by
-    nature (UT1/adult lists are ~1-5 M rows — megabytes), the corpus
-    never shuffles, and the domain extraction fuses into the scan."""
-    probe = df.withColumn("_host", extract_domain(F.col(url_col)))
-    block = blocklist.select(
-        F.lower(F.trim(F.col(domain_col))).alias("_host")
-    ).distinct()
-    return (
-        probe.join(F.broadcast(block), "_host", "left_anti").drop("_host")
-    )
 
 
 # --- HTML -> text extraction (the step BEFORE every text-quality /
@@ -919,124 +898,3 @@ def fetch_timeline(
         (F.col("wave") * applied).alias("earliest_fetch_offset_s"),
     )
 
-
-def robots_sitemaps(
-    robots: DataFrame,
-    domain_col: str = "domain",
-    robots_col: str = "robots_txt",
-) -> DataFrame:
-    """Sitemap discovery from fetched robots.txt bodies — the frontier
-    bootstrap that precedes ``plan_recrawl``: ``Sitemap:`` directives
-    (sitemaps.org protocol; RFC 9309 treats them as neutral
-    other-records) are GLOBAL, not per-group, so extraction ignores
-    user-agent grouping entirely. Returns distinct ``(domain,
-    sitemap_url)``; values must be absolute http(s) URLs per the
-    protocol — anything else (relative paths, ftp, junk) drops.
-
-    Pure Column implementation (split → per-line regexp_extract via a
-    higher-order ``transform`` → explode): zero Python in the path, the
-    work rides the robots-fetch scan, no shuffle beyond the final
-    distinct (bodies per domain are tiny — the distinct is robots-table
-    -sized, never frontier-sized). Comments (#) strip to end of line;
-    the field name is case-insensitive; surrounding whitespace trims."""
-    lines = F.split(F.col(robots_col), r"\r?\n")
-    urls = F.filter(
-        F.transform(
-            lines,
-            lambda l: F.trim(
-                F.regexp_extract(
-                    l, r"(?i)^\s*sitemap\s*:\s*([^#]*)", 1
-                )
-            ),
-        ),
-        lambda v: v.rlike(r"(?i)^https?://\S+$"),
-    )
-    return (
-        robots.select(
-            F.col(domain_col).alias("domain"),
-            F.explode(urls).alias("sitemap_url"),
-        )
-        .distinct()
-    )
-
-
-def audit_fetch_log(
-    log: DataFrame,
-    delays: DataFrame,
-    default_delay_s: float = 0.0,
-    url_col: str = "url",
-    ts_col: str = "fetch_ts",
-    per_domain_per_wave: int = 1,
-) -> DataFrame:
-    """Politeness COMPLIANCE audit over an executed fetch log — the
-    closing half of the schedule loop (``fetch_timeline`` plans, this
-    verifies): each same-host fetch is compared against the fetch
-    ``per_domain_per_wave`` positions earlier, and that gap must be
-    >= the host's ``crawl_delay_s`` (``robots_crawl_delays`` output;
-    hosts without a declared delay audit against ``default_delay_s``,
-    0 = only ordering is checked). ``per_domain_per_wave`` MUST match
-    the planner's setting (``schedule_fetch`` allows N same-host
-    fetches per wave — a wave's burst shares one offset, so
-    within-burst gaps are legal by design; the DELAY constraint binds
-    between bursts, i.e. between fetch i and fetch i-N). Returns the
-    VIOLATIONS — ``(domain, url, fetch_ts, prev_fetch_ts, gap_s,
-    required_s)`` — empty means the crawler behaved; a
-    scheduled-but-rowdy fetcher (clock skew, retry storms, a worker
-    ignoring the plan) shows up here before the host's ops team
-    notices.
-
-    One window shuffle on domain (lag over fetch order) + one broadcast
-    join for the delays — audit cost is a linear pass over the log,
-    independent of frontier size. Ties at the burst boundary (fetch i
-    and fetch i-N at the identical timestamp against a positive
-    required delay) are violations by construction: gap 0 <
-    required."""
-    if default_delay_s < 0:
-        raise ValueError(
-            f"default_delay_s must be >= 0, got {default_delay_s}"
-        )
-    if per_domain_per_wave < 1:
-        raise ValueError(
-            f"per_domain_per_wave must be >= 1, got {per_domain_per_wave}"
-        )
-    d = delays.select(
-        F.col("domain").alias("_au_domain"),
-        F.col("crawl_delay_s").alias("_au_delay"),
-    )
-    # the window runs over the POST-rename frame — order by the
-    # canonical names, not the caller's (a custom ts_col/url_col would
-    # otherwise fail to resolve)
-    w = Window.partitionBy("domain").orderBy(
-        F.col("fetch_ts").asc(), F.col("url").asc()
-    )
-    fetched = log.select(
-        extract_domain(F.col(url_col)).alias("domain"),
-        F.col(url_col).alias("url"),
-        F.col(ts_col).cast("timestamp").alias("fetch_ts"),
-    ).withColumn(
-        "prev_fetch_ts",
-        F.lag("fetch_ts", per_domain_per_wave).over(w),
-    )
-    joined = fetched.join(
-        F.broadcast(d), fetched["domain"] == d["_au_domain"], "left"
-    )
-    required = F.coalesce(
-        F.col("_au_delay"), F.lit(float(default_delay_s))
-    )
-    gap = (
-        F.col("fetch_ts").cast("double")
-        - F.col("prev_fetch_ts").cast("double")
-    )
-    return (
-        joined.filter(
-            F.col("prev_fetch_ts").isNotNull() & (gap < required)
-        )
-        .select(
-            "domain",
-            "url",
-            "fetch_ts",
-            "prev_fetch_ts",
-            gap.alias("gap_s"),
-            required.alias("required_s"),
-        )
-    )

@@ -12,7 +12,6 @@
 from .lake import (  # noqa: F401
     LakeTable,
     file_skipping_report,
-    write_bucketed_table,
     zorder_write,
 )
 from .ingest_capacity import ingest_capacity_csv  # noqa: F401

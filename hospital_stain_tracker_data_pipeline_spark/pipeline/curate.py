@@ -831,16 +831,6 @@ def unpersist_curated(chunks: DataFrame) -> None:
             pass
 
 
-def curation_funnel_report(
-    docs: DataFrame, stages: list[tuple[str, Column]] | None = None
-) -> DataFrame:
-    """The one-scan observability row for the quality stages alone
-    (dedup attrition needs the join stages above and is reported by
-    ``curate_documents``)."""
-    stages = stages if stages is not None else default_quality_stages()
-    return filter_funnel(ensure_quality_signals(docs, stages), stages)
-
-
 @dataclass
 class MediaCurationReport:
     """Per-stage attrition of ``curate_media`` — the multimodal

@@ -119,12 +119,12 @@ def ingest_capacity_csv(
         runs_path,
         run_log_row(run_id, source, "running", started, notes=f"Input file: {input_path}"),
     )
+    cached: list[DataFrame] = []
     try:
         raw = read_hhs_csv(spark, input_path)
         accepted, rejected = parse_and_validate(raw)
         # One pass over the input serves both branches and the counters.
-        accepted = accepted.cache()
-        rejected = rejected.cache()
+        cached = [accepted.cache(), rejected.cache()]
         n_acc, n_rej = accepted.count(), rejected.count()
 
         rejects_path = None
@@ -175,8 +175,6 @@ def ingest_capacity_csv(
                 notes=f"Input file: {input_path}",
             ),
         )
-        accepted.unpersist()
-        rejected.unpersist()
         return IngestResult(run_id, n_acc + n_rej, n_acc, n_rej, rejects_path)
     except Exception as e:  # run-log failure path (ingest_capacity.py:213-224)
         append_run_log(
@@ -185,3 +183,8 @@ def ingest_capacity_csv(
             run_log_row(run_id, source, "failed", started, utcnow(), notes=f"Error: {e}"),
         )
         raise
+    finally:
+        # on every path: a failed batch must not pin both frames for
+        # the rest of the session
+        for df in cached:
+            df.unpersist()

@@ -476,30 +476,6 @@ class LakeTable:
         return victims
 
 
-def write_bucketed_table(
-    df, table: str, key: str, buckets: int = 32
-) -> None:
-    """Materialize a fact table BUCKETED (and sorted) on its join key —
-    the co-located-join layout for fact⋈fact keys (SCALE.md storage
-    notes): two tables bucketed on the same key with the same bucket
-    count join with ZERO exchange on either side, because bucket i of
-    one table can only match bucket i of the other. At 100 TB this
-    converts every repeated join/aggregation on the key (order ⋈
-    lineitem style) from a full shuffle of both sides into a local
-    merge per bucket — the write pays the shuffle once, every
-    downstream join skips it (plan-asserted by
-    ``test_bucketed_join_is_shuffle_free``). ``buckets`` should be
-    sized so one bucket ≈ one task's worth of data at the target
-    scale; it must MATCH across the tables that join."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
 def _zorder_double(df: DataFrame, col: str):
     """A double-valued projection of a Z-order column, or raise: Z-order
     needs a total order with meaningful min/max file stats, so numeric,
@@ -550,9 +526,8 @@ def zorder_write(
     interleave bit-by-bit into a single integer Column; one
     ``repartitionByRange`` shuffle on it + a within-file sort, and the
     curve column is dropped before the write (it is derivable, not
-    data). Cost: ONE full shuffle at write time — the same price
-    ``write_bucketed_table`` pays — amortized over every pruned scan
-    after. Returns the layout recipe (cols, bits, per-column
+    data). Cost: ONE full shuffle at write time, amortized over every
+    pruned scan after. Returns the layout recipe (cols, bits, per-column
     boundaries, file count) so a maintenance job can re-apply it to
     new partitions. Verify pruning with ``file_skipping_report``."""
     cols = list(cols)

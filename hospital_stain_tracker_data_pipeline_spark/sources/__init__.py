@@ -11,6 +11,5 @@ from .warc import (  # noqa: F401
 )
 from .xml_source import (  # noqa: F401
     read_sitemap,
-    read_sitemap_index,
     read_xml,
 )

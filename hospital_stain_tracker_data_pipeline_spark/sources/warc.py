@@ -686,8 +686,8 @@ def warc_cdx_index(records: DataFrame) -> DataFrame:
     the lookup table crawl archives ship beside the WARC files
     (public CDXJ convention: canonical URL → file + compressed member
     offset). One narrow projection; persist it as the corpus's
-    random-access sidecar and ``fetch_warc_record`` resolves any row
-    back to its record without scanning the file."""
+    random-access sidecar: a row's ``(warc_file, record_offset,
+    record_seq)`` points at its record without scanning the file."""
     from ..operators.web import canonicalize_url
 
     return records.select(
@@ -702,50 +702,3 @@ def warc_cdx_index(records: DataFrame) -> DataFrame:
         F.length("payload").alias("payload_len"),
     )
 
-
-def fetch_warc_record(
-    path: str, offset: int, seq: int = 0
-) -> dict | None:
-    """Random access: read ONE record from a WARC file by its index
-    pointer — seek to the compressed member offset (``.gz``; the CDXJ
-    convention) or raw byte offset (plain) and parse just that member.
-    The driver-side counterpart of the distributed scan: what a
-    serving layer or a spot-checking notebook calls with a
-    ``warc_cdx_index`` row; no Spark involved."""
-    if "://" in path:
-        from pyarrow import fs as pafs
-
-        filesystem, p = pafs.FileSystem.from_uri(path)
-        # open_input_FILE: the seekable handle (open_input_stream isn't)
-        stream = filesystem.open_input_file(p)
-    else:
-        stream = open(path, "rb")
-    try:
-        head = stream.read(2)
-        is_gz = head == _GZIP_MAGIC
-        # local files seek; pyarrow input streams for remote URIs do too
-        stream.seek(offset)
-        if is_gz:
-            first = _iter_gzip_members(stream)
-        else:
-            first = _iter_plain_records_raw(stream)
-        for rel_off, raw in first:
-            if rel_off != 0:
-                # the member AT the pointer was corrupt/stale and the
-                # iterator resynced forward — in random access that
-                # must be "not found", never a DIFFERENT record served
-                # as if it were the requested one
-                return None
-            pos = 0
-            s = 0
-            while pos < len(raw):
-                rec, pos = _parse_record(raw, pos)
-                if rec is None:
-                    return None
-                if s == seq:
-                    return rec
-                s += 1
-            return None  # seq beyond the member's record count
-        return None
-    finally:
-        stream.close()

@@ -1,13 +1,12 @@
-"""XML source (Spark 4's built-in ``xml`` format) + the two web-crawl
-XML shapes a corpus pipeline actually meets: sitemaps (the standard
-crawl-frontier seed, sitemaps.org protocol) and sitemap INDEX files
-(the sharding layer above them).
+"""XML source (Spark 4's built-in ``xml`` format) + the web-crawl XML
+shape a corpus pipeline actually meets: sitemaps (the standard
+crawl-frontier seed, sitemaps.org protocol).
 
-Same schema-on-read discipline as the CSV/JSONL sources (SURVEY.md
+Same schema-on-read discipline as the CSV source (SURVEY.md
 §2.1/§2.2): an EXPLICIT schema — never inference, which would scan the
 input twice and silently widen types — with unparseable rows routed to
 a ``_corrupt_record`` side-channel and returned on a reject frame with
-a reason column (the ``read_jsonl``/``read_hhs_csv`` contract: route
+a reason column (the ``read_hhs_csv`` contract: route
 bad rows, never silently drop them — a malformed sitemap shard must
 show up as N reject rows, not as a quietly smaller frontier).
 Gzipped inputs (``sitemap.xml.gz`` is the protocol's own convention)
@@ -20,9 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# shared with the JSONL source — ONE spelling of the corrupt-record
-# side-channel column across the package's schema-on-read sources
-from .jsonl import _CORRUPT
+_CORRUPT = "_corrupt_record"
 
 # sitemaps.org <urlset>: one <url> entry per page. Only <loc> is
 # required by the protocol; the optional fields stay NULL when absent.
@@ -34,15 +31,6 @@ SITEMAP_SCHEMA = T.StructType(
         T.StructField("priority", T.DoubleType(), True),
     ]
 )
-
-# sitemaps.org <sitemapindex>: one <sitemap> entry per child sitemap.
-SITEMAP_INDEX_SCHEMA = T.StructType(
-    [
-        T.StructField("loc", T.StringType(), True),
-        T.StructField("lastmod", T.StringType(), True),
-    ]
-)
-
 
 def read_xml(
     spark: SparkSession,
@@ -119,23 +107,3 @@ def read_sitemap(
         rejected,
     )
 
-
-def read_sitemap_index(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame]:
-    """``(index, rejected)`` from a sitemap index; the index side is
-    ``(sitemap_url, lastmod)`` — resolve these, fetch the child
-    sitemaps, and ``read_sitemap`` the results. Kept as a separate
-    reader (not auto-recursed): fetching is the caller's I/O policy,
-    this layer only parses."""
-    raw = read_xml(
-        spark,
-        path,
-        row_tag="sitemap",
-        schema=_with_corrupt(SITEMAP_INDEX_SCHEMA),
-    )
-    valid, rejected = _split_valid(raw, SITEMAP_INDEX_SCHEMA)
-    return (
-        valid.select(F.col("loc").alias("sitemap_url"), "lastmod"),
-        rejected,
-    )

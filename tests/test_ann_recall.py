@@ -212,9 +212,8 @@ def test_semantic_dedup_pairs_match_numpy_within_cluster_replay(spark, sf_dir):
         assert got[k] == pytest.approx(want[k], abs=2e-6)
 
 
-def test_semantic_dedup_survivor_policy_and_determinism(spark, sf_dir):
+def test_semantic_dedup_pairs_partitioning_invariant(spark, sf_dir):
     from hospital_stain_tracker_data_pipeline_spark.operators.similarity import (
-        semantic_dedup,
         semantic_dedup_pairs,
     )
     from hospital_stain_tracker_data_pipeline_spark.sources.tables import (
@@ -223,35 +222,34 @@ def test_semantic_dedup_survivor_policy_and_determinism(spark, sf_dir):
 
     emb = load_fixture_table(spark, sf_dir, "embeddings")
     # the fixture's max pairwise cosine is ~0.479 (random-ish unit
-    # vectors); 0.35 yields a real drop set without being trivial
+    # vectors); 0.35 yields a real pair set without being trivial
     thr = 0.35
-    pairs = semantic_dedup_pairs(emb, threshold=thr, n_clusters=8, iters=2)
-    dropped = {r["id_b"] for r in pairs.collect()}
-    assert dropped, "fixture should contain semantic near-dups at thr=0.35"
-    kept = semantic_dedup(emb, threshold=thr, n_clusters=8, iters=2)
-    kept_ids = {r["vec_id"] for r in kept.select("vec_id").collect()}
-    all_ids = {r["vec_id"] for r in emb.select("vec_id").collect()}
-    assert kept_ids == all_ids - dropped
-    # survivors keep their full row payload
-    assert kept.columns == emb.columns
+
+    def pairs(df):
+        return {
+            (r["id_a"], r["id_b"], r["cosine_sim"])
+            for r in semantic_dedup_pairs(
+                df, threshold=thr, n_clusters=8, iters=2
+            ).collect()
+        }
+
+    got = pairs(emb)
+    assert got, "fixture should contain semantic near-dups at thr=0.35"
+    assert all(a < b for a, b, _ in got)
     # partitioning invariance (integer-exact fit + rounded cosines)
-    kept2 = semantic_dedup(
-        emb.repartition(7), threshold=thr, n_clusters=8, iters=2
-    )
-    assert {r["vec_id"] for r in kept2.select("vec_id").collect()} == kept_ids
+    assert pairs(emb.repartition(7)) == got
 
 
-def test_semantic_dedup_golden_tiny(spark):
+def test_semantic_dedup_pairs_golden_tiny(spark):
     """Hand-built corpus: two near-duplicate groups plus a singleton.
     n_clusters=1 makes the within-cluster step exhaustive, so this
-    golden pins the survivor POLICY (lowest id per ≥-threshold pair)
-    independent of clustering quality — which the fixture replay test
-    covers. (With k≥2 on 5 points, the deterministic init can seed the
-    two halves of a dup group as separate centroids: the documented
-    SemDeDup cross-cluster miss, meaningless at corpus scale but
-    dominant at n=5.)"""
+    golden pins the pair set independent of clustering quality — which
+    the fixture replay test covers. (With k≥2 on 5 points, the
+    deterministic init can seed the two halves of a dup group as
+    separate centroids: the documented SemDeDup cross-cluster miss,
+    meaningless at corpus scale but dominant at n=5.)"""
     from hospital_stain_tracker_data_pipeline_spark.operators.similarity import (
-        semantic_dedup,
+        semantic_dedup_pairs,
     )
 
     rows = [
@@ -262,13 +260,13 @@ def test_semantic_dedup_golden_tiny(spark):
         (5, [0.0, 0.0, 1.0]),       # singleton
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kept = {
-        r["vec_id"]
-        for r in semantic_dedup(
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in semantic_dedup_pairs(
             df, threshold=0.99, n_clusters=1, iters=2
         ).collect()
     }
-    assert kept == {1, 3, 5}
+    assert got == {(1, 2), (3, 4)}
 
 
 def test_semantic_dedup_cluster_size_guard(spark):

@@ -29,6 +29,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from media_encoders import encode_flac
 from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
     AFP_LAGS,
     AFP_RATE,
@@ -39,7 +40,6 @@ from hospital_stain_tracker_data_pipeline_spark.operators.fingerprint import (
     AUDIO,
     fp_dup_pairs,
 )
-from hospital_stain_tracker_data_pipeline_spark.operators.flac import encode_flac
 from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
     encode_wav,
     to_media_table,

@@ -1,9 +1,9 @@
 """Bloom membership sketch: bit-exact pure-Python word replay, the
-no-false-negatives guarantee, FPP sanity against bloom_fpp, merge
-algebra, grouped (by=) semantics incl. NULL group keys, the
-filter_unseen ingest gate, artifact round-trip guards, and validation
-edges — the membership leg of the mergeable-sketch trio next to
-tests/test_hll.py and tests/test_cms.py."""
+no-false-negatives guarantee, FPP sanity against bloom_fpp, grouped
+(by=) semantics incl. NULL group keys, the filter_unseen ingest gate,
+artifact round-trip guards, and validation edges — the membership leg
+of the mergeable-sketch trio next to tests/test_hll.py and
+tests/test_cms.py."""
 
 from __future__ import annotations
 
@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from hospital_stain_tracker_data_pipeline_spark.operators.sketch import (
     BLOOM_BROADCAST_MAX_BITS,
     bloom_fpp,
-    bloom_merge,
     bloom_query,
     bloom_sketch,
     filter_unseen,
@@ -94,28 +93,6 @@ def test_bloom_no_false_negatives_and_fpp_bound(spark, sf_dir):
     assert fp / 2000 <= max(5 * expected, 0.02)
 
 
-def test_bloom_merge_equals_union_sketch(spark, sf_dir):
-    stream = _words(spark, sf_dir).withColumn(
-        "h", F.abs(F.hash("w")) % 2
-    )
-    m_bits, k = 1 << 12, 4
-    a = bloom_sketch(stream.filter(F.col("h") == 0), "w", m_bits, k)
-    b = bloom_sketch(stream.filter(F.col("h") == 1), "w", m_bits, k)
-    merged = {
-        r["word"]: r["bits"] for r in bloom_merge(a, b).collect()
-    }
-    oneshot = {
-        r["word"]: r["bits"]
-        for r in bloom_sketch(stream, "w", m_bits, k).collect()
-    }
-    assert merged == oneshot
-    # idempotent: merging a sketch with itself changes nothing
-    again = {
-        r["word"]: r["bits"] for r in bloom_merge(a, a).collect()
-    }
-    assert again == {r["word"]: r["bits"] for r in a.collect()}
-
-
 def test_bloom_grouped_semantics_and_null_group(spark):
     """by= keeps one filter per group (an item present in group A only
     probes false in group B); NULL group keys are real groups and join
@@ -137,17 +114,6 @@ def test_bloom_grouped_semantics_and_null_group(spark):
     assert got[(None, "z")] is True       # NULL group joins null-safely
     assert got[(None, "x")] is False
     assert got[("c", "q")] is False       # unseen group
-
-    # grouped merge == grouped one-shot
-    merged = bloom_merge(
-        bloom_sketch(df.limit(1), "w", m_bits, k, by="g"),
-        bloom_sketch(df.exceptAll(df.limit(1)), "w", m_bits, k, by="g"),
-        by="g",
-    )
-    oneshot = bloom_sketch(df, "w", m_bits, k, by="g")
-    assert {
-        (r["g"], r["word"], r["bits"]) for r in merged.collect()
-    } == {(r["g"], r["word"], r["bits"]) for r in oneshot.collect()}
 
 
 def test_filter_unseen_gate(spark):

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from hospital_stain_tracker_data_pipeline_spark.operators.bpe import (
     EOW,
     bpe_encode,
-    bpe_vocab,
     train_bpe,
     word_histogram,
 )
@@ -137,21 +136,6 @@ def test_bpe_encode_matches_reference_and_reconstructs(spark):
         assert "".join(enc[doc_id]).replace(EOW, " ").split() == (
             text.lower().split()
         )
-
-
-def test_bpe_vocab_counts_conserve_words(spark):
-    docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    merges = train_bpe(docs, 10)
-    vocab = bpe_vocab(docs, merges)
-    # every word ends in exactly one </w>-carrying token, so the
-    # </w>-token count total equals the corpus word count
-    eow_total = (
-        vocab.filter(F.col("token").endswith(EOW))
-        .agg(F.sum("count"))
-        .collect()[0][0]
-    )
-    n_words = sum(len(t.split()) for _, t in CORPUS)
-    assert eow_total == n_words
 
 
 def test_tokenizer_efficiency_matches_python_replay(spark, sf_dir):

@@ -1,5 +1,5 @@
 """Media curation recipe: header-only modality routing
-(``classify_media``) + the end-to-end mixed-lake pass
+(``tag_media_modality``) + the end-to-end mixed-lake pass
 (``curate_media``: exact payload dedup → per-modality near-dup
 tiers, non-native and unknown payloads passing through).
 
@@ -22,15 +22,14 @@ import struct
 import numpy as np
 import pandas as pd
 
-from hospital_stain_tracker_data_pipeline_spark.operators.flac import encode_flac
+from media_encoders import build_mjpeg_mp4, encode_flac
 from hospital_stain_tracker_data_pipeline_spark.operators.jpeg import encode_jpeg
 from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
     build_mjpeg_avi,
-    build_mjpeg_mp4,
-    classify_media,
     encode_bmp,
     encode_png,
     encode_wav,
+    tag_media_modality,
     to_media_table,
 )
 from hospital_stain_tracker_data_pipeline_spark.pipeline.curate import curate_media
@@ -81,7 +80,7 @@ def _media(spark, rows: dict):
     )
 
 
-def test_classify_media_truth_table(spark):
+def test_tag_media_modality_truth_table(spark):
     base_px = _px(1)
     tone = _tone([(440, 4000)])
     rows = {
@@ -115,24 +114,24 @@ def test_classify_media_truth_table(spark):
         22: xvid_avi,
     })
     got = {
-        r["media_id"]: (r["modality"], r["mime"], r["native"])
-        for r in classify_media(_media(spark, rows)).collect()
+        r["media_id"]: (r["modality"], r["native"])
+        for r in tag_media_modality(_media(spark, rows)).collect()
     }
-    assert got[0] == ("image", "image/bmp", True)
-    assert got[1] == ("image", "image/png", True)
-    assert got[2] == ("image", "image/jpeg", True)
-    assert got[3] == ("image", "image/webp", False)
-    assert got[5] == ("image", "image/bmp", False)
-    assert got[6] == ("image", "image/jpeg", False)
-    assert got[10] == ("audio", "audio/wav", True)
-    assert got[11] == ("audio", "audio/flac", True)
-    assert got[12] == ("audio", "audio/wav", False)
-    assert got[13] == ("audio", "audio/wav", False)  # zero-length data
-    assert got[20] == ("video", "video/x-msvideo", True)
-    assert got[21] == ("video", "video/mp4", True)
-    assert got[22] == ("video", "video/x-msvideo", False)  # non-MJPEG
-    assert got[40] == ("unknown", None, False)
-    assert got[41] == ("unknown", None, False)
+    assert got[0] == ("image", True)
+    assert got[1] == ("image", True)
+    assert got[2] == ("image", True)
+    assert got[3] == ("image", False)
+    assert got[5] == ("image", False)
+    assert got[6] == ("image", False)
+    assert got[10] == ("audio", True)
+    assert got[11] == ("audio", True)
+    assert got[12] == ("audio", False)
+    assert got[13] == ("audio", False)  # zero-length data
+    assert got[20] == ("video", True)
+    assert got[21] == ("video", True)
+    assert got[22] == ("video", False)  # non-MJPEG
+    assert got[40] == ("unknown", False)
+    assert got[41] == ("unknown", False)
 
 
 def test_curate_media_end_to_end(spark):

@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from media_encoders import build_mjpeg_mp4, encode_flac, encode_jpeg_progressive
 from hospital_stain_tracker_data_pipeline_spark.functions.text import (
     fingerprint64_hex,
     lang_id,
@@ -328,14 +329,14 @@ def test_multimodal_real_header_decode(spark):
     assert rows[1].n_bytes == len(png)
 
 
-def test_multimodal_audio_wav_real_decode(spark):
+def test_multimodal_audio_wav_real_decode():
     """A genuine WAV payload (synthesized RIFF container) yields its
     true sample rate / channels / bit depth / duration through the
-    Arrow audio extractor with fake_decode=False."""
+    stdlib RIFF walk; a non-audio payload sniffs to None."""
     import struct as _s
 
     from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        extract_audio_features,
+        sniff_wav,
     )
 
     rate, channels, bits, n_frames = 16000, 2, 16, 16000 * 3  # 3 s stereo
@@ -347,64 +348,22 @@ def test_multimodal_audio_wav_real_decode(spark):
         + b"fmt " + _s.pack("<I", len(fmt)) + fmt
         + b"data" + _s.pack("<I", len(data)) + data
     )
-    df = spark.createDataFrame([(7, bytearray(wav))], "doc_id long, payload binary")
-    media = to_media_table(df, "doc_id", "payload", source="t")
-    [r] = extract_audio_features(media, fake_decode=False).collect()
-    assert (r.mime, r.sample_rate, r.channels, r.bits_per_sample) == (
+    r = sniff_wav(wav)
+    assert (r["mime"], r["sample_rate"], r["channels"], r["bits_per_sample"]) == (
         "audio/wav", rate, channels, bits,
     )
-    assert r.n_frames == n_frames and abs(r.duration_s - 3.0) < 1e-9
-
-    # non-audio payloads: explicit stub unless the fake is requested
-    txt = to_media_table(_docs(spark), "doc_id", "text", source="t")
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="RIFF/WAVE|NotImplementedError"):
-        extract_audio_features(txt, fake_decode=False).collect()
-    fake = extract_audio_features(txt, fake_decode=True).collect()
-    assert len(fake) == len(DOCS) and all(f.duration_s > 0 for f in fake)
+    assert r["n_frames"] == n_frames and abs(r["duration_s"] - 3.0) < 1e-9
+    assert sniff_wav(DOCS[0][2].encode()) is None
 
 
-def test_multimodal_resize_plumbing(spark):
-    """Resize stub path (a header-only JPEG with no tables/scan —
-    outside every native decoder's envelope): real source dims from
-    the header sniff; deterministic fixed-size fake payload out;
-    explicit stub raise without the fake flag. (BMP, PNG and baseline
-    JPEG no longer hit this path — all three have real native codecs,
-    tested separately.)"""
-    import struct as _s
-
-    import pytest as _pytest
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        resize_images,
-    )
-
-    jpeg = (
-        b"\xff\xd8"
-        + b"\xff\xe0" + _s.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-        + b"\xff\xc0" + _s.pack(">H", 17) + b"\x08" + _s.pack(">HH", 200, 320)
-        + b"\x00" * 10
-        + b"\xff\xd9"
-    )
-    df = spark.createDataFrame([(1, bytearray(jpeg))], "doc_id long, payload binary")
-    media = to_media_table(df, "doc_id", "payload", source="t")
-    [r] = resize_images(media, 64, 48, fake_decode=True).collect()
-    assert (r.src_width, r.src_height) == (320, 200)
-    assert (r.width, r.height) == (64, 48)
-    assert r.mime == "image/jpeg" and len(r.payload) == 64 * 48 * 3
-    with _pytest.raises(Exception, match="PIL|NotImplementedError"):
-        resize_images(media, 64, 48, fake_decode=False).collect()
-
-
-def test_multimodal_video_mp4_sniff_and_frame_sampling(spark):
+def test_multimodal_video_mp4_sniff_duration():
     """A synthesized MP4 (ftyp + moov/mvhd v0) decodes its real
-    duration; frame sampling explodes one row per stride with correct
-    timestamps (1→N mapInPandas shape)."""
+    duration; with no sample tables there is no JPEG track."""
     import struct as _s
 
     from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        sample_video_frames,
+        mp4_jpeg_track,
+        sniff_mp4,
     )
 
     def box(typ, payload):
@@ -413,18 +372,9 @@ def test_multimodal_video_mp4_sniff_and_frame_sampling(spark):
     # mvhd v0: ver/flags + ctime + mtime + timescale(1000) + duration(3500ms)
     mvhd = box(b"mvhd", b"\x00\x00\x00\x00" + b"\x00" * 8 + _s.pack(">II", 1000, 3500) + b"\x00" * 80)
     mp4 = box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2") + box(b"moov", mvhd)
-    df = spark.createDataFrame([(9, bytearray(mp4))], "doc_id long, payload binary")
-    media = to_media_table(df, "doc_id", "payload", source="t")
-
-    rows = sample_video_frames(media, stride_s=1.0, fake_decode=False).collect()
-    assert all(r.mime == "video/mp4" and abs(r.duration_s - 3.5) < 1e-9 for r in rows)
-    assert [r.frame_idx for r in rows] == [0, 1, 2, 3]  # ceil(3.5 / 1.0)
-    assert [r.frame_ts_s for r in rows] == [0.0, 1.0, 2.0, 3.0]
-    assert all(r.frame is None for r in rows)  # real frame decode stubbed
-
-    # fake path carries deterministic frame bytes
-    fake = sample_video_frames(media, stride_s=1.0, fake_decode=True).collect()
-    assert all(f.frame is not None and len(f.frame) == 16 for f in fake)
+    got = sniff_mp4(mp4)
+    assert got["mime"] == "video/mp4" and abs(got["duration_s"] - 3.5) < 1e-9
+    assert mp4_jpeg_track(mp4) is None
 
 
 def _rgb_gradient(h, w):
@@ -485,35 +435,6 @@ def test_bmp_decode_topdown_negative_height():
     got = decode_bmp_pixels(raw)
     assert got is not None and _np.array_equal(got, px)
     assert _np.array_equal(got, decode_bmp_pixels(encode_bmp(px)))
-
-
-def test_resize_images_real_bmp_end_to_end(spark):
-    """The BMP path is real under BOTH fake_decode flags: the output
-    payload is itself a valid decodable 24-bit BMP of the target
-    dimensions (not the width*height*3 stand-in other formats get),
-    and nearest-neighbor resampling picks exact source pixels."""
-    import numpy as _np
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        decode_bmp_pixels,
-        encode_bmp,
-        resize_images,
-        resize_rgb_nearest,
-    )
-
-    src = _rgb_gradient(48, 64)
-    bmp = encode_bmp(src)
-    df = spark.createDataFrame([(1, bytearray(bmp))], "doc_id long, payload binary")
-    media = to_media_table(df, "doc_id", "payload", source="t")
-    for flag in (False, True):
-        [r] = resize_images(media, 16, 12, fake_decode=flag).collect()
-        assert (r.mime, r.src_width, r.src_height) == ("image/bmp", 64, 48)
-        out = decode_bmp_pixels(bytes(r.payload))
-        assert out is not None and out.shape == (12, 16, 3)
-        assert _np.array_equal(out, resize_rgb_nearest(src, 16, 12))
-        # documented size difference vs the stand-in: 54-byte header +
-        # padded stride, not width*height*3
-        assert len(r.payload) == 54 + ((16 * 3 + 3) & ~3) * 12
 
 
 def test_sniff_mp4_largesize_and_size0_boxes():
@@ -587,34 +508,6 @@ def test_null_text_and_embedding_rows_survive(spark):
         for r in ann_lsh_pairs(vecs, threshold=0.9, dim=4).collect()
     }
     assert all(99 not in p for p in ann) and (0, 3) in ann
-
-
-def test_ngram_contamination_flags_eval_overlap(spark):
-    """A corpus doc embedding a 13-token span of an eval doc is flagged
-    (with the right shared-span count); clean docs are not."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        ngram_contamination,
-    )
-
-    span = " ".join(f"s{i}" for i in range(14))  # 14 tokens → two 13-grams
-    corpus = spark.createDataFrame(
-        [
-            (1, f"intro words {span} trailing text here"),
-            (2, "totally unrelated content about other things entirely"),
-            (3, " ".join(f"s{i}" for i in range(13))),  # exactly one 13-gram
-        ],
-        "doc_id long, text string",
-    )
-    eval_set = spark.createDataFrame(
-        [(100, f"prefix {span} suffix")], "eval_id long, text string"
-    )
-    got = {
-        (r.doc_id, r.eval_id): r.shared_ngrams
-        for r in ngram_contamination(corpus, eval_set, n=13).collect()
-    }
-    assert got[(1, 100)] == 2  # both 13-grams of the 14-token span
-    assert got[(3, 100)] == 1
-    assert all(doc != 2 for doc, _ in got)
 
 
 def test_connected_components_min_label(spark):
@@ -779,69 +672,23 @@ def test_png_decode_rgba_drops_alpha_and_rejects_exotics():
     assert decode_png_pixels(b"\x89PNG\r\n\x1a\njunk") is None
 
 
-def test_resize_images_real_png_end_to_end(spark):
-    """PNG joins BMP as a real pixel path: the resized payload is a
-    valid decodable PNG of the target dimensions under BOTH
-    fake_decode flags, with exact nearest-neighbor pixels."""
+def test_wav_codec_roundtrip_stereo():
+    """16-bit PCM WAV is lossless end to end: a stereo sine encodes and
+    decodes back to the same rate and the same frames."""
     import numpy as _np
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        decode_png_pixels,
-        encode_png,
-        resize_images,
-        resize_rgb_nearest,
-    )
-
-    src = _rgb_gradient(40, 60)
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_png(src)))], "doc_id long, payload binary"
-    )
-    media = to_media_table(df, "doc_id", "payload", source="t")
-    for flag in (False, True):
-        [r] = resize_images(media, 15, 10, fake_decode=flag).collect()
-        assert (r.mime, r.src_width, r.src_height) == ("image/png", 60, 40)
-        out = decode_png_pixels(bytes(r.payload))
-        assert out is not None and out.shape == (10, 15, 3)
-        assert _np.array_equal(out, resize_rgb_nearest(src, 15, 10))
-
-
-def test_wav_resample_real_end_to_end(spark):
-    """16-bit PCM WAV resampling is real: a 16 kHz sine decimated to
-    8 kHz keeps exactly every other frame (the integer index map), the
-    output is itself a valid decodable WAV, and non-PCM payloads raise
-    the documented stub without the fake flag."""
-    import numpy as _np
-    import pytest as _pytest
 
     from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
         decode_wav_samples,
         encode_wav,
-        resample_audio,
     )
 
     n, rate = 1600, 16000
     t = _np.arange(n)
     wave = (_np.sin(2 * _np.pi * 440 * t / rate) * 20000).astype(_np.int16)
     stereo = _np.stack([wave, -wave], axis=1)
-    src = encode_wav(stereo, rate)
-    # codec round-trip first
-    dec = decode_wav_samples(src)
+    dec = decode_wav_samples(encode_wav(stereo, rate))
     assert dec is not None and dec[0] == rate
     assert _np.array_equal(dec[1], stereo)
-
-    df = spark.createDataFrame([(1, bytearray(src))], "doc_id long, payload binary")
-    media = to_media_table(df, "doc_id", "payload", source="t")
-    [r] = resample_audio(media, 8000).collect()
-    assert (r.src_rate, r.rate, r.n_frames) == (16000, 8000, 800)
-    out_rate, out = decode_wav_samples(bytes(r.payload))
-    assert out_rate == 8000 and out.shape == (800, 2)
-    assert _np.array_equal(out, stereo[::2])  # exact decimation
-
-    txt = to_media_table(_docs(spark), "doc_id", "text", source="t")
-    with _pytest.raises(Exception, match="PCM|NotImplementedError"):
-        resample_audio(txt, 8000).collect()
-    fake = resample_audio(txt, 8000, fake_decode=True).collect()
-    assert len(fake) == len(DOCS) and all(f.n_frames > 0 for f in fake)
 
 
 def test_wav_decode_rejects_non_pcm_and_zero_channels():
@@ -957,7 +804,6 @@ def test_jpeg_progressive_roundtrip_matches_baseline():
     from hospital_stain_tracker_data_pipeline_spark.operators.jpeg import (
         decode_jpeg_pixels,
         encode_jpeg,
-        encode_jpeg_progressive,
     )
 
     rng = _np.random.default_rng(11)
@@ -989,33 +835,6 @@ def test_jpeg_progressive_roundtrip_matches_baseline():
     assert _np.array_equal(base, prog)
 
 
-def test_resize_images_real_progressive_jpeg(spark):
-    """A PROGRESSIVE payload goes through ``resize_images`` on the real
-    decode path (no fake flag): decoded natively, resampled, re-encoded
-    baseline — the final stub class for JPEG-family payloads is gone."""
-    import numpy as _np
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.jpeg import (
-        decode_jpeg_pixels,
-        encode_jpeg_progressive,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        resize_images,
-        resize_rgb_nearest,
-    )
-
-    src = _gradient_rgb(48, 64)
-    jpg = encode_jpeg_progressive(src, quality=95, successive=True)
-    df = spark.createDataFrame([(1, bytearray(jpg))], "doc_id long, payload binary")
-    media = to_media_table(df, "doc_id", "payload", source="t")
-    [r] = resize_images(media, 16, 12, fake_decode=False).collect()
-    assert (r.mime, r.src_width, r.src_height) == ("image/jpeg", 64, 48)
-    out = decode_jpeg_pixels(bytes(r.payload))
-    assert out is not None and out.shape == (12, 16, 3)
-    want = resize_rgb_nearest(decode_jpeg_pixels(jpg), 16, 12)
-    assert _np.abs(out.astype(int) - want.astype(int)).max() <= 8
-
-
 def test_jpeg_progressive_property_sweep():
     """Randomized adversarial sweep (noise / gradient / flat-impulse ×
     random sizes × qualities × subsampling): every progressive payload
@@ -1026,7 +845,6 @@ def test_jpeg_progressive_property_sweep():
     from hospital_stain_tracker_data_pipeline_spark.operators.jpeg import (
         decode_jpeg_pixels,
         encode_jpeg,
-        encode_jpeg_progressive,
     )
 
     rng = _np.random.default_rng(23)
@@ -1057,41 +875,10 @@ def test_jpeg_progressive_property_sweep():
         )
 
 
-def test_resize_images_real_jpeg_end_to_end(spark):
-    """The JPEG path is real under BOTH fake_decode flags: a baseline
-    JPEG payload decodes (pure-numpy Huffman+IDCT), resamples, and
-    re-encodes to a valid baseline JPEG of the target size whose
-    pixels match the source resample within codec loss."""
-    import numpy as _np
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.jpeg import (
-        decode_jpeg_pixels,
-        encode_jpeg,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        resize_images,
-        resize_rgb_nearest,
-    )
-
-    src = _gradient_rgb(48, 64)
-    jpg = encode_jpeg(src, quality=95)
-    df = spark.createDataFrame([(1, bytearray(jpg))], "doc_id long, payload binary")
-    media = to_media_table(df, "doc_id", "payload", source="t")
-    for flag in (True, False):
-        [r] = resize_images(media, 16, 12, fake_decode=flag).collect()
-        assert (r.mime, r.src_width, r.src_height) == ("image/jpeg", 64, 48)
-        out = decode_jpeg_pixels(bytes(r.payload))
-        assert out is not None and out.shape == (12, 16, 3)
-        want = resize_rgb_nearest(decode_jpeg_pixels(jpg), 16, 12)
-        assert _np.abs(out.astype(int) - want.astype(int)).max() <= 8
-
-
-def test_extract_pixel_stats_real_decode_all_three_codecs(spark):
-    """Pixel statistics come from ACTUALLY decoded planes: exact for
-    the lossless codecs (BMP, PNG), within codec loss for JPEG, with
-    decoded=True marking the real rows; a non-decodable payload uses
-    the deterministic stand-in only under fake_decode and raises
-    without it."""
+def test_decode_any_pixels_all_three_codecs():
+    """The fingerprint tier's decode chain returns ACTUAL planes: exact
+    for the lossless codecs (BMP, PNG), within codec loss for JPEG; a
+    non-image payload decodes to None."""
     import numpy as _np
     import pytest as _pytest
 
@@ -1099,44 +886,29 @@ def test_extract_pixel_stats_real_decode_all_three_codecs(spark):
         encode_jpeg,
     )
     from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
+        _decode_any_pixels,
         encode_bmp,
         encode_png,
-        extract_pixel_stats,
     )
 
     src = _gradient_rgb(32, 48)
     f = src.astype(float)
     luma = 0.299 * f[..., 0] + 0.587 * f[..., 1] + 0.114 * f[..., 2]
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(encode_bmp(src))),
-            (2, bytearray(encode_png(src))),
-            (3, bytearray(encode_jpeg(src, quality=95))),
-        ],
-        "doc_id long, payload binary",
-    )
-    media = to_media_table(df, "doc_id", "payload", source="t")
-    rows = {r.media_id: r for r in extract_pixel_stats(media).collect()}
-    assert all(rows[i].decoded for i in (1, 2, 3))
-    assert {rows[1].mime, rows[2].mime, rows[3].mime} == {
-        "image/bmp", "image/png", "image/jpeg"
-    }
-    for i in (1, 2):  # lossless: exact
-        assert rows[i].mean_r == _pytest.approx(f[..., 0].mean(), abs=1e-9)
-        assert rows[i].mean_luma == _pytest.approx(luma.mean(), abs=1e-9)
-        assert rows[i].std_luma == _pytest.approx(luma.std(), abs=1e-9)
-    assert rows[3].mean_luma == _pytest.approx(luma.mean(), abs=2.0)
-    assert rows[3].std_luma == _pytest.approx(luma.std(), abs=3.0)
-    assert (rows[1].width, rows[1].height) == (48, 32)
 
-    junk = spark.createDataFrame(
-        [(9, bytearray(b"not an image at all"))], "doc_id long, payload binary"
-    )
-    jm = to_media_table(junk, "doc_id", "payload", source="t")
-    [r] = extract_pixel_stats(jm, fake_decode=True).collect()
-    assert r.decoded is False and r.std_luma == 0.0
-    with _pytest.raises(Exception, match="PIL|NotImplementedError"):
-        extract_pixel_stats(jm, fake_decode=False).collect()
+    def stats(px):
+        g = px.astype(float)
+        lum = 0.299 * g[..., 0] + 0.587 * g[..., 1] + 0.114 * g[..., 2]
+        return lum.mean(), lum.std()
+
+    for raw in (encode_bmp(src), encode_png(src)):  # lossless: exact
+        px = _decode_any_pixels(raw)
+        assert px is not None and _np.array_equal(px, src)
+    px = _decode_any_pixels(encode_jpeg(src, quality=95))
+    assert px is not None and px.shape == (32, 48, 3)
+    mean, std = stats(px)
+    assert mean == _pytest.approx(luma.mean(), abs=2.0)
+    assert std == _pytest.approx(luma.std(), abs=3.0)
+    assert _decode_any_pixels(b"not an image at all") is None
 
 
 def test_jpeg_codec_property_sweep_noise_and_extreme_dims():
@@ -1174,11 +946,11 @@ def test_jpeg_codec_property_sweep_noise_and_extreme_dims():
             assert d is not None and d.shape == (h, w, 3), (h, w, sub)
 
 
-def test_png_grayscale_and_palette_decode(spark):
+def test_png_grayscale_and_palette_decode():
     """PNG color types 0 (grayscale) and 3 (palette) decode natively:
     gray replicates to identical RGB channels, palette rows resolve
     through PLTE, and a corrupt palette index returns None instead of
-    crashing. A palette PNG runs the REAL resize path end-to-end."""
+    crashing."""
     import struct as _s
     import zlib as _z
 
@@ -1186,7 +958,6 @@ def test_png_grayscale_and_palette_decode(spark):
 
     from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
         decode_png_pixels,
-        resize_images,
     )
 
     def chunk(typ, payload):
@@ -1220,15 +991,6 @@ def test_png_grayscale_and_palette_decode(spark):
     # index past the palette -> None, not a crash
     bad = png(3, 2, 2, [[0, 9], [2, 3]], plte=pal)
     assert decode_png_pixels(bad) is None
-
-    # real resize end-to-end on the palette payload (no fake flag)
-    df = spark.createDataFrame([(1, bytearray(p))], "doc_id long, payload binary")
-    media = to_media_table(df, "doc_id", "payload", source="t")
-    [r] = resize_images(media, 4, 4, fake_decode=False).collect()
-    out = decode_png_pixels(bytes(r.payload))
-    assert out is not None and out.shape == (4, 4, 3)
-    assert list(out[0, 0]) == [255, 0, 0]  # nearest keeps corner colors
-    assert list(out[3, 3]) == [255, 255, 255]
 
 
 def _lzw_encode_gif(indices, mcs):
@@ -1303,18 +1065,15 @@ def _make_gif(idx, palette, mcs, interlace=False, local=False):
     return out + b"\x00\x3b"
 
 
-def test_gif_decode_lzw_palette_interlace(spark):
+def test_gif_decode_lzw_palette_interlace():
     """GIF first-frame decode is real: LZW round-trips exactly against
     a reference writer (including multiple code-size growths at
     mcs=2), interlaced row order and local color tables resolve, and
-    corrupt/truncated streams return None. A GIF payload runs the REAL
-    resize path end-to-end (re-encoded as lossless PNG)."""
+    corrupt/truncated streams return None."""
     import numpy as _np
 
     from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
         decode_gif_pixels,
-        decode_png_pixels,
-        resize_images,
     )
 
     rng = _np.random.default_rng(7)
@@ -1335,14 +1094,6 @@ def test_gif_decode_lzw_palette_interlace(spark):
     g = _make_gif(idx, pal, 3)
     assert decode_gif_pixels(g[:20]) is None
     assert decode_gif_pixels(b"junk") is None
-
-    df = spark.createDataFrame([(1, bytearray(g))], "doc_id long, payload binary")
-    media = to_media_table(df, "doc_id", "payload", source="t")
-    [r] = resize_images(media, 5, 5, fake_decode=False).collect()
-    assert (r.mime, r.src_width, r.src_height) == ("image/gif", 11, 17)
-    out = decode_png_pixels(bytes(r.payload))
-    assert out is not None and out.shape == (5, 5, 3)
-    assert list(out[0, 0]) == list(pal[idx][0, 0])  # nearest keeps corners
 
 
 def test_png_adam7_interlaced_decode():
@@ -1509,7 +1260,6 @@ def test_flac_codec_roundtrip_all_modes():
 
     from hospital_stain_tracker_data_pipeline_spark.operators.flac import (
         decode_flac_samples,
-        encode_flac,
         sniff_flac,
     )
 
@@ -1544,62 +1294,6 @@ def test_flac_codec_roundtrip_all_modes():
     bad = bytearray(encode_flac(tone[:, None], 8000))
     bad[-3] ^= 0xFF  # corrupt inside the last frame -> CRC-16 catches
     assert decode_flac_samples(bytes(bad)) is None
-
-
-def test_flac_resample_real_end_to_end(spark):
-    """FLAC payloads go through ``resample_audio`` on the REAL path:
-    native rice/LPC decode, exact integer decimation, re-encoded as a
-    valid FLAC (mime-preserving); ``extract_audio_features`` reads the
-    STREAMINFO header for real."""
-    import numpy as _np
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.flac import (
-        decode_flac_samples,
-        encode_flac,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        extract_audio_features,
-        resample_audio,
-    )
-
-    n, rate = 1600, 16000
-    t = _np.arange(n)
-    wave = (_np.sin(2 * _np.pi * 440 * t / rate) * 20000).astype(_np.int16)
-    stereo = _np.stack([wave, -wave], axis=1)
-    src = encode_flac(stereo, rate, stereo="mid_side")
-    df = spark.createDataFrame([(1, bytearray(src))], "doc_id long, payload binary")
-    media = to_media_table(df, "doc_id", "payload", source="t")
-    [r] = resample_audio(media, 8000).collect()
-    assert (r.src_rate, r.rate, r.n_frames) == (16000, 8000, 800)
-    out_rate, out = decode_flac_samples(bytes(r.payload))
-    assert out_rate == 8000 and out.shape == (800, 2)
-    assert _np.array_equal(out, stereo[::2])  # exact decimation
-    [f] = extract_audio_features(media).collect()
-    assert (f.sample_rate, f.channels, f.n_frames) == (16000, 2, 1600)
-    assert f.mime == "audio/flac"
-
-
-def test_ngram_contamination_shuffle_path_matches_broadcast(spark, sf_dir):
-    """broadcast_eval=False (the too-big-to-broadcast escape hatch)
-    must produce the identical contamination pair set, and its plan
-    must NOT carry the forced broadcast of the eval side."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        ngram_contamination,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.sources.tables import (
-        load_fixture_table,
-    )
-
-    docs = load_fixture_table(spark, sf_dir, "documents")
-    eval_set = docs.limit(5).select(
-        F.col("doc_id").alias("eval_id"), "text"
-    )
-    key = lambda df: sorted(
-        (r["doc_id"], r["eval_id"], r["shared_ngrams"]) for r in df.collect()
-    )
-    a = key(ngram_contamination(docs, eval_set, n=5))
-    b = key(ngram_contamination(docs, eval_set, n=5, broadcast_eval=False))
-    assert a == b and a, "contamination sets must match and be non-empty"
 
 
 def test_sniff_webp_all_three_chunk_forms():
@@ -1659,6 +1353,7 @@ def test_sniff_mp3_walks_frames_exactly():
     assert got["sample_rate"] == 44100 and got["channels"] == 2
     assert got["n_frames"] == 10 * 1152
     assert got["duration_s"] == pytest.approx(10 * 1152 / 44100)
+    assert got["bits_per_sample"] is None  # lossy: no integer width
     # padded frames change lengths, not the frame count (VBR-safe walk)
     got2 = sniff_mp3(_mp3_stream(8, pad_every=3, id3v2=False, id3v1=False))
     assert got2["n_frames"] == 8 * 1152
@@ -1668,29 +1363,12 @@ def test_sniff_mp3_walks_frames_exactly():
     assert sniff_mp3(b"not audio") is None
 
 
-def test_extract_audio_features_mp3_end_to_end(spark):
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        extract_audio_features,
-    )
-
-    payload = _mp3_stream(25)
-    media = spark.createDataFrame(
-        [(1, bytearray(payload), ("audio/mpeg", len(payload), "t"))],
-        "media_id long, payload binary, meta struct<mime string, n_bytes long, source string>",
-    )
-    [r] = extract_audio_features(media).collect()
-    assert r["mime"] == "audio/mpeg"
-    assert r["n_frames"] == 25 * 1152
-    assert r["bits_per_sample"] is None
-    assert r["duration_s"] == pytest.approx(25 * 1152 / 44100)
-
-
-def test_sample_video_frames_real_mjpeg_avi_end_to_end(spark):
+def test_mjpeg_avi_frames_decode_end_to_end():
     """REAL video frame extraction with zero media libraries: encode
     solid-color frames with the library's own JPEG codec, assemble a
-    RIFF/AVI MJPEG container, sample frames through the Spark path,
-    and decode the returned frame bytes back to pixels — each sampled
-    timestamp must yield the frame whose color encodes its index."""
+    RIFF/AVI MJPEG container, and decode the frame bytes the AVI
+    index points at back to pixels — each frame's color encodes its
+    index."""
     import numpy as np
 
     from hospital_stain_tracker_data_pipeline_spark.operators.jpeg import (
@@ -1699,7 +1377,6 @@ def test_sample_video_frames_real_mjpeg_avi_end_to_end(spark):
     )
     from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
         build_mjpeg_avi,
-        sample_video_frames,
         sniff_avi,
     )
 
@@ -1712,24 +1389,12 @@ def test_sample_video_frames_real_mjpeg_avi_end_to_end(spark):
     meta = sniff_avi(avi)
     assert meta["n_frames"] == n_frames and meta["fps"] == fps
     assert meta["duration_s"] == pytest.approx(2.0)
-
-    media = spark.createDataFrame(
-        [(7, bytearray(avi), ("video/x-msvideo", len(avi), "t"))],
-        "media_id long, payload binary, "
-        "meta struct<mime string, n_bytes long, source string>",
-    )
-    rows = sorted(
-        sample_video_frames(media, stride_s=0.5).collect(),
-        key=lambda r: r["frame_idx"],
-    )
-    assert len(rows) == 4  # 2.0s / 0.5s
-    for r in rows:
-        assert r["mime"] == "video/x-msvideo"
-        px = decode_jpeg_pixels(bytes(r["frame"]))
+    assert meta["mime"] == "video/x-msvideo"
+    assert len(meta["frames"]) == n_frames
+    for i, (off, ln) in enumerate(meta["frames"]):
+        px = decode_jpeg_pixels(avi[off:off + ln])
         assert px is not None and px.shape == (16, 24, 3)
-        # ts 0.0/0.5/1.0/1.5 at 4 fps -> frames 0/2/4/6
-        want = int(round(r["frame_ts_s"] * fps)) * 30
-        assert abs(float(px.mean()) - want) < 3.0, (r["frame_idx"], px.mean())
+        assert abs(float(px.mean()) - i * 30) < 3.0, (i, px.mean())
 
 
 def _ogg_page(serial, seq, granule, segments, header_type=0):
@@ -1769,10 +1434,10 @@ def test_sniff_ogg_vorbis_duration_from_last_granule():
     assert sniff_ogg_vorbis(b"not ogg at all, promise" * 4) is None
 
 
-def test_sample_video_frames_real_jpeg_mp4_end_to_end(spark):
+def test_mp4_jpeg_track_frames_decode_end_to_end():
     """MP4 with a 'jpeg'-coded track: the full sample-table walk
-    (stsd/stsz/stsc/stco/stts) yields real frame bytes at the sampled
-    timestamps, decodable by the repo's own JPEG codec."""
+    (stsd/stsz/stsc/stco/stts) yields each sample's real frame bytes
+    and decode time, decodable by the repo's own JPEG codec."""
     import numpy as np
 
     from hospital_stain_tracker_data_pipeline_spark.operators.jpeg import (
@@ -1780,9 +1445,7 @@ def test_sample_video_frames_real_jpeg_mp4_end_to_end(spark):
         encode_jpeg,
     )
     from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        build_mjpeg_mp4,
         mp4_jpeg_track,
-        sample_video_frames,
     )
 
     fps, n_frames = 5.0, 10
@@ -1793,32 +1456,18 @@ def test_sample_video_frames_real_jpeg_mp4_end_to_end(spark):
     mp4 = build_mjpeg_mp4(frames, 24, 16, fps=fps)
     track = mp4_jpeg_track(mp4)
     assert len(track["samples"]) == n_frames
-    assert track["times_s"][1] == pytest.approx(0.2)
-
-    media = spark.createDataFrame(
-        [(9, bytearray(mp4), ("video/mp4", len(mp4), "t"))],
-        "media_id long, payload binary, "
-        "meta struct<mime string, n_bytes long, source string>",
-    )
-    rows = sorted(
-        sample_video_frames(media, stride_s=0.5).collect(),
-        key=lambda r: r["frame_idx"],
-    )
-    assert len(rows) == 4  # 2.0s duration / 0.5s
-    for r in rows:
-        px = decode_jpeg_pixels(bytes(r["frame"]))
+    assert track["times_s"] == pytest.approx([i / fps for i in range(n_frames)])
+    for i, (off, ln) in enumerate(track["samples"]):
+        assert mp4[off:off + ln] == frames[i]
+        px = decode_jpeg_pixels(mp4[off:off + ln])
         assert px is not None and px.shape == (16, 24, 3)
-        # ts 0.0/0.5/1.0/1.5 at 5 fps -> last sample with t<=ts:
-        # frames 0/2/5/7 -> means 0/50/125/175
-        want = int(r["frame_ts_s"] * fps) * 25
-        assert abs(float(px.mean()) - want) < 3.0, (r["frame_idx"], px.mean())
+        assert abs(float(px.mean()) - i * 25) < 3.0, (i, px.mean())
 
 
 def test_mp4_jpeg_track_none_for_non_jpeg_codec():
     import struct as _s
 
     from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        build_mjpeg_mp4,
         mp4_jpeg_track,
     )
 
@@ -1829,7 +1478,10 @@ def test_mp4_jpeg_track_none_for_non_jpeg_codec():
     assert mp4_jpeg_track(b"plainly not a video") is None
 
 
-def test_extract_video_features_avi_and_mp4(spark):
+def test_sniff_avi_and_mp4_metadata():
+    """Container headers decode for real: AVI avih dims/fps/frame
+    count; ISO-BMFF duration from mvhd plus exact frame count and fps
+    from the JPEG track's sample tables."""
     import numpy as np
 
     from hospital_stain_tracker_data_pipeline_spark.operators.jpeg import (
@@ -1837,42 +1489,26 @@ def test_extract_video_features_avi_and_mp4(spark):
     )
     from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
         build_mjpeg_avi,
-        build_mjpeg_mp4,
-        extract_video_features,
+        mp4_jpeg_track,
+        sniff_avi,
+        sniff_mp4,
     )
 
     frames = [
         encode_jpeg(np.full((8, 12, 3), i * 50, dtype=np.uint8))
         for i in range(5)
     ]
-    avi = build_mjpeg_avi(frames, 12, 8, fps=5.0)
-    mp4 = build_mjpeg_mp4(frames, 12, 8, fps=5.0)
-    media = spark.createDataFrame(
-        [
-            (1, bytearray(avi), ("video/x-msvideo", len(avi), "t")),
-            (2, bytearray(mp4), ("video/mp4", len(mp4), "t")),
-        ],
-        "media_id long, payload binary, "
-        "meta struct<mime string, n_bytes long, source string>",
-    )
-    got = {r["media_id"]: r for r in extract_video_features(media).collect()}
-    a = got[1]
+    a = sniff_avi(build_mjpeg_avi(frames, 12, 8, fps=5.0))
     assert (a["mime"], a["width"], a["height"]) == ("video/x-msvideo", 12, 8)
-    assert a["fps"] == 5.0 and a["n_frames"] == 5
+    assert a["fps"] == 5.0 and len(a["frames"]) == 5
     assert a["duration_s"] == pytest.approx(1.0)
-    m = got[2]
-    assert m["mime"] == "video/mp4" and m["n_frames"] == 5
-    assert m["fps"] == pytest.approx(5.0)
+    mp4 = build_mjpeg_mp4(frames, 12, 8, fps=5.0)
+    m = sniff_mp4(mp4)
+    assert m["mime"] == "video/mp4"
     assert m["duration_s"] == pytest.approx(1.0)
-    # unrecognized payload raises without the fake
-    bad = spark.createDataFrame(
-        [(3, bytearray(b"nope"), ("x", 4, "t"))],
-        "media_id long, payload binary, "
-        "meta struct<mime string, n_bytes long, source string>",
-    )
-    with pytest.raises(Exception):
-        extract_video_features(bad).collect()
-    assert extract_video_features(bad, fake_decode=True).count() == 1
+    ts = mp4_jpeg_track(mp4)["times_s"]
+    assert len(ts) == 5 and 1.0 / (ts[1] - ts[0]) == pytest.approx(5.0)
+    assert sniff_avi(b"nope") is None and sniff_mp4(b"nope") is None
 
 
 def test_flac_unknown_length_stream_decodes():
@@ -1883,7 +1519,6 @@ def test_flac_unknown_length_stream_decodes():
 
     from hospital_stain_tracker_data_pipeline_spark.operators.flac import (
         decode_flac_samples,
-        encode_flac,
     )
 
     t = np.arange(2000)
@@ -2260,40 +1895,6 @@ def test_connected_components_default_node_universe(spark):
         for r in connected_components_min_label(edges).collect()
     }
     assert got == {2: 2, 5: 2, 9: 2, 11: 11, 12: 11}
-
-
-def test_tune_lsh_bands_properties():
-    """The tuner's pick tracks the threshold (higher threshold -> more
-    rows per band), its s50 sits near the requested threshold, biasing
-    fn_weight up never lowers recall (bands non-decreasing), and the
-    split always multiplies back to num_hashes."""
-    import pytest as _pytest
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        tune_lsh_bands,
-    )
-
-    lo = tune_lsh_bands(128, 0.3)
-    hi = tune_lsh_bands(128, 0.9)
-    for got in (lo, hi):
-        assert got["bands"] * got["rows_per_band"] == 128
-    # higher target similarity needs a steeper curve: more rows/band
-    assert hi["rows_per_band"] > lo["rows_per_band"]
-    # the effective threshold lands in the neighborhood of the ask
-    assert abs(lo["s50"] - 0.3) < 0.15
-    assert abs(hi["s50"] - 0.9) < 0.15
-    # recall bias: more bands (or equal), never fewer
-    recall = tune_lsh_bands(128, 0.5, fn_weight=10.0)
-    balanced = tune_lsh_bands(128, 0.5)
-    assert recall["bands"] >= balanced["bands"]
-    # the default operator geometry (32 hashes, 8 bands) is what the
-    # tuner picks near its design threshold
-    assert tune_lsh_bands(32, 0.5)["bands"] == 8
-
-    with _pytest.raises(ValueError, match="threshold"):
-        tune_lsh_bands(32, 1.0)
-    with _pytest.raises(ValueError, match="num_hashes"):
-        tune_lsh_bands(0, 0.5)
 
 
 def test_dedup_index_artifact_roundtrip_and_guards(spark, tmp_path):

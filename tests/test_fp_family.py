@@ -2,8 +2,8 @@
 
 Image, audio and video dedup share one code path
 (``operators/fingerprint.py`` + the tagged artifact in
-``operators/dedup.py`` + ``streaming.stream_fp_dedup_ingest`` + the
-``fp_index``/``fp_filter`` CLI), so each behaviour is one test,
+``operators/dedup.py`` + the ``fp_index``/``fp_filter`` CLI), so each
+behaviour is one test,
 parametrized over ``IMAGE``/``AUDIO``/``VIDEO`` with a per-family rig
 of real payloads:
 
@@ -15,7 +15,6 @@ of real payloads:
   / wrong-columns / mixed-tag artifacts fail loudly, append runs under
   the artifact's own params;
 - survivors-append feeds the gate; takedown remove + compact;
-- streaming twin == batch gate, exactly-once across two landing waves;
 - the CLI deployment flow;
 - the legacy image artifact (``_phash_algo``/``_phash_size`` columns)
   still loads and fscks, and refuses appends.
@@ -38,6 +37,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from media_encoders import build_mjpeg_mp4, encode_flac
 from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
     append_fp_index,
     compact_fp_index,
@@ -53,13 +53,10 @@ from hospital_stain_tracker_data_pipeline_spark.operators.fingerprint import (
     FAMILIES,
     IMAGE,
     VIDEO,
-    dedup_fp_against_corpus,
 )
-from hospital_stain_tracker_data_pipeline_spark.operators.flac import encode_flac
 from hospital_stain_tracker_data_pipeline_spark.operators.jpeg import encode_jpeg
 from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
     build_mjpeg_avi,
-    build_mjpeg_mp4,
     encode_bmp,
     encode_png,
     encode_wav,
@@ -87,8 +84,7 @@ def _image_rig():
         base=encode_bmp(base), base_alt=encode_png(base),
         near=encode_bmp(near), far=encode_bmp(255 - base),  # hamming 64
         other=encode_bmp(px(42)), fresh=encode_bmp(px(5)),
-        fresh_alt=encode_png(px(5)), ext=".bmp", alt_ext=".png",
-        mime="image/bmp", max_hamming=3,
+        fresh_alt=encode_png(px(5)), max_hamming=3,
         params={"algo": "ahash", "hash_size": 4},
         bad_params=[({"algo": "md5"}, "algo"), ({"hash_size": 9}, "hash_size")],
     )
@@ -110,7 +106,7 @@ def _audio_rig():
         far=encode_wav(tone([(300, 3800), (900, 2400)]), 8000),
         other=encode_wav(tone([(620, 4500), (1800, 2000)]), 8000),
         fresh=encode_wav(fresh, 8000), fresh_alt=encode_flac(fresh, 8000),
-        ext=".wav", alt_ext=".flac", mime="audio/wav", max_hamming=4,
+        max_hamming=4,
         params={},
         bad_params=[({"n_samples": 3}, "takes no parameter")],
     )
@@ -139,7 +135,7 @@ def _video_rig():
         near=avi(base_px, quality=85), far=avi(frames(23)),
         other=avi(frames(22)), fresh=avi(frames(43)),
         fresh_alt=avi(frames(43), fps=30.0),  # same content, other rate
-        ext=".avi", alt_ext=".mp4", mime="video/", max_hamming=6,
+        max_hamming=6,
         params={"n_samples": 4},
         bad_params=[({"n_samples": 0}, "n_samples"), ({"hash_size": 9}, "hash_size")],
     )
@@ -162,6 +158,15 @@ def _media(spark, payloads, ids=None):
     )
 
 
+def _gate(media, index, family, max_hamming, **params):
+    """The ``fp_filter`` CLI's corpus gate: ``match_corpus``, then a
+    left-anti join of the batch on the matched ids (corpus wins)."""
+    params = family.params(**params)
+    fps = family.fingerprint(media, **params)
+    matched = family.match_corpus(fps, index, params, max_hamming)
+    return media.join(matched, "media_id", "left_anti")
+
+
 def test_dedup_fp_against_corpus(spark, tmp_path, fam):
     """Corpus wins: a cross-codec re-encode of an indexed item drops
     (hamming 0), a near-dup drops, a far item and its within-batch
@@ -180,9 +185,7 @@ def test_dedup_fp_against_corpus(spark, tmp_path, fam):
         spark, [rig.base_alt, rig.near, rig.far, rig.far],
         ids=[100, 101, 102, 103],
     )
-    kept = dedup_fp_against_corpus(
-        new_media, index, family, max_hamming=rig.max_hamming, **params
-    )
+    kept = _gate(new_media, index, family, rig.max_hamming, **params)
     assert sorted(r["media_id"] for r in kept.collect()) == [102, 103]
 
     new_fps = family.fingerprint(new_media, **params)
@@ -306,18 +309,16 @@ def test_fp_index_append_feeds_corpus_gate(spark, tmp_path, fam):
 
     batch = _media(spark, [rig.near, rig.far], ids=[10, 11])
     index, params = load_fp_index(spark, path, family)
-    survivors = dedup_fp_against_corpus(
-        batch, index, family, max_hamming=rig.max_hamming, **params
-    )
+    survivors = _gate(batch, index, family, rig.max_hamming, **params)
     assert [r["media_id"] for r in survivors.collect()] == [11]
 
     fps = materialize(family.fingerprint(batch, **params))
     surv_fps = fps.join(survivors.select("media_id"), "media_id", "left_semi")
     assert append_fp_index(spark, path, surv_fps, family) == 1
 
-    regate = dedup_fp_against_corpus(
+    regate = _gate(
         batch, load_fp_index(spark, path, family)[0], family,
-        max_hamming=rig.max_hamming, **params,
+        rig.max_hamming, **params,
     )
     assert regate.count() == 0
     # appending nothing is a no-op, not a corrupt artifact
@@ -349,93 +350,6 @@ def test_fp_index_remove_and_compact(spark, tmp_path, fam):
     assert compact_fp_index(spark, path, family, force=True)["compacted"]
     idx, _ = load_fp_index(spark, path, family)
     assert sorted(r["media_id"] for r in idx.collect()) == [1, 3]
-
-
-def test_stream_fp_dedup_ingest(spark, tmp_path, fam):
-    """Streaming twin == batch gate: files land, each is decoded and
-    fingerprinted once, corpus near-dups drop, survivors' hashes land
-    in the sink; a second wave processes ONLY the new files
-    (checkpointed exactly-once) and the verdicts match the batch
-    operator's; the sink's hashes grow the index so a re-gate drops
-    everything."""
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_fp_dedup_ingest,
-    )
-
-    family, rig = fam
-    h = family.hash_col
-    index = family.fingerprint(_media(spark, [rig.base, rig.other])).select(
-        "media_id", h
-    )
-    land = tmp_path / "landing"
-    land.mkdir()
-    sink = str(tmp_path / "sink")
-    (land / f"dup{rig.alt_ext}").write_bytes(rig.base_alt)
-    (land / f"near{rig.ext}").write_bytes(rig.near)
-    (land / f"keep{rig.ext}").write_bytes(rig.far)
-
-    def run():
-        out = stream_fp_dedup_ingest(
-            spark, str(land), index, sink, family,
-            max_hamming=rig.max_hamming,
-        )
-        return out, {os.path.basename(r["path"]) for r in out.collect()}
-
-    out1, kept1 = run()
-    assert kept1 == {f"keep{rig.ext}"}
-    [row] = out1.collect()
-    assert row["decoded"] is True and row["mime"].startswith(rig.mime)
-
-    (land / f"wave2_keep{rig.ext}").write_bytes(rig.fresh)
-    (land / f"wave2_dup{rig.ext}").write_bytes(rig.base)
-    out2, kept2 = run()
-    assert kept2 == {f"keep{rig.ext}", f"wave2_keep{rig.ext}"}
-
-    all_payloads = [rig.base_alt, rig.near, rig.far, rig.fresh, rig.base]
-    batch_kept = dedup_fp_against_corpus(
-        _media(spark, all_payloads), index, family,
-        max_hamming=rig.max_hamming,
-    )
-    assert batch_kept.count() == 2
-    assert {r[h] for r in out2.collect()} == {
-        r[h] for r in family.fingerprint(batch_kept).collect()
-    }
-
-    grown = index.unionByName(out2.select("media_id", h))
-    regate = dedup_fp_against_corpus(
-        _media(spark, all_payloads), grown, family,
-        max_hamming=rig.max_hamming,
-    )
-    assert regate.count() == 0
-
-
-def test_stream_fp_dedup_ingest_rejects_id_collision(spark, tmp_path):
-    """Two landed files that map to one media_id must stop the stream,
-    never alias through the gate. A family whose fingerprint emits
-    every row twice stands in for an xxhash64(path) collision."""
-    from dataclasses import replace
-
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_fp_dedup_ingest,
-    )
-
-    twice = replace(
-        IMAGE,
-        fn=lambda media, **kw: IMAGE.fn(media, **kw).unionByName(
-            IMAGE.fn(media, **kw)
-        ),
-    )
-    rig = _image_rig()
-    land = tmp_path / "landing"
-    land.mkdir()
-    (land / "a.bmp").write_bytes(rig.far)
-    index = IMAGE.fingerprint(_media(spark, [rig.base])).select(
-        "media_id", "phash"
-    )
-    with pytest.raises(Exception, match="collision"):
-        stream_fp_dedup_ingest(
-            spark, str(land), index, str(tmp_path / "sink"), twice
-        )
 
 
 def _cli(*args: str, ok: bool = True) -> subprocess.CompletedProcess:

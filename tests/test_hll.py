@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from hospital_stain_tracker_data_pipeline_spark.operators.sketch import (
-    approx_distinct_hll,
     hll_estimate,
     hll_merge,
     hll_registers,
@@ -102,14 +101,14 @@ def test_hll_accuracy_vs_exact(spark, sf_dir):
     land in the linear-counting regime and must be near-exact."""
     words = _words(spark, sf_dir)
     exact = words.distinct().count()
-    [row] = approx_distinct_hll(words, "w", p=12).collect()
+    [row] = hll_estimate(hll_registers(words, "w", p=12), p=12).collect()
     assert abs(row["estimate"] - exact) / exact < 0.05
 
     small = spark.createDataFrame(
         [(f"item-{i}",) for i in range(50) for _ in range(3)],
         "item string",
     )
-    [srow] = approx_distinct_hll(small, "item", p=12).collect()
+    [srow] = hll_estimate(hll_registers(small, "item", p=12), p=12).collect()
     assert srow["method"] == "linear_counting"
     assert abs(srow["estimate"] - 50) < 2
 

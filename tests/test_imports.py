@@ -24,32 +24,31 @@ def test_operator_surface_exports():
     from hospital_stain_tracker_data_pipeline_spark import operators as o
 
     for name in (
-        "train_ngram_lm", "score_perplexity", "perplexity_buckets",
-        "contrastive_score", "train_logistic_probe", "batch_score",
-        "semantic_dedup", "semantic_dedup_pairs", "cap_per_group",
-        "extract_domain", "filter_blocked_domains", "plan_token_mixture",
+        "train_ngram_lm", "score_perplexity",
+        "train_logistic_probe", "batch_score",
+        "semantic_dedup_pairs", "cap_per_group",
+        "extract_domain", "plan_token_mixture",
         "sample_token_mixture", "source_token_stats", "leakage_safe_split",
-        "pack_token_chunks", "pack_documents_no_split", "packing_efficiency",
+        "pack_token_chunks", "pack_documents_no_split",
         "write_packed_corpus", "shard_manifest", "verify_packed_corpus",
         "bm25_topk", "bm25_bulk_scores",
-        "build_bm25_index", "dedup_substrings", "ngram_contamination",
-        "pagerank", "save_ivf_index", "load_ivf_index",
+        "build_bm25_index", "dedup_substrings",
+        "save_ivf_index", "load_ivf_index",
         "pq_fit_codebooks", "pq_encode", "pq_decode", "knn_pq",
         "knn_ivf_pq", "pack_codes", "unpack_codes",
         "save_pq_index", "load_pq_index",
         "reciprocal_rank_fusion", "corpus_diff", "corpus_diff_summary",
         "summarize_diff",
-        "hll_registers", "hll_merge", "hll_estimate", "approx_distinct_hll",
+        "hll_registers", "hll_merge", "hll_estimate",
         "save_hll_sketch", "load_hll_sketch",
         "cms_sketch", "cms_merge", "cms_query", "sample_stratified",
-        "tokenizer_efficiency", "tune_lsh_bands",
-        "extract_image_features", "extract_audio_features",
-        "extract_video_features", "sample_video_frames",
+        "tokenizer_efficiency",
+        "extract_image_features",
         "image_phash", "audio_fingerprint", "video_phash",
-        "fp_dup_pairs", "dedup_fp_against_corpus",
+        "fp_dup_pairs",
         "save_fp_index", "load_fp_index", "append_fp_index",
         "remove_from_fp_index", "compact_fp_index",
-        "classify_media", "sniff_pdf", "extract_pdf_text",
+        "sniff_pdf", "extract_pdf_text",
         "build_simple_pdf",
     ):
         assert callable(getattr(o, name)), name
@@ -61,7 +60,7 @@ def test_pipeline_surface_exports():
     from hospital_stain_tracker_data_pipeline_spark import pipeline as p
 
     for name in (
-        "LakeTable", "write_bucketed_table", "zorder_write",
+        "LakeTable", "zorder_write",
         "file_skipping_report",
     ):
         assert callable(getattr(p, name)) or name == "LakeTable", name

@@ -328,3 +328,19 @@ def test_non_numeric_optional_icu_loads_as_null(spark, tmp_path):
     )
     assert row["total_beds"] == 100.0
     assert row["icu_beds"] is None and row["icu_occupied"] is None
+
+
+def test_failed_ingest_releases_its_caches(spark, tmp_path, monkeypatch):
+    """A batch whose upsert raises leaves nothing in Spark's cache
+    manager: the accepted/rejected frames are released on the failure
+    path too, not only on success."""
+
+    def failing_upsert(self, df, *args, **kwargs):
+        raise RuntimeError("upsert failed")
+
+    csv_path = _write_csv(str(tmp_path / "batch.csv"), GOOD_ROWS)
+    spark.catalog.clearCache()
+    monkeypatch.setattr(LakeTable, "upsert", failing_upsert)
+    with pytest.raises(RuntimeError, match="upsert failed"):
+        ingest_capacity_csv(spark, csv_path, "failing", str(tmp_path / "tables"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -1,8 +1,8 @@
 """N-gram LM perplexity (CCNet-style quality stage): gram
 construction, hand-computed add-k golden, smoothing properness,
 min_count pruning semantics, unseen-context floor, the full DuckDB
-cross-engine oracle over the fixture corpus, head/middle/tail
-bucketing, and the broadcast-join plan shape of scoring."""
+cross-engine oracle over the fixture corpus, and the broadcast-join
+plan shape of scoring."""
 
 from __future__ import annotations
 
@@ -14,9 +14,8 @@ from pyspark.sql import functions as F
 
 from hospital_stain_tracker_data_pipeline_spark.operators.lm import (
     NgramLM,
-    doc_ngrams,
+    _exploded_grams,
     lm_tokens,
-    perplexity_buckets,
     score_perplexity,
     train_ngram_lm,
 )
@@ -36,30 +35,29 @@ def test_lm_tokens_and_ngrams_golden(spark):
         [(1, "  Hello   world "), (2, ""), (3, "solo")],
         "doc_id long, text string",
     )
-    rows = {
-        r["doc_id"]: (r["t"], r["g2"], r["g1"], r["g3"])
+    toks = {
+        r["doc_id"]: r["t"]
         for r in docs.select(
-            "doc_id",
-            lm_tokens(F.col("text")).alias("t"),
-            doc_ngrams(F.col("text"), 2).alias("g2"),
-            doc_ngrams(F.col("text"), 1).alias("g1"),
-            doc_ngrams(F.col("text"), 3).alias("g3"),
+            "doc_id", lm_tokens(F.col("text")).alias("t")
         ).collect()
     }
-    t, g2, g1, g3 = rows[1]
-    assert t == ["hello", "world"]
-    assert [(g["ctx"], g["word"]) for g in g2] == [
-        ("<s>", "hello"),
-        ("hello", "world"),
-    ]
-    assert [(g["ctx"], g["word"]) for g in g1] == [("", "hello"), ("", "world")]
-    assert [(g["ctx"], g["word"]) for g in g3] == [
-        ("<s> <s>", "hello"),
-        ("<s> hello", "world"),
-    ]
+    assert toks == {1: ["hello", "world"], 2: [], 3: ["solo"]}
+
+    def grams(n):
+        # the training path's gram builder: no row for a token-free doc
+        out: dict[int, list] = {1: [], 2: [], 3: []}
+        ex = _exploded_grams(docs, n, "text", keep=["doc_id"], outer=False)
+        for r in ex.collect():
+            out[r["doc_id"]].append((r["ctx"], r["word"]))
+        return out
+
+    g1, g2, g3 = grams(1), grams(2), grams(3)
+    assert g2[1] == [("<s>", "hello"), ("hello", "world")]
+    assert g1[1] == [("", "hello"), ("", "world")]
+    assert g3[1] == [("<s> <s>", "hello"), ("<s> hello", "world")]
     # empty doc: zero tokens, zero grams (not [""])
-    assert rows[2] == ([], [], [], [])
-    assert [(g["ctx"], g["word"]) for g in rows[3][1]] == [("<s>", "solo")]
+    assert g1[2] == g2[2] == g3[2] == []
+    assert g2[3] == [("<s>", "solo")]
 
 
 def test_train_counts_and_vocab_golden(spark):
@@ -219,151 +217,11 @@ def test_perplexity_matches_duckdb_oracle(spark, sf_dir):
             assert r["n_grams"] == 0 and r["perplexity"] is None
 
 
-def test_perplexity_buckets_fractions_and_null_policy(spark):
-    scored = spark.createDataFrame(
-        [(i, float(i)) for i in range(1, 11)] + [(11, None)],
-        "doc_id long, perplexity double",
-    )
-    got = {
-        r["doc_id"]: r["ppl_bucket"]
-        for r in perplexity_buckets(
-            scored, head_frac=0.2, tail_frac=0.3
-        ).collect()
-    }
-    # 11 docs; NULL is always tail. Ranks are cume_dist over 11 rows.
-    assert got[11] == "tail"
-    # rank(doc i) = i/11: head = ranks <= 0.2 -> docs 1-2
-    assert got[1] == "head" and got[2] == "head"
-    assert got[3] == "middle"
-    # tail = ranks > 0.7 -> docs 8, 9, 10 (+ the NULL)
-    assert got[7] == "middle"
-    assert got[8] == "tail" and got[10] == "tail"
-    with pytest.raises(ValueError):
-        perplexity_buckets(scored, head_frac=0.8, tail_frac=0.4)
-
-
-def test_perplexity_buckets_grouped_by_lang(spark):
-    scored = spark.createDataFrame(
-        [(1, 5.0, "en"), (2, 1.0, "en"), (3, 9.0, "de"), (4, 2.0, "de")],
-        "doc_id long, perplexity double, lang string",
-    )
-    got = {
-        r["doc_id"]: (r["ppl_bucket"], r["ppl_rank"])
-        for r in perplexity_buckets(
-            scored, head_frac=0.5, tail_frac=0.5, by="lang"
-        ).collect()
-    }
-    # each lang ranks independently: best half head, worst half tail
-    assert got[2][0] == "head" and got[1][0] == "tail"
-    assert got[4][0] == "head" and got[3][0] == "tail"
-
-
 def test_score_plan_broadcasts_model_and_never_shuffles_corpus(spark):
     lm = train_ngram_lm(_toy(spark), n=2, k=0.1)
     plan = score_perplexity(_toy(spark), lm)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") == 2, plan
     assert "SortMergeJoin" not in plan, plan
-
-
-# ---------------------------------------------------------------------------
-# Unicode normalization — the pre-fingerprint curation pass
-# ---------------------------------------------------------------------------
-
-
-def test_normalize_text_nfkc_goldens(spark):
-    from hospital_stain_tracker_data_pipeline_spark.functions.text import (
-        normalize_text_udf,
-    )
-
-    rows = [
-        (1, "ﬁre"),        # ligature fi -> "fire"
-        (2, "Ｆｕｌｌ１２３"),  # fullwidth -> "Full123"
-        (3, "é"),     # combining acute -> precomposed é
-        (4, None),
-        (5, "plain"),
-    ]
-    df = spark.createDataFrame(rows, "i long, t string")
-    got = {
-        r["i"]: r["n"]
-        for r in df.select(
-            "i", normalize_text_udf("NFKC")(F.col("t")).alias("n")
-        ).collect()
-    }
-    assert got[1] == "fire"
-    assert got[2] == "Full123"
-    assert got[3] == "é"
-    assert got[4] is None
-    assert got[5] == "plain"
-    with pytest.raises(ValueError, match="unknown normalization"):
-        normalize_text_udf("NFX")
-
-
-def test_normalize_text_nfc_matches_duckdb(spark, sf_dir):
-    """Cross-engine pin for the one form DuckDB exposes
-    (nfc_normalize): both engines must produce identical NFC text for
-    the whole fixture corpus."""
-    from hospital_stain_tracker_data_pipeline_spark.functions.text import (
-        normalize_text_udf,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.sources.tables import (
-        load_fixture_table,
-    )
-
-    docs = load_fixture_table(spark, sf_dir, "documents")
-    got = {
-        r["doc_id"]: r["n"]
-        for r in docs.select(
-            "doc_id", normalize_text_udf("NFC")(F.col("text")).alias("n")
-        ).collect()
-    }
-    want = dict(
-        duckdb.sql(
-            f"SELECT doc_id, nfc_normalize(text) FROM '{sf_dir}/documents.parquet'"
-        ).fetchall()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_contrastive_score_dsir_ranking(spark):
-    """Train a target LM on domain A text and a general LM on mixed
-    text: importance must rank an A-like doc above a B-like doc, agree
-    with independently-computed per-model scores, and enforce the
-    shared-n contract."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.lm import (
-        contrastive_score,
-    )
-
-    dom_a = "alpha beta gamma " * 10
-    dom_b = "rock paper scissors " * 10
-    target = train_ngram_lm(
-        spark.createDataFrame([(1, dom_a)], "doc_id long, text string"), n=2
-    )
-    general = train_ngram_lm(
-        spark.createDataFrame(
-            [(1, dom_a), (2, dom_b)], "doc_id long, text string"
-        ),
-        n=2,
-    )
-    probe = spark.createDataFrame(
-        [(10, "alpha beta gamma alpha beta"), (20, "rock paper scissors rock"),
-         (30, "   ")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in contrastive_score(probe, target, general).collect()}
-    assert got[10]["importance"] > got[20]["importance"]
-    assert got[30]["importance"] is None and got[30]["n_grams"] == 0
-    # cross-check against the standalone scorer per model
-    t = {r["doc_id"]: r["avg_neg_logp"] for r in score_perplexity(probe, target).collect()}
-    g = {r["doc_id"]: r["avg_neg_logp"] for r in score_perplexity(probe, general).collect()}
-    for d in (10, 20):
-        assert got[d]["target_anl"] == pytest.approx(t[d], abs=2e-4)
-        assert got[d]["general_anl"] == pytest.approx(g[d], abs=2e-4)
-        assert got[d]["importance"] == pytest.approx(g[d] - t[d], abs=4e-4)
-    tri = train_ngram_lm(
-        spark.createDataFrame([(1, dom_a)], "doc_id long, text string"), n=3
-    )
-    with pytest.raises(ValueError, match="disagree on n"):
-        contrastive_score(probe, tri, general)
 
 
 def test_compression_ratio_signal(spark):
@@ -396,23 +254,6 @@ def test_compression_ratio_signal(spark):
         assert got[i] == pytest.approx(len(zlib.compress(b, 6)) / len(b))
     with pytest.raises(ValueError):
         compression_ratio_udf(level=0)
-
-
-def test_contrastive_plan_broadcasts_all_model_tables(spark):
-    """Scale shape of DSIR scoring: four broadcast joins (two tables
-    per model) onto one exploded gram stream, no sort-merge join."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.lm import (
-        contrastive_score,
-    )
-
-    t = train_ngram_lm(_toy(spark), n=2)
-    g = train_ngram_lm(_toy(spark), n=2)
-    plan = (
-        contrastive_score(_toy(spark), t, g)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("BroadcastHashJoin") == 4, plan
-    assert "SortMergeJoin" not in plan, plan
 
 
 def test_ngram_lm_save_load_roundtrip(spark, sf_dir, tmp_path):

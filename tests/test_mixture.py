@@ -199,61 +199,27 @@ def test_blank_docs_carry_zero_tokens(spark):
     assert (r["n_docs"], r["n_tokens"]) == (3, 2)
 
 
-def test_temperature_weights_hand_checks(spark):
-    """alpha=1 -> natural proportions; alpha=0 -> uniform over
-    non-empty sources; alpha=0.5 upsamples the tail monotonically;
-    zero-token sources get weight 0; alpha<0 rejected."""
-    import math
-
-    import pytest
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.mixture import (
-        temperature_weights,
-    )
-
-    stats = spark.createDataFrame(
-        [("web", 100, 8000), ("books", 10, 1000), ("code", 20, 1000),
-         ("empty", 0, 0)],
-        "source string, n_docs long, n_tokens long",
-    )
-    w1 = temperature_weights(stats, alpha=1.0)
-    assert w1["empty"] == 0.0
-    assert math.isclose(w1["web"], 0.8) and math.isclose(w1["books"], 0.1)
-    w0 = temperature_weights(stats, alpha=0.0)
-    assert w0["empty"] == 0.0
-    for s in ("web", "books", "code"):
-        assert math.isclose(w0[s], 1 / 3)
-    wh = temperature_weights(stats, alpha=0.5)
-    # tail share strictly grows as alpha falls below 1
-    assert wh["books"] > w1["books"] and wh["web"] < w1["web"]
-    assert math.isclose(sum(wh.values()), 1.0)
-    with pytest.raises(ValueError, match="alpha"):
-        temperature_weights(stats, alpha=-0.1)
-
-
-def test_temperature_weights_compose_with_planner(spark):
-    """The weights feed plan_token_mixture unchanged: at alpha=0 every
-    non-empty source gets an equal token grant (up to caps), and the
-    planner's water-filling still honors epoch caps."""
+def test_plan_token_mixture_uniform_weights_water_fill(spark):
+    """Uniform weights: every non-empty source gets an equal token
+    grant (up to caps), and the planner's water-filling still honors
+    epoch caps."""
     from hospital_stain_tracker_data_pipeline_spark.operators.mixture import (
         plan_token_mixture,
-        temperature_weights,
     )
 
     stats = spark.createDataFrame(
         [("a", 10, 6000), ("b", 10, 3000), ("c", 10, 1000)],
         "source string, n_docs long, n_tokens long",
     )
+    uniform = {"a": 1 / 3, "b": 1 / 3, "c": 1 / 3}
     plan = plan_token_mixture(
-        stats, target_tokens=3000,
-        weights=temperature_weights(stats, alpha=0.0), max_epochs=1.0,
+        stats, target_tokens=3000, weights=uniform, max_epochs=1.0,
     )
     got = {a.source: a.target_tokens for a in plan}
     assert got == {"a": 1000, "b": 1000, "c": 1000}
     # caps bind: source c can only give 1000; its surplus water-fills
     plan2 = plan_token_mixture(
-        stats, target_tokens=6000,
-        weights=temperature_weights(stats, alpha=0.0), max_epochs=1.0,
+        stats, target_tokens=6000, weights=uniform, max_epochs=1.0,
     )
     got2 = {a.source: a.target_tokens for a in plan2}
     assert got2["c"] == 1000 and got2["a"] + got2["b"] == 5000

@@ -578,7 +578,6 @@ def test_no_split_golden_layout(spark):
 def test_no_split_invariants_on_fixture(spark, sf_dir):
     from hospital_stain_tracker_data_pipeline_spark.operators.packing import (
         pack_documents_no_split,
-        packing_efficiency,
     )
     from hospital_stain_tracker_data_pipeline_spark.sources.tables import (
         load_fixture_table,
@@ -597,15 +596,10 @@ def test_no_split_invariants_on_fixture(spark, sf_dir):
     bad = by_chunk[(by_chunk["tok"] > budget) & ~by_chunk["over"]]
     assert bad.empty
     assert (by_chunk[by_chunk["over"]]["n"] == 1).all()
-    # efficiency row is consistent and capacity-bounded
-    [eff] = packing_efficiency(packed, budget).collect()
-    assert eff["n_chunks"] == len(by_chunk)
-    assert eff["total_tokens"] == int(pdf["n_tok"].sum())
-    assert 0 < eff["fill_ratio"] <= 1.5
     # chunk count can't beat the theoretical floor
     import math
 
-    assert eff["n_chunks"] >= math.ceil(eff["total_tokens"] / budget) - len(
+    assert len(by_chunk) >= math.ceil(int(pdf["n_tok"].sum()) / budget) - len(
         by_chunk[by_chunk["over"]]
     )
 
@@ -701,116 +695,6 @@ def test_no_split_writer_preserves_shuffled_walk_order(spark, sf_dir, tmp_path):
 # ---------------------------------------------------------------------------
 # cdc_chunks — content-defined chunking
 # ---------------------------------------------------------------------------
-
-
-def test_cdc_chunks_edit_stability(spark):
-    """THE CDC property: inserting tokens near the top of a document
-    changes only the chunk(s) around the edit — every chunk after the
-    window re-synchronizes and is byte-identical to the original's.
-    Fixed-stride chunking re-cuts everything after an edit."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.packing import (
-        cdc_chunks,
-    )
-
-    base_tokens = [f"w{i % 11}q{i % 7}" for i in range(120)]
-    orig = " ".join(base_tokens)
-    edited = " ".join(base_tokens[:5] + ["INSERTED", "TOKENS"] + base_tokens[5:])
-    docs = spark.createDataFrame(
-        [(1, orig), (2, edited)], "doc_id long, text string"
-    )
-    rows = cdc_chunks(docs, window=3, divisor=8).collect()
-    chunks = {1: {}, 2: {}}
-    for r in rows:
-        chunks[r["doc_id"]][r["chunk_id"]] = r["chunk"]
-    c1 = [chunks[1][i] for i in sorted(chunks[1])]
-    c2 = [chunks[2][i] for i in sorted(chunks[2])]
-    shared = set(c1) & set(c2)
-    # at least everything after the edit's chunk re-synchronizes: the
-    # tail chunks are literally identical strings
-    assert c1[-1] == c2[-1]
-    assert len(shared) >= len(c1) - 2, (len(shared), len(c1))
-    # token conservation on both docs
-    assert sum(len(c.split()) for c in c1) == 120
-    assert sum(len(c.split()) for c in c2) == 122
-
-
-def test_cdc_chunks_matches_duckdb_oracle(spark, sf_dir):
-    from hospital_stain_tracker_data_pipeline_spark.operators.packing import (
-        cdc_chunks,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.sources.tables import (
-        load_fixture_table,
-    )
-
-    import duckdb
-
-    W, D = 3, 8
-    docs = load_fixture_table(spark, sf_dir, "documents")
-    got = sorted(
-        tuple(r) for r in cdc_chunks(docs, window=W, divisor=D).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in duckdb.sql(
-            f"""
-        WITH toks AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(trim(text), '\\s+'),
-                             t -> t <> '') AS t
-          FROM '{sf_dir}/documents.parquet'
-        ),
-        pos AS (
-          SELECT doc_id, CAST(g['i'] - 1 AS BIGINT) AS pos, t[g['i']] AS tok,
-                 CASE WHEN g['i'] >= {W} AND
-                      CAST(CONCAT('0x', substr(md5(
-                        array_to_string(
-                          t[greatest(g['i'] - {W} + 1, 1):g['i']], ' ')
-                      ), 1, 15)) AS BIGINT) % {D} = 0
-                 THEN 1 ELSE 0 END AS boundary
-          FROM (
-            SELECT doc_id, t,
-                   unnest(list_transform(range(1, len(t) + 1),
-                                         i -> {{'i': i}})) AS g
-            FROM toks
-          )
-        ),
-        cid AS (
-          SELECT doc_id, pos, tok,
-                 coalesce(sum(boundary) OVER (
-                   PARTITION BY doc_id ORDER BY pos
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                 ), 0) AS chunk_id
-          FROM pos
-        )
-        SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-               string_agg(tok, ' ' ORDER BY pos) AS chunk,
-               count(*) AS n_tokens
-        FROM cid GROUP BY doc_id, chunk_id
-        """
-        ).fetchall()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_cdc_chunks_validation_and_short_docs(spark):
-    import pytest
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.packing import (
-        cdc_chunks,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a b"), (2, "")], "doc_id long, text string"
-    )
-    rows = cdc_chunks(docs, window=4, divisor=4).collect()
-    # doc shorter than the window: one chunk, whole doc; empty doc: none
-    by = {(r["doc_id"], r["chunk_id"]): r for r in rows}
-    assert by[(1, 0)]["chunk"] == "a b"
-    assert not [r for r in rows if r["doc_id"] == 2]
-    with pytest.raises(ValueError):
-        cdc_chunks(docs, window=0)
-    with pytest.raises(ValueError):
-        cdc_chunks(docs, divisor=0)
 
 
 # ---------------------------------------------------------------- manifest

@@ -11,7 +11,7 @@ Pins:
 - policy: encrypted PDFs refuse extraction (sniff flags them),
   non-PDFs yield NULL rows, fake_decode gives the deterministic
   stand-in, no-fake raises loudly;
-- classify_media routes PDFs as document modality with
+- tag_media_modality routes PDFs as document modality with
   native == not encrypted;
 - the extracted frame joins the ordinary document pipeline (a
   quality-signal pass runs on it unchanged).
@@ -25,7 +25,7 @@ import pandas as pd
 import pytest
 
 from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-    classify_media,
+    tag_media_modality,
     to_media_table,
 )
 from hospital_stain_tracker_data_pipeline_spark.operators.pdf import (
@@ -232,7 +232,7 @@ def test_pdf_objstm_incremental_update_wins():
     assert text.strip() == "updated"
 
 
-def test_classify_media_routes_pdfs(spark):
+def test_tag_media_modality_routes_pdfs(spark):
     media = _media(
         spark,
         [
@@ -241,11 +241,11 @@ def test_classify_media_routes_pdfs(spark):
         ],
     )
     got = {
-        r["media_id"]: (r["modality"], r["mime"], r["native"])
-        for r in classify_media(media).collect()
+        r["media_id"]: (r["modality"], r["native"])
+        for r in tag_media_modality(media).collect()
     }
-    assert got[0] == ("document", "application/pdf", True)
-    assert got[1] == ("document", "application/pdf", False)
+    assert got[0] == ("document", True)
+    assert got[1] == ("document", False)
 
 
 def test_pdf_text_joins_document_pipeline(spark):
@@ -300,47 +300,6 @@ def test_pdf_deeply_nested_literal_strings():
     )
     _, text = extract_pdf_text_bytes(raw2)
     assert text.strip() == "a(b(c(d)e)f)g"
-
-
-def test_stream_pdf_ingest(spark, tmp_path):
-    """Streaming twin == batch extraction: PDFs land as files, each is
-    parsed once, documents rows land in the sink; a second wave
-    processes ONLY the new files (checkpointed exactly-once)."""
-    import os
-
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_pdf_ingest,
-    )
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    sink = str(tmp_path / "sink")
-    (land / "a.pdf").write_bytes(build_simple_pdf([["alpha one"], ["alpha two"]]))
-    (land / "b.pdf").write_bytes(build_simple_pdf([["bravo"]], compress=False))
-
-    out1 = stream_pdf_ingest(spark, str(land), sink)
-    rows1 = {os.path.basename(r["path"]): r for r in out1.collect()}
-    assert set(rows1) == {"a.pdf", "b.pdf"}
-    assert rows1["a.pdf"]["n_pages"] == 2 and "alpha two" in rows1["a.pdf"]["text"]
-    assert rows1["b.pdf"]["text"].strip() == "bravo" and rows1["b.pdf"]["extracted"]
-
-    # wave 2: only the new file processes; earlier sink rows survive
-    (land / "c.pdf").write_bytes(build_simple_pdf([["charlie"]]))
-    out2 = stream_pdf_ingest(spark, str(land), sink)
-    rows2 = {os.path.basename(r["path"]) for r in out2.collect()}
-    assert rows2 == {"a.pdf", "b.pdf", "c.pdf"}
-
-    # stream text == batch operator text over the same payloads
-    batch = extract_pdf_text(
-        _media(spark, [
-            build_simple_pdf([["alpha one"], ["alpha two"]]),
-            build_simple_pdf([["bravo"]], compress=False),
-            build_simple_pdf([["charlie"]]),
-        ])
-    )
-    assert {r["text"] for r in out2.collect()} == {
-        r["text"] for r in batch.collect()
-    }
 
 
 def test_pdf_encrypt_scan_masks_stream_payloads():

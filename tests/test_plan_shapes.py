@@ -534,55 +534,6 @@ def test_lake_sorted_write_clusters_files(spark, tmp_path):
         assert ks == sorted(ks), f"file {f} not clustered on k"
 
 
-def test_bucketed_join_is_shuffle_free(spark):
-    """The co-located-join layout is real: two tables bucketed on the
-    same key with the same bucket count join with NO Exchange on
-    either side (the write paid the shuffle once), while the same join
-    on plain parquet plans an Exchange. Broadcast is disabled for the
-    assertion so the shuffle-free plan can only come from bucketing."""
-    import contextlib
-    import io
-
-    from hospital_stain_tracker_data_pipeline_spark.pipeline.lake import (
-        write_bucketed_table,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.sources.tables import (
-        load_fixture_table,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    orders = load_fixture_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice"
-    )
-    items = (
-        load_fixture_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_quantity")
-        .withColumnRenamed("l_orderkey", "o_orderkey")
-    )
-
-    def plan_of(df):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        write_bucketed_table(orders, "b_orders", "o_orderkey", buckets=8)
-        write_bucketed_table(items, "b_items", "o_orderkey", buckets=8)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        bucketed = spark.table("b_orders").join(spark.table("b_items"), "o_orderkey")
-        assert "Exchange" not in plan_of(bucketed)
-        raw = orders.join(items, "o_orderkey")
-        assert "Exchange" in plan_of(raw)
-        # same answer either way, and non-trivial
-        assert bucketed.count() == raw.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_items")
-
-
 def test_lake_table_orc_format_upsert_prune_compact(spark, tmp_path):
     """The lake machinery is format-agnostic: an ORC-backed table must
     upsert idempotently, partition-prune a date-equality read (ORC

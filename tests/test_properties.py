@@ -504,70 +504,6 @@ def test_dedup_substrings_matches_python_reference(spark, docs, L):
     assert got == want
 
 
-@_slow
-@given(
-    docs=st.lists(
-        st.lists(st.integers(0, 5), min_size=0, max_size=30),
-        min_size=1,
-        max_size=5,
-    ),
-    window=st.integers(1, 4),
-    divisor=st.integers(1, 10),
-)
-def test_cdc_chunks_conservation_and_contiguity(spark, docs, window, divisor):
-    """Any corpus/window/divisor: chunks partition each doc exactly
-    (token conservation, reassembly equals the normalized input) and
-    chunk ids are contiguous from 0."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.packing import (
-        cdc_chunks,
-    )
-
-    texts = [(i, " ".join(f"t{x}" for x in ws)) for i, ws in enumerate(docs)]
-    df = spark.createDataFrame(texts, "doc_id long, text string")
-    rows = cdc_chunks(df, window=window, divisor=divisor).collect()
-    by_doc: dict[int, dict[int, tuple[str, int]]] = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], {})[r["chunk_id"]] = (
-            r["chunk"], r["n_tokens"]
-        )
-    for i, t in texts:
-        toks = t.split()
-        if not toks:
-            assert i not in by_doc
-            continue
-        chunks = by_doc[i]
-        assert sorted(chunks) == list(range(len(chunks)))
-        joined = " ".join(chunks[c][0] for c in sorted(chunks))
-        assert joined == " ".join(toks)
-        assert sum(n for _, n in chunks.values()) == len(toks)
-
-
-@_slow
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 8), st.integers(0, 8)),
-        min_size=1,
-        max_size=25,
-    ),
-)
-def test_pagerank_is_a_proper_distribution(spark, edges):
-    """Any edge list (self-loops and duplicates included): ranks are
-    positive and sum to 1 over the node set."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.graph import (
-        pagerank,
-    )
-
-    edges = [(a, b) for a, b in edges if a != b]
-    if not edges:
-        return
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["rank"] for r in pagerank(df, iters=10).collect()}
-    nodes = {x for e in edges for x in e}
-    assert set(got) == nodes
-    assert all(v > 0 for v in got.values())
-    assert abs(sum(got.values()) - 1.0) < 1e-9
-
-
 @settings(max_examples=40, deadline=None)
 @given(
     st.lists(st.integers(-8000, 8000), min_size=1, max_size=400),

@@ -346,7 +346,6 @@ def test_compression_signals_exact_zlib_replay(spark, sf_dir):
 
     from hospital_stain_tracker_data_pipeline_spark.operators.quality import (
         compression_signals,
-        filter_by_compression,
     )
 
     def expect(t):
@@ -374,13 +373,6 @@ def test_compression_signals_exact_zlib_replay(spark, sf_dir):
             # the 6-dp signal against the raw ratio with rounding slack
             assert abs(got[i] - expect(t)) <= 5e-7, (i, got[i], expect(t))
     assert got[1] < 0.1 < got[2] < got[4]
-
-    # band filter: soup and empty out, prose and (short) noise per band
-    kept = {
-        r["doc_id"]
-        for r in filter_by_compression(docs, 0.25, 1.05).collect()
-    }
-    assert 1 not in kept and 3 not in kept and 2 in kept
 
     # fixture sweep: every non-empty doc matches the direct computation
     fx = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -14,9 +14,7 @@ Pins:
 - grouped ``by=`` variant == per-group standalone sketches;
 - fail-fast guards: out-of-range values raise in-row (never clamp),
   NULLs are ignored, internal column-name clashes rejected;
-- artifact round-trip with parameters + corrupt-artifact guards;
-- streaming twin: per-batch sketches sum-merge to the batch sketch
-  of the union, and quantiles agree exactly.
+- artifact round-trip with parameters + corrupt-artifact guards.
 """
 
 from __future__ import annotations
@@ -224,38 +222,3 @@ def test_artifact_roundtrip_and_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="mixes"):
         load_quantile_sketch(spark, mixed)
 
-
-def test_stream_rank_quantiles_equals_batch(spark, tmp_path):
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_rank_quantiles,
-    )
-
-    vals = _values()[:2000]
-    texts = pd.DataFrame(
-        {"doc_id": range(len(vals)), "text": ["x" * int(v % 500) for v in vals]}
-    )
-    src = str(tmp_path / "src")
-    spark.createDataFrame(texts).repartition(3).write.parquet(src)
-
-    merged = stream_rank_quantiles(
-        spark,
-        src,
-        str(tmp_path / "sink"),
-        value_expr="length(text)",
-        levels=10,
-        width=512,
-        depth=4,
-    )
-    batch = dyadic_rank_sketch(
-        spark.createDataFrame(texts).selectExpr("length(text) AS v"),
-        "v",
-        levels=10,
-        width=512,
-        depth=4,
-    )
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, batch.collect())
-    )
-    qm = quantiles_from_sketch(merged, [0.25, 0.5, 0.9], 10, 512, 4)
-    qb = quantiles_from_sketch(batch, [0.25, 0.5, 0.9], 10, 512, 4)
-    assert qm == qb

@@ -1,6 +1,6 @@
 """Gopher-style repetition filters: golden semantics, DuckDB
 cross-engine oracle over the fixture corpus, NULL short-doc policy,
-the document filter, and the no-shuffle plan shape of the in-row line
+and the no-shuffle plan shape of the in-row line
 statistics."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from hospital_stain_tracker_data_pipeline_spark.operators.repetition import (
     doc_repetition_profile,
-    filter_repetitious,
     line_repetition_cols,
     ngram_repetition,
     word_ngrams,
@@ -142,26 +141,6 @@ def test_doc_repetition_profile_matches_duckdb_oracle(spark, sf_dir):
     want = sorted(tuple(r) for r in duckdb.connect().execute(sql).fetchall())
     assert len(got) == 500
     assert got == want
-
-
-def test_filter_repetitious_drops_boilerplate(spark):
-    long_clean = " ".join(f"distinct{i} word{i}" for i in range(30))
-    docs = spark.createDataFrame(
-        [
-            (1, long_clean),  # 60 tokens, all unique: n-gram gate applies, passes
-            (2, "menu\nmenu\nmenu\nmenu\nmenu\nreal content here"),
-            (3, "buy now " * 40),  # one 2-gram dominates, 80 tokens
-            (4, "ok"),  # too short for any 5-gram: must SURVIVE
-            # short clean doc: top-2gram frac is inherently ~1/#grams,
-            # the min_tokens_for_ngram gate must protect it
-            (5, "a clean short sentence"),
-        ],
-        "doc_id long, text string",
-    )
-    kept = sorted(
-        r["doc_id"] for r in filter_repetitious(docs).select("doc_id").collect()
-    )
-    assert kept == [1, 4, 5]
 
 
 def test_line_repetition_is_shuffle_free(spark):

@@ -1,6 +1,6 @@
 """Bounded-memory sketches: heavy_hitters' exact-and-complete contract
 (vs a full DuckDB GROUP BY oracle, under adversarial repartitioning and
-tight capacities) and skew_report's cross-engine percentile replay."""
+tight capacities)."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from hospital_stain_tracker_data_pipeline_spark.operators.sketch import (
     _mg_merge,
     heavy_hitters,
-    skew_report,
 )
 
 
@@ -150,85 +149,3 @@ def test_mg_merge_retention_bound():
             # counts are underestimates by at most n/(capacity+1)
             assert summary[k] >= c - math.ceil(n / (capacity + 1))
 
-
-def test_skew_report_matches_duckdb(spark, sf_dir):
-    """Every column of the one-row report replayed in DuckDB —
-    including the exact continuous percentiles (quantile_cont) and the
-    deterministic top-keys strings."""
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    got = skew_report(events, "event_type", top=3).collect()[0].asDict()
-    con = duckdb.connect()
-    want = con.execute(
-        f"""
-        WITH counts AS (
-          SELECT CAST(event_type AS VARCHAR) AS key, count(*) AS cnt
-          FROM read_parquet('{sf_dir}/events.parquet') GROUP BY 1
-        ), summary AS (
-          SELECT sum(cnt) AS n_rows, count(*) AS n_keys, max(cnt) AS max_count,
-                 quantile_cont(cnt, 0.5) AS p50_count,
-                 quantile_cont(cnt, 0.9) AS p90_count,
-                 quantile_cont(cnt, 0.99) AS p99_count,
-                 round(max(cnt) / (sum(cnt) / count(*)), 2) AS skew_ratio
-          FROM counts
-        ), topk AS (
-          SELECT list(disp ORDER BY neg, is_null, k) AS top_keys
-          FROM (SELECT -cnt AS neg, (key IS NULL) AS is_null,
-                       coalesce(key, '') AS k,
-                       coalesce(key, chr(0) || 'NULL') || ':' || cnt AS disp
-                FROM counts
-                ORDER BY cnt DESC, (key IS NULL), key
-                LIMIT 3)
-        )
-        SELECT * FROM summary, topk
-        """
-    ).df().iloc[0].to_dict()
-    con.close()
-    assert got["n_rows"] == want["n_rows"]
-    assert got["n_keys"] == want["n_keys"]
-    assert got["max_count"] == want["max_count"]
-    for c in ("p50_count", "p90_count", "p99_count", "skew_ratio"):
-        assert got[c] == pytest.approx(want[c], abs=1e-9), c
-    assert list(got["top_keys"]) == list(want["top_keys"])
-
-
-def test_skew_report_null_keys_are_a_group(spark):
-    df = spark.createDataFrame(
-        [("a",)] * 5 + [(None,)] * 3 + [("b",)], "k string"
-    )
-    row = skew_report(df, "k", top=2).collect()[0]
-    assert row["n_rows"] == 9
-    assert row["n_keys"] == 3
-    assert row["max_count"] == 5
-    assert list(row["top_keys"]) == ["a:5", "\x00NULL:3"]
-
-
-def test_skew_report_null_tie_at_limit_matches_replay(spark):
-    """Regression: a NULL key tying a real key at the limit boundary
-    must pick the same row as the documented DuckDB replay — real keys
-    sort before the NULL group at equal counts (explicit is-null
-    field, NOT a coalesced string sentinel)."""
-    df = spark.createDataFrame(
-        [("AAA",)] * 3 + [(None,)] * 3 + [("b",)], "k string"
-    )
-    row = skew_report(df, "k", top=1).collect()[0]
-    assert list(row["top_keys"]) == ["AAA:3"]
-    # real keys win the boundary even when they sort AFTER the display
-    # marker's old coalesced position ('ZZZ' > 'NULL' as strings)
-    df2 = spark.createDataFrame(
-        [("ZZZ",)] * 3 + [(None,)] * 3 + [("b",)], "k string"
-    )
-    row2 = skew_report(df2, "k", top=1).collect()[0]
-    assert list(row2["top_keys"]) == ["ZZZ:3"]
-
-
-def test_skew_report_null_string_key_does_not_collide(spark):
-    """A genuine string key 'NULL' and the NULL group stay
-    distinguishable: the NULL group renders as \\x00NULL (a marker a
-    CAST-to-string key cannot produce), so both rows appear and order
-    deterministically (real 'NULL' first at equal counts)."""
-    df = spark.createDataFrame(
-        [("NULL",)] * 3 + [(None,)] * 3 + [("b",)], "k string"
-    )
-    row = skew_report(df, "k", top=3).collect()[0]
-    assert list(row["top_keys"]) == ["NULL:3", "\x00NULL:3", "b:1"]
-    assert row["n_keys"] == 3

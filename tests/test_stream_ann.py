@@ -6,7 +6,8 @@ same deltas (identical search results); a second wave processes only
 new files (checkpointed exactly-once for the ledger); and a REPLAYED
 delta (same ids landing again) appends 0 instead of double-appending —
 the id-immutability guard that makes foreachBatch's at-least-once
-delivery safe for an artifact-mutating sink.
+delivery safe for an artifact-mutating sink. An empty landing
+directory reads back as the typed empty ledger.
 """
 
 from __future__ import annotations
@@ -63,6 +64,16 @@ def test_stream_ann_ingest_matches_batch_appends(spark, sf_dir, tmp_path):
 
     landing = tmp_path / "landing"
     landing.mkdir()
+    # nothing landed yet: no sink partition is written, and the
+    # read-back is the typed empty ledger, not UNABLE_TO_INFER_SCHEMA
+    empty = stream_ann_ingest(
+        spark, str(landing), idx, str(tmp_path / "empty_ledger")
+    )
+    assert empty.count() == 0
+    assert empty.columns == [
+        "appended", "occupancy_shift_tv", "err_ratio", "refit_recommended"
+    ]
+
     sink = str(tmp_path / "ledger")
     _land(d1, str(landing / "delta-1.parquet"))
 
@@ -117,3 +128,4 @@ def test_stream_ann_ingest_requires_built_index(spark, tmp_path):
             str(tmp_path / "ledger"),
         )
     assert not os.path.isdir(str(tmp_path / "ledger"))
+

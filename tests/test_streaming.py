@@ -151,38 +151,6 @@ def test_stream_sessionize_matches_batch(spark, staged, sf_dir):
     assert s == b
 
 
-def test_stream_stream_join_matches_batch_range_join(spark, staged, sf_dir):
-    """The watermarked stream-stream interval join must produce exactly
-    the batch binned-range-join result (same per-purchase view counts)
-    — one availableNow batch contains all data, so no eviction hides
-    matches and the equivalence is exact."""
-    # range_join_binned was demoted from the driver catalog in the
-    # round-11 rotation; resolve via the combined map like bench.py
-    from hospital_stain_tracker_data_pipeline_spark.plans import CATALOG
-    from hospital_stain_tracker_data_pipeline_spark.plans.catalog import (
-        DEMOTED,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_stream_attribution_join,
-    )
-
-    _, input_dir = staged
-    pairs = stream_stream_attribution_join(spark, input_dir)
-    got = {
-        r.purchase_id: r.n_views
-        for r in pairs.groupBy("purchase_id")
-        .agg(F.count("*").alias("n_views"))
-        .collect()
-    }
-    expect = {
-        r.purchase_id: r.n_views
-        for r in {**CATALOG, **DEMOTED}["range_join_binned"]
-        .fn(spark, sf_dir)
-        .collect()
-    }
-    assert got == expect and len(got) > 0
-
-
 def test_stream_dedup_collapses_redelivery(spark, sf_dir):
     """dropDuplicatesWithinWatermark must collapse a full redelivery of
     the fixture (staged twice) back to exactly the distinct event set."""
@@ -202,70 +170,6 @@ def test_stream_dedup_collapses_redelivery(spark, sf_dir):
     n_src = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).count()
     assert out.count() == n_src
     assert out.select("event_id").distinct().count() == n_src
-
-
-def test_stream_static_enrich_matches_batch_join(spark, staged, sf_dir):
-    """The stream-static broadcast enrichment must equal the batch
-    inner join over the same inputs (one availableNow batch = all
-    rows), carrying the dim attributes through the sink."""
-    import os as _os
-
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_static_enrich,
-    )
-
-    _, input_dir = staged
-    customers = spark.read.parquet(_os.path.join(sf_dir, "customer.parquet"))
-    streamed = stream_static_enrich(spark, input_dir, customers)
-    got = {
-        (r.event_id, r.c_name, r.c_nationkey) for r in streamed.collect()
-    }
-
-    ev = load_fixture_table(spark, sf_dir, "events")
-    batch = ev.join(
-        customers.select(
-            F.col("c_custkey").alias("user_id"), "c_name", "c_nationkey"
-        ),
-        "user_id",
-    )
-    want = {
-        (r.event_id, r.c_name, r.c_nationkey) for r in batch.collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_stream_score_perplexity_matches_batch(spark, sf_dir, tmp_path):
-    """Streamed LM scoring must equal the batch operator row-for-row:
-    same model, same corpus, one via readStream+foreachBatch, one via
-    the direct batch call."""
-    import os as _os
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.lm import (
-        score_perplexity,
-        train_ngram_lm,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_score_perplexity,
-    )
-
-    docs = load_fixture_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-    lm = train_ngram_lm(docs, n=2, k=0.1, min_count=2)
-
-    src = str(tmp_path / "docs_in")
-    docs.repartition(3).write.parquet(src)  # 3 files => multiple batches possible
-    out = str(tmp_path / "scored")
-    streamed = stream_score_perplexity(spark, src, lm, out)
-    got = {
-        r["doc_id"]: (r["n_grams"], r["avg_neg_logp"], r["perplexity"])
-        for r in streamed.collect()
-    }
-    want = {
-        r["doc_id"]: (r["n_grams"], r["avg_neg_logp"], r["perplexity"])
-        for r in score_perplexity(docs, lm).collect()
-    }
-    assert got == want and len(got) > 0
 
 
 @pytest.fixture()
@@ -388,287 +292,3 @@ def test_stream_sessionize_multibatch_state_crosses_batches(
     }
     assert s == b and len(s) > 0
 
-
-def test_stream_dedup_against_corpus_matches_batch(spark, sf_dir, tmp_path):
-    """Streamed incremental dedup must keep exactly the docs the batch
-    operator keeps: same corpus index, same new docs, one via
-    readStream+foreachBatch, one via the direct batch call. The fixture
-    split (even ids = corpus, odd = stream) plus planted exact copies
-    guarantees both kept and dropped rows exist."""
-    from pyspark.sql import functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        dedup_against_corpus,
-        minhash_signature_index,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_dedup_against_corpus,
-    )
-
-    docs = load_fixture_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    # new batch: the odd docs plus exact copies of two corpus docs
-    copies = corpus.orderBy("doc_id").limit(2).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-    )
-    new_docs = docs.filter(F.col("doc_id") % 2 == 1).unionByName(copies)
-    index = minhash_signature_index(corpus)
-
-    src = str(tmp_path / "new_in")
-    new_docs.repartition(3).write.parquet(src)
-    out = str(tmp_path / "kept")
-    streamed = stream_dedup_against_corpus(spark, src, index, out)
-    got = {r["doc_id"] for r in streamed.select("doc_id").collect()}
-    want = {
-        r["doc_id"]
-        for r in dedup_against_corpus(new_docs, index)
-        .select("doc_id")
-        .collect()
-    }
-    n_new = new_docs.count()
-    assert got == want
-    assert len(want) < n_new          # the planted copies were dropped
-    assert len(want) > 0              # and plenty survived
-
-
-def test_stream_dedup_against_corpus_all_duplicates_returns_empty(
-    spark, sf_dir, tmp_path
-):
-    """A stream whose every doc near-dups the corpus is the gate's
-    expected steady state: the sink holds zero rows and the read-back
-    must return a correctly-typed empty frame, not raise
-    UNABLE_TO_INFER_SCHEMA."""
-    from pyspark.sql import functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        minhash_signature_index,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_dedup_against_corpus,
-    )
-
-    docs = load_fixture_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    dupes = corpus.orderBy("doc_id").limit(5).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-    )
-    index = minhash_signature_index(corpus)
-    src = str(tmp_path / "dupes_in")
-    dupes.write.parquet(src)
-    out = str(tmp_path / "kept")
-    kept = stream_dedup_against_corpus(spark, src, index, out)
-    assert kept.count() == 0
-    assert kept.columns == ["doc_id", "text"]
-
-
-def test_stream_quality_gate_matches_batch(spark, tmp_path):
-    """The streamed Gopher gate keeps exactly the docs the batch
-    filter keeps, with the sink text already PII-scrubbed (the raw
-    form never lands) and per-kind counts attached."""
-    from pyspark.sql import functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.quality import (
-        filter_gopher_quality,
-        redact_pii,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_quality_gate,
-    )
-
-    good = (
-        "The quick brown fox jumps over the lazy dog and runs to the "
-        "river bank where it finds that the water is cold and clear. "
-        "Every animal in the forest seems to have come down with the "
-        "same idea today; write to ranger@example.com with sightings. "
-        "The fox waits until the bears have finished drinking before "
-        "it steps forward to take a long drink of the cool water."
-    )
-    docs = spark.createDataFrame(
-        [(1, good), (2, "too short"), (3, good + " {code}"),
-         (4, good.replace("ranger@example.com", "10.0.0.1 instead"))],
-        "doc_id long, text string",
-    )
-    src = str(tmp_path / "docs_in")
-    docs.repartition(2).write.parquet(src)
-    out = str(tmp_path / "gated")
-
-    streamed = stream_quality_gate(spark, src, out)
-    got = {r["doc_id"]: r for r in streamed.collect()}
-
-    want_ids = {
-        r["doc_id"]
-        for r in filter_gopher_quality(docs).select("doc_id").collect()
-    }
-    assert set(got) == want_ids == {1, 4}
-    # sink text is the REDACTED form
-    batch_red = {
-        r["doc_id"]: r
-        for r in redact_pii(filter_gopher_quality(docs)).collect()
-    }
-    for i in want_ids:
-        assert got[i]["text"] == batch_red[i]["text_redacted"]
-        assert got[i]["n_pii_email"] == batch_red[i]["n_pii_email"]
-    assert "ranger@example.com" not in got[1]["text"]
-    assert "<EMAIL>" in got[1]["text"]
-    assert "10.0.0.1" not in got[4]["text"]
-
-    # replay from a FRESH checkpoint re-processes batch 0 against the
-    # existing sink: dynamic partition overwrite rewrites the batch's
-    # own partition instead of appending duplicates (this is the
-    # effectively-exactly-once mechanism — reusing the old checkpoint
-    # would skip the batch and pin nothing)
-    import shutil
-
-    shutil.rmtree(os.path.join(out, "_checkpoint"))
-    streamed2 = stream_quality_gate(spark, src, out)
-    rows2 = streamed2.collect()
-    assert {r["doc_id"] for r in rows2} == want_ids
-    assert len(rows2) == len(want_ids)      # no appended duplicates
-
-    # no-survivors steady state: typed empty frame, no schema error
-    junk = spark.createDataFrame([(9, "x")], "doc_id long, text string")
-    src2 = str(tmp_path / "junk_in")
-    junk.write.parquet(src2)
-    out2 = str(tmp_path / "gated2")
-    empty = stream_quality_gate(spark, src2, out2)
-    assert empty.count() == 0
-    assert "n_pii_email" in empty.columns
-
-
-def test_stream_hll_cardinality_matches_batch(spark, sf_dir, tmp_path):
-    """Streamed HLL registers, merged across micro-batch partitions,
-    must equal the batch sketch of the whole corpus bit-for-bit —
-    the mergeability contract makes the stream/batch split invisible.
-    A second run over the same checkpoint must be a no-op (idempotent
-    replay: dynamic overwrite + max-merge)."""
-    from pyspark.sql import functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.sketch import (
-        hll_estimate,
-        hll_registers,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_hll_cardinality,
-    )
-
-    docs = load_fixture_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-    src = str(tmp_path / "docs_in")
-    docs.repartition(3).write.parquet(src)
-    out = str(tmp_path / "sketch")
-
-    streamed = stream_hll_cardinality(spark, src, out)
-    got = {
-        r["register"]: r["max_rho"] for r in streamed.collect()
-    }
-    words = docs.select(
-        F.explode(F.split("text", r"\s+")).alias("item")
-    ).filter(F.col("item") != "")
-    want = {
-        r["register"]: r["max_rho"]
-        for r in hll_registers(words, "item").collect()
-    }
-    assert got == want and len(got) > 0
-
-    # estimates agree too (same registers -> same number)
-    [se] = hll_estimate(streamed).collect()
-    [be] = hll_estimate(hll_registers(words, "item")).collect()
-    assert se["estimate"] == be["estimate"]
-
-    # replay: second availableNow pass over the same checkpoint sees
-    # no new files and must not change the merged sketch
-    again = stream_hll_cardinality(spark, src, out)
-    assert {
-        r["register"]: r["max_rho"] for r in again.collect()
-    } == want
-
-
-def test_stream_cms_frequencies_matches_batch(spark, sf_dir, tmp_path):
-    """Streamed CMS cells, summed across micro-batch partitions, must
-    equal the batch sketch of the whole corpus bit-for-bit; a replayed
-    run over the same checkpoint is a no-op (dynamic overwrite keeps
-    each batch's counts in the sum exactly once)."""
-    from pyspark.sql import functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.sketch import (
-        cms_sketch,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_cms_frequencies,
-    )
-
-    docs = load_fixture_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-    src = str(tmp_path / "docs_in")
-    docs.repartition(3).write.parquet(src)
-    out = str(tmp_path / "cms")
-
-    streamed = stream_cms_frequencies(spark, src, out, width=512, depth=4)
-    got = {
-        (r["row"], r["col"]): r["cnt"] for r in streamed.collect()
-    }
-    words = docs.select(
-        F.explode(F.split("text", r"\s+")).alias("item")
-    ).filter(F.col("item") != "")
-    want = {
-        (r["row"], r["col"]): r["cnt"]
-        for r in cms_sketch(words, "item", width=512, depth=4).collect()
-    }
-    assert got == want and len(got) > 0
-
-    again = stream_cms_frequencies(spark, src, out, width=512, depth=4)
-    assert {
-        (r["row"], r["col"]): r["cnt"] for r in again.collect()
-    } == want
-
-
-def test_stream_bloom_membership_matches_batch(spark, sf_dir, tmp_path):
-    """Streamed Bloom words, OR-merged across micro-batch partitions,
-    must equal the batch filter of the whole corpus bit-for-bit, and a
-    replayed run over the same checkpoint is a no-op — OR shares HLL
-    max-merge's idempotence, so the no-false-negatives contract
-    survives replays."""
-    from pyspark.sql import functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.sketch import (
-        bloom_query,
-        bloom_sketch,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_bloom_membership,
-    )
-
-    docs = load_fixture_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-    src = str(tmp_path / "docs_in")
-    docs.repartition(3).write.parquet(src)
-    out = str(tmp_path / "bloom")
-    m_bits, k = 1 << 14, 4
-
-    streamed = stream_bloom_membership(spark, src, out, m_bits=m_bits, k=k)
-    words = docs.select(
-        F.explode(F.split("text", r"\s+")).alias("item")
-    ).filter(F.col("item") != "")
-    got = {r["word"]: r["bits"] for r in streamed.collect()}
-    want = {
-        r["word"]: r["bits"]
-        for r in bloom_sketch(words, "item", m_bits, k).collect()
-    }
-    assert got == want and len(got) > 0
-
-    # every corpus word probes present through the streamed filter
-    misses = bloom_query(
-        streamed, words.distinct(), "item", m_bits, k
-    ).filter(~F.col("maybe_present")).count()
-    assert misses == 0
-
-    # replay over the same checkpoint: no new files, unchanged filter
-    again = stream_bloom_membership(spark, src, out, m_bits=m_bits, k=k)
-    assert {r["word"]: r["bits"] for r in again.collect()} == want

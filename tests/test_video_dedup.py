@@ -28,13 +28,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from media_encoders import build_mjpeg_mp4
 from hospital_stain_tracker_data_pipeline_spark.operators.jpeg import (
     decode_jpeg_pixels,
     encode_jpeg,
 )
 from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
     build_mjpeg_avi,
-    build_mjpeg_mp4,
     resize_rgb_nearest,
     to_media_table,
 )

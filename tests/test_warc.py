@@ -421,70 +421,27 @@ def test_empty_glob_raises(spark, tmp_path):
     assert read_warc(spark, []).count() == 0
 
 
-def test_stream_warc_ingest_matches_batch(spark, tmp_path):
-    """Streaming twin: files landing incrementally produce exactly the
-    batch warc_to_documents rows; a second run with no new files adds
-    nothing; a file landing later is picked up as a new batch."""
-    import os
-
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_warc_ingest,
-    )
-
-    records, _, _ = _sample_records()
-    src = str(tmp_path / "landing")
-    out = str(tmp_path / "docs")
-    os.makedirs(src)
-    write_warc(os.path.join(src, "a.warc.gz"), records)
-
-    got1 = stream_warc_ingest(spark, src, out)
-    batch = warc_to_documents(spark, os.path.join(src, "a.warc.gz"))
-    want = {
-        (r["doc_id"], r["url"], r["html"]) for r in batch.collect()
-    }
-    assert {
-        (r["doc_id"], r["url"], r["html"]) for r in got1.collect()
-    } == want and len(want) == 2
-
-    # no new files: idempotent
-    got2 = stream_warc_ingest(spark, src, out)
-    assert got2.count() == 2
-
-    # a late-landing file becomes a new batch; earlier rows unchanged
-    write_warc(os.path.join(src, "b.warc.gz"), records[2:4])
-    got3 = stream_warc_ingest(spark, src, out)
-    assert got3.count() == 4
-    assert len({r["doc_id"] for r in got3.collect()}) == 4
-
-
-def test_cdx_index_and_fetch(spark, tmp_path):
-    """The CDX sidecar derives from the scan frame and every index row
-    resolves back to its exact record via seek — including records that
-    share a member offset and differ only in seq (whole-file gzip)."""
+def test_cdx_index_points_at_each_record(spark, tmp_path):
+    """The CDX sidecar derives from the scan frame: every row carries
+    the canonical url key, the payload length and a pointer at its
+    exact record — the member offset for per-record gzip, the record's
+    position within the one member for whole-file gzip."""
     from hospital_stain_tracker_data_pipeline_spark.sources.warc import (
-        fetch_warc_record,
         warc_cdx_index,
     )
 
     records, body_a, body_b = _sample_records()
     p1 = str(tmp_path / "a.warc.gz")
-    write_warc(p1, records)
+    offs = write_warc(p1, records)
     idx = warc_cdx_index(read_warc(spark, [p1])).collect()
-    assert len(idx) == 2
-    for row in idx:
-        rec = fetch_warc_record(
-            row["warc_file"], row["record_offset"], row["record_seq"]
-        )
-        assert rec is not None
-        assert rec["target_uri"] == row["url"]
-        assert len(rec["payload"]) == row["payload_len"]
     got = {
-        bytes(
-            fetch_warc_record(r["warc_file"], r["record_offset"])["payload"]
-        )
+        r["url"]: (r["record_offset"], r["record_seq"], r["payload_len"])
         for r in idx
     }
-    assert got == {body_a, body_b}
+    assert got == {
+        "http://a.example/": (offs[2], 0, len(body_a)),
+        "http://b.example/missing": (offs[3], 0, len(body_b)),
+    }
     # canonical url_key present (dedup key of the capture index)
     assert all(r["url_key"] for r in idx)
 
@@ -494,33 +451,11 @@ def test_cdx_index_and_fetch(spark, tmp_path):
     wf = str(tmp_path / "w.warc.gz")
     with open(plain, "rb") as src, open(wf, "wb") as dst:
         dst.write(gzip.compress(src.read()))
-    r2 = fetch_warc_record(wf, 0, seq=2)
-    r3 = fetch_warc_record(wf, 0, seq=3)
-    assert r2["payload"] == body_a and r3["payload"] == body_b
-    assert fetch_warc_record(wf, 0, seq=99) is None
-    # plain file: raw byte offsets seek directly
-    offs = write_warc(plain, records, compress=False)
-    rp = fetch_warc_record(plain, offs[3])
-    assert rp["payload"] == body_b
-
-
-def test_fetch_corrupt_member_returns_none(tmp_path):
-    """Random access must NEVER serve a resynced neighbor as the
-    requested record: a corrupt member at the pointer yields None, not
-    the next member's payload."""
-    from hospital_stain_tracker_data_pipeline_spark.sources.warc import (
-        fetch_warc_record,
-    )
-
-    records, _, _ = _sample_records()
-    path = str(tmp_path / "rot.warc.gz")
-    offs = write_warc(path, records, compress=True)
-    blob = open(path, "rb").read()
-    cut = offs[2] + 12
-    open(path, "wb").write(blob[:cut] + b"\x99\x99\x99\x99" + blob[cut + 4:])
-    assert fetch_warc_record(path, offs[2]) is None   # corrupt target
-    got = fetch_warc_record(path, offs[3])            # neighbors still fine
-    assert got is not None and got["record_id"] == records[3]["record_id"]
+    idx2 = warc_cdx_index(read_warc(spark, [wf])).collect()
+    assert {r["url"]: (r["record_offset"], r["record_seq"]) for r in idx2} == {
+        "http://a.example/": (0, 2),
+        "http://b.example/missing": (0, 3),
+    }
 
 
 def test_read_warc_remote_glob_rejects_directory_wildcards(spark):

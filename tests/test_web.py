@@ -1,7 +1,7 @@
 """Web-corpus curation operators: domain extraction goldens (scheme /
 userinfo / port / schemeless / registrable reduction), the per-group
 cap's exact DuckDB-oracle kept-set replay, NULL-group and seed
-policies, the two-phase skew plan shape, and blocklist filtering."""
+policies, and the two-phase skew plan shape."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from hospital_stain_tracker_data_pipeline_spark.operators.web import (
     cap_per_group,
     extract_domain,
-    filter_blocked_domains,
 )
 from hospital_stain_tracker_data_pipeline_spark.sources.tables import (
     load_fixture_table,
@@ -165,27 +164,6 @@ def test_cap_per_group_two_phase_plan_bypasses_window_for_tail(spark):
     out.collect()
     final = out._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in final, final
-
-
-def test_filter_blocked_domains(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "https://good.example.com/a"),
-            (2, "https://SPAM.bad.net/b"),
-            (3, "http://spam.bad.net:8080/c"),
-            (4, None),
-        ],
-        "doc_id long, url string",
-    )
-    block = spark.createDataFrame(
-        [("spam.bad.net",), ("  Other.Org ",)], "domain string"
-    )
-    kept = {r["doc_id"] for r in filter_blocked_domains(docs, block).collect()}
-    # exact-host match (case-insensitive, port-stripped); subdomainless
-    # "SPAM.bad.net" == "spam.bad.net"; NULL url survives (no host)
-    assert kept == {1, 4}
-    # dropped helper column does not leak
-    assert filter_blocked_domains(docs, block).columns == docs.columns
 
 
 def test_extract_domain_ipv6_and_urlparse_property(spark):
@@ -1146,186 +1124,6 @@ def test_fetch_timeline_composes_waves_and_delays(spark):
         )
 
 
-def test_robots_sitemaps_extraction(spark):
-    """Sitemap: directives extract globally (group-independent),
-    case-insensitively, comment-stripped, absolute-http(s)-only,
-    deduplicated; bodies with none contribute nothing; the path is
-    pure Columns (no Python eval in the plan)."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.web import (
-        robots_sitemaps,
-    )
-
-    bodies = {
-        "a.example": (
-            "User-agent: *\nDisallow: /x\n"
-            "Sitemap: https://a.example/sitemap.xml\n"
-            "SITEMAP:   https://a.example/news.xml   # comment\n"
-            "sitemap: https://cdn.example/a/other.xml.gz\n"
-            # duplicates collapse
-            "Sitemap: https://a.example/sitemap.xml\n"
-        ),
-        "b.example": (
-            "Sitemap: /relative/path.xml\n"      # not absolute: drop
-            "Sitemap: ftp://b.example/s.xml\n"   # not http(s): drop
-            "Sitemap:\n"                          # empty: drop
-            "User-agent: *\nAllow: /\n"
-        ),
-        "c.example": None,
-    }
-    df = spark.createDataFrame(
-        list(bodies.items()), "domain string, robots_txt string"
-    )
-    got = sorted(
-        (r["domain"], r["sitemap_url"])
-        for r in robots_sitemaps(df).collect()
-    )
-    assert got == [
-        ("a.example", "https://a.example/news.xml"),
-        ("a.example", "https://a.example/sitemap.xml"),
-        ("a.example", "https://cdn.example/a/other.xml.gz"),
-    ]
-    plan = (
-        robots_sitemaps(df)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "EvalPython" not in plan  # zero Python in the path
-
-
-def test_audit_fetch_log_violations(spark):
-    """The compliance audit flags exactly the same-host consecutive
-    pairs whose gap undercuts the host's crawl delay (default for
-    undeclared hosts), first fetches never flag, and DuckDB replays
-    the whole window + join computation."""
-    import duckdb as _duckdb
-    import pytest as _pytest
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.web import (
-        audit_fetch_log,
-    )
-
-    rows = [
-        # slow.example declares 10s: gaps 5s (violation) and 15s (ok)
-        ("https://slow.example/a", "2026-01-01 00:00:00"),
-        ("https://slow.example/b", "2026-01-01 00:00:05"),
-        ("https://slow.example/c", "2026-01-01 00:00:20"),
-        # fast.example declares 0.5s: 1s gaps are fine
-        ("https://fast.example/a", "2026-01-01 00:00:00"),
-        ("https://fast.example/b", "2026-01-01 00:00:01"),
-        # nodelay.example audits against the default (2s): 1s gap flags
-        ("https://nodelay.example/a", "2026-01-01 00:00:00"),
-        ("https://nodelay.example/b", "2026-01-01 00:00:01"),
-    ]
-    log = spark.createDataFrame(rows, "url string, fetch_ts string")
-    delays = spark.createDataFrame(
-        [("slow.example", 10.0), ("fast.example", 0.5)],
-        "domain string, crawl_delay_s double",
-    )
-    out = audit_fetch_log(log, delays, default_delay_s=2.0)
-    got = sorted(
-        (r["url"], r["gap_s"], r["required_s"]) for r in out.collect()
-    )
-    assert got == [
-        ("https://nodelay.example/b", 1.0, 2.0),
-        ("https://slow.example/b", 5.0, 10.0),
-    ]
-
-    con = _duckdb.connect()
-    want = sorted(
-        map(
-            tuple,
-            con.execute(
-                """
-                WITH f AS (
-                  SELECT url,
-                         string_split(string_split(url, '//')[2], '/')[1]
-                           AS domain,
-                         CAST(fetch_ts AS TIMESTAMP) AS ts
-                  FROM (SELECT unnest($rows, recursive := true))
-                ), lagged AS (
-                  SELECT url, domain, ts,
-                         lag(ts) OVER (PARTITION BY domain
-                                       ORDER BY ts, url) AS prev
-                  FROM f
-                ), d AS (
-                  SELECT * FROM (VALUES ('slow.example', 10.0),
-                                        ('fast.example', 0.5))
-                    t(domain, delay)
-                )
-                SELECT url,
-                       epoch(ts) - epoch(prev) AS gap_s,
-                       coalesce(delay, 2.0) AS required_s
-                FROM lagged LEFT JOIN d USING (domain)
-                WHERE prev IS NOT NULL
-                  AND epoch(ts) - epoch(prev) < coalesce(delay, 2.0)
-                """,
-                {"rows": [
-                    {"url": u, "fetch_ts": t} for u, t in rows
-                ]},
-            ).fetchall(),
-        )
-    )
-    con.close()
-    assert got == want
-
-    with _pytest.raises(ValueError, match=">= 0"):
-        audit_fetch_log(log, delays, default_delay_s=-1.0)
-    with _pytest.raises(ValueError, match=">= 1"):
-        audit_fetch_log(log, delays, per_domain_per_wave=0)
-
-    # a compliant log audits clean
-    assert audit_fetch_log(log, delays, default_delay_s=0.5).filter(
-        F.col("domain") != "slow.example"
-    ).count() == 0
-
-
-def test_audit_fetch_log_burst_aware_matches_planner(spark):
-    """The audit must share the planner's politeness model: with
-    per_domain_per_wave=2 a wave's two same-host fetches legally share
-    one offset (within-burst gap 0 is fine); the DELAY constraint
-    binds between fetch i and fetch i-2. A plan executed exactly as
-    fetch_timeline emits it audits CLEAN at the planner's settings —
-    and the same log flags under the stricter serial default."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.web import (
-        audit_fetch_log,
-        fetch_timeline,
-        schedule_fetch,
-    )
-
-    frontier = spark.createDataFrame(
-        [(f"https://h.example/p{i}",) for i in range(6)], "url string"
-    )
-    delays = spark.createDataFrame(
-        [("h.example", 10.0)], "domain string, crawl_delay_s double"
-    )
-    timed = fetch_timeline(
-        schedule_fetch(frontier, per_domain_per_wave=2), delays
-    )
-    # execute the plan EXACTLY: fetch_ts = epoch + offset
-    log = timed.select(
-        "url",
-        F.timestamp_seconds(
-            F.lit(1_700_000_000) + F.col("earliest_fetch_offset_s")
-        ).alias("fetch_ts"),
-    )
-    assert (
-        audit_fetch_log(log, delays, per_domain_per_wave=2).count() == 0
-    )
-    # the serial auditor (default) correctly flags the in-wave ties
-    assert audit_fetch_log(log, delays).count() == 3  # one per wave
-    # squeezing a wave boundary under the delay still flags burst-aware
-    rushed = log.withColumn(
-        "fetch_ts",
-        F.when(
-            F.col("url") == "https://h.example/p2",
-            F.timestamp_seconds(F.lit(1_700_000_001)),
-        ).otherwise(F.col("fetch_ts")),
-    )
-    v = audit_fetch_log(rushed, delays, per_domain_per_wave=2)
-    assert [r["url"] for r in v.collect()] == ["https://h.example/p2"]
-
-
 def test_fetch_timeline_refuses_reapplication(spark):
     """Re-applying fetch_timeline to an already-scheduled frame would
     produce duplicate column names downstream — fail fast instead."""
@@ -1346,26 +1144,3 @@ def test_fetch_timeline_refuses_reapplication(spark):
     with _pytest.raises(ValueError, match="already carries"):
         fetch_timeline(timed, delays)
 
-
-def test_audit_fetch_log_custom_column_names(spark):
-    """Regression (round-11 review): the lag window must order by the
-    post-rename canonical names — custom url_col/ts_col inputs were
-    unresolvable before the fix."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.web import (
-        audit_fetch_log,
-    )
-
-    log = spark.createDataFrame(
-        [
-            ("https://h.example/a", "2026-01-01 00:00:00"),
-            ("https://h.example/b", "2026-01-01 00:00:01"),
-        ],
-        "u string, ts string",
-    )
-    delays = spark.createDataFrame(
-        [("h.example", 5.0)], "domain string, crawl_delay_s double"
-    )
-    out = audit_fetch_log(log, delays, url_col="u", ts_col="ts").collect()
-    assert [(r["url"], r["gap_s"]) for r in out] == [
-        ("https://h.example/b", 1.0)
-    ]

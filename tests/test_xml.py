@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from hospital_stain_tracker_data_pipeline_spark.sources.xml_source import (
     read_sitemap,
-    read_sitemap_index,
 )
 
 SITEMAP = """<?xml version="1.0" encoding="UTF-8"?>
@@ -33,15 +32,6 @@ SITEMAP = """<?xml version="1.0" encoding="UTF-8"?>
   </url>
 </urlset>
 """
-
-INDEX = """<?xml version="1.0" encoding="UTF-8"?>
-<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
-  <sitemap><loc>https://ex.com/sitemap-1.xml.gz</loc>
-  <lastmod>2026-01-01</lastmod></sitemap>
-  <sitemap><loc>https://ex.com/sitemap-2.xml.gz</loc></sitemap>
-</sitemapindex>
-"""
-
 
 def test_read_sitemap_plain_and_gzip(spark, tmp_path):
     """Entries parse with the optional fields NULL when absent; the
@@ -92,19 +82,6 @@ def test_read_sitemap_namespace_prefixed(spark, tmp_path):
     assert [(r["url"], r["lastmod"]) for r in frontier.collect()] == [
         ("https://ex.com/p", "2026-01-02")
     ]
-    assert rejected.count() == 0
-
-
-def test_read_sitemap_index(spark, tmp_path):
-    p = str(tmp_path / "index.xml")
-    with open(p, "w") as f:
-        f.write(INDEX)
-    index, rejected = read_sitemap_index(spark, p)
-    rows = {r["sitemap_url"]: r["lastmod"] for r in index.collect()}
-    assert rows == {
-        "https://ex.com/sitemap-1.xml.gz": "2026-01-01",
-        "https://ex.com/sitemap-2.xml.gz": None,
-    }
     assert rejected.count() == 0
 
 
