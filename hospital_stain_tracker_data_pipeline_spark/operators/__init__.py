@@ -48,20 +48,12 @@ from .sketch import (  # noqa: F401
     dyadic_rank_merge,
     dyadic_rank_sketch,
     heavy_hitters,
-    load_quantile_sketch,
     quantiles_from_sketch,
     rank_from_cells,
-    save_quantile_sketch,
     hll_estimate,
     hll_merge,
     filter_unseen,
     hll_registers,
-    load_bloom_sketch,
-    load_cms_sketch,
-    load_hll_sketch,
-    save_bloom_sketch,
-    save_cms_sketch,
-    save_hll_sketch,
 )
 from .quality import (  # noqa: F401
     compression_signals,

@@ -2335,12 +2335,10 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
       the hash column, and the legacy image layout with
       ``_phash_algo``/``_phash_size`` columns reads as ``fp_tagged``
       too), MinHash ``_mh_*``;
-    - parameterized summary/model artifacts (loader-validated +
-      row-counted; replaced wholesale, never row-deleted, so no
-      tombstone state): ``quantile_sketch`` (``_dq_*`` — the dyadic
-      rank sketch), ``cms_sketch``, ``hll_sketch``, ``bloom_sketch``,
-      ``ivf_centroids``, ``pq_codebooks``, ``ngram_lm`` (three nested
-      tables), ``text_probe`` (the one JSON-file artifact).
+    - parameterized model artifacts (loader-validated + row-counted;
+      replaced wholesale, never row-deleted, so no tombstone state):
+      ``ivf_centroids``, ``pq_codebooks``, ``text_probe`` (the one
+      JSON-file artifact).
 
     The Z-order lake layout is deliberately NOT a kind: it is a row
     ORDERING of a data table (``pipeline.zorder``), not a derived
@@ -2382,17 +2380,6 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
             w, _bias, dim = load_text_probe(p)
             report["meta"] = {"dim": dim}
             report["rows"] = int(len(w))
-        elif all(
-            _os.path.isdir(_os.path.join(p, d))
-            for d in ("grams", "contexts", "meta")
-        ):
-            # ngram LM: three nested parquet tables + validated meta
-            report["kind"] = "ngram_lm"
-            from .lm import load_ngram_lm
-
-            lm = load_ngram_lm(spark, p)
-            report["meta"] = {"n": lm.n}
-            report["rows"] = lm.grams.count()
         elif _os.path.exists(_os.path.join(p, "_INDEX_OK")) or _os.path.isdir(
             _os.path.join(p, "codes")
         ):
@@ -2452,47 +2439,9 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
                 report["meta"] = {"family": fam.name, "tag": fam.tag(params)}
                 if "_fp_tag" not in cols:
                     report["meta"]["legacy_layout"] = True
-            # ---- parameterized summary/model artifacts: loader-
-            # validated + row-counted, but no id/tombstone lifecycle
-            # (a sketch or codebook is replaced wholesale, never
-            # row-deleted — takedown = rebuild)
-            elif "_dq_levels" in cols:  # BEFORE _cms_: shares columns
-                report["kind"] = "quantile_sketch"
-                from .sketch import load_quantile_sketch
-
-                sk, levels, width, depth, by = load_quantile_sketch(
-                    spark, p
-                )
-                report["meta"] = {
-                    "levels": levels, "width": width, "depth": depth,
-                    "by": by,
-                }
-                report["rows"] = sk.count()
-                index = None
-            elif "_cms_width" in cols:
-                report["kind"] = "cms_sketch"
-                from .sketch import load_cms_sketch
-
-                sk, width, depth, by = load_cms_sketch(spark, p)
-                report["meta"] = {"width": width, "depth": depth, "by": by}
-                report["rows"] = sk.count()
-                index = None
-            elif "_hll_p" in cols:
-                report["kind"] = "hll_sketch"
-                from .sketch import load_hll_sketch
-
-                sk, hp, by = load_hll_sketch(spark, p)
-                report["meta"] = {"p": hp, "by": by}
-                report["rows"] = sk.count()
-                index = None
-            elif "_bloom_m" in cols:
-                report["kind"] = "bloom_sketch"
-                from .sketch import load_bloom_sketch
-
-                sk, m_bits, bk, by = load_bloom_sketch(spark, p)
-                report["meta"] = {"m_bits": m_bits, "k": bk, "by": by}
-                report["rows"] = sk.count()
-                index = None
+            # ---- parameterized model artifacts: loader-validated +
+            # row-counted, but no id/tombstone lifecycle (a codebook is
+            # replaced wholesale, never row-deleted — takedown = rebuild)
             elif cols == {"cluster", "pos", "val", "k", "dim"}:
                 report["kind"] = "ivf_centroids"
                 from .similarity import load_ivf_index

@@ -49,7 +49,6 @@ def _zigzag() -> list[int]:
 
 
 _ZIG = np.array(_zigzag(), dtype=np.int64)
-_UNZIG = np.argsort(_ZIG)
 
 # ITU T.81 Annex K.1 default quantization tables (raster order)
 _Q_LUMA = np.array(

@@ -239,39 +239,3 @@ def score_perplexity(
             "avg_neg_logp", F.round("avg_neg_logp", round_to)
         ).withColumn("perplexity", F.round("perplexity", round_to))
     return scored
-
-
-def save_ngram_lm(lm: NgramLM, path: str) -> None:
-    """Persist a trained model as three parquet tables (grams,
-    contexts, one-row meta) — the artifact a nightly trusted-corpus
-    training job writes and every scoring job loads, so the count
-    shuffles run once per model version. Engine-portable plain
-    parquet, like the IVF index artifact."""
-    lm.grams.write.mode("overwrite").parquet(f"{path}/grams")
-    lm.contexts.write.mode("overwrite").parquet(f"{path}/contexts")
-    from ..session import local_rows_df
-
-    spark = lm.grams.sparkSession
-    local_rows_df(
-        spark,
-        [(int(lm.n), int(lm.vocab_size), float(lm.k))],
-        "n int, vocab_size long, k double",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-
-
-def load_ngram_lm(spark, path: str) -> NgramLM:
-    """Inverse of ``save_ngram_lm``; validates the meta row so a
-    half-written artifact fails loudly."""
-    metas = spark.read.parquet(f"{path}/meta").collect()
-    if len(metas) != 1:
-        raise ValueError(
-            f"LM artifact at {path} has {len(metas)} meta rows, want 1"
-        )
-    m = metas[0]
-    return NgramLM(
-        grams=spark.read.parquet(f"{path}/grams"),
-        contexts=spark.read.parquet(f"{path}/contexts"),
-        n=int(m["n"]),
-        vocab_size=int(m["vocab_size"]),
-        k=float(m["k"]),
-    )

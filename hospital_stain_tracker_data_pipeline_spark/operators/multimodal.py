@@ -106,24 +106,6 @@ def sniff_image(raw: bytes) -> tuple[str, int, int] | None:
             i += seglen
     return None
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType(), True),
-                    T.StructField("n_bytes", T.LongType(), True),
-                    T.StructField("source", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),

@@ -616,14 +616,6 @@ def _balanced_dict_at(buf: bytes, i: int) -> bytes | None:
     return None
 
 
-# image/crypt codecs: not text-bearing (DCT/JPX are pixel streams) or
-# key-dependent — always the loud-ceiling path, never silent garbage
-_UNSUPPORTED_FILTERS = {
-    b"DCTDecode", b"JPXDecode", b"CCITTFaxDecode", b"JBIG2Decode",
-    b"Crypt",
-}
-
-
 def _apply_filter(name: bytes, data: bytes, parm: bytes) -> bytes | None:
     if name == b"FlateDecode":
         try:
@@ -641,7 +633,10 @@ def _apply_filter(name: bytes, data: bytes, parm: bytes) -> bytes | None:
     elif name == b"RunLengthDecode":
         return _run_length_decode(data)
     else:
-        return None  # _UNSUPPORTED_FILTERS and anything unknown
+        # image/crypt codecs (DCTDecode, JPXDecode, CCITTFaxDecode,
+        # JBIG2Decode, Crypt) are pixel streams or key-dependent, and
+        # anything unknown: the loud-ceiling path, never silent garbage
+        return None
     # Flate/LZW honor the predictor pre-transform
     predictor = _int_param(parm, b"Predictor", 1)
     if predictor > 1:

@@ -558,168 +558,6 @@ def cms_query(
     )
 
 
-def save_cms_sketch(
-    sketch: DataFrame,
-    width: int,
-    depth: int,
-    path: str,
-    by: str | list[str] | None = None,
-) -> None:
-    """Persist a count-min cell table WITH its parameters — the same
-    artifact convention as ``save_hll_sketch``: constant ``_cms_width``
-    / ``_cms_depth`` / ``_cms_by`` columns ride the parquet, so
-    ``load_cms_sketch`` returns the right ``(sketch, width, depth,
-    by)`` and a query with mismatched geometry (which would silently
-    UNDERestimate — breaking the one guarantee CMS makes) becomes
-    structurally impossible for artifact-mediated flows. Key names are
-    a JSON array (comma-joined would split a comma-bearing name). A
-    sketch is ≤ width*depth cells per group; coalesce(1) keeps the
-    artifact one small file.
-
-    ``by`` is validated against the sketch's actual schema — saving a
-    grouped sketch while forgetting ``by=`` would otherwise record
-    by=[] and make every later query min() across groups (a silent
-    underestimate). A NULL-``row`` sentinel meta row rides along so a
-    legitimately EMPTY sketch (all-NULL shard) still round-trips with
-    its geometry (the loader drops it)."""
-    import json
-
-    _cms_check(width, depth)
-    keys = _by_cols(by)
-    expected = {"row", "col", "cnt"} | set(keys)
-    if set(sketch.columns) != expected:
-        raise ValueError(
-            f"sketch columns {sorted(sketch.columns)} do not match "
-            f"by={keys}: expected exactly {sorted(expected)} — was the "
-            "sketch built with different group keys?"
-        )
-    sentinel = sketch.sparkSession.range(1).select(
-        *[
-            F.lit(None).cast(sketch.schema[c].dataType).alias(c)
-            for c in sketch.columns
-        ]
-    )
-    (
-        sketch.unionByName(sentinel)
-        .withColumn("_cms_width", F.lit(width))
-        .withColumn("_cms_depth", F.lit(depth))
-        .withColumn("_cms_by", F.lit(json.dumps(keys)))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def load_cms_sketch(spark, path: str):
-    """Inverse of ``save_cms_sketch``: returns ``(sketch, width,
-    depth, by)`` ready for ``cms_merge``/``cms_query``. Fails loudly
-    on a parameterless parquet or a corrupt artifact mixing parameter
-    sets."""
-    import json
-
-    df = spark.read.parquet(path)
-    needed = {"_cms_width", "_cms_depth", "_cms_by"}
-    if not needed.issubset(df.columns):
-        raise ValueError(
-            f"{path} has no _cms_width/_cms_depth/_cms_by columns — "
-            "not a save_cms_sketch artifact"
-        )
-    metas = df.select("_cms_width", "_cms_depth", "_cms_by").distinct().collect()
-    if len(metas) != 1:
-        raise ValueError(
-            f"{path} mixes {len(metas)} parameter sets — corrupt "
-            "artifact (merge sketches via cms_merge, not file unions)"
-        )
-    width, depth = int(metas[0]["_cms_width"]), int(metas[0]["_cms_depth"])
-    _cms_check(width, depth)
-    by = json.loads(metas[0]["_cms_by"]) or None
-    cells = df.drop("_cms_width", "_cms_depth", "_cms_by").filter(
-        F.col("row").isNotNull()  # drop the empty-safety sentinel row
-    )
-    return cells, width, depth, by
-
-
-def save_hll_sketch(
-    sketch: DataFrame,
-    p: int,
-    path: str,
-    by: str | list[str] | None = None,
-) -> None:
-    """Persist a register table WITH its parameters: the parquet
-    carries constant ``_hll_p`` and ``_hll_by`` columns, so
-    ``load_hll_sketch`` returns the right ``(sketch, p, by)`` and the
-    whole estimate-with-the-wrong-p class of slips (the best-effort
-    runtime guard in ``hll_estimate`` only probabilistically catches
-    it) becomes structurally impossible for artifact-mediated flows.
-    A sketch is at most ``2^p`` rows per group — coalesce(1) keeps the
-    artifact a single tiny file. ``by`` key names are stored as a JSON
-    array (a comma-joined string would split a key whose NAME contains
-    a comma into two wrong keys on load). ``by`` is validated against
-    the sketch's actual schema (forgetting ``by=`` on a grouped sketch
-    would record by=[] and corrupt every later grouped estimate), and
-    a NULL-``register`` sentinel row makes an EMPTY sketch (all-NULL
-    shard) round-trip with its parameters intact."""
-    import json
-
-    _hll_check_p(p)
-    keys = _by_cols(by)
-    expected = {"register", "max_rho"} | set(keys)
-    if set(sketch.columns) != expected:
-        raise ValueError(
-            f"sketch columns {sorted(sketch.columns)} do not match "
-            f"by={keys}: expected exactly {sorted(expected)} — was the "
-            "sketch built with different group keys?"
-        )
-    sentinel = sketch.sparkSession.range(1).select(
-        *[
-            F.lit(None).cast(sketch.schema[c].dataType).alias(c)
-            for c in sketch.columns
-        ]
-    )
-    (
-        sketch.unionByName(sentinel)
-        .withColumn("_hll_p", F.lit(p))
-        .withColumn("_hll_by", F.lit(json.dumps(keys)))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def load_hll_sketch(spark, path: str):
-    """Inverse of ``save_hll_sketch``: returns ``(sketch, p, by)``
-    ready for ``hll_merge``/``hll_estimate``. Fails loudly on a
-    parameterless parquet (not a saved sketch) or a corrupt artifact
-    mixing several ``p`` values."""
-    df = spark.read.parquet(path)
-    if "_hll_p" not in df.columns or "_hll_by" not in df.columns:
-        raise ValueError(
-            f"{path} has no _hll_p/_hll_by columns — not a "
-            "save_hll_sketch artifact"
-        )
-    metas = df.select("_hll_p", "_hll_by").distinct().collect()
-    if len(metas) != 1:
-        raise ValueError(
-            f"{path} mixes {len(metas)} parameter sets — corrupt "
-            "artifact (merge sketches via hll_merge, not file unions)"
-        )
-    p = int(metas[0]["_hll_p"])
-    _hll_check_p(p)
-    raw = metas[0]["_hll_by"]
-    if raw.startswith("["):  # JSON-array encoding (current format)
-        import json
-
-        by = json.loads(raw) or None
-    else:  # legacy comma-joined artifacts (pre-JSON encoding)
-        by = [c for c in raw.split(",") if c] or None
-    registers = df.drop("_hll_p", "_hll_by").filter(
-        # drop the empty-safety sentinel row (absent in legacy
-        # artifacts — the filter is then a no-op)
-        F.col("register").isNotNull()
-    )
-    return registers, p, by
-
-
 # --------------------------------------------------------------- bloom
 
 
@@ -926,77 +764,6 @@ def filter_unseen(
     )
 
 
-def save_bloom_sketch(
-    sketch: DataFrame,
-    m_bits: int,
-    k: int,
-    path: str,
-    by: str | list[str] | None = None,
-) -> None:
-    """Persist a Bloom word table WITH its parameters — the sketch
-    artifact convention (``save_hll_sketch``/``save_cms_sketch``):
-    constant ``_bloom_m``/``_bloom_k``/``_bloom_by`` columns ride the
-    parquet so loads can't probe with the wrong geometry (which would
-    produce false NEGATIVES — the one error class a Bloom filter must
-    never make). ``by`` is validated against the sketch's schema; a
-    NULL-``word`` sentinel row makes an empty sketch round-trip."""
-    import json
-
-    _bloom_check(m_bits, k)
-    keys = _by_cols(by)
-    expected = {"word", "bits"} | set(keys)
-    if set(sketch.columns) != expected:
-        raise ValueError(
-            f"sketch columns {sorted(sketch.columns)} do not match "
-            f"by={keys}: expected exactly {sorted(expected)} — was the "
-            "sketch built with different group keys?"
-        )
-    sentinel = sketch.sparkSession.range(1).select(
-        *[
-            F.lit(None).cast(sketch.schema[c].dataType).alias(c)
-            for c in sketch.columns
-        ]
-    )
-    (
-        sketch.unionByName(sentinel)
-        .withColumn("_bloom_m", F.lit(m_bits))
-        .withColumn("_bloom_k", F.lit(k))
-        .withColumn("_bloom_by", F.lit(json.dumps(keys)))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def load_bloom_sketch(spark, path: str):
-    """Inverse of ``save_bloom_sketch``: returns ``(sketch, m_bits, k,
-    by)`` ready for ``bloom_query``/``filter_unseen``. Fails loudly on a
-    parameterless parquet or a corrupt artifact mixing parameter
-    sets."""
-    import json
-
-    df = spark.read.parquet(path)
-    needed = {"_bloom_m", "_bloom_k", "_bloom_by"}
-    if not needed.issubset(df.columns):
-        raise ValueError(
-            f"{path} has no _bloom_m/_bloom_k/_bloom_by columns — not "
-            "a save_bloom_sketch artifact"
-        )
-    metas = df.select("_bloom_m", "_bloom_k", "_bloom_by").distinct().collect()
-    if len(metas) != 1:
-        raise ValueError(
-            f"{path} mixes {len(metas)} parameter sets — corrupt "
-            "artifact (merge sketches before saving, not file unions)"
-        )
-    m_bits, k = int(metas[0]["_bloom_m"]), int(metas[0]["_bloom_k"])
-    _bloom_check(m_bits, k)
-    by = json.loads(metas[0]["_bloom_by"]) or None
-    words = df.drop("_bloom_m", "_bloom_k", "_bloom_by").filter(
-        F.col("word").isNotNull()  # drop the empty-safety sentinel row
-    )
-    return words, m_bits, k, by
-
-
 def _dyadic_check(levels: int, width: int, depth: int) -> None:
     if not 1 <= levels <= 62:
         raise ValueError(f"levels must be in [1, 62], got {levels}")
@@ -1198,80 +965,3 @@ def quantiles_from_sketch(
                 lo = mid + 1
         out[q] = lo
     return out
-
-
-def save_quantile_sketch(
-    sketch: DataFrame,
-    levels: int,
-    width: int,
-    depth: int,
-    path: str,
-    by: str | list[str] | None = None,
-) -> None:
-    """Persist a dyadic rank sketch WITH its parameters — the
-    ``save_cms_sketch`` convention with ``_dq_levels`` riding along:
-    querying with mismatched geometry would silently misrank, so the
-    loader returns the artifact's own (levels, width, depth, by). A
-    NULL-``row`` sentinel keeps an EMPTY sketch round-trippable."""
-    import json
-
-    _dyadic_check(levels, width, depth)
-    keys = _by_cols(by)
-    expected = {"lvl", "row", "col", "cnt"} | set(keys)
-    if set(sketch.columns) != expected:
-        raise ValueError(
-            f"sketch columns {sorted(sketch.columns)} do not match "
-            f"by={keys}: expected exactly {sorted(expected)} — was the "
-            "sketch built with different group keys?"
-        )
-    sentinel = sketch.sparkSession.range(1).select(
-        *[
-            F.lit(None).cast(sketch.schema[c].dataType).alias(c)
-            for c in sketch.columns
-        ]
-    )
-    (
-        sketch.unionByName(sentinel)
-        .withColumn("_dq_levels", F.lit(levels))
-        .withColumn("_cms_width", F.lit(width))
-        .withColumn("_cms_depth", F.lit(depth))
-        .withColumn("_cms_by", F.lit(json.dumps(keys)))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def load_quantile_sketch(spark, path: str):
-    """Inverse of ``save_quantile_sketch``: ``(sketch, levels, width,
-    depth, by)`` ready for ``dyadic_rank_merge`` /
-    ``quantiles_from_sketch``. Fails loudly on a parameterless parquet
-    or a corrupt artifact mixing parameter sets."""
-    import json
-
-    df = spark.read.parquet(path)
-    needed = {"_dq_levels", "_cms_width", "_cms_depth", "_cms_by"}
-    if not needed.issubset(df.columns):
-        raise ValueError(
-            f"{path} has no _dq_levels/_cms_width/_cms_depth/_cms_by "
-            "columns — not a save_quantile_sketch artifact"
-        )
-    metas = (
-        df.select("_dq_levels", "_cms_width", "_cms_depth", "_cms_by")
-        .distinct()
-        .collect()
-    )
-    if len(metas) != 1:
-        raise ValueError(
-            f"{path} mixes {len(metas)} parameter sets — corrupt "
-            "artifact (merge sketches via dyadic_rank_merge, not file "
-            "unions)"
-        )
-    levels = int(metas[0]["_dq_levels"])
-    width, depth = int(metas[0]["_cms_width"]), int(metas[0]["_cms_depth"])
-    _dyadic_check(levels, width, depth)
-    by = json.loads(metas[0]["_cms_by"]) or None
-    cells = df.drop(
-        "_dq_levels", "_cms_width", "_cms_depth", "_cms_by"
-    ).filter(F.col("row").isNotNull())
-    return cells, levels, width, depth, by

@@ -22,7 +22,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_VERSION = "_upsert_version"
 _PRIORITY = "_upsert_priority"
 
 

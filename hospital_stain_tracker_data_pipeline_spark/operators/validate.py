@@ -17,22 +17,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# (predicate_builder, reason) in reference order (ingest_capacity.py:29-57).
-# Each entry is a function df_cols -> Column so rules stay declarative.
-REJECT_REASONS: Sequence[str] = (
-    "date is required",
-    "region is required",
-    "total_beds is required",
-    "occupied_beds is required",
-    "total_beds cannot be negative",
-    "occupied_beds cannot be negative",
-    "occupied_beds cannot exceed total_beds",
-    "icu_beds cannot be negative",
-    "icu_occupied cannot be negative",
-    "icu_occupied cannot exceed icu_beds",
-)
-
-
 def capacity_reject_rules(
     date: Column,
     region: Column,
@@ -81,7 +65,6 @@ def reject_reason_column(rules: Sequence[tuple[Column, str]]) -> Column:
 def split_valid_invalid(
     df: DataFrame,
     rules: Sequence[tuple[Column, str]],
-    reason_col: str = "_reject_reason",
 ) -> tuple[DataFrame, DataFrame]:
     """Split into (accepted, rejected-with-reason).
 
@@ -93,8 +76,8 @@ def split_valid_invalid(
     callers that need provenance should carry a natural key or use
     ``F.monotonically_increasing_id`` per ingest file.
     """
-    reason = reject_reason_column(rules)
-    with_reason = df.withColumn(reason_col, reason)
-    accepted = with_reason.filter(F.col(reason_col).isNull()).drop(reason_col)
-    rejected = with_reason.filter(F.col(reason_col).isNotNull())
+    with_reason = df.withColumn("_reject_reason", reject_reason_column(rules))
+    reason = F.col("_reject_reason")
+    accepted = with_reason.filter(reason.isNull()).drop("_reject_reason")
+    rejected = with_reason.filter(reason.isNotNull())
     return accepted, rejected

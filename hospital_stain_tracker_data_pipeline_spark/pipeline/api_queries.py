@@ -22,9 +22,9 @@ from ..functions.metrics import bed_occ_pct_api, icu_occ_pct
 from ..operators.asof import with_prev_calendar_day
 
 
-def latest_date(df: DataFrame, date_col: str = "date"):
+def latest_date(df: DataFrame):
     """Default date = max(date) (main.py:148-152,205-209) — op-agg-max-date."""
-    return df.agg(F.max(date_col).alias("max_date"))
+    return df.agg(F.max("date").alias("max_date"))
 
 
 def runs_latest(runs: DataFrame, limit: int = 20) -> DataFrame:

@@ -87,12 +87,14 @@ def compute_metrics(
             version_col="created_at",
         )
         if dates is None:
-            capacity = bronze.read()
+            # a lake whose every batch so far was rejected has no bronze
+            # rows to infer a schema from: 0 rows, like an absent date
+            capacity = bronze.read() if bronze.exists() else None
         else:
             capacity = bronze.read(dates)
             if capacity is not None:
                 capacity = capacity.withColumn("date", F.col("date").cast("date"))
-        n = 0  # stays 0 when none of the dates is in bronze
+        n = 0  # stays 0 when bronze holds none of the rows asked for
         if capacity is not None:
             silver = LakeTable(
                 spark,

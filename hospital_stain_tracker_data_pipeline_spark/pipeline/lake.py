@@ -24,6 +24,11 @@ environment this would be ``MERGE INTO``; the portable mechanism here:
    untouched table runs no listing or schema-merge job. Reuse is
    checked on every call against a digest of one driver-side walk of
    the root, which any writer invalidates, ``LakeTable`` or not.
+
+The table does what the pipeline runs and no more: ``exists``, the full
+and scoped ``read``, ``overwrite``, ``upsert`` and a per-partition file
+count. It has no compaction or retention operation; the storage layout
+section of SCALE.md says where those belong.
 """
 
 from __future__ import annotations
@@ -48,9 +53,9 @@ _SNAPSHOTS_LOCK = threading.Lock()
 
 
 class _Snapshots:
-    """One session's full-read frames, ``{(path, format): (token,
-    frame)}``, and the JVM handles of the walk that validates them,
-    resolved once per session.
+    """One session's full-read frames, ``{path: (token, frame)}``, and
+    the JVM handles of the walk that validates them, resolved once per
+    session.
 
     It is kept on the session object, so it ends with its session and
     no other session sees it. A module-level map keyed by session would
@@ -153,40 +158,16 @@ class LakeTable:
         keys: Sequence[str],
         partition_col: str = "date",
         version_col: str | None = "created_at",
-        sort_cols: Sequence[str] | None = None,
-        data_format: str = "parquet",
     ):
-        """``sort_cols``: optional within-file clustering columns. Every
-        write sorts rows inside each task by (partition, *sort_cols)
-        before the parquet encoder sees them, so each row group's
-        min/max statistics become tight, disjoint ranges — a reader
-        with a range/equality predicate on a sort column then skips
-        whole row groups from the footer alone (the poor man's Z-order;
-        single-column clustering is exactly what the reference's B-tree
-        second key gave it). Costs one in-task sort at write time, no
-        extra shuffle.
-
-        ``data_format``: ``parquet`` (default) or ``orc`` — both are
-        Spark-native columnar formats with identical partition-pruning,
-        predicate-pushdown, and dynamic-partition-overwrite behavior,
-        so the whole merge/compact machinery is format-agnostic; ORC
-        matters for lakes shared with Hive/Trino deployments that
-        standardized on it."""
         self.spark = spark
         self.path = path
         self.keys = list(keys)
         self.partition_col = partition_col
         self.version_col = version_col
-        self.sort_cols = list(sort_cols) if sort_cols else []
-        if data_format not in ("parquet", "orc"):
-            raise ValueError(
-                f"unsupported data_format {data_format!r}: parquet | orc"
-            )
-        self.data_format = data_format
 
     def _hadoop_fs(self):
         """Resolve ``self.path`` through the Hadoop ``FileSystem`` API so
-        every maintenance op works on whatever scheme the path carries
+        every listing works on whatever scheme the path carries
         (file:, hdfs:, s3a:, ...) — the same resolution Spark's own
         readers/writers use. Returns ``(FileSystem, Path)``."""
         jvm = self.spark._jvm
@@ -194,8 +175,8 @@ class LakeTable:
         fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return fs, jpath
 
-    # Hive's sentinel directory for a NULL partition value — vacuum
-    # never drops it (its rows are invisible to value predicates).
+    # Hive's sentinel directory for a NULL partition value; ``read``
+    # and ``upsert`` name the NULL partition by it.
     _NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
     def _partition_dirs(self) -> dict:
@@ -232,10 +213,10 @@ class LakeTable:
         session's SQL conf. The walk runs no Spark job. It relies on
         what every Spark writer does: a write either creates new file
         names or changes a file's length or modification time. So an
-        upsert, ``compact``, ``vacuum``, a plain ``df.write`` to the
-        path or an out-of-band delete all yield a fresh frame, never one
-        that lists deleted files. Two full reads of an unchanged table
-        return the same frame object, so a self-join aliases each side.
+        upsert, a plain ``df.write`` to the path or an out-of-band delete
+        all yield a fresh frame, never one that lists deleted files. Two
+        full reads of an unchanged table return the same frame object, so
+        a self-join aliases each side.
 
         The scoped form lists the root once and loads just the matching
         directories, so its listing and footer reads cost what the
@@ -246,7 +227,7 @@ class LakeTable:
         no requested partition exists."""
         if partitions is None:
             snapshots = _Snapshots.of(self.spark)
-            key = (self.path, self.data_format)
+            key = self.path
             # the token is taken before resolving, so a write racing the
             # resolution can only make the next call resolve again
             token = snapshots.token(*self._hadoop_fs())
@@ -258,10 +239,8 @@ class LakeTable:
                 # — the merged read surfaces the union schema with NULLs
                 # for the missing column (the lake-format ALTER TABLE ADD
                 # COLUMN behavior)
-                frame = (
-                    self.spark.read.option("mergeSchema", "true")
-                    .format(self.data_format)
-                    .load(self.path)
+                frame = self.spark.read.option("mergeSchema", "true").parquet(
+                    self.path
                 )
                 snapshots.put(key, token, frame)
             return frame
@@ -276,26 +255,21 @@ class LakeTable:
         # Spark fills from the directory name without type inference.
         schema = (
             self.spark.read.option("mergeSchema", "true")
-            .format(self.data_format)
-            .load(paths)
+            .parquet(*paths)
             .schema.add(self.partition_col, "string")
         )
         return (
             self.spark.read.schema(schema)
             .option("basePath", self.path)
-            .format(self.data_format)
-            .load(paths)
+            .parquet(*paths)
         )
 
     def overwrite(self, df: DataFrame) -> None:
-        if self.sort_cols:
-            df = df.sortWithinPartitions(self.partition_col, *self.sort_cols)
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(self.partition_col)
-            .format(self.data_format)
-            .save(self.path)
+            .parquet(self.path)
         )
 
     def upsert(self, incoming: DataFrame) -> None:
@@ -344,136 +318,21 @@ class LakeTable:
         merged = merged.localCheckpoint(eager=True)
         self.overwrite(merged)
 
-    def _data_files(self, fs, part_dir) -> int:
-        return sum(
-            1
-            for f in fs.listStatus(part_dir)
-            if f.isFile()
-            and f.getPath().getName().endswith(f".{self.data_format}")
-            and not f.getPath().getName().startswith(".")
-        )
-
     def partition_file_counts(self) -> dict[str, int]:
         """data-file count per partition VALUE (unescaped), via the
         Hadoop ``FileSystem`` API so the walk works on any scheme (file:,
         hdfs:, s3a:, ...)."""
         fs, _ = self._hadoop_fs()
         return {
-            v: self._data_files(fs, d) for v, d in self._partition_dirs().items()
-        }
-
-    def compact(self, min_files: int = 2) -> dict[str, int]:
-        """Small-file maintenance (the OPTIMIZE/rewrite_data_files analog
-        of Delta/Iceberg): rewrite every partition holding >= ``min_files``
-        part files down to ONE file per partition.
-
-        Micro-batch upserts fragment partitions — each merge write emits
-        one file per shuffle task that holds rows of the partition — and
-        at 100 TB the resulting tiny-file sea dominates scan overhead
-        (footer reads, task scheduling). The rewrite reads ONLY the
-        fragmented partitions (scoped read), hash-repartitions on the
-        partition column so each partition's rows land in exactly one
-        task (= one output file), and dynamic-overwrites just those
-        directories. Row content is untouched — compaction is a pure
-        layout operation. Returns {partition: files_before} for the
-        partitions rewritten."""
-        fragmented = {
-            p: n for p, n in self.partition_file_counts().items() if n >= min_files
-        }
-        if not fragmented:
-            return {}
-        # the scoped read's raw-string partition values render back to
-        # the very directories they came from
-        compacted = (
-            self.read(fragmented)
-            .repartition(len(fragmented), F.col(self.partition_col))
-            .localCheckpoint(eager=True)
-        )
-        self.overwrite(compacted)
-        return fragmented
-
-    def vacuum(
-        self,
-        before: str | None = None,
-        keep: Sequence[str] | None = None,
-        dry_run: bool = False,
-    ) -> dict[str, int]:
-        """Partition-level retention — the third lake maintenance
-        primitive beside ``upsert`` and ``compact``: drop whole
-        partition directories whose value falls out of the retention
-        policy. At 100 TB a date-partitioned lake grows one partition
-        per day forever; retention is a metadata-cheap directory drop,
-        never a row-level rewrite (the reference has no analog — its
-        rejects dir grows unboundedly, ingest_capacity.py:140-153).
-
-        Exactly one of:
-
-        - ``before``: drop partitions with value < ``before`` (string
-          compare on the unescaped directory value — for ISO dates
-          lexicographic == chronological, which is why the lake
-          partitions by ISO strings);
-        - ``keep``: drop partitions NOT in the explicit keep-set.
-
-        ``dry_run=True`` returns the would-be victims without touching
-        anything. Returns ``{partition_value: data_file_count}`` for
-        the partitions dropped (or selected, under dry-run).
-
-        The Hive NULL-partition sentinel is never dropped (its rows
-        are invisible to value predicates either way).
-
-        Crash discipline: the victim list is marker-committed — a
-        ``_VACUUM_PENDING`` file (JSON victim list) lands before the
-        first directory drop and is removed after the last, so an
-        interrupted vacuum is DETECTABLE (the marker names what was in
-        flight) and safely resumable: deletes are idempotent, and a
-        leftover marker is overwritten by the rerun. Readers are
-        unaffected mid-vacuum — they simply stop seeing dropped
-        partitions; untouched partitions never change (pinned by the
-        pruned-query-equality test)."""
-        if (before is None) == (keep is None):
-            raise ValueError("vacuum needs exactly one of before= / keep=")
-        if isinstance(keep, str):
-            # a plain string satisfies Sequence[str] by iterating its
-            # CHARACTERS — which would mark every partition a victim
-            # and drop the whole table; refuse the footgun loudly
-            raise ValueError(
-                "keep= must be a collection of partition values, not a "
-                f"string (got {keep!r}) — wrap it: keep=[{keep!r}]"
+            v: sum(
+                1
+                for f in fs.listStatus(d)
+                if f.isFile()
+                and f.getPath().getName().endswith(".parquet")
+                and not f.getPath().getName().startswith(".")
             )
-        fs, root = self._hadoop_fs()
-        dirs = self._partition_dirs()
-        if keep is not None:
-            keep_set = {str(k) for k in keep}
-            doomed = [p for p in dirs if p not in keep_set]
-        else:
-            doomed = [p for p in dirs if p < before]
-        victims = {
-            p: self._data_files(fs, dirs[p])
-            for p in doomed
-            if p != self._NULL_PARTITION
+            for v, d in self._partition_dirs().items()
         }
-        if dry_run:
-            return victims
-
-        import json
-
-        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path
-        marker = jvm_path(root, "_VACUUM_PENDING")
-        if not victims:
-            # finish an interrupted vacuum that deleted its last victim
-            # but died before removing the marker — otherwise the stale
-            # marker would signal "torn vacuum" forever, since the
-            # no-victims rerun would never reach the marker logic
-            if fs.exists(marker):
-                fs.delete(marker, False)
-            return victims
-        out = fs.create(marker, True)
-        out.write(bytearray(json.dumps(sorted(victims)).encode()))
-        out.close()
-        for p in victims:
-            fs.delete(dirs[p], True)
-        fs.delete(marker, False)
-        return victims
 
 
 def _zorder_double(df: DataFrame, col: str):

@@ -1,10 +1,7 @@
-"""Schema registry.
-
-Domain schemas mirror the reference's declared data model
-(``/root/reference/backend/app/models.py:14-117``) and the raw HHS CSV
-contract (``/root/reference/backend/app/etl/ingest_capacity.py:106-113``).
-Fixture schemas mirror the driver-provisioned parquet at
-``/root/testdata`` (see FIXTURES.md §B).
+"""Schema registry: the raw HHS CSV contract (the reference's
+``backend/app/etl/ingest_capacity.py:106-113``) and the ``pipeline_runs``
+run log (its ``models.py:14-27``). The lake's fact and dimension tables
+take their schema from the frames the pipeline writes.
 
 UUIDs are strings (Spark has no UUID type); TIMESTAMPTZ columns are
 TimestampType with the session pinned to UTC.
@@ -27,59 +24,6 @@ HHS_COLUMN_MAPPING: dict[str, str] = {
     "staffed_adult_icu_bed_occupancy": "icu_occupied",
 }
 
-# Raw CSV arrives with string dates and possibly-fractional bed counts;
-# read everything permissively, then validate (schema-on-read like the
-# reference's required-column check, ingest_capacity.py:115-120).
-HHS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("date", T.StringType(), True),
-        T.StructField("state", T.StringType(), True),
-        T.StructField("inpatient_beds", T.DoubleType(), True),
-        T.StructField("inpatient_beds_used", T.DoubleType(), True),
-        T.StructField("total_staffed_adult_icu_beds", T.DoubleType(), True),
-        T.StructField("staffed_adult_icu_bed_occupancy", T.DoubleType(), True),
-    ]
-)
-
-# regions dimension (models.py:30-46)
-REGIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("region_id", T.StringType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("population", T.LongType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
-    ]
-)
-
-# hospital_capacity_daily bronze fact (models.py:49-82)
-CAPACITY_DAILY_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("date", T.DateType(), False),
-        T.StructField("region_id", T.StringType(), False),
-        T.StructField("total_beds", T.IntegerType(), False),
-        T.StructField("occupied_beds", T.IntegerType(), False),
-        T.StructField("icu_beds", T.IntegerType(), True),
-        T.StructField("icu_occupied", T.IntegerType(), True),
-        T.StructField("source_run_id", T.StringType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
-    ]
-)
-
-# metrics_daily silver fact (models.py:85-117)
-METRICS_DAILY_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("date", T.DateType(), False),
-        T.StructField("region_id", T.StringType(), False),
-        T.StructField("bed_occ_pct", T.DoubleType(), False),
-        T.StructField("icu_occ_pct", T.DoubleType(), True),
-        T.StructField("strain_index", T.DoubleType(), False),
-        T.StructField("source_run_id", T.StringType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
-    ]
-)
-
 # pipeline_runs run log (models.py:14-27)
 PIPELINE_RUNS_SCHEMA = T.StructType(
     [
@@ -92,32 +36,5 @@ PIPELINE_RUNS_SCHEMA = T.StructType(
         T.StructField("rows_loaded", T.LongType(), True),
         T.StructField("rows_rejected", T.LongType(), True),
         T.StructField("notes", T.StringType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Driver fixture tables (/root/testdata/sf*/; FIXTURES.md §B)
-# ---------------------------------------------------------------------------
-FIXTURE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("props", T.StringType(), True),
     ]
 )

@@ -25,11 +25,7 @@ class MissingColumnsError(ValueError):
     pass
 
 
-def read_hhs_csv(
-    spark: SparkSession,
-    path: str,
-    mapping: dict[str, str] | None = None,
-) -> DataFrame:
+def read_hhs_csv(spark: SparkSession, path: str) -> DataFrame:
     """Read an HHS capacity CSV (local path or s3a:// URI), enforce the
     required-column contract, and project+rename to canonical names.
 
@@ -42,9 +38,8 @@ def read_hhs_csv(
     reference, which raises on first bad value,
     ingest_capacity.py:15-20,126).
     """
-    mapping = mapping or HHS_COLUMN_MAPPING
     raw = spark.read.option("header", True).csv(path)
-    missing = [c for c in mapping if c not in raw.columns]
+    missing = [c for c in HHS_COLUMN_MAPPING if c not in raw.columns]
     if missing:
         raise MissingColumnsError(f"Missing required columns: {missing}")
     numeric = {
@@ -55,7 +50,7 @@ def read_hhs_csv(
     }
     cols = [
         (F.col(src).try_cast("double") if src in numeric else F.col(src)).alias(dst)
-        for src, dst in mapping.items()
+        for src, dst in HHS_COLUMN_MAPPING.items()
     ]
     # _source_row: the distributed analog of the reference's reject
     # `_original_index` (ingest_capacity.py:140-152) — unique and

@@ -15,9 +15,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def normalize_event_ts(df: DataFrame) -> DataFrame:
     """Normalize an events frame's ``ts`` column to a canonical
     ``TimestampType`` (UTC — the session timezone is pinned), branching

@@ -26,7 +26,6 @@ seeks straight to it.
 
 from __future__ import annotations
 
-import io
 import zlib
 from collections.abc import Iterable, Iterator
 import pandas as pd

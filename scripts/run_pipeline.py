@@ -451,10 +451,10 @@ def cmd_ann_index(args) -> None:
 
 def cmd_index_fsck(args) -> None:
     """Read-only health check for ANY persisted index artifact (ANN /
-    MinHash / media fingerprint / sketches): kind detection, loader
-    validation, lifecycle state (tombstones, stale swap dirs) — one
-    JSON report per --path, ok=false + error text instead of a crash,
-    so a fleet sweep reports per-artifact."""
+    MinHash / media fingerprint / IVF and PQ fits / text probe): kind
+    detection, loader validation, lifecycle state (tombstones, stale
+    swap dirs) — one JSON report per --path, ok=false + error text
+    instead of a crash, so a fleet sweep reports per-artifact."""
     import json as _json
 
     from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (

@@ -1,10 +1,18 @@
-"""API-surface ratchet: every public top-level function or class of the
-package needs a caller outside tests/ (the package itself, scripts/,
-bench.py, perfbench/ or the catalog entry __spark_entry__.py), unless it
-is pinned in TEST_ONLY below. The pin list may only shrink: an entry
-that gains a real caller or is deleted must leave it (the second
-assert), and nothing may join it without a caller (the first). A
-public name with no caller at all, tests included, always fails."""
+"""API-surface ratchet over three kinds of package name.
+
+- Every public top-level function or class needs a caller outside
+  tests/ (the package itself, scripts/, bench.py, perfbench/ or the
+  catalog entry __spark_entry__.py), unless it is pinned in TEST_ONLY
+  below. The pin list may only shrink: an entry that gains a real
+  caller or is deleted must leave it (the second assert), and nothing
+  may join it without a caller (the first). A public name with no
+  caller at all, tests included, always fails.
+- Every public method of a package class needs an ``x.<name>(`` call
+  outside tests/; a bare attribute read such as ``args.compact`` does
+  not count. There is no pin list for methods.
+- Every module-level constant (an assignment at module level, dunders
+  exempt) needs a reader anywhere in the repo's Python, tests
+  included, other than its own definition."""
 
 from __future__ import annotations
 
@@ -15,6 +23,7 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "hospital_stain_tracker_data_pipeline_spark")
 CALLER_PATHS = [PKG, "scripts", "perfbench", "bench.py", "__spark_entry__.py"]
+ALL_PATHS = CALLER_PATHS + ["tests"]
 
 # public names whose only callers are tests (shrink-only), each kept
 # for the reason above its group
@@ -23,9 +32,6 @@ TEST_ONLY = {
     "bm25_reference", "cosine", "bloom_fpp",
     # fault detection and recovery
     "recover_index_swap", "verify_packed_corpus",
-    # writers of artifact kinds the index_fsck CLI still validates
-    "save_hll_sketch", "save_cms_sketch", "save_bloom_sketch",
-    "save_quantile_sketch", "save_ngram_lm",
     # entry points carrying the only exactness tests of live code: the
     # search_ann_index path runs through _adc_table_np/_adc_topk ...
     "pq_encode", "pq_decode", "pack_codes", "unpack_codes", "knn_pq",
@@ -83,3 +89,53 @@ def test_public_api_has_callers_outside_tests():
         "stale TEST_ONLY entries (now called or gone) — remove them: "
         f"{sorted(TEST_ONLY - test_only)}"
     )
+
+
+def test_public_methods_have_callers_outside_tests():
+    called = {
+        node.func.attr
+        for f in _py_files(CALLER_PATHS)
+        for node in ast.walk(ast.parse(open(f).read()))
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+    }
+    uncalled = sorted(
+        f"{cls.name}.{node.name}"
+        for f in _py_files([PKG])
+        for cls in ast.parse(open(f).read()).body
+        if isinstance(cls, ast.ClassDef)
+        for node in cls.body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and not node.name.startswith("_")
+        and node.name not in called
+    )
+    assert not uncalled, (
+        f"public methods nothing outside tests calls — delete them: {uncalled}"
+    )
+
+
+def test_module_constants_are_read():
+    read = set()
+    for f in _py_files(ALL_PATHS):
+        for node in ast.walk(ast.parse(open(f).read())):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                read.add(node.id)
+            elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+                read.add(node.attr)
+    unread = []
+    for f in _py_files([PKG]):
+        for stmt in ast.parse(open(f).read()).body:
+            if isinstance(stmt, ast.Assign):
+                targets = stmt.targets
+            elif isinstance(stmt, ast.AnnAssign):
+                targets = [stmt.target]
+            else:
+                continue
+            unread += [
+                f"{os.path.relpath(f, PKG)}:{node.id}"
+                for target in targets
+                for node in ast.walk(target)
+                if isinstance(node, ast.Name)
+                and not (node.id.startswith("__") and node.id.endswith("__"))
+                and node.id not in read
+            ]
+    assert not unread, f"module constants nothing reads — delete them: {sorted(unread)}"

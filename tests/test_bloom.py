@@ -18,8 +18,6 @@ from hospital_stain_tracker_data_pipeline_spark.operators.sketch import (
     bloom_query,
     bloom_sketch,
     filter_unseen,
-    load_bloom_sketch,
-    save_bloom_sketch,
 )
 from hospital_stain_tracker_data_pipeline_spark.sources.tables import (
     load_fixture_table,
@@ -137,55 +135,6 @@ def test_filter_unseen_gate(spark):
     new_set = {f"url-{i}" for i in range(500, 900)}
     assert len(got & new_set) >= int(0.99 * len(new_set))
     assert None in got  # NULL items are not a membership class
-
-
-def test_bloom_artifact_roundtrip_and_guards(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("a", "x"), ("a", "y"), ("b", "z")], "g string, w string"
-    )
-    m_bits, k = 1 << 10, 3
-
-    sk = bloom_sketch(df, "w", m_bits, k)
-    path = str(tmp_path / "plain")
-    save_bloom_sketch(sk, m_bits, k, path)
-    loaded, lm, lk, lby = load_bloom_sketch(spark, path)
-    assert (lm, lk, lby) == (m_bits, k, None)
-    assert {r["word"]: r["bits"] for r in loaded.collect()} == {
-        r["word"]: r["bits"] for r in sk.collect()
-    }
-
-    # empty sketch round-trips with its parameters (sentinel row)
-    empty = bloom_sketch(df.filter(F.lit(False)), "w", m_bits, k)
-    epath = str(tmp_path / "empty")
-    save_bloom_sketch(empty, m_bits, k, epath)
-    eloaded, em, ek, eby = load_bloom_sketch(spark, epath)
-    assert (em, ek, eby) == (m_bits, k, None)
-    assert eloaded.count() == 0
-
-    # grouped round-trip
-    gsk = bloom_sketch(df, "w", m_bits, k, by="g")
-    gpath = str(tmp_path / "grouped")
-    save_bloom_sketch(gsk, m_bits, k, gpath, by="g")
-    _, _, _, gby = load_bloom_sketch(spark, gpath)
-    assert gby == ["g"]
-
-    # forgetting by= on a grouped sketch fails at save
-    with pytest.raises(ValueError, match="do not match by="):
-        save_bloom_sketch(gsk, m_bits, k, str(tmp_path / "bad"))
-
-    # not-an-artifact and mixed-parameter guards
-    plain = str(tmp_path / "noparams")
-    sk.write.parquet(plain)
-    with pytest.raises(ValueError, match="not a save_bloom_sketch"):
-        load_bloom_sketch(spark, plain)
-    other = str(tmp_path / "other")
-    save_bloom_sketch(bloom_sketch(df, "w", 1 << 8, 2), 1 << 8, 2, other)
-    mixed = str(tmp_path / "mixed")
-    spark.read.parquet(path).unionByName(
-        spark.read.parquet(other)
-    ).write.parquet(mixed)
-    with pytest.raises(ValueError, match="mixes 2 parameter sets"):
-        load_bloom_sketch(spark, mixed)
 
 
 def test_bloom_validation_and_plan_shape(spark):

@@ -252,114 +252,16 @@ def test_hll_estimate_rejects_grouped_sketch_without_by(spark):
         hll_estimate(sk, p=6).collect()
 
 
-def test_hll_sketch_artifact_roundtrip(spark, tmp_path):
-    """save_hll_sketch carries (p, by) in the artifact, so loads can't
-    estimate with the wrong parameters; corrupt/foreign parquets fail
-    loudly."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.sketch import (
-        load_hll_sketch,
-        save_hll_sketch,
-    )
-
-    df = spark.createDataFrame(
-        [(f"u{i}", f"d{i % 3}") for i in range(500)],
-        "url string, domain string",
-    )
-    p = 9
-    sk = hll_registers(df, "url", p=p, by="domain")
-    path = str(tmp_path / "sk")
-    save_hll_sketch(sk, p, path, by="domain")
-    loaded, lp, lby = load_hll_sketch(spark, path)
-    assert (lp, lby) == (p, ["domain"])
-    assert {
-        (r["domain"], r["register"]): r["max_rho"] for r in loaded.collect()
-    } == {
-        (r["domain"], r["register"]): r["max_rho"] for r in sk.collect()
-    }
-    # loaded params drive a correct grouped estimate
-    ests = hll_estimate(loaded, lp, by=lby)
-    assert ests.count() == 3
-
-    # global (ungrouped) artifact round-trips by=None
-    gpath = str(tmp_path / "gsk")
-    save_hll_sketch(hll_registers(df, "url", p=p), p, gpath)
-    _, gp, gby = load_hll_sketch(spark, gpath)
-    assert (gp, gby) == (p, None)
-
-    # a foreign parquet is not an artifact
-    plain = str(tmp_path / "plain")
-    df.write.parquet(plain)
-    with pytest.raises(ValueError, match="not a"):
-        load_hll_sketch(spark, plain)
-
-    # mixing two artifacts' files is corrupt, not mergeable
-    import shutil
-
-    mixed = str(tmp_path / "mixed")
-    other = str(tmp_path / "other")
-    save_hll_sketch(hll_registers(df, "url", p=6), 6, other)
-    shutil.copytree(gpath, mixed)
-    for f in __import__("glob").glob(f"{other}/part-*.parquet"):
-        shutil.copy(f, f"{mixed}/copied-{f.split('/')[-1]}")
-    with pytest.raises(ValueError, match="parameter sets"):
-        load_hll_sketch(spark, mixed)
-
-
-def test_hll_artifact_by_key_with_comma_roundtrips(spark, tmp_path):
-    """A by-column whose NAME contains a comma must round-trip as ONE
-    key (the legacy comma-joined encoding split it into two wrong
-    names; keys are now a JSON array — ADVICE r8)."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.sketch import (
-        hll_estimate,
-        hll_registers,
-        load_hll_sketch,
-        save_hll_sketch,
-    )
-
-    df = spark.createDataFrame(
-        [("g1", "u1"), ("g1", "u2"), ("g2", "u1")],
-        ["site,lang", "url"],
-    )
-    p, path = 8, str(tmp_path / "comma_sketch")
-    sk = hll_registers(df, "url", p=p, by="site,lang")
-    save_hll_sketch(sk, p, path, by="site,lang")
-    loaded, lp, lby = load_hll_sketch(spark, path)
-    assert lp == p
-    assert lby == ["site,lang"]
-    est = {
-        r["site,lang"]: r["estimate"]
-        for r in hll_estimate(loaded, lp, by=lby).collect()
-    }
-    assert round(est["g1"]) == 2 and round(est["g2"]) == 1
-
-
-def test_hll_artifact_empty_sketch_and_by_mismatch_guard(spark, tmp_path):
-    """HLL artifact parity with the CMS guards: an empty register
-    table round-trips with its parameters (sentinel row), and saving a
-    grouped sketch without by= fails loudly (round-9 review)."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.sketch import (
-        hll_estimate,
-        hll_merge,
-        hll_registers,
-        load_hll_sketch,
-        save_hll_sketch,
-    )
-
+def test_hll_empty_sketch_merges_like_any_other(spark):
+    """An empty register table (all-NULL shard) has no registers, and
+    merging it into another sketch leaves the estimate unchanged."""
     df = spark.createDataFrame(
         [("g1", "u1"), ("g2", "u2")], "domain string, url string"
     )
     p = 8
 
     empty = hll_registers(df.filter(F.lit(False)), "url", p=p)
-    path = str(tmp_path / "empty")
-    save_hll_sketch(empty, p, path)
-    loaded, lp, lby = load_hll_sketch(spark, path)
-    assert (lp, lby) == (p, None)
-    assert loaded.count() == 0
-    merged = hll_merge(loaded, hll_registers(df, "url", p=p))
+    assert empty.count() == 0
+    merged = hll_merge(empty, hll_registers(df, "url", p=p))
     [row] = hll_estimate(merged, p).collect()
     assert round(row["estimate"]) == 2
-
-    grouped = hll_registers(df, "url", p=p, by="domain")
-    with pytest.raises(ValueError, match="do not match by="):
-        save_hll_sketch(grouped, p, str(tmp_path / "bad"))

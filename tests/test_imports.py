@@ -40,7 +40,6 @@ def test_operator_surface_exports():
         "reciprocal_rank_fusion", "corpus_diff", "corpus_diff_summary",
         "summarize_diff",
         "hll_registers", "hll_merge", "hll_estimate",
-        "save_hll_sketch", "load_hll_sketch",
         "cms_sketch", "cms_merge", "cms_query", "sample_stratified",
         "tokenizer_efficiency",
         "extract_image_features",

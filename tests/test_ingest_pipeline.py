@@ -76,8 +76,8 @@ def lake(spark, tmp_path_factory):
     )
     lake_dir = str(base / "tables")
     res = ingest_capacity_csv(spark, csv_path, "test-batch", lake_dir)
-    compute_metrics(spark, lake_dir)
-    return {"dir": lake_dir, "ingest": res, "base": base}
+    metrics = compute_metrics(spark, lake_dir)
+    return {"dir": lake_dir, "ingest": res, "metrics": metrics, "base": base}
 
 
 def _bronze(spark, lake):
@@ -268,10 +268,19 @@ def test_available_dates_and_coverage(spark, lake):
 
 
 def test_runs_log(spark, lake):
+    """The fixture's own two runs, as the /runs query reports them: the
+    ingest run carries its IngestResult's counts and the metrics run
+    succeeded. Other tests may add runs to the shared lake."""
     runs = spark.read.parquet(os.path.join(lake["dir"], "pipeline_runs"))
-    latest = api_queries.runs_latest(runs).collect()
-    assert all(r.status == "success" for r in latest)
-    assert len(latest) >= 3  # 2 ingests + >=1 metrics
+    latest = {r.run_id: r for r in api_queries.runs_latest(runs).collect()}
+    ingest = lake["ingest"]
+    run = latest[ingest.run_id]
+    assert (run.source, run.status) == ("test-batch", "success")
+    assert (run.rows_in, run.rows_loaded, run.rows_rejected) == (
+        ingest.rows_in, ingest.rows_loaded, ingest.rows_rejected
+    )
+    run = latest[lake["metrics"].run_id]
+    assert (run.source, run.status) == ("metrics-job", "success")
 
 
 def test_dashboard_kpis(spark, lake):

@@ -1,11 +1,11 @@
-"""The partition-scoped ``LakeTable.read`` and the upsert, compaction and
+"""The partition-scoped ``LakeTable.read`` and the upsert and
 incremental-metrics paths built on it: partition values are matched by
 the writer's own rendering (escaped names, NULL, integer-looking
 strings), only the touched directories are listed and read, and an
 ingest with no new region names leaves the dimension's files alone.
 Also the full read's reuse of its resolved frame: no job while the
 files are unchanged, a fresh frame after any write, one cache per
-session."""
+session. And the metrics job over a lake that has no bronze row yet."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ import csv
 import glob
 import importlib.util
 import os
+import shutil
 import sys
 import threading
 import types
@@ -42,11 +43,10 @@ def _rows(t):
     return sorted((r.p is None, r.p or "", r.k, r.x) for r in t.read().collect())
 
 
-@pytest.mark.parametrize("fmt", ["parquet", "orc"])
-def test_upsert_matches_escaped_null_and_numeric_partitions(spark, tmp_path, fmt):
+def test_upsert_matches_escaped_null_and_numeric_partitions(spark, tmp_path):
     t = LakeTable(
         spark, str(tmp_path / "t"), keys=["p", "k"], partition_col="p",
-        version_col=None, data_format=fmt,
+        version_col=None,
     )
     t.upsert(_frame(spark, UNTOUCHED + TOUCHED, 0))
     full_type = dict(t.read().dtypes)["p"]
@@ -79,13 +79,6 @@ def test_upsert_matches_escaped_null_and_numeric_partitions(spark, tmp_path, fmt
     assert dict(scoped.dtypes)["p"] == "string"
     assert sorted({r.p or "" for r in scoped.collect()}) == ["", "01", "a:b"]
     assert t.read(["absent"]) is None
-
-    # compaction reads through the scoped path and writes every
-    # partition, the NULL one included, back to its own directory
-    dirs_before = sorted(t.partition_file_counts())
-    assert sorted(t.compact(min_files=1)) == dirs_before
-    assert sorted(t.partition_file_counts()) == dirs_before
-    assert _rows(t) == got
 
 
 def test_upsert_batch_of_only_new_partitions(spark, tmp_path):
@@ -172,13 +165,15 @@ def _delete_one_file(spark, t):
     os.remove(victim)
 
 
+def _drop_one_partition(spark, t):
+    shutil.rmtree(os.path.join(t.path, "p=c"))
+
+
 # Every kind of writer a lake directory sees, LakeTable's own and the
 # plain writers that bypass it (the regions dimension, the run log).
 CHANGES = {
     "upsert_rewrites_partition": lambda spark, t: t.upsert(_frame(spark, ["a"], 1)),
     "upsert_adds_partition": lambda spark, t: t.upsert(_frame(spark, ["d"], 1)),
-    "compact": lambda spark, t: t.compact(min_files=1),
-    "vacuum": lambda spark, t: t.vacuum(keep=["a", "b"]),
     "plain_overwrite": lambda spark, t: (
         _frame(spark, ["z"], 2).write.mode("overwrite").parquet(t.path)
     ),
@@ -186,6 +181,7 @@ CHANGES = {
         _frame(spark, ["a"], 3).write.mode("append").partitionBy("p").parquet(t.path)
     ),
     "out_of_band_delete": _delete_one_file,
+    "out_of_band_partition_drop": _drop_one_partition,
     "write_adds_column": lambda spark, t: t.overwrite(
         _frame(spark, ["a"], 4).withColumn("extra", F.lit(1))
     ),
@@ -213,10 +209,7 @@ def test_full_read_after_any_write_sees_the_new_files(spark, tmp_path, change):
 
     fresh = _collected(spark.read.option("mergeSchema", "true").parquet(t.path))
     assert _collected(t.read()) == fresh
-    if change == "compact":
-        assert fresh == before
-    else:
-        assert fresh != before
+    assert fresh != before
     if change == "write_adds_column":
         assert "extra" in t.read().columns
 
@@ -359,9 +352,30 @@ def test_compute_metrics_for_dates_absent_from_bronze(spark, tmp_path):
     assert dict(silver.dtypes)["date"] == "date"
 
 
-def test_naming_a_test_file_disables_the_slow_tier(tmp_path):
+def test_compute_metrics_after_an_all_rejected_first_batch(spark, tmp_path):
+    """A fresh lake whose first batch is all rejects holds no bronze
+    row, so there is no schema to read: the full metrics job reports 0
+    rows, writes no silver table and logs a successful run."""
+    lake_dir = str(tmp_path / "lake")
+    bad = ["2026-01-01", "CA", -5, 0, "", ""]
+    ing = ingest_capacity_csv(spark, _csv(tmp_path / "b1.csv", [bad]), "t", lake_dir)
+    assert (ing.rows_loaded, ing.rows_rejected) == (0, 1)
+
+    res = compute_metrics(spark, lake_dir)
+    assert (res.rows_in, res.rows_loaded) == (0, 0)
+    assert not os.path.exists(os.path.join(lake_dir, "metrics_daily"))
+    runs = spark.read.parquet(os.path.join(lake_dir, "pipeline_runs"))
+    [run] = runs.filter(
+        (F.col("run_id") == res.run_id) & (F.col("status") != "running")
+    ).collect()
+    assert (run.status, run.rows_in, run.rows_loaded) == ("success", 0, 0)
+
+
+def test_naming_a_test_file_disables_the_slow_tier(tmp_path, monkeypatch):
     """``pytest tests/<file>.py`` must run that file's slow tests too,
-    exactly like a node id does; a directory argument keeps the tier."""
+    exactly like a node id does; a directory argument keeps the tier.
+    Checked with the default tier on, whatever tier this run uses."""
+    monkeypatch.delenv("SPARK_GRAFT_FULL_TESTS", raising=False)
     spec = importlib.util.spec_from_file_location(
         "conftest_under_test", os.path.join(os.path.dirname(__file__), "conftest.py")
     )

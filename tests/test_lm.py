@@ -254,30 +254,3 @@ def test_compression_ratio_signal(spark):
         assert got[i] == pytest.approx(len(zlib.compress(b, 6)) / len(b))
     with pytest.raises(ValueError):
         compression_ratio_udf(level=0)
-
-
-def test_ngram_lm_save_load_roundtrip(spark, sf_dir, tmp_path):
-    """A persisted model must score identically to the in-memory one;
-    a half-written artifact (no meta) fails loudly."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.lm import (
-        load_ngram_lm,
-        save_ngram_lm,
-    )
-
-    docs = load_fixture_table(spark, sf_dir, "documents")
-    lm = train_ngram_lm(docs, n=2, k=0.1, min_count=2)
-    path = str(tmp_path / "lm_art")
-    save_ngram_lm(lm, path)
-    back = load_ngram_lm(spark, path)
-    assert (back.n, back.vocab_size, back.k) == (lm.n, lm.vocab_size, lm.k)
-    a = {
-        r["doc_id"]: (r["n_grams"], r["avg_neg_logp"])
-        for r in score_perplexity(docs, lm).collect()
-    }
-    b = {
-        r["doc_id"]: (r["n_grams"], r["avg_neg_logp"])
-        for r in score_perplexity(docs, back).collect()
-    }
-    assert a == b
-    with pytest.raises(Exception):
-        load_ngram_lm(spark, str(tmp_path / "nope"))

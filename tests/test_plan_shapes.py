@@ -148,45 +148,10 @@ def test_approx_percentiles_rank_error_bounded(spark, sf_dir):
     assert plan.count("HashAggregate") + plan.count("ObjectHashAggregate") >= 2
 
 
-def test_lake_compaction_rewrites_fragmented_partitions(spark, tmp_path):
-    """Micro-batch upserts fragment a partition into one file per
-    shuffle task; compact() must rewrite fragmented partitions to ONE
-    file each with row content (values, counts) bit-identical."""
-    import pyspark.sql.functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.pipeline.lake import LakeTable
-
-    t = LakeTable(
-        spark, str(tmp_path / "frag"), keys=["date", "k"],
-        partition_col="date", version_col="v",
-    )
-    df = spark.range(2000).select(
-        F.lit("2026-01-01").alias("date"),
-        F.col("id").alias("k"),
-        (F.col("id") * 1.5).alias("x"),
-        F.lit(0).alias("v"),
-    )
-    # An explicit 8-way repartition write stands in for accumulated
-    # micro-batch fragmentation (AQE coalesces the tiny test merge
-    # into one task, so the real upsert path can't fragment at this
-    # scale; explicit repartition counts are AQE-exempt).
-    t.overwrite(df.repartition(8))
-    before = t.partition_file_counts()
-    assert before.get("2026-01-01", 0) >= 2
-
-    rows_before = sorted(tuple(r) for r in t.read().collect())
-    rewritten = t.compact()
-    assert "2026-01-01" in rewritten
-    after = t.partition_file_counts()
-    assert after["2026-01-01"] == 1
-    assert sorted(tuple(r) for r in t.read().collect()) == rows_before
-    assert t.compact() == {}  # already compact → no-op
-
-
 def test_lake_maintenance_works_on_non_file_scheme(spark, tmp_path):
-    """exists/partition_file_counts/compact must route through the
-    Hadoop FileSystem API — not os.listdir — so lake maintenance works
-    on any scheme (s3a:, hdfs:, ...). Exercised here via Hadoop's
+    """exists/partition_file_counts/read/upsert must route through the
+    Hadoop FileSystem API — not os.listdir — so the lake works on any
+    scheme (s3a:, hdfs:, ...). Exercised here via Hadoop's
     viewfs:// (a real non-file: scheme resolved through the same
     FileSystem.get machinery as s3a/hdfs), mount-tabled onto tmp_path."""
     import pyspark.sql.functions as F
@@ -211,10 +176,7 @@ def test_lake_maintenance_works_on_non_file_scheme(spark, tmp_path):
     assert t.exists()
     assert t.partition_file_counts().get("2026-01-01", 0) >= 2
 
-    rows_before = sorted(tuple(r) for r in t.read().collect())
-    assert "2026-01-01" in t.compact()
-    assert t.partition_file_counts()["2026-01-01"] == 1
-    assert sorted(tuple(r) for r in t.read().collect()) == rows_before
+    assert sorted(r.k for r in t.read().select("k").collect()) == list(range(500))
 
     # Upsert (merge path: pruned read + dedup + dynamic overwrite)
     # also runs end-to-end on the non-file: scheme.
@@ -496,97 +458,6 @@ def test_runtime_bloom_filter_prunes_selective_join(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_lake_sorted_write_clusters_files(spark, tmp_path):
-    """sort_cols clustering: rows inside each written parquet file must
-    be ordered by the sort column (what makes row-group min/max stats
-    disjoint and footer-level skipping effective), and the clustering
-    must survive upsert + compact — both route through overwrite()."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-    import pyspark.sql.functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.pipeline.lake import LakeTable
-
-    t = LakeTable(
-        spark, str(tmp_path / "sorted"), keys=["date", "k"],
-        partition_col="date", version_col="v", sort_cols=["k"],
-    )
-    df = (
-        spark.range(5000)
-        .select(
-            F.lit("2026-01-01").alias("date"),
-            # write order deliberately scrambled
-            F.shiftright(F.hash("id"), 1).alias("k"),
-            F.col("id").cast("double").alias("x"),
-            F.lit(0).alias("v"),
-        )
-        .repartition(4)
-    )
-    t.overwrite(df)
-    t.upsert(df.limit(100).withColumn("v", F.lit(1)))
-    t.compact()
-
-    files = _glob.glob(str(tmp_path / "sorted" / "date=*" / "*.parquet"))
-    assert files
-    for f in files:
-        ks = _pq.read_table(f, columns=["k"]).column("k").to_pylist()
-        assert ks == sorted(ks), f"file {f} not clustered on k"
-
-
-def test_lake_table_orc_format_upsert_prune_compact(spark, tmp_path):
-    """The lake machinery is format-agnostic: an ORC-backed table must
-    upsert idempotently, partition-prune a date-equality read (ORC
-    scans carry PartitionFilters exactly like parquet), and compact
-    fragmented partitions — same semantics, different encoder."""
-    import pyspark.sql.functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.pipeline.lake import LakeTable
-
-    path = str(tmp_path / "cap_orc")
-    df = spark.createDataFrame(
-        [("2026-02-0%d" % (i % 2 + 1), i, float(i)) for i in range(20)],
-        "date string, region_id int, v double",
-    ).withColumn("date", F.to_date("date"))
-    t = LakeTable(
-        spark, path, keys=["date", "region_id"], version_col=None,
-        data_format="orc",
-    )
-    t.upsert(df)
-    assert t.read().count() == 20
-    # idempotent re-upsert with an updated value: last writer wins
-    upd = df.filter(F.col("region_id") == 3).withColumn("v", F.lit(99.0))
-    t.upsert(upd)
-    got = t.read()
-    assert got.count() == 20
-    assert got.filter("region_id = 3").collect()[0]["v"] == 99.0
-    # files on disk are ORC, not parquet
-    import glob
-
-    assert glob.glob(f"{path}/date=*/*.orc")
-    assert not glob.glob(f"{path}/date=*/*.parquet")
-    # partition pruning in the ORC scan
-    q = t.read().filter(F.col("date") == "2026-02-02")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        q.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    pf_line = plan.split("PartitionFilters")[1].splitlines()[0]
-    assert "date" in pf_line and "2026-02-02" in pf_line
-    # the second upsert fragmented the touched partition; compaction
-    # sees and rewrites ORC files
-    counts = t.partition_file_counts()
-    assert counts and all(n >= 1 for n in counts.values())
-    rewritten = t.compact(min_files=2)
-    after = t.partition_file_counts()
-    for p in rewritten:
-        assert after[p] == 1
-    assert t.read().count() == 20
-    with pytest.raises(ValueError, match="unsupported data_format"):
-        LakeTable(spark, path, keys=["date"], data_format="avro")
-
-
 def test_lake_table_schema_evolution_add_column(spark, tmp_path):
     """A later batch ADDs a column: the upsert must succeed, old rows
     read NULL for the new column (mergeSchema across partitions whose
@@ -816,113 +687,6 @@ def test_unpartitioned_windows_are_allowlisted_and_post_reduction(
         "genuinely post-reduction, document it at the plan site and "
         "update ALLOWED_UNPARTITIONED_WINDOWS; if not, partition it"
     )
-
-
-def test_lake_vacuum_retention(spark, tmp_path):
-    """vacuum(before=) drops only out-of-retention partition
-    directories: victims gone from disk, pruned queries over untouched
-    dates return byte-identical results, dry-run touches nothing,
-    keep= mode is the explicit inverse, and the pending marker is gone
-    after a clean vacuum."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.pipeline.lake import LakeTable
-
-    root = str(tmp_path / "ret")
-    t = LakeTable(
-        spark, root, keys=["date", "k"], partition_col="date",
-        version_col="v",
-    )
-    dates = ["2026-01-01", "2026-01-02", "2026-01-03", "2026-01-04"]
-    df = spark.range(400).select(
-        F.element_at(
-            F.array(*[F.lit(d) for d in dates]),
-            (F.col("id") % 4 + 1).cast("int"),
-        ).alias("date"),
-        F.col("id").alias("k"),
-        (F.col("id") * 1.5).alias("x"),
-        F.lit(0).alias("v"),
-    )
-    t.overwrite(df)
-    kept_query_before = sorted(
-        tuple(r)
-        for r in t.read().filter(F.col("date") >= "2026-01-03").collect()
-    )
-
-    # dry run: reports victims, deletes nothing
-    dry = t.vacuum(before="2026-01-03", dry_run=True)
-    assert sorted(dry) == ["2026-01-01", "2026-01-02"]
-    assert sorted(t.partition_file_counts()) == dates
-
-    gone = t.vacuum(before="2026-01-03")
-    assert sorted(gone) == ["2026-01-01", "2026-01-02"]
-    assert sorted(t.partition_file_counts()) == ["2026-01-03", "2026-01-04"]
-    assert not os.path.exists(os.path.join(root, "_VACUUM_PENDING"))
-    # untouched partitions byte-identical through the vacuum
-    assert (
-        sorted(
-            tuple(r)
-            for r in t.read().filter(F.col("date") >= "2026-01-03").collect()
-        )
-        == kept_query_before
-    )
-    # idempotent rerun: nothing left to drop
-    assert t.vacuum(before="2026-01-03") == {}
-
-    # keep= mode drops everything not named
-    gone2 = t.vacuum(keep=["2026-01-04"])
-    assert sorted(gone2) == ["2026-01-03"]
-    assert sorted(t.partition_file_counts()) == ["2026-01-04"]
-
-    # exactly one policy argument
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="exactly one"):
-        t.vacuum()
-    with _pytest.raises(ValueError, match="exactly one"):
-        t.vacuum(before="2026-01-01", keep=["2026-01-04"])
-
-
-def test_lake_vacuum_guards_and_stale_marker(spark, tmp_path):
-    """Review-finding pins: keep= as a plain string (which would
-    iterate characters and drop the whole table) is refused loudly;
-    a leftover _VACUUM_PENDING from a vacuum that died after its last
-    delete is cleaned up by the no-victims rerun."""
-    import os
-
-    import pyspark.sql.functions as F
-    import pytest as _pytest
-
-    from hospital_stain_tracker_data_pipeline_spark.pipeline.lake import LakeTable
-
-    root = str(tmp_path / "g")
-    t = LakeTable(
-        spark, root, keys=["date", "k"], partition_col="date",
-        version_col="v",
-    )
-    t.overwrite(
-        spark.range(10).select(
-            F.lit("2026-01-01").alias("date"),
-            F.col("id").alias("k"),
-            F.lit(0).alias("v"),
-        )
-    )
-    with _pytest.raises(ValueError, match="not a string"):
-        t.vacuum(keep="2026-01-01")
-    assert sorted(t.partition_file_counts()) == ["2026-01-01"]
-
-    # stale marker from an interrupted final delete: rerun removes it
-    marker = os.path.join(root, "_VACUUM_PENDING")
-    open(marker, "w").write('["2025-12-31"]')
-    assert t.vacuum(before="2026-01-01") == {}
-    assert not os.path.exists(marker)
-    # dry-run never touches a marker
-    open(marker, "w").write('["2025-12-31"]')
-    assert t.vacuum(before="2026-01-01", dry_run=True) == {}
-    assert os.path.exists(marker)
-    os.remove(marker)
 
 
 def _plan_tree(spark, sf_dir, name: str) -> str:

@@ -27,10 +27,8 @@ from pyspark.sql import functions as F
 from hospital_stain_tracker_data_pipeline_spark.operators.sketch import (
     dyadic_rank_merge,
     dyadic_rank_sketch,
-    load_quantile_sketch,
     quantiles_from_sketch,
     rank_from_cells,
-    save_quantile_sketch,
 )
 
 LEVELS, WIDTH, DEPTH = 16, 2048, 5
@@ -174,51 +172,3 @@ def test_guards(spark):
         dyadic_rank_sketch(clash, "lvl", levels=4, width=64, depth=3)
     with pytest.raises(ValueError, match="levels"):
         dyadic_rank_sketch(bad, "v", levels=0)
-
-
-def test_artifact_roundtrip_and_guards(spark, tmp_path):
-    vals = _values()[:500]
-    sketch = _sketch_of(spark, vals)
-    path = str(tmp_path / "dq")
-    save_quantile_sketch(sketch, LEVELS, WIDTH, DEPTH, path)
-    cells, levels, width, depth, by = load_quantile_sketch(spark, path)
-    assert (levels, width, depth, by) == (LEVELS, WIDTH, DEPTH, None)
-    assert sorted(map(tuple, cells.collect())) == sorted(
-        map(tuple, sketch.collect())
-    )
-    # quantiles from the loaded artifact work
-    got = quantiles_from_sketch(cells, [0.5], levels, width, depth)
-    assert got[0.5] is not None
-
-    # empty sketch round-trips via the sentinel
-    empty = str(tmp_path / "empty")
-    save_quantile_sketch(
-        sketch.filter("cnt < 0"), LEVELS, WIDTH, DEPTH, empty
-    )
-    cells2 = load_quantile_sketch(spark, empty)[0]
-    assert cells2.count() == 0
-
-    # guards
-    with pytest.raises(ValueError, match="do not match"):
-        save_quantile_sketch(
-            sketch.withColumnRenamed("lvl", "level"),
-            LEVELS, WIDTH, DEPTH, str(tmp_path / "x1"),
-        )
-    plain = str(tmp_path / "plain")
-    sketch.write.parquet(plain)
-    with pytest.raises(ValueError, match="not a save_quantile_sketch"):
-        load_quantile_sketch(spark, plain)
-    mixed = str(tmp_path / "mixed")
-    sketch.withColumn("_dq_levels", F.lit(16)).withColumn(
-        "_cms_width", F.lit(2048)
-    ).withColumn("_cms_depth", F.lit(5)).withColumn(
-        "_cms_by", F.lit("[]")
-    ).write.parquet(mixed)
-    sketch.withColumn("_dq_levels", F.lit(12)).withColumn(
-        "_cms_width", F.lit(2048)
-    ).withColumn("_cms_depth", F.lit(5)).withColumn(
-        "_cms_by", F.lit("[]")
-    ).write.mode("append").parquet(mixed)
-    with pytest.raises(ValueError, match="mixes"):
-        load_quantile_sketch(spark, mixed)
-
