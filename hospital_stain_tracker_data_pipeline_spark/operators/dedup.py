@@ -19,6 +19,7 @@ from typing import TYPE_CHECKING
 
 import numpy as np
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1516,8 +1517,9 @@ def connected_components_min_label(
     # already computes every row, so the convergence sum costs zero
     # extra Spark jobs (it used to be its own agg+collect per round:
     # one extra action per iteration plus one for the init).
-    from pyspark.sql import Observation
     from pyspark.sql.types import NumericType
+
+    from ..session import _materialize_observed
 
     numeric_ids = isinstance(
         labels.schema["label"].dataType, NumericType
@@ -1528,11 +1530,8 @@ def connected_components_min_label(
         sum(label), observed during the same checkpoint action."""
         if not numeric_ids:
             return frame.localCheckpoint(eager=True), None
-        ob = Observation()
-        ck = frame.observe(ob, F.sum("label").alias("s")).localCheckpoint(
-            eager=True
-        )
-        return ck, ob.get["s"]
+        ck, seen = _materialize_observed(frame, s=F.sum("label"))
+        return ck, seen["s"]
 
     labels, prev_sum = _ckpt_with_sum(labels)
     converged = False
@@ -2414,7 +2413,17 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
                 round(n_tomb / n_phys, 6) if n_phys else 0.0
             )
         else:
-            df = spark.read.parquet(p)
+            try:
+                df = spark.read.parquet(p)
+            except AnalysisException as e:
+                # no parquet at the top level, e.g. tables only in
+                # subdirectories: not an index either
+                if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+                    raise
+                raise ValueError(
+                    "no recognizable index metadata (no parquet table at "
+                    "the top of the directory) — not a persisted index"
+                ) from None
             cols = set(df.columns)
             id_col = "media_id"
             if "_mh_num_hashes" in cols:

@@ -17,6 +17,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# the reason column a rule chain adds; NULL on a valid row
+REJECT_REASON = "_reject_reason"
+
+
 def capacity_reject_rules(
     date: Column,
     region: Column,
@@ -76,8 +80,16 @@ def split_valid_invalid(
     callers that need provenance should carry a natural key or use
     ``F.monotonically_increasing_id`` per ingest file.
     """
-    with_reason = df.withColumn("_reject_reason", reject_reason_column(rules))
-    reason = F.col("_reject_reason")
-    accepted = with_reason.filter(reason.isNull()).drop("_reject_reason")
-    rejected = with_reason.filter(reason.isNotNull())
+    return split_on_reason(
+        df.withColumn(REJECT_REASON, reject_reason_column(rules))
+    )
+
+
+def split_on_reason(checked: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(accepted, rejected) as two filters over a frame that already
+    carries the ``_reject_reason`` column, so a caller can cache that
+    one frame and serve both branches from it."""
+    reason = F.col(REJECT_REASON)
+    accepted = checked.filter(reason.isNull()).drop(REJECT_REASON)
+    rejected = checked.filter(reason.isNotNull())
     return accepted, rejected

@@ -103,9 +103,10 @@ def compute_metrics(
                 partition_col="date",
                 version_col="created_at",
             )
-            metrics = metrics_from_capacity(capacity, run_id)
-            silver.upsert(metrics)
-            n = silver.read().count() if dates is None else metrics.count()
+            # the upsert's observed batch count is the report: after a
+            # full recompute silver's keys are bronze's keys, so it is
+            # also silver's row count
+            n = silver.upsert(metrics_from_capacity(capacity, run_id))
         append_run_log(
             spark,
             runs_path,

@@ -912,18 +912,15 @@ def curate_media(
     from ..operators.fingerprint import AUDIO, IMAGE, VIDEO
     from ..operators.multimodal import tag_media_modality
 
-    from pyspark.sql import Observation
+    from ..session import _materialize_observed
 
     def _ckpt_with_count(frame: DataFrame) -> tuple[DataFrame, int]:
         """Eagerly checkpoint an id-sized loser set and return its row
         count OBSERVED during the same checkpoint action (round 15) —
         the count used to be a second Spark job per stage over a frame
         the checkpoint had just computed."""
-        ob = Observation()
-        ck = frame.observe(
-            ob, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True)
-        return ck, int(ob.get["n"])
+        ck, seen = _materialize_observed(frame, n=F.count(F.lit(1)))
+        return ck, int(seen["n"])
 
     tagged = tag_media_modality(media).persist(
         StorageLevel.MEMORY_AND_DISK

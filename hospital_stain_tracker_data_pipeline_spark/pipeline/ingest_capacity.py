@@ -3,18 +3,20 @@
 
 One declarative plan replaces the reference's row-at-a-time loop:
 
-    scan csv → project/rename → to_date → reason column →
-    accepted/rejected split → region get-or-create (left_anti + union) →
-    natural-key upsert → rejects CSV + run-log rows
+    scan csv → project/rename → to_date → reason column → cache, with
+    counts and accepted region names observed → accepted/rejected
+    split → region get-or-create → natural-key upsert → rejects CSV +
+    run-log rows
 
 Deliberate deviations from the reference, documented:
 - An unparseable date becomes NULL and is routed to rejects as
   "date is required" instead of failing the whole batch
   (ingest_capacity.py:15-20 raises). Batch-fail on malformed data is an
   anti-pattern at scale.
-- Region get-or-create is one distinct + left_anti join + append
-  (SURVEY.md §2.3 op-join-lookup-dim) rather than N sequential SQL
-  probes (ingest_capacity.py:158-163).
+- Region get-or-create is one set difference on the driver between
+  the batch's observed names and the dimension's (SURVEY.md §2.3
+  op-join-lookup-dim) rather than N sequential SQL probes
+  (ingest_capacity.py:158-163).
 """
 
 from __future__ import annotations
@@ -25,7 +27,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.validate import capacity_reject_rules, split_valid_invalid
+from ..operators.validate import (
+    REJECT_REASON,
+    capacity_reject_rules,
+    reject_reason_column,
+    split_on_reason,
+)
+from ..session import _materialize_observed, local_rows_df
 from ..sources.csv_source import read_hhs_csv
 from ..sources.sinks import (
     append_run_log,
@@ -35,6 +43,11 @@ from ..sources.sinks import (
     write_rejects_csv,
 )
 from .lake import LakeTable
+
+# Most distinct region names a batch may bring and the region dimension
+# may hold: both sets are collected to the driver. The reference serves
+# US states and territories (≈60); the bound leaves room for counties.
+_MAX_REGION_NAMES = 10_000
 
 
 @dataclass
@@ -46,8 +59,9 @@ class IngestResult:
     rejects_path: str | None
 
 
-def parse_and_validate(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Canonical-rename CSV → (accepted, rejected).
+def parse_and_validate(raw: DataFrame) -> DataFrame:
+    """Canonical-rename CSV → the same rows with a ``_reject_reason``
+    column, NULL on an accepted row (``split_on_reason`` splits it).
 
     ``date`` is parsed with ``to_date`` (NULL on bad input); validation
     rules then run in the reference's first-match-wins order
@@ -64,43 +78,48 @@ def parse_and_validate(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
         icu_beds=F.col("icu_beds"),
         icu_occupied=F.col("icu_occupied"),
     )
-    return split_valid_invalid(parsed, rules)
+    return parsed.withColumn(REJECT_REASON, reject_reason_column(rules))
+
+
+def _check_region_count(n: int) -> None:
+    if n > _MAX_REGION_NAMES:
+        raise ValueError(
+            f"{n} region names exceed the driver-side bound of "
+            f"{_MAX_REGION_NAMES}; nothing was written"
+        )
 
 
 def get_or_create_regions(
-    spark: SparkSession, accepted: DataFrame, regions_table: LakeTable
-) -> DataFrame:
+    spark: SparkSession, names: set[str], regions_table: LakeTable
+) -> dict[str, str]:
     """Dimension get-or-create as a set operation (op-join-lookup-dim).
 
-    New names = incoming distinct left_anti existing; they get fresh
-    UUIDs and are appended. Returns the refreshed dimension. The
-    distinct name set is tiny (≤ #regions), so downstream joins
-    broadcast it.
+    ``names`` are the batch's accepted region names. The dimension's
+    ``(name, region_id)`` pairs are collected once; names it lacks get
+    fresh UUIDs and are appended, and a batch that brings none leaves
+    the dimension's files alone. Returns ``{name: region_id}`` for the
+    whole dimension, which is small (≤ ``_MAX_REGION_NAMES``, checked
+    before anything is written).
     """
-    incoming_names = accepted.select(F.col("region").alias("name")).distinct()
-    if regions_table.exists():
-        existing = regions_table.read()
-        new_names = incoming_names.join(existing.select("name"), "name", "left_anti")
-        if new_names.isEmpty():  # nothing to append: leave the files alone
-            return existing
-    else:
-        existing = None
-        new_names = incoming_names
-    new_regions = new_names.select(
+    existing = regions_table.read() if regions_table.exists() else None
+    ids = {} if existing is None else dict(existing.select("name", "region_id").collect())
+    new_names = sorted(names - ids.keys())
+    _check_region_count(len(ids) + len(new_names))
+    if not new_names:
+        return ids
+    # one partition, so a new dimension is one file
+    new_regions = local_rows_df(spark, [(n,) for n in new_names], "name string").select(
         F.expr("uuid()").alias("region_id"),
         F.col("name"),
         F.lit(None).cast("long").alias("population"),
         F.current_timestamp().alias("created_at"),
     )
-    if existing is None:
-        dim = new_regions
-    else:
-        dim = existing.unionByName(new_regions)
-    # Dimension append must be materialized before re-reading; it is a
-    # small table so a localCheckpoint is cheap.
+    dim = new_regions if existing is None else existing.unionByName(new_regions)
+    # Dimension append must be materialized before its files are
+    # rewritten; it is a small table so a localCheckpoint is cheap.
     dim = dim.localCheckpoint(eager=True)
     dim.write.mode("overwrite").parquet(regions_table.path)
-    return regions_table.read()
+    return dict(dim.select("name", "region_id").collect())
 
 
 def ingest_capacity_csv(
@@ -119,19 +138,23 @@ def ingest_capacity_csv(
         runs_path,
         run_log_row(run_id, source, "running", started, notes=f"Input file: {input_path}"),
     )
-    cached: list[DataFrame] = []
+    checked = None
     try:
         raw = read_hhs_csv(spark, input_path)
-        accepted, rejected = parse_and_validate(raw)
-        # One pass over the input serves both branches and the counters.
-        cached = [accepted.cache(), rejected.cache()]
-        n_acc, n_rej = accepted.count(), rejected.count()
-
-        rejects_path = None
-        if n_rej:
-            rejects_path = write_rejects_csv(
-                rejected, rejects_dir or os.path.join(lake_dir, "rejects"), run_id
-            )
+        reason = F.col(REJECT_REASON)
+        # One scan of the input fills the cache that serves both
+        # branches, and yields the counts and the accepted region
+        # names on the way.
+        checked, seen = _materialize_observed(
+            parse_and_validate(raw),
+            cache=True,
+            accepted=F.count_if(reason.isNull()),
+            rejected=F.count_if(reason.isNotNull()),
+            names=F.collect_set(F.when(reason.isNull(), F.col("region"))),
+        )
+        n_acc, n_rej = seen["accepted"], seen["rejected"]
+        _check_region_count(len(seen["names"]))
+        accepted, rejected = split_on_reason(checked)
 
         regions_table = LakeTable(
             spark,
@@ -140,22 +163,29 @@ def ingest_capacity_csv(
             partition_col="name",
             version_col=None,
         )
-        regions = get_or_create_regions(spark, accepted, regions_table)
+        ids = get_or_create_regions(spark, set(seen["names"]), regions_table)
 
-        capacity = (
-            accepted.join(F.broadcast(regions.select("region_id", "name")),
-                          accepted["region"] == F.col("name"), "inner")
-            .select(
-                F.expr("uuid()").alias("id"),
-                F.col("date"),
-                F.col("region_id"),
-                F.col("total_beds").cast("int").alias("total_beds"),
-                F.col("occupied_beds").cast("int").alias("occupied_beds"),
-                F.col("icu_beds").cast("int").alias("icu_beds"),
-                F.col("icu_occupied").cast("int").alias("icu_occupied"),
-                F.lit(run_id).alias("source_run_id"),
-                F.current_timestamp().alias("created_at"),
+        rejects_path = None
+        if n_rej:
+            rejects_path = write_rejects_csv(
+                rejected, rejects_dir or os.path.join(lake_dir, "rejects"), run_id
             )
+
+        # the dimension is on the driver already, so the lookup is a
+        # literal map in the projection: no broadcast job
+        region_ids = F.create_map(
+            *[F.lit(v) for pair in ids.items() for v in pair]
+        ).cast("map<string,string>")
+        capacity = accepted.select(
+            F.expr("uuid()").alias("id"),
+            F.col("date"),
+            region_ids[F.col("region")].alias("region_id"),
+            F.col("total_beds").cast("int").alias("total_beds"),
+            F.col("occupied_beds").cast("int").alias("occupied_beds"),
+            F.col("icu_beds").cast("int").alias("icu_beds"),
+            F.col("icu_occupied").cast("int").alias("icu_occupied"),
+            F.lit(run_id).alias("source_run_id"),
+            F.current_timestamp().alias("created_at"),
         )
         bronze = LakeTable(
             spark,
@@ -184,7 +214,7 @@ def ingest_capacity_csv(
         )
         raise
     finally:
-        # on every path: a failed batch must not pin both frames for
-        # the rest of the session
-        for df in cached:
-            df.unpersist()
+        # on every path: a failed batch must not pin its input for the
+        # rest of the session
+        if checked is not None:
+            checked.unpersist()

@@ -8,17 +8,22 @@ environment this would be ``MERGE INTO``; the portable mechanism here:
 1. Partition the table by ``date`` — the analog of the reference's
    unique B-tree on (date, region_id) (models.py:54-56): date-keyed
    queries partition-prune, and an upsert touches only incoming dates.
-2. Merge = read ONLY the partitions for incoming dates, union with
-   incoming, window-dedup on the natural key (incoming wins), then
-   dynamic-partition-overwrite just those partitions. The scoped read
-   lists the table root once and hands Spark only the touched
-   directories, so file listing and footer reads are bounded by the
-   batch too, not by the partition count of the table.
+2. Merge = materialize the deduped batch once, observing on the way
+   its row count and the set of partition values it touches; read
+   ONLY those partitions, union with the batch, window-dedup on the
+   natural key (incoming wins), then dynamic-partition-overwrite just
+   those partitions. The scoped read lists the table root's names in
+   one JVM-side pass (a fixed number of Py4J calls) and hands Spark
+   only the touched directories, so listing, footer reads and driver
+   work are bounded by the batch, not by the partition count of the
+   table. There is no separate existence check: a missing root or an
+   untouched table reads as ``None`` and the batch is written as is.
 3. ``localCheckpoint`` materializes the merged slice before the write
    so Spark's read/write-same-path check doesn't trip. The working set
    (listing, footers, rows) is bounded by the batch's touched
    partitions, not table size: this is what keeps a 100 TB table
-   upsertable by a 1 GB micro-batch.
+   upsertable by a 1 GB micro-batch. The touched set is a driver-side
+   collect, bounded by ``_MAX_TOUCHED_PARTITIONS``.
 4. A full ``read()`` keeps the frame it resolved and returns it again
    while the table's files are unchanged, so a repeated read of an
    untouched table runs no listing or schema-merge job. Reuse is
@@ -42,8 +47,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.upsert import dedup_last_writer, upsert_last_writer_wins
+from ..session import _materialize_observed, hadoop_fs
 
 
+# Most partition values one upsert may touch: the touched set is
+# collected to the driver and each value becomes a path of the scoped
+# read. A full-history metrics run touches every date of the table;
+# 20 000 daily partitions are ≈55 years.
+_MAX_TOUCHED_PARTITIONS = 20_000
 # Full-read frames one session keeps (see ``LakeTable.read``); the
 # oldest resolution is dropped first.
 _SNAPSHOTS_PER_SESSION = 32
@@ -54,8 +65,8 @@ _SNAPSHOTS_LOCK = threading.Lock()
 
 class _Snapshots:
     """One session's full-read frames, ``{path: (token, frame)}``, and
-    the JVM handles of the walk that validates them, resolved once per
-    session.
+    the JVM handles of the walks that validate them and list a table's
+    partitions, resolved once per session.
 
     It is kept on the session object, so it ends with its session and
     no other session sees it. A module-level map keyed by session would
@@ -69,18 +80,19 @@ class _Snapshots:
         path = jvm.org.apache.hadoop.fs.Path._java_lang_class
         function1 = jvm.scala.Function1._java_lang_class
 
-        def getter(name, rtype):
-            # FileStatus.<name>() as a scala.Function1, so one Py4J call
+        def getter(name, rtype, owner=status):
+            # <owner>.<name>() as a scala.Function1, so one Py4J call
             # maps a whole directory level inside the JVM; a getter call
             # per file from Python is a round trip each (≈0.5 s for a
             # 729-file table)
             handle = lookup.findVirtual(
-                status, name, invoke.MethodType.methodType(rtype)
+                owner, name, invoke.MethodType.methodType(rtype)
             )
             return invoke.MethodHandleProxies.asInterfaceInstance(function1, handle)
 
         self.is_dir = getter("isDirectory", jvm.java.lang.Boolean.TYPE)
         self.get_path = getter("getPath", path)
+        self.get_name = getter("getName", jvm.java.lang.String._java_lang_class, path)
         self.columns = [
             self.get_path,
             getter("getLen", jvm.java.lang.Long.TYPE),
@@ -135,6 +147,21 @@ class _Snapshots:
         digest.update(self.utf8.encode(self.char_buffer.wrap(text.underlying())))
         return bytes(digest.digest())
 
+    def dir_names(self, fs, root) -> list[str]:
+        """Names of the directories directly under ``root`` (none for
+        a missing root). The names are joined inside the JVM, so the
+        listing costs a fixed number of Py4J calls however many
+        directories the root holds. A newline cannot occur in a
+        partition directory's name: Hive escaping encodes it."""
+        try:
+            level = fs.listStatus(root)
+        except Py4JJavaError:
+            return []
+        names = (
+            self.wrap(level).filter(self.is_dir).map(self.get_path).map(self.get_name)
+        ).mkString("\n")
+        return names.split("\n") if names else []
+
     def get(self, key, token) -> DataFrame | None:
         with _SNAPSHOTS_LOCK:
             hit = self.frames.get(key)
@@ -166,37 +193,36 @@ class LakeTable:
         self.version_col = version_col
 
     def _hadoop_fs(self):
-        """Resolve ``self.path`` through the Hadoop ``FileSystem`` API so
-        every listing works on whatever scheme the path carries
-        (file:, hdfs:, s3a:, ...) — the same resolution Spark's own
-        readers/writers use. Returns ``(FileSystem, Path)``."""
-        jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, jpath
+        """``(FileSystem, Path)`` of the table root, for any scheme
+        (``session.hadoop_fs``)."""
+        return hadoop_fs(self.spark, self.path)
 
     # Hive's sentinel directory for a NULL partition value; ``read``
     # and ``upsert`` name the NULL partition by it.
     _NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
-    def _partition_dirs(self) -> dict:
-        """``{unescaped partition value: Hadoop Path}`` of every
+    def _partition_dirs(self) -> dict[str, str]:
+        """``{unescaped partition value: directory path}`` of every
         ``<partition_col>=<value>`` directory under the root, from one
-        listing through the Hadoop ``FileSystem`` (any scheme). Hadoop
-        %-escapes special chars (':' → '%3A', etc.) in directory names,
-        and matching raw column values against escaped names would
-        silently select nothing; a missing root has no partitions."""
+        listing through the Hadoop ``FileSystem`` (any scheme) whose
+        names are joined in the JVM: a fixed number of Py4J calls, not
+        one per partition. Hadoop %-escapes special chars (':' → '%3A',
+        etc.) in directory names, and matching raw column values against
+        escaped names would silently select nothing; a missing root has
+        no partitions."""
         fs, root = self._hadoop_fs()
-        if not fs.exists(root):
-            return {}
-        prefix = f"{self.partition_col}="
+        base, prefix = root.toString(), f"{self.partition_col}="
         return {
-            unquote(st.getPath().getName()[len(prefix):]): st.getPath()
-            for st in fs.listStatus(root)
-            if st.isDirectory() and st.getPath().getName().startswith(prefix)
+            unquote(name[len(prefix):]): f"{base}/{name}"
+            for name in _Snapshots.of(self.spark).dir_names(fs, root)
+            if name.startswith(prefix)
         }
 
     def exists(self) -> bool:
+        """Whether the root holds a ``_SUCCESS`` marker or a partition
+        directory. Both checks cost a fixed number of Py4J calls, so
+        the answer costs the same for a table of any partition count
+        (a dynamic-partition overwrite leaves no root ``_SUCCESS``)."""
         fs, root = self._hadoop_fs()
         jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path
         return fs.exists(jvm_path(root, "_SUCCESS")) or bool(self._partition_dirs())
@@ -218,8 +244,9 @@ class LakeTable:
         full reads of an unchanged table return the same frame object, so
         a self-join aliases each side.
 
-        The scoped form lists the root once and loads just the matching
-        directories, so its listing and footer reads cost what the
+        The scoped form lists the root's names once, in the JVM, and
+        loads just the matching directories, so its Py4J calls are a
+        fixed number and its listing and footer reads cost what the
         requested set touches, not what the table holds. Its partition
         column is the raw directory value as a string — never inferred
         from the subset, where ``01`` would read back as the integer 1 —
@@ -246,7 +273,7 @@ class LakeTable:
             return frame
         dirs = self._partition_dirs()
         wanted = {self._NULL_PARTITION if v is None else str(v) for v in partitions}
-        paths = sorted(dirs[v].toString() for v in wanted & dirs.keys())
+        paths = sorted(dirs[v] for v in wanted & dirs.keys())
         if not paths:
             return None
         # Each directory loaded as its own base path has no partition
@@ -272,8 +299,9 @@ class LakeTable:
             .parquet(self.path)
         )
 
-    def upsert(self, incoming: DataFrame) -> None:
-        """Idempotent natural-key upsert; incoming wins conflicts."""
+    def upsert(self, incoming: DataFrame) -> int:
+        """Idempotent natural-key upsert; incoming wins conflicts.
+        Returns the batch's row count after its within-batch dedup."""
         # Within-batch dedup first (the reference's single multi-row
         # INSERT can't carry duplicate natural keys either).
         if self.version_col and self.version_col in incoming.columns:
@@ -281,25 +309,31 @@ class LakeTable:
         else:
             incoming = incoming.dropDuplicates(self.keys)
 
-        # Only the touched partitions are read back. The distinct
-        # partition values of a micro-batch are small by construction
-        # (dates), so collecting them is cheap; the string cast is
-        # the writer's own rendering of a directory value.
+        # One action materializes the deduped batch and observes its
+        # row count and the partition values it touches, rendered as
+        # the writer renders a directory value (NULL as Hive's
+        # sentinel); the merge below reads the materialized rows.
         part = F.col(self.partition_col)
-        existing_slice = None
-        if self.exists():
-            touched = [
-                r[0]
-                for r in incoming.select(
-                    F.coalesce(part.cast("string"), F.lit(self._NULL_PARTITION))
-                )
-                .distinct()
-                .collect()
-            ]
-            existing_slice = self.read(touched)
+        incoming, seen = _materialize_observed(
+            incoming,
+            rows=F.count(F.lit(1)),
+            touched=F.collect_set(
+                F.coalesce(part.cast("string"), F.lit(self._NULL_PARTITION))
+            ),
+        )
+        touched = seen["touched"]
+        if len(touched) > _MAX_TOUCHED_PARTITIONS:
+            raise ValueError(
+                f"upsert touches {len(touched)} partitions of {self.path}, "
+                f"beyond the driver-side bound of {_MAX_TOUCHED_PARTITIONS}; "
+                "nothing was written"
+            )
+        # only the touched partitions are read back; a missing root or
+        # an untouched table reads as None
+        existing_slice = self.read(touched)
         if existing_slice is None:
             self.overwrite(incoming)
-            return
+            return seen["rows"]
         existing_slice = existing_slice.withColumn(
             self.partition_col,
             part.cast(incoming.schema[self.partition_col].dataType),
@@ -317,16 +351,18 @@ class LakeTable:
         # Materialize before overwriting partitions we just read.
         merged = merged.localCheckpoint(eager=True)
         self.overwrite(merged)
+        return seen["rows"]
 
     def partition_file_counts(self) -> dict[str, int]:
         """data-file count per partition VALUE (unescaped), via the
         Hadoop ``FileSystem`` API so the walk works on any scheme (file:,
         hdfs:, s3a:, ...)."""
         fs, _ = self._hadoop_fs()
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path
         return {
             v: sum(
                 1
-                for f in fs.listStatus(d)
+                for f in fs.listStatus(jpath(d))
                 if f.isFile()
                 and f.getPath().getName().endswith(".parquet")
                 and not f.getPath().getName().startswith(".")

@@ -69,7 +69,7 @@ ORDER BY order_id, line_no
 def q_validate_rejects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """op-validate-row (ingest_capacity.py:23-59): first-match-wins
     chained-when reason column; returns the reject side-output."""
-    from ..operators.validate import reject_reason_column, split_valid_invalid
+    from ..operators.validate import split_valid_invalid
 
     ev = _t(spark, sf_dir, "events")
     rules = [

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def get_spark(
@@ -85,7 +85,7 @@ def get_spark(
 
 def local_rows_df(spark: SparkSession, rows, schema):
     """Driver-local model/metadata rows (fitted centroids, codebooks,
-    run-log lines — at most a few thousand tuples) as a
+    query terms — at most a few thousand tuples) as a
     SINGLE-partition DataFrame, cheaply.
 
     The idiomatic ``createDataFrame(list) … .coalesce(1).write`` is
@@ -101,3 +101,41 @@ def local_rows_df(spark: SparkSession, rows, schema):
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema
     )
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the Hadoop
+    ``FileSystem`` API, so driver-side listings and writes work on
+    whatever scheme the path carries (file:, hdfs:, s3a:, viewfs:, ...)
+    — the same resolution Spark's own readers and writers use."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _materialize_observed(
+    frame: DataFrame, cache: bool = False, **metrics: Column
+) -> tuple[DataFrame, dict]:
+    """Materialize ``frame`` with one Spark action and return it with
+    the aggregate ``metrics`` (name → Column) observed during that same
+    action. The package's one way to report a count: the action
+    computes every row anyway, so a count, sum or small set riding on
+    it costs no extra Spark job.
+
+    By default the frame is an eager ``localCheckpoint`` (lineage
+    truncated; the caller cannot release its blocks). ``cache=True``
+    caches it instead, filled by a ``noop`` write, so the caller can
+    release it with ``unpersist()``; if the action fails the cache is
+    released here."""
+    ob = Observation()
+    observed = frame.observe(
+        ob, *[col.alias(name) for name, col in metrics.items()]
+    )
+    if not cache:
+        return observed.localCheckpoint(eager=True), ob.get
+    observed = observed.cache()
+    try:
+        observed.write.format("noop").mode("overwrite").save()
+    except BaseException:
+        observed.unpersist()
+        raise
+    return observed, ob.get

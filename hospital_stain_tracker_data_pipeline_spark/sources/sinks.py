@@ -55,12 +55,53 @@ def run_log_row(
 def append_run_log(spark: SparkSession, path: str, row: Row) -> None:
     """Append one lineage row per job start/end — the reference's
     ``pipeline_runs`` insert/update (ingest_capacity.py:85-96,195-201).
-    Append-only on a lake; readers take the latest status per run_id."""
-    from ..session import local_rows_df
+    Append-only on a lake; readers take the latest status per run_id.
 
-    local_rows_df(spark, [row], PIPELINE_RUNS_SCHEMA).write.mode(
-        "append"
-    ).parquet(path)
+    Runs no Spark job. The row is encoded on the driver as a one-row
+    parquet file typed from ``PIPELINE_RUNS_SCHEMA`` (timestamps as UTC
+    microseconds; a naive datetime is local time, as Spark takes it) and
+    written through the path's Hadoop ``FileSystem``: first under a
+    hidden temp name (a leading ``.``, which Spark's listing skips),
+    then committed by a rename to ``part-<uuid>.parquet``. The rename
+    is atomic on HDFS and on a local disk, and a copy on S3A, where the
+    object still appears whole or not at all. A failed rename raises.
+    Files an older writer left through Spark (INT96 timestamps) read
+    alongside these, with the same column types."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ..session import hadoop_fs
+
+    values = {
+        k: v.astimezone(timezone.utc) if isinstance(v, datetime) else v
+        for k, v in row.asDict().items()
+    }
+    arrow_type = {
+        "string": pa.string(),
+        "bigint": pa.int64(),
+        "timestamp": pa.timestamp("us", tz="UTC"),
+    }
+    schema = pa.schema(
+        [
+            pa.field(f.name, arrow_type[f.dataType.simpleString()], f.nullable)
+            for f in PIPELINE_RUNS_SCHEMA
+        ]
+    )
+    sink = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist([values], schema=schema), sink)
+
+    fs, root = hadoop_fs(spark, path)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = jpath(root, f".{name}.tmp")
+    out = fs.create(tmp, False)
+    try:
+        out.write(sink.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, jpath(root, name)):
+        fs.delete(tmp, False)
+        raise OSError(f"run log: could not commit {name} under {path}")
 
 
 def utcnow() -> datetime:

@@ -12,7 +12,11 @@
   not count. There is no pin list for methods.
 - Every module-level constant (an assignment at module level, dunders
   exempt) needs a reader anywhere in the repo's Python, tests
-  included, other than its own definition."""
+  included, other than its own definition.
+- Every imported name must be loaded in the file that imports it, in
+  the package, tests/, scripts/, bench.py and __spark_entry__.py. An
+  import marked ``# noqa: F401``, a name listed in ``__all__`` and the
+  re-exports of ``__init__.py`` files are exempt."""
 
 from __future__ import annotations
 
@@ -24,6 +28,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "hospital_stain_tracker_data_pipeline_spark")
 CALLER_PATHS = [PKG, "scripts", "perfbench", "bench.py", "__spark_entry__.py"]
 ALL_PATHS = CALLER_PATHS + ["tests"]
+IMPORT_PATHS = [PKG, "tests", "scripts", "bench.py", "__spark_entry__.py"]
 
 # public names whose only callers are tests (shrink-only), each kept
 # for the reason above its group
@@ -139,3 +144,43 @@ def test_module_constants_are_read():
                 and node.id not in read
             ]
     assert not unread, f"module constants nothing reads — delete them: {sorted(unread)}"
+
+
+def _unused_imports(path: str) -> list[str]:
+    """``file:line:name`` of each name ``path`` imports and never loads."""
+    src = open(path).read()
+    lines = src.splitlines()
+    tree = ast.parse(src)
+    loaded, exported = set(), set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            loaded.add(node.id)
+        elif isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+        ):
+            exported |= {
+                c.value for c in ast.walk(node.value) if isinstance(c, ast.Constant)
+            }
+    unused = []
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if any("noqa: F401" in lines[i - 1] for i in range(node.lineno, node.end_lineno + 1)):
+            continue
+        for alias in node.names:
+            name = alias.asname or alias.name.split(".")[0]
+            if name != "*" and name not in loaded | exported:
+                unused.append(f"{os.path.relpath(path, REPO)}:{node.lineno}:{name}")
+    return unused
+
+
+def test_imported_names_are_used():
+    unused = [
+        hit
+        for f in _py_files(IMPORT_PATHS)
+        if os.path.basename(f) != "__init__.py"
+        for hit in _unused_imports(f)
+    ]
+    assert not unused, f"imports nothing loads — remove them: {sorted(unused)}"

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from hospital_stain_tracker_data_pipeline_spark.operators.asof import asof_join
 
 

@@ -18,8 +18,6 @@ planted outside the hot bucket still pair up.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
     DEFAULT_MAX_BUCKET,
     dedup_against_corpus,

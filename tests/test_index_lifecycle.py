@@ -575,4 +575,4 @@ def test_index_fsck_covers_every_save_writer(spark, tmp_path):
     for table in ("grams", "contexts", "meta"):
         users.write.parquet(os.path.join(p, table))
     rep = index_fsck(spark, p)
-    assert rep["ok"] is False and "UNABLE_TO_INFER_SCHEMA" in rep["error"]
+    assert rep["ok"] is False and "no recognizable index metadata" in rep["error"]

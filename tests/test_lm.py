@@ -13,7 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from hospital_stain_tracker_data_pipeline_spark.operators.lm import (
-    NgramLM,
     _exploded_grams,
     lm_tokens,
     score_perplexity,

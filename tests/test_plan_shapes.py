@@ -11,8 +11,6 @@ from __future__ import annotations
 import contextlib
 import io
 
-import pytest
-
 from hospital_stain_tracker_data_pipeline_spark.plans import CATALOG
 from hospital_stain_tracker_data_pipeline_spark.plans.catalog import DEMOTED
 

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from hospital_stain_tracker_data_pipeline_spark.operators.retrieval import (
     bm25_reference,
