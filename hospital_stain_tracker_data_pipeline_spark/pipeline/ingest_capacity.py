@@ -81,14 +81,6 @@ def parse_and_validate(raw: DataFrame) -> DataFrame:
     return parsed.withColumn(REJECT_REASON, reject_reason_column(rules))
 
 
-def _check_region_count(n: int) -> None:
-    if n > _MAX_REGION_NAMES:
-        raise ValueError(
-            f"{n} region names exceed the driver-side bound of "
-            f"{_MAX_REGION_NAMES}; nothing was written"
-        )
-
-
 def get_or_create_regions(
     spark: SparkSession, names: set[str], regions_table: LakeTable
 ) -> dict[str, str]:
@@ -104,7 +96,11 @@ def get_or_create_regions(
     existing = regions_table.read() if regions_table.exists() else None
     ids = {} if existing is None else dict(existing.select("name", "region_id").collect())
     new_names = sorted(names - ids.keys())
-    _check_region_count(len(ids) + len(new_names))
+    if len(ids) + len(new_names) > _MAX_REGION_NAMES:
+        raise ValueError(
+            f"{len(ids) + len(new_names)} region names exceed the driver-side "
+            f"bound of {_MAX_REGION_NAMES}; nothing was written"
+        )
     if not new_names:
         return ids
     # one partition, so a new dimension is one file
@@ -153,7 +149,6 @@ def ingest_capacity_csv(
             names=F.collect_set(F.when(reason.isNull(), F.col("region"))),
         )
         n_acc, n_rej = seen["accepted"], seen["rejected"]
-        _check_region_count(len(seen["names"]))
         accepted, rejected = split_on_reason(checked)
 
         regions_table = LakeTable(

@@ -17,7 +17,8 @@ environment this would be ``MERGE INTO``; the portable mechanism here:
    only the touched directories, so listing, footer reads and driver
    work are bounded by the batch, not by the partition count of the
    table. There is no separate existence check: a missing root or an
-   untouched table reads as ``None`` and the batch is written as is.
+   untouched table reads as ``None`` and the batch is written as is;
+   any other listing failure raises before anything is written.
 3. ``localCheckpoint`` materializes the merged slice before the write
    so Spark's read/write-same-path check doesn't trip. The working set
    (listing, footers, rows) is bounded by the batch's touched
@@ -108,6 +109,7 @@ class _Snapshots:
         self.utf8 = jvm.java.nio.charset.StandardCharsets.UTF_8
         self.char_buffer = jvm.java.nio.CharBuffer
         self.conf = spark._jsparkSession.conf()
+        self.not_found = jvm.java.io.FileNotFoundException._java_lang_class
         self.frames: dict = {}
 
     @staticmethod
@@ -152,11 +154,18 @@ class _Snapshots:
         a missing root). The names are joined inside the JVM, so the
         listing costs a fixed number of Py4J calls however many
         directories the root holds. A newline cannot occur in a
-        partition directory's name: Hive escaping encodes it."""
+        partition directory's name: Hive escaping encodes it.
+
+        Only a missing root reads as empty. Any other listing failure
+        (a denied permission, an I/O error, a throttled store) raises:
+        an upsert that took an unlistable table for an empty one would
+        overwrite its touched partitions with the batch alone."""
         try:
             level = fs.listStatus(root)
-        except Py4JJavaError:
-            return []
+        except Py4JJavaError as e:
+            if self.not_found.isInstance(e.java_exception):
+                return []
+            raise
         names = (
             self.wrap(level).filter(self.is_dir).map(self.get_path).map(self.get_name)
         ).mkString("\n")
@@ -192,11 +201,6 @@ class LakeTable:
         self.partition_col = partition_col
         self.version_col = version_col
 
-    def _hadoop_fs(self):
-        """``(FileSystem, Path)`` of the table root, for any scheme
-        (``session.hadoop_fs``)."""
-        return hadoop_fs(self.spark, self.path)
-
     # Hive's sentinel directory for a NULL partition value; ``read``
     # and ``upsert`` name the NULL partition by it.
     _NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
@@ -210,7 +214,7 @@ class LakeTable:
         etc.) in directory names, and matching raw column values against
         escaped names would silently select nothing; a missing root has
         no partitions."""
-        fs, root = self._hadoop_fs()
+        fs, root = hadoop_fs(self.spark, self.path)
         base, prefix = root.toString(), f"{self.partition_col}="
         return {
             unquote(name[len(prefix):]): f"{base}/{name}"
@@ -223,7 +227,7 @@ class LakeTable:
         directory. Both checks cost a fixed number of Py4J calls, so
         the answer costs the same for a table of any partition count
         (a dynamic-partition overwrite leaves no root ``_SUCCESS``)."""
-        fs, root = self._hadoop_fs()
+        fs, root = hadoop_fs(self.spark, self.path)
         jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path
         return fs.exists(jvm_path(root, "_SUCCESS")) or bool(self._partition_dirs())
 
@@ -257,7 +261,7 @@ class LakeTable:
             key = self.path
             # the token is taken before resolving, so a write racing the
             # resolution can only make the next call resolve again
-            token = snapshots.token(*self._hadoop_fs())
+            token = snapshots.token(*hadoop_fs(self.spark, self.path))
             frame = snapshots.get(key, token)
             if frame is None:
                 # mergeSchema: dynamic partition overwrite only rewrites
@@ -357,7 +361,7 @@ class LakeTable:
         """data-file count per partition VALUE (unescaped), via the
         Hadoop ``FileSystem`` API so the walk works on any scheme (file:,
         hdfs:, s3a:, ...)."""
-        fs, _ = self._hadoop_fs()
+        fs, _ = hadoop_fs(self.spark, self.path)
         jpath = self.spark._jvm.org.apache.hadoop.fs.Path
         return {
             v: sum(

@@ -10,8 +10,10 @@ import uuid
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import PIPELINE_RUNS_SCHEMA
+from ..session import hadoop_fs
 
 
 def write_rejects_csv(rejects: DataFrame, base_dir: str, run_id: str) -> str:
@@ -64,29 +66,18 @@ def append_run_log(spark: SparkSession, path: str, row: Row) -> None:
     hidden temp name (a leading ``.``, which Spark's listing skips),
     then committed by a rename to ``part-<uuid>.parquet``. The rename
     is atomic on HDFS and on a local disk, and a copy on S3A, where the
-    object still appears whole or not at all. A failed rename raises.
-    Files an older writer left through Spark (INT96 timestamps) read
-    alongside these, with the same column types."""
+    object still appears whole or not at all. A failed write or rename
+    raises and deletes the temp file. Files an older writer left
+    through Spark (INT96 timestamps) read alongside these, with the
+    same column types."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from ..session import hadoop_fs
 
     values = {
         k: v.astimezone(timezone.utc) if isinstance(v, datetime) else v
         for k, v in row.asDict().items()
     }
-    arrow_type = {
-        "string": pa.string(),
-        "bigint": pa.int64(),
-        "timestamp": pa.timestamp("us", tz="UTC"),
-    }
-    schema = pa.schema(
-        [
-            pa.field(f.name, arrow_type[f.dataType.simpleString()], f.nullable)
-            for f in PIPELINE_RUNS_SCHEMA
-        ]
-    )
+    schema = to_arrow_schema(PIPELINE_RUNS_SCHEMA)
     sink = pa.BufferOutputStream()
     pq.write_table(pa.Table.from_pylist([values], schema=schema), sink)
 
@@ -94,14 +85,17 @@ def append_run_log(spark: SparkSession, path: str, row: Row) -> None:
     jpath = spark._jvm.org.apache.hadoop.fs.Path
     name = f"part-{uuid.uuid4()}.parquet"
     tmp = jpath(root, f".{name}.tmp")
-    out = fs.create(tmp, False)
     try:
-        out.write(sink.getvalue().to_pybytes())
-    finally:
-        out.close()
-    if not fs.rename(tmp, jpath(root, name)):
+        out = fs.create(tmp, False)
+        try:
+            out.write(sink.getvalue().to_pybytes())
+        finally:
+            out.close()
+        if not fs.rename(tmp, jpath(root, name)):
+            raise OSError(f"run log: could not commit {name} under {path}")
+    except BaseException:
         fs.delete(tmp, False)
-        raise OSError(f"run log: could not commit {name} under {path}")
+        raise
 
 
 def utcnow() -> datetime:

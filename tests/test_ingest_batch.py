@@ -12,6 +12,7 @@ import importlib
 import os
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from hospital_stain_tracker_data_pipeline_spark.pipeline import (
@@ -24,6 +25,7 @@ from hospital_stain_tracker_data_pipeline_spark.pipeline import ingest_capacity 
 from hospital_stain_tracker_data_pipeline_spark.pipeline.lake import LakeTable
 from hospital_stain_tracker_data_pipeline_spark.schemas import PIPELINE_RUNS_SCHEMA
 from hospital_stain_tracker_data_pipeline_spark.session import local_rows_df
+from hospital_stain_tracker_data_pipeline_spark.sources import sinks
 from hospital_stain_tracker_data_pipeline_spark.sources.sinks import (
     append_run_log,
     run_log_row,
@@ -192,6 +194,116 @@ def test_run_log_reads_alongside_spark_written_files(spark, tmp_path, scheme):
         api_queries.runs_latest(table.read()).collect()
         == api_queries.runs_latest(spark.read.parquet(legacy)).collect()
     )
+
+
+def _java_error(spark, cls, message):
+    """A ``Py4JJavaError`` carrying a real Java exception of the fully
+    qualified class ``cls``, as a failed call on a JVM object raises it."""
+    exc = spark._jvm
+    for part in cls.split("."):
+        exc = getattr(exc, part)
+    return Py4JJavaError("An error occurred while calling a Hadoop FileSystem", exc(message))
+
+
+class _FailingFs:
+    """A table's Hadoop ``FileSystem`` with the named calls failing, as
+    they do on a denied directory or a full or unreachable store; every
+    other call goes to the real one."""
+
+    def __init__(self, spark, fs, fail):
+        self._spark, self._fs, self._fail = spark, fs, fail
+
+    def __getattr__(self, name):
+        if name in self._fail:
+            return self._fail[name]
+        return getattr(self._fs, name)
+
+
+def _patch_fs(monkeypatch, module, spark, fail):
+    real = module.hadoop_fs
+
+    def failing(spark_, path):
+        fs, root = real(spark_, path)
+        return _FailingFs(spark, fs, fail(fs)), root
+
+    monkeypatch.setattr(module, "hadoop_fs", failing)
+
+
+def _run_log_files(path):
+    return sorted(os.listdir(path)) if os.path.isdir(path) else []
+
+
+@pytest.mark.parametrize("failing", ["write", "close", "rename"])
+def test_failed_run_log_write_leaves_no_file(spark, tmp_path, monkeypatch, failing):
+    """A run-log row whose write, close or rename fails raises and
+    leaves neither its committed file nor its hidden temp file."""
+    path = str(tmp_path / "pipeline_runs")
+    append_run_log(spark, path, RUN_ROWS[0])
+    before = _run_log_files(path)
+    assert len([f for f in before if f.startswith("part-")]) == 1
+
+    def fail(fs):
+        def raising(*_):
+            raise _java_error(spark, "java.io.IOException", "No space left on device")
+
+        if failing == "rename":
+            return {"rename": lambda *_: False}
+
+        class Stream:
+            def __init__(self, out):
+                self.out = out
+
+            def write(self, data):
+                if failing == "write":
+                    raising()
+                self.out.write(data)
+
+            def close(self):
+                self.out.close()
+                if failing == "close":
+                    raising()
+
+        return {"create": lambda *a: Stream(fs.create(*a))}
+
+    _patch_fs(monkeypatch, sinks, spark, fail)
+    with pytest.raises((Py4JJavaError, OSError)):
+        append_run_log(spark, path, RUN_ROWS[1])
+    assert _run_log_files(path) == before
+
+
+def test_unlistable_table_raises_and_keeps_its_partitions(spark, tmp_path, monkeypatch):
+    """Only a missing root reads as an empty table. When the root cannot
+    be listed for another reason (here a denied permission), ``exists``,
+    a scoped ``read`` and ``upsert`` raise, and the upsert leaves every
+    partition as it was: taking the table for an empty one would
+    overwrite each touched partition with the batch's rows alone."""
+    t = LakeTable(spark, str(tmp_path / "t"), keys=["date", "k"], version_col="v")
+    frame = spark.range(6).select(
+        F.date_add(F.lit("2026-01-01").cast("date"), (F.col("id") % 3).cast("int")).alias("date"),
+        F.col("id").alias("k"),
+        F.lit(0).alias("v"),
+    )
+    t.overwrite(frame)
+    before = _tree(t.path)
+
+    def denied(fs):
+        def list_status(*_):
+            raise _java_error(spark, "java.nio.file.AccessDeniedException", t.path)
+
+        return {"listStatus": list_status}
+
+    _patch_fs(monkeypatch, lake, spark, denied)
+    batch = frame.filter(F.col("k") == 0).withColumn("v", F.lit(1))
+    for op in (t.exists, lambda: t.read(["2026-01-01"]), lambda: t.upsert(batch)):
+        with pytest.raises(Py4JJavaError, match="AccessDeniedException"):
+            op()
+    assert _tree(t.path) == before
+
+    monkeypatch.undo()
+    missing = LakeTable(spark, str(tmp_path / "missing"), keys=["date", "k"], version_col="v")
+    assert not missing.exists() and missing.read(["2026-01-01"]) is None
+    missing.upsert(batch)
+    assert missing.read().count() == 1
 
 
 def _tree(path):
