@@ -850,7 +850,7 @@ def _extras_registry():
                 "compact_sec": round(t5 - t4, 3),
                 "appended": report["appended"],
                 "removed": rm["tombstones_total"],
-                "compacted_rows": crep.get("codes_rows_after"),
+                "compacted_rows": crep.get("index_rows_after"),
                 "occupancy_shift_tv": report["occupancy_shift_tv"],
                 "err_ratio": report["err_ratio"],
             }

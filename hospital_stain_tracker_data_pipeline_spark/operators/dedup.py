@@ -15,6 +15,8 @@ Scale design:
 
 from __future__ import annotations
 
+import os
+import shutil
 from typing import TYPE_CHECKING
 
 import numpy as np
@@ -2000,85 +2002,94 @@ def load_fp_index(
 
 
 # ---------------------------------------------------------------------------
-# Index deletion lifecycle (round 12): tombstones + deferred compaction
-# for every parquet fingerprint artifact (the ANN index got this in
-# round 11 via pq.remove_from_ann_index; the fingerprint tiers get the
-# same takedown semantics here). One generic engine serves the two
-# artifact formats — the tagged media fingerprint index (image, audio
-# and video alike) and the MinHash signature index — because they
-# share the same shape: a parquet dir of (id, payload-free hash[es])
-# + constant meta columns + a NULL-id empty-safety sentinel row.
+# Index deletion lifecycle: tombstones + deferred, count-validated
+# compaction for every persisted index that holds rows keyed by id —
+# the ANN index (``pq.build_ann_index``), the tagged media fingerprint
+# index (image, audio and video alike) and the MinHash signature
+# index. One engine serves all three; ``_index_layout`` is the one
+# place that says where an artifact keeps its rows and its tombstones.
+# Tombstones plus a count-validated swap keep the index files
+# immutable between rewrites, so a recompute over them is always safe.
 # ---------------------------------------------------------------------------
 
+# entries only an ANN artifact directory holds (the marker, the fits,
+# the codes table or one of its swap siblings)
+_ANN_ENTRIES = ("_INDEX_OK", "ivf", "codes", "codes_old", "codes_compacting")
 
-def _artifact_tombstone_dir(path: str) -> str:
-    return path.rstrip("/") + "_tombstones"
+
+def _index_layout(path: str) -> tuple[str, str]:
+    """``(data dir, tombstone dir)`` of an index artifact. An ANN
+    artifact keeps its rows in ``<path>/codes`` and its tombstones in
+    ``<path>/tombstones``, beside the fits and the ``_INDEX_OK``
+    marker. Every other index is itself the parquet data dir, with
+    tombstones in a sibling ``<path>_tombstones``. The compaction swap
+    siblings ``_compacting`` / ``_old`` follow the data dir."""
+    p = path.rstrip("/")
+    if any(os.path.exists(os.path.join(p, e)) for e in _ANN_ENTRIES):
+        return os.path.join(p, "codes"), os.path.join(p, "tombstones")
+    return p, p + "_tombstones"
 
 
 def clear_index_lifecycle_state(path: str) -> None:
-    """Drop the sibling tombstone / in-flight-compaction dirs for an
-    index artifact — called by every ``save_*_index`` REBUILD: the ANN
-    tier keeps its tombstones INSIDE the index dir so a rebuild clears
-    them implicitly; the fp tiers' sibling dirs would otherwise
-    survive the overwrite and silently suppress legitimately-present
-    ids in the brand-new index (and a later compact would physically
-    delete them).
+    """Drop an index's tombstone and in-flight-compaction dirs — called
+    by every REBUILD (``save_fp_index``, ``save_dedup_index``,
+    ``build_ann_index``) once the new rows are written: tombstones of
+    the old index would otherwise survive the overwrite and silently
+    suppress legitimately-present ids in the brand-new index (and a
+    later compact would physically delete them).
 
-    REFUSES when the index path itself is absent but ``<path>_old`` /
-    ``<path>_compacting`` exist: that is the compact-swap crash window
-    where a sibling dir holds the ONLY copy of the index, and deleting
-    it here would destroy the last copy before recovery is possible —
-    run ``recover_index_swap`` first (or remove the dirs manually if
-    the rebuild really should start from nothing)."""
-    import os
-    import shutil
-
+    REFUSES when the data dir itself is absent but its ``_old`` /
+    ``_compacting`` siblings exist: that is the compact-swap crash
+    window where a sibling dir holds the ONLY copy of the index, and
+    deleting it here would destroy the last copy before recovery is
+    possible — run ``recover_index_swap`` first (or remove the dirs
+    manually if the rebuild really should start from nothing)."""
     p = path.rstrip("/")
-    if not os.path.isdir(p):
+    data, tombs = _index_layout(p)
+    if not os.path.isdir(data):
         survivors = [
-            d for d in (p + "_old", p + "_compacting") if os.path.isdir(d)
+            d for d in (data + "_old", data + "_compacting")
+            if os.path.isdir(d)
         ]
         if survivors:
             raise ValueError(
-                f"index path {p} is missing but {survivors} exist — this "
-                "is an interrupted compact swap and a sibling dir holds "
-                "the only copy of the index; run recover_index_swap("
+                f"index data {data} is missing but {survivors} exist — "
+                "this is an interrupted compact swap and a sibling dir "
+                "holds the only copy of the index; run recover_index_swap("
                 f"{p!r}) before rebuilding (or delete the dirs manually "
                 "to really start from nothing)"
             )
-    for d in (p + "_tombstones", p + "_compacting", p + "_old"):
+    for d in (tombs, data + "_compacting", data + "_old"):
         shutil.rmtree(d, ignore_errors=True)
 
 
 def recover_index_swap(path: str) -> dict:
     """Recover an index artifact from a crash inside
-    ``_artifact_compact``'s two-rename swap window (index path missing,
+    ``_artifact_compact``'s two-rename swap window (data dir missing,
     last copy in a sibling dir). Safe to run any time:
 
-    - index path present → nothing to do (stale siblings are fsck's
+    - data dir present → nothing to do (stale siblings are fsck's
       business; a re-run of compact clears them);
-    - path missing + ``<path>_compacting`` present → the rewrite was
+    - data dir missing + ``_compacting`` present → the rewrite was
       count-validated BEFORE the first rename, so the compacting copy
       is the complete post-fold index: rename it in and drop the
       pre-fold ``_old`` copy and the (already folded) tombstone dir;
-    - path missing + only ``<path>_old`` present → rename the pre-fold
+    - data dir missing + only ``_old`` present → rename the pre-fold
       copy back; tombstones are kept (still unfolded, suppression
       still applies on load).
     """
-    import os
-    import shutil
-
     p = path.rstrip("/")
-    old, compacting = p + "_old", p + "_compacting"
-    if os.path.isdir(p):
+    data, tombs = _index_layout(p)
+    old, compacting = data + "_old", data + "_compacting"
+    if os.path.isdir(data):
         return {"recovered": False, "reason": "index present", "path": p}
     if os.path.isdir(compacting):
-        os.rename(compacting, p)
+        os.rename(compacting, data)
         shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(_artifact_tombstone_dir(p), ignore_errors=True)
+        shutil.rmtree(tombs, ignore_errors=True)
         return {"recovered": True, "from": "compacting", "path": p}
     if os.path.isdir(old):
-        os.rename(old, p)
+        os.rename(old, data)
         return {"recovered": True, "from": "old", "path": p}
     return {
         "recovered": False,
@@ -2091,13 +2102,12 @@ def suppress_index_tombstones(
     spark: SparkSession, path: str, index: DataFrame, id_col: str
 ) -> DataFrame:
     """Anti-join an index frame against its artifact's tombstone set
-    (a sibling ``<path>_tombstones`` parquet of bare ids) — called by
-    every index LOADER, so a tombstoned id stops matching probes the
-    moment the tombstone lands, without touching the index files.
-    Same contract as the ANN tier: a tombstone suppresses its id even
-    if the same id is APPENDED again later (compaction folds the
-    re-append away too) — re-adding a removed id requires compacting
-    first. No tombstone dir ⇒ identity.
+    (a parquet of bare ids) — called by every index LOADER and by
+    ``search_ann_index``, so a tombstoned id stops matching the moment
+    the tombstone lands, without touching the index files. A tombstone
+    suppresses its id even if the same id is APPENDED again later
+    (compaction folds the re-append away too) — re-adding a removed id
+    requires compacting first. No tombstone dir ⇒ identity.
 
     No forced broadcast hint: tombstones are usually tiny (AQE picks
     broadcast from the measured size), but a deployment that defers
@@ -2105,13 +2115,28 @@ def suppress_index_tombstones(
     unboundedly with takedowns, and an unconditional hint would pin
     that whole set in driver memory on every load — let AQE fall back
     to a shuffle anti-join when it is big."""
-    import os
-
-    td = _artifact_tombstone_dir(path)
-    if not os.path.isdir(td):
+    _, tombs = _index_layout(path)
+    if not os.path.isdir(tombs):
         return index
-    tomb = spark.read.parquet(td).select(id_col).distinct()
+    tomb = spark.read.parquet(tombs).select(id_col).distinct()
     return index.join(tomb, id_col, "left_anti")
+
+
+def _tombstone_state(
+    spark: SparkSession, path: str, id_col: str
+) -> tuple[int, int, float]:
+    """``(index rows, distinct tombstones, tombstone ratio)`` of an
+    artifact — physical rows with a non-NULL id (the NULL-id sentinel
+    is not a row), before suppression. The one accounting that
+    remove, compact and ``index_fsck`` report."""
+    data, tombs = _index_layout(path)
+    n_rows = spark.read.parquet(data).filter(F.col(id_col).isNotNull()).count()
+    n_tomb = (
+        spark.read.parquet(tombs).select(id_col).distinct().count()
+        if os.path.isdir(tombs)
+        else 0
+    )
+    return n_rows, n_tomb, round(n_tomb / n_rows, 6) if n_rows else 0.0
 
 
 def _artifact_remove(
@@ -2122,46 +2147,37 @@ def _artifact_remove(
     compact_ratio_threshold: float = 0.1,
 ) -> dict:
     """Tombstone ``ids`` against an ALREADY-VALIDATED index artifact
-    (the public wrappers run their tier's loader first, so a torn or
+    (the public wrappers validate the artifact first, so a torn or
     wrong-family artifact rejects before anything is written). The
-    ids are distinct-ed and snapshot-pinned (localCheckpoint) before
-    the append — a broken producer fails here with the artifact
-    untouched. Unknown ids tombstone harmlessly (the anti-join
-    ignores them) but inflate the reported ratio. Returns the
-    ANN-shaped report: requested / tombstones_total / index_rows
+    ids are distinct-ed and snapshot-pinned (localCheckpoint, which
+    also counts them) before the append — a broken producer fails
+    here with the artifact untouched. Unknown ids tombstone
+    harmlessly (the anti-join ignores them) but inflate the reported
+    ratio. Returns requested / tombstones_total / index_rows
     (physical, pre-suppression) / tombstone_ratio /
     compact_recommended. Single-writer per artifact, like
     append/compact."""
-    import os
+    from ..session import _materialize_observed
 
     if id_col not in ids.columns:
         raise ValueError(
             f"ids frame lacks column {id_col!r} (has {ids.columns}) — "
             f"the index at {path} keys on {id_col!r}"
         )
+    data, tombs = _index_layout(path)
     # cast to the INDEX's id type before anything is written: two
     # removes carrying different physical id types (int32 vs int64
     # parquet from different tools) would otherwise mix schemas in the
     # tombstone dir and make every subsequent index load unreadable
-    id_type = spark.read.parquet(path).schema[id_col].dataType
-    tomb = (
-        ids.select(F.col(id_col).cast(id_type).alias(id_col))
-        .distinct()
-        .localCheckpoint(eager=True)
+    id_type = spark.read.parquet(data).schema[id_col].dataType
+    tomb, seen = _materialize_observed(
+        ids.select(F.col(id_col).cast(id_type).alias(id_col)).distinct(),
+        n=F.count(F.lit(1)),
     )
-    n_req = tomb.count()
-    td = _artifact_tombstone_dir(path)
+    n_req = seen["n"]
     if n_req:
-        tomb.write.mode("append").parquet(td)
-    n_tomb = (
-        spark.read.parquet(td).select(id_col).distinct().count()
-        if os.path.isdir(td)
-        else 0
-    )
-    n_rows = (
-        spark.read.parquet(path).filter(F.col(id_col).isNotNull()).count()
-    )
-    ratio = round(n_tomb / n_rows, 6) if n_rows else 0.0
+        tomb.write.mode("append").parquet(tombs)
+    n_rows, n_tomb, ratio = _tombstone_state(spark, path, id_col)
     return {
         "requested": n_req,
         "tombstones_total": n_tomb,
@@ -2181,37 +2197,29 @@ def _artifact_compact(
     """Fold tombstones into the index files — the artifact's vacuum,
     deferred by default (below ``min_ratio`` the per-load anti-join is
     cheaper than the rewrite). The rewritten files land in a sibling
-    ``<path>_compacting`` dir and are COUNT-VALIDATED against an
+    ``<data>_compacting`` dir and are COUNT-VALIDATED against an
     independently-derived survivor count before any swap — a rewrite
     that loses or duplicates rows raises with the original artifact
-    intact. The swap then renames through ``<path>_old`` so every
+    intact. The swap then renames through ``<data>_old`` so every
     crash window leaves either a valid artifact or a loudly-missing
-    path, never a silently-partial one. A crash BETWEEN the two
-    renames leaves the path missing with the last copies in
-    ``<path>_old`` (pre-fold) and ``<path>_compacting`` (validated
+    data dir, never a silently-partial one. A crash BETWEEN the two
+    renames leaves the data dir missing with the last copies in
+    ``<data>_old`` (pre-fold) and ``<data>_compacting`` (validated
     post-fold) — ``recover_index_swap`` renames one back, and
     ``clear_index_lifecycle_state`` refuses to delete the sibling dirs
-    while the index path is absent, so a rebuild cannot destroy the
-    only copy first. Meta columns and the NULL-id
-    sentinel ride the rewrite untouched (NULL join keys never match
-    the tombstone semi/anti joins). Probe results are identical
-    before and after — compaction changes storage, never semantics."""
-    import os
-    import shutil
-
-    p = path.rstrip("/")
-    td = _artifact_tombstone_dir(p)
-    raw = spark.read.parquet(p)
-    n_rows = raw.filter(F.col(id_col).isNotNull()).count()
-    if not os.path.isdir(td):
+    while the data dir is absent, so a rebuild cannot destroy the
+    only copy first. Meta columns and the NULL-id sentinel ride the
+    rewrite untouched (NULL join keys never match the tombstone
+    semi/anti joins). Probe and search results are identical before
+    and after — compaction changes storage, never semantics."""
+    data, tombs = _index_layout(path)
+    n_rows, n_tomb, ratio = _tombstone_state(spark, path, id_col)
+    if not os.path.isdir(tombs):
         return {
             "compacted": False,
             "reason": "no tombstones",
             "index_rows": n_rows,
         }
-    tomb = spark.read.parquet(td).select(id_col).distinct()
-    n_tomb = tomb.count()
-    ratio = round(n_tomb / n_rows, 6) if n_rows else 0.0
     if not force and ratio < min_ratio:
         return {
             "compacted": False,
@@ -2220,9 +2228,11 @@ def _artifact_compact(
             "tombstones_total": n_tomb,
             "tombstone_ratio": ratio,
         }
-    compacting = p + "_compacting"
+    compacting, old = data + "_compacting", data + "_old"
     if os.path.isdir(compacting):
         shutil.rmtree(compacting)  # leftover from a pre-swap crash
+    raw = spark.read.parquet(data)
+    tomb = spark.read.parquet(tombs).select(id_col).distinct()
     n_before = raw.count()  # incl. sentinel
     n_dead = raw.join(tomb, id_col, "left_semi").count()
     raw.join(tomb, id_col, "left_anti").write.mode("overwrite").parquet(
@@ -2236,13 +2246,12 @@ def _artifact_compact(
             f"with the original artifact intact (stale files under "
             f"{compacting}?)"
         )
-    old = p + "_old"
     if os.path.isdir(old):
         shutil.rmtree(old)
-    os.rename(p, old)
-    os.rename(compacting, p)
+    os.rename(data, old)
+    os.rename(compacting, data)
     shutil.rmtree(old)
-    shutil.rmtree(td)
+    shutil.rmtree(tombs)
     return {
         "compacted": True,
         "index_rows_before": n_rows,
@@ -2326,10 +2335,14 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
     ``save_*`` writer in the package (pinned by
     ``tests/test_index_lifecycle.py::test_index_fsck_covers_every_save_writer``):
 
-    - lifecycle-bearing indexes (live rows post-tombstone-suppression,
-      physical rows, tombstone count/ratio, stale
-      ``_compacting``/``_old`` swap leftovers): marker-protocol ANN dir
-      (``ann_ivf_pq``), the ``_fp_tag`` media fingerprint index
+    - lifecycle-bearing indexes, all accounted by the one lifecycle
+      engine (``_index_layout`` / ``_tombstone_state``): live rows
+      post-tombstone-suppression, physical rows, tombstone
+      count/ratio, stale ``_compacting``/``_old`` swap leftovers, and
+      a crashed swap (data dir missing, a sibling holding the last
+      copy) reported as ``crashed_swap`` with the recovery call. Kinds:
+      the marker-protocol ANN dir (``ann_ivf_pq``; its data dir is
+      ``codes/``), the ``_fp_tag`` media fingerprint index
       (``fp_tagged`` — image, audio and video; the family is read from
       the hash column, and the legacy image layout with
       ``_phash_algo``/``_phash_size`` columns reads as ``fp_tagged``
@@ -2346,32 +2359,29 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
     comes back as ``ok=False`` + the loader's error text instead of a
     raise, so a fleet sweep over many artifacts reports per-artifact
     instead of stopping at the first bad one."""
-    import json as _json
-    import os as _os
-
     p = path.rstrip("/")
+    data, _ = _index_layout(p)
     report: dict = {"path": p, "ok": False}
     report["stale_dirs"] = [
-        d
-        for d in (p + "_compacting", p + "_old")
-        if _os.path.isdir(d)
+        d for d in (data + "_compacting", data + "_old") if os.path.isdir(d)
     ]
-    if not _os.path.isdir(p) and report["stale_dirs"]:
+    if not os.path.isdir(data) and report["stale_dirs"]:
         # compact-swap crash window: the sibling dirs hold the LAST
         # copy of the index (``_compacting`` is the count-validated
         # post-fold copy, ``_old`` the pre-fold one) — recoverable,
         # so say so instead of a generic read failure
         report["kind"] = "crashed_swap"
         report["error"] = (
-            f"index path missing with {report['stale_dirs']} present — "
-            "interrupted compact swap; the sibling dirs hold the last "
-            f"good copy. Run recover_index_swap({p!r}) to restore it; "
-            "do NOT rebuild (clear_index_lifecycle_state refuses) "
-            "until recovered"
+            f"index data {data} missing with {report['stale_dirs']} "
+            "present — interrupted compact swap; the sibling dirs hold "
+            f"the last good copy. Run recover_index_swap({p!r}) to "
+            "restore it; do NOT rebuild (clear_index_lifecycle_state "
+            "refuses) until recovered"
         )
         return report
     try:
-        if _os.path.isfile(p):
+        index = None
+        if os.path.isfile(p):
             # the one non-parquet artifact: the text-probe JSON file
             report["kind"] = "text_probe"
             from .features import load_text_probe
@@ -2379,38 +2389,19 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
             w, _bias, dim = load_text_probe(p)
             report["meta"] = {"dim": dim}
             report["rows"] = int(len(w))
-        elif _os.path.exists(_os.path.join(p, "_INDEX_OK")) or _os.path.isdir(
-            _os.path.join(p, "codes")
-        ):
+        elif data != p:
             report["kind"] = "ann_ivf_pq"
-            marker = _os.path.join(p, "_INDEX_OK")
-            if not _os.path.exists(marker):
-                raise ValueError(
-                    "codes/ present but _INDEX_OK missing — torn ANN "
-                    "artifact (interrupted build/append/remove/compact); "
-                    "rebuild with build_ann_index"
-                )
-            with open(marker) as f:
-                meta = _json.load(f)
+            from .pq import _ann_meta
+
+            meta = _ann_meta(p, "check")
             report["meta"] = {
                 k: meta[k]
                 for k in ("id_col", "vec_col", "appends", "removes")
                 if k in meta
             }
-            n_phys = spark.read.parquet(_os.path.join(p, "codes")).count()
-            tomb_dir = _os.path.join(p, "tombstones")
-            n_tomb = (
-                spark.read.parquet(tomb_dir).distinct().count()
-                if _os.path.isdir(tomb_dir)
-                else 0
-            )
-            report["rows"] = n_phys
-            # unknown ids tombstone harmlessly, so live_rows is a
-            # LOWER bound for the ANN kind (exact for the fp kinds)
-            report["live_rows"] = n_phys - n_tomb
-            report["tombstones"] = n_tomb
-            report["tombstone_ratio"] = (
-                round(n_tomb / n_phys, 6) if n_phys else 0.0
+            id_col = meta["id_col"]
+            index = suppress_index_tombstones(
+                spark, p, spark.read.parquet(data), id_col
             )
         else:
             try:
@@ -2430,7 +2421,7 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
                 report["kind"] = "minhash"
                 index, nh, k = load_dedup_index(spark, p)
                 report["meta"] = {"num_hashes": nh, "k": k}
-                id_col = spark.read.parquet(p).select("_mh_id_col").first()[0]
+                id_col = df.select("_mh_id_col").first()[0]
             elif "_fp_tag" in cols or "_phash_algo" in cols:
                 from .fingerprint import FAMILIES
 
@@ -2459,7 +2450,6 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
                 report["meta"] = {"k": int(cent.shape[0]),
                                   "dim": int(cent.shape[1])}
                 report["rows"] = df.count()
-                index = None
             elif cols == {"sub", "code", "pos", "val", "m", "n_codes",
                           "dsub"}:
                 report["kind"] = "pq_codebooks"
@@ -2471,28 +2461,18 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
                     "dsub": int(cb.shape[2]),
                 }
                 report["rows"] = df.count()
-                index = None
             else:
                 raise ValueError(
                     "no recognizable index metadata "
                     f"(columns {sorted(cols)}) — not a persisted index"
                 )
-            if index is not None:
-                report["live_rows"] = index.count()
-                report["rows"] = df.filter(
-                    F.col(id_col).isNotNull()
-                ).count()
-                td = _artifact_tombstone_dir(p)
-                report["tombstones"] = (
-                    spark.read.parquet(td).select(id_col).distinct().count()
-                    if _os.path.isdir(td)
-                    else 0
-                )
-                report["tombstone_ratio"] = (
-                    round(report["tombstones"] / report["rows"], 6)
-                    if report["rows"]
-                    else 0.0
-                )
+        if index is not None:
+            report["live_rows"] = index.count()
+            (
+                report["rows"],
+                report["tombstones"],
+                report["tombstone_ratio"],
+            ) = _tombstone_state(spark, p, id_col)
         report["ok"] = not report["stale_dirs"]
         if report["stale_dirs"]:
             report["error"] = (

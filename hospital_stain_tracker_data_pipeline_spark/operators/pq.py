@@ -38,12 +38,22 @@ beyond reference scope (SURVEY.md S2 "beyond-reference" block).
 """
 from __future__ import annotations
 
+import json
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import fanout, materialize
+from .dedup import (
+    _artifact_compact,
+    _artifact_remove,
+    clear_index_lifecycle_state,
+    fanout,
+    materialize,
+    suppress_index_tombstones,
+)
 from .similarity import (
     QUANT_SCALE,
     _quantized_ids,
@@ -151,7 +161,7 @@ def pq_fit_codebooks(
     src = (
         prepared
         if prepared is not None
-        else _quantized_ids(df, id_col, vec_col)
+        else materialize(_quantized_ids(df, id_col, vec_col))
     )
     first = src.select(F.size("_qv").alias("d")).first()
     if first is None:
@@ -632,30 +642,49 @@ def _pq_error_udf(codebooks: np.ndarray):
     return _err
 
 
-def _cell_stats(
-    df: DataFrame,
+def _encode_quantized(
+    src: DataFrame,
     cents: np.ndarray,
     cb: np.ndarray,
-    vec_col: str,
+    id_col: str,
+    with_err: bool = False,
 ) -> DataFrame:
-    """Per-IVF-cell ``(cell, n, err_sum)`` over a vector frame: row
-    count and exact total PQ quantization error (decimal(38,0) sum of
-    the per-row LONG error, order-invariant). Model-sized output —
-    at most ``n_clusters`` rows."""
-    return (
-        fanout(df)
-        .select(quantize_vec_long(F.col(vec_col)).alias("_qv"))
-        .filter(F.col("_qv").isNotNull())
-        .select(
-            ivf_assign_udf(cents)(F.col("_qv")).alias("cell"),
-            _pq_error_udf(cb)(F.col("_qv")).alias("_err"),
-        )
-        .groupBy("cell")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("_err").cast("decimal(38,0)")).alias("err_sum"),
-        )
+    """The IVF-PQ encode projection every production path runs
+    (``build_ann_index``, ``append_ann_index``, ``ann_index_drift``,
+    ``knn_ivf_pq``): ``(id, cell, pq_code)`` over a ``(_id, _qv)``
+    quantized frame (``_quantized_ids``'s shape), plus the per-row PQ
+    quantization error ``_err`` with ``with_err``. Tests pin it
+    against ``_encode_cells``, the reference form."""
+    cols = [
+        F.col("_id").alias(id_col),
+        ivf_assign_udf(cents)(F.col("_qv")).alias("cell"),
+        _pq_assign_udf(cb)(F.col("_qv")).alias("pq_code"),
+    ]
+    if with_err:
+        cols.append(_pq_error_udf(cb)(F.col("_qv")).alias("_err"))
+    return src.select(*cols)
+
+
+def _cell_stats(encoded: DataFrame) -> DataFrame:
+    """Per-IVF-cell ``(cell, n, err_sum)`` over an encoded frame
+    carrying ``_err``: row count and exact total PQ quantization error
+    (decimal(38,0) sum of the per-row LONG error, order-invariant).
+    Model-sized output — at most ``n_clusters`` rows. Both the
+    fit-time baseline under ``<path>/stats`` and the batch side of
+    every drift report are this aggregation."""
+    return encoded.groupBy("cell").agg(
+        F.count("*").alias("n"),
+        F.sum(F.col("_err").cast("decimal(38,0)")).alias("err_sum"),
     )
+
+
+def _stats_map(stats: DataFrame) -> dict:
+    """``{cell: (n, err_sum)}`` collected from a ``_cell_stats``-shaped
+    frame (a batch's stats or the persisted fit-time baseline)."""
+    return {
+        int(r["cell"]): (int(r["n"]), int(r["err_sum"]))
+        for r in stats.collect()
+    }
 
 
 def _encode_cells(
@@ -666,13 +695,12 @@ def _encode_cells(
     vec_col: str,
 ) -> DataFrame:
     """(id, cell, pq_code) for every corpus vector — the REFERENCE
-    implementation of the IVF-PQ encode projection. Since round 14 the
-    production builders (``build_ann_index``, ``append_ann_index``,
-    ``knn_ivf_pq``) inline this projection over their shared quantized
-    pass (plus an ``_err`` column where stats ride along) instead of
-    calling it; tests pin the inlined copies against this form, so a
-    change here must be mirrored there (and vice versa). NULL
-    embeddings are dropped (nothing to search)."""
+    implementation of the IVF-PQ encode projection. The production
+    paths run ``_encode_quantized`` over their shared quantized pass
+    (plus an ``_err`` column where stats ride along) instead of
+    calling it; tests pin that helper against this form, so a change
+    here must be mirrored there (and vice versa). NULL embeddings are
+    dropped (nothing to search)."""
     return (
         fanout(corpus)
         .select(
@@ -686,6 +714,31 @@ def _encode_cells(
             _pq_assign_udf(cb)(F.col("_qv")).alias("pq_code"),
         )
     )
+
+
+def _ann_meta(path: str, action: str) -> dict:
+    """The metadata in an ANN artifact's ``_INDEX_OK`` marker (the fit
+    parameters, ``id_col``, the append/remove/compact counters). Every
+    operation on the artifact reads it first: a missing marker means
+    a torn artifact (a build or append did not finish) or no index at
+    all, and raises instead of serving a silently-wrong ivf/pq/codes
+    mix."""
+    marker = os.path.join(path, "_INDEX_OK")
+    if not os.path.exists(marker):
+        raise ValueError(
+            f"{path} has no _INDEX_OK marker — cannot {action} it "
+            "(_INDEX_OK missing: a build or append did not finish, or "
+            "no index was built here); rebuild with build_ann_index"
+        )
+    with open(marker) as f:
+        return json.load(f)
+
+
+def _commit_ann_meta(path: str, meta: dict) -> None:
+    """Write the ``_INDEX_OK`` marker: the last step of every
+    operation that changes an ANN artifact."""
+    with open(os.path.join(path, "_INDEX_OK"), "w") as f:
+        json.dump(meta, f)
 
 
 def build_ann_index(
@@ -715,10 +768,10 @@ def build_ann_index(
     overwrite and written only after all three land — a crash
     mid-rebuild leaves a loudly-rejected torn artifact instead of a
     silently-wrong mixed one (``path`` must be driver-visible
-    local/NFS, the ``_StageStore`` contract)."""
-    import json
-    import os
-
+    local/NFS, the ``_StageStore`` contract). A rebuild starts
+    takedown-free: the old index's tombstones and swap leftovers are
+    cleared (``clear_index_lifecycle_state``) before the marker
+    commits the new one."""
     spark = corpus.sparkSession
     marker = os.path.join(path, "_INDEX_OK")
     if os.path.exists(marker):
@@ -732,7 +785,7 @@ def build_ann_index(
     # projections/aggregations of the same checkpointed frame, with
     # values identical to the separate-pass form (same UDFs, same
     # exact-integer inputs).
-    src = _quantized_ids(corpus, id_col, vec_col)
+    src = materialize(_quantized_ids(corpus, id_col, vec_col))
     cents = ivf_fit_centroids(
         corpus, n_clusters, iters, id_col, vec_col, prepared=src
     )
@@ -742,35 +795,28 @@ def build_ann_index(
     save_ivf_index(spark, cents, f"{path}/ivf")
     save_pq_index(spark, cb, f"{path}/pq")
     encoded = materialize(
-        src.select(
-            F.col("_id").alias(id_col),
-            ivf_assign_udf(cents)(F.col("_qv")).alias("cell"),
-            _pq_assign_udf(cb)(F.col("_qv")).alias("pq_code"),
-            _pq_error_udf(cb)(F.col("_qv")).alias("_err"),
-        )
+        _encode_quantized(src, cents, cb, id_col, with_err=True)
     )
     encoded.select(id_col, "cell", "pq_code").write.mode(
         "overwrite"
     ).parquet(f"{path}/codes")
     # fit-time per-cell occupancy + quantization error — the drift
     # baseline every later append_ann_index compares its batch against
-    encoded.groupBy("cell").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("_err").cast("decimal(38,0)")).alias("err_sum"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-    os.makedirs(path, exist_ok=True)
-    with open(marker, "w") as f:
-        json.dump(
-            {
-                "n_clusters": n_clusters,
-                "m": m,
-                "n_codes": n_codes,
-                "iters": iters,
-                "id_col": id_col,
-                "appends": 0,
-            },
-            f,
-        )
+    _cell_stats(encoded).coalesce(1).write.mode("overwrite").parquet(
+        f"{path}/stats"
+    )
+    clear_index_lifecycle_state(path)
+    _commit_ann_meta(
+        path,
+        {
+            "n_clusters": n_clusters,
+            "m": m,
+            "n_codes": n_codes,
+            "iters": iters,
+            "id_col": id_col,
+            "appends": 0,
+        },
+    )
 
 
 def append_ann_index(
@@ -813,17 +859,7 @@ def append_ann_index(
     (the marker records it) plus ``vec_col``. Appended ids are NOT
     dedup'd against existing codes — run the corpus dedup tier first
     (`dedup_against_corpus`), same as the build's contract."""
-    import json
-    import os
-
-    marker = os.path.join(path, "_INDEX_OK")
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"{path} has no _INDEX_OK marker — cannot append to an "
-            "incomplete or torn index; rebuild with build_ann_index"
-        )
-    with open(marker) as f:
-        meta = json.load(f)
+    meta = _ann_meta(path, "append to")
     id_col = meta["id_col"]
     missing = [c for c in (id_col, vec_col) if c not in new_vectors.columns]
     if missing:
@@ -845,42 +881,20 @@ def append_ann_index(
     # wrong-dim or corrupt vectors still fail HERE — before the marker
     # comes off — and the stats collect / codes write below are a
     # model-sized aggregation and a flat projection of the same frame.
+    src = _quantized_ids(new_vectors.select(id_col, vec_col), id_col, vec_col)
     encoded = materialize(
-        fanout(new_vectors.select(id_col, vec_col))
-        .select(
-            F.col(id_col),
-            quantize_vec_long(F.col(vec_col)).alias("_qv"),
-        )
-        .filter(F.col("_qv").isNotNull())
-        .select(
-            id_col,
-            ivf_assign_udf(cents)(F.col("_qv")).alias("cell"),
-            _pq_assign_udf(cb)(F.col("_qv")).alias("pq_code"),
-            _pq_error_udf(cb)(F.col("_qv")).alias("_err"),
-        )
+        _encode_quantized(src, cents, cb, id_col, with_err=True)
     )
-    new_stats = {
-        int(r["cell"]): (int(r["n"]), int(r["err_sum"]))
-        for r in encoded.groupBy("cell")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("_err").cast("decimal(38,0)")).alias("err_sum"),
-        )
-        .collect()
-    }
-    fit_stats = {
-        int(r["cell"]): (int(r["n"]), int(r["err_sum"]))
-        for r in spark.read.parquet(f"{path}/stats").collect()
-    }
+    new_stats = _stats_map(_cell_stats(encoded))
+    fit_stats = _stats_map(spark.read.parquet(f"{path}/stats"))
     n_new = sum(n for n, _ in new_stats.values())
     if n_new:
-        os.remove(marker)
+        os.remove(os.path.join(path, "_INDEX_OK"))
         encoded.select(id_col, "cell", "pq_code").write.mode(
             "append"
         ).parquet(f"{path}/codes")
         meta["appends"] = int(meta.get("appends", 0)) + 1
-        with open(marker, "w") as f:
-            json.dump(meta, f)
+        _commit_ann_meta(path, meta)
     report = _drift_report(
         fit_stats, new_stats, err_ratio_threshold, occupancy_shift_threshold
     )
@@ -962,22 +976,12 @@ def ann_index_drift(
     notice. Needs only ``vec_col`` on the input (no ids — nothing is
     encoded or written); ``appended`` in the report counts the probed
     vectors."""
-    import json
-    import os
-
-    marker = os.path.join(path, "_INDEX_OK")
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"{path} has no _INDEX_OK marker — cannot probe an "
-            "incomplete or torn index; rebuild with build_ann_index"
-        )
+    meta = _ann_meta(path, "probe")
     if not os.path.isdir(os.path.join(path, "stats")):
         raise ValueError(
             f"{path} has no fit-time stats (pre-append-era artifact) — "
             "rebuild with build_ann_index to enable drift probes"
         )
-    with open(marker) as f:
-        meta = json.load(f)
     if vec_col not in vectors.columns:
         raise ValueError(
             f"probe frame lacks column {vec_col!r} — pass vec_col= "
@@ -985,14 +989,15 @@ def ann_index_drift(
         )
     cents = load_ivf_index(spark, f"{path}/ivf")
     cb = load_pq_index(spark, f"{path}/pq")
-    new_stats = {
-        int(r["cell"]): (int(r["n"]), int(r["err_sum"]))
-        for r in _cell_stats(vectors, cents, cb, vec_col).collect()
-    }
-    fit_stats = {
-        int(r["cell"]): (int(r["n"]), int(r["err_sum"]))
-        for r in spark.read.parquet(f"{path}/stats").collect()
-    }
+    # the probe carries no ids: a NULL stand-in fills the projection's
+    # id slot, and the per-cell aggregate prunes it (with pq_code)
+    src = _quantized_ids(
+        vectors.withColumn("_id", F.lit(None)), "_id", vec_col
+    )
+    new_stats = _stats_map(
+        _cell_stats(_encode_quantized(src, cents, cb, "_id", with_err=True))
+    )
+    fit_stats = _stats_map(spark.read.parquet(f"{path}/stats"))
     report = _drift_report(
         fit_stats, new_stats, err_ratio_threshold, occupancy_shift_threshold
     )
@@ -1010,73 +1015,39 @@ def remove_from_ann_index(
     """Deletions for the persistent index — the lifecycle piece
     takedowns and dedup-driven retractions need at 100 TB, where
     "rebuild the index" is a night of cluster time but "stop serving
-    these ids" must land in minutes. Appends the ids to a TOMBSTONE
-    parquet beside ``codes``; ``search_ann_index`` anti-joins it, so
-    removed ids stop appearing immediately while the (expensive) codes
-    table is untouched — the vacuum-analog write-amplification
-    deferral. ``compact_ann_index`` later folds tombstones into codes
-    when the ratio passes a threshold.
+    these ids" must land in minutes. Tombstones the ids through the
+    package's one index-lifecycle engine (``dedup._artifact_remove``;
+    ``<path>/tombstones`` beside ``codes``); ``search_ann_index``
+    anti-joins them, so removed ids stop appearing immediately while
+    the (expensive) codes table is untouched — the vacuum-analog
+    write-amplification deferral. ``compact_ann_index`` later folds
+    tombstones into codes when the ratio passes a threshold.
 
     ``ids`` is a DataFrame carrying the index's id column (the marker
     records its name — fail-fast otherwise); unknown ids tombstone
     harmlessly (the anti-join ignores them) but inflate the reported
     ratio, so feed takedown lists already intersected with the corpus
-    where possible. Ids are distinct-ed and snapshot-pinned
-    (localCheckpoint) BEFORE the marker comes off — the
-    ``append_ann_index`` discipline: bad input never tears the
-    artifact, and a crash mid-write leaves a loudly-rejected torn
-    index, not a silently-partial one.
+    where possible. A torn artifact (no ``_INDEX_OK``) is refused.
+    The fits and codes do not change, so the marker stays on; its
+    ``removes`` counter is bumped once the tombstones have landed.
 
     Contract note: a tombstone suppresses its id even if the same id
     is APPENDED again later — compaction would fold the re-append away
     too. Re-adding a previously removed id requires compacting first
-    (tombstones then clear). The returned report carries
-    ``tombstones_total`` / ``codes_rows`` / ``tombstone_ratio`` /
-    ``compact_recommended`` so a cron can chain the compaction."""
-    import json
-    import os
-
-    marker = os.path.join(path, "_INDEX_OK")
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"{path} has no _INDEX_OK marker — cannot remove from an "
-            "incomplete or torn index; rebuild with build_ann_index"
-        )
-    with open(marker) as f:
-        meta = json.load(f)
-    id_col = meta["id_col"]
-    if id_col not in ids.columns:
-        raise ValueError(
-            f"ids frame lacks column {id_col!r} (has {ids.columns}) — "
-            f"the index at {path} was built with id_col={id_col!r}"
-        )
-    # pin + validate BEFORE the marker comes off (forces the frame; a
-    # broken producer fails here, leaving the artifact intact)
-    tomb = ids.select(id_col).distinct().localCheckpoint(eager=True)
-    n_req = tomb.count()
-    if n_req:
-        os.remove(marker)
-        tomb.write.mode("append").parquet(os.path.join(path, "tombstones"))
-        meta["removes"] = int(meta.get("removes", 0)) + 1
-        with open(marker, "w") as f:
-            json.dump(meta, f)
-    n_tomb = (
-        spark.read.parquet(os.path.join(path, "tombstones"))
-        .distinct()
-        .count()
-        if os.path.isdir(os.path.join(path, "tombstones"))
-        else 0
+    (tombstones then clear). The returned report carries the shared
+    lifecycle keys (``requested`` / ``tombstones_total`` /
+    ``index_rows`` / ``tombstone_ratio`` / ``compact_recommended``)
+    plus ``removes``, so a cron can chain the compaction."""
+    meta = _ann_meta(path, "remove from")
+    report = _artifact_remove(
+        spark, path, ids, meta["id_col"],
+        compact_ratio_threshold=compact_ratio_threshold,
     )
-    n_codes = spark.read.parquet(f"{path}/codes").count()
-    ratio = round(n_tomb / n_codes, 6) if n_codes else 0.0
-    return {
-        "requested": n_req,
-        "tombstones_total": n_tomb,
-        "codes_rows": n_codes,
-        "tombstone_ratio": ratio,
-        "compact_recommended": ratio >= compact_ratio_threshold,
-        "removes": int(meta.get("removes", 0)),
-    }
+    if report["requested"]:
+        meta["removes"] = int(meta.get("removes", 0)) + 1
+        _commit_ann_meta(path, meta)
+    report["removes"] = int(meta.get("removes", 0))
+    return report
 
 
 def compact_ann_index(
@@ -1085,95 +1056,36 @@ def compact_ann_index(
     min_ratio: float = 0.1,
     force: bool = False,
 ) -> dict:
-    """Fold tombstones into the codes table — the index's vacuum:
-    rewrite ``codes`` minus tombstoned ids, clear the tombstone file,
-    and return the before/after accounting. Deferred by default: the
-    rewrite costs a full codes-table pass, so it only runs when the
-    tombstone ratio has reached ``min_ratio`` (or ``force=True``) —
-    below that, the per-search anti-join is cheaper than the rewrite.
+    """Fold tombstones into the codes table — the index's vacuum,
+    run by the package's one index-lifecycle engine
+    (``dedup._artifact_compact``): rewrite ``codes`` minus tombstoned
+    ids into ``codes_compacting``, count-validate it against an
+    independently derived survivor count, swap it in through
+    ``codes_old``, clear the tombstones, and return the before/after
+    accounting (``index_rows_before`` / ``index_rows_after`` /
+    ``folded_tombstones``, plus ``compactions``). Deferred by default:
+    the rewrite costs a full codes-table pass, so it only runs when
+    the tombstone ratio has reached ``min_ratio`` (or ``force=True``)
+    — below that, the per-search anti-join is cheaper than the
+    rewrite.
 
-    Marker discipline: the compacted codes land in a sibling directory
-    and are COUNT-VALIDATED before ``_INDEX_OK`` comes off — the
-    rewritten row count must equal the codes rows minus the tombstones
-    that actually intersect the codes table (computed independently
-    via a semi-join), so a rewrite that loses or duplicates rows
-    raises with the artifact still intact; only then does the
-    directory swap + tombstone clear happen, and the marker is
-    rewritten last — a crash mid-swap leaves a loudly-rejected torn
-    artifact (the ``build_ann_index`` contract). Single-writer
-    contract (shared with append/remove): a concurrent append between
-    the read and the swap is NOT detected — serialize lifecycle ops
-    per artifact. Search results are identical before and after
-    (pinned by test): compaction changes storage, never semantics."""
-    import json
-    import os
-    import shutil
-
-    marker = os.path.join(path, "_INDEX_OK")
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"{path} has no _INDEX_OK marker — cannot compact an "
-            "incomplete or torn index; rebuild with build_ann_index"
-        )
-    with open(marker) as f:
-        meta = json.load(f)
-    id_col = meta["id_col"]
-    tomb_dir = os.path.join(path, "tombstones")
-    codes_dir = os.path.join(path, "codes")
-    n_codes = spark.read.parquet(codes_dir).count()
-    if not os.path.isdir(tomb_dir):
-        return {
-            "compacted": False,
-            "reason": "no tombstones",
-            "codes_rows": n_codes,
-        }
-    tomb = spark.read.parquet(tomb_dir).distinct()
-    n_tomb = tomb.count()
-    ratio = round(n_tomb / n_codes, 6) if n_codes else 0.0
-    if not force and ratio < min_ratio:
-        return {
-            "compacted": False,
-            "reason": f"tombstone_ratio {ratio} < min_ratio {min_ratio}",
-            "codes_rows": n_codes,
-            "tombstones_total": n_tomb,
-            "tombstone_ratio": ratio,
-        }
-    compact_dir = os.path.join(path, "codes_compacting")
-    if os.path.isdir(compact_dir):
-        shutil.rmtree(compact_dir)  # leftover from a pre-marker crash
-    codes = spark.read.parquet(codes_dir)
-    # expected survivor count, derived independently of the rewrite:
-    # only tombstones that actually intersect the codes table remove rows
-    n_dead = codes.join(tomb, id_col, "left_semi").count()
-    codes.join(tomb, id_col, "left_anti").write.mode("overwrite").parquet(
-        compact_dir
-    )
-    # validate the rewrite BEFORE the marker comes off: a readable-but-
-    # wrong codes table (lost or duplicated rows) must raise here, with
-    # the original artifact untouched
-    n_live = spark.read.parquet(compact_dir).count()
-    if n_live != n_codes - n_dead:
-        raise ValueError(
-            f"compaction rewrite produced {n_live} rows, expected "
-            f"{n_codes} - {n_dead} = {n_codes - n_dead} — aborting with "
-            f"the original artifact intact (stale files under "
-            f"{compact_dir}?)"
-        )
-    os.remove(marker)
-    shutil.rmtree(codes_dir)
-    os.rename(compact_dir, codes_dir)
-    shutil.rmtree(tomb_dir)
-    meta["compactions"] = int(meta.get("compactions", 0)) + 1
-    with open(marker, "w") as f:
-        json.dump(meta, f)
-    return {
-        "compacted": True,
-        "codes_rows_before": n_codes,
-        "codes_rows_after": n_live,
-        "folded_tombstones": n_tomb,
-        "tombstone_ratio": ratio,
-        "compactions": meta["compactions"],
-    }
+    A torn artifact (no ``_INDEX_OK``) is refused. The fits do not
+    change, so the marker stays on; a crash inside the swap leaves
+    ``codes`` missing with the last copy in ``codes_old`` or
+    ``codes_compacting``, which ``recover_index_swap(path)`` restores
+    (``index_fsck`` reports it as ``crashed_swap``). ``compactions``
+    is bumped once the swap commits. Single-writer contract (shared
+    with append/remove): a concurrent append between the read and the
+    swap is NOT detected — serialize lifecycle ops per artifact.
+    Search results are identical before and after (pinned by test):
+    compaction changes storage, never semantics."""
+    meta = _ann_meta(path, "compact")
+    report = _artifact_compact(spark, path, meta["id_col"], min_ratio, force)
+    if report["compacted"]:
+        meta["compactions"] = int(meta.get("compactions", 0)) + 1
+        _commit_ann_meta(path, meta)
+    report["compactions"] = int(meta.get("compactions", 0))
+    return report
 
 
 def search_ann_index(
@@ -1198,22 +1110,16 @@ def search_ann_index(
     The corpus id column is whatever ``build_ann_index`` encoded (the
     codes table's non-``cell``/``pq_code`` column). Ids tombstoned by
     ``remove_from_ann_index`` are anti-joined out of the candidate set
-    here (takedowns stop serving immediately, before any
-    ``compact_ann_index`` folds them into the codes table).
+    here (``suppress_index_tombstones``, the same suppression every
+    index loader runs), so takedowns stop serving immediately, before
+    any ``compact_ann_index`` folds them into the codes table.
 
     Precondition: every id appears at most once in the codes table.
     ``append_ann_index`` does not dedup appended ids against existing
     codes, and the top-k here (``_adc_topk``) ranks rows, not ids — an
     id present twice fills two of a query's ``k`` slots. Dedup a delta
     against the index before appending it."""
-    import os
-
-    if not os.path.exists(os.path.join(path, "_INDEX_OK")):
-        raise ValueError(
-            f"{path} has no _INDEX_OK marker — the index build did not "
-            "complete (a torn ivf/pq/codes mix would search silently "
-            "wrong); rebuild with build_ann_index"
-        )
+    _ann_meta(path, "search")
     cents = load_ivf_index(spark, f"{path}/ivf")
     cb = load_pq_index(spark, f"{path}/pq")
     codes = spark.read.parquet(f"{path}/codes")
@@ -1228,11 +1134,29 @@ def search_ann_index(
             "exactly (id, cell, pq_code) from build_ann_index"
         )
     id_col = rest[0]
-    tomb_dir = os.path.join(path, "tombstones")
-    if os.path.isdir(tomb_dir):
-        codes = codes.join(
-            spark.read.parquet(tomb_dir), id_col, "left_anti"
-        )
+    codes = suppress_index_tombstones(spark, path, codes, id_col)
+    return _ivf_pq_search(
+        query, cents, cb, codes, k, nprobe, id_col, query_id_col, vec_col,
+        exclude_self,
+    )
+
+
+def _ivf_pq_search(
+    query: DataFrame,
+    cents: np.ndarray,
+    cb: np.ndarray,
+    codes: DataFrame,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    query_id_col: str,
+    vec_col: str,
+    exclude_self: bool,
+) -> DataFrame:
+    """ADC top-``k`` of each query over the ``(id, cell, pq_code)``
+    codes of its ``nprobe`` nearest IVF cells — the search half shared
+    by ``search_ann_index`` (persisted codes) and ``knn_ivf_pq``
+    (in-process codes)."""
     probes = query.select(
         F.col(query_id_col),
         as_double_array(F.col(vec_col)).alias("_pv"),
@@ -1295,7 +1219,7 @@ def knn_ivf_pq(
     t0 = _time.perf_counter()
     # one quantized pass shared by both fits and the encode (round 14,
     # same reasoning as build_ann_index)
-    src = _quantized_ids(corpus, id_col, vec_col)
+    src = materialize(_quantized_ids(corpus, id_col, vec_col))
     cents = ivf_fit_centroids(
         corpus, n_clusters, iters, id_col, vec_col, prepared=src
     )
@@ -1303,31 +1227,11 @@ def knn_ivf_pq(
         corpus, m, n_codes, iters, id_col, vec_col, prepared=src
     )
     t1 = _time.perf_counter()
-    encoded = materialize(
-        src.select(
-            F.col("_id").alias(id_col),
-            ivf_assign_udf(cents)(F.col("_qv")).alias("cell"),
-            _pq_assign_udf(cb)(F.col("_qv")).alias("pq_code"),
-        )
-    )
+    encoded = materialize(_encode_quantized(src, cents, cb, id_col))
     if timings is not None:
         timings["fit_sec"] = round(t1 - t0, 3)
         timings["encode_sec"] = round(_time.perf_counter() - t1, 3)
-    probes = query.select(
-        F.col(query_id_col),
-        as_double_array(F.col(vec_col)).alias("_pv"),
-    ).select(
-        query_id_col,
-        F.explode(
-            ivf_assign_udf(cents, nprobe=nprobe)(
-                quantize_vec_long(F.col("_pv"))
-            )
-        ).alias("cell"),
-    )
-    qids, tbl, qid_type = _adc_table_np(query, cb, query_id_col, vec_col)
-    # self-exclusion happens once, inside _adc_topk (see search_ann_index)
-    cand = probes.join(encoded, "cell").select(query_id_col, id_col, "pq_code")
-    return _adc_topk(
-        cand, qids, tbl, qid_type, k, id_col, query_id_col,
-        per_query=True, exclude_self=exclude_self,
+    return _ivf_pq_search(
+        query, cents, cb, encoded, k, nprobe, id_col, query_id_col,
+        vec_col, exclude_self,
     )

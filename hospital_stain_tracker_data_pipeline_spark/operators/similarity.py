@@ -529,16 +529,16 @@ def quantize_vec_long(col: Column) -> Column:
     )
 
 
-def _quantized_ids(
-    df: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """The materialized ``(_id, _qv)`` exact-integer projection every
-    IVF/PQ fit and encode pass runs on. Composite builders
-    (``build_ann_index``, ``knn_ivf_pq``) compute it ONCE and hand it
-    to each consumer via their ``prepared`` parameter — the corpus is
-    read and quantized a single time instead of once per fit/encode
-    (guide §2.4: remove repeated passes outright)."""
-    return materialize(
+def _quantized_ids(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The ``(_id, _qv)`` exact-integer projection every IVF/PQ fit and
+    encode pass runs on. Composite builders (``build_ann_index``,
+    ``knn_ivf_pq``) materialize it ONCE and hand it to each consumer
+    via their ``prepared`` parameter — the corpus is read and
+    quantized a single time instead of once per fit/encode (guide
+    §2.4: remove repeated passes outright). A single-pass caller
+    (``append_ann_index``, ``ann_index_drift``) materializes or
+    aggregates the encoded frame built on it instead."""
+    return (
         fanout(df)
         .select(
             F.col(id_col).alias("_id"),
@@ -608,7 +608,7 @@ def ivf_fit_centroids(
     src = (
         prepared
         if prepared is not None
-        else _quantized_ids(df, id_col, vec_col)
+        else materialize(_quantized_ids(df, id_col, vec_col))
     )
     seed_rows = (
         src.withColumn("_h", F.md5(F.col("_id").cast("string")))

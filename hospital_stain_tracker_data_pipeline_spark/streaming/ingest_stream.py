@@ -24,8 +24,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.validate import split_valid_invalid
+from ..operators.validate import (
+    REJECT_REASON,
+    reject_reason_column,
+    split_on_reason,
+)
 from ..pipeline.lake import LakeTable
+from ..session import _materialize_observed, local_rows_df
 from ..sources.sinks import append_run_log, new_run_id, run_log_row, utcnow
 from ..sources.tables import normalize_event_ts
 
@@ -133,11 +138,23 @@ def stream_ingest_events(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         run_id = new_run_id()
         started = utcnow()
-        accepted, rejected = split_valid_invalid(batch_df, event_validation_rules())
-        accepted = accepted.withColumn("event_date", F.to_date("ts"))
-        n_rej = rejected.count()
-        table.upsert(accepted)
-        n_acc = accepted.count()
+        reason = F.col(REJECT_REASON)
+        # one validation pass fills the cache the upsert reads and
+        # yields both counts on the way (the batch ingest's pattern)
+        checked, seen = _materialize_observed(
+            batch_df.withColumn(
+                REJECT_REASON, reject_reason_column(event_validation_rules())
+            ),
+            cache=True,
+            accepted=F.count_if(reason.isNull()),
+            rejected=F.count_if(reason.isNotNull()),
+        )
+        try:
+            accepted, _ = split_on_reason(checked)
+            table.upsert(accepted.withColumn("event_date", F.to_date("ts")))
+        finally:
+            checked.unpersist()
+        n_acc, n_rej = seen["accepted"], seen["rejected"]
         append_run_log(
             spark,
             runs_path,
@@ -457,16 +474,9 @@ def stream_ann_ingest(
     compact → re-append, never append-over); genuinely new ids are
     unaffected. The anti-join reads the codes table's ID COLUMN only
     (parquet column pruning) — not the byte codes."""
-    import json as _json
+    from ..operators.pq import _ann_meta, append_ann_index
 
-    marker = os.path.join(index_path, "_INDEX_OK")
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"{index_path} has no _INDEX_OK marker — build the index "
-            "with build_ann_index before streaming appends into it"
-        )
-    with open(marker) as f:
-        id_col = _json.load(f)["id_col"]
+    id_col = _ann_meta(index_path, "stream appends into")["id_col"]
 
     ledger_schema = (
         "appended long, occupancy_shift_tv double, err_ratio double, "
@@ -489,8 +499,6 @@ def stream_ann_ingest(
         if fresh.count() == 0:
             row = (0, None, None, False)
         else:
-            from ..operators.pq import append_ann_index
-
             rep = append_ann_index(spark, index_path, fresh, vec_col=vec_col)
             row = (
                 int(rep.get("appended", 0)),
@@ -498,8 +506,6 @@ def stream_ann_ingest(
                 rep.get("err_ratio"),
                 bool(rep.get("refit_recommended", False)),
             )
-        from ..session import local_rows_df
-
         # one driver-local row → ONE slice (not defaultParallelism
         # pickled slices, i.e. 32 Python-worker tasks for one row)
         return local_rows_df(spark, [row], ledger_schema)

@@ -288,26 +288,34 @@ def cmd_curate(args) -> None:
 
 
 def _add_index_lifecycle_args(parser) -> None:
-    """The shared --remove/--compact flag set for the two fingerprint
-    index commands, dedup_index and fp_index (one definition: the
-    command bodies already share _fp_index_lifecycle)."""
+    """The shared --remove/--compact flag set for the three index
+    commands, dedup_index, fp_index and ann_index (one definition: the
+    command bodies already share _index_lifecycle)."""
     parser.add_argument("--remove",
-                        help="parquet of ids to TOMBSTONE from --output "
-                        "(takedown path: suppressed at every probe "
+                        help="parquet of ids (the index's id column) to "
+                        "TOMBSTONE from --output (takedown path: "
+                        "suppressed at every probe or search "
                         "immediately, files untouched until --compact); "
                         "prints the report JSON")
     parser.add_argument("--compact", action="store_true",
                         help="fold tombstones into the index files "
-                        "(threshold-gated rewrite); prints the report JSON")
-    parser.add_argument("--compact-min-ratio", type=float, default=0.1)
-    parser.add_argument("--compact-force", action="store_true")
+                        "(threshold-gated, count-validated rewrite); "
+                        "prints the report JSON")
+    parser.add_argument("--compact-min-ratio", type=float, default=0.1,
+                        help="minimum tombstones/rows ratio before "
+                        "--compact actually rewrites")
+    parser.add_argument("--compact-force", action="store_true",
+                        help="compact regardless of ratio")
 
 
-def _fp_index_lifecycle(spark, args, remove_fn, compact_fn) -> bool:
-    """Shared --remove/--compact handling for dedup_index and fp_index
-    (the ann_index lifecycle shape): tombstone ids from
-    a parquet of ids, or fold tombstones into the files. Returns True
-    when a lifecycle action ran (the build path is skipped)."""
+def _index_lifecycle(
+    spark, args, remove_fn, compact_fn, batch_flag="input"
+) -> bool:
+    """Shared --remove/--compact handling for dedup_index, fp_index and
+    ann_index: tombstone ids from a parquet of ids, or fold tombstones
+    into the files. Returns True when a lifecycle action ran (the
+    build path is skipped); otherwise requires the command's batch
+    flag (``--<batch_flag>``)."""
     import json as _json
 
     if args.remove and args.compact:
@@ -329,10 +337,10 @@ def _fp_index_lifecycle(spark, args, remove_fn, compact_fn) -> bool:
         )
         print(_json.dumps(report))
         return True
-    if not args.input:
+    if not getattr(args, batch_flag):
         raise SystemExit(
-            "--input is required (only --remove/--compact operate "
-            "without a corpus batch)"
+            f"--{batch_flag} is required (only --remove/--compact "
+            "operate without a batch to index)"
         )
     return False
 
@@ -357,7 +365,7 @@ def cmd_dedup_index(args) -> None:
     )
 
     spark = get_spark(app_name="dedup_index")
-    if _fp_index_lifecycle(
+    if _index_lifecycle(
         spark, args, remove_from_dedup_index, compact_dedup_index
     ):
         return
@@ -380,7 +388,8 @@ def cmd_ann_index(args) -> None:
     report (occupancy shift + quantization-error ratio vs fit time)
     prints as JSON so an operator/cron can gate a full rebuild on
     `refit_recommended`. With --drift the same report prints WITHOUT
-    mutating the index (read-only monitoring probe)."""
+    mutating the index (read-only monitoring probe). --remove/--compact
+    run the takedown lifecycle shared with dedup_index and fp_index."""
     import json as _json
 
     from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
@@ -403,25 +412,11 @@ def cmd_ann_index(args) -> None:
             "one lifecycle action per invocation"
         )
     spark = get_spark(app_name="ann_index")
-    if args.remove:
-        report = remove_from_ann_index(
-            spark, args.output, spark.read.parquet(args.remove)
-        )
-        print(_json.dumps(report))
+    if _index_lifecycle(
+        spark, args, remove_from_ann_index, compact_ann_index,
+        batch_flag="embeddings",
+    ):
         return
-    if args.compact:
-        report = compact_ann_index(
-            spark, args.output,
-            min_ratio=args.compact_min_ratio,
-            force=args.compact_force,
-        )
-        print(_json.dumps(report))
-        return
-    if not args.embeddings:
-        raise SystemExit(
-            "ann_index: --embeddings is required (only --remove/"
-            "--compact operate without a vector batch)"
-        )
     emb = spark.read.parquet(args.embeddings)
     if args.drift:
         report = ann_index_drift(
@@ -711,7 +706,7 @@ def cmd_fp_index(args) -> None:
     except ValueError as exc:
         raise SystemExit(f"fp_index --kind {args.kind}: {exc}") from None
     spark = get_spark(app_name="fp_index")
-    if _fp_index_lifecycle(
+    if _index_lifecycle(
         spark, args,
         lambda s, p, ids: remove_from_fp_index(s, p, ids, family),
         lambda s, p, **kw: compact_fp_index(s, p, family, **kw),
@@ -1202,21 +1197,7 @@ def main() -> None:
                      "through the existing index's fits and print the "
                      "drift report JSON without appending anything — "
                      "the nightly refit-or-not monitoring check")
-    pai.add_argument("--remove",
-                     help="ids parquet (the index's id column): "
-                     "tombstone these ids — search stops serving them "
-                     "immediately, codes untouched; prints the "
-                     "tombstone-ratio report JSON")
-    pai.add_argument("--compact", action="store_true",
-                     help="fold tombstones into the codes table "
-                     "(rewrite codes minus removed ids, clear "
-                     "tombstones) when the ratio warrants it; prints "
-                     "the accounting JSON")
-    pai.add_argument("--compact-min-ratio", type=float, default=0.1,
-                     help="minimum tombstones/codes ratio before "
-                     "--compact actually rewrites")
-    pai.add_argument("--compact-force", action="store_true",
-                     help="compact regardless of ratio")
+    _add_index_lifecycle_args(pai)
     pai.set_defaults(fn=cmd_ann_index)
 
     pfk = sub.add_parser("index_fsck")

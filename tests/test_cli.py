@@ -824,7 +824,7 @@ def test_cli_ann_index_remove_and_compact(tmp_path):
         [ln for ln in out.splitlines() if ln.startswith("{")][-1]
     )
     assert crep["compacted"] is True
-    assert crep["codes_rows_after"] == n0 - n_rm
+    assert crep["index_rows_after"] == n0 - n_rm
     assert duckdb.sql(
         f"SELECT count(*) FROM '{idx}/codes/*.parquet'"
     ).fetchone()[0] == n0 - n_rm

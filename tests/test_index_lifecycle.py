@@ -1,19 +1,25 @@
-"""Deletion lifecycle for the fingerprint indexes (round 12).
+"""Deletion lifecycle for every persisted index.
 
-The ANN index got tombstones + deferred compaction in round 11
-(`pq.remove_from_ann_index`); these pins give the four fingerprint
-artifacts — text MinHash and the tagged media fingerprint index — the
-same takedown semantics via the generic engine in `operators/dedup.py`
-(the per-family media lifecycle is pinned in test_fp_family.py; the
-generic contracts below run on the image family's artifact):
+One engine in `operators/dedup.py` serves the ANN index
+(`pq.remove_from_ann_index` / `compact_ann_index`), the tagged media
+fingerprint index and the MinHash signature index; `_index_layout` is
+the one place that says where an artifact keeps its rows and its
+tombstones (`<path>/codes` + `<path>/tombstones` for ANN, `<path>` +
+`<path>_tombstones` otherwise). The per-family media lifecycle is
+pinned in test_fp_family.py and the ANN search semantics in
+test_pq.py; the contracts below run on the image family's artifact
+and, where marked, on both layouts:
 
 - remove-then-probe == probe-against-rebuilt-without-ids, per tier;
 - the tombstone-vs-reappend contract (a tombstone suppresses its id
   even if re-appended; compaction clears the way);
+- a rebuild clears the old index's tombstones, on both layouts;
 - torn / wrong-family artifacts reject removal with nothing written;
 - compaction is threshold-gated, count-validated, and changes storage
-  but never probe results;
-- the CLI exposes --remove / --compact on dedup_index and fp_index.
+  but never probe or search results; a crash between its two swap
+  renames is restored by `recover_index_swap`;
+- the CLI exposes --remove / --compact on dedup_index, fp_index and
+  ann_index.
 """
 
 from __future__ import annotations
@@ -576,3 +582,159 @@ def test_index_fsck_covers_every_save_writer(spark, tmp_path):
         users.write.parquet(os.path.join(p, table))
     rep = index_fsck(spark, p)
     assert rep["ok"] is False and "no recognizable index metadata" in rep["error"]
+
+
+def _ann_corpus(spark, ids):
+    return spark.createDataFrame(
+        [(i, [float(i), float(i % 3), 1.0, 0.0]) for i in ids],
+        "vec_id long, embedding array<float>",
+    )
+
+
+def _ann_served(spark, path):
+    """Every id a search over all cells serves (k covers the corpus)."""
+    from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
+        search_ann_index,
+    )
+
+    q = _ann_corpus(spark, [0]).withColumnRenamed("vec_id", "query_id")
+    got = search_ann_index(spark, path, q, k=64, nprobe=2)
+    return sorted(r["vec_id"] for r in got.select("vec_id").collect())
+
+
+def _ann_ops(spark):
+    from hospital_stain_tracker_data_pipeline_spark.operators import pq
+    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+        suppress_index_tombstones,
+    )
+
+    def build(path, ids):
+        pq.build_ann_index(
+            _ann_corpus(spark, ids), path, n_clusters=2, m=2, n_codes=4,
+            iters=1,
+        )
+
+    def ids_frame(ids):
+        return spark.createDataFrame([(i,) for i in ids], "vec_id long")
+
+    def live(path):
+        # the suppressed candidate set every search scores (cheaper
+        # than a full search, which the tests run where it matters)
+        codes = spark.read.parquet(os.path.join(path, "codes"))
+        got = suppress_index_tombstones(spark, path, codes, "vec_id")
+        return sorted(r["vec_id"] for r in got.collect())
+
+    return dict(
+        build=build,
+        remove=lambda p, ids: pq.remove_from_ann_index(spark, p, ids_frame(ids)),
+        compact=lambda p, **kw: pq.compact_ann_index(spark, p, **kw),
+        served=lambda p: _ann_served(spark, p),
+        live=live,
+        data=lambda p: os.path.join(p, "codes"),
+        tombs=lambda p: os.path.join(p, "tombstones"),
+    )
+
+
+def _fp_ops(spark):
+    def build(path, ids):
+        save_fp_index(
+            _fp_frame(spark, [(i, i * 16) for i in ids]), path, IMAGE,
+            **PARAMS,
+        )
+
+    def served(path):
+        idx, _ = load_fp_index(spark, path, IMAGE)
+        return sorted(r["media_id"] for r in idx.collect())
+
+    return dict(
+        build=build,
+        remove=lambda p, ids: remove_from_fp_index(
+            spark, p, _ids(spark, ids), IMAGE
+        ),
+        compact=lambda p, **kw: compact_fp_index(spark, p, IMAGE, **kw),
+        served=served,
+        live=served,
+        data=lambda p: p,
+        tombs=lambda p: p + "_tombstones",
+    )
+
+
+@pytest.mark.parametrize("layout", ["ann", "fp"])
+def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout):
+    """The one lifecycle engine, run through each layout's public
+    wrappers: a rebuild clears the old index's tombstones and serves
+    every id again (the ANN tombstones live inside the artifact dir,
+    which a rebuild overwrites piece by piece, so this once failed
+    there), remove suppresses at search/load time, a compaction whose
+    rewrite loses rows is refused with the artifact intact, a clean
+    compaction changes storage but not results, and a crash between
+    the swap renames is reported by fsck and restored by
+    recover_index_swap."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+        index_fsck,
+        recover_index_swap,
+    )
+
+    ops = (_ann_ops if layout == "ann" else _fp_ops)(spark)
+    path = str(tmp_path / layout)
+    data, tombs = ops["data"](path), ops["tombs"](path)
+    ids = list(range(1, 9))
+    ops["build"](path, ids)
+    ops["remove"](path, [3])
+    ops["build"](path, ids)
+    assert not os.path.isdir(tombs)
+    assert ops["served"](path) == ids
+
+    rep = ops["remove"](path, [2, 5])
+    assert (rep["requested"], rep["tombstones_total"], rep["index_rows"]) == (
+        2, 2, 8
+    )
+    live = [1, 3, 4, 6, 7, 8]
+    assert ops["served"](path) == live
+
+    # a rewrite that loses rows fails the count check before any swap
+    real_parquet = DataFrameWriter.parquet
+
+    def lossy(self, p, *a, **k):
+        if p.endswith("_compacting"):
+            return real_parquet(self._df.limit(1).write.mode("overwrite"), p)
+        return real_parquet(self, p, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", lossy)
+    with pytest.raises(ValueError, match="compaction rewrite produced"):
+        ops["compact"](path, force=True)
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+    assert os.path.isdir(tombs) and ops["live"](path) == live
+
+    # a clean compaction folds the tombstones; results are unchanged
+    crep = ops["compact"](path, force=True)
+    assert crep["compacted"] is True
+    assert (crep["index_rows_before"], crep["index_rows_after"]) == (8, 6)
+    assert ops["live"](path) == live
+    for leftover in (tombs, data + "_compacting", data + "_old"):
+        assert not os.path.isdir(leftover)
+
+    # crash between rename(data, old) and rename(compacting, data)
+    ops["remove"](path, [7])
+    real_rename, calls = os.rename, []
+
+    def crash_second(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("simulated crash inside the swap")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_second)
+    with pytest.raises(OSError, match="simulated"):
+        ops["compact"](path, force=True)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.isdir(data) and os.path.isdir(data + "_compacting")
+    fsck = index_fsck(spark, path)
+    assert fsck["kind"] == "crashed_swap" and fsck["ok"] is False
+    assert "recover_index_swap" in fsck["error"]
+    rec = recover_index_swap(path)
+    assert rec == {"recovered": True, "from": "compacting", "path": path}
+    assert not os.path.isdir(tombs) and not os.path.isdir(data + "_old")
+    assert ops["live"](path) == [1, 3, 4, 6, 8]

@@ -691,8 +691,8 @@ def test_ann_index_compact_folds_tombstones(spark, emb, tmp_path):
 
     crep = compact_ann_index(spark, idx, min_ratio=0.1)
     assert crep["compacted"] is True
-    assert crep["codes_rows_before"] == n_all
-    assert crep["codes_rows_after"] == n_all - n_removed
+    assert crep["index_rows_before"] == n_all
+    assert crep["index_rows_after"] == n_all - n_removed
     assert not os.path.isdir(os.path.join(idx, "tombstones"))
     with open(os.path.join(idx, "_INDEX_OK")) as f:
         assert json.load(f)["compactions"] == 1

@@ -292,3 +292,17 @@ def test_stream_sessionize_multibatch_state_crosses_batches(
     }
     assert s == b and len(s) > 0
 
+
+
+def test_stream_ingest_releases_its_batch_cache(spark, staged):
+    """Each micro-batch is validated once into a cache that serves the
+    upsert and both run-log counts; the cache is released before the
+    batch returns, so a long-running stream accumulates no cached
+    frames. Every input row is counted exactly once."""
+    spark.catalog.clearCache()
+    work, input_dir = staged
+    res = stream_ingest_events(spark, input_dir, work)
+    assert res.batches >= 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    n_in = spark.read.parquet(input_dir).count()
+    assert res.rows_loaded + res.rows_rejected == n_in
