@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -2030,6 +2030,29 @@ def _index_layout(path: str) -> tuple[str, str]:
     return p, p + "_tombstones"
 
 
+def _refuse_crashed_swap(path: str, action: str) -> None:
+    """Raise when ``path`` is in the compact-swap crash window: the data
+    dir is missing and a ``_old`` / ``_compacting`` sibling holds the
+    ONLY copy of the index, so rebuilding or appending there would
+    lose it and reading there would fail or serve a partial index.
+    ``recover_index_swap`` restores it."""
+    p = path.rstrip("/")
+    data, _ = _index_layout(p)
+    if os.path.isdir(data):
+        return
+    survivors = [
+        d for d in (data + "_old", data + "_compacting") if os.path.isdir(d)
+    ]
+    if survivors:
+        raise ValueError(
+            f"index data {data} is missing but {survivors} exist — this "
+            "is an interrupted compact swap and a sibling dir holds the "
+            f"only copy of the index; run recover_index_swap({p!r}) "
+            f"before you {action} it (or delete the dirs manually to "
+            "really start from nothing)"
+        )
+
+
 def clear_index_lifecycle_state(path: str) -> None:
     """Drop an index's tombstone and in-flight-compaction dirs — called
     by every REBUILD (``save_fp_index``, ``save_dedup_index``,
@@ -2038,27 +2061,12 @@ def clear_index_lifecycle_state(path: str) -> None:
     suppress legitimately-present ids in the brand-new index (and a
     later compact would physically delete them).
 
-    REFUSES when the data dir itself is absent but its ``_old`` /
-    ``_compacting`` siblings exist: that is the compact-swap crash
-    window where a sibling dir holds the ONLY copy of the index, and
-    deleting it here would destroy the last copy before recovery is
-    possible — run ``recover_index_swap`` first (or remove the dirs
-    manually if the rebuild really should start from nothing)."""
-    p = path.rstrip("/")
-    data, tombs = _index_layout(p)
-    if not os.path.isdir(data):
-        survivors = [
-            d for d in (data + "_old", data + "_compacting")
-            if os.path.isdir(d)
-        ]
-        if survivors:
-            raise ValueError(
-                f"index data {data} is missing but {survivors} exist — "
-                "this is an interrupted compact swap and a sibling dir "
-                "holds the only copy of the index; run recover_index_swap("
-                f"{p!r}) before rebuilding (or delete the dirs manually "
-                "to really start from nothing)"
-            )
+    REFUSES (``_refuse_crashed_swap``) when the data dir itself is
+    absent but its ``_old`` / ``_compacting`` siblings exist: deleting
+    them here would destroy the last copy before recovery is
+    possible."""
+    _refuse_crashed_swap(path, "rebuild")
+    data, tombs = _index_layout(path.rstrip("/"))
     for d in (tombs, data + "_compacting", data + "_old"):
         shutil.rmtree(d, ignore_errors=True)
 
@@ -2122,21 +2130,38 @@ def suppress_index_tombstones(
     return index.join(tomb, id_col, "left_anti")
 
 
+class _TombstoneState(NamedTuple):
+    """The one accounting that remove, compact and ``index_fsck``
+    report, before suppression. ``rows`` have a non-NULL id (the
+    NULL-id sentinel is not a row); ``physical_rows`` count the
+    sentinel too. ``raw`` (the data dir) and ``tomb`` (its distinct
+    tombstone ids, ``None`` without a tombstone dir) are the frames
+    the counts came from, for compact to reuse."""
+
+    raw: DataFrame
+    tomb: DataFrame | None
+    rows: int
+    physical_rows: int
+    tombstones: int
+    ratio: float
+
+
 def _tombstone_state(
     spark: SparkSession, path: str, id_col: str
-) -> tuple[int, int, float]:
-    """``(index rows, distinct tombstones, tombstone ratio)`` of an
-    artifact — physical rows with a non-NULL id (the NULL-id sentinel
-    is not a row), before suppression. The one accounting that
-    remove, compact and ``index_fsck`` report."""
+) -> _TombstoneState:
+    """Read an artifact's data and tombstone dirs once each and count
+    them: one aggregate over the data dir gives both row counts
+    (``count(id_col)`` skips NULLs)."""
     data, tombs = _index_layout(path)
-    n_rows = spark.read.parquet(data).filter(F.col(id_col).isNotNull()).count()
-    n_tomb = (
-        spark.read.parquet(tombs).select(id_col).distinct().count()
-        if os.path.isdir(tombs)
-        else 0
-    )
-    return n_rows, n_tomb, round(n_tomb / n_rows, 6) if n_rows else 0.0
+    raw = spark.read.parquet(data)
+    n_phys, n_rows = raw.agg(F.count(F.lit(1)), F.count(id_col)).first()
+    tomb = None
+    n_tomb = 0
+    if os.path.isdir(tombs):
+        tomb = spark.read.parquet(tombs).select(id_col).distinct()
+        n_tomb = tomb.count()
+    ratio = round(n_tomb / n_rows, 6) if n_rows else 0.0
+    return _TombstoneState(raw, tomb, n_rows, n_phys, n_tomb, ratio)
 
 
 def _artifact_remove(
@@ -2177,13 +2202,13 @@ def _artifact_remove(
     n_req = seen["n"]
     if n_req:
         tomb.write.mode("append").parquet(tombs)
-    n_rows, n_tomb, ratio = _tombstone_state(spark, path, id_col)
+    st = _tombstone_state(spark, path, id_col)
     return {
         "requested": n_req,
-        "tombstones_total": n_tomb,
-        "index_rows": n_rows,
-        "tombstone_ratio": ratio,
-        "compact_recommended": ratio >= compact_ratio_threshold,
+        "tombstones_total": st.tombstones,
+        "index_rows": st.rows,
+        "tombstone_ratio": st.ratio,
+        "compact_recommended": st.ratio >= compact_ratio_threshold,
     }
 
 
@@ -2213,36 +2238,34 @@ def _artifact_compact(
     semi/anti joins). Probe and search results are identical before
     and after — compaction changes storage, never semantics."""
     data, tombs = _index_layout(path)
-    n_rows, n_tomb, ratio = _tombstone_state(spark, path, id_col)
-    if not os.path.isdir(tombs):
+    st = _tombstone_state(spark, path, id_col)
+    if st.tomb is None:
         return {
             "compacted": False,
             "reason": "no tombstones",
-            "index_rows": n_rows,
+            "index_rows": st.rows,
         }
-    if not force and ratio < min_ratio:
+    if not force and st.ratio < min_ratio:
         return {
             "compacted": False,
-            "reason": f"tombstone_ratio {ratio} < min_ratio {min_ratio}",
-            "index_rows": n_rows,
-            "tombstones_total": n_tomb,
-            "tombstone_ratio": ratio,
+            "reason": f"tombstone_ratio {st.ratio} < min_ratio {min_ratio}",
+            "index_rows": st.rows,
+            "tombstones_total": st.tombstones,
+            "tombstone_ratio": st.ratio,
         }
     compacting, old = data + "_compacting", data + "_old"
     if os.path.isdir(compacting):
         shutil.rmtree(compacting)  # leftover from a pre-swap crash
-    raw = spark.read.parquet(data)
-    tomb = spark.read.parquet(tombs).select(id_col).distinct()
-    n_before = raw.count()  # incl. sentinel
-    n_dead = raw.join(tomb, id_col, "left_semi").count()
-    raw.join(tomb, id_col, "left_anti").write.mode("overwrite").parquet(
+    n_dead = st.raw.join(st.tomb, id_col, "left_semi").count()
+    st.raw.join(st.tomb, id_col, "left_anti").write.mode("overwrite").parquet(
         compacting
     )
     n_after = spark.read.parquet(compacting).count()
-    if n_after != n_before - n_dead:
+    n_expected = st.physical_rows - n_dead
+    if n_after != n_expected:
         raise ValueError(
             f"compaction rewrite produced {n_after} rows, expected "
-            f"{n_before} - {n_dead} = {n_before - n_dead} — aborting "
+            f"{st.physical_rows} - {n_dead} = {n_expected} — aborting "
             f"with the original artifact intact (stale files under "
             f"{compacting}?)"
         )
@@ -2254,10 +2277,10 @@ def _artifact_compact(
     shutil.rmtree(tombs)
     return {
         "compacted": True,
-        "index_rows_before": n_rows,
-        "index_rows_after": n_rows - n_dead,
-        "folded_tombstones": n_tomb,
-        "tombstone_ratio": ratio,
+        "index_rows_before": st.rows,
+        "index_rows_after": st.rows - n_dead,
+        "folded_tombstones": st.tombstones,
+        "tombstone_ratio": st.ratio,
     }
 
 
@@ -2468,11 +2491,10 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
                 )
         if index is not None:
             report["live_rows"] = index.count()
-            (
-                report["rows"],
-                report["tombstones"],
-                report["tombstone_ratio"],
-            ) = _tombstone_state(spark, p, id_col)
+            st = _tombstone_state(spark, p, id_col)
+            report["rows"] = st.rows
+            report["tombstones"] = st.tombstones
+            report["tombstone_ratio"] = st.ratio
         report["ok"] = not report["stale_dirs"]
         if report["stale_dirs"]:
             report["error"] = (

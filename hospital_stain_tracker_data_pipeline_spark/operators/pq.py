@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from .dedup import (
     _artifact_compact,
     _artifact_remove,
+    _refuse_crashed_swap,
     clear_index_lifecycle_state,
     fanout,
     materialize,
@@ -722,7 +723,12 @@ def _ann_meta(path: str, action: str) -> dict:
     operation on the artifact reads it first: a missing marker means
     a torn artifact (a build or append did not finish) or no index at
     all, and raises instead of serving a silently-wrong ivf/pq/codes
-    mix."""
+    mix. The marker stays on through remove and compact, so a crash
+    between compact's two swap renames (``codes`` missing, the last
+    copy in ``codes_old`` / ``codes_compacting``) raises here too,
+    naming ``recover_index_swap``: an append there would otherwise
+    write a ``codes`` holding only the delta."""
+    _refuse_crashed_swap(path, action)
     marker = os.path.join(path, "_INDEX_OK")
     if not os.path.exists(marker):
         raise ValueError(
@@ -1073,7 +1079,8 @@ def compact_ann_index(
     change, so the marker stays on; a crash inside the swap leaves
     ``codes`` missing with the last copy in ``codes_old`` or
     ``codes_compacting``, which ``recover_index_swap(path)`` restores
-    (``index_fsck`` reports it as ``crashed_swap``). ``compactions``
+    (``index_fsck`` reports it as ``crashed_swap``; every ANN
+    operation refuses until then). ``compactions``
     is bumped once the swap commits. Single-writer contract (shared
     with append/remove): a concurrent append between the read and the
     swap is NOT detected — serialize lifecycle ops per artifact.

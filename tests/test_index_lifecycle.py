@@ -668,8 +668,8 @@ def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout):
     there), remove suppresses at search/load time, a compaction whose
     rewrite loses rows is refused with the artifact intact, a clean
     compaction changes storage but not results, and a crash between
-    the swap renames is reported by fsck and restored by
-    recover_index_swap."""
+    the swap renames is reported by fsck, refuses an ANN append and is
+    restored by recover_index_swap."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
@@ -685,7 +685,7 @@ def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout):
     ops["remove"](path, [3])
     ops["build"](path, ids)
     assert not os.path.isdir(tombs)
-    assert ops["served"](path) == ids
+    assert ops["live"](path) == ids
 
     rep = ops["remove"](path, [2, 5])
     assert (rep["requested"], rep["tombstones_total"], rep["index_rows"]) == (
@@ -734,6 +734,16 @@ def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout):
     fsck = index_fsck(spark, path)
     assert fsck["kind"] == "crashed_swap" and fsck["ok"] is False
     assert "recover_index_swap" in fsck["error"]
+    if layout == "ann":
+        # the marker stays on through compact: an append into the
+        # half-swapped artifact must refuse, not write a delta-only codes
+        from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
+            append_ann_index,
+        )
+
+        with pytest.raises(ValueError, match="recover_index_swap"):
+            append_ann_index(spark, path, _ann_corpus(spark, [9]))
+        assert not os.path.isdir(data)
     rec = recover_index_swap(path)
     assert rec == {"recovered": True, "from": "compacting", "path": path}
     assert not os.path.isdir(tombs) and not os.path.isdir(data + "_old")
