@@ -2147,13 +2147,15 @@ class _TombstoneState(NamedTuple):
 
 
 def _tombstone_state(
-    spark: SparkSession, path: str, id_col: str
+    spark: SparkSession, path: str, id_col: str, raw: DataFrame | None = None
 ) -> _TombstoneState:
     """Read an artifact's data and tombstone dirs once each and count
     them: one aggregate over the data dir gives both row counts
-    (``count(id_col)`` skips NULLs)."""
+    (``count(id_col)`` skips NULLs). A caller that has read the data
+    dir already passes that frame as ``raw``."""
     data, tombs = _index_layout(path)
-    raw = spark.read.parquet(data)
+    if raw is None:
+        raw = spark.read.parquet(data)
     n_phys, n_rows = raw.agg(F.count(F.lit(1)), F.count(id_col)).first()
     tomb = None
     n_tomb = 0
@@ -2194,7 +2196,8 @@ def _artifact_remove(
     # removes carrying different physical id types (int32 vs int64
     # parquet from different tools) would otherwise mix schemas in the
     # tombstone dir and make every subsequent index load unreadable
-    id_type = spark.read.parquet(data).schema[id_col].dataType
+    raw = spark.read.parquet(data)
+    id_type = raw.schema[id_col].dataType
     tomb, seen = _materialize_observed(
         ids.select(F.col(id_col).cast(id_type).alias(id_col)).distinct(),
         n=F.count(F.lit(1)),
@@ -2202,7 +2205,8 @@ def _artifact_remove(
     n_req = seen["n"]
     if n_req:
         tomb.write.mode("append").parquet(tombs)
-    st = _tombstone_state(spark, path, id_col)
+    # the data dir is unchanged by a remove: its frame is reused
+    st = _tombstone_state(spark, path, id_col, raw)
     return {
         "requested": n_req,
         "tombstones_total": st.tombstones,

@@ -6,25 +6,92 @@ source — lake tables here, fixtures in ``plans``) and returns a
 DataFrame with the endpoint's result shape. No HTTP layer is rebuilt;
 these ARE the query semantics.
 
-All joins to the ``regions`` dimension are broadcast (the dim is ≤ ~50
-rows in the reference's domain; on a cluster this removes the shuffle on
-the fact side entirely).
+A dashboard answer is small by construction: one row per region for a
+date, or one row per date. Each endpoint is one plan whose bounded tail
+runs in a single task, so a request pays for one Spark job, not for the
+scheduling of several:
+
+- the date-filtered slice (one date partition of a date-partitioned
+  table: at most one row per region) and the ``regions`` dimension (at
+  most ``_MAX_REGION_NAMES`` rows, the ingest's bound) are each
+  coalesced to one partition and hash-joined there, so the join, the
+  sort by region, the compare window and the KPI aggregate need no
+  exchange;
+- a scan of a whole table stays parallel and is coalesced only after
+  its aggregate (at most one row per date), before the sort;
+- ``runs_latest`` stays parallel throughout: the run log has no bound.
+
+Questions about dates alone (the ``date=None`` default of the dated
+endpoints, ``available_dates``) are answered from the table's partition
+listing, with no Spark job, when the frame passed in is itself a full
+``LakeTable.read()`` frame of a table partitioned by ``date``
+(``lake.listed_partitions``). Every other frame runs the DataFrame
+aggregate, which stays the specification of the answer.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType
 
 from ..functions.metrics import bed_occ_pct_api, icu_occ_pct
 from ..operators.asof import with_prev_calendar_day
+from .lake import listed_partitions
 
 
 def latest_date(df: DataFrame):
     """Default date = max(date) (main.py:148-152,205-209) — op-agg-max-date."""
     return df.agg(F.max("date").alias("max_date"))
+
+
+def _listed_dates(df: DataFrame) -> list[_dt.date | None] | None:
+    """The distinct ``date`` values of ``df`` from its table's partition
+    listing (the NULL partition as ``None``). ``None`` unless ``df`` is
+    a full ``LakeTable.read()`` frame partitioned by a ``date`` column
+    of type date with every value in the canonical ``YYYY-MM-DD`` form;
+    any other form is left to Spark's own parsing in the aggregate."""
+    listed = listed_partitions(df)
+    if listed is None or listed[0] != "date":
+        return None
+    if not isinstance(df.schema["date"].dataType, DateType):
+        return None
+    values = listed[1]
+    try:
+        dates = [None if v is None else _dt.date.fromisoformat(v) for v in values]
+    except ValueError:
+        return None
+    if any(d is not None and d.isoformat() != v for d, v in zip(dates, values)):
+        return None
+    return dates
+
+
+def _default_date(df: DataFrame):
+    """The ``date=None`` default: ``latest_date``, from the partition
+    listing when ``df`` has one (NULL ignored, as by ``max``)."""
+    dates = _listed_dates(df)
+    if dates is None:
+        return latest_date(df).collect()[0][0]
+    return max((d for d in dates if d is not None), default=None)
+
+
+def _local_frame(df: DataFrame, columns: dict, schema: str) -> DataFrame:
+    """A driver-local relation in ``df``'s session. Built from an Arrow
+    table it runs no Spark job; ``createDataFrame`` over a Python list
+    would run a Python-worker job (≈0.3 s)."""
+    return df.sparkSession.createDataFrame(pa.table(columns), schema=schema)
+
+
+def _with_region_names(rows: DataFrame, regions: DataFrame) -> DataFrame:
+    """``rows`` inner-joined to the region names as ``region``, in one
+    task: both sides coalesced to one partition and hash-joined, so
+    nothing downstream needs an exchange. ``rows`` must be bounded by
+    the region count (one date's slice), ``regions`` is the dimension."""
+    names = regions.select("region_id", F.col("name").alias("region")).coalesce(1)
+    return rows.coalesce(1).hint("shuffle_hash").join(names, "region_id", "inner")
 
 
 def runs_latest(runs: DataFrame, limit: int = 20) -> DataFrame:
@@ -54,12 +121,8 @@ def capacity_latest(
     variant) + op-fn-round.
     """
     if date is None:
-        date = latest_date(capacity).collect()[0][0]
-    joined = capacity.filter(F.col("date") == F.lit(date)).join(
-        F.broadcast(regions.select("region_id", "name").withColumnRenamed("name", "region")),
-        "region_id",
-        "inner",
-    )
+        date = _default_date(capacity)
+    joined = _with_region_names(capacity.filter(F.col("date") == F.lit(date)), regions)
     return joined.select(
         "date",
         "region",
@@ -81,16 +144,9 @@ def metrics_latest(
 ) -> DataFrame:
     """GET /metrics/latest — same shape over metrics_daily (main.py:187-231)."""
     if date is None:
-        date = latest_date(metrics).collect()[0][0]
+        date = _default_date(metrics)
     return (
-        metrics.filter(F.col("date") == F.lit(date))
-        .join(
-            F.broadcast(
-                regions.select("region_id", "name").withColumnRenamed("name", "region")
-            ),
-            "region_id",
-            "inner",
-        )
+        _with_region_names(metrics.filter(F.col("date") == F.lit(date)), regions)
         .select("date", "region", "bed_occ_pct", "icu_occ_pct", "strain_index")
         .orderBy("region")
     )
@@ -107,27 +163,22 @@ def metrics_compare(
     one scan (SURVEY.md §2.3 op-join-asof-prev notes the equivalence).
     The window sees only ``date`` and the day before it: the guard
     needs no other row, and on a date-partitioned table the scan is
-    pruned to those two partitions.
+    pruned to those two partitions. Those two days (at most two rows
+    per region) are coalesced to one partition first, so the window
+    runs without a shuffle.
     """
     if date is None:
-        date = latest_date(metrics).collect()[0][0]
+        date = _default_date(metrics)
     day = F.lit(date).cast("date")
     lagged = with_prev_calendar_day(
-        metrics.filter(F.col("date").between(F.date_sub(day, 1), day)),
+        metrics.filter(F.col("date").between(F.date_sub(day, 1), day)).coalesce(1),
         ["region_id"],
         "date",
         "strain_index",
         "prev_strain_index",
     )
     return (
-        lagged.filter(F.col("date") == F.lit(date))
-        .join(
-            F.broadcast(
-                regions.select("region_id", "name").withColumnRenamed("name", "region")
-            ),
-            "region_id",
-            "inner",
-        )
+        _with_region_names(lagged.filter(F.col("date") == F.lit(date)), regions)
         .select(
             "date",
             "region",
@@ -142,9 +193,29 @@ def metrics_compare(
 def available_dates(metrics: DataFrame, full: bool = False) -> DataFrame:
     """GET /metrics/available-dates — min/max/count-distinct in one agg
     (main.py:298-310) — op-agg-minmax-countd. With ``full``, the sorted
-    distinct date list (op-distinct-sorted, main.py:319-328)."""
+    distinct date list (op-distinct-sorted, main.py:319-328).
+
+    A full ``LakeTable.read()`` frame is answered from its partition
+    listing as a driver-local relation, with the NULL partition exactly
+    as the aggregates treat NULL: skipped by ``min``, ``max`` and
+    ``countDistinct``, and a row of its own (sorted first) in the list."""
+    dates = _listed_dates(metrics)
+    if dates is not None:
+        known = sorted(d for d in dates if d is not None)
+        if full:
+            listed = [None] * (len(known) < len(dates)) + known
+            return _local_frame(metrics, {"date": pa.array(listed, pa.date32())}, "date date")
+        return _local_frame(
+            metrics,
+            {
+                "min_date": pa.array(known[:1] or [None], pa.date32()),
+                "max_date": pa.array(known[-1:] or [None], pa.date32()),
+                "n_dates": pa.array([len(known)], pa.int64()),
+            },
+            "min_date date, max_date date, n_dates bigint not null",
+        )
     if full:
-        return metrics.select("date").distinct().orderBy("date")
+        return metrics.select("date").distinct().coalesce(1).orderBy("date")
     return metrics.agg(
         F.min("date").alias("min_date"),
         F.max("date").alias("max_date"),
@@ -159,6 +230,7 @@ def coverage(metrics: DataFrame, min_rows: int = 1) -> DataFrame:
         metrics.groupBy("date")
         .agg(F.count("id").alias("rows"))
         .filter(F.col("rows") >= min_rows)
+        .coalesce(1)
         .orderBy("date")
     )
 

@@ -29,7 +29,10 @@ environment this would be ``MERGE INTO``; the portable mechanism here:
    while the table's files are unchanged, so a repeated read of an
    untouched table runs no listing or schema-merge job. Reuse is
    checked on every call against a digest of one driver-side walk of
-   the root, which any writer invalidates, ``LakeTable`` or not.
+   the root, which any writer invalidates, ``LakeTable`` or not. The
+   partition values the frame was resolved from are kept with it
+   (``listed_partitions``), so a question about partition values
+   alone needs no scan.
 
 The table does what the pipeline runs and no more: ``exists``, the full
 and scoped ``read``, ``overwrite``, ``upsert`` and a per-partition file
@@ -65,9 +68,9 @@ _SNAPSHOTS_LOCK = threading.Lock()
 
 
 class _Snapshots:
-    """One session's full-read frames, ``{path: (token, frame)}``, and
-    the JVM handles of the walks that validate them and list a table's
-    partitions, resolved once per session.
+    """One session's full-read frames, ``{path: (token, frame,
+    partitions)}``, and the JVM handles of the walks that validate them
+    and list a table's partitions, resolved once per session.
 
     It is kept on the session object, so it ends with its session and
     no other session sees it. A module-level map keyed by session would
@@ -176,14 +179,44 @@ class _Snapshots:
             hit = self.frames.get(key)
         return hit[1] if token is not None and hit and hit[0] == token else None
 
-    def put(self, key, token, frame: DataFrame) -> None:
+    def put(self, key, token, frame: DataFrame, partitions) -> None:
         with _SNAPSHOTS_LOCK:
             self.frames.pop(key, None)
             if token is None:
                 return
-            self.frames[key] = (token, frame)
+            self.frames[key] = (token, frame, partitions)
             while len(self.frames) > _SNAPSHOTS_PER_SESSION:
                 del self.frames[next(iter(self.frames))]
+
+    def partitions(self, frame: DataFrame):
+        """The partitions kept with ``frame`` if it is one of the
+        session's full-read frames (the same object), else ``None``."""
+        with _SNAPSHOTS_LOCK:
+            return next(
+                (hit[2] for hit in self.frames.values() if hit[1] is frame), None
+            )
+
+
+def listed_partitions(frame: DataFrame) -> tuple[str, list[str | None]] | None:
+    """``(partition column, values)`` of the table a full
+    ``LakeTable.read()`` returned ``frame`` for, from the root listing
+    taken when that frame was resolved: one value per partition
+    directory, unescaped, the NULL partition as ``None``. They cost no
+    Spark job. Like the frame's own file list, they are the table as
+    it was when the frame was resolved.
+
+    ``None`` for every other frame: one not returned by ``read()``, a
+    frame derived from one (filtered, projected, joined), one of a
+    table with no directory of its declared partition column, and one
+    the session no longer keeps (a later ``read()`` of a changed table
+    replaces it). The test is identity, not equality.
+
+    A directory is a value whether or not its files hold rows. Every
+    ``LakeTable`` write keeps "no partition without rows": a dynamic
+    partition overwrite creates only partitions it writes rows to, and
+    no operation here empties one."""
+    snapshots = getattr(frame.sparkSession, "_lake_snapshots", None)
+    return None if snapshots is None else snapshots.partitions(frame)
 
 
 class LakeTable:
@@ -246,7 +279,8 @@ class LakeTable:
         upsert, a plain ``df.write`` to the path or an out-of-band delete
         all yield a fresh frame, never one that lists deleted files. Two
         full reads of an unchanged table return the same frame object, so
-        a self-join aliases each side.
+        a self-join aliases each side. The partition values listed at
+        resolution stay with the frame (``listed_partitions``).
 
         The scoped form lists the root's names once, in the JVM, and
         loads just the matching directories, so its Py4J calls are a
@@ -273,7 +307,13 @@ class LakeTable:
                 frame = self.spark.read.option("mergeSchema", "true").parquet(
                     self.path
                 )
-                snapshots.put(key, token, frame)
+                values = [
+                    None if v == self._NULL_PARTITION else v
+                    for v in self._partition_dirs()
+                ]
+                snapshots.put(
+                    key, token, frame, (self.partition_col, values) if values else None
+                )
             return frame
         dirs = self._partition_dirs()
         wanted = {self._NULL_PARTITION if v is None else str(v) for v in partitions}

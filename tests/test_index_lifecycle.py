@@ -659,6 +659,27 @@ def _fp_ops(spark):
     )
 
 
+# Spark jobs of one remove of two ids from an 8-row index, as measured
+# with the data dir read (and its schema inferred) once; reading it a
+# second time for the counts ran 11 (ANN) and 14 (fp, whose count also
+# holds the loader's validation of the artifact).
+REMOVE_JOB_BUDGET = {"ann": 10, "fp": 13}
+
+
+def _jobs_in_group(spark, group, fn):
+    """``(fn(), number of Spark jobs it ran)``, counted through a job group."""
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+        sc.setLocalProperty("spark.job.description", outer)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("layout", ["ann", "fp"])
 def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout):
     """The one lifecycle engine, run through each layout's public
@@ -669,7 +690,7 @@ def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout):
     rewrite loses rows is refused with the artifact intact, a clean
     compaction changes storage but not results, and a crash between
     the swap renames is reported by fsck, refuses an ANN append and is
-    restored by recover_index_swap."""
+    restored by recover_index_swap. A remove stays in its job budget."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
@@ -687,10 +708,13 @@ def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout):
     assert not os.path.isdir(tombs)
     assert ops["live"](path) == ids
 
-    rep = ops["remove"](path, [2, 5])
+    rep, n_jobs = _jobs_in_group(
+        spark, f"lifecycle-remove-{layout}", lambda: ops["remove"](path, [2, 5])
+    )
     assert (rep["requested"], rep["tombstones_total"], rep["index_rows"]) == (
         2, 2, 8
     )
+    assert n_jobs <= REMOVE_JOB_BUDGET[layout], n_jobs
     live = [1, 3, 4, 6, 7, 8]
     assert ops["served"](path) == live
 
