@@ -1968,6 +1968,20 @@ def load_fp_index(
     revision. Also reads the family's legacy pre-tag layout (the
     image tier's ``_phash_algo``/``_phash_size`` columns), translating
     those columns to params."""
+    df, params = _read_fp_artifact(spark, path, family)
+    index = df.select("media_id", family.hash_col).filter(
+        F.col("media_id").isNotNull()  # drop the empty-safety sentinel
+    )
+    index = suppress_index_tombstones(spark, path, index, "media_id")
+    return index, params
+
+
+def _read_fp_artifact(
+    spark: SparkSession, path: str, family: FingerprintFamily
+) -> tuple[DataFrame, dict]:
+    """``(artifact rows, params)`` of a ``family`` index, read once and
+    validated as ``load_fp_index`` documents, before any tombstone
+    suppression."""
     df = spark.read.parquet(path)
     meta = [c for c, _ in family.legacy_cols]  # the pre-tag layout
     if "_fp_tag" in df.columns or not meta or not set(meta) <= set(df.columns):
@@ -1994,11 +2008,7 @@ def load_fp_index(
         params = family.params(
             **{p: tags[0][c] for c, p in family.legacy_cols}
         )
-    index = df.select("media_id", family.hash_col).filter(
-        F.col("media_id").isNotNull()  # drop the empty-safety sentinel
-    )
-    index = suppress_index_tombstones(spark, path, index, "media_id")
-    return index, params
+    return df, params
 
 
 # ---------------------------------------------------------------------------
@@ -2172,10 +2182,13 @@ def _artifact_remove(
     ids: DataFrame,
     id_col: str,
     compact_ratio_threshold: float = 0.1,
+    raw: DataFrame | None = None,
 ) -> dict:
     """Tombstone ``ids`` against an ALREADY-VALIDATED index artifact
     (the public wrappers validate the artifact first, so a torn or
-    wrong-family artifact rejects before anything is written). The
+    wrong-family artifact rejects before anything is written; a
+    wrapper whose validation read the data dir passes that frame as
+    ``raw``, so the dir is read and its schema inferred once). The
     ids are distinct-ed and snapshot-pinned (localCheckpoint, which
     also counts them) before the append — a broken producer fails
     here with the artifact untouched. Unknown ids tombstone
@@ -2196,7 +2209,8 @@ def _artifact_remove(
     # removes carrying different physical id types (int32 vs int64
     # parquet from different tools) would otherwise mix schemas in the
     # tombstone dir and make every subsequent index load unreadable
-    raw = spark.read.parquet(data)
+    if raw is None:
+        raw = spark.read.parquet(data)
     id_type = raw.schema[id_col].dataType
     tomb, seen = _materialize_observed(
         ids.select(F.col(id_col).cast(id_type).alias(id_col)).distinct(),
@@ -2300,10 +2314,10 @@ def remove_from_fp_index(
     rewrite to ``compact_fp_index``. The artifact is validated as a
     ``family`` index first — removing under the wrong family is
     rejected with nothing written, same as probing under it."""
-    load_fp_index(spark, path, family)
+    raw, _ = _read_fp_artifact(spark, path, family)
     return _artifact_remove(
         spark, path, ids, "media_id",
-        compact_ratio_threshold=compact_ratio_threshold,
+        compact_ratio_threshold=compact_ratio_threshold, raw=raw,
     )
 
 

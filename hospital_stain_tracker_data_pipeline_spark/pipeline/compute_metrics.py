@@ -12,7 +12,6 @@ everything every run — an anti-pattern at 100 TB).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from collections.abc import Sequence
 
@@ -20,8 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.metrics import bed_occ_pct_etl, icu_occ_pct, strain_index
-from ..sources.sinks import append_run_log, new_run_id, run_log_row, utcnow
-from .lake import LakeTable
+from ..sources.sinks import logged_run, new_run_id
+from .lake import lake_table
 
 
 @dataclass
@@ -73,19 +72,9 @@ def compute_metrics(
     mode); the default recomputes all history like the reference.
     """
     run_id = new_run_id()
-    started = utcnow()
-    runs_path = os.path.join(lake_dir, "pipeline_runs")
-    append_run_log(
-        spark, runs_path, run_log_row(run_id, source, "running", started)
-    )
-    try:
-        bronze = LakeTable(
-            spark,
-            os.path.join(lake_dir, "capacity_daily"),
-            keys=["date", "region_id"],
-            partition_col="date",
-            version_col="created_at",
-        )
+    runs_path = lake_table(spark, lake_dir, "pipeline_runs").path
+    with logged_run(spark, runs_path, run_id, source) as counts:
+        bronze = lake_table(spark, lake_dir, "capacity_daily")
         if dates is None:
             # a lake whose every batch so far was rejected has no bronze
             # rows to infer a schema from: 0 rows, like an absent date
@@ -96,30 +85,11 @@ def compute_metrics(
                 capacity = capacity.withColumn("date", F.col("date").cast("date"))
         n = 0  # stays 0 when bronze holds none of the rows asked for
         if capacity is not None:
-            silver = LakeTable(
-                spark,
-                os.path.join(lake_dir, "metrics_daily"),
-                keys=["date", "region_id"],
-                partition_col="date",
-                version_col="created_at",
-            )
             # the upsert's observed batch count is the report: after a
             # full recompute silver's keys are bronze's keys, so it is
             # also silver's row count
-            n = silver.upsert(metrics_from_capacity(capacity, run_id))
-        append_run_log(
-            spark,
-            runs_path,
-            run_log_row(
-                run_id, source, "success", started, utcnow(),
-                rows_in=n, rows_loaded=n,
-            ),
-        )
+            n = lake_table(spark, lake_dir, "metrics_daily").upsert(
+                metrics_from_capacity(capacity, run_id)
+            )
+        counts.update(rows_in=n, rows_loaded=n)
         return MetricsResult(run_id, n, n)
-    except Exception as e:
-        append_run_log(
-            spark,
-            runs_path,
-            run_log_row(run_id, source, "failed", started, utcnow(), notes=f"Error: {e}"),
-        )
-        raise

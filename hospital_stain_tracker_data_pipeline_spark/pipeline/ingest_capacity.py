@@ -35,14 +35,8 @@ from ..operators.validate import (
 )
 from ..session import _materialize_observed, local_rows_df
 from ..sources.csv_source import read_hhs_csv
-from ..sources.sinks import (
-    append_run_log,
-    new_run_id,
-    run_log_row,
-    utcnow,
-    write_rejects_csv,
-)
-from .lake import LakeTable
+from ..sources.sinks import logged_run, new_run_id, write_rejects_csv
+from .lake import LakeTable, lake_table
 
 # Most distinct region names a batch may bring and the region dimension
 # may hold: both sets are collected to the driver. The reference serves
@@ -82,16 +76,19 @@ def parse_and_validate(raw: DataFrame) -> DataFrame:
 
 
 def get_or_create_regions(
-    spark: SparkSession, names: set[str], regions_table: LakeTable
+    spark: SparkSession,
+    names: set[str],
+    regions_table: LakeTable,
+    population: int | None = None,
 ) -> dict[str, str]:
     """Dimension get-or-create as a set operation (op-join-lookup-dim).
 
     ``names`` are the batch's accepted region names. The dimension's
     ``(name, region_id)`` pairs are collected once; names it lacks get
-    fresh UUIDs and are appended, and a batch that brings none leaves
-    the dimension's files alone. Returns ``{name: region_id}`` for the
-    whole dimension, which is small (≤ ``_MAX_REGION_NAMES``, checked
-    before anything is written).
+    fresh UUIDs and ``population`` and are appended, and a batch that
+    brings none leaves the dimension's files alone. Returns
+    ``{name: region_id}`` for the whole dimension, which is small
+    (≤ ``_MAX_REGION_NAMES``, checked before anything is written).
     """
     existing = regions_table.read() if regions_table.exists() else None
     ids = {} if existing is None else dict(existing.select("name", "region_id").collect())
@@ -107,7 +104,7 @@ def get_or_create_regions(
     new_regions = local_rows_df(spark, [(n,) for n in new_names], "name string").select(
         F.expr("uuid()").alias("region_id"),
         F.col("name"),
-        F.lit(None).cast("long").alias("population"),
+        F.lit(population).cast("long").alias("population"),
         F.current_timestamp().alias("created_at"),
     )
     dim = new_regions if existing is None else existing.unionByName(new_regions)
@@ -127,87 +124,57 @@ def ingest_capacity_csv(
 ) -> IngestResult:
     """End-to-end ingest of one CSV batch into the bronze table."""
     run_id = new_run_id()
-    started = utcnow()
-    runs_path = os.path.join(lake_dir, "pipeline_runs")
-    append_run_log(
-        spark,
-        runs_path,
-        run_log_row(run_id, source, "running", started, notes=f"Input file: {input_path}"),
-    )
+    runs_path = lake_table(spark, lake_dir, "pipeline_runs").path
     checked = None
     try:
-        raw = read_hhs_csv(spark, input_path)
-        reason = F.col(REJECT_REASON)
-        # One scan of the input fills the cache that serves both
-        # branches, and yields the counts and the accepted region
-        # names on the way.
-        checked, seen = _materialize_observed(
-            parse_and_validate(raw),
-            cache=True,
-            accepted=F.count_if(reason.isNull()),
-            rejected=F.count_if(reason.isNotNull()),
-            names=F.collect_set(F.when(reason.isNull(), F.col("region"))),
-        )
-        n_acc, n_rej = seen["accepted"], seen["rejected"]
-        accepted, rejected = split_on_reason(checked)
+        with logged_run(
+            spark, runs_path, run_id, source, notes=f"Input file: {input_path}"
+        ) as counts:
+            raw = read_hhs_csv(spark, input_path)
+            reason = F.col(REJECT_REASON)
+            # One scan of the input fills the cache that serves both
+            # branches, and yields the counts and the accepted region
+            # names on the way.
+            checked, seen = _materialize_observed(
+                parse_and_validate(raw),
+                cache=True,
+                accepted=F.count_if(reason.isNull()),
+                rejected=F.count_if(reason.isNotNull()),
+                names=F.collect_set(F.when(reason.isNull(), F.col("region"))),
+            )
+            n_acc, n_rej = seen["accepted"], seen["rejected"]
+            accepted, rejected = split_on_reason(checked)
 
-        regions_table = LakeTable(
-            spark,
-            os.path.join(lake_dir, "regions"),
-            keys=["name"],
-            partition_col="name",
-            version_col=None,
-        )
-        ids = get_or_create_regions(spark, set(seen["names"]), regions_table)
-
-        rejects_path = None
-        if n_rej:
-            rejects_path = write_rejects_csv(
-                rejected, rejects_dir or os.path.join(lake_dir, "rejects"), run_id
+            ids = get_or_create_regions(
+                spark, set(seen["names"]), lake_table(spark, lake_dir, "regions")
             )
 
-        # the dimension is on the driver already, so the lookup is a
-        # literal map in the projection: no broadcast job
-        region_ids = F.create_map(
-            *[F.lit(v) for pair in ids.items() for v in pair]
-        ).cast("map<string,string>")
-        capacity = accepted.select(
-            F.expr("uuid()").alias("id"),
-            F.col("date"),
-            region_ids[F.col("region")].alias("region_id"),
-            F.col("total_beds").cast("int").alias("total_beds"),
-            F.col("occupied_beds").cast("int").alias("occupied_beds"),
-            F.col("icu_beds").cast("int").alias("icu_beds"),
-            F.col("icu_occupied").cast("int").alias("icu_occupied"),
-            F.lit(run_id).alias("source_run_id"),
-            F.current_timestamp().alias("created_at"),
-        )
-        bronze = LakeTable(
-            spark,
-            os.path.join(lake_dir, "capacity_daily"),
-            keys=["date", "region_id"],
-            partition_col="date",
-            version_col="created_at",
-        )
-        bronze.upsert(capacity)
+            rejects_path = None
+            if n_rej:
+                rejects_path = write_rejects_csv(
+                    rejected, rejects_dir or os.path.join(lake_dir, "rejects"), run_id
+                )
 
-        append_run_log(
-            spark,
-            runs_path,
-            run_log_row(
-                run_id, source, "success", started, utcnow(),
-                rows_in=n_acc + n_rej, rows_loaded=n_acc, rows_rejected=n_rej,
-                notes=f"Input file: {input_path}",
-            ),
-        )
-        return IngestResult(run_id, n_acc + n_rej, n_acc, n_rej, rejects_path)
-    except Exception as e:  # run-log failure path (ingest_capacity.py:213-224)
-        append_run_log(
-            spark,
-            runs_path,
-            run_log_row(run_id, source, "failed", started, utcnow(), notes=f"Error: {e}"),
-        )
-        raise
+            # the dimension is on the driver already, so the lookup is a
+            # literal map in the projection: no broadcast job
+            region_ids = F.create_map(
+                *[F.lit(v) for pair in ids.items() for v in pair]
+            ).cast("map<string,string>")
+            capacity = accepted.select(
+                F.expr("uuid()").alias("id"),
+                F.col("date"),
+                region_ids[F.col("region")].alias("region_id"),
+                F.col("total_beds").cast("int").alias("total_beds"),
+                F.col("occupied_beds").cast("int").alias("occupied_beds"),
+                F.col("icu_beds").cast("int").alias("icu_beds"),
+                F.col("icu_occupied").cast("int").alias("icu_occupied"),
+                F.lit(run_id).alias("source_run_id"),
+                F.current_timestamp().alias("created_at"),
+            )
+            lake_table(spark, lake_dir, "capacity_daily").upsert(capacity)
+
+            counts.update(rows_in=n_acc + n_rej, rows_loaded=n_acc, rows_rejected=n_rej)
+            return IngestResult(run_id, n_acc + n_rej, n_acc, n_rej, rejects_path)
     finally:
         # on every path: a failed batch must not pin its input for the
         # rest of the session

@@ -38,10 +38,17 @@ The table does what the pipeline runs and no more: ``exists``, the full
 and scoped ``read``, ``overwrite``, ``upsert`` and a per-partition file
 count. It has no compaction or retention operation; the storage layout
 section of SCALE.md says where those belong.
+
+The lake's layout is declared here once: ``LAKE_TABLES`` maps every
+table the package writes to its natural key, partition column and
+version column, and ``lake_table`` opens one by name under a lake
+directory. The ingest, the metrics job, the seed, the stream ingest and
+the CLI all open their tables through it.
 """
 
 from __future__ import annotations
 
+import os
 import threading
 from collections.abc import Iterable, Sequence
 from urllib.parse import unquote
@@ -415,6 +422,28 @@ class LakeTable:
         }
 
 
+# table -> LakeTable keywords, as the pipeline writes each table. The
+# regions and pipeline_runs partition columns are declared for readers
+# (``listed_partitions``); neither table is written partitioned.
+LAKE_TABLES: dict[str, dict] = {
+    "capacity_daily": dict(
+        keys=["date", "region_id"], partition_col="date", version_col="created_at"
+    ),
+    "metrics_daily": dict(
+        keys=["date", "region_id"], partition_col="date", version_col="created_at"
+    ),
+    "regions": dict(keys=["name"], partition_col="name", version_col=None),
+    "pipeline_runs": dict(keys=["run_id"], partition_col="run_id", version_col=None),
+    "events_clean": dict(keys=["event_id"], partition_col="event_date", version_col="ts"),
+}
+
+
+def lake_table(spark: SparkSession, lake_dir: str, name: str) -> LakeTable:
+    """The lake table ``name`` under ``lake_dir``, laid out as
+    ``LAKE_TABLES`` declares it."""
+    return LakeTable(spark, os.path.join(lake_dir, name), **LAKE_TABLES[name])
+
+
 def _zorder_double(df: DataFrame, col: str):
     """A double-valued projection of a Z-order column, or raise: Z-order
     needs a total order with meaningful min/max file stats, so numeric,
@@ -539,12 +568,11 @@ def file_skipping_report(path: str, predicates: dict) -> dict:
     date columns). Missing stats on any predicate column makes a file
     unskippable (the planner's conservative default)."""
     import glob as _glob
-    import os as _os
 
     import pyarrow.parquet as _pq
 
     files = sorted(
-        _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
+        _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
     )
     if not files:
         raise ValueError(f"no parquet files under {path}")

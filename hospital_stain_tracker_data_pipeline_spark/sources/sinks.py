@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -95,6 +97,44 @@ def append_run_log(spark: SparkSession, path: str, row: Row) -> None:
             raise OSError(f"run log: could not commit {name} under {path}")
     except BaseException:
         fs.delete(tmp, False)
+        raise
+
+
+@contextmanager
+def logged_run(
+    spark: SparkSession,
+    path: str,
+    run_id: str,
+    source: str,
+    notes: str | None = None,
+) -> Iterator[dict]:
+    """The run-log lifecycle of one job (the reference's
+    ingest_capacity.py:85-96,195-224): a ``running`` row on entry, then
+    ``success`` with the counts the body put in the yielded dict
+    (``rows_in``, ``rows_loaded``, ``rows_rejected``), or ``failed``
+    with ``Error: <exception>`` when the body raises, which re-raises.
+    ``notes`` go on the running and the success row. A failure to
+    write the success row is logged as a failed run too."""
+    started = utcnow()
+    append_run_log(
+        spark, path, run_log_row(run_id, source, "running", started, notes=notes)
+    )
+    counts: dict = {}
+    try:
+        yield counts
+        append_run_log(
+            spark,
+            path,
+            run_log_row(
+                run_id, source, "success", started, utcnow(), notes=notes, **counts
+            ),
+        )
+    except Exception as e:
+        append_run_log(
+            spark,
+            path,
+            run_log_row(run_id, source, "failed", started, utcnow(), notes=f"Error: {e}"),
+        )
         raise
 
 

@@ -29,7 +29,7 @@ from ..operators.validate import (
     reject_reason_column,
     split_on_reason,
 )
-from ..pipeline.lake import LakeTable
+from ..pipeline.lake import lake_table
 from ..session import _materialize_observed, local_rows_df
 from ..sources.sinks import append_run_log, new_run_id, run_log_row, utcnow
 from ..sources.tables import normalize_event_ts
@@ -122,18 +122,10 @@ def stream_ingest_events(
     ``<lake_dir>/events_clean``. Re-running with the same checkpoint is
     a no-op (exactly-once); re-running without one is still idempotent
     thanks to the natural-key merge (op-stream-replay)."""
-    table_path = os.path.join(lake_dir, "events_clean")
-    runs_path = os.path.join(lake_dir, "pipeline_runs")
+    table = lake_table(spark, lake_dir, "events_clean")
+    runs_path = lake_table(spark, lake_dir, "pipeline_runs").path
     checkpoint_dir = checkpoint_dir or os.path.join(lake_dir, "_checkpoints", "events")
-    result = StreamIngestResult(table_path=table_path)
-
-    table = LakeTable(
-        spark,
-        table_path,
-        keys=["event_id"],
-        partition_col="event_date",
-        version_col="ts",
-    )
+    result = StreamIngestResult(table_path=table.path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         run_id = new_run_id()

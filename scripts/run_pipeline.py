@@ -54,25 +54,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hospital_stain_tracker_data_pipeline_spark import pipeline
 from hospital_stain_tracker_data_pipeline_spark.pipeline import api_queries as api
-from hospital_stain_tracker_data_pipeline_spark.pipeline.lake import LakeTable
+from hospital_stain_tracker_data_pipeline_spark.pipeline.lake import lake_table
 from hospital_stain_tracker_data_pipeline_spark.session import get_spark
-
-# lake table -> (natural key, partition column), as the pipeline writes them
-_LAKE_TABLES = {
-    "capacity_daily": (["date", "region_id"], "date"),
-    "metrics_daily": (["date", "region_id"], "date"),
-    "regions": (["name"], "name"),
-    "pipeline_runs": (["run_id"], "run_id"),
-}
 
 
 def _read(spark, lake_dir: str, table: str):
     """The whole table as the dashboard reads it: merged schema, and
     date questions answered from the partition listing."""
-    keys, partition_col = _LAKE_TABLES[table]
-    return LakeTable(
-        spark, os.path.join(lake_dir, table), keys=keys, partition_col=partition_col
-    ).read()
+    return lake_table(spark, lake_dir, table).read()
 
 
 def cmd_ingest(args) -> None:

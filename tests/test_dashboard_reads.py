@@ -22,6 +22,7 @@ from hospital_stain_tracker_data_pipeline_spark.pipeline import (
 )
 from hospital_stain_tracker_data_pipeline_spark.pipeline.lake import (
     LakeTable,
+    lake_table,
     listed_partitions,
 )
 
@@ -33,13 +34,8 @@ REGIONS = ["CA", "NY", "TX"]
 START = dt.date(2026, 1, 1)
 N_DATES = 12
 
-# table -> (natural key, partition column), as the pipeline lays the lake out
-TABLES = {
-    "capacity_daily": (["date", "region_id"], "date"),
-    "metrics_daily": (["date", "region_id"], "date"),
-    "regions": (["name"], "name"),
-    "pipeline_runs": (["run_id"], "run_id"),
-}
+# the tables a dashboard reads
+DASHBOARD_TABLES = ("capacity_daily", "metrics_daily", "regions", "pipeline_runs")
 
 
 def _csv(path, days):
@@ -63,11 +59,6 @@ def base_lake(spark, tmp_path_factory):
     return lake_dir
 
 
-def _table(spark, lake_dir, name):
-    keys, part = TABLES[name]
-    return LakeTable(spark, os.path.join(lake_dir, name), keys=keys, partition_col=part)
-
-
 def _request(spark, lake_dir, kind, arg):
     """One dashboard request, its tables opened as the dashboard opens
     them; returns the answer frame. ``arg`` is the date of a dated kind
@@ -75,7 +66,7 @@ def _request(spark, lake_dir, kind, arg):
     ``available_dates``."""
 
     def read(name):
-        return _table(spark, lake_dir, name).read()
+        return lake_table(spark, lake_dir, name).read()
 
     if kind == "capacity_latest":
         return api_queries.capacity_latest(read("capacity_daily"), read("regions"), arg)
@@ -113,8 +104,8 @@ def test_dashboard_request_job_budget(spark, base_lake):
     """Counter tripwire: every request kind, with a date and with the
     ``date=None`` default, stays in its job budget."""
     sc = spark.sparkContext
-    for name in TABLES:  # resolve each table once, as a warm dashboard has
-        _table(spark, base_lake, name).read()
+    for name in DASHBOARD_TABLES:  # resolve each table once, as a warm dashboard has
+        lake_table(spark, base_lake, name).read()
     day = START + dt.timedelta(N_DATES - 3)
     requests = [(kind, d) for kind in DATED for d in (day, None)]
     requests += [("available_dates", "summary"), ("available_dates", "full")]
@@ -165,7 +156,7 @@ def _assert_listing_is_the_aggregate(spark, lake_dir):
     serves, equal those over plain ``spark.read.parquet`` frames of the
     same paths, which run the aggregates; returns them."""
     names = ("metrics_daily", "capacity_daily", "regions")
-    snap = {n: _table(spark, lake_dir, n).read() for n in names}
+    snap = {n: lake_table(spark, lake_dir, n).read() for n in names}
     for name in ("metrics_daily", "capacity_daily"):
         assert listed_partitions(snap[name]) is not None
     plain = {
@@ -202,7 +193,7 @@ def test_listing_answers_equal_the_aggregates(spark, base_lake, tmp_path):
     assert all(r.prev_strain_index is not None for r in got["metrics_compare"])
 
     for name in ("metrics_daily", "capacity_daily"):
-        t = _table(spark, lake_dir, name)
+        t = lake_table(spark, lake_dir, name)
         t.upsert(t.read().limit(1).withColumn("date", F.lit(None).cast("date")))
     assert os.path.isdir(
         os.path.join(lake_dir, "metrics_daily", f"date={LakeTable._NULL_PARTITION}")
@@ -213,8 +204,8 @@ def test_listing_answers_equal_the_aggregates(spark, base_lake, tmp_path):
     assert len(got["available_dates_full"]) == N_DATES + 2
     assert {r.date for r in got["metrics_latest"]} == {added}
 
-    metrics = _table(spark, lake_dir, "metrics_daily").read()
-    regions = _table(spark, lake_dir, "regions").read()
+    metrics = lake_table(spark, lake_dir, "metrics_daily").read()
+    regions = lake_table(spark, lake_dir, "regions").read()
     older = metrics.filter(F.col("date") < F.lit(added))
     assert listed_partitions(older) is None
     assert api_queries.available_dates(older).collect()[0] == (START, last, N_DATES)

@@ -105,8 +105,8 @@ def test_weekly_batch_job_budget(spark, tmp_path, monkeypatch):
 
         return run
 
-    monkeypatch.setattr(ingest_mod, "append_run_log", grouped("run_log", append_run_log))
-    monkeypatch.setattr(metrics_mod, "append_run_log", grouped("run_log", append_run_log))
+    # both jobs write their run-log rows through the one lifecycle in sinks
+    monkeypatch.setattr(sinks, "append_run_log", grouped("run_log", append_run_log))
     monkeypatch.setattr(LakeTable, "upsert", grouped("upsert", LakeTable.upsert))
 
     def batch():
@@ -343,6 +343,28 @@ def test_region_name_bound_raises_before_any_write(spark, tmp_path, monkeypatch)
     assert os.listdir(lake_dir) == ["pipeline_runs"]
     runs = spark.read.parquet(os.path.join(lake_dir, "pipeline_runs"))
     assert sorted(r.status for r in runs.collect()) == ["failed", "running"]
+
+
+def test_failed_metrics_run_logs_its_failure(spark, tmp_path, monkeypatch):
+    """A metrics run whose body raises leaves its running and failed
+    rows in the run log, the failed one noting the error, and the
+    exception reaches the caller."""
+    lake_dir = str(tmp_path / "lake")
+    ingest_capacity_csv(spark, _csv(tmp_path / "b.csv", range(2)), "b", lake_dir)
+
+    def failing(capacity, run_id=None):
+        raise RuntimeError("derivation failed")
+
+    monkeypatch.setattr(metrics_mod, "metrics_from_capacity", failing)
+    with pytest.raises(RuntimeError, match="derivation failed"):
+        compute_metrics(spark, lake_dir)
+    runs = spark.read.parquet(os.path.join(lake_dir, "pipeline_runs"))
+    rows = runs.filter(F.col("source") == "metrics-job").collect()
+    assert len({r.run_id for r in rows}) == 1
+    assert sorted(r.status for r in rows) == ["failed", "running"]
+    [failed] = [r for r in rows if r.status == "failed"]
+    assert failed.notes == "Error: derivation failed"
+    assert not os.path.exists(os.path.join(lake_dir, "metrics_daily"))
 
 
 def test_metrics_rows_in_is_the_silver_row_count(spark, tmp_path):

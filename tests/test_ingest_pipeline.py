@@ -131,6 +131,28 @@ def test_seed_lake_idempotent(spark, tmp_path):
     assert runs.filter(F.col("source") == "manual_seed").count() == 2
 
 
+def test_seed_keeps_the_ingested_dimension_of_a_uri_lake(spark, tmp_path):
+    """Seeding a lake named by a ``file://`` URI adds "Test Region" to
+    the dimension an ingest wrote there and keeps every ingested
+    region, so every bronze ``region_id`` still resolves. The seed once
+    decided with a local-path check that no dimension existed at a URI
+    and overwrote it with "Test Region" alone."""
+    from hospital_stain_tracker_data_pipeline_spark.pipeline.seed import seed_lake
+
+    rows = [["2026-01-01", r, 100, 50, 10, 5] for r in ("AA", "BB", "CC")]
+    csv_path = _write_csv(str(tmp_path / "three.csv"), rows)
+    lake_dir = "file://" + str(tmp_path / "lake")
+    ingest_capacity_csv(spark, csv_path, "three", lake_dir)
+    seed_lake(spark, lake_dir)
+
+    regions = spark.read.parquet(os.path.join(lake_dir, "regions")).collect()
+    assert sorted(r.name for r in regions) == ["AA", "BB", "CC", "Test Region"]
+    assert {r.name: r.population for r in regions}["Test Region"] == 1_000_000
+    bronze = spark.read.parquet(os.path.join(lake_dir, "capacity_daily"))
+    assert bronze.count() == 4
+    assert {r.region_id for r in bronze.collect()} <= {r.region_id for r in regions}
+
+
 def test_ingest_counts(spark, lake):
     res = lake["ingest"]
     assert res.rows_in == len(GOOD_ROWS) + len(REJECT_CASES)
