@@ -15,8 +15,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-import shutil
 from typing import TYPE_CHECKING, NamedTuple
 
 import numpy as np
@@ -26,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint64_hex, normalized_text, word_shingles
+from ..session import fs_delete, fs_exists, fs_isdir, fs_isfile, fs_rename
 
 if TYPE_CHECKING:
     from .fingerprint import FingerprintFamily
@@ -734,6 +733,18 @@ def load_dedup_index(spark, path: str):
     from the artifact's recorded ``_mh_id_col`` — the caller never
     re-supplies it. Fails loudly on a parameterless parquet or an
     artifact mixing parameter sets."""
+    df, num_hashes, k, id_col = _read_dedup_artifact(spark, path)
+    index = df.drop("_mh_num_hashes", "_mh_k", "_mh_id_col").filter(
+        F.col(id_col).isNotNull()  # drop the empty-safety sentinel
+    )
+    index = suppress_index_tombstones(spark, path, index, id_col)
+    return index, num_hashes, k
+
+
+def _read_dedup_artifact(spark, path: str) -> tuple[DataFrame, int, int, str]:
+    """``(artifact rows, num_hashes, k, id column)`` of a MinHash
+    index, read once and validated as ``load_dedup_index`` documents,
+    before any tombstone suppression."""
     df = spark.read.parquet(path)
     needed = {"_mh_num_hashes", "_mh_k", "_mh_id_col"}
     if not needed.issubset(df.columns):
@@ -760,11 +771,7 @@ def load_dedup_index(spark, path: str):
             f"{path} records num_hashes={num_hashes} k={k} "
             f"id_col={id_col!r} — corrupt artifact"
         )
-    index = df.drop("_mh_num_hashes", "_mh_k", "_mh_id_col").filter(
-        F.col(id_col).isNotNull()  # drop the empty-safety sentinel
-    )
-    index = suppress_index_tombstones(spark, path, index, id_col)
-    return index, num_hashes, k
+    return df, num_hashes, k, id_col
 
 
 def dedup_pairs_against_corpus(
@@ -2035,9 +2042,14 @@ def _index_layout(path: str) -> tuple[str, str]:
     tombstones in a sibling ``<path>_tombstones``. The compaction swap
     siblings ``_compacting`` / ``_old`` follow the data dir."""
     p = path.rstrip("/")
-    if any(os.path.exists(os.path.join(p, e)) for e in _ANN_ENTRIES):
-        return os.path.join(p, "codes"), os.path.join(p, "tombstones")
+    if any(fs_exists(f"{p}/{e}") for e in _ANN_ENTRIES):
+        return f"{p}/codes", f"{p}/tombstones"
     return p, p + "_tombstones"
+
+
+def _swap_siblings(data: str) -> list[str]:
+    """The compact-swap sibling dirs of ``data`` that exist."""
+    return [d for d in (data + "_compacting", data + "_old") if fs_isdir(d)]
 
 
 def _refuse_crashed_swap(path: str, action: str) -> None:
@@ -2048,11 +2060,9 @@ def _refuse_crashed_swap(path: str, action: str) -> None:
     ``recover_index_swap`` restores it."""
     p = path.rstrip("/")
     data, _ = _index_layout(p)
-    if os.path.isdir(data):
+    if fs_isdir(data):
         return
-    survivors = [
-        d for d in (data + "_old", data + "_compacting") if os.path.isdir(d)
-    ]
+    survivors = _swap_siblings(data)
     if survivors:
         raise ValueError(
             f"index data {data} is missing but {survivors} exist — this "
@@ -2078,7 +2088,7 @@ def clear_index_lifecycle_state(path: str) -> None:
     _refuse_crashed_swap(path, "rebuild")
     data, tombs = _index_layout(path.rstrip("/"))
     for d in (tombs, data + "_compacting", data + "_old"):
-        shutil.rmtree(d, ignore_errors=True)
+        fs_delete(d)
 
 
 def recover_index_swap(path: str) -> dict:
@@ -2099,15 +2109,15 @@ def recover_index_swap(path: str) -> dict:
     p = path.rstrip("/")
     data, tombs = _index_layout(p)
     old, compacting = data + "_old", data + "_compacting"
-    if os.path.isdir(data):
+    if fs_isdir(data):
         return {"recovered": False, "reason": "index present", "path": p}
-    if os.path.isdir(compacting):
-        os.rename(compacting, data)
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(tombs, ignore_errors=True)
+    if fs_isdir(compacting):
+        fs_rename(compacting, data)
+        fs_delete(old)
+        fs_delete(tombs)
         return {"recovered": True, "from": "compacting", "path": p}
-    if os.path.isdir(old):
-        os.rename(old, data)
+    if fs_isdir(old):
+        fs_rename(old, data)
         return {"recovered": True, "from": "old", "path": p}
     return {
         "recovered": False,
@@ -2134,7 +2144,7 @@ def suppress_index_tombstones(
     that whole set in driver memory on every load — let AQE fall back
     to a shuffle anti-join when it is big."""
     _, tombs = _index_layout(path)
-    if not os.path.isdir(tombs):
+    if not fs_isdir(tombs):
         return index
     tomb = spark.read.parquet(tombs).select(id_col).distinct()
     return index.join(tomb, id_col, "left_anti")
@@ -2169,7 +2179,7 @@ def _tombstone_state(
     n_phys, n_rows = raw.agg(F.count(F.lit(1)), F.count(id_col)).first()
     tomb = None
     n_tomb = 0
-    if os.path.isdir(tombs):
+    if fs_isdir(tombs):
         tomb = spark.read.parquet(tombs).select(id_col).distinct()
         n_tomb = tomb.count()
     ratio = round(n_tomb / n_rows, 6) if n_rows else 0.0
@@ -2236,6 +2246,7 @@ def _artifact_compact(
     id_col: str,
     min_ratio: float,
     force: bool,
+    raw: DataFrame | None = None,
 ) -> dict:
     """Fold tombstones into the index files — the artifact's vacuum,
     deferred by default (below ``min_ratio`` the per-load anti-join is
@@ -2254,9 +2265,11 @@ def _artifact_compact(
     only copy first. Meta columns and the NULL-id sentinel ride the
     rewrite untouched (NULL join keys never match the tombstone
     semi/anti joins). Probe and search results are identical before
-    and after — compaction changes storage, never semantics."""
+    and after — compaction changes storage, never semantics. A
+    wrapper whose validation read the data dir passes that frame as
+    ``raw``."""
     data, tombs = _index_layout(path)
-    st = _tombstone_state(spark, path, id_col)
+    st = _tombstone_state(spark, path, id_col, raw)
     if st.tomb is None:
         return {
             "compacted": False,
@@ -2272,8 +2285,6 @@ def _artifact_compact(
             "tombstone_ratio": st.ratio,
         }
     compacting, old = data + "_compacting", data + "_old"
-    if os.path.isdir(compacting):
-        shutil.rmtree(compacting)  # leftover from a pre-swap crash
     n_dead = st.raw.join(st.tomb, id_col, "left_semi").count()
     st.raw.join(st.tomb, id_col, "left_anti").write.mode("overwrite").parquet(
         compacting
@@ -2287,12 +2298,11 @@ def _artifact_compact(
             f"with the original artifact intact (stale files under "
             f"{compacting}?)"
         )
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(data, old)
-    os.rename(compacting, data)
-    shutil.rmtree(old)
-    shutil.rmtree(tombs)
+    fs_delete(old)
+    fs_rename(data, old)
+    fs_rename(compacting, data)
+    fs_delete(old)
+    fs_delete(tombs)
     return {
         "compacted": True,
         "index_rows_before": st.rows,
@@ -2330,8 +2340,8 @@ def compact_fp_index(
 ) -> dict:
     """Vacuum for ``remove_from_fp_index`` tombstones — threshold-
     gated rewrite of the artifact minus the tombstoned ids."""
-    load_fp_index(spark, path, family)
-    return _artifact_compact(spark, path, "media_id", min_ratio, force)
+    raw, _ = _read_fp_artifact(spark, path, family)
+    return _artifact_compact(spark, path, "media_id", min_ratio, force, raw)
 
 
 def remove_from_dedup_index(
@@ -2346,11 +2356,10 @@ def remove_from_dedup_index(
     ``pq.remove_from_ann_index``. A removed document stops seeding
     near-dup verdicts immediately; ``compact_dedup_index`` folds the
     tombstones into the files later."""
-    load_dedup_index(spark, path)  # validates (params, single set)
-    id_col = spark.read.parquet(path).select("_mh_id_col").first()[0]
+    raw, _, _, id_col = _read_dedup_artifact(spark, path)
     return _artifact_remove(
         spark, path, ids, id_col,
-        compact_ratio_threshold=compact_ratio_threshold,
+        compact_ratio_threshold=compact_ratio_threshold, raw=raw,
     )
 
 
@@ -2361,9 +2370,8 @@ def compact_dedup_index(
     force: bool = False,
 ) -> dict:
     """Vacuum for ``remove_from_dedup_index`` tombstones."""
-    load_dedup_index(spark, path)  # validates (params, single set)
-    id_col = spark.read.parquet(path).select("_mh_id_col").first()[0]
-    return _artifact_compact(spark, path, id_col, min_ratio, force)
+    raw, _, _, id_col = _read_dedup_artifact(spark, path)
+    return _artifact_compact(spark, path, id_col, min_ratio, force, raw)
 
 
 def index_fsck(spark: SparkSession, path: str) -> dict:
@@ -2402,11 +2410,8 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
     instead of stopping at the first bad one."""
     p = path.rstrip("/")
     data, _ = _index_layout(p)
-    report: dict = {"path": p, "ok": False}
-    report["stale_dirs"] = [
-        d for d in (data + "_compacting", data + "_old") if os.path.isdir(d)
-    ]
-    if not os.path.isdir(data) and report["stale_dirs"]:
+    report: dict = {"path": p, "ok": False, "stale_dirs": _swap_siblings(data)}
+    if report["stale_dirs"] and not fs_isdir(data):
         # compact-swap crash window: the sibling dirs hold the LAST
         # copy of the index (``_compacting`` is the count-validated
         # post-fold copy, ``_old`` the pre-fold one) — recoverable,
@@ -2422,7 +2427,7 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
         return report
     try:
         index = None
-        if os.path.isfile(p):
+        if fs_isfile(p):
             # the one non-parquet artifact: the text-probe JSON file
             report["kind"] = "text_probe"
             from .features import load_text_probe

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text
+from ..session import fs_delete, fs_read_bytes, fs_write_atomic
 
 
 def _bucket(gram: Column, dim: int) -> Column:
@@ -176,18 +177,20 @@ def save_text_probe(path: str, weights, bias: float, dim: int) -> None:
     """Persist a trained text probe as a tiny JSON artifact (weights +
     bias + the featurization dim that MUST accompany them — scoring
     with a different dim is a silent wrong answer, so the artifact
-    carries it)."""
+    carries it). Replaces an artifact already at ``path``."""
     import json
 
-    with open(path, "w") as f:
-        json.dump(
+    fs_delete(path)
+    fs_write_atomic(
+        path,
+        json.dumps(
             {
                 "dim": int(dim),
                 "bias": float(bias),
                 "weights": [float(x) for x in weights],
-            },
-            f,
-        )
+            }
+        ).encode(),
+    )
 
 
 def load_text_probe(path: str):
@@ -198,8 +201,7 @@ def load_text_probe(path: str):
 
     import numpy as np
 
-    with open(path) as f:
-        d = json.load(f)
+    d = json.loads(fs_read_bytes(path))
     w = np.asarray(d["weights"], dtype=float)
     if len(w) != int(d["dim"]):
         raise ValueError(

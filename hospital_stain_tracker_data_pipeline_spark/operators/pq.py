@@ -39,13 +39,19 @@ beyond reference scope (SURVEY.md S2 "beyond-reference" block).
 from __future__ import annotations
 
 import json
-import os
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import (
+    fs_delete,
+    fs_exists,
+    fs_isdir,
+    fs_read_bytes,
+    fs_write_atomic,
+)
 from .dedup import (
     _artifact_compact,
     _artifact_remove,
@@ -729,22 +735,23 @@ def _ann_meta(path: str, action: str) -> dict:
     naming ``recover_index_swap``: an append there would otherwise
     write a ``codes`` holding only the delta."""
     _refuse_crashed_swap(path, action)
-    marker = os.path.join(path, "_INDEX_OK")
-    if not os.path.exists(marker):
+    marker = f"{path}/_INDEX_OK"
+    if not fs_exists(marker):
         raise ValueError(
             f"{path} has no _INDEX_OK marker — cannot {action} it "
             "(_INDEX_OK missing: a build or append did not finish, or "
             "no index was built here); rebuild with build_ann_index"
         )
-    with open(marker) as f:
-        return json.load(f)
+    return json.loads(fs_read_bytes(marker))
 
 
 def _commit_ann_meta(path: str, meta: dict) -> None:
     """Write the ``_INDEX_OK`` marker: the last step of every
-    operation that changes an ANN artifact."""
-    with open(os.path.join(path, "_INDEX_OK"), "w") as f:
-        json.dump(meta, f)
+    operation that changes an ANN artifact. Remove and compact replace
+    a marker that is on."""
+    marker = f"{path}/_INDEX_OK"
+    fs_delete(marker)
+    fs_write_atomic(marker, json.dumps(meta).encode())
 
 
 def build_ann_index(
@@ -773,15 +780,12 @@ def build_ann_index(
     marker-committed: the ``_INDEX_OK`` marker is removed before any
     overwrite and written only after all three land — a crash
     mid-rebuild leaves a loudly-rejected torn artifact instead of a
-    silently-wrong mixed one (``path`` must be driver-visible
-    local/NFS, the ``_StageStore`` contract). A rebuild starts
-    takedown-free: the old index's tombstones and swap leftovers are
-    cleared (``clear_index_lifecycle_state``) before the marker
-    commits the new one."""
+    silently-wrong mixed one. A rebuild starts takedown-free: the old
+    index's tombstones and swap leftovers are cleared
+    (``clear_index_lifecycle_state``) before the marker commits the
+    new one."""
     spark = corpus.sparkSession
-    marker = os.path.join(path, "_INDEX_OK")
-    if os.path.exists(marker):
-        os.remove(marker)
+    fs_delete(f"{path}/_INDEX_OK")
     # ONE quantized pass over the raw corpus serves both fits, the
     # encode AND the stats baseline (round 14; guide §2.4) — the
     # pre-round-14 build re-read and re-quantized the corpus four
@@ -873,7 +877,7 @@ def append_ann_index(
             f"delta frame lacks column(s) {missing} — the index at "
             f"{path} was built with id_col={id_col!r}"
         )
-    if not os.path.isdir(os.path.join(path, "stats")):
+    if not fs_isdir(f"{path}/stats"):
         raise ValueError(
             f"{path} has no fit-time stats (pre-append-era artifact) — "
             "rebuild with build_ann_index to enable appends"
@@ -895,7 +899,7 @@ def append_ann_index(
     fit_stats = _stats_map(spark.read.parquet(f"{path}/stats"))
     n_new = sum(n for n, _ in new_stats.values())
     if n_new:
-        os.remove(os.path.join(path, "_INDEX_OK"))
+        fs_delete(f"{path}/_INDEX_OK")
         encoded.select(id_col, "cell", "pq_code").write.mode(
             "append"
         ).parquet(f"{path}/codes")
@@ -983,7 +987,7 @@ def ann_index_drift(
     encoded or written); ``appended`` in the report counts the probed
     vectors."""
     meta = _ann_meta(path, "probe")
-    if not os.path.isdir(os.path.join(path, "stats")):
+    if not fs_isdir(f"{path}/stats"):
         raise ValueError(
             f"{path} has no fit-time stats (pre-append-era artifact) — "
             "rebuild with build_ann_index to enable drift probes"

@@ -82,6 +82,7 @@ from ..operators.web import (
     dedup_exact_urls,
     parse_html_documents,
 )
+from ..session import fs_delete, fs_exists, fs_read_bytes, fs_write_atomic
 
 
 @dataclass
@@ -170,6 +171,8 @@ class _StageStore:
     downstream (the chain hash differs), which recomputes exactly the
     affected suffix. A kill mid-write leaves no marker, so the partial
     parquet is overwritten on resume — the marker is the commit point.
+    Markers go through the ``session`` filesystem helpers, so
+    ``run_dir`` may be a path of any Hadoop scheme.
 
     Loading from parquet doubles as the plan-growth truncation the
     in-memory path gets from ``materialize`` (a parquet scan is a flat
@@ -181,15 +184,12 @@ class _StageStore:
     docs, embeddings, a probe scorer) are represented in the hash only
     by their scalar companions (thresholds, dims); swapping one for a
     different artifact with the same thresholds requires a fresh
-    run_dir. ``run_dir`` must be on a filesystem visible to the driver
-    (local/NFS here; an object-store generalization would route the
-    marker I/O through ``pyarrow.fs``)."""
+    run_dir."""
 
     def __init__(self, spark, run_dir: str) -> None:
         self.spark = spark
         self.run_dir = run_dir
         self.chain = "root"
-        os.makedirs(run_dir, exist_ok=True)
 
     def _advance(self, name: str, params: dict) -> tuple[str, str]:
         payload = json.dumps(
@@ -205,15 +205,12 @@ class _StageStore:
         path, h = self._advance(name, params)
         data = os.path.join(path, "data")
         marker = os.path.join(path, "_STAGE_OK")
-        if os.path.exists(marker):
-            with open(marker) as f:
-                if f.read() == h:
-                    return self.spark.read.parquet(data)
-            os.remove(marker)  # stale config — rebuild below
+        if fs_exists(marker):
+            if fs_read_bytes(marker).decode() == h:
+                return self.spark.read.parquet(data)
+            fs_delete(marker)  # stale config — rebuild below
         compute().write.mode("overwrite").parquet(data)
-        os.makedirs(path, exist_ok=True)
-        with open(marker, "w") as f:
-            f.write(h)
+        fs_write_atomic(marker, h.encode())
         return self.spark.read.parquet(data)
 
 

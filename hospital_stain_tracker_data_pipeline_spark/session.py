@@ -112,6 +112,86 @@ def hadoop_fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
+# The package's one seam between persisted state (index artifacts and
+# their lifecycle dirs, markers, the run log, small JSON artifacts) and
+# storage: every helper below takes a path of any Hadoop scheme and
+# resolves its FileSystem through ``hadoop_fs`` under the active session.
+
+
+def _fs(path: str, *others: str):
+    """``hadoop_fs`` for ``path`` under the active session (the default
+    session when the calling thread has none set, as in a foreachBatch
+    callback), plus a Hadoop ``Path`` for each of ``others``."""
+    spark = SparkSession.active()
+    fs, jpath = hadoop_fs(spark, path)
+    if not others:
+        return fs, jpath
+    jpath_of = spark._jvm.org.apache.hadoop.fs.Path
+    return (fs, jpath, *(jpath_of(o) for o in others))
+
+
+def fs_exists(path: str) -> bool:
+    fs, jpath = _fs(path)
+    return bool(fs.exists(jpath))
+
+
+def fs_isdir(path: str) -> bool:
+    fs, jpath = _fs(path)
+    return bool(fs.isDirectory(jpath))
+
+
+def fs_isfile(path: str) -> bool:
+    fs, jpath = _fs(path)
+    return bool(fs.isFile(jpath))
+
+
+def fs_delete(path: str) -> None:
+    """Delete ``path``, recursively; a missing path is not an error."""
+    fs, jpath = _fs(path)
+    fs.delete(jpath, True)
+
+
+def fs_rename(src: str, dst: str) -> None:
+    """Rename ``src`` to ``dst``, which must not exist (a directory
+    renamed onto an existing one moves inside it). Raises ``OSError``
+    when the FileSystem reports the rename failed."""
+    fs, jsrc, jdst = _fs(src, dst)
+    if not fs.rename(jsrc, jdst):
+        raise OSError(f"could not rename {src} to {dst}")
+
+
+def fs_read_bytes(path: str) -> bytes:
+    fs, jpath = _fs(path)
+    stream = fs.open(jpath)
+    try:
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+
+
+def fs_write_atomic(path: str, data: bytes) -> None:
+    """Write the file ``path`` whole or not at all: first under a hidden
+    temp name beside it (a leading ``.``, which Spark's listing skips),
+    then committed by a rename. The rename is atomic on HDFS and on a
+    local disk, and a copy on S3A, where the object still appears whole
+    or not at all. A failed write or rename raises and deletes the temp
+    file. ``path`` must not exist: not every FileSystem renames onto a
+    file, so a caller replacing one deletes it first."""
+    parent, name = os.path.split(path)
+    fs, final, tmp = _fs(path, os.path.join(parent, f".{name}.tmp"))
+    try:
+        out = fs.create(tmp, False)
+        try:
+            out.write(data)
+        finally:
+            out.close()
+        if not fs.rename(tmp, final):
+            raise OSError(f"could not commit {path}")
+    except BaseException:
+        fs.delete(tmp, False)
+        raise
+
+
 def _materialize_observed(
     frame: DataFrame, cache: bool = False, **metrics: Column
 ) -> tuple[DataFrame, dict]:

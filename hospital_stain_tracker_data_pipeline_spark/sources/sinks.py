@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import PIPELINE_RUNS_SCHEMA
-from ..session import hadoop_fs
+from ..session import fs_write_atomic
 
 
 def write_rejects_csv(rejects: DataFrame, base_dir: str, run_id: str) -> str:
@@ -64,14 +64,11 @@ def append_run_log(spark: SparkSession, path: str, row: Row) -> None:
     Runs no Spark job. The row is encoded on the driver as a one-row
     parquet file typed from ``PIPELINE_RUNS_SCHEMA`` (timestamps as UTC
     microseconds; a naive datetime is local time, as Spark takes it) and
-    written through the path's Hadoop ``FileSystem``: first under a
-    hidden temp name (a leading ``.``, which Spark's listing skips),
-    then committed by a rename to ``part-<uuid>.parquet``. The rename
-    is atomic on HDFS and on a local disk, and a copy on S3A, where the
-    object still appears whole or not at all. A failed write or rename
-    raises and deletes the temp file. Files an older writer left
-    through Spark (INT96 timestamps) read alongside these, with the
-    same column types."""
+    committed as ``part-<uuid>.parquet`` by ``session.fs_write_atomic``
+    (a hidden temp file renamed into place on the path's Hadoop
+    ``FileSystem``; a failed write or rename raises and leaves no
+    file). Files an older writer left through Spark (INT96 timestamps)
+    read alongside these, with the same column types."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -83,21 +80,9 @@ def append_run_log(spark: SparkSession, path: str, row: Row) -> None:
     sink = pa.BufferOutputStream()
     pq.write_table(pa.Table.from_pylist([values], schema=schema), sink)
 
-    fs, root = hadoop_fs(spark, path)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    name = f"part-{uuid.uuid4()}.parquet"
-    tmp = jpath(root, f".{name}.tmp")
-    try:
-        out = fs.create(tmp, False)
-        try:
-            out.write(sink.getvalue().to_pybytes())
-        finally:
-            out.close()
-        if not fs.rename(tmp, jpath(root, name)):
-            raise OSError(f"run log: could not commit {name} under {path}")
-    except BaseException:
-        fs.delete(tmp, False)
-        raise
+    fs_write_atomic(
+        f"{path}/part-{uuid.uuid4()}.parquet", sink.getvalue().to_pybytes()
+    )
 
 
 @contextmanager

@@ -466,9 +466,11 @@ def stream_ann_ingest(
     compact → re-append, never append-over); genuinely new ids are
     unaffected. The anti-join reads the codes table's ID COLUMN only
     (parquet column pruning) — not the byte codes."""
+    from ..operators.dedup import _index_layout
     from ..operators.pq import _ann_meta, append_ann_index
 
     id_col = _ann_meta(index_path, "stream appends into")["id_col"]
+    codes, _ = _index_layout(index_path)
 
     ledger_schema = (
         "appended long, occupancy_shift_tv double, err_ratio double, "
@@ -477,9 +479,7 @@ def stream_ann_ingest(
     vecs = spark.readStream.schema(schema).parquet(source_dir)
 
     def _append(batch_df: DataFrame) -> DataFrame:
-        existing = spark.read.parquet(
-            os.path.join(index_path, "codes")
-        ).select(id_col)
+        existing = spark.read.parquet(codes).select(id_col)
         # dropDuplicates first: a producer retry can land the SAME ids
         # twice within one micro-batch (two files, one trigger) — the
         # anti-join alone only guards against ids already in codes

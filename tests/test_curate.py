@@ -766,6 +766,28 @@ def _chunk_rows(chunks):
     )
 
 
+def test_run_dir_stage_marker_lands_under_a_uri(spark, tmp_path):
+    """A ``file://`` run_dir: the stage marker lands under the real
+    directory, and a second store on it loads the stage without
+    computing it again."""
+    from hospital_stain_tracker_data_pipeline_spark.pipeline.curate import (
+        _StageStore,
+    )
+
+    computed = []
+
+    def compute():
+        computed.append(True)
+        return spark.range(3)
+
+    for _ in range(2):
+        store = _StageStore(spark, "file://" + str(tmp_path / "run"))
+        got = store.load_or("ids", {"k": 1}, compute)
+        assert sorted(r["id"] for r in got.collect()) == [0, 1, 2]
+    assert computed == [True]
+    assert (tmp_path / "run" / "ids" / "_STAGE_OK").is_file()
+
+
 def test_curate_run_dir_kill_and_resume_bit_identical(spark, tmp_path):
     import dataclasses
     import os

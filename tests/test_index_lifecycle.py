@@ -209,8 +209,12 @@ def test_minhash_remove_then_probe_equals_rebuild(spark, tmp_path):
     kept = dedup_against_corpus(batch, index, threshold=0.5, num_hashes=nh, k=k)
     assert kept.count() == 0  # near-dups corpus doc 2 -> dropped
 
-    rep = remove_from_dedup_index(spark, path, _ids2(spark, [2]))
+    rep, n_jobs = _jobs_in_group(
+        spark, "minhash-remove",
+        lambda: remove_from_dedup_index(spark, path, _ids2(spark, [2])),
+    )
     assert rep["requested"] == 1 and rep["tombstones_total"] == 1
+    assert n_jobs <= REMOVE_JOB_BUDGET["minhash"], n_jobs
     index, nh, k = load_dedup_index(spark, path)
     kept = dedup_against_corpus(batch, index, threshold=0.5, num_hashes=nh, k=k)
     assert [r["doc_id"] for r in kept.collect()] == [20]
@@ -231,8 +235,12 @@ def test_minhash_remove_then_probe_equals_rebuild(spark, tmp_path):
         r["doc_id"] for r in kept_rb.collect()
     )
 
-    rep = compact_dedup_index(spark, path, force=True)
+    rep, n_jobs = _jobs_in_group(
+        spark, "minhash-compact",
+        lambda: compact_dedup_index(spark, path, force=True),
+    )
     assert rep["compacted"] is True and rep["index_rows_after"] == 2
+    assert n_jobs <= COMPACT_JOB_BUDGET["minhash"], n_jobs
     index, nh, k = load_dedup_index(spark, path)
     assert index.count() == 2
 
@@ -659,12 +667,18 @@ def _fp_ops(spark):
     )
 
 
-# Spark jobs of one remove of two ids from an 8-row index, as measured
-# with the data dir read (and its schema inferred) once; reading it a
-# second time for the counts ran 11 (ANN) and 14 (fp). The fp count
-# holds 2 more: the distinct-tag collect that validates the artifact,
-# whose read the engine reuses (13 when the engine read it again).
-REMOVE_JOB_BUDGET = {"ann": 10, "fp": 12}
+# Spark jobs of one remove from a small index (two ids of 8 rows in the
+# layout test, one of 3 in the MinHash test), as measured with the data
+# dir read (and its schema inferred) once; reading it a second time for
+# the counts ran 11 (ANN) and 14 (fp). The fp and MinHash counts hold
+# 2 more: the distinct collect that validates the artifact, whose read
+# the engine reuses (fp ran 13 when the engine read it again; MinHash
+# 15 when it re-read the dir for _mh_id_col).
+REMOVE_JOB_BUDGET = {"ann": 10, "fp": 12, "minhash": 12}
+# Spark jobs of one forced compaction of that index, 2 more for fp and
+# MinHash as above (21 and 23 when the wrapper's validating read was
+# thrown away and the engine read the dir again).
+COMPACT_JOB_BUDGET = {"ann": 17, "fp": 19, "minhash": 19}
 
 
 def _jobs_in_group(spark, group, fn):
@@ -681,27 +695,38 @@ def _jobs_in_group(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("layout", ["ann", "fp"])
-def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout):
+@pytest.mark.parametrize(
+    "layout,uri",
+    [
+        pytest.param(layout, uri, id=layout + ("-uri" if uri else ""))
+        for uri in (False, True)
+        for layout in ("ann", "fp")
+    ],
+)
+def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout, uri):
     """The one lifecycle engine, run through each layout's public
-    wrappers: a rebuild clears the old index's tombstones and serves
-    every id again (the ANN tombstones live inside the artifact dir,
-    which a rebuild overwrites piece by piece, so this once failed
-    there), remove suppresses at search/load time, a compaction whose
-    rewrite loses rows is refused with the artifact intact, a clean
-    compaction changes storage but not results, and a crash between
-    the swap renames is reported by fsck, refuses an ANN append and is
-    restored by recover_index_swap. A remove stays in its job budget."""
+    wrappers, at a plain path and at a ``file://`` URI: a rebuild
+    clears the old index's tombstones and serves every id again (the
+    ANN tombstones live inside the artifact dir, which a rebuild
+    overwrites piece by piece, so this once failed there), remove
+    suppresses at search/load time, a compaction whose rewrite loses
+    rows is refused with the artifact intact, a clean compaction
+    changes storage but not results, and a crash between the swap
+    renames is reported by fsck, refuses an ANN append and is restored
+    by recover_index_swap. A remove and a compaction stay in
+    their job budgets."""
     from pyspark.sql.readwriter import DataFrameWriter
 
+    from hospital_stain_tracker_data_pipeline_spark.operators import dedup
     from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
         index_fsck,
         recover_index_swap,
     )
 
     ops = (_ann_ops if layout == "ann" else _fp_ops)(spark)
-    path = str(tmp_path / layout)
-    data, tombs = ops["data"](path), ops["tombs"](path)
+    local = str(tmp_path / layout)  # what the os.path checks below inspect
+    path = "file://" + local if uri else local
+    data, tombs = ops["data"](local), ops["tombs"](local)
     ids = list(range(1, 9))
     ops["build"](path, ids)
     ops["remove"](path, [3])
@@ -710,7 +735,8 @@ def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout):
     assert ops["live"](path) == ids
 
     rep, n_jobs = _jobs_in_group(
-        spark, f"lifecycle-remove-{layout}", lambda: ops["remove"](path, [2, 5])
+        spark, f"lifecycle-remove-{layout}-{uri}",
+        lambda: ops["remove"](path, [2, 5]),
     )
     assert (rep["requested"], rep["tombstones_total"], rep["index_rows"]) == (
         2, 2, 8
@@ -734,7 +760,11 @@ def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout):
     assert os.path.isdir(tombs) and ops["live"](path) == live
 
     # a clean compaction folds the tombstones; results are unchanged
-    crep = ops["compact"](path, force=True)
+    crep, n_jobs = _jobs_in_group(
+        spark, f"lifecycle-compact-{layout}-{uri}",
+        lambda: ops["compact"](path, force=True),
+    )
+    assert n_jobs <= COMPACT_JOB_BUDGET[layout], n_jobs
     assert crep["compacted"] is True
     assert (crep["index_rows_before"], crep["index_rows_after"]) == (8, 6)
     assert ops["live"](path) == live
@@ -743,7 +773,7 @@ def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout):
 
     # crash between rename(data, old) and rename(compacting, data)
     ops["remove"](path, [7])
-    real_rename, calls = os.rename, []
+    real_rename, calls = dedup.fs_rename, []
 
     def crash_second(src, dst):
         calls.append(src)
@@ -751,10 +781,10 @@ def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout):
             raise OSError("simulated crash inside the swap")
         real_rename(src, dst)
 
-    monkeypatch.setattr(os, "rename", crash_second)
+    monkeypatch.setattr(dedup, "fs_rename", crash_second)
     with pytest.raises(OSError, match="simulated"):
         ops["compact"](path, force=True)
-    monkeypatch.setattr(os, "rename", real_rename)
+    monkeypatch.setattr(dedup, "fs_rename", real_rename)
     assert not os.path.isdir(data) and os.path.isdir(data + "_compacting")
     fsck = index_fsck(spark, path)
     assert fsck["kind"] == "crashed_swap" and fsck["ok"] is False

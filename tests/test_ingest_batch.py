@@ -15,6 +15,7 @@ import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
+from hospital_stain_tracker_data_pipeline_spark import session
 from hospital_stain_tracker_data_pipeline_spark.pipeline import (
     api_queries,
     compute_metrics,
@@ -265,7 +266,7 @@ def test_failed_run_log_write_leaves_no_file(spark, tmp_path, monkeypatch, faili
 
         return {"create": lambda *a: Stream(fs.create(*a))}
 
-    _patch_fs(monkeypatch, sinks, spark, fail)
+    _patch_fs(monkeypatch, session, spark, fail)
     with pytest.raises((Py4JJavaError, OSError)):
         append_run_log(spark, path, RUN_ROWS[1])
     assert _run_log_files(path) == before

@@ -1,8 +1,9 @@
 """Layout tripwire: the lake's table layout is declared once, in
-``pipeline/lake.py``, and the pipeline modules that reach persisted
-tables do so through the Hadoop ``FileSystem`` seam, never through
-local-path checks that read any URI (``file:``, ``hdfs:``, ``s3a:``) as
-a missing directory."""
+``pipeline/lake.py``, and every module that persists state (lake
+tables, index artifacts and their lifecycle dirs, markers, the run log)
+reaches storage through the Hadoop ``FileSystem`` seam in ``session.py``,
+never through local-path calls that read any URI (``file:``, ``hdfs:``,
+``s3a:``) as a missing directory."""
 
 from __future__ import annotations
 
@@ -12,14 +13,28 @@ import pathlib
 REPO = pathlib.Path(__file__).resolve().parents[1]
 PKG = REPO / "hospital_stain_tracker_data_pipeline_spark"
 LAKE = PKG / "pipeline" / "lake.py"
-# modules that open lake tables; a local-path check there misreads a URI lake
+# modules that open lake tables or persist state; a local-path call
+# there misreads a URI
 FS_SEAM = [
-    PKG / "pipeline" / f
-    for f in ("ingest_capacity.py", "compute_metrics.py", "seed.py", "api_queries.py")
+    PKG / f
+    for f in (
+        "pipeline/ingest_capacity.py",
+        "pipeline/compute_metrics.py",
+        "pipeline/seed.py",
+        "pipeline/api_queries.py",
+        "pipeline/curate.py",
+        "operators/dedup.py",
+        "operators/pq.py",
+        "operators/features.py",
+        "sources/sinks.py",
+    )
 ]
-LOCAL_PATH_CHECKS = {"isdir", "exists", "isfile"}
-
-
+LOCAL_PATH_CALLS = {
+    "os.path.exists", "os.path.isdir", "os.path.isfile",
+    "os.rename", "os.remove", "os.makedirs", "open",
+}
+# the seam itself, and the lake's JVM-mapped listing walk (kept for speed)
+FS_OWNERS = {PKG / "session.py", LAKE}
 def _calls(path):
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if isinstance(node, ast.Call):
@@ -55,7 +70,20 @@ def test_pipeline_modules_make_no_local_path_checks():
         for path in FS_SEAM
         for call in _calls(path)
         for name in [_dotted(call.func)]
-        if name.startswith("shutil.")
-        or (name.startswith("os.path.") and name.split(".")[-1] in LOCAL_PATH_CHECKS)
+        if name.startswith("shutil.") or name in LOCAL_PATH_CALLS
+    ]
+    assert not found, found
+
+
+def test_only_the_seam_resolves_hadoop_filesystems():
+    found = [
+        f"{path.relative_to(REPO)}:{node.lineno} {name}"
+        for path in PKG.rglob("*.py")
+        if path not in FS_OWNERS
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, (ast.Name, ast.Attribute))
+        for name in [_dotted(node)]
+        if name.split(".")[-1] == "hadoop_fs"
+        or name.endswith("org.apache.hadoop.fs")
     ]
     assert not found, found
