@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint64_hex, normalized_text, word_shingles
-from ..session import fs_delete, fs_exists, fs_isdir, fs_isfile, fs_rename
+from ..session import fs_delete, fs_isdir, fs_isfile, fs_list_names, fs_rename
 
 if TYPE_CHECKING:
     from .fingerprint import FingerprintFamily
@@ -2040,9 +2040,10 @@ def _index_layout(path: str) -> tuple[str, str]:
     ``<path>/tombstones``, beside the fits and the ``_INDEX_OK``
     marker. Every other index is itself the parquet data dir, with
     tombstones in a sibling ``<path>_tombstones``. The compaction swap
-    siblings ``_compacting`` / ``_old`` follow the data dir."""
+    siblings ``_compacting`` / ``_old`` follow the data dir. The
+    answer comes from one listing of ``path``."""
     p = path.rstrip("/")
-    if any(fs_exists(f"{p}/{e}") for e in _ANN_ENTRIES):
+    if set(_ANN_ENTRIES) & set(fs_list_names(p)):
         return f"{p}/codes", f"{p}/tombstones"
     return p, p + "_tombstones"
 

@@ -13,6 +13,12 @@ Scale notes:
   overwrite), instead of rewriting 100 TB per micro-batch.
 - Determinism requires an explicit version column (``ingest_ts`` or run
   sequence); ties broken by preferring the incoming side.
+- The merge window also does the batch's within-batch dedup: it keeps
+  one row per key over the union, so duplicate incoming keys collapse
+  in the same shuffle (newest version first, NULL versions last) and a
+  separate ``dedup_last_writer`` pass before it would be redundant.
+  ``LakeTable.upsert`` merges in that one window, and counts the
+  batch's distinct keys in it (``_last_writer_rows``' ``flag``).
 """
 
 from __future__ import annotations
@@ -39,6 +45,21 @@ def upsert_last_writer_wins(
     equal versions still prefer the new write — matching the reference's
     unconditional DO UPDATE.
     """
+    return _last_writer_rows(existing, incoming, keys, version_col)
+
+
+def _last_writer_rows(
+    existing: DataFrame | None,
+    incoming: DataFrame,
+    keys: Sequence[str],
+    version_col: str | None,
+    flag: str | None = None,
+) -> DataFrame:
+    """``upsert_last_writer_wins``' rows; with ``flag``, each row also
+    carries a boolean column of that name, true when the row's key
+    group holds an incoming row (whether or not that row won). Counting
+    it on the result counts the batch's distinct keys, in the same
+    window and so the same shuffle."""
     incoming = incoming.withColumn(_PRIORITY, F.lit(1))
     if existing is None:
         unioned = incoming
@@ -55,11 +76,13 @@ def upsert_last_writer_wins(
     if version_col is not None:
         order.insert(0, F.desc_nulls_last(version_col))
     w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
-    return (
-        unioned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", _PRIORITY)
-    )
+    ranked = unioned.withColumn("_rn", F.row_number().over(w))
+    if flag is not None:
+        # the whole group as the frame: same partitioning and order as
+        # the rank, so Spark computes both in one window operator
+        group = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ranked = ranked.withColumn(flag, F.max(_PRIORITY).over(group) == 1)
+    return ranked.filter(F.col("_rn") == 1).drop("_rn", _PRIORITY)
 
 
 def dedup_last_writer(

@@ -21,10 +21,11 @@ Deliberate deviations from the reference, documented:
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.validate import (
@@ -115,6 +116,16 @@ def get_or_create_regions(
     return dict(dim.select("name", "region_id").collect())
 
 
+def _region_lookup(ids: dict[str, str]) -> Column:
+    """``{name: region_id}`` as a map literal for the projection: the
+    dimension is on the driver already, so the lookup needs no
+    broadcast job. The map is one JSON string literal, which constant
+    folding parses once at planning; building it is a fixed number of
+    Py4J calls, where a ``create_map`` of one literal per name and id
+    made two calls a region."""
+    return F.from_json(F.lit(json.dumps(ids)), "map<string,string>")
+
+
 def ingest_capacity_csv(
     spark: SparkSession,
     input_path: str,
@@ -155,15 +166,10 @@ def ingest_capacity_csv(
                     rejected, rejects_dir or os.path.join(lake_dir, "rejects"), run_id
                 )
 
-            # the dimension is on the driver already, so the lookup is a
-            # literal map in the projection: no broadcast job
-            region_ids = F.create_map(
-                *[F.lit(v) for pair in ids.items() for v in pair]
-            ).cast("map<string,string>")
             capacity = accepted.select(
                 F.expr("uuid()").alias("id"),
                 F.col("date"),
-                region_ids[F.col("region")].alias("region_id"),
+                _region_lookup(ids)[F.col("region")].alias("region_id"),
                 F.col("total_beds").cast("int").alias("total_beds"),
                 F.col("occupied_beds").cast("int").alias("occupied_beds"),
                 F.col("icu_beds").cast("int").alias("icu_beds"),

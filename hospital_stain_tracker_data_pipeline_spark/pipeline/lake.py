@@ -8,23 +8,30 @@ environment this would be ``MERGE INTO``; the portable mechanism here:
 1. Partition the table by ``date`` — the analog of the reference's
    unique B-tree on (date, region_id) (models.py:54-56): date-keyed
    queries partition-prune, and an upsert touches only incoming dates.
-2. Merge = materialize the deduped batch once, observing on the way
-   its row count and the set of partition values it touches; read
-   ONLY those partitions, union with the batch, window-dedup on the
-   natural key (incoming wins), then dynamic-partition-overwrite just
-   those partitions. The scoped read lists the table root's names in
-   one JVM-side pass (a fixed number of Py4J calls) and hands Spark
-   only the touched directories, so listing, footer reads and driver
-   work are bounded by the batch, not by the partition count of the
-   table. There is no separate existence check: a missing root or an
-   untouched table reads as ``None`` and the batch is written as is;
-   any other listing failure raises before anything is written.
-3. ``localCheckpoint`` materializes the merged slice before the write
-   so Spark's read/write-same-path check doesn't trip. The working set
-   (listing, footers, rows) is bounded by the batch's touched
-   partitions, not table size: this is what keeps a 100 TB table
-   upsertable by a 1 GB micro-batch. The touched set is a driver-side
-   collect, bounded by ``_MAX_TOUCHED_PARTITIONS``.
+2. Merge = materialize the raw batch once, observing on the way the
+   set of partition values it touches; read ONLY those partitions,
+   union with the batch, and in one window on the natural key keep
+   the last writer per key (newest version, then incoming), which
+   also dedups the batch within itself; then dynamic-partition-
+   overwrite just those partitions straight from the window. The
+   scoped read lists the table root's names in one JVM-side pass (a
+   fixed number of Py4J calls) and hands Spark only the touched
+   directories, so listing, footer reads and driver work are bounded
+   by the batch, not by the partition count of the table. There is no
+   separate existence check: a missing root or an untouched table
+   reads as ``None`` and the batch alone is merged; any other listing
+   failure raises before anything is written.
+3. The merge is written without a copy of its own. Spark refuses to
+   overwrite a path the query reads, but it compares root paths, and
+   the scoped read's roots are partition directories, never the table
+   root. A dynamic partition overwrite writes to a staging directory
+   and deletes and replaces the touched partitions only when the job
+   commits, after every task has read its input, so a failed job
+   leaves the table as it was. The working set (listing, footers,
+   rows) is bounded by the batch's touched partitions, not table
+   size: this is what keeps a 100 TB table upsertable by a 1 GB
+   micro-batch. The touched set is a driver-side collect, bounded by
+   ``_MAX_TOUCHED_PARTITIONS``.
 4. A full ``read()`` keeps the frame it resolved and returns it again
    while the table's files are unchanged, so a repeated read of an
    untouched table runs no listing or schema-merge job. Reuse is
@@ -54,11 +61,11 @@ from collections.abc import Iterable, Sequence
 from urllib.parse import unquote
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.upsert import dedup_last_writer, upsert_last_writer_wins
-from ..session import _materialize_observed, hadoop_fs
+from ..operators.upsert import _last_writer_rows
+from ..session import _fs_classes, _materialize_observed, hadoop_fs
 
 
 # Most partition values one upsert may touch: the touched set is
@@ -66,6 +73,8 @@ from ..session import _materialize_observed, hadoop_fs
 # read. A full-history metrics run touches every date of the table;
 # 20 000 daily partitions are ≈55 years.
 _MAX_TOUCHED_PARTITIONS = 20_000
+# The merge's flag column: the row's key group holds an incoming row.
+_HAS_INCOMING = "_upsert_has_incoming"
 # Full-read frames one session keeps (see ``LakeTable.read``); the
 # oldest resolution is dropped first.
 _SNAPSHOTS_PER_SESSION = 32
@@ -88,7 +97,7 @@ class _Snapshots:
         invoke = jvm.java.lang.invoke
         lookup = invoke.MethodHandles.publicLookup()
         status = jvm.org.apache.hadoop.fs.FileStatus._java_lang_class
-        path = jvm.org.apache.hadoop.fs.Path._java_lang_class
+        path = _fs_classes(spark).path._java_lang_class
         function1 = jvm.scala.Function1._java_lang_class
 
         def getter(name, rtype, owner=status):
@@ -268,7 +277,7 @@ class LakeTable:
         the answer costs the same for a table of any partition count
         (a dynamic-partition overwrite leaves no root ``_SUCCESS``)."""
         fs, root = hadoop_fs(self.spark, self.path)
-        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path
+        jvm_path = _fs_classes(self.spark).path
         return fs.exists(jvm_path(root, "_SUCCESS")) or bool(self._partition_dirs())
 
     def read(self, partitions: Iterable | None = None) -> DataFrame | None:
@@ -352,22 +361,28 @@ class LakeTable:
 
     def upsert(self, incoming: DataFrame) -> int:
         """Idempotent natural-key upsert; incoming wins conflicts.
-        Returns the batch's row count after its within-batch dedup."""
-        # Within-batch dedup first (the reference's single multi-row
-        # INSERT can't carry duplicate natural keys either).
-        if self.version_col and self.version_col in incoming.columns:
-            incoming = dedup_last_writer(incoming, self.keys, self.version_col)
-        else:
-            incoming = incoming.dropDuplicates(self.keys)
+        Returns the batch's row count after its within-batch dedup: the
+        number of distinct incoming keys, a stale incoming row that
+        loses to a newer stored one included.
 
-        # One action materializes the deduped batch and observes its
-        # row count and the partition values it touches, rendered as
-        # the writer renders a directory value (NULL as Hive's
-        # sentinel); the merge below reads the materialized rows.
+        Four Spark jobs: the batch's materialization, the touched
+        slice's schema, and the merge window's shuffle and the write.
+        The merge writes straight through ``overwrite``, with no copy
+        of the merged slice. Spark refuses an overwrite of a path the
+        query reads, but it compares root paths, and the scoped read's
+        roots are the partition directories, never the table root. A
+        dynamic partition overwrite writes its files under a staging
+        directory and deletes and replaces the touched partitions only
+        in the job commit, after every task has read its input; a
+        failed job leaves the table as it was."""
+        # One narrow action materializes the raw batch, pinning its
+        # nondeterministic values (uuid(), current_timestamp()) for the
+        # merge, and observes the partition values it touches, rendered
+        # as the writer renders a directory value (NULL as Hive's
+        # sentinel).
         part = F.col(self.partition_col)
         incoming, seen = _materialize_observed(
             incoming,
-            rows=F.count(F.lit(1)),
             touched=F.collect_set(
                 F.coalesce(part.cast("string"), F.lit(self._NULL_PARTITION))
             ),
@@ -382,14 +397,16 @@ class LakeTable:
         # only the touched partitions are read back; a missing root or
         # an untouched table reads as None
         existing_slice = self.read(touched)
-        if existing_slice is None:
-            self.overwrite(incoming)
-            return seen["rows"]
-        existing_slice = existing_slice.withColumn(
-            self.partition_col,
-            part.cast(incoming.schema[self.partition_col].dataType),
-        )
-        merged = upsert_last_writer_wins(
+        if existing_slice is not None:
+            existing_slice = existing_slice.withColumn(
+                self.partition_col,
+                part.cast(incoming.schema[self.partition_col].dataType),
+            )
+        # The merge window is also the within-batch dedup (the
+        # reference's single multi-row INSERT can't carry duplicate
+        # natural keys either); the batch's distinct keys are counted
+        # on its rank-1 rows while the write runs.
+        merged = _last_writer_rows(
             existing_slice,
             incoming,
             self.keys,
@@ -398,18 +415,21 @@ class LakeTable:
                 if self.version_col and self.version_col in incoming.columns
                 else None
             ),
+            flag=_HAS_INCOMING,
         )
-        # Materialize before overwriting partitions we just read.
-        merged = merged.localCheckpoint(eager=True)
-        self.overwrite(merged)
-        return seen["rows"]
+        rows = Observation()
+        self.overwrite(
+            merged.observe(rows, F.count_if(F.col(_HAS_INCOMING)).alias("rows"))
+            .drop(_HAS_INCOMING)
+        )
+        return rows.get["rows"]
 
     def partition_file_counts(self) -> dict[str, int]:
         """data-file count per partition VALUE (unescaped), via the
         Hadoop ``FileSystem`` API so the walk works on any scheme (file:,
         hdfs:, s3a:, ...)."""
         fs, _ = hadoop_fs(self.spark, self.path)
-        jpath = self.spark._jvm.org.apache.hadoop.fs.Path
+        jpath = _fs_classes(self.spark).path
         return {
             v: sum(
                 1
@@ -536,10 +556,11 @@ def zorder_write(
         .repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
-        # the natural call rewrites a table over ITS OWN path; pin the
-        # shuffled+sorted layout before the overwrite truncates the
-        # input files (the LakeTable.upsert read-write-same-path
-        # discipline). Partition order survives localCheckpoint.
+        # the natural call rewrites a table over ITS OWN path, the
+        # root its input was read from (a whole-path overwrite, unlike
+        # the upsert's dynamic one over partition directories); pin
+        # the shuffled+sorted layout before the overwrite replaces the
+        # input files. Partition order survives localCheckpoint.
         .localCheckpoint(eager=True)
         .write.mode("overwrite")
         .parquet(path)

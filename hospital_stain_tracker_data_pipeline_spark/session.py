@@ -10,7 +10,10 @@ oracles), and Arrow is enabled for the few Pandas-UDF surfaces.
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
+from py4j.java_gateway import JavaClass, JavaObject
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
@@ -103,12 +106,39 @@ def local_rows_df(spark: SparkSession, rows, schema):
     )
 
 
+class _FsClasses(NamedTuple):
+    """The JVM classes the seam calls through."""
+
+    path: JavaClass
+    file_util: JavaClass
+    array_seq: JavaClass
+    not_found: JavaObject
+
+
+def _fs_classes(spark: SparkSession) -> _FsClasses:
+    """The session's ``_FsClasses``, resolved on first use. A class
+    resolved through ``spark._jvm`` costs a reflection round trip per
+    dotted name segment, so they are kept; on the session object, so
+    they end with it and a new session, maybe on a new JVM, never sees
+    a stale handle."""
+    classes = getattr(spark, "_fs_classes", None)
+    if classes is None:
+        jvm = spark._jvm
+        classes = spark._fs_classes = _FsClasses(
+            jvm.org.apache.hadoop.fs.Path,
+            jvm.org.apache.hadoop.fs.FileUtil,
+            jvm.scala.collection.immutable.ArraySeq,
+            jvm.java.io.FileNotFoundException._java_lang_class,
+        )
+    return classes
+
+
 def hadoop_fs(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` for ``path`` through the Hadoop
     ``FileSystem`` API, so driver-side listings and writes work on
     whatever scheme the path carries (file:, hdfs:, s3a:, viewfs:, ...)
     — the same resolution Spark's own readers and writers use."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    jpath = _fs_classes(spark).path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
@@ -119,35 +149,53 @@ def hadoop_fs(spark: SparkSession, path: str):
 
 
 def _fs(path: str, *others: str):
-    """``hadoop_fs`` for ``path`` under the active session (the default
+    """``(classes, FileSystem, Path)``: the session's ``_FsClasses`` and
+    ``hadoop_fs`` for ``path`` under the active session (the default
     session when the calling thread has none set, as in a foreachBatch
     callback), plus a Hadoop ``Path`` for each of ``others``."""
     spark = SparkSession.active()
+    classes = _fs_classes(spark)
     fs, jpath = hadoop_fs(spark, path)
-    if not others:
-        return fs, jpath
-    jpath_of = spark._jvm.org.apache.hadoop.fs.Path
-    return (fs, jpath, *(jpath_of(o) for o in others))
+    return (classes, fs, jpath, *(classes.path(o) for o in others))
+
+
+def fs_list_names(path: str) -> list[str]:
+    """Names of the entries directly under the directory ``path``, none
+    for a missing path (a file lists as itself, as Hadoop's
+    ``listStatus`` lists it). One listing, whose paths are joined
+    inside the JVM, so it costs a fixed number of Py4J calls however
+    many entries the directory holds. Any listing failure other than a
+    missing path raises."""
+    classes, fs, jpath = _fs(path)
+    try:
+        level = fs.listStatus(jpath)
+    except Py4JJavaError as e:
+        if classes.not_found.isInstance(e.java_exception):
+            return []
+        raise
+    paths = classes.array_seq.unsafeWrapArray(classes.file_util.stat2Paths(level))
+    joined = paths.mkString("\n")
+    return [p.rsplit("/", 1)[-1] for p in joined.split("\n")] if joined else []
 
 
 def fs_exists(path: str) -> bool:
-    fs, jpath = _fs(path)
+    _, fs, jpath = _fs(path)
     return bool(fs.exists(jpath))
 
 
 def fs_isdir(path: str) -> bool:
-    fs, jpath = _fs(path)
+    _, fs, jpath = _fs(path)
     return bool(fs.isDirectory(jpath))
 
 
 def fs_isfile(path: str) -> bool:
-    fs, jpath = _fs(path)
+    _, fs, jpath = _fs(path)
     return bool(fs.isFile(jpath))
 
 
 def fs_delete(path: str) -> None:
     """Delete ``path``, recursively; a missing path is not an error."""
-    fs, jpath = _fs(path)
+    _, fs, jpath = _fs(path)
     fs.delete(jpath, True)
 
 
@@ -155,13 +203,13 @@ def fs_rename(src: str, dst: str) -> None:
     """Rename ``src`` to ``dst``, which must not exist (a directory
     renamed onto an existing one moves inside it). Raises ``OSError``
     when the FileSystem reports the rename failed."""
-    fs, jsrc, jdst = _fs(src, dst)
+    _, fs, jsrc, jdst = _fs(src, dst)
     if not fs.rename(jsrc, jdst):
         raise OSError(f"could not rename {src} to {dst}")
 
 
 def fs_read_bytes(path: str) -> bytes:
-    fs, jpath = _fs(path)
+    _, fs, jpath = _fs(path)
     stream = fs.open(jpath)
     try:
         return bytes(stream.readAllBytes())
@@ -178,7 +226,7 @@ def fs_write_atomic(path: str, data: bytes) -> None:
     file. ``path`` must not exist: not every FileSystem renames onto a
     file, so a caller replacing one deletes it first."""
     parent, name = os.path.split(path)
-    fs, final, tmp = _fs(path, os.path.join(parent, f".{name}.tmp"))
+    _, fs, final, tmp = _fs(path, os.path.join(parent, f".{name}.tmp"))
     try:
         out = fs.create(tmp, False)
         try:

@@ -803,3 +803,43 @@ def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout, 
     assert rec == {"recovered": True, "from": "compacting", "path": path}
     assert not os.path.isdir(tombs) and not os.path.isdir(data + "_old")
     assert ops["live"](path) == [1, 3, 4, 6, 8]
+
+
+# Filesystem-seam calls (``session._fs``, one FileSystem resolution
+# each) of each lifecycle operation on an 8-row image index with two
+# tombstoned ids. ``_index_layout`` answers from one listing of the
+# artifact dir; while it probed each ANN entry with its own existence
+# check they were 6 / 11 / 16 / 20.
+SEAM_CALL_BUDGET = {"load": 2, "remove": 3, "compact": 8, "fsck": 8}
+
+
+def test_lifecycle_seam_calls(spark, tmp_path, monkeypatch):
+    """Each lifecycle operation stays in its filesystem-seam budget."""
+    from hospital_stain_tracker_data_pipeline_spark import session
+    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+        index_fsck,
+    )
+
+    ops = _fp_ops(spark)
+    path = str(tmp_path / "fp")
+    ops["build"](path, list(range(1, 9)))
+    ops["remove"](path, [2])
+    real, calls = session._fs, []
+
+    def counted(*args):
+        calls.append(args[0])
+        return real(*args)
+
+    monkeypatch.setattr(session, "_fs", counted)
+    runs = {
+        "load": lambda: load_fp_index(spark, path, IMAGE),
+        "remove": lambda: ops["remove"](path, [5]),
+        "fsck": lambda: index_fsck(spark, path),
+        "compact": lambda: ops["compact"](path, force=True),
+    }
+    seen = {}
+    for op, run in runs.items():
+        calls.clear()
+        run()
+        seen[op] = len(calls)
+    assert all(seen[op] <= SEAM_CALL_BUDGET[op] for op in runs), seen

@@ -75,18 +75,34 @@ def _weekly_csv(tmp_path):
 
 
 # Spark jobs of one weekly batch (ingest + dated metrics) into the base
-# lake, as measured: csv header scan, the one observed materialization,
-# the region dimension's resolution and collect, the rejects CSV, and
-# per upsert the observed batch materialization (2 jobs under AQE), the
-# slice's schema, the merge (2) and the overwrite; the metrics job adds
-# its slice's schema. The parent design ran 35.
-BATCH_JOB_BUDGET = 18
+# lake, as measured: the CSV header scan, the one observed
+# materialization, the region dimension's resolution and collect, the
+# rejects CSV, the metrics job's bronze slice's schema, and per upsert
+# ``UPSERT_JOB_BUDGET``. The parent design ran 35, and 18 while each
+# upsert deduped and checkpointed the batch in a window of its own and
+# checkpointed the merge again (6 jobs an upsert).
+BATCH_JOB_BUDGET = 14
+# Spark jobs of one upsert: the observed materialization of the raw
+# batch, the touched slice's schema (its ``mergeSchema`` footer read),
+# and the merge window's shuffle and the write that follows it.
+UPSERT_JOB_BUDGET = 4
+
+
+def _job_names(tracker, job_ids):
+    """Each job's name, as Spark's UI gives it: the call site of its
+    last stage."""
+    return [
+        getattr(tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds)), "name", None)
+        for j in job_ids
+    ]
 
 
 def test_weekly_batch_job_budget(spark, tmp_path, monkeypatch):
     """Counter tripwire on a weekly-style batch: the whole batch stays in
     its job budget, every run-log row is written without a Spark job,
-    and no upsert runs a job to collect its touched partition values."""
+    and each upsert stays in its own budget, runs no job to collect its
+    touched partition values, and checkpoints nothing after it has
+    materialized its batch."""
     lake_dir = _base_lake(spark, tmp_path)
     week, dates = _weekly_csv(tmp_path)
     sc = spark.sparkContext
@@ -117,24 +133,36 @@ def test_weekly_batch_job_budget(spark, tmp_path, monkeypatch):
     res, met = grouped("batch", batch)()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
-    jobs = {group: list(tracker.getJobIdsForGroup(group)) for _, group in groups}
+    jobs = {group: sorted(tracker.getJobIdsForGroup(group)) for _, group in groups}
+    # the failure message: every group's jobs by name, one group a line
+    names = "\n".join(
+        f"{group}: {_job_names(tracker, ids)}" for group, ids in jobs.items()
+    )
 
     assert (res.rows_in, res.rows_loaded, res.rows_rejected) == (26, 24, 2)
     assert met.rows_in == 24
-    assert sum(len(j) for j in jobs.values()) <= BATCH_JOB_BUDGET, jobs
+    assert sum(len(j) for j in jobs.values()) <= BATCH_JOB_BUDGET, names
     run_logs = [g for kind, g in groups if kind == "run_log"]
     assert len(run_logs) == 4
-    assert all(jobs[g] == [] for g in run_logs), jobs
+    assert all(jobs[g] == [] for g in run_logs), names
     upserts = [g for kind, g in groups if kind == "upsert"]
     assert len(upserts) == 2
     for group in upserts:
+        assert len(jobs[group]) <= UPSERT_JOB_BUDGET, names
         stages = [
-            tracker.getStageInfo(s)
+            [
+                getattr(tracker.getStageInfo(s), "name", "")
+                for s in tracker.getJobInfo(j).stageIds
+            ]
             for j in jobs[group]
-            for s in tracker.getJobInfo(j).stageIds
         ]
-        names = [s.name for s in stages if s is not None]
-        assert names and not any(n.startswith("collect at") for n in names), names
+        assert stages and not any(
+            n.startswith("collect at") for job in stages for n in job
+        ), names
+        # the first job materializes the batch; nothing after it does
+        assert not any(
+            n.startswith("localCheckpoint at") for job in stages[1:] for n in job
+        ), names
 
 
 def _legacy_append(spark, path, row):
@@ -386,13 +414,8 @@ def test_metrics_rows_in_is_the_silver_row_count(spark, tmp_path):
     assert full.rows_in == spark.read.parquet(silver_path).count() == (N_DATES + 7) * len(REGIONS)
 
 
-def test_exists_and_scoped_read_make_the_same_py4j_calls_at_any_width(
-    spark, tmp_path, monkeypatch
-):
-    """``exists()`` and a one-partition ``read`` make as many Py4J calls
-    on a 40-partition table as on a 4-partition one: the root's names
-    are listed and joined in the JVM, never fetched one call per
-    partition directory."""
+def _py4j_calls(spark, monkeypatch, fn) -> int:
+    """Py4J calls the driver makes while ``fn()`` runs."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     calls = []
@@ -404,15 +427,21 @@ def test_exists_and_scoped_read_make_the_same_py4j_calls_at_any_width(
             calls.append(1)
         return send(command, *args, **kwargs)
 
-    def cost(fn):
-        calls.clear()
-        monkeypatch.setattr(client, "send_command", counted)
-        try:
-            fn()
-        finally:
-            monkeypatch.setattr(client, "send_command", send)
-        return len(calls)
+    monkeypatch.setattr(client, "send_command", counted)
+    try:
+        fn()
+    finally:
+        monkeypatch.setattr(client, "send_command", send)
+    return len(calls)
 
+
+def test_exists_and_scoped_read_make_the_same_py4j_calls_at_any_width(
+    spark, tmp_path, monkeypatch
+):
+    """``exists()`` and a one-partition ``read`` make as many Py4J calls
+    on a 40-partition table as on a 4-partition one: the root's names
+    are listed and joined in the JVM, never fetched one call per
+    partition directory."""
     costs = []
     for width in (4, N_DATES):
         t = LakeTable(spark, str(tmp_path / f"w{width}"), keys=["date", "k"], version_col="v")
@@ -424,5 +453,26 @@ def test_exists_and_scoped_read_make_the_same_py4j_calls_at_any_width(
             )
         )
         assert t.exists() and t.read(["2026-01-02"]).count() == 1
-        costs.append((cost(t.exists), cost(lambda: t.read(["2026-01-02"]))))
+        costs.append((
+            _py4j_calls(spark, monkeypatch, t.exists),
+            _py4j_calls(spark, monkeypatch, lambda: t.read(["2026-01-02"])),
+        ))
     assert costs[0] == costs[1], costs
+
+
+def test_region_lookup_makes_the_same_py4j_calls_at_any_width(spark, monkeypatch):
+    """The ingest's region lookup map is built with as many Py4J calls
+    for 1 000 region names as for the reference's 56, and maps every
+    name to its id; an empty dimension maps nothing."""
+    costs = []
+    for width in (56, 1000):
+        ids = {f"region-{i}": f"id-{i}" for i in range(width)}
+        costs.append(_py4j_calls(spark, monkeypatch, lambda: ingest_mod._region_lookup(ids)))
+        lookup = ingest_mod._region_lookup(ids)
+        names = spark.createDataFrame(
+            [(n,) for n in [*ids, "unknown"]], "region string"
+        ).select("region", lookup[F.col("region")].alias("region_id"))
+        assert dict(names.collect()) == {**ids, "unknown": None}
+    assert costs[0] == costs[1], costs
+    empty = spark.range(1).select(ingest_mod._region_lookup({})[F.lit("CA")].alias("id"))
+    assert empty.first().id is None
