@@ -83,16 +83,11 @@ from .pq import (  # noqa: F401
     build_ann_index,
     compact_ann_index,
     knn_ivf_pq,
-    knn_pq,
     remove_from_ann_index,
     search_ann_index,
     load_pq_index,
-    pack_codes,
-    pq_decode,
-    pq_encode,
     pq_fit_codebooks,
     save_pq_index,
-    unpack_codes,
 )
 from .inference import (  # noqa: F401
     batch_score,
@@ -114,15 +109,11 @@ from .dedup import (  # noqa: F401
     dedup_against_corpus,
     dedup_pairs_against_corpus,
     dedup_substrings,
-    hamming_hot_bucket_report,
     hamming_pairs,
     hamming_pairs_against_corpus,
     index_fsck,
-    simhash_hot_bucket_report,
     load_dedup_index,
     load_fp_index,
-    lsh_hot_buckets,
-    minhash_hot_bucket_report,
     save_fp_index,
     minhash_signature_index,
     recover_index_swap,
@@ -130,7 +121,6 @@ from .dedup import (  # noqa: F401
     select_cluster_representatives,
 )
 from .similarity import (  # noqa: F401
-    ann_hot_bucket_report,
     dequantize_embeddings,
     load_ivf_index,
     quantize_embeddings,

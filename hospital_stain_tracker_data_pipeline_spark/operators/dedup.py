@@ -398,62 +398,39 @@ def _capped_banded(
     quadratic COST; dropping them is a documented recall trade on
     exactly the pairs whose entire evidence is ubiquitous boilerplate.
 
-    Execution (round-14 count-first fast path): hot buckets are
-    detected with a MAP-SIDE-COMBINED count aggregation — the shuffle
-    carries (key, partial_count) rows, never raw members — run as its
-    own cheap ACTION first. On a healthy corpus the hot set is EMPTY,
-    and the fast path then skips both the anti-join and the
-    checkpoint of the capped table entirely (the r13 form always
-    materialized it: a full write of the O(corpus × bands) table per
-    call bought nothing when nothing was dropped — at cluster scale
-    that write is the dominant cap cost). The count doubles as free
-    drop telemetry for every capped call. When hot buckets EXIST, the
-    anti-join (AQE broadcasts the small hot set; no forced hint, same
-    reasoning as the tombstone anti-join) runs under one
-    localCheckpoint so the cap executes once, not once per self-join
-    side — the aggregation re-runs inside that job, acceptable on the
-    rare hot path. A windowed count would be one stage cheaper but
-    hash-co-locates every hot bucket's RAW rows on a single WindowExec
-    task — reintroducing at the cap the exact single-reducer skew the
-    cap exists to remove (round-13 review finding; do not revisit).
+    The hot set is a MAP-SIDE-COMBINED count aggregation: the shuffle
+    carries (key, partial_count) rows, never raw members. A windowed
+    count would be one stage cheaper but hash-co-locates every hot
+    bucket's RAW rows on a single WindowExec task — the exact
+    single-reducer skew the cap exists to remove. The hot set reaches
+    the input through a left_anti join (AQE broadcasts the small hot
+    set; no forced hint, same reasoning as the tombstone anti-join).
+
+    Without ``telemetry`` the cap is a PLAN NODE, not an action: on a
+    healthy corpus AQE's empty-relation propagation collapses the
+    anti-join to the input at runtime, and the aggregation rides
+    inside the consumer's job (its exchange is reused by both
+    self-join sides). ``telemetry`` callers (the curation pipelines,
+    which publish ``hot_buckets_dropped``) pay one counting action,
+    and when hot buckets exist the capped table is checkpointed so the
+    cap executes once, not once per join side. The count cannot ride
+    the consumer's action as an ``observe()``: AQE removes the
+    observed node whenever the relation around it turns out empty —
+    on a healthy corpus, an empty input, and an all-hot corpus whose
+    self-join is empty alike — so the Observation never reports and
+    "no row means 0" would under-report the all-hot case.
 
     ``persist_input=True`` is for callers whose PRODUCER is itself
     expensive and not already checkpointed (the ANN hyperplane gemm,
     the incremental probe's corpus index scan + tombstone
-    suppression): the producer is localCheckpoint'd ONCE — computing
-    it exactly once and fusing that single execution with the write —
-    and every cap consumer (the hot-count aggregation, the anti-join,
-    and both self-join sides on the healthy path) reads the flat
-    checkpoint. That checkpoint's blocks are released by the
-    ContextCleaner once the returned frame is garbage collected (a
-    GC-bound lifetime — long-running per-micro-batch callers
-    accumulate bounded id+hash residue between GCs, the documented
-    ``materialize`` trade). The round-13 form persisted + eagerly
-    counted the producer and then, hot set or not, checkpointed it
-    AGAIN — two full writes of the biggest intermediate where one
-    suffices (guide §2.4: remove the pass outright). With
+    suppression): the producer is localCheckpoint'd ONCE and every cap
+    consumer (the hot-count aggregation, the anti-join, and both
+    self-join sides) reads the flat checkpoint. Its blocks are
+    released by the ContextCleaner once the returned frame is garbage
+    collected (the documented ``materialize`` trade). With
     ``persist_input=False`` the producer is a cheap projection of an
-    already-materialized parent, so the self-join sides just recompute
-    it.
-
-    Round 15 (lazy cap): callers that do NOT ask for drop telemetry
-    get the cap as a PLAN NODE, not an action — a plain left_anti join
-    against the hot set, no driver-side count, no checkpoint of the
-    capped table. On a healthy corpus (empty hot set) AQE's
-    empty-relation propagation collapses the anti-join to the input at
-    runtime, so the only residual cost is the hot aggregation stage
-    riding INSIDE the consumer's job instead of a separate per-call
-    Spark job (guide §1/§2.4 — the count-first form charged every
-    capped call one full job of scheduling + scan even when nothing
-    was ever dropped; at the bench that job was the whole regression
-    the driver measured on the audio/video near-dup extras). The agg
-    and anti-join subtrees appear once per self-join side, but their
-    exchanges canonicalize identically and are reused, so the hot
-    detection still executes once. ``telemetry`` callers (the curation
-    pipelines, which PUBLISH the drop count in run reports) keep the
-    eager count-first path: the report is worth one job, and when hot
-    buckets exist the capped table is still checkpointed so the cap
-    executes once, not once per join side."""
+    already-materialized parent, so the consumers just recompute
+    it."""
     if max_bucket is None:
         if telemetry is not None:
             telemetry["hot_buckets_dropped"] = 0
@@ -461,139 +438,48 @@ def _capped_banded(
     if max_bucket < 2:
         raise ValueError(f"max_bucket={max_bucket} must be >= 2 (or None)")
     src = materialize(banded) if persist_input else banded
-    # the hot set is derived from the ``lsh_hot_buckets`` audit hook,
-    # so reports can never diverge from what the cap drops
-    hot = lsh_hot_buckets(src, key_cols, max_bucket)
+    hot = (
+        src.groupBy(*key_cols)
+        .agg(F.count("*").alias("members"))
+        .filter(F.col("members") > max_bucket)
+        .select(*key_cols)
+    )
     if telemetry is None:
-        # lazy in-plan cap — no action, no checkpoint; AQE prunes the
-        # anti-join entirely when the hot set comes back empty
-        return src.join(hot.select(*key_cols), key_cols, "left_anti")
+        return src.join(hot, key_cols, "left_anti")
     n_hot = hot.count()
     telemetry["hot_buckets_dropped"] = n_hot
     if n_hot == 0:
         return src
-    return materialize(
-        src.join(hot.select(*key_cols), key_cols, "left_anti")
-    )
+    return materialize(src.join(hot, key_cols, "left_anti"))
 
 
-def lsh_hot_buckets(
-    banded: DataFrame, key_cols: list[str], max_bucket: int
-) -> DataFrame:
-    """Report hook for the hot-bucket cap: the buckets ``_capped_banded``
-    would drop, with their membership — ``(*key_cols, members)`` rows.
-    Pipelines surface ``count()`` of this (and the worst offenders) in
-    their run report so a recall trade is visible, never silent."""
-    return (
-        banded.groupBy(*key_cols)
-        .agg(F.count("*").alias("members"))
-        .filter(F.col("members") > max_bucket)
-    )
-
-
-def minhash_hot_bucket_report(
+def _minhash_candidate_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    k: int = 3,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """(band, bucket, members) rows the MinHash pair operators drop
-    under ``max_bucket`` — same signature pipeline as
-    ``minhash_lsh_dedup_pairs``, so the report matches what the
-    operator actually skipped."""
-    sigs = minhash_signature_index(df, text_col, id_col, num_hashes, k)
-    banded = _minhash_banded(sigs, id_col, num_hashes, bands)
-    if max_bucket is None:  # no cap → nothing is dropped → empty report
-        return banded.groupBy("band", "bucket").agg(
-            F.count("*").alias("members")
-        ).limit(0)
-    return lsh_hot_buckets(banded, ["band", "bucket"], max_bucket)
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    k: int = 3,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """LSH candidate pairs: equal band-slices of the MinHash signature
-    → same bucket → pair. rows = (id_a, id_b, n_bands_matched).
-
-    Shuffle is keyed by (band, bucket-hash): near-dups collide in ≥1
-    band w.h.p.; everything else never pairs up — this is what replaces
-    the O(n²) similarity join at scale. Buckets with more than
-    ``max_bucket`` members are dropped before the self-join (see
-    ``_capped_banded``); audit with ``minhash_hot_bucket_report``."""
-    # Two-step projection: the hashed-shingle array is referenced
-    # num_hashes times below; Catalyst's CollapseProject keeps the
-    # non-cheap md5 pass in its own project, so it runs once per row.
-    hashed = fanout(df).select(
-        F.col(id_col), hashed_shingles(F.col(text_col), k).alias("_hs")
-    )
-    sigs = materialize(
-        hashed.select(
-            F.col(id_col),
-            minhash_signature_udf(num_hashes)(F.col("_hs")).alias("sig"),
-        )
-    )
-    banded = _capped_banded(
-        _minhash_banded(sigs, id_col, num_hashes, bands),
-        ["band", "bucket"],
-        max_bucket,
-    )
-    a = banded.select(
-        F.col("band"), F.col("bucket"), F.col(id_col).alias("id_a")
-    )
-    b = banded.select(
-        F.col("band"), F.col("bucket"), F.col(id_col).alias("id_b")
-    )
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_bands_matched"))
-    )
-
-
-def minhash_lsh_dedup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    k: int = 3,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    k: int,
+    max_bucket: int | None,
     telemetry: dict | None = None,
-) -> DataFrame:
-    """Candidates verified with exact Jaccard ≥ threshold (classic
-    candidate-gen + verify): LSH recall is probabilistic, the verify
-    step makes the OUTPUT exact-above-threshold (only pairs LSH missed
-    entirely can be absent). Band buckets with more than ``max_bucket``
-    members are dropped before the candidate self-join
-    (``_capped_banded`` — boilerplate carries no near-dup signal);
-    audit the trade with ``minhash_hot_bucket_report``.
+) -> tuple[DataFrame, DataFrame]:
+    """``(sets, cands)`` — the candidate half of
+    ``minhash_lsh_dedup_pairs``: ``sets`` is the materialized ``(id,
+    shingles, sig)`` pass and ``cands`` the distinct ``(id_a, id_b)``
+    pairs (``id_a < id_b``) that share a band bucket after the
+    hot-bucket cap. Equal band-slices of the MinHash signature → same
+    bucket → pair, so the shuffle is keyed by (band, bucket-hash):
+    near-dups collide in ≥1 band w.h.p. and everything else never
+    pairs up — this is what replaces the O(n²) similarity join.
 
     ONE shingle+md5 pass over the corpus serves both stages: the
     60-bit verify sets are materialized once, and the 31-bit signature
     input is derived by masking (``hashed_shingles`` ≡
     ``array_distinct(hashed_shingles64 & MASK31)`` — same md5 prefix,
-    so the signatures are bit-identical to the two-pass form). The md5
-    expression work is the dominant scan-stage cost, so this halves it.
-
-    Round 14: the signature UDF rides the SAME checkpoint as the
-    shingle sets — one ``(id, shingles, sig)`` pass instead of
-    checkpointing the sets and then re-reading them through a second
-    checkpointed UDF pass. The signature values are unchanged (same
-    masked input, same UDF); the banding below projects (id, sig) off
-    the combined checkpoint and the verify projects (id, shingles).
-    """
+    so the signatures are bit-identical to
+    ``minhash_signature_index``'s). The signature UDF rides the same
+    checkpoint as the shingle sets; the banding projects (id, sig) off
+    it and the verify projects (id, shingles)."""
     sig_input = F.array_distinct(
         F.transform(
             F.col("shingles"), lambda h: h.bitwiseAND(F.lit(_MASK31))
@@ -629,6 +515,33 @@ def minhash_lsh_dedup_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
+    )
+    return sets, cands
+
+
+def minhash_lsh_dedup_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    threshold: float = 0.5,
+    num_hashes: int = 32,
+    bands: int = 8,
+    k: int = 3,
+    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    telemetry: dict | None = None,
+) -> DataFrame:
+    """Candidates verified with exact Jaccard ≥ threshold (classic
+    candidate-gen + verify): LSH recall is probabilistic, the verify
+    step makes the OUTPUT exact-above-threshold (only pairs LSH missed
+    entirely can be absent). Band buckets with more than ``max_bucket``
+    members are dropped before the candidate self-join
+    (``_capped_banded`` — boilerplate carries no near-dup signal);
+    pass a ``telemetry`` dict to receive the number dropped as
+    ``hot_buckets_dropped``. Candidate generation is
+    ``_minhash_candidate_pairs``, whose shingle pass also feeds the
+    verify."""
+    sets, cands = _minhash_candidate_pairs(
+        df, text_col, id_col, num_hashes, bands, k, max_bucket, telemetry
     )
     a = sets.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
     b = sets.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
@@ -798,7 +711,7 @@ def dedup_pairs_against_corpus(
     Scale shape: new batch is typically ≪ corpus, so the band join is
     a broadcast-able probe of the (new) side into the corpus band
     table; candidates are bounded by banding exactly as in
-    ``minhash_lsh_candidates``. Integer-exact signatures both sides →
+    ``_minhash_candidate_pairs``. Integer-exact signatures both sides →
     DuckDB-replayable (pinned in ``tests/test_dedup_similarity.py``)."""
     # fail fast on an index built with a different num_hashes: banding
     # would silently use the wrong slices and the estimate the wrong
@@ -913,49 +826,13 @@ def token_hashes(text: Column) -> Column:
     )
 
 
-def simhash_from_hashes(hashes: Column, nbits: int = 32) -> Column:
-    """SimHash from pre-hashed tokens: sum ±1 votes per bit, sign →
-    bit. Returns a bigint (nbits wide). Keep the hash array in its own
-    projection (see ``simhash_pairs``) so the md5 pass runs once, not
-    nbits times.
-
-    Entirely higher-order functions (aggregate over the array) — no
-    UDF, so the fingerprint computes inside codegen next to the scan."""
-    # aggregate's merge lambda must take exactly (acc, x) — a third
-    # parameter (even defaulted) breaks PySpark's binding.
-    def _votes(j: int):
-        return F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-
-    bit_exprs = []
-    for j in range(nbits):
-        votes = _votes(j)
-        bit_exprs.append(
-            F.when(votes > 0, F.lit(2 ** j).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    out = bit_exprs[0]
-    for e in bit_exprs[1:]:
-        out = out + e
-    return out
-
-
-def simhash64(text: Column, nbits: int = 32) -> Column:
-    """SimHash directly from text (convenience; prefer the two-step
-    ``token_hashes`` → ``simhash_from_hashes`` in plans so the md5 pass
-    isn't replicated per bit)."""
-    return simhash_from_hashes(token_hashes(text), nbits)
-
-
 def simhash_udf(nbits: int = 32):
-    """Vectorized SimHash from pre-hashed tokens (Arrow-batched numpy) —
-    bit-identical to ``simhash_from_hashes`` (integer vote arithmetic),
-    ~20× faster: per batch, one flattened int64 vector, one masked-shift
-    + add.reduceat pass per bit instead of nbits interpreted
-    higher-order aggregates per row."""
+    """Vectorized SimHash from pre-hashed tokens (``token_hashes``):
+    bit j of the fingerprint is 1 iff the tokens with bit j set
+    outnumber those without (each occurrence votes ±1). Arrow-batched
+    numpy — per batch, one flattened int64 vector and one masked-shift
+    + add.reduceat pass per bit. Integer votes, so bit-identical to the
+    DuckDB oracle ``plans.text.SQL_DEDUP_SIMHASH``."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("bigint")
@@ -1042,8 +919,8 @@ def simhash_pairs(
     self-join (identical simhashes from templated/boilerplate pages are
     the classic hot key — see ``_banded_candidate_pairs``); pairs whose
     ONLY shared band lives in a dropped bucket are the documented
-    recall trade. Audit with ``simhash_hot_bucket_report``;
-    ``max_bucket=None`` restores the exact brute-force-equal output.
+    recall trade. ``max_bucket=None`` restores the exact
+    brute-force-equal output.
     """
     cand = _simhash_band_candidate_pairs(
         df,
@@ -1101,11 +978,11 @@ def _banded_candidate_pairs(
 ) -> DataFrame:
     """(id_a, id_b, h_a, h_b) candidates sharing ≥ 1 band — the ONE
     pigeonhole banding implementation, shared by the simhash text
-    path, the generic ``hamming_pairs`` entry point, and the
-    test/introspection hook so they cannot diverge. ``h`` must be a
-    MATERIALIZED (id, hash) frame: both sides of the self-join
-    re-execute the producing subplan otherwise (the ``materialize``
-    contract — for image hashes that subplan is a full pixel decode).
+    path and the generic ``hamming_pairs`` entry point so they cannot
+    diverge. ``h`` must be a MATERIALIZED (id, hash) frame: both sides
+    of the self-join re-execute the producing subplan otherwise (the
+    ``materialize`` contract — for image hashes that subplan is a full
+    pixel decode).
 
     (band, val) buckets with more than ``max_bucket`` members are
     dropped before the self-join (``_capped_banded``): identical
@@ -1117,10 +994,10 @@ def _banded_candidate_pairs(
     ~2·10¹²-row shuffle key uncapped). Hot buckets carry no near-dup
     SIGNAL (every member trivially matches every other), so the drop
     is the same documented recall trade as the MinHash/ANN tiers;
-    audit with ``hamming_hot_bucket_report`` /
-    ``simhash_hot_bucket_report``. The explode feeding the cap is a
-    cheap projection of the already-materialized ``h``, so the cap's
-    two consumers recompute it rather than riding a persist.
+    ``telemetry`` receives the number dropped. The explode feeding the
+    cap is a cheap projection of the already-materialized ``h``, so
+    the cap's two consumers recompute it rather than riding a
+    persist.
 
     ``prefilter_max_hamming`` (round 14): verifying callers — every
     production consumer ends with ``bit_count(h_a ^ h_b) <=
@@ -1131,8 +1008,9 @@ def _banded_candidate_pairs(
     same-bucket pair once PER agreeing band) to verified pairs only —
     guide §2.3, shuffle fewer bytes. Filter-then-distinct equals
     distinct-then-filter bit-for-bit (the predicate depends only on
-    the distinct key columns). ``None`` keeps the raw candidate
-    semantics for the introspection hooks."""
+    the distinct key columns). ``None`` keeps the raw candidates
+    (every pair sharing a band), which the candidate-count tests read
+    through ``_simhash_band_candidate_pairs``."""
     banded = _band_explode(h, id_col, hash_col, nbits, max_hamming, "_id", "_h")
     banded = _capped_banded(banded, ["band", "val"], max_bucket, telemetry=telemetry)
     a = banded.select(
@@ -1149,62 +1027,6 @@ def _banded_candidate_pairs(
         )
     # a pair agreeing on several bands appears once per band
     return joined.select("id_a", "id_b", "h_a", "h_b").distinct()
-
-
-def hamming_hot_bucket_report(
-    hashes: DataFrame,
-    hash_col: str,
-    id_col: str,
-    nbits: int = 64,
-    max_hamming: int = 3,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """(band, val, members) rows the Hamming pair engine drops under
-    ``max_bucket`` — same banding projection as
-    ``hamming_pairs``/``_banded_candidate_pairs``, so the report
-    matches what the operator actually skipped. Pipelines surface its
-    count (``curate_media``'s ``media_report``, the CLI media gates)
-    so the recall trade is visible, never silent."""
-    banded = _band_explode(
-        hashes.select(
-            F.col(id_col), F.col(hash_col).cast("long").alias("_fp")
-        ).filter(F.col("_fp").isNotNull()),
-        id_col,
-        "_fp",
-        nbits,
-        max_hamming,
-        "_id",
-        "_h",
-    )
-    if max_bucket is None:  # no cap → nothing is dropped → empty report
-        return (
-            banded.groupBy("band", "val")
-            .agg(F.count("*").alias("members"))
-            .limit(0)
-        )
-    return lsh_hot_buckets(banded, ["band", "val"], max_bucket)
-
-
-def simhash_hot_bucket_report(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    nbits: int = 32,
-    max_hamming: int = 3,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """``hamming_hot_bucket_report`` for the simhash-from-text path:
-    computes the same fingerprints ``simhash_pairs`` does, so the
-    report matches what that operator actually skipped."""
-    hashed = fanout(df).select(
-        F.col(id_col), token_hashes(F.col(text_col)).alias("_th")
-    )
-    h = hashed.select(
-        F.col(id_col), simhash_udf(nbits)(F.col("_th")).alias("simhash")
-    )
-    return hamming_hot_bucket_report(
-        h, "simhash", id_col, nbits, max_hamming, max_bucket
-    )
 
 
 def _simhash_band_candidate_pairs(
@@ -1234,22 +1056,6 @@ def _simhash_band_candidate_pairs(
         max_bucket,
         prefilter_max_hamming=prefilter_max_hamming,
     )
-
-
-def simhash_band_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    nbits: int = 32,
-    max_hamming: int = 3,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Candidate pairs BEFORE the Hamming verify (test/introspection
-    hook): everything that shares ≥ 1 band. |candidates| << C(n,2) is
-    the whole point of banding. Same generator as ``simhash_pairs``."""
-    return _simhash_band_candidate_pairs(
-        df, text_col, id_col, nbits, max_hamming, max_bucket
-    ).select("id_a", "id_b")
 
 
 def hamming_pairs(
@@ -1282,9 +1088,10 @@ def hamming_pairs(
     (band, val) buckets above ``max_bucket`` are dropped before the
     self-join — identical fingerprints (blank/solid images, black
     frames, silence) are the most probable real-world hot key of the
-    whole dedup surface; see ``_banded_candidate_pairs``. Audit with
-    ``hamming_hot_bucket_report``; ``max_bucket=None`` restores the
-    exact brute-force-equal output."""
+    whole dedup surface; see ``_banded_candidate_pairs``. A
+    ``telemetry`` dict receives the number dropped as
+    ``hot_buckets_dropped``; ``max_bucket=None`` restores the exact
+    brute-force-equal output."""
     h = materialize(
         df.select(
             F.col(id_col), F.col(hash_col).cast("long").alias("_fp")
@@ -1351,8 +1158,8 @@ def hamming_pairs_against_corpus(
     by m_new new items and m_corpus corpus items contributes
     m_new·m_corpus candidate rows, so per-side caps bound any single
     bucket to max_bucket² (same recall trade as
-    ``dedup_pairs_against_corpus``; audit with
-    ``hamming_hot_bucket_report`` on either side). The corpus side's
+    ``dedup_pairs_against_corpus``; ``telemetry`` sums both sides'
+    drops). The corpus side's
     cap rides a short-lived persist (the cap's hot-count aggregation
     and anti-join would each re-run the index scan otherwise); the new
     side is already materialized."""
@@ -2168,13 +1975,18 @@ class _TombstoneState(NamedTuple):
 
 
 def _tombstone_state(
-    spark: SparkSession, path: str, id_col: str, raw: DataFrame | None = None
+    spark: SparkSession,
+    layout: tuple[str, str],
+    id_col: str,
+    raw: DataFrame | None = None,
 ) -> _TombstoneState:
     """Read an artifact's data and tombstone dirs once each and count
     them: one aggregate over the data dir gives both row counts
-    (``count(id_col)`` skips NULLs). A caller that has read the data
-    dir already passes that frame as ``raw``."""
-    data, tombs = _index_layout(path)
+    (``count(id_col)`` skips NULLs). ``layout`` is the artifact's
+    ``_index_layout``, which every caller has already resolved. A
+    caller that has read the data dir already passes that frame as
+    ``raw``."""
+    data, tombs = layout
     if raw is None:
         raw = spark.read.parquet(data)
     n_phys, n_rows = raw.agg(F.count(F.lit(1)), F.count(id_col)).first()
@@ -2215,7 +2027,8 @@ def _artifact_remove(
             f"ids frame lacks column {id_col!r} (has {ids.columns}) — "
             f"the index at {path} keys on {id_col!r}"
         )
-    data, tombs = _index_layout(path)
+    layout = _index_layout(path)
+    data, tombs = layout
     # cast to the INDEX's id type before anything is written: two
     # removes carrying different physical id types (int32 vs int64
     # parquet from different tools) would otherwise mix schemas in the
@@ -2231,7 +2044,7 @@ def _artifact_remove(
     if n_req:
         tomb.write.mode("append").parquet(tombs)
     # the data dir is unchanged by a remove: its frame is reused
-    st = _tombstone_state(spark, path, id_col, raw)
+    st = _tombstone_state(spark, layout, id_col, raw)
     return {
         "requested": n_req,
         "tombstones_total": st.tombstones,
@@ -2269,8 +2082,9 @@ def _artifact_compact(
     and after — compaction changes storage, never semantics. A
     wrapper whose validation read the data dir passes that frame as
     ``raw``."""
-    data, tombs = _index_layout(path)
-    st = _tombstone_state(spark, path, id_col, raw)
+    layout = _index_layout(path)
+    data, tombs = layout
+    st = _tombstone_state(spark, layout, id_col, raw)
     if st.tomb is None:
         return {
             "compacted": False,
@@ -2410,7 +2224,8 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
     raise, so a fleet sweep over many artifacts reports per-artifact
     instead of stopping at the first bad one."""
     p = path.rstrip("/")
-    data, _ = _index_layout(p)
+    layout = _index_layout(p)
+    data, _ = layout
     report: dict = {"path": p, "ok": False, "stale_dirs": _swap_siblings(data)}
     if report["stale_dirs"] and not fs_isdir(data):
         # compact-swap crash window: the sibling dirs hold the LAST
@@ -2515,7 +2330,7 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
                 )
         if index is not None:
             report["live_rows"] = index.count()
-            st = _tombstone_state(spark, p, id_col)
+            st = _tombstone_state(spark, layout, id_col)
             report["rows"] = st.rows
             report["tombstones"] = st.tombstones
             report["tombstone_ratio"] = st.ratio

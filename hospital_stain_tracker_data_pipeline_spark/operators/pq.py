@@ -20,9 +20,7 @@ Spark-first shapes, exact-integer arithmetic end-to-end:
   Lloyd iteration — the shuffle payload is the ``m x n_codes x dsub``
   codebook, never corpus rows;
 - codes live as ``array<smallint>`` (m per-subspace ids) — parquet
-  dictionary+RLE encodes them near the 1-byte ideal; ``pack_codes``/
-  ``unpack_codes`` give the literal m-byte ``binary`` for byte-budget
-  sinks;
+  dictionary+RLE encodes them near the 1-byte ideal;
 - ADC scoring stays on the corpus partitions: the per-query distance
   table is a driver-side ``q x m x n_codes`` int64 tensor (tiny — the
   same bytes the pre-round-15 broadcast-joined table frame shipped)
@@ -42,7 +40,7 @@ import json
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import (
@@ -75,12 +73,7 @@ from .similarity import (
 __all__ = [
     "ann_index_drift",
     "pq_fit_codebooks",
-    "pq_encode",
-    "pq_decode",
-    "knn_pq",
     "knn_ivf_pq",
-    "pack_codes",
-    "unpack_codes",
     "save_pq_index",
     "load_pq_index",
     "build_ann_index",
@@ -262,80 +255,6 @@ def pq_fit_codebooks(
     return cb
 
 
-def pq_encode(
-    df: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Encode an embedding frame to ``(id, pq_code array<smallint>)``
-    — m per-subspace codeword ids per vector. One narrow pass, no
-    shuffle; NULL embeddings stay NULL. ``array<smallint>`` is the
-    join-able representation ADC consumes; ``pack_codes`` turns it
-    into the literal m-byte binary when byte budget matters more than
-    joinability."""
-    return df.select(
-        F.col(id_col),
-        _pq_assign_udf(codebooks)(
-            quantize_vec_long(F.col(vec_col))
-        ).alias("pq_code"),
-    )
-
-
-def pq_decode(
-    df: DataFrame, codebooks: np.ndarray, id_col: str = "vec_id"
-) -> DataFrame:
-    """Reconstruct approximate vectors from codes: codeword j of each
-    subspace, dequantized off the 1e-6 grid, concatenated in subspace
-    order -> ``embedding array<double>``. The reconstruction error is
-    the quantization distortion the fit minimized; useful for
-    spot-audits and for feeding PQ-compressed vectors to operators
-    that want real arrays."""
-    cb = np.ascontiguousarray(codebooks, dtype=np.int64)
-    m, _, dsub = cb.shape
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<double>")
-    def _decode(codes: pd.Series) -> pd.Series:
-        out = []
-        for c in codes:
-            if c is None:
-                out.append(None)
-                continue
-            idx = np.asarray(c, dtype=np.int64)
-            vec = np.concatenate(
-                [cb[s, idx[s], :] for s in range(m)]
-            ).astype(np.float64) / QUANT_SCALE
-            out.append(vec)
-        return pd.Series(out, dtype=object)
-
-    return df.select(F.col(id_col), _decode("pq_code").alias("embedding"))
-
-
-def pack_codes(col: Column) -> Column:
-    """``array<smallint>`` codes -> literal m-byte ``binary`` (one
-    byte per subspace; requires n_codes <= 256). Pure expression:
-    each id renders as a 2-hex-digit chunk, ``unhex`` packs the
-    concatenation — no UDF in the storage path."""
-    return F.unhex(
-        F.array_join(
-            F.transform(col, lambda c: F.lpad(F.hex(c), 2, "0")), ""
-        )
-    )
-
-
-def unpack_codes(col: Column, m: int) -> Column:
-    """Inverse of ``pack_codes``: m-byte binary -> array<smallint>.
-    ``hex`` then fixed-width 2-char slices; pure expression."""
-    h = F.hex(col)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda i: F.conv(F.substring(h, i * 2 + 1, 2), 16, 10).cast(
-            "smallint"
-        ),
-    )
-
-
 def _adc_table_np(
     query: DataFrame,
     codebooks: np.ndarray,
@@ -343,7 +262,7 @@ def _adc_table_np(
     vec_col: str,
 ):
     """The per-query ADC lookup table as a DRIVER-SIDE numpy tensor:
-    ``(qids, tbl, qid_type)`` with ``tbl[qi, sub, code]`` the
+    ``(qids, tbl)`` with ``tbl[qi, sub, code]`` the
     exact-integer partial squared-L2 between query qi's quantized
     subvector and the codeword, on the 1e-12 grid. The table was
     ALWAYS broadcast-sized by construction (q × m × n_codes); before
@@ -377,7 +296,6 @@ def _adc_table_np(
             f"codes is {n * per_query} bytes, over the driver limit of "
             f"{_ADC_TABLE_MAX_BYTES} bytes; search fewer queries at a time"
         )
-    qid_type = query.schema[query_id_col].dataType.simpleString()
     qids = []
     mats = []
     for r in rows:
@@ -390,116 +308,70 @@ def _adc_table_np(
         if mats
         else np.zeros((0, m, kk), dtype=np.int64)
     )
-    return qids, tbl, qid_type
+    return qids, tbl
 
 
 def _adc_topk(
-    codes: DataFrame,
+    cand: DataFrame,
     qids: list,
     tbl: np.ndarray,
-    qid_type: str,
     k: int,
     id_col: str,
     query_id_col: str,
-    per_query: bool,
-    exclude_self: bool = True,
+    exclude_self: bool,
 ) -> DataFrame:
-    """Shared ADC scoring tail: score each candidate with ``m`` numpy
-    table lookups inside one Arrow pass (the table rides the UDF
-    closure — model-sized, the same bytes the pre-round-15 broadcast
-    join shipped), then window top-k per query (distance ascending,
-    ties to the lowest id). The old shape posexploded every candidate
-    into m rows, broadcast-joined the table frame and re-aggregated
-    the partials — a cand×m explode plus a full (query, id) shuffle
-    that pure per-row arithmetic never needed (guide §2.4/§4.2).
-    Integer sums are exact, so the distances — and the top-k — are
-    bit-identical. ``per_query=False`` means the code frame carries no
-    query column: each corpus row fans out to every query inside the
-    scoring pass (the full-scan path); ``per_query=True`` scores the
-    already-per-query candidates row-wise."""
+    """The one ADC scoring path: score each ``(query, id, pq_code)``
+    candidate with ``m`` numpy table lookups inside one Arrow pass (the
+    model-sized table rides the UDF closure, so no per-subspace
+    explode, join or (query, id) re-aggregation shuffle is needed),
+    then window top-k per query (distance ascending, ties to the
+    lowest id). Integer sums are exact, so the distances — and the
+    top-k — are the same under any engine and partitioning.
+
+    ``exclude_self=True`` (the ``knn_ivf`` convention, right when the
+    queries ARE corpus rows) drops rows where query id == corpus id
+    BEFORE the window, so a self-match never consumes one of the k
+    slots. Pass False when the query-id domain is external to the
+    corpus: there a coincidental numeric id collision would silently
+    discard a real nearest neighbor."""
     from pyspark.sql import Window
     from pyspark.sql.functions import pandas_udf
 
     m = tbl.shape[1]
     sub_idx = np.arange(m)
-    if per_query:
-        qindex = {q: i for i, q in enumerate(qids)}
+    qindex = {q: i for i, q in enumerate(qids)}
 
-        @pandas_udf("long")
-        def _score(qid: pd.Series, pcodes: pd.Series) -> pd.Series:
-            out = np.empty(len(qid), dtype=object)
-            if len(qid):
-                qi = qid.map(qindex)
-                cod = pcodes.to_numpy()
-                valid = qi.notna().to_numpy() & np.array(
-                    [c is not None for c in cod], dtype=bool
-                )
-                if valid.any():
-                    c = np.stack(cod[valid]).astype(np.int64)
-                    qiv = qi.to_numpy()[valid].astype(np.int64)
-                    vals = tbl[qiv[:, None], sub_idx[None, :], c].sum(
-                        axis=1
-                    )
-                    for j, i in enumerate(np.nonzero(valid)[0]):
-                        out[i] = int(vals[j])
-            return pd.Series(out)
-
-        scored = codes.select(
-            F.col(query_id_col),
-            F.col(id_col),
-            _score(F.col(query_id_col), F.col("pq_code")).alias("_adc"),
-        ).filter(F.col("_adc").isNotNull())
-    else:
-        id_type = codes.schema[id_col].dataType.simpleString()
-        qid_list = list(qids)
-
-        def _score_all(batches):
-            for pdf in batches:
-                cod = pdf["pq_code"].to_numpy()
-                valid = np.array(
-                    [c is not None for c in cod], dtype=bool
-                )
-                if not valid.any():
-                    continue
-                c = np.stack(cod[valid]).astype(np.int64)  # (R, m)
-                ids = pdf[id_col].to_numpy()[valid]
-                # one yielded frame PER QUERY, not one concat of all Q
-                # fan-outs: bounds worker memory to a single query's
-                # rows (the removed explode+join shape streamed this
-                # fan-out through Spark's spillable machinery; a
-                # Q×batch concat would hold it all at once)
-                for q in range(tbl.shape[0]):
-                    s = tbl[q][sub_idx[None, :], c].sum(axis=1)
-                    yield pd.DataFrame(
-                        {
-                            "_q": [qid_list[q]] * len(ids),
-                            "_i": ids,
-                            "_adc": s,
-                        }
-                    )
-
-        scored = (
-            codes.select(F.col(id_col), F.col("pq_code"))
-            .mapInPandas(
-                _score_all,
-                f"_q {qid_type}, _i {id_type}, _adc long",
+    @pandas_udf("long")
+    def _score(qid: pd.Series, pcodes: pd.Series) -> pd.Series:
+        out = np.empty(len(qid), dtype=object)
+        if len(qid):
+            qi = qid.map(qindex)
+            cod = pcodes.to_numpy()
+            valid = qi.notna().to_numpy() & np.array(
+                [c is not None for c in cod], dtype=bool
             )
-            .withColumnRenamed("_q", query_id_col)
-            .withColumnRenamed("_i", id_col)
-        )
-    agg = scored
-    # self-exclusion BEFORE the window: a self-match must not consume
-    # one of the k slots (same rule as knn_ivf). Disabled for
-    # external-query callers whose query-id domain is disjoint from the
-    # corpus — there a coincidental numeric collision would silently
-    # discard a legitimate nearest neighbor.
+            if valid.any():
+                c = np.stack(cod[valid]).astype(np.int64)
+                qiv = qi.to_numpy()[valid].astype(np.int64)
+                vals = tbl[qiv[:, None], sub_idx[None, :], c].sum(
+                    axis=1
+                )
+                for j, i in enumerate(np.nonzero(valid)[0]):
+                    out[i] = int(vals[j])
+        return pd.Series(out)
+
+    scored = cand.select(
+        F.col(query_id_col),
+        F.col(id_col),
+        _score(F.col(query_id_col), F.col("pq_code")).alias("_adc"),
+    ).filter(F.col("_adc").isNotNull())
     if exclude_self:
-        agg = agg.filter(F.col(query_id_col) != F.col(id_col))
+        scored = scored.filter(F.col(query_id_col) != F.col(id_col))
     w = Window.partitionBy(query_id_col).orderBy(
         F.asc("_adc"), F.asc(id_col)
     )
     return (
-        agg.withColumn("_rk", F.row_number().over(w))
+        scored.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= k)
         .select(
             query_id_col,
@@ -507,45 +379,6 @@ def _adc_topk(
             F.round(F.col("_adc") / F.lit(QUANT_SCALE * QUANT_SCALE), 6)
             .alias("adc_dist"),
         )
-    )
-
-
-def knn_pq(
-    corpus_codes: DataFrame,
-    query: DataFrame,
-    codebooks: np.ndarray,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """ADC k-NN over a PQ-encoded corpus: ``(query_id, vec_id,
-    adc_dist)`` with the ``k`` smallest approximate squared-L2
-    distances per query (ties to the lowest id). ``corpus_codes`` is
-    ``pq_encode`` output — the corpus embeddings themselves are never
-    read. ``exclude_self=True`` (the knn_ivf convention, right when
-    queries ARE corpus rows) drops rows where query_id == vec_id; pass
-    False when the query-id domain is external/disjoint, where a
-    numeric collision would silently discard a real neighbor.
-
-    Plan shape at scale (round 15): the corpus side is one
-    mapInPandas pass — each task scores its code rows against the
-    driver-side q × m × n_codes int64 table with numpy lookups,
-    yielding the per-query fan-out one query at a time — and the only
-    shuffle is the window top-k. Exact-integer distances on the 1e-12
-    grid make the result
-    partitioning-invariant and replayable (``test_pq_adc_exact_replay``
-    pins the bit-exact numpy replay). For normalized embeddings
-    squared L2 = 2 - 2 cos, so the ADC ranking approximates the cosine
-    ranking the brute-force baseline uses."""
-    qids, tbl, qid_type = _adc_table_np(
-        query, codebooks, query_id_col, vec_col
-    )
-    codes = corpus_codes.filter(F.col("pq_code").isNotNull())
-    return _adc_topk(
-        codes, qids, tbl, qid_type, k, id_col, query_id_col,
-        per_query=False, exclude_self=exclude_self,
     )
 
 
@@ -1116,7 +949,8 @@ def search_ann_index(
     same parameters (the fits are deterministic; pinned by test). The
     raw corpus embeddings are never read. ``exclude_self`` defaults
     OFF here — index queries usually come from an external id domain
-    (see ``knn_pq``); turn it on when querying the corpus with itself.
+    (see ``_adc_topk``); turn it on when querying the corpus with
+    itself.
 
     The corpus id column is whatever ``build_ann_index`` encoded (the
     codes table's non-``cell``/``pq_code`` column). Ids tombstoned by
@@ -1179,13 +1013,12 @@ def _ivf_pq_search(
             )
         ).alias("cell"),
     )
-    qids, tbl, qid_type = _adc_table_np(query, cb, query_id_col, vec_col)
+    qids, tbl = _adc_table_np(query, cb, query_id_col, vec_col)
     # self-exclusion happens once, inside _adc_topk (before its top-k
     # window) — no duplicate pre-filter on the candidate join
     cand = probes.join(codes, "cell").select(query_id_col, id_col, "pq_code")
     return _adc_topk(
-        cand, qids, tbl, qid_type, k, id_col, query_id_col,
-        per_query=True, exclude_self=exclude_self,
+        cand, qids, tbl, k, id_col, query_id_col, exclude_self
     )
 
 
@@ -1217,7 +1050,7 @@ def knn_ivf_pq(
     makes the distance table per query, not per (query, cell)).
     Returns ``(query_id, vec_id, adc_dist)``; self-matches excluded
     like ``knn_ivf`` (``exclude_self=False`` for external-query
-    domains — see ``knn_pq``).
+    domains — see ``_adc_topk``).
 
     ``timings``: pass a dict to receive ``fit_sec`` / ``encode_sec``
     wall times for the eager phases (the fits collect model-sized

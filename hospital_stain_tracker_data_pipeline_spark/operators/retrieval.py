@@ -230,7 +230,7 @@ def reciprocal_rank_fusion(
     the default fusion in production hybrid retrieval).
 
     Inputs are score frames — ``(id_col, score_col)`` like
-    ``bm25_topk`` output, or ``knn_brute_force``/``knn_pq`` output
+    ``bm25_topk`` output, or ``knn_brute_force`` output
     filtered to one query and projected to (id, score); ``score_cols``
     names each list's score column. Without ``score_cols`` each frame
     must carry EXACTLY one non-id column — an ambiguous frame (e.g.

@@ -330,27 +330,6 @@ def dot_batch_udf():
 ANN_MAX_BUCKET = 4096
 
 
-def ann_hot_bucket_report(
-    df: DataFrame,
-    nbits: int = 4,
-    tables: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket: int = ANN_MAX_BUCKET,
-) -> DataFrame:
-    """(table, bucket, members) rows ``ann_lsh_candidates`` drops under
-    ``max_bucket`` — same bucketing pipeline, so the report matches
-    what the operator actually skipped. Pipelines surface its count so
-    the recall trade is visible, never silent."""
-    from .dedup import lsh_hot_buckets
-
-    bucketed = random_hyperplane_buckets(
-        df, nbits, dim, id_col, vec_col, tables=tables
-    ).select(id_col, "table", "bucket")
-    return lsh_hot_buckets(bucketed, ["table", "bucket"], max_bucket)
-
-
 def ann_lsh_candidates(
     df: DataFrame,
     nbits: int = 4,
@@ -368,8 +347,7 @@ def ann_lsh_candidates(
     ``nbits`` must flatten it (fan-out doubles per bit) — pinned by
     ``tests/test_ann_recall.py::test_lsh_candidate_growth_is_bounded``.
     Buckets with more than ``max_bucket`` members are dropped before
-    the self-join (skew backstop; audit with
-    ``ann_hot_bucket_report``)."""
+    the self-join (skew backstop, ``dedup._capped_banded``)."""
     from .dedup import _capped_banded
 
     # One checkpoint per call on the healthy path: when capping, the

@@ -184,10 +184,11 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-# Mirrors operators.dedup.simhash64: per token h = first 15 md5 hex
-# chars as int; bit j vote = +1 if bit set else -1; simhash bit j = 1
-# iff votes > 0. Token order/count semantics identical (split on \s+ of
-# normalized text, duplicates kept). The oracle is the brute-force
+# Mirrors simhash_udf(nbits)(token_hashes(...)) in operators.dedup:
+# per token h = first 15 md5 hex chars as int; bit j vote = +1 if bit
+# set else -1; simhash bit j = 1 iff votes > 0. Token order/count
+# semantics identical (split on \s+ of normalized text, duplicates
+# kept). The oracle is the brute-force
 # definition; the Spark side reaches the same set through banding.
 SQL_DEDUP_SIMHASH = r"""
 WITH toks AS (

@@ -37,19 +37,11 @@ TEST_ONLY = {
     "bm25_reference", "cosine", "bloom_fpp",
     # fault detection and recovery
     "recover_index_swap", "verify_packed_corpus",
-    # entry points carrying the only exactness tests of live code: the
-    # search_ann_index path runs through _adc_table_np/_adc_topk ...
-    "pq_encode", "pq_decode", "pack_codes", "unpack_codes", "knn_pq",
-    # ... the hot-bucket cap of the live LSH and Hamming joins ...
-    "minhash_lsh_candidates", "simhash_band_candidates", "simhash64",
-    "minhash_hot_bucket_report", "simhash_hot_bucket_report",
-    "ann_hot_bucket_report",
-    # ... and the page walk and encryption check of the PDF extractor
-    "sniff_pdf",
-    # probe calibration report, pinned by its DuckDB oracle
-    "probe_calibration",
-    # the only form of the reference's Postgres ON CONFLICT sink
-    "write_jdbc_upsert",
+    # stated one-offs: the page walk and encryption check of the PDF
+    # extractor, the probe calibration report (pinned by its DuckDB
+    # oracle), and the only form of the reference's Postgres
+    # ON CONFLICT sink
+    "sniff_pdf", "probe_calibration", "write_jdbc_upsert",
 }
 
 

@@ -123,12 +123,24 @@ def test_simhash_banding_is_exact_and_band_keyed(spark):
     band-keyed equi-join — NOT a within-block cross join — and (c)
     actually prune: candidate pairs << all pairs on diverse docs."""
     import contextlib
+    import hashlib
     import io
+    import re
 
     from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        simhash64,
-        simhash_band_candidates,
+        _simhash_band_candidate_pairs,
     )
+
+    def simhash32(text):
+        # the SimHash definition in plain Python: per normalized token
+        # h = first 15 md5 hex chars; bit j = 1 iff more tokens set it
+        toks = re.sub(r"\s+", " ", text.strip().lower()).split(" ")
+        hs = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in toks]
+        return sum(
+            1 << j
+            for j in range(32)
+            if sum(1 if h >> j & 1 else -1 for h in hs) > 0
+        )
 
     rows = [(i, "en", " ".join(f"w{(i * 7 + j * 13) % 97}" for j in range(30)))
             for i in range(40)]
@@ -139,12 +151,7 @@ def test_simhash_banding_is_exact_and_band_keyed(spark):
         (r.id_a, r.id_b): r.hamming
         for r in simhash_pairs(docs, max_hamming=3).collect()
     }
-    sims = {
-        r.doc_id: r.h
-        for r in docs.select(
-            "doc_id", simhash64(F.col("text")).alias("h")
-        ).collect()
-    }
+    sims = {doc_id: simhash32(text) for doc_id, _, text in rows}
     ids = sorted(sims)
     brute = {
         (a, b): bin(sims[a] ^ sims[b]).count("1")
@@ -155,7 +162,7 @@ def test_simhash_banding_is_exact_and_band_keyed(spark):
     assert got == brute and (0, 100) in got  # exact recall, incl. the dup
 
     # (b) plan: the candidate join is keyed on (band, val)
-    cand = simhash_band_candidates(docs, max_hamming=3)
+    cand = _simhash_band_candidate_pairs(docs, "text", "doc_id", 32, 3)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         cand.explain("formatted")
@@ -1550,14 +1557,21 @@ def test_minhash_candidate_fraction_shrinks_with_corpus(spark):
     from pyspark.sql import functions as F
 
     from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        minhash_lsh_candidates,
+        DEFAULT_MAX_BUCKET,
+        _minhash_candidate_pairs,
     )
+
+    def n_cands(df):
+        # the candidate join of minhash_lsh_dedup_pairs at its defaults
+        return _minhash_candidate_pairs(
+            df, "text", "doc_id", 32, 8, 3, DEFAULT_MAX_BUCKET
+        )[1].count()
 
     docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     small = docs.filter(F.col("doc_id") % 10 == 0)
     n_small, n_full = small.count(), docs.count()
-    c_small = minhash_lsh_candidates(small).count()
-    c_full = minhash_lsh_candidates(docs).count()
+    c_small = n_cands(small)
+    c_full = n_cands(docs)
     assert c_full > 0
 
     def frac(c, n):
@@ -1577,12 +1591,12 @@ def test_simhash_nbits_is_the_candidate_flattening_lever(spark):
     multiplies the band space, and candidates must drop superlinearly
     in nbits (measured ~3.4x per +16 bits on the sf0.1 corpus)."""
     from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        simhash_band_candidates,
+        _simhash_band_candidate_pairs,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    c32 = simhash_band_candidates(docs, nbits=32).count()
-    c64 = simhash_band_candidates(docs, nbits=64).count()
+    c32 = _simhash_band_candidate_pairs(docs, "text", "doc_id", 32, 3).count()
+    c64 = _simhash_band_candidate_pairs(docs, "text", "doc_id", 64, 3).count()
     assert c32 > 0
     assert c64 <= c32 / 8, (c64, c32)
 
@@ -1725,14 +1739,18 @@ def test_minhash_banding_drops_null_signatures(spark):
     from pyspark.sql import functions as F
 
     from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+        DEFAULT_MAX_BUCKET,
+        _minhash_candidate_pairs,
         dedup_pairs_against_corpus,
-        minhash_lsh_candidates,
         minhash_signature_index,
     )
 
     rows = [(i, None) for i in range(1, 6)] + [(10, "real text here okay")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    assert minhash_lsh_candidates(docs).count() == 0
+    _, cands = _minhash_candidate_pairs(
+        docs, "text", "doc_id", 32, 8, 3, DEFAULT_MAX_BUCKET
+    )
+    assert cands.count() == 0
     idx = minhash_signature_index(docs)
     got = dedup_pairs_against_corpus(
         docs.withColumn("doc_id", F.col("doc_id") + 100), idx, threshold=0.2

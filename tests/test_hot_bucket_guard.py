@@ -20,16 +20,14 @@ from __future__ import annotations
 
 from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
     DEFAULT_MAX_BUCKET,
+    _minhash_candidate_pairs,
     dedup_against_corpus,
     dedup_pairs_against_corpus,
-    minhash_hot_bucket_report,
-    minhash_lsh_candidates,
     minhash_lsh_dedup_pairs,
     minhash_signature_index,
 )
 from hospital_stain_tracker_data_pipeline_spark.operators.similarity import (
     ANN_MAX_BUCKET,
-    ann_hot_bucket_report,
     ann_lsh_candidates,
     ann_lsh_pairs,
 )
@@ -57,20 +55,11 @@ def test_minhash_cap_bounds_planted_10k_identical_signatures(spark):
     # outside it still pairs
     assert (10_000, 10_001) in got
     assert all(a >= 10_000 and b >= 10_000 for a, b in got)
-    # candidate hook shows the same bound
-    n_cands = minhash_lsh_candidates(docs).count()
-    assert n_cands == 1
-
-
-def test_minhash_hot_bucket_report_surfaces_the_drop(spark):
-    docs = _boilerplate_corpus(spark, 2_000)
-    rep = minhash_hot_bucket_report(docs).collect()
-    # identical signatures collide in EVERY band → one hot bucket per
-    # band, each holding all 2 000 boilerplate docs
-    assert len(rep) == 8
-    assert all(r.members == 2_000 for r in rep)
-    # no cap → nothing dropped → empty report
-    assert minhash_hot_bucket_report(docs, max_bucket=None).count() == 0
+    # the operator's candidate join shows the same bound
+    _, cands = _minhash_candidate_pairs(
+        docs, "text", "doc_id", 32, 8, 3, DEFAULT_MAX_BUCKET
+    )
+    assert cands.count() == 1
 
 
 def test_minhash_cap_is_inert_below_threshold(spark):
@@ -158,20 +147,20 @@ def test_ann_cap_bounds_planted_identical_vectors(spark):
     assert {(r.id_a, r.id_b) for r in pairs} == {(n, n + 1)}
 
 
-def test_ann_hot_bucket_report_and_inert_below_cap(spark):
+def test_ann_cap_drops_hot_buckets_and_is_inert_below_cap(spark):
     rows = [(i, _vec(7)) for i in range(300)] + [(300, _vec(99))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    rep = ann_hot_bucket_report(df, nbits=4, tables=2, max_bucket=100)
-    r = rep.collect()
-    # one hot bucket per table, holding all 300 identical vectors (the
-    # distinct vector may happen to share a bucket, hence >=)
-    assert len(r) == 2 and all(row.members >= 300 for row in r)
+    # the 300 identical vectors share one bucket per table, so every
+    # pair needs one of them; capped at 100 those buckets (300 or 301
+    # members) drop whole and no candidate is left
+    hot = ann_lsh_candidates(df, nbits=4, tables=2, max_bucket=100)
+    assert hot.count() == 0
     # default cap (4096) is inert on this corpus: identical candidates
     capped = ann_lsh_candidates(df, nbits=4, tables=2).count()
     uncapped = ann_lsh_candidates(
         df, nbits=4, tables=2, max_bucket=None
     ).count()
-    assert capped == uncapped
+    assert capped == uncapped >= 300 * 299 // 2
     assert ANN_MAX_BUCKET == 4096
 
 
@@ -210,10 +199,8 @@ def test_ann_candidates_single_checkpoint_per_call(spark, monkeypatch):
 # ---------------------------------------------------------------------------
 
 from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (  # noqa: E402
-    hamming_hot_bucket_report,
     hamming_pairs,
     hamming_pairs_against_corpus,
-    simhash_hot_bucket_report,
     simhash_pairs,
 )
 
@@ -234,17 +221,6 @@ def test_simhash_cap_bounds_planted_10k_identical_fingerprints(spark):
     assert all(a >= 10_000 and b >= 10_000 for a, b in got)
 
 
-def test_simhash_hot_bucket_report_surfaces_the_drop(spark):
-    rows = [(i, BOILERPLATE) for i in range(2_000)] + [(9_999, FOX_A)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    rep = simhash_hot_bucket_report(docs, max_bucket=1_000).collect()
-    # identical fingerprints agree on every band: max_hamming+1 = 4
-    # hot buckets, each holding all 2 000 boilerplate docs
-    assert len(rep) == 4
-    assert all(r.members == 2_000 for r in rep)
-    assert simhash_hot_bucket_report(docs, max_bucket=None).count() == 0
-
-
 def test_simhash_cap_is_inert_below_threshold(spark):
     rows = [(i, f"document number {i} talks about topic {i % 7}")
             for i in range(60)]
@@ -262,22 +238,25 @@ def test_hamming_cap_bounds_planted_10k_identical_fingerprints(spark):
     rows = [(i, blank) for i in range(n)]
     rows += [(n, 0x0F0F0F0F0F0F0F0F), (n + 1, 0x0F0F0F0F0F0F0F0E)]
     df = spark.createDataFrame(rows, "media_id long, fp long")
-    pairs = hamming_pairs(df, "fp", "media_id", nbits=64, max_hamming=3)
+    tel: dict = {}
+    pairs = hamming_pairs(
+        df, "fp", "media_id", nbits=64, max_hamming=3, telemetry=tel
+    )
     got = {(r.id_a, r.id_b, r.hamming) for r in pairs.collect()}
     assert got == {(n, n + 1, 1)}
-    # report names the dropped buckets: 4 bands × the one blank value
-    rep = hamming_hot_bucket_report(df, "fp", "media_id").collect()
-    assert len(rep) == 4 and all(r.members == n for r in rep)
+    # the drop count: 4 bands × the one blank value
+    assert tel["hot_buckets_dropped"] == 4
 
 
 def test_hamming_cap_is_inert_below_threshold(spark):
     rows = [(i, (i * 2654435761) % (1 << 63)) for i in range(200)]
     rows += [(1_000, 77), (1_001, 76)]
     df = spark.createDataFrame(rows, "media_id long, fp long")
-    capped = hamming_pairs(df, "fp", "media_id").collect()
+    tel: dict = {}
+    capped = hamming_pairs(df, "fp", "media_id", telemetry=tel).collect()
     uncapped = hamming_pairs(df, "fp", "media_id", max_bucket=None).collect()
     assert sorted(map(tuple, capped)) == sorted(map(tuple, uncapped))
-    assert hamming_hot_bucket_report(df, "fp", "media_id").count() == 0
+    assert tel["hot_buckets_dropped"] == 0
 
 
 def test_hamming_corpus_probe_caps_both_sides(spark):
@@ -323,6 +302,28 @@ def test_minhash_telemetry_reports_drop_count(spark):
     tel3: dict = {}
     minhash_lsh_dedup_pairs(clean, max_bucket=None, telemetry=tel3).count()
     assert tel3["hot_buckets_dropped"] == 0
+
+
+def test_cap_counts_drops_on_an_all_hot_corpus(spark):
+    """Every bucket hot, so the candidate self-join is empty: the cap
+    still reports each dropped bucket. The planted corpora above all
+    keep a pair outside the hot bucket; an all-hot corpus is the case
+    where a count observed on the consumer's action would be lost."""
+    docs = spark.createDataFrame(
+        [(i, BOILERPLATE) for i in range(2_000)], "doc_id long, text string"
+    )
+    tel: dict = {}
+    assert minhash_lsh_dedup_pairs(docs, telemetry=tel).count() == 0
+    assert tel["hot_buckets_dropped"] == 8  # one bucket per band
+    blanks = spark.createDataFrame(
+        [(i, 0) for i in range(3_000)], "media_id long, fp long"
+    )
+    tel = {}
+    pairs = hamming_pairs(
+        blanks, "fp", "media_id", nbits=64, max_hamming=3, telemetry=tel
+    )
+    assert pairs.count() == 0
+    assert tel["hot_buckets_dropped"] == 4  # one bucket per band
 
 
 def test_capped_lazy_cap_adds_no_action_without_telemetry(spark):

@@ -34,8 +34,7 @@ def test_operator_surface_exports():
         "bm25_topk", "bm25_bulk_scores",
         "build_bm25_index", "dedup_substrings",
         "save_ivf_index", "load_ivf_index",
-        "pq_fit_codebooks", "pq_encode", "pq_decode", "knn_pq",
-        "knn_ivf_pq", "pack_codes", "unpack_codes",
+        "pq_fit_codebooks", "knn_ivf_pq",
         "save_pq_index", "load_pq_index",
         "reciprocal_rank_fusion", "corpus_diff", "corpus_diff_summary",
         "summarize_diff",

@@ -808,9 +808,9 @@ def test_lifecycle_engine_on_both_layouts(spark, tmp_path, monkeypatch, layout, 
 # Filesystem-seam calls (``session._fs``, one FileSystem resolution
 # each) of each lifecycle operation on an 8-row image index with two
 # tombstoned ids. ``_index_layout`` answers from one listing of the
-# artifact dir; while it probed each ANN entry with its own existence
-# check they were 6 / 11 / 16 / 20.
-SEAM_CALL_BUDGET = {"load": 2, "remove": 3, "compact": 8, "fsck": 8}
+# artifact dir, and each operation resolves it once and hands it to
+# ``_tombstone_state``.
+SEAM_CALL_BUDGET = {"load": 2, "remove": 2, "compact": 7, "fsck": 7}
 
 
 def test_lifecycle_seam_calls(spark, tmp_path, monkeypatch):

@@ -1,8 +1,14 @@
 """Product quantization: deterministic fit, bit-exact encode/ADC
-replay in numpy, code packing round-trip, and recall pins for the
-ADC full-scan and IVF-PQ composed searches against the exact
-brute-force cosine baseline (embeddings fixture is L2-normalized, so
-squared-L2 ranking == cosine ranking up to quantization error)."""
+replay in numpy, and recall pins for the ADC and IVF-PQ searches
+against the exact brute-force cosine baseline (embeddings fixture is
+L2-normalized, so squared-L2 ranking == cosine ranking up to
+quantization error).
+
+The exactness tests run the production search path: a
+``build_ann_index`` artifact searched by ``search_ann_index`` with
+``nprobe`` equal to its cell count. Codebooks are fit on raw
+subvectors, not residuals, so probing every cell scores every corpus
+row with the same table a flat ADC scan uses."""
 
 from __future__ import annotations
 
@@ -12,13 +18,11 @@ from pyspark.sql import functions as F
 
 from hospital_stain_tracker_data_pipeline_spark.operators import pq
 from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
+    build_ann_index,
     knn_ivf_pq,
-    knn_pq,
-    pack_codes,
-    pq_decode,
-    pq_encode,
+    load_pq_index,
     pq_fit_codebooks,
-    unpack_codes,
+    search_ann_index,
 )
 from hospital_stain_tracker_data_pipeline_spark.operators.similarity import (
     QUANT_SCALE,
@@ -27,6 +31,10 @@ from hospital_stain_tracker_data_pipeline_spark.operators.similarity import (
 from hospital_stain_tracker_data_pipeline_spark.sources.tables import (
     load_fixture_table,
 )
+
+# cell count of the ``flat_index`` artifact; searching it with this
+# nprobe probes every cell
+ALL_CELLS = 4
 
 
 @pytest.fixture(scope="module")
@@ -39,8 +47,24 @@ def codebooks(spark, emb):
     return pq_fit_codebooks(emb, m=8, n_codes=16, iters=2)
 
 
+@pytest.fixture(scope="module")
+def flat_index(spark, emb, tmp_path_factory):
+    """An ANN artifact whose codebooks are the ``codebooks`` fit
+    (same m, n_codes, iters); probed at ``ALL_CELLS`` it is a flat ADC
+    scan of the whole corpus."""
+    path = str(tmp_path_factory.mktemp("pq") / "flat")
+    build_ann_index(emb, path, n_clusters=ALL_CELLS, m=8, n_codes=16, iters=2)
+    return path
+
+
 def _np_quantize(vecs: np.ndarray) -> np.ndarray:
     return np.floor(vecs.astype(np.float64) * QUANT_SCALE).astype(np.int64)
+
+
+def _queries(emb, n):
+    return emb.orderBy("vec_id").limit(n).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
 
 
 def test_pq_fit_shape_and_partitioning_determinism(spark, emb, codebooks):
@@ -63,15 +87,15 @@ def test_pq_fit_validation(spark, emb):
         pq_fit_codebooks(few, m=8, n_codes=16)
 
 
-def test_pq_encode_exact_numpy_replay(spark, emb, codebooks):
-    """The Spark encode IS the integer argmin — replay it bit-exactly
-    in numpy from the same rows."""
+def test_pq_encode_exact_numpy_replay(spark, emb, codebooks, flat_index):
+    """The artifact's codes ARE the integer argmin under its codebooks
+    — replay them bit-exactly in numpy from the same rows. The
+    artifact's codebooks are the standalone fit's."""
+    assert np.array_equal(load_pq_index(spark, f"{flat_index}/pq"), codebooks)
     rows = emb.orderBy("vec_id").limit(100).collect()
     got = {
         r["vec_id"]: list(r["pq_code"])
-        for r in pq_encode(
-            emb.orderBy("vec_id").limit(100), codebooks
-        ).collect()
+        for r in spark.read.parquet(f"{flat_index}/codes").collect()
     }
     m, k, dsub = codebooks.shape
     cnorm2 = (codebooks * codebooks).sum(axis=2)
@@ -84,66 +108,25 @@ def test_pq_encode_exact_numpy_replay(spark, emb, codebooks):
         assert got[r["vec_id"]] == want, r["vec_id"]
 
 
-def test_pq_code_pack_roundtrip(spark, emb, codebooks):
-    codes = pq_encode(emb.limit(50), codebooks)
-    back = codes.select(
-        "vec_id",
-        "pq_code",
-        unpack_codes(pack_codes(F.col("pq_code")), m=8).alias("rt"),
-    )
-    assert back.filter(F.col("pq_code") != F.col("rt")).count() == 0
-    # packed width is exactly m bytes
-    w = codes.select(
-        F.length(pack_codes(F.col("pq_code"))).alias("w")
-    ).distinct().collect()
-    assert [r["w"] for r in w] == [8]
-
-
-def test_pq_decode_reconstruction_error_bounded(spark, emb, codebooks):
-    """Decoded vectors approximate the originals: mean squared
-    reconstruction error well below the variance of the data (the
-    codebook actually learned something)."""
-    joined = (
-        pq_decode(pq_encode(emb, codebooks), codebooks)
-        .withColumnRenamed("embedding", "approx")
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-    )
-    err = joined.select(
-        F.aggregate(
-            F.zip_with(
-                "embedding",
-                "approx",
-                lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("se")
-    ).agg(F.avg("se").alias("mse")).collect()[0]["mse"]
-    # normalized 64-dim vectors have |x|^2 = 1, so MSE 1.0 == learned
-    # nothing. The fixture is near-structureless synthetic data — the
-    # hardest case for VQ — and an 8x16 codebook still has to explain
-    # a solid fraction of the energy (measured 0.574 at iters=2)
-    assert err < 0.8, err
-
-
-def test_pq_adc_exact_numpy_replay(spark, emb, codebooks):
+def test_pq_adc_exact_numpy_replay(spark, emb, codebooks, flat_index):
     """ADC distances are exact integers on the 1e-12 grid: the Spark
-    pipeline (explode + broadcast join + sum) equals the numpy table
-    lookup bit-for-bit after the same final rounding."""
-    queries = emb.orderBy("vec_id").limit(4).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus_codes = pq_encode(emb, codebooks)
+    search (per-candidate table lookups, window top-k) equals the
+    numpy table lookup over every corpus code bit-for-bit after the
+    same final rounding."""
+    queries = _queries(emb, 4)
     got = {
         (r["query_id"], r["vec_id"]): r["adc_dist"]
-        for r in knn_pq(corpus_codes, queries, codebooks, k=5).collect()
+        for r in search_ann_index(
+            spark, flat_index, queries, k=5, nprobe=ALL_CELLS,
+            exclude_self=True,
+        ).collect()
     }
     m, k, dsub = codebooks.shape
-    all_rows = emb.select("vec_id", "embedding").collect()
     codes = {
         r["vec_id"]: np.array(r["pq_code"])
-        for r in corpus_codes.collect()
+        for r in spark.read.parquet(f"{flat_index}/codes").collect()
     }
+    assert len(got) == 4 * 5
     for q in queries.collect():
         qv = _np_quantize(np.array(q["embedding"])).reshape(m, dsub)
         table = np.array(
@@ -153,40 +136,35 @@ def test_pq_adc_exact_numpy_replay(spark, emb, codebooks):
             ],
             dtype=np.int64,
         )
-        dists = {}
-        for r in all_rows:
-            if r["vec_id"] == q["query_id"]:
-                continue
-            c = codes[r["vec_id"]]
-            dists[r["vec_id"]] = int(
-                sum(table[s, c[s]] for s in range(m))
-            )
+        dists = {
+            vid: int(sum(table[s, c[s]] for s in range(m)))
+            for vid, c in codes.items()
+            if vid != q["query_id"]
+        }
         top = sorted(dists.items(), key=lambda kv: (kv[1], kv[0]))[:5]
         for vid, d in top:
             want = round(d / (QUANT_SCALE * QUANT_SCALE), 6)
             assert got[(q["query_id"], vid)] == want, (q["query_id"], vid)
 
 
-def test_pq_adc_table_over_driver_limit_raises(spark, emb, codebooks, monkeypatch):
+def test_pq_adc_table_over_driver_limit_raises(
+    spark, emb, codebooks, flat_index, monkeypatch
+):
     """The q × m × n_codes int64 ADC table is built on the driver: past
     the module's byte limit the search raises, naming the table's size,
     instead of collecting it; a query set that fits still runs."""
     m, n_codes, _ = codebooks.shape
     per_query = m * n_codes * 8
     monkeypatch.setattr(pq, "_ADC_TABLE_MAX_BYTES", 3 * per_query)
-    queries = (
-        emb.filter(F.col("embedding").isNotNull())
-        .orderBy("vec_id")
-        .limit(4)
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
-    corpus_codes = pq_encode(emb, codebooks)
+    queries = _queries(emb.filter(F.col("embedding").isNotNull()), 4)
     with pytest.raises(
         ValueError,
         match=f"4 queries x {m} subspaces x {n_codes} codes is {4 * per_query} bytes",
     ):
-        knn_pq(corpus_codes, queries, codebooks, k=5)
-    out = knn_pq(corpus_codes, queries.limit(3), codebooks, k=5)
+        search_ann_index(spark, flat_index, queries, k=5, nprobe=ALL_CELLS)
+    out = search_ann_index(
+        spark, flat_index, queries.limit(3), k=5, nprobe=ALL_CELLS
+    )
     assert out.select("query_id").distinct().count() == 3
 
 
@@ -230,11 +208,10 @@ def test_pq_adc_recall_scales_with_code_budget(spark, emb):
     Deterministic fit => these are exact pins, not flaky bounds
     (measured: 8x16 -> 0.175, 16x64 -> 0.5125)."""
     def recall_at(m, n_codes, iters):
-        cb = pq_fit_codebooks(emb, m=m, n_codes=n_codes, iters=iters)
-        queries = emb.orderBy("vec_id").limit(8).select(
-            F.col("vec_id").alias("query_id"), "embedding"
+        res = knn_ivf_pq(
+            emb, _queries(emb, 8), k=10, n_clusters=ALL_CELLS,
+            nprobe=ALL_CELLS, m=m, n_codes=n_codes, iters=iters,
         )
-        res = knn_pq(pq_encode(emb, cb), queries, cb, k=10)
         return _recall_vs_brute(spark, emb, res)
 
     coarse = recall_at(8, 16, 2)
@@ -270,36 +247,33 @@ def test_knn_ivf_pq_recall_and_shape(spark, emb):
     assert recall >= 0.35, recall
 
 
-def test_knn_pq_exclude_self_gate(spark, emb, codebooks):
-    """exclude_self=True (default, queries ARE corpus rows) drops the
+def test_adc_exclude_self_gate(spark, emb, flat_index):
+    """exclude_self=True (queries ARE corpus rows) drops the
     query_id == vec_id row; exclude_self=False keeps it — an external
     query domain must not lose a real neighbor to a coincidental id
-    collision (ADVICE r8)."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
-        knn_ivf_pq,
-        knn_pq,
-        pq_encode,
-    )
+    collision (ADVICE r8). Both ADC entry points run the one gate in
+    ``_adc_topk``: ``search_ann_index`` defaults it off,
+    ``knn_ivf_pq`` on."""
+    # the "external" query reuses a corpus row's id + vector: with the
+    # gate on it can never match itself; with the gate off its own row,
+    # coded with the per-subspace nearest codewords, has the smallest
+    # ADC distance and must appear
+    q = _queries(emb, 2)
 
-    codes = pq_encode(emb, codebooks)
-    # the "external" query reuses a corpus row's id + vector: under the
-    # default it can never match itself; with the gate off the encoded
-    # self row is ADC-distance 0 and must appear
-    q = emb.orderBy("vec_id").limit(2).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    on = knn_pq(codes, q, codebooks, k=5)
-    off = knn_pq(codes, q, codebooks, k=5, exclude_self=False)
-    self_on = on.filter(F.col("query_id") == F.col("vec_id")).count()
-    self_off = off.filter(F.col("query_id") == F.col("vec_id")).count()
-    assert self_on == 0
-    assert self_off == 2  # each query's own row, ADC distance 0
+    def n_self(res):
+        return res.filter(F.col("query_id") == F.col("vec_id")).count()
 
-    ivf_off = knn_ivf_pq(
-        emb, q, k=5, n_clusters=4, nprobe=4, m=8, n_codes=16, iters=1,
-        exclude_self=False,
-    )
-    assert ivf_off.filter(F.col("query_id") == F.col("vec_id")).count() == 2
+    def search(**kw):
+        return search_ann_index(
+            spark, flat_index, q, k=5, nprobe=ALL_CELLS, **kw
+        )
+
+    assert n_self(search(exclude_self=True)) == 0
+    assert n_self(search()) == 2
+
+    fit = dict(k=5, n_clusters=4, nprobe=4, m=8, n_codes=16, iters=1)
+    assert n_self(knn_ivf_pq(emb, q, **fit)) == 0
+    assert n_self(knn_ivf_pq(emb, q, exclude_self=False, **fit)) == 2
 
 
 def test_ann_index_build_search_matches_in_process(spark, emb, tmp_path):
