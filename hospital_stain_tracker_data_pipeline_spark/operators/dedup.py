@@ -24,7 +24,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint64_hex, normalized_text, word_shingles
-from ..session import fs_delete, fs_isdir, fs_isfile, fs_list_names, fs_rename
+from ..session import (
+    _materialize_observed,
+    fs_delete,
+    fs_isdir,
+    fs_isfile,
+    fs_list_names,
+    fs_rename,
+)
 
 if TYPE_CHECKING:
     from .fingerprint import FingerprintFamily
@@ -1335,8 +1342,6 @@ def connected_components_min_label(
     # one extra action per iteration plus one for the init).
     from pyspark.sql.types import NumericType
 
-    from ..session import _materialize_observed
-
     numeric_ids = isinstance(
         labels.schema["label"].dataType, NumericType
     )
@@ -1740,9 +1745,9 @@ def append_fp_index(
     mismatch. NULL id/hash rows drop exactly as at save. An artifact
     in the legacy image layout is refused: appending would mix two
     layouts in one directory — rebuild it first. Returns the number
-    of rows appended."""
-    _, params = load_fp_index(spark, path, family)
-    if "_fp_tag" not in spark.read.parquet(path).columns:
+    of rows appended, counted while they are materialized."""
+    df, params = _read_fp_artifact(spark, path, family)
+    if "_fp_tag" not in df.columns:
         raise ValueError(
             f"{path} is a legacy {family.name} index "
             f"({[c for c, _ in family.legacy_cols]} columns, no _fp_tag) "
@@ -1756,12 +1761,14 @@ def append_fp_index(
             f"fingerprint frame lacks column(s) {missing} — pass a "
             f"{family.name} fingerprint output {tuple(cols)}"
         )
-    slim = (
-        fps.select(*cols)
-        .filter(F.col(cols[0]).isNotNull() & F.col(cols[1]).isNotNull())
-        .localCheckpoint(eager=True)  # count and write read one snapshot
+    # the count and the write read one snapshot
+    slim, seen = _materialize_observed(
+        fps.select(*cols).filter(
+            F.col(cols[0]).isNotNull() & F.col(cols[1]).isNotNull()
+        ),
+        n=F.count(F.lit(1)),
     )
-    n = slim.count()
+    n = seen["n"]
     if n:
         slim.withColumn("_fp_tag", F.lit(family.tag(params))).write.mode(
             "append"
@@ -2020,8 +2027,6 @@ def _artifact_remove(
     (physical, pre-suppression) / tombstone_ratio /
     compact_recommended. Single-writer per artifact, like
     append/compact."""
-    from ..session import _materialize_observed
-
     if id_col not in ids.columns:
         raise ValueError(
             f"ids frame lacks column {id_col!r} (has {ids.columns}) — "

@@ -14,10 +14,12 @@ environment this would be ``MERGE INTO``; the portable mechanism here:
    the last writer per key (newest version, then incoming), which
    also dedups the batch within itself; then dynamic-partition-
    overwrite just those partitions straight from the window. The
-   scoped read lists the table root's names in one JVM-side pass (a
-   fixed number of Py4J calls) and hands Spark only the touched
-   directories, so listing, footer reads and driver work are bounded
-   by the batch, not by the partition count of the table. There is no
+   scoped read lists the table root through the filesystem seam
+   (``session.fs_list_names``: the names are mapped and joined in the
+   JVM, a fixed number of Py4J calls and only the names cross to
+   Python) and hands Spark only the touched directories, so listing,
+   footer reads and driver work are bounded by the batch, not by the
+   partition count of the table. There is no
    separate existence check: a missing root or an untouched table
    reads as ``None`` and the batch alone is merged; any other listing
    failure raises before anything is written.
@@ -35,8 +37,9 @@ environment this would be ``MERGE INTO``; the portable mechanism here:
 4. A full ``read()`` keeps the frame it resolved and returns it again
    while the table's files are unchanged, so a repeated read of an
    untouched table runs no listing or schema-merge job. Reuse is
-   checked on every call against a digest of one driver-side walk of
-   the root, which any writer invalidates, ``LakeTable`` or not. The
+   checked on every call against the seam's digest of one driver-side
+   walk of the root (``session._fs_digest``), which any writer
+   invalidates, ``LakeTable`` or not. The
    partition values the frame was resolved from are kept with it
    (``listed_partitions``), so a question about partition values
    alone needs no scan.
@@ -60,12 +63,11 @@ import threading
 from collections.abc import Iterable, Sequence
 from urllib.parse import unquote
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.upsert import _last_writer_rows
-from ..session import _fs_classes, _materialize_observed, hadoop_fs
+from ..session import _fs_digest, _materialize_observed, fs_exists, fs_list_names
 
 
 # Most partition values one upsert may touch: the touched set is
@@ -85,50 +87,14 @@ _SNAPSHOTS_LOCK = threading.Lock()
 
 class _Snapshots:
     """One session's full-read frames, ``{path: (token, frame,
-    partitions)}``, and the JVM handles of the walks that validate them
-    and list a table's partitions, resolved once per session.
+    partitions)}``, the token being the seam's ``_fs_digest`` of the
+    table taken before the frame was resolved.
 
     It is kept on the session object, so it ends with its session and
     no other session sees it. A module-level map keyed by session would
     instead keep every session alive: each frame references its own."""
 
-    def __init__(self, spark: SparkSession):
-        jvm = spark._jvm
-        invoke = jvm.java.lang.invoke
-        lookup = invoke.MethodHandles.publicLookup()
-        status = jvm.org.apache.hadoop.fs.FileStatus._java_lang_class
-        path = _fs_classes(spark).path._java_lang_class
-        function1 = jvm.scala.Function1._java_lang_class
-
-        def getter(name, rtype, owner=status):
-            # <owner>.<name>() as a scala.Function1, so one Py4J call
-            # maps a whole directory level inside the JVM; a getter call
-            # per file from Python is a round trip each (≈0.5 s for a
-            # 729-file table)
-            handle = lookup.findVirtual(
-                owner, name, invoke.MethodType.methodType(rtype)
-            )
-            return invoke.MethodHandleProxies.asInterfaceInstance(function1, handle)
-
-        self.is_dir = getter("isDirectory", jvm.java.lang.Boolean.TYPE)
-        self.get_path = getter("getPath", path)
-        self.get_name = getter("getName", jvm.java.lang.String._java_lang_class, path)
-        self.columns = [
-            self.get_path,
-            getter("getLen", jvm.java.lang.Long.TYPE),
-            getter("getModificationTime", jvm.java.lang.Long.TYPE),
-        ]
-        self.by_path = jvm.scala.math.Ordering.comparatorToOrdering(
-            jvm.java.util.Comparator.naturalOrder()
-        )
-        self.path_tag = jvm.scala.reflect.ClassTag.apply(path)
-        self.wrap = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray
-        self.new_text = jvm.scala.collection.mutable.StringBuilder
-        self.message_digest = jvm.java.security.MessageDigest
-        self.utf8 = jvm.java.nio.charset.StandardCharsets.UTF_8
-        self.char_buffer = jvm.java.nio.CharBuffer
-        self.conf = spark._jsparkSession.conf()
-        self.not_found = jvm.java.io.FileNotFoundException._java_lang_class
+    def __init__(self):
         self.frames: dict = {}
 
     @staticmethod
@@ -137,58 +103,8 @@ class _Snapshots:
         with _SNAPSHOTS_LOCK:
             snapshots = getattr(spark, "_lake_snapshots", None)
             if snapshots is None:
-                snapshots = spark._lake_snapshots = _Snapshots(spark)
+                snapshots = spark._lake_snapshots = _Snapshots()
             return snapshots
-
-    def token(self, fs, root) -> bytes | None:
-        """SHA-256 of the session's SQL conf and of the sorted path,
-        length and modification time of every file under ``root``, at
-        every depth, ``_SUCCESS`` included; ``None`` when the walk
-        fails (a missing root, a directory deleted mid-walk). Access
-        times are left out: a read changes them. The text is built and
-        hashed in the JVM, so a level costs a fixed number of Py4J
-        calls and only the 32-byte digest crosses to Python."""
-        text = self.new_text()
-        # schema and partition inference read the conf (time zone,
-        # parquet type flags), so a frame resolved under another conf
-        # is not reused
-        self.conf.getAll().addString(text, "", "\n", "\n")
-        try:
-            level = fs.listStatus(root)
-            while len(level):
-                entries = self.wrap(level).sorted(self.by_path)
-                files = entries.filterNot(self.is_dir)
-                for column in self.columns:
-                    files.map(column).addString(text, "", "\n", "\n")
-                dirs = entries.filter(self.is_dir).map(self.get_path).toArray(self.path_tag)
-                level = fs.listStatus(dirs) if len(dirs) else dirs
-        except Py4JJavaError:
-            return None
-        digest = self.message_digest.getInstance("SHA-256")
-        digest.update(self.utf8.encode(self.char_buffer.wrap(text.underlying())))
-        return bytes(digest.digest())
-
-    def dir_names(self, fs, root) -> list[str]:
-        """Names of the directories directly under ``root`` (none for
-        a missing root). The names are joined inside the JVM, so the
-        listing costs a fixed number of Py4J calls however many
-        directories the root holds. A newline cannot occur in a
-        partition directory's name: Hive escaping encodes it.
-
-        Only a missing root reads as empty. Any other listing failure
-        (a denied permission, an I/O error, a throttled store) raises:
-        an upsert that took an unlistable table for an empty one would
-        overwrite its touched partitions with the batch alone."""
-        try:
-            level = fs.listStatus(root)
-        except Py4JJavaError as e:
-            if self.not_found.isInstance(e.java_exception):
-                return []
-            raise
-        names = (
-            self.wrap(level).filter(self.is_dir).map(self.get_path).map(self.get_name)
-        ).mkString("\n")
-        return names.split("\n") if names else []
 
     def get(self, key, token) -> DataFrame | None:
         with _SNAPSHOTS_LOCK:
@@ -257,17 +173,16 @@ class LakeTable:
     def _partition_dirs(self) -> dict[str, str]:
         """``{unescaped partition value: directory path}`` of every
         ``<partition_col>=<value>`` directory under the root, from one
-        listing through the Hadoop ``FileSystem`` (any scheme) whose
-        names are joined in the JVM: a fixed number of Py4J calls, not
-        one per partition. Hadoop %-escapes special chars (':' → '%3A',
-        etc.) in directory names, and matching raw column values against
-        escaped names would silently select nothing; a missing root has
-        no partitions."""
-        fs, root = hadoop_fs(self.spark, self.path)
-        base, prefix = root.toString(), f"{self.partition_col}="
+        ``fs_list_names`` listing (any scheme, a fixed number of Py4J
+        calls, not one per partition). Hadoop %-escapes special chars
+        (':' → '%3A', etc.) in directory names, and matching raw column
+        values against escaped names would silently select nothing; a
+        missing root has no partitions, and any other listing failure
+        raises."""
+        prefix = f"{self.partition_col}="
         return {
-            unquote(name[len(prefix):]): f"{base}/{name}"
-            for name in _Snapshots.of(self.spark).dir_names(fs, root)
+            unquote(name[len(prefix):]): os.path.join(self.path, name)
+            for name in fs_list_names(self.path)
             if name.startswith(prefix)
         }
 
@@ -276,9 +191,9 @@ class LakeTable:
         directory. Both checks cost a fixed number of Py4J calls, so
         the answer costs the same for a table of any partition count
         (a dynamic-partition overwrite leaves no root ``_SUCCESS``)."""
-        fs, root = hadoop_fs(self.spark, self.path)
-        jvm_path = _fs_classes(self.spark).path
-        return fs.exists(jvm_path(root, "_SUCCESS")) or bool(self._partition_dirs())
+        return fs_exists(os.path.join(self.path, "_SUCCESS")) or bool(
+            self._partition_dirs()
+        )
 
     def read(self, partitions: Iterable | None = None) -> DataFrame | None:
         """The whole table, or with ``partitions`` only the partitions
@@ -311,7 +226,7 @@ class LakeTable:
             key = self.path
             # the token is taken before resolving, so a write racing the
             # resolution can only make the next call resolve again
-            token = snapshots.token(*hadoop_fs(self.spark, self.path))
+            token = _fs_digest(self.spark, self.path)
             frame = snapshots.get(key, token)
             if frame is None:
                 # mergeSchema: dynamic partition overwrite only rewrites
@@ -425,18 +340,14 @@ class LakeTable:
         return rows.get["rows"]
 
     def partition_file_counts(self) -> dict[str, int]:
-        """data-file count per partition VALUE (unescaped), via the
-        Hadoop ``FileSystem`` API so the walk works on any scheme (file:,
-        hdfs:, s3a:, ...)."""
-        fs, _ = hadoop_fs(self.spark, self.path)
-        jpath = _fs_classes(self.spark).path
+        """data-file count per partition VALUE (unescaped), one
+        ``fs_list_names`` listing per partition, so it works on any
+        scheme (file:, hdfs:, s3a:, ...)."""
         return {
             v: sum(
                 1
-                for f in fs.listStatus(jpath(d))
-                if f.isFile()
-                and f.getPath().getName().endswith(".parquet")
-                and not f.getPath().getName().startswith(".")
+                for name in fs_list_names(d)
+                if name.endswith(".parquet") and not name.startswith(".")
             )
             for v, d in self._partition_dirs().items()
         }

@@ -1,4 +1,6 @@
-"""SparkSession factory.
+"""SparkSession factory, and the filesystem seam: the package's only
+module that calls into the JVM directly, through PySpark's gateway
+handles.
 
 Local test/bench runs are single-JVM (``local[N]``); the configuration is
 nevertheless written for a multi-executor cluster: AQE handles runtime
@@ -10,10 +12,10 @@ oracles), and Arrow is enabled for the few Pandas-UDF surfaces.
 from __future__ import annotations
 
 import os
-from typing import NamedTuple
+import threading
 
-from py4j.java_gateway import JavaClass, JavaObject
 from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
@@ -106,76 +108,152 @@ def local_rows_df(spark: SparkSession, rows, schema):
     )
 
 
-class _FsClasses(NamedTuple):
-    """The JVM classes the seam calls through."""
+class _Seam:
+    """The JVM handles the filesystem seam calls through: the Hadoop
+    ``Path`` class and conf, ``FileNotFoundException``, and the getters
+    and Scala helpers that map a whole directory listing inside the JVM.
+    A class resolved through the gateway costs a reflection round trip
+    per dotted name segment, so they are resolved once per SparkContext
+    (see ``_seam``)."""
 
-    path: JavaClass
-    file_util: JavaClass
-    array_seq: JavaClass
-    not_found: JavaObject
+    def __init__(self, sc: SparkContext):
+        jvm = sc._jvm
+        invoke = jvm.java.lang.invoke
+        lookup = invoke.MethodHandles.publicLookup()
+        status = jvm.org.apache.hadoop.fs.FileStatus._java_lang_class
+        self.path = jvm.org.apache.hadoop.fs.Path
+        path = self.path._java_lang_class
+        function1 = jvm.scala.Function1._java_lang_class
 
+        def method(name, rtype, owner=status):
+            return lookup.findVirtual(owner, name, invoke.MethodType.methodType(rtype))
 
-def _fs_classes(spark: SparkSession) -> _FsClasses:
-    """The session's ``_FsClasses``, resolved on first use. A class
-    resolved through ``spark._jvm`` costs a reflection round trip per
-    dotted name segment, so they are kept; on the session object, so
-    they end with it and a new session, maybe on a new JVM, never sees
-    a stale handle."""
-    classes = getattr(spark, "_fs_classes", None)
-    if classes is None:
-        jvm = spark._jvm
-        classes = spark._fs_classes = _FsClasses(
-            jvm.org.apache.hadoop.fs.Path,
-            jvm.org.apache.hadoop.fs.FileUtil,
-            jvm.scala.collection.immutable.ArraySeq,
-            jvm.java.io.FileNotFoundException._java_lang_class,
+        def mapper(handle):
+            # the handle as a scala.Function1, so one Py4J call maps a
+            # whole directory level inside the JVM; a getter call per
+            # file from Python is a round trip each (≈0.5 s for a
+            # 729-file table)
+            return invoke.MethodHandleProxies.asInterfaceInstance(function1, handle)
+
+        get_path = method("getPath", path)
+        self.is_dir = mapper(method("isDirectory", jvm.java.lang.Boolean.TYPE))
+        self.get_path = mapper(get_path)
+        self.get_name = mapper(
+            invoke.MethodHandles.filterReturnValue(
+                get_path, method("getName", jvm.java.lang.String._java_lang_class, path)
+            )
         )
-    return classes
+        self.columns = [
+            self.get_path,
+            mapper(method("getLen", jvm.java.lang.Long.TYPE)),
+            mapper(method("getModificationTime", jvm.java.lang.Long.TYPE)),
+        ]
+        self.by_path = jvm.scala.math.Ordering.comparatorToOrdering(
+            jvm.java.util.Comparator.naturalOrder()
+        )
+        self.path_tag = jvm.scala.reflect.ClassTag.apply(path)
+        self.wrap = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray
+        self.new_text = jvm.scala.collection.mutable.StringBuilder
+        self.message_digest = jvm.java.security.MessageDigest
+        self.utf8 = jvm.java.nio.charset.StandardCharsets.UTF_8
+        self.char_buffer = jvm.java.nio.CharBuffer
+        self.not_found = jvm.java.io.FileNotFoundException._java_lang_class
+        self.hadoop_conf = sc._jsc.hadoopConfiguration()
 
 
-def hadoop_fs(spark: SparkSession, path: str):
-    """``(FileSystem, Path)`` for ``path`` through the Hadoop
-    ``FileSystem`` API, so driver-side listings and writes work on
-    whatever scheme the path carries (file:, hdfs:, s3a:, viewfs:, ...)
-    — the same resolution Spark's own readers and writers use."""
-    jpath = _fs_classes(spark).path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+# Guards the creation of a SparkContext's ``_Seam``: threads share a
+# context.
+_SEAM_LOCK = threading.Lock()
 
 
-# The package's one seam between persisted state (index artifacts and
-# their lifecycle dirs, markers, the run log, small JSON artifacts) and
-# storage: every helper below takes a path of any Hadoop scheme and
-# resolves its FileSystem through ``hadoop_fs`` under the active session.
+def _seam() -> _Seam:
+    """The active SparkContext's ``_Seam``, created on first use and
+    kept on the context object, so it ends with its context and a new
+    context, maybe on a new JVM, never sees a stale handle. The context
+    is a Python attribute, so finding it costs no Py4J call, and it is
+    the same in every thread (a foreachBatch callback included)."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        raise RuntimeError("the filesystem seam needs an active SparkContext")
+    with _SEAM_LOCK:
+        seam = getattr(sc, "_fs_seam", None)
+        if seam is None:
+            seam = sc._fs_seam = _Seam(sc)
+        return seam
+
+
+# The package's one seam between persisted state (lake tables, index
+# artifacts and their lifecycle dirs, markers, the run log, small JSON
+# artifacts) and storage, and its only module that talks to the JVM:
+# every helper below takes a path of any Hadoop scheme (file:, hdfs:,
+# s3a:, viewfs:, ...) and resolves its FileSystem through ``_fs``, the
+# same resolution Spark's own readers and writers use.
 
 
 def _fs(path: str, *others: str):
-    """``(classes, FileSystem, Path)``: the session's ``_FsClasses`` and
-    ``hadoop_fs`` for ``path`` under the active session (the default
-    session when the calling thread has none set, as in a foreachBatch
-    callback), plus a Hadoop ``Path`` for each of ``others``."""
-    spark = SparkSession.active()
-    classes = _fs_classes(spark)
-    fs, jpath = hadoop_fs(spark, path)
-    return (classes, fs, jpath, *(classes.path(o) for o in others))
+    """``(seam, FileSystem, Path)``: the active context's ``_Seam`` and
+    the Hadoop ``FileSystem`` and ``Path`` of ``path``, plus a ``Path``
+    for each of ``others``. The FileSystem is looked up on every call:
+    Hadoop caches it by scheme, authority and user, and a lookup sees a
+    mount table set later or a cache that ``FileSystem.closeAll()``
+    emptied."""
+    seam = _seam()
+    jpath = seam.path(path)
+    fs = jpath.getFileSystem(seam.hadoop_conf)
+    return (seam, fs, jpath, *(seam.path(o) for o in others))
 
 
 def fs_list_names(path: str) -> list[str]:
     """Names of the entries directly under the directory ``path``, none
     for a missing path (a file lists as itself, as Hadoop's
-    ``listStatus`` lists it). One listing, whose paths are joined
-    inside the JVM, so it costs a fixed number of Py4J calls however
-    many entries the directory holds. Any listing failure other than a
-    missing path raises."""
-    classes, fs, jpath = _fs(path)
+    ``listStatus`` lists it). One listing, whose names are mapped and
+    joined inside the JVM, so it costs a fixed number of Py4J calls
+    however many entries the directory holds, and only the names cross
+    to Python. A newline cannot occur in a name Spark or Hive writes:
+    Hive escaping encodes it in a partition directory's name. Any
+    listing failure other than a missing path (a denied permission, an
+    I/O error, a throttled store) raises: a caller that took an
+    unlistable directory for an empty one would act on a wrong answer,
+    as an upsert that overwrote its touched partitions with the batch
+    alone."""
+    seam, fs, jpath = _fs(path)
     try:
         level = fs.listStatus(jpath)
     except Py4JJavaError as e:
-        if classes.not_found.isInstance(e.java_exception):
+        if seam.not_found.isInstance(e.java_exception):
             return []
         raise
-    paths = classes.array_seq.unsafeWrapArray(classes.file_util.stat2Paths(level))
-    joined = paths.mkString("\n")
-    return [p.rsplit("/", 1)[-1] for p in joined.split("\n")] if joined else []
+    names = seam.wrap(level).map(seam.get_name).mkString("\n")
+    return names.split("\n") if names else []
+
+
+def _fs_digest(spark: SparkSession, path: str) -> bytes | None:
+    """SHA-256 of ``spark``'s SQL conf and of the sorted path, length
+    and modification time of every file under ``path``, at every depth,
+    ``_SUCCESS`` included; ``None`` when the walk fails (a missing
+    path, a directory deleted mid-walk). Access times are left out: a
+    read changes them. The text is built and hashed in the JVM, so a
+    level costs a fixed number of Py4J calls and only the 32-byte
+    digest crosses to Python."""
+    seam, fs, root = _fs(path)
+    text = seam.new_text()
+    # schema and partition inference read the conf (time zone, parquet
+    # type flags), so a digest taken under another conf differs
+    spark.conf._jconf.getAll().addString(text, "", "\n", "\n")
+    try:
+        level = fs.listStatus(root)
+        while len(level):
+            entries = seam.wrap(level).sorted(seam.by_path)
+            files = entries.filterNot(seam.is_dir)
+            for column in seam.columns:
+                files.map(column).addString(text, "", "\n", "\n")
+            dirs = entries.filter(seam.is_dir).map(seam.get_path).toArray(seam.path_tag)
+            level = fs.listStatus(dirs) if len(dirs) else dirs
+    except Py4JJavaError:
+        return None
+    digest = seam.message_digest.getInstance("SHA-256")
+    digest.update(seam.utf8.encode(seam.char_buffer.wrap(text.underlying())))
+    return bytes(digest.digest())
 
 
 def fs_exists(path: str) -> bool:

@@ -4,6 +4,7 @@ invariants verified on a golden corpus and on the documents fixture."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hospital_stain_tracker_data_pipeline_spark.pipeline.curate import (
@@ -788,7 +789,11 @@ def test_run_dir_stage_marker_lands_under_a_uri(spark, tmp_path):
     assert (tmp_path / "run" / "ids" / "_STAGE_OK").is_file()
 
 
-def test_curate_run_dir_kill_and_resume_bit_identical(spark, tmp_path):
+@pytest.mark.parametrize("uri", [False, True], ids=["plain", "uri"])
+def test_curate_run_dir_kill_and_resume_bit_identical(spark, tmp_path, uri):
+    """A run_dir run equals the plain run, and a resume after its last
+    stages were killed recomputes only those stages and is bit-identical,
+    with the run_dir a plain path and a ``file://`` URI."""
     import dataclasses
     import os
     import shutil
@@ -814,12 +819,13 @@ def test_curate_run_dir_kill_and_resume_bit_identical(spark, tmp_path):
     assert rep_a.after_decontamination < rep_a.after_semantic_dedup
 
     # B: same config, run_dir — writes artifacts, same result
-    run = str(tmp_path / "run")
-    chunks_b, rep_b = curate_documents(docs, **kw, run_dir=run)
+    local = str(tmp_path / "run")  # what the os calls below inspect
+    run_dir = "file://" + local if uri else local
+    chunks_b, rep_b = curate_documents(docs, **kw, run_dir=run_dir)
     assert _chunk_rows(chunks_b) == rows_a
     assert rep_b == rep_a
     unpersist_curated(chunks_b)
-    stage_dirs = sorted(os.listdir(run))
+    stage_dirs = sorted(os.listdir(local))
     for s in [
         "url_dedup", "source_cap", "exact_keep", "near_drop", "sem_drop",
         "decon_hits", "span_dedup", "substring_dedup", "probe_keep",
@@ -829,14 +835,14 @@ def test_curate_run_dir_kill_and_resume_bit_identical(spark, tmp_path):
     # simulate a crash before the LAST stages completed: nuke the late
     # artifacts, keep everything upstream
     early_markers = {
-        s: os.path.getmtime(os.path.join(run, s, "_STAGE_OK"))
+        s: os.path.getmtime(os.path.join(local, s, "_STAGE_OK"))
         for s in ("url_dedup", "source_cap", "exact_keep", "near_drop")
     }
     for late in ("probe_keep", "substring_dedup"):
-        shutil.rmtree(os.path.join(run, late))
+        shutil.rmtree(os.path.join(local, late))
 
     # C: resume — recomputes only the killed suffix, bit-identical
-    chunks_c, rep_c = curate_documents(docs, **kw, run_dir=run)
+    chunks_c, rep_c = curate_documents(docs, **kw, run_dir=run_dir)
     assert _chunk_rows(chunks_c) == rows_a
     # near_drop loaded from its artifact, so its execution telemetry is
     # None by design; every DATA field is bit-identical
@@ -844,7 +850,7 @@ def test_curate_run_dir_kill_and_resume_bit_identical(spark, tmp_path):
     assert dataclasses.replace(rep_c, hot_buckets_dropped=0) == rep_a
     unpersist_curated(chunks_c)
     for s, t in early_markers.items():
-        assert os.path.getmtime(os.path.join(run, s, "_STAGE_OK")) == t, (
+        assert os.path.getmtime(os.path.join(local, s, "_STAGE_OK")) == t, (
             f"stage {s} was rewritten on resume — it should have loaded"
         )
 

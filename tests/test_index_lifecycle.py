@@ -679,6 +679,13 @@ REMOVE_JOB_BUDGET = {"ann": 10, "fp": 12, "minhash": 12}
 # MinHash as above (21 and 23 when the wrapper's validating read was
 # thrown away and the engine read the dir again).
 COMPACT_JOB_BUDGET = {"ann": 17, "fp": 19, "minhash": 19}
+# Spark jobs of one append of two fingerprints to that 8-row image
+# index, without and with a tombstone dir: the artifact read once and
+# validated, the batch materialized with its count observed, and the
+# write. Reading the artifact through load_fp_index (tombstone
+# suppression included), inferring its schema again for the legacy
+# check and counting the batch in a job of its own ran 8 and 9.
+APPEND_JOB_BUDGET = {"plain": 5, "tombstoned": 5}
 
 
 def _jobs_in_group(spark, group, fn):
@@ -693,6 +700,27 @@ def _jobs_in_group(spark, group, fn):
         sc.setLocalProperty("spark.job.description", outer)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("tombstoned", [False, True], ids=["plain", "tombstoned"])
+def test_fp_append_job_budget(spark, tmp_path, tombstoned):
+    """An append stays in its job budget, returns the rows it appended
+    (NULL ids and hashes dropped) and serves them; an empty batch
+    appends nothing."""
+    ops = _fp_ops(spark)
+    path = str(tmp_path / "fp")
+    ops["build"](path, range(1, 9))
+    if tombstoned:
+        ops["remove"](path, [3])
+    batch = _fp_frame(spark, [(9, 144), (10, 160), (None, 176), (11, None)])
+    n, n_jobs = _jobs_in_group(
+        spark, f"fp-append-{tombstoned}",
+        lambda: append_fp_index(spark, path, batch, IMAGE),
+    )
+    assert n == 2
+    assert n_jobs <= APPEND_JOB_BUDGET["tombstoned" if tombstoned else "plain"], n_jobs
+    assert append_fp_index(spark, path, _fp_frame(spark, []), IMAGE) == 0
+    assert ops["served"](path) == [i for i in range(1, 11) if not (tombstoned and i == 3)]
 
 
 @pytest.mark.parametrize(

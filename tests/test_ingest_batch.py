@@ -248,14 +248,15 @@ class _FailingFs:
         return getattr(self._fs, name)
 
 
-def _patch_fs(monkeypatch, module, spark, fail):
-    real = module.hadoop_fs
+def _patch_fs(monkeypatch, spark, fail):
+    """Hand every filesystem-seam call a ``_FailingFs``."""
+    real = session._fs
 
-    def failing(spark_, path):
-        fs, root = real(spark_, path)
-        return _FailingFs(spark, fs, fail(fs)), root
+    def failing(*paths):
+        seam, fs, *jpaths = real(*paths)
+        return (seam, _FailingFs(spark, fs, fail(fs)), *jpaths)
 
-    monkeypatch.setattr(module, "hadoop_fs", failing)
+    monkeypatch.setattr(session, "_fs", failing)
 
 
 def _run_log_files(path):
@@ -294,7 +295,7 @@ def test_failed_run_log_write_leaves_no_file(spark, tmp_path, monkeypatch, faili
 
         return {"create": lambda *a: Stream(fs.create(*a))}
 
-    _patch_fs(monkeypatch, session, spark, fail)
+    _patch_fs(monkeypatch, spark, fail)
     with pytest.raises((Py4JJavaError, OSError)):
         append_run_log(spark, path, RUN_ROWS[1])
     assert _run_log_files(path) == before
@@ -321,7 +322,7 @@ def test_unlistable_table_raises_and_keeps_its_partitions(spark, tmp_path, monke
 
         return {"listStatus": list_status}
 
-    _patch_fs(monkeypatch, lake, spark, denied)
+    _patch_fs(monkeypatch, spark, denied)
     batch = frame.filter(F.col("k") == 0).withColumn("v", F.lit(1))
     for op in (t.exists, lambda: t.read(["2026-01-01"]), lambda: t.upsert(batch)):
         with pytest.raises(Py4JJavaError, match="AccessDeniedException"):
@@ -414,8 +415,9 @@ def test_metrics_rows_in_is_the_silver_row_count(spark, tmp_path):
     assert full.rows_in == spark.read.parquet(silver_path).count() == (N_DATES + 7) * len(REGIONS)
 
 
-def _py4j_calls(spark, monkeypatch, fn) -> int:
-    """Py4J calls the driver makes while ``fn()`` runs."""
+def _py4j_calls(spark, monkeypatch, fn, replies=None) -> int:
+    """Py4J calls the driver makes while ``fn()`` runs; each call's
+    reply is appended to ``replies`` when given."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     calls = []
@@ -425,7 +427,10 @@ def _py4j_calls(spark, monkeypatch, fn) -> int:
         # Python's collector runs; they are not calls the code makes
         if not command.startswith("m\n"):
             calls.append(1)
-        return send(command, *args, **kwargs)
+        reply = send(command, *args, **kwargs)
+        if replies is not None:
+            replies.append(reply)
+        return reply
 
     monkeypatch.setattr(client, "send_command", counted)
     try:
@@ -458,6 +463,34 @@ def test_exists_and_scoped_read_make_the_same_py4j_calls_at_any_width(
             _py4j_calls(spark, monkeypatch, lambda: t.read(["2026-01-02"])),
         ))
     assert costs[0] == costs[1], costs
+
+
+def test_fs_isdir_makes_three_py4j_calls(spark, tmp_path, monkeypatch):
+    """A seam call resolves its context's JVM handles once, not per
+    call: ``fs_isdir`` is a ``Path``, its ``FileSystem`` and the check."""
+    path = str(tmp_path)
+    assert session.fs_isdir(path)
+    assert _py4j_calls(spark, monkeypatch, lambda: session.fs_isdir(path)) <= 3
+
+
+def test_fs_list_names_sends_only_names(spark, tmp_path, monkeypatch):
+    """``fs_list_names`` over 200 entries returns exactly their names,
+    and no Py4J reply during the call carries the directory's path: the
+    names are taken and joined in the JVM, so a wide directory's reply
+    stays small."""
+    dirs = {f"date=2026-01-{i:03d}" for i in range(100)}
+    files = {f"part-{i:05d}.parquet" for i in range(100)}
+    for name in dirs:
+        (tmp_path / name).mkdir()
+    for name in files:
+        (tmp_path / name).touch()
+    replies = []
+    listed = []
+    _py4j_calls(
+        spark, monkeypatch, lambda: listed.extend(session.fs_list_names(str(tmp_path))), replies
+    )
+    assert sorted(listed) == sorted(dirs | files)
+    assert replies and not any(str(tmp_path) in r for r in replies)
 
 
 def test_region_lookup_makes_the_same_py4j_calls_at_any_width(spark, monkeypatch):

@@ -3,7 +3,8 @@
 tables, index artifacts and their lifecycle dirs, markers, the run log)
 reaches storage through the Hadoop ``FileSystem`` seam in ``session.py``,
 never through local-path calls that read any URI (``file:``, ``hdfs:``,
-``s3a:``) as a missing directory."""
+``s3a:``) as a missing directory. The seam is the package's only module
+that talks to the JVM."""
 
 from __future__ import annotations
 
@@ -33,8 +34,12 @@ LOCAL_PATH_CALLS = {
     "os.path.exists", "os.path.isdir", "os.path.isfile",
     "os.rename", "os.remove", "os.makedirs", "open",
 }
-# the seam itself, and the lake's JVM-mapped listing walk (kept for speed)
-FS_OWNERS = {PKG / "session.py", LAKE}
+# the seam: the package's one module that talks to the JVM
+FS_OWNERS = {PKG / "session.py"}
+# the PySpark handles into the JVM
+JVM_HANDLES = {"_jvm", "_jsc", "_jsparkSession", "_gateway"}
+
+
 def _calls(path):
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if isinstance(node, ast.Call):
@@ -76,6 +81,8 @@ def test_pipeline_modules_make_no_local_path_checks():
 
 
 def test_only_the_seam_resolves_hadoop_filesystems():
+    """No package module but the seam resolves a Hadoop class or
+    reaches into the JVM through PySpark's handles."""
     found = [
         f"{path.relative_to(REPO)}:{node.lineno} {name}"
         for path in PKG.rglob("*.py")
@@ -83,7 +90,7 @@ def test_only_the_seam_resolves_hadoop_filesystems():
         for node in ast.walk(ast.parse(path.read_text(), str(path)))
         if isinstance(node, (ast.Name, ast.Attribute))
         for name in [_dotted(node)]
-        if name.split(".")[-1] == "hadoop_fs"
-        or name.endswith("org.apache.hadoop.fs")
+        if name.split(".")[-1] in {"hadoop_fs", *JVM_HANDLES}
+        or name.endswith("org.apache.hadoop")
     ]
     assert not found, found
